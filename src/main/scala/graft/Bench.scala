@@ -288,7 +288,7 @@ object Bench {
     // ---- per-query timings at env parallelism ----
     // (SPARK_GRAFT_SKIP_QUERIES=1 skips this phase for scaling experiments)
     // DEFERRED to after the headline scaling pairs in the full run: the
-    // 171-query sweep is ~165 s of all-core heat in the same JVM/box
+    // 174-query sweep is ~165 s of all-core heat in the same JVM/box
     // window, and r4's full-sweep efficiency (0.696) ran its pairs right
     // after it while the headline-only runs that cleared 0.8 didn't pay
     // that heat. The sweep itself is unaffected by ordering (min-of-2

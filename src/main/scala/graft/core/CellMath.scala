@@ -128,7 +128,8 @@ object CellMath {
   /** Cells with Chebyshev distance in (rIn, rOut] — the annulus between two
     * disks (rIn = -1 degenerates to the full disk). One pass over the outer
     * square, skipping the inner square, same clamping as [[ringCells]].
-    * Used by the expanding-ring kNN: a residual point's previous disk is
+    * Used by the expanding-ring kNN's over-ceiling round loop (and the
+    * `knn_disk` query): a residual point's previous disk is
     * provably feature-free, so the next round probes only the new annulus
     * (ring explode volume drops ~30% across the 1,2,4,8 schedule). */
   def annulusCells(cell: Long, rIn: Int, rOut: Int): Array[Long] = {

@@ -93,8 +93,9 @@ object Exprs {
   }
 
   /** annulus_cells(cell, r_in, r_out): cells with Chebyshev distance in
-    * (r_in, r_out] — the expanding-kNN probe set (the previous disk is
-    * already known empty for residual points; see Geocode.knnExpanding). */
+    * (r_in, r_out] — the probe set of the expanding kNN's over-ceiling
+    * round loop (the previous disk is already known empty for residual
+    * points; see Geocode.knnLoop). */
   case class AnnulusCells(first: Expression, second: Expression, third: Expression)
       extends TernaryExpression with CodegenFallback {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)

@@ -2,12 +2,14 @@ package graft.index
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructType}
 import org.apache.spark.sql.functions._
+import graft.core.CellMath
 import graft.functions.F
 
 /** The north star's "broadcastable sorted cell->feature-id array replacing
@@ -25,18 +27,9 @@ import graft.functions.F
 final class CellIndexData(val cells: Array[Long], val fids: Array[Long])
     extends Serializable {
 
-  private def lowerBound(key: Long): Int = {
-    var lo = 0; var hi = cells.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (cells(mid) < key) lo = mid + 1 else hi = mid
-    }
-    lo
-  }
-
   /** All feature ids covering `cell` (ascending, distinct by construction). */
   def lookup(cell: Long): Array[Long] = {
-    var i = lowerBound(cell)
+    var i = CellIndex.lowerBound(cells, cell)
     if (i >= cells.length || cells(i) != cell) return Array.emptyLongArray
     val start = i
     while (i < cells.length && cells(i) == cell) i += 1
@@ -46,7 +39,37 @@ final class CellIndexData(val cells: Array[Long], val fids: Array[Long])
   def size: Int = cells.length
 }
 
+/** The kNN fallback's feature-point index: every feature point as parallel
+  * arrays sorted by (cell at one zoom, feature_id), so a cell's features
+  * are one binary-searched slice. 32 B/point. */
+final class PointIndexData(val cells: Array[Long], val fids: Array[Long],
+                           val lons: Array[Double], val lats: Array[Double])
+    extends Serializable {
+
+  /** Index range of the features in `cell`. */
+  private def slice(cell: Long): Range =
+    CellIndex.lowerBound(cells, cell) until CellIndex.lowerBound(cells, cell + 1)
+
+  /** Smallest Chebyshev ring d in 0..maxR around `cell` that holds a
+    * feature, or -1 ([[CellMath.ringCells]], so grid-clamped). */
+  def firstRing(cell: Long, maxR: Int): Int =
+    (0 to maxR).find(d => CellMath.ringCells(cell, d).exists(slice(_).nonEmpty)).getOrElse(-1)
+
+  /** Indexes of the features in disk(r) around `cell`, grid-clamped. */
+  def disk(cell: Long, r: Int): Array[Int] = CellMath.diskCells(cell, r).flatMap(slice)
+}
+
 object CellIndex {
+
+  /** First index of `cells` (ascending) holding a value >= key. */
+  private[index] def lowerBound(cells: Array[Long], key: Long): Int = {
+    var lo = 0; var hi = cells.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (cells(mid) < key) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
 
   /** Process-wide memo of built indexes: the collect-and-sort build is a
     * batch-index job, not a per-query step — a query path that rebuilt the
@@ -76,6 +99,56 @@ object CellIndex {
   def buildFromFeatures(features: DataFrame, z: Int): CellIndexData =
     build(features.select(col("feature_id"),
       explode(F.tileCover(col("geom_wkb"), lit(z))).as("cell")))
+
+  /** Collect (feature_id, flon, flat) into a [[PointIndexData]] at zoom z —
+    * one job. Rows with a null id or coordinate are skipped: the cell
+    * equi-join drops them too. */
+  def buildPoints(featurePoints: DataFrame, z: Int): PointIndexData = {
+    val rows = featurePoints
+      .select(F.cellAt(lit(z), col("flon"), col("flat")).as("cell"),
+        col("feature_id").cast("long"), col("flon").cast("double"), col("flat").cast("double"))
+      .filter(col("cell").isNotNull && col("feature_id").isNotNull)
+      .collect()
+      .sortBy(r => (r.getLong(0), r.getLong(1)))
+    new PointIndexData(rows.map(_.getLong(0)), rows.map(_.getLong(1)),
+      rows.map(_.getDouble(2)), rows.map(_.getDouble(3)))
+  }
+
+  private val KnnCandType: StructType = new StructType()
+    .add("feature_id", LongType, nullable = false)
+    .add("flon", DoubleType, nullable = false)
+    .add("flat", DoubleType, nullable = false)
+
+  /** knn_rings(cell): the closed form of the expanding-ring kNN over a
+    * broadcast [[PointIndexData]]. With d the smallest Chebyshev ring
+    * holding a feature and r* the smallest ladder radius >= d, returns
+    * `[struct(radius = r*, cands = features in disk(r*))]`, or `[]` when
+    * disk(radii.last) is empty — a 0/1-element array consumed by explode,
+    * so the optimizer can never inline the kernel into two consumers. */
+  case class KnnRings(child: Expression, bc: Broadcast[PointIndexData], radii: Seq[Int])
+      extends UnaryExpression with CodegenFallback {
+    override def dataType: DataType = ArrayType(new StructType()
+      .add("radius", IntegerType, nullable = false)
+      .add("cands", ArrayType(KnnCandType, containsNull = false), nullable = false),
+      containsNull = false)
+    override def nullIntolerant: Boolean = true
+    override def prettyName: String = "knn_rings"
+    override def nullSafeEval(c: Any): Any = {
+      val idx = bc.value
+      val cell = c.asInstanceOf[Long]
+      val d = idx.firstRing(cell, radii.last)
+      if (d < 0) return new GenericArrayData(Array.empty[Any])
+      val r = radii.find(_ >= d).get
+      val cands = idx.disk(cell, r).map { i =>
+        InternalRow(idx.fids(i), idx.lons(i), idx.lats(i)): Any
+      }
+      new GenericArrayData(Array[Any](InternalRow(r, new GenericArrayData(cands))))
+    }
+    override protected def withNewChildInternal(c: Expression): KnnRings = copy(child = c)
+  }
+
+  def knnRingsCol(cell: Column, bc: Broadcast[PointIndexData], radii: Seq[Int]): Column =
+    ColumnBridge.column(KnnRings(ColumnBridge.expression(cell), bc, radii))
 
   /** cell_lookup(cell): array of feature ids — binary search against the
     * broadcast index, evaluated inside the map stage (no shuffle, no join). */

@@ -772,11 +772,11 @@ object Geocode {
     * disk cells vs the feature's single cell; ranked by (haversine, id).
     *
     * `rIn` (default -1 = full disk) restricts the probe to the annulus
-    * (rIn, r]: [[knnExpanding]] passes the previous round's radius — a
-    * residual point's previous disk is PROVABLY feature-free (it produced
-    * zero join candidates, or the point would have matched), so skipping it
-    * is row-identical while cutting the ring-explode volume (disk(8) = 289
-    * cells vs annulus(4,8] = 208). */
+    * (rIn, r]: the over-ceiling loop of [[knnExpanding]] passes the previous
+    * round's radius — a residual point's previous disk is PROVABLY
+    * feature-free (it produced zero join candidates, or the point would
+    * have matched), so skipping it is row-identical while cutting the
+    * ring-explode volume (disk(8) = 289 cells vs annulus(4,8] = 208). */
   def knnDisk(points: DataFrame, featurePoints: DataFrame, z: Int, r: Int,
               rIn: Int = -1): DataFrame = {
     val probes = points
@@ -896,28 +896,54 @@ object Geocode {
       .filter(F.pipWkb(col("geom_wkb"), col("elon"), col("elat")))
   }
 
-  /** D6+G4: expanding-ring kNN — carmen's nearest-within-radius escalation.
-    * Each round probes only the residual (left_anti of matched points) with
-    * a doubled Chebyshev radius; a point's answer is the haversine-nearest
-    * feature within the first disk that hits. Bounded driver loop over a
-    * shrinking Dataset (the reference iterates tiles the same way).
+  /** D6+G4: expanding-ring kNN — carmen's nearest-within-radius escalation:
+    * a point's answer is the haversine-nearest feature, ties to the lowest
+    * feature_id, within the first ladder disk that holds any feature, and
+    * `radius` is that disk's radius. Points with no feature within
+    * disk(radii.last) or with a null coordinate get no row; `event_id` is
+    * the point key.
     *
-    * Default ladder starts at 2, not 1: each round is two serial job
-    * barriers (the matched cut + the next round's join), so round count is
-    * the latency-noise amplifier on a shared box (r3: driver measured 8.5 s
-    * vs 3.2 s local — same plan, more barriers to land on a load spike). At
-    * this feature density disk(1) resolves barely more points than disk(2)'s
-    * first ring, so r=1 bought ~nothing per extra barrier; disk(2) is only
-    * 25 cells per probe. The semantics stay first-disk-that-hits — the
-    * oracle's radius CASE mirrors the same ladder. */
+    * The ladder has a closed form (the `knn_expand` oracle's): with d the
+    * smallest Chebyshev ring around the point's cell that holds a feature,
+    * radius* = the smallest ladder radius >= d, and the candidates are the
+    * features in disk(radius*). Up to `pointCeiling` feature points that
+    * is ONE map-only stage: the feature points are collected once per
+    * call into a [[graft.index.PointIndexData]] sorted by (cell,
+    * feature_id) and broadcast; the `knn_rings` kernel walks rings 0..radii.last over it
+    * and the nearest pick reuses [[F.haversineKm]] inside `array_min`, so
+    * distances and (dist, feature_id) order are the loop's, bit for bit.
+    * No shuffle, no window, no persist — the call returns a lazy plan.
+    *
+    * Over the ceiling (memoized count probe, like [[reverseBcast]]) the
+    * index never reaches the driver and the per-round loop runs instead
+    * ([[knnLoop]]), row-identical (FallbackSpec). */
   def knnExpanding(points: DataFrame, featurePoints: DataFrame, z: Int,
-                   radii: Seq[Int] = Seq(2, 4, 8)): DataFrame = {
-    // Each round's matched set is persisted AND materialized before the next
-    // round derives its residual from it: without the cut, round r re-executes
-    // every previous round's join (the lineage chain is r-deep — measured 2×
-    // on the r=4 bench query). The residuals are persisted too (each feeds
-    // two consumers: the next knnDisk and the next anti-join); at cluster
-    // scale these cuts are the per-round checkpoint tables (SURVEY.md §2.A6).
+                   radii: Seq[Int] = Seq(2, 4, 8),
+                   pointCeiling: Long = BroadcastCoverCeiling): DataFrame = {
+    require(radii.nonEmpty && radii.head >= 0 && radii.zip(radii.tail).forall { case (a, b) => a < b },
+      s"radii must be a non-empty strictly ascending ladder, got $radii")
+    if (memoCount(featurePoints) > pointCeiling) return knnLoop(points, featurePoints, z, radii)
+    import graft.index.CellIndex
+    val bc = points.sparkSession.sparkContext.broadcast(CellIndex.buildPoints(featurePoints, z))
+    val nearest = array_min(transform(col("k.cands"), c => struct(
+      F.haversineKm(col("elon"), col("elat"), c("flon"), c("flat")).as("dist"),
+      c("feature_id").as("feature_id"))))
+    points
+      .select(col("event_id"), col("elon"), col("elat"), explode(
+        CellIndex.knnRingsCol(F.cellAt(lit(z), col("elon"), col("elat")), bc, radii)).as("k"))
+      .select(col("event_id"), col("k.radius").as("radius"), nearest.as("best"))
+      .select(col("event_id"),
+        col("best.feature_id").cast(featurePoints.schema("feature_id").dataType).as("feature_id"),
+        round(col("best.dist"), 3).as("dist_km"), col("radius"))
+  }
+
+  /** Over-ceiling path of [[knnExpanding]]: one round per ladder radius.
+    * Each round probes only the residual (left_anti of matched points) on
+    * the annulus past the previous radius — the residual's previous disk
+    * is provably feature-free — and persists both its matched set and the
+    * residual, so round r never re-executes earlier rounds' joins. */
+  private def knnLoop(points: DataFrame, featurePoints: DataFrame, z: Int,
+                      radii: Seq[Int]): DataFrame = {
     var residual = points
     val residuals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var acc: Option[DataFrame] = None

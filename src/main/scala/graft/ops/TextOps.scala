@@ -492,13 +492,28 @@ object TextOps {
        |FROM ranked WHERE rn <= $perStratum""".stripMargin
   }
 
+  /** Deterministic uniform draw from doc_id: the top 63 bits of
+    * mix64(doc_id) mod the prime 1e9+7, plus 1, over `denom` — in (0,1]
+    * for denom 1e9+7, strictly inside (0,1) for 1e9+8. mix64 wraps modulo
+    * 2^64, so the draw holds for every BIGINT id (a plain `doc_id * k`
+    * overflows under ANSI). */
+  private def hashU(denom: Double): Column =
+    (shiftrightunsigned(F.mix64(col("doc_id")), 1) % lit(1000000007L) + lit(1L))
+      .cast("double") / lit(denom)
+
+  /** Mirror of [[hashU]] over the mix64 column `z` of a
+    * [[graft.queries.SqlHash.mix64Ctes]] chain: unsigned z // 2 is the same
+    * 63-bit value as the unsigned shift. */
+  private def hashUSql(denom: String): String =
+    s"CAST(${graft.queries.SqlHash.shr("z", 1)} % 1000000007 + 1 AS DOUBLE) / $denom"
+
   /** Weighted sample without replacement (Efraimidis–Spirakis '06,
     * exponential-key form): per language keep the `perStratum` docs with
     * the smallest −ln(u)/w where w = n_chars and u is a deterministic
-    * rational in (0,1] from doc_id (Knuth multiplicative hash mod the
-    * prime 1e9+7) — longer docs sample proportionally more often, the
-    * draw is reproducible and join-free, and a doc's key never changes
-    * under corpus growth. The ranking key stays an UNROUNDED double with
+    * rational in (0,1] from doc_id ([[hashU]]) — longer docs sample
+    * proportionally more often, the draw is reproducible and join-free,
+    * and a doc's key never changes under corpus growth. The ranking key
+    * stays an UNROUNDED double with
     * the doc_id tiebreak (repo invariant); u's integer derivation and
     * the ln/division are token-identical across engines (ln is the
     * mercator-verified function; pow is NOT cross-engine-stable, which
@@ -507,8 +522,7 @@ object TextOps {
     * keeps ≤ k rows per stratum per input partition before the shuffle. */
   def weightedSample(docs: DataFrame, perStratum: Int = 25): DataFrame = {
     val w = Window.partitionBy(col("lang")).orderBy(col("key").asc, col("doc_id").asc)
-    docs.select(col("lang"), col("doc_id"), col("n_chars"),
-        expr("CAST((doc_id * 2654435761) % 1000000007 + 1 AS DOUBLE) / 1000000007.0").as("u"))
+    docs.select(col("lang"), col("doc_id"), col("n_chars"), hashU(1000000007.0).as("u"))
       .withColumn("key", expr("-ln(u) / n_chars"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= perStratum)
@@ -517,9 +531,9 @@ object TextOps {
   }
 
   def weightedSampleSql(perStratum: Int = 25): String =
-    s"""WITH u AS (SELECT lang, doc_id, n_chars,
-       |             CAST((doc_id * 2654435761) % 1000000007 + 1 AS DOUBLE) / 1000000007.0 AS u
-       |           FROM documents),
+    s"""WITH z AS (SELECT lang, doc_id, n_chars, CAST(doc_id AS HUGEINT) AS z FROM documents),
+       |${graft.queries.SqlHash.mix64Ctes("z", "lang, doc_id, n_chars", "m")},
+       |u AS (SELECT lang, doc_id, n_chars, ${hashUSql("1000000007.0")} AS u FROM m),
        |k AS (SELECT lang, doc_id, n_chars, -ln(u) / n_chars AS key FROM u),
        |ranked AS (SELECT lang, doc_id, n_chars,
        |             row_number() OVER (PARTITION BY lang ORDER BY key, doc_id) AS rn
@@ -570,8 +584,7 @@ object TextOps {
     val w = Window.orderBy(col("key").desc, col("doc_id").asc)
     bt.join(broadcast(ld), "b")
       .groupBy(col("doc_id")).agg(sum(col("c") * col("ldq")).as("w_q"))
-      .withColumn("u",
-        expr("CAST((doc_id * 2654435761) % 1000000007 + 1 AS DOUBLE) / 1000000008.0"))
+      .withColumn("u", hashU(1000000008.0))
       .withColumn("key", col("w_q").cast("double") / lit(1000000.0) - expr("ln(-ln(u))"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
@@ -609,10 +622,11 @@ object TextOps {
        |       FROM model, tot),
        |wq AS (SELECT bt.doc_id, CAST(sum(c * ldq) AS BIGINT) AS w_q
        |       FROM bt JOIN ld ON bt.b = ld.b GROUP BY 1),
+       |wz AS (SELECT doc_id, w_q, CAST(doc_id AS HUGEINT) AS z FROM wq),
+       |${graft.queries.SqlHash.mix64Ctes("wz", "doc_id, w_q", "wm")},
        |ky AS (SELECT doc_id, w_q,
-       |         CAST(w_q AS DOUBLE) / 1000000.0 -
-       |           ln(-ln(CAST((doc_id * 2654435761) % 1000000007 + 1 AS DOUBLE) / 1000000008.0)) AS key
-       |       FROM wq),
+       |         CAST(w_q AS DOUBLE) / 1000000.0 - ln(-ln(${hashUSql("1000000008.0")})) AS key
+       |       FROM wm),
        |ranked AS (SELECT doc_id, w_q,
        |             row_number() OVER (ORDER BY key DESC, doc_id) AS rn
        |           FROM ky)

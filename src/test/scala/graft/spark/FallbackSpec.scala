@@ -76,4 +76,53 @@ class FallbackSpec extends SparkTestBase {
     val c = rows(Geocode.reversePip(pts, feats, 8))
     assert(a == c && b == c)
   }
+
+  private def knnRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+
+  test("knnExpanding: broadcast closed form is one map-only stage, row-identical to the round loop") {
+    val pts = Synth.eventPoints(spark, sf)
+    val feats = Synth.custFeatures(spark, sf).select(col("feature_id"), col("flon"), col("flat"))
+    Seq(Seq(2, 4, 8), Seq(1, 2, 4, 8)).foreach { radii =>
+      val bc = Geocode.knnExpanding(pts, feats, 8, radii)
+      val plan = bc.queryExecution.executedPlan.toString
+      assert(plan.contains("knn_rings"), plan)
+      assert(!plan.contains("Exchange") && !plan.contains("Window") &&
+        !plan.contains("InMemoryTableScan"), s"broadcast kNN must be map-only:\n$plan")
+      val a = knnRows(bc)
+      val b = knnRows(Geocode.knnExpanding(pts, feats, 8, radii, pointCeiling = 1))
+      assert(a == b, s"ladder $radii")
+      assert(a.map(_._4).size >= 2, s"ladder $radii: a single radius makes the check vacuous")
+    }
+  }
+
+  test("knnExpanding edge cases: clamped grid edges, nulls, no hit, ties, duplicates") {
+    import spark.implicits._
+    // z5 tiles are 11.25 deg wide: lon -175/-179.9 sit in column x = 0 and
+    // 175/179.9 in x = 31, where the rings are clamped to the grid
+    val feats = Seq[(Long, Option[Double], Option[Double])](
+      (11L, Some(-170.0), Some(10.0)), (10L, Some(-170.0), Some(10.0)), // co-located
+      (12L, Some(170.0), Some(-10.0)), (12L, Some(170.0), Some(-10.0)), // duplicate row
+      (13L, None, Some(5.0)),
+      (14L, Some(0.5), Some(60.0)),
+      (15L, Some(-160.0), Some(70.0))).toDF("feature_id", "flon", "flat")
+    val pts = Seq[(Long, Option[Double], Option[Double])](
+      (1L, Some(-175.0), Some(10.5)), // same cell as 10/11: tie -> lowest id
+      (2L, Some(175.0), Some(-10.2)), // duplicate feature rows -> one row
+      (3L, None, Some(10.0)),         // null coordinate -> no row
+      (4L, Some(90.0), Some(-70.0)),  // nothing within disk(4) -> no row
+      (5L, Some(-179.9), Some(80.0)), // corner cell, first hit on ring 4
+      (6L, Some(179.9), Some(30.0)),  // east edge, first hit on ring 3
+      (7L, Some(5.0), None)).toDF("event_id", "elon", "elat")
+    val radii = Seq(1, 2, 4)
+    val a = knnRows(Geocode.knnExpanding(pts, feats, 5, radii))
+    assert(a == knnRows(Geocode.knnExpanding(pts, feats, 5, radii, pointCeiling = 1)))
+    assert(a.map(r => (r._1, r._2, r._4)) ==
+      Set((1L, 10L, 1), (2L, 12L, 1), (5L, 15L, 4), (6L, 12L, 4)), a.toString)
+    val emptyFeats = feats.limit(0)
+    val emptyPts = pts.limit(0)
+    assert(Geocode.knnExpanding(pts, emptyFeats, 5, radii).collect().isEmpty)
+    assert(Geocode.knnExpanding(emptyPts, feats, 5, radii).collect().isEmpty)
+    assert(Geocode.knnExpanding(emptyPts, feats, 5, radii, pointCeiling = 1).collect().isEmpty)
+  }
 }

@@ -254,7 +254,7 @@ class SpaceTimeSpec extends SparkTestBase {
       .as[(String, Long, Long)].collect()
     val want = docs.groupBy(_._1).toSeq.flatMap { case (_, rows) =>
       rows.map { case (l, d, nc) =>
-        val u = ((d * 2654435761L) % 1000000007L + 1).toDouble / 1000000007.0
+        val u = ((graft.core.Fingerprint.mix64(d) >>> 1) % 1000000007L + 1).toDouble / 1000000007.0
         (l, d, nc, -math.log(u) / nc)
       }.sortBy(r => (r._4, r._2)).take(25).zipWithIndex
         .map { case ((l, d, nc, _), i) => (l, d, nc, (i + 1).toLong) }

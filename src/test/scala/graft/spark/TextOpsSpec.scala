@@ -619,6 +619,30 @@ class TextOpsSpec extends SparkTestBase {
       assert(aRows.map(_.getLong(1)).min > bRows.map(_.getLong(1)).max)
   }
 
+  test("sample_weighted and dsir_select hold for doc_ids near 2^62 under ANSI") {
+    import spark.implicits._
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true",
+      "the overflow check needs ANSI arithmetic")
+    val base = 1L << 62
+    val docs = (0L until 60L).map { i =>
+      val words = (0 until (5 + (i % 7).toInt)).map(j => s"w${(i + j) % 11}")
+      (base + i * 104729L, if (i % 2 == 0) "en" else "de", words.mkString(" "))
+    }.toDF("doc_id", "lang", "text").withColumn("n_chars", length(col("text")))
+    val want = docs.select("lang", "doc_id", "n_chars").as[(String, Long, Int)].collect()
+      .groupBy(_._1).toSeq.flatMap { case (_, rows) =>
+        rows.map { case (l, d, nc) =>
+          val u = ((Fingerprint.mix64(d) >>> 1) % 1000000007L + 1).toDouble / 1000000007.0
+          (l, d, nc.toLong, -math.log(u) / nc)
+        }.sortBy(r => (r._4, r._2)).take(5).zipWithIndex
+          .map { case ((l, d, nc, _), i) => (l, d, nc, (i + 1).toLong) }
+      }.toSet
+    val got = TextOps.weightedSample(docs, perStratum = 5).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    assert(got == want)
+    val sel = TextOps.dsirSelect(docs, evalMod = 10L, evalRes = 3L, k = 20).collect()
+    assert(sel.length == 20 && sel.forall(_.getLong(0) >= base))
+  }
+
   test("proto_prune keeps the least prototypical members (planted outlier ranks first)") {
     import spark.implicits._
     // two populated directions (dims 0 and 1) + one orthogonal outlier
