@@ -107,7 +107,8 @@ final class Geocoder(spark: SparkSession, gaz: DataFrame,
 
   /** Reverse geocode: context chain of containing features per type plus a
     * kNN nearest place for points with no containment hit at all. Output:
-    * (event_id, typ, feature_id, via) — via ∈ {pip, knn}. */
+    * (event_id, typ, feature_id, via) — via ∈ {pip, knn}. `event_id` is
+    * the point key: one row per point ([[Geocode.knnExpanding]]). */
   def reverse(points: DataFrame,
               typed: Seq[(String, DataFrame, Int)],
               knnZ: Int = 8): DataFrame = {

@@ -100,18 +100,28 @@ object CellIndex {
     build(features.select(col("feature_id"),
       explode(F.tileCover(col("geom_wkb"), lit(z))).as("cell")))
 
-  /** Collect (feature_id, flon, flat) into a [[PointIndexData]] at zoom z —
-    * one job. Rows with a null id or coordinate are skipped: the cell
-    * equi-join drops them too. */
-  def buildPoints(featurePoints: DataFrame, z: Int): PointIndexData = {
-    val rows = featurePoints
+  /** Build a [[PointIndexData]] at zoom z from (feature_id, flon, flat),
+    * `n` rows at most. The sort runs in Spark and the rows stream back one
+    * partition at a time into primitive arrays, so the driver holds the
+    * 32 B/point arrays plus one partition of rows. Rows with a null id or
+    * coordinate are skipped: the cell equi-join drops them too. */
+  def buildPoints(featurePoints: DataFrame, z: Int, n: Long): PointIndexData = {
+    require(n <= Int.MaxValue, s"$n feature points do not fit one array")
+    val cells = Array.newBuilder[Long]; val fids = Array.newBuilder[Long]
+    val lons = Array.newBuilder[Double]; val lats = Array.newBuilder[Double]
+    cells.sizeHint(n.toInt); fids.sizeHint(n.toInt); lons.sizeHint(n.toInt); lats.sizeHint(n.toInt)
+    val it = featurePoints
       .select(F.cellAt(lit(z), col("flon"), col("flat")).as("cell"),
-        col("feature_id").cast("long"), col("flon").cast("double"), col("flat").cast("double"))
+        col("feature_id").cast("long").as("feature_id"),
+        col("flon").cast("double"), col("flat").cast("double"))
       .filter(col("cell").isNotNull && col("feature_id").isNotNull)
-      .collect()
-      .sortBy(r => (r.getLong(0), r.getLong(1)))
-    new PointIndexData(rows.map(_.getLong(0)), rows.map(_.getLong(1)),
-      rows.map(_.getDouble(2)), rows.map(_.getDouble(3)))
+      .sort("cell", "feature_id")
+      .toLocalIterator()
+    while (it.hasNext) {
+      val r = it.next()
+      cells += r.getLong(0); fids += r.getLong(1); lons += r.getDouble(2); lats += r.getDouble(3)
+    }
+    new PointIndexData(cells.result(), fids.result(), lons.result(), lats.result())
   }
 
   private val KnnCandType: StructType = new StructType()

@@ -29,6 +29,14 @@ object Geocode {
     * the fallback paths are row-identical. */
   final val BroadcastDictCeiling = 50000000L   // gazetteer names / term dict
   final val BroadcastCoverCeiling = 100000000L // cell-cover index entries
+  /** kNN feature points: 32 B/point (the four parallel primitive arrays of
+    * [[graft.index.PointIndexData]]), so half the cover ceiling's entries
+    * for the same ~1.6 GB. Measured on a local-mode driver: ~33 B/point
+    * held after the streamed build, ~60 B/point once broadcast (the
+    * serialized pieces stay in the block manager); 8·10^6 points build and
+    * broadcast in a 768 MB heap, where a collect()-and-sort build ran out
+    * of a 1 GB heap at 4·10^6. */
+  final val BroadcastPointCeiling = BroadcastCoverCeiling / 2
 
   /** Memoized count of a dimension frame (the ceiling probe): one tiny job
     * per distinct plan, like [[maxNameTokens]]. */
@@ -36,6 +44,20 @@ object Geocode {
     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, java.lang.Long]()
   private def memoCount(df: DataFrame): Long =
     countMemo.computeIfAbsent(df.queryExecution.analyzed.canonicalized, _ => df.count())
+
+  /** Broadcast kNN point index per (feature-point plan, zoom), built once
+    * per SparkContext like the ceiling probe: repeated reverse calls
+    * neither re-collect nor re-broadcast it. */
+  private val pointIndexMemo = new java.util.concurrent.ConcurrentHashMap[
+    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
+    (org.apache.spark.SparkContext, org.apache.spark.broadcast.Broadcast[graft.index.PointIndexData])]()
+  private def pointIndex(featurePoints: DataFrame, z: Int, n: Long)
+      : org.apache.spark.broadcast.Broadcast[graft.index.PointIndexData] = {
+    val sc = featurePoints.sparkSession.sparkContext
+    pointIndexMemo.compute((featurePoints.queryExecution.analyzed.canonicalized, z), (_, old) =>
+      if (old != null && (old._1 eq sc)) old
+      else (sc, sc.broadcast(graft.index.CellIndex.buildPoints(featurePoints, z, n))))._2
+  }
 
   /** Memoized sorted distinct phrase-id array of a grid index (the
     * [[forwardIndexed]] semi-join prefilter — a per-index-epoch build, not
@@ -900,31 +922,33 @@ object Geocode {
     * a point's answer is the haversine-nearest feature, ties to the lowest
     * feature_id, within the first ladder disk that holds any feature, and
     * `radius` is that disk's radius. Points with no feature within
-    * disk(radii.last) or with a null coordinate get no row; `event_id` is
-    * the point key.
+    * disk(radii.last) or with a null coordinate get no row. `event_id` is
+    * the point key and must be unique: each point row gets its own answer
+    * (the loop would fold rows sharing an event_id into one).
     *
     * The ladder has a closed form (the `knn_expand` oracle's): with d the
     * smallest Chebyshev ring around the point's cell that holds a feature,
     * radius* = the smallest ladder radius >= d, and the candidates are the
-    * features in disk(radius*). Up to `pointCeiling` feature points that
-    * is ONE map-only stage: the feature points are collected once per
-    * call into a [[graft.index.PointIndexData]] sorted by (cell,
-    * feature_id) and broadcast; the `knn_rings` kernel walks rings 0..radii.last over it
-    * and the nearest pick reuses [[F.haversineKm]] inside `array_min`, so
-    * distances and (dist, feature_id) order are the loop's, bit for bit.
-    * No shuffle, no window, no persist — the call returns a lazy plan.
+    * features in disk(radius*). Up to [[BroadcastPointCeiling]] feature
+    * points that is ONE map-only stage: the feature points are sorted by
+    * (cell, feature_id) into a [[graft.index.PointIndexData]] and
+    * broadcast, once per feature-point plan and zoom; the `knn_rings`
+    * kernel walks rings 0..radii.last over it and the nearest pick reuses
+    * [[F.haversineKm]] inside `array_min`, so distances and (dist,
+    * feature_id) order are the loop's, bit for bit. No shuffle, no window,
+    * no persist — the call returns a lazy plan.
     *
     * Over the ceiling (memoized count probe, like [[reverseBcast]]) the
     * index never reaches the driver and the per-round loop runs instead
     * ([[knnLoop]]), row-identical (FallbackSpec). */
   def knnExpanding(points: DataFrame, featurePoints: DataFrame, z: Int,
-                   radii: Seq[Int] = Seq(2, 4, 8),
-                   pointCeiling: Long = BroadcastCoverCeiling): DataFrame = {
+                   radii: Seq[Int] = Seq(2, 4, 8)): DataFrame = {
     require(radii.nonEmpty && radii.head >= 0 && radii.zip(radii.tail).forall { case (a, b) => a < b },
       s"radii must be a non-empty strictly ascending ladder, got $radii")
-    if (memoCount(featurePoints) > pointCeiling) return knnLoop(points, featurePoints, z, radii)
+    val n = memoCount(featurePoints)
+    if (n > BroadcastPointCeiling) return knnLoop(points, featurePoints, z, radii)
     import graft.index.CellIndex
-    val bc = points.sparkSession.sparkContext.broadcast(CellIndex.buildPoints(featurePoints, z))
+    val bc = pointIndex(featurePoints, z, n)
     val nearest = array_min(transform(col("k.cands"), c => struct(
       F.haversineKm(col("elon"), col("elat"), c("flon"), c("flat")).as("dist"),
       c("feature_id").as("feature_id"))))
@@ -942,8 +966,8 @@ object Geocode {
     * the annulus past the previous radius — the residual's previous disk
     * is provably feature-free — and persists both its matched set and the
     * residual, so round r never re-executes earlier rounds' joins. */
-  private def knnLoop(points: DataFrame, featurePoints: DataFrame, z: Int,
-                      radii: Seq[Int]): DataFrame = {
+  private[graft] def knnLoop(points: DataFrame, featurePoints: DataFrame, z: Int,
+                             radii: Seq[Int]): DataFrame = {
     var residual = points
     val residuals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var acc: Option[DataFrame] = None

@@ -78,7 +78,12 @@ class FallbackSpec extends SparkTestBase {
   }
 
   private def knnRows(df: org.apache.spark.sql.DataFrame) =
-    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq.sorted
+
+  private def knnIndexIds(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+      case k: graft.index.CellIndex.KnnRings => k.bc.id
+    }))
 
   test("knnExpanding: broadcast closed form is one map-only stage, row-identical to the round loop") {
     val pts = Synth.eventPoints(spark, sf)
@@ -90,10 +95,14 @@ class FallbackSpec extends SparkTestBase {
       assert(!plan.contains("Exchange") && !plan.contains("Window") &&
         !plan.contains("InMemoryTableScan"), s"broadcast kNN must be map-only:\n$plan")
       val a = knnRows(bc)
-      val b = knnRows(Geocode.knnExpanding(pts, feats, 8, radii, pointCeiling = 1))
-      assert(a == b, s"ladder $radii")
-      assert(a.map(_._4).size >= 2, s"ladder $radii: a single radius makes the check vacuous")
+      assert(a == knnRows(Geocode.knnLoop(pts, feats, 8, radii)), s"ladder $radii")
+      assert(a.map(_._4).distinct.size >= 2, s"ladder $radii: a single radius makes the check vacuous")
     }
+    // the point index is built and broadcast once per feature-point plan and zoom
+    val ids = Seq(Geocode.knnExpanding(pts, feats, 8), Geocode.knnExpanding(pts.limit(5), feats, 8))
+      .flatMap(knnIndexIds)
+    assert(ids.size == 2 && ids.distinct.size == 1, ids.toString)
+    assert(knnIndexIds(Geocode.knnExpanding(pts, feats, 7)).head != ids.head)
   }
 
   test("knnExpanding edge cases: clamped grid edges, nulls, no hit, ties, duplicates") {
@@ -116,13 +125,19 @@ class FallbackSpec extends SparkTestBase {
       (7L, Some(5.0), None)).toDF("event_id", "elon", "elat")
     val radii = Seq(1, 2, 4)
     val a = knnRows(Geocode.knnExpanding(pts, feats, 5, radii))
-    assert(a == knnRows(Geocode.knnExpanding(pts, feats, 5, radii, pointCeiling = 1)))
+    assert(a == knnRows(Geocode.knnLoop(pts, feats, 5, radii)))
     assert(a.map(r => (r._1, r._2, r._4)) ==
-      Set((1L, 10L, 1), (2L, 12L, 1), (5L, 15L, 4), (6L, 12L, 4)), a.toString)
+      Seq((1L, 10L, 1), (2L, 12L, 1), (5L, 15L, 4), (6L, 12L, 4)), a.toString)
+    // event_id is the point key: a repeated point row gets its own answer,
+    // where the loop folds rows sharing an event_id into one
+    val dupPts = pts.union(pts.filter(col("event_id") === 2L))
+    val d = knnRows(Geocode.knnExpanding(dupPts, feats, 5, radii))
+    assert(d.count(_._1 == 2L) == 2 && d.distinct == a)
+    assert(knnRows(Geocode.knnLoop(dupPts, feats, 5, radii)) == a)
     val emptyFeats = feats.limit(0)
     val emptyPts = pts.limit(0)
     assert(Geocode.knnExpanding(pts, emptyFeats, 5, radii).collect().isEmpty)
     assert(Geocode.knnExpanding(emptyPts, feats, 5, radii).collect().isEmpty)
-    assert(Geocode.knnExpanding(emptyPts, feats, 5, radii, pointCeiling = 1).collect().isEmpty)
+    assert(Geocode.knnLoop(emptyPts, feats, 5, radii).collect().isEmpty)
   }
 }
