@@ -218,8 +218,9 @@ object Geo {
     * hole of the other polygon counts as OUTSIDE it.
     *
     * True iff (1) some edge pair properly crosses, or (2) some boundary
-    * probe point of one polygon lies strictly inside the other, or (3) the
-    * two boundaries coincide (identical interiors). Probe points are every
+    * probe point of one polygon lies strictly inside the other, or (3) a
+    * region bounded by edges of both lies inside both (identical
+    * interiors, a shared multipolygon part). Probe points are every
     * vertex plus sub-edge midpoints, each edge split at the OTHER
     * geometry's vertices lying on it: when no edge pair properly crosses,
     * the other boundary can only meet an edge at such split points (a
@@ -229,7 +230,7 @@ object Geo {
     * side-change analysis the r4 half-open shortcut skipped.
     *
     * EXACT on the milli-degree lattice: when every coordinate of both
-    * inputs sits on the 0.001° lattice (within ulps), coordinates are first
+    * inputs sits within 1e-9° of the 0.001° lattice, coordinates are first
     * quantized to exact integer-valued doubles (round(x·1000) —
     * boundary-safe, the ov_area_q trick). All predicates are then exact:
     * orientation/cross products of integers < 2^20 stay < 2^41 ≪ 2^53, and
@@ -248,6 +249,12 @@ object Geo {
     ringsOverlap(ra, rb, exactInts = exact)
   }
 
+  /** Whether every coordinate is within 1e-6 of the 0.001° lattice after
+    * scaling by 1000, i.e. within 1e-9° of a lattice value. That snap
+    * radius is part of the kernel's contract: it is wide enough for
+    * lattice values carried through a few double additions (the synth
+    * frames), and a genuinely non-lattice coordinate within 1e-9° of the
+    * lattice is decided as its snapped value. */
   private def latticeAligned(rings: Array[Array[Double]]): Boolean = {
     var r = 0
     while (r < rings.length) {
@@ -328,14 +335,16 @@ object Geo {
 
   /** Probe ∂A against B: every vertex of A plus sub-edge midpoints (edges
     * split at B-vertices lying strictly inside them). Returns 1 if any
-    * probe is strictly inside B; else 0 if EVERY probe lies on ∂B; else −1. */
+    * probe is strictly inside B; else 0 if EVERY probe lies on ∂B; else −1
+    * if some probe does; else −2. */
   private def probeBoundary(ra: Array[Array[Double]], rb: Array[Array[Double]]): Int = {
     var allOn = true
+    var anyOn = false
     var hit = false
     def check(px: Double, py: Double): Boolean = {
       classifyPoint(rb, px, py) match {
         case 1 => hit = true; true
-        case 0 => false
+        case 0 => anyOn = true; false
         case _ => allOn = false; false
       }
     }
@@ -378,87 +387,56 @@ object Geo {
       }
       r += 1
     }
-    if (hit) 1 else if (allOn) 0 else -1
+    if (hit) 1 else if (allOn) 0 else if (anyOn) -1 else -2
   }
 
-  /** Exact interior point of the even-odd region over integer-valued
-    * rings, as a rational (xNum/xDen, y2/2): scanline at y* = vy + 1/2
-    * just above the globally lowest vertex — no vertex lies strictly
-    * inside the band (vy, vy+1), y* equals no vertex y (y2 = 2·vy+1 is
-    * odd), and the region's lowest point is vy so the band meets its
-    * interior. Edge crossings are exact rationals; sorted, parity-paired,
-    * the first nonempty interval's midpoint is interior. BigInt
-    * throughout — one probe per degenerate pair, cost irrelevant.
-    * Returns null when the region has no area on the scanline. */
-  private def interiorPointRat(rings: Array[Array[Double]]): Array[BigInt] = {
-    var vy = Long.MaxValue
-    var r = 0
-    while (r < rings.length) {
-      val ring = rings(r); var i = 1
-      while (i < ring.length) {
-        val y = ring(i).toLong
-        if (y < vy) vy = y
-        i += 2
-      }
-      r += 1
-    }
-    if (vy == Long.MaxValue) return null
-    val y2 = 2 * vy + 1
-    val xs = scala.collection.mutable.ArrayBuffer.empty[(BigInt, BigInt)]
-    r = 0
-    while (r < rings.length) {
-      val ring = rings(r); val n = ring.length / 2
-      var i = 0; var j = n - 1
-      while (i < n) {
-        val xi = ring(2 * i).toLong; val yi = ring(2 * i + 1).toLong
-        val xj = ring(2 * j).toLong; val yj = ring(2 * j + 1).toLong
-        if ((2 * yi > y2) != (2 * yj > y2)) {
-          // x = xi + (xj-xi)·(y*-yi)/(yj-yi), y* = y2/2
-          var num = BigInt(xi) * (2 * (yj - yi)) + BigInt(xj - xi) * (y2 - 2 * yi)
-          var den = BigInt(2 * (yj - yi))
-          if (den.signum < 0) { num = -num; den = -den }
-          xs += ((num, den))
+  /** Whether some point lies strictly inside both even-odd regions, for
+    * integer-valued rings with no proper edge crossing between A and B.
+    * Every face of the combined boundary arrangement then has its lowest
+    * point on a vertex, and no vertex lies strictly between two integer
+    * levels, so the scanline y* = vy + 1/2 above each vertex level vy
+    * meets every face whose lowest point sits at vy. Along a scanline the
+    * open intervals between consecutive distinct crossings are off every
+    * boundary, and a left-to-right parity sweep reads each interval's
+    * membership in A and in B. Crossings are exact rationals (y2 = 2·vy+1
+    * is odd, so no vertex or horizontal edge lies on the scanline); BigInt
+    * throughout — only boundary-touching pairs get here. */
+  private def sharedInteriorRat(ra: Array[Array[Double]], rb: Array[Array[Double]]): Boolean = {
+    val levels = (ra ++ rb).flatMap(ring => ring.indices.collect { case i if i % 2 == 1 => ring(i).toLong }).distinct
+    val xs = ArrayBuffer.empty[(BigInt, BigInt, Boolean)] // (num, den > 0, edge of A)
+    def crossings(rings: Array[Array[Double]], y2: Long, ofA: Boolean): Unit =
+      rings.foreach { ring =>
+        val n = ring.length / 2
+        var i = 0; var j = n - 1
+        while (i < n) {
+          val xi = ring(2 * i).toLong; val yi = ring(2 * i + 1).toLong
+          val xj = ring(2 * j).toLong; val yj = ring(2 * j + 1).toLong
+          if ((2 * yi > y2) != (2 * yj > y2)) {
+            // x = xi + (xj-xi)·(y*-yi)/(yj-yi), y* = y2/2
+            var num = BigInt(xi) * (2 * (yj - yi)) + BigInt(xj - xi) * (y2 - 2 * yi)
+            var den = BigInt(2 * (yj - yi))
+            if (den.signum < 0) { num = -num; den = -den }
+            xs += ((num, den, ofA))
+          }
+          j = i; i += 1
         }
-        j = i; i += 1
       }
-      r += 1
-    }
-    val sorted = xs.sortWith((a, b) => a._1 * b._2 < b._1 * a._2)
-    var k = 0
-    while (k + 1 < sorted.length) {
-      val (n1, d1) = sorted(k); val (n2, d2) = sorted(k + 1)
-      if (n1 * d2 < n2 * d1) // nonempty open interval → interior midpoint
-        return Array(n1 * d2 + n2 * d1, 2 * d1 * d2, BigInt(y2))
-      k += 2
-    }
-    null
-  }
-
-  /** Even-odd membership of the rational point (xn/xd, y2/2) in the
-    * integer-ring region — exact BigInt cross-sign ray cast. The caller
-    * guarantees the point is not on the boundary (y2 odd ⇒ never on a
-    * horizontal edge or vertex level; C == 0 is treated as no-toggle). */
-  private def insideEvenOddRat(rings: Array[Array[Double]],
-                               xn: BigInt, xd: BigInt, y2: BigInt): Boolean = {
-    var inside = false
-    var r = 0
-    while (r < rings.length) {
-      val ring = rings(r); val n = ring.length / 2
-      var i = 0; var j = n - 1
-      while (i < n) {
-        val xi = ring(2 * i).toLong; val yi = ring(2 * i + 1).toLong
-        val xj = ring(2 * j).toLong; val yj = ring(2 * j + 1).toLong
-        if ((BigInt(2 * yi) > y2) != (BigInt(2 * yj) > y2)) {
-          // cross·(2·xd): (xj−xi)(y2−2yi)·xd − (2xn − 2xi·xd)(yj−yi)
-          val c = BigInt(xj - xi) * (y2 - 2 * yi) * xd -
-            (2 * xn - 2 * xi * xd) * (yj - yi)
-          if (c.signum != 0 && (yj > yi) == (c.signum > 0)) inside = !inside
+    levels.exists { vy =>
+      xs.clear()
+      crossings(ra, 2 * vy + 1, ofA = true); crossings(rb, 2 * vy + 1, ofA = false)
+      val sorted = xs.sortWith((a, b) => a._1 * b._2 < b._1 * a._2)
+      var inA = false; var inB = false; var both = false
+      var k = 0
+      while (k < sorted.length && !both) {
+        val (n0, d0, _) = sorted(k)
+        while (k < sorted.length && sorted(k)._1 * d0 == n0 * sorted(k)._2) {
+          if (sorted(k)._3) inA = !inA else inB = !inB
+          k += 1
         }
-        j = i; i += 1
+        both = inA && inB // the interval up to the next crossing
       }
-      r += 1
+      both
     }
-    inside
   }
 
   private def ringsOverlap(ra: Array[Array[Double]], rb: Array[Array[Double]],
@@ -483,24 +461,20 @@ object Geo {
     if (pa == 1) return true
     val pb = probeBoundary(rb, ra)
     if (pb == 1) return true
-    // 3. no boundary point of either strictly inside the other. When one
-    // boundary lies ENTIRELY on the other's (probe result 0), its region
-    // sits inside a single face of the other's arrangement, so interiors
-    // overlap iff ONE INTERIOR POINT of it is interior to the other —
-    // decided exactly with the rational scanline probe. This covers
-    // identical boundaries (true), a hole exactly filled (false), and a
-    // boundary coinciding with a SUBSET of a multipolygon's rings (true —
-    // the case the boundaries-must-be-equal shortcut got wrong). On the
-    // non-integer path (general-position doubles, where total coincidence
-    // only plausibly means identical inputs) the equal-boundaries
-    // shortcut is kept.
-    if (exactInts && pb == 0) {
-      val q = interiorPointRat(rb)
-      q != null && insideEvenOddRat(ra, q(0), q(1), q(2))
-    } else if (exactInts && pa == 0) {
-      val q = interiorPointRat(ra)
-      q != null && insideEvenOddRat(rb, q(0), q(1), q(2))
-    } else pa == 0 && pb == 0
+    // 3. no boundary point of either strictly inside the other. A face of
+    // the boundary arrangement inside both interiors is then bounded only
+    // by edges lying on BOTH boundaries (a sub-edge off the other boundary
+    // is wholly inside or outside it, and its midpoint probe said
+    // outside), so one of its vertices is a probe ON the other boundary.
+    // With such a probe, the exact scanline sweep decides. This covers
+    // identical boundaries (true), a hole exactly filled (false), a
+    // boundary coinciding with a SUBSET of a multipolygon's rings (true),
+    // and two multipolygons sharing one part while each has parts outside
+    // the other (true). On the non-integer path (general-position doubles,
+    // where total coincidence only plausibly means identical inputs) the
+    // equal-boundaries shortcut is kept.
+    if (exactInts) (pa >= -1 || pb >= -1) && sharedInteriorRat(ra, rb)
+    else pa == 0 && pb == 0
   }
 
   // ------------------------------------------------------------------

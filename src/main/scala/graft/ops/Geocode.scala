@@ -37,6 +37,13 @@ object Geocode {
     * broadcast in a 768 MB heap, where a collect()-and-sort build ran out
     * of a 1 GB heap at 4·10^6. */
   final val BroadcastPointCeiling = BroadcastCoverCeiling / 2
+  /** Forward-geocode gazetteer rows ([[graft.index.GazDictData]]): 41 B
+    * of primitive arrays per row plus ~16 B and the name's chars per
+    * distinct name. Measured on a local-mode driver with distinct 11-char
+    * names: ~76 B/row held after the streamed build, ~128 B/row once
+    * broadcast; 5·10^6 rows build and broadcast in a 1 GB heap. A fifth of
+    * the cover ceiling's entries keeps the held arrays near ~1.5 GB. */
+  final val BroadcastGazCeiling = BroadcastCoverCeiling / 5
 
   /** Memoized count of a dimension frame (the ceiling probe): one tiny job
     * per distinct plan, like [[maxNameTokens]]. */
@@ -57,6 +64,19 @@ object Geocode {
     pointIndexMemo.compute((featurePoints.queryExecution.analyzed.canonicalized, z), (_, old) =>
       if (old != null && (old._1 eq sc)) old
       else (sc, sc.broadcast(graft.index.CellIndex.buildPoints(featurePoints, z, n))))._2
+  }
+
+  /** Broadcast forward-geocode dictionary per gazetteer plan, built once
+    * per SparkContext like [[pointIndex]]. */
+  private val gazDictMemo = new java.util.concurrent.ConcurrentHashMap[
+    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+    (org.apache.spark.SparkContext, org.apache.spark.broadcast.Broadcast[graft.index.GazDictData])]()
+  private def gazDict(gaz: DataFrame, n: Long)
+      : org.apache.spark.broadcast.Broadcast[graft.index.GazDictData] = {
+    val sc = gaz.sparkSession.sparkContext
+    gazDictMemo.compute(gaz.queryExecution.analyzed.canonicalized, (_, old) =>
+      if (old != null && (old._1 eq sc)) old
+      else (sc, sc.broadcast(graft.index.GazDict.build(gaz, n))))._2
   }
 
   /** Memoized sorted distinct phrase-id array of a grid index (the
@@ -622,16 +642,44 @@ object Geocode {
     rank(withRelev, k)
   }
 
-  /** Full forward geocode (the flagship / headline benchmark pipeline).
+  /** Full forward geocode (the flagship / headline benchmark pipeline):
+    * per page, the top-k of [[rank]] over [[coalesce2]] over [[mentions]].
+    * `doc_id` is the page key and must be unique and non-null: each page
+    * row gets its own top-k, where the staged operators would pool the
+    * mentions of rows sharing a `doc_id`.
     *
-    * The mention stage feeds three consumers (place candidates, the region
-    * build side of the stack join, and standalone region candidates); without
-    * materialization Catalyst re-derives all three from the source scan —
-    * 3 full passes over the pages table, untenable at 10^12 rows. Locally we
-    * persist() the mention frame; at cluster scale the same cut point is the
-    * checkpointed mentions table (SURVEY.md §2.A6) written once per run. */
+    * Every mention, stack and candidate of a page comes from that one page
+    * row, so up to [[BroadcastGazCeiling]] gazetteer rows (memoized count
+    * probe) the whole pipeline is ONE map-only stage: the place and region
+    * rows are packed into a [[graft.index.GazDictData]] and broadcast, once
+    * per gazetteer plan, and the `fwd_topk` kernel replays windows → name
+    * matches → stack → rank inside each page row, row-identical to the
+    * staged path (FallbackSpec). No exchange, window, persist or count.
+    *
+    * Over the ceiling the dictionary never reaches the driver and the
+    * staged operators run instead ([[forwardStaged]]). */
   def forward(docs: DataFrame, gaz: DataFrame, k: Int = 5,
               dedupe: Boolean = false): DataFrame = {
+    val n = memoCount(gaz)
+    if (n > BroadcastGazCeiling) return forwardStaged(docs, gaz, k, dedupe)
+    val bc = gazDict(gaz, n)
+    docs
+      .select(col("doc_id"), explode(graft.index.GazDict.fwdTopKCol(col("text"),
+        col("qlon").cast("double"), col("qlat").cast("double"), bc, k, dedupe)).as("c"))
+      .select(col("doc_id"),
+        col("c.feature_id").cast(gaz.schema("gid").dataType).as("feature_id"),
+        col("c.typ").as("typ"), col("c.relev").as("relev"), col("c.cell").as("cell"),
+        col("c.ctx").as("ctx"), round(col("c.sd"), 4).as("sd"), col("c.rank").as("rank"))
+  }
+
+  /** The staged form of [[forward]], and its over-ceiling path. The
+    * mention stage feeds three consumers (place candidates, the region
+    * build side of the stack join, and standalone region candidates);
+    * without materialization Catalyst re-derives all three from the source
+    * scan, so the mention frame is persisted; at cluster scale the same cut
+    * point is the checkpointed mentions table (SURVEY.md §2.A6). */
+  private[graft] def forwardStaged(docs: DataFrame, gaz: DataFrame, k: Int,
+                                   dedupe: Boolean): DataFrame = {
     val m = mentions(docs, gaz).persist()
     rank(coalesce2(m), k, dedupe)
   }

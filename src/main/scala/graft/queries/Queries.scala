@@ -6616,8 +6616,14 @@ object Queries {
 
   def langFallback(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
+    // the list must cover the corpus: a page in any other language (or
+    // none) fails the query instead of silently losing its matches, which
+    // the oracle keeps (it matches every language)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"), col("lang"))
+      .select(col("doc_id"), col("text"),
+        when(col("lang").isin(FallbackLangs: _*), col("lang")).otherwise(raise_error(
+          concat(lit("lang_fallback: page language "), coalesce(col("lang"), lit("NULL")),
+            lit(" is not in FallbackLangs")))).as("lang"))
     // The per-language EFFECTIVE phrase dictionary (alt name when defined
     // for that language, default name otherwise) — a langs × gazetteer
     // dimension table built driver-side from the SHIPPED language list

@@ -308,6 +308,24 @@ class GeoSpec extends AnyFunSuite {
     // touching-but-not-overlapping regime, or the test proves nothing
     assert(overlaps > 100 && overlaps < checked - 50, s"$overlaps/$checked")
     assert(degenerateTouches > 30, s"only $degenerateTouches touching pairs")
+    // multipart pairs A = {S1, S2}, B = {S1 or S1', S3}: S2 and S3 in a box
+    // 10° east, so each input's parts are disjoint. A shared S1 overlaps
+    // even when S2 and S3 do not (every probe of S1 is ON the other's
+    // boundary while S2 and S3 probe outside)
+    def east(t: Array[Double]) = t.indices.map(i => if (i % 2 == 0) t(i) + 10 else t(i)).toArray
+    var sharedOnly = 0
+    (0 until 400).foreach { trial =>
+      val s1 = latTri(); val s2 = east(latTri()); val s3 = east(latTri())
+      val b1 = if (trial % 2 == 0) s1 else latTri()
+      val ga = Geom(Geom.Poly, Array(s1, s2)); val gb = Geom(Geom.Poly, Array(b1, s3))
+      val jts = gf.createMultiPolygon(Array(toJts(s1), toJts(s2)))
+        .relate(gf.createMultiPolygon(Array(toJts(b1), toJts(s3)))).matches("2********")
+      assert(Geo.polysOverlap(ga, gb) == jts && Geo.polysOverlap(gb, ga) == jts,
+        s"multipart trial $trial a=${s1.mkString(",")} | ${s2.mkString(",")} " +
+          s"b=${b1.mkString(",")} | ${s3.mkString(",")}")
+      if ((b1 eq s1) && !toJts(s2).relate(toJts(s3)).matches("2********")) sharedOnly += 1
+    }
+    assert(sharedOnly > 50, s"only $sharedOnly shared-part pairs whose other parts do not overlap")
   }
 
   test("polysOverlap: holes and multipolygon parts are even-odd first-class") {

@@ -140,4 +140,108 @@ class FallbackSpec extends SparkTestBase {
     assert(Geocode.knnExpanding(emptyPts, feats, 5, radii).collect().isEmpty)
     assert(Geocode.knnLoop(emptyPts, feats, 5, radii).collect().isEmpty)
   }
+
+  /** A gazetteer row: (gid, name, typ, score, glon, glat, stack). */
+  private type G = (Long, String, String, Option[Double], Option[Double], Option[Double], String)
+
+  private def fwdRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toString).sorted.toSeq
+
+  private def fwdDictIds(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+      case k: graft.index.GazDict.FwdTopK => k.bc.id
+    }))
+
+  /** forward ≡ forwardStaged on sorted row lists, types included, and the
+    * fused plan is map-only. */
+  private def assertFusedEqualsStaged(what: String, docs: org.apache.spark.sql.DataFrame,
+                                      gaz: org.apache.spark.sql.DataFrame, k: Int = 5,
+                                      dedupe: Boolean = false): Seq[String] = {
+    val fused = Geocode.forward(docs, gaz, k, dedupe)
+    val staged = Geocode.forwardStaged(docs, gaz, k, dedupe)
+    val plan = fused.queryExecution.executedPlan.toString
+    assert(plan.contains("fwd_topk"), s"$what:\n$plan")
+    assert(!plan.contains("Exchange") && !plan.contains("Window") &&
+      !plan.contains("InMemoryTableScan"), s"$what: fused forward must be map-only:\n$plan")
+    assert(fused.schema.map(f => (f.name, f.dataType)) == staged.schema.map(f => (f.name, f.dataType)), what)
+    val a = fwdRows(fused)
+    assert(a == fwdRows(staged), what)
+    a
+  }
+
+  test("forward: broadcast gazetteer dictionary is one map-only stage, row-identical to the staged path") {
+    val docs = Synth.docPages(spark, sf)
+    val gaz = Synth.gazDf(spark)
+    val dup = Synth.dupGazDf(spark)
+    val nullQ = docs.withColumn("qlon", when(col("doc_id") % 3 === 0, lit(null)).otherwise(col("qlon")))
+    Seq(
+      ("gazDf", docs, gaz, 5, false),
+      ("dupGazDf", docs, dup, 5, false),
+      ("dupGazDf dedupe", docs, dup, 5, true),
+      ("fwd_stacks filter", docs, gaz.filter(col("stack").isin("na", "eu")), 5, false),
+      ("k = 50", docs, gaz, 50, false),
+      ("null qlon on a third of the pages", nullQ, gaz, 5, false)
+    ).foreach { case (what, d, g, k, dedupe) =>
+      assert(assertFusedEqualsStaged(what, d, g, k, dedupe).nonEmpty, what)
+    }
+    // the dictionary is built and broadcast once per gazetteer plan
+    val ids = Seq(Geocode.forward(docs, gaz), Geocode.forward(docs.limit(5), gaz, 3)).flatMap(fwdDictIds)
+    assert(ids.size == 2 && ids.distinct.size == 1, ids.toString)
+    assert(fwdDictIds(Geocode.forward(docs, dup)).head != ids.head)
+  }
+
+  test("forward edge cases: nulls, empty frames, long names, other types, region cap, shared names") {
+    import spark.implicits._
+    val r0 = Synth.regions(0); val r1 = Synth.regions(1); val r3 = Synth.regions(3)
+    val hashJoin = Synth.places.find(_.name == "hash join").get
+    val extra: Seq[G] = Seq(
+      // a 5-token name: the staged path switches to the Aho-Corasick matcher
+      (900L, "alpha beta gamma delta eps", "place", Some(50.0), Some(r0.lon + 0.01), Some(r0.lat + 0.01), "na"),
+      // not a place or region: never a candidate, even sharing a region's name
+      (901L, "data", "country", Some(99.0), Some(r0.lon), Some(r0.lat), "na"),
+      // a second row named like an existing place, in another region's cell
+      (902L, "hash join", "place", Some(7.0), Some(r3.lon + 0.01), Some(r3.lat + 0.01), "na"),
+      // null coordinates and a null score
+      (903L, "cove", "region", Some(5.0), None, Some(r0.lat), "na"),
+      (904L, "bay", "place", None, Some(r0.lon + 0.01), None, "na"),
+      // "park" sits in r0's z8 cell, under the "zone" regions 716..719 only
+      (905L, "park", "place", Some(11.0), Some(r0.lon + 0.01), Some(r0.lat + 0.01), "na")) ++
+      // 20 region rows named "zone": with "spark" (gid 2, r1's cell) the
+      // cap of 16 by (wr desc, rid asc) keeps 2 and 700..714, so 716..719
+      // (r0's cell) never stack "park"
+      (700 until 720).map { g =>
+        val r = if (g < 716) r1 else r0
+        (g.toLong, "zone", "region", Some(g % 13 + 1.0), Some(r.lon), Some(r.lat), "na"): G
+      }
+    val base: Seq[G] = Synth.gazetteer.map(g => (g.id, g.name, g.typ, Some(g.score), Some(g.lon), Some(g.lat), g.stack))
+    val gaz = (base ++ extra).toDF("gid", "name", "typ", "score", "glon", "glat", "stack")
+    val docs = Seq[(Long, String, Option[Double], Option[Double])](
+      (1L, "alpha beta gamma delta eps data hash join", Some(r0.lon), Some(r0.lat)),
+      (2L, null, Some(0.0), Some(0.0)),
+      (3L, "hash join data cove bay", Some(hashJoin.lon), None),
+      (4L, "zone park spark", Some(10.0), Some(20.0)),
+      (5L, "bay x data cove data hash join window", None, None)
+    ).toDF("doc_id", "text", "qlon", "qlat")
+    val a = assertFusedEqualsStaged("edge gazetteer", docs, gaz, k = 50)
+    val rows = Geocode.forward(docs, gaz, 50).collect()
+    def fids(doc: Long) = rows.filter(_.getLong(0) == doc).map(_.getLong(1)).toSet
+    assert(fids(1L).contains(900L) && fids(1L).contains(902L) && fids(1L).contains(hashJoin.id))
+    assert(!rows.exists(_.getLong(1) == 901L), "a country row must never be a candidate")
+    assert(fids(2L).isEmpty, "null text has no mentions")
+    assert(fids(4L).size == 22, s"20 zone regions + park + spark: ${fids(4L)}")
+    val park = rows.find(r => r.getLong(0) == 4L && r.getLong(1) == 905L).get
+    assert(park.getLong(5) == -1L, s"park must stay unstacked past the region cap: $park")
+    assert(rows.exists(r => r.getLong(1) == 904L && r.isNullAt(4) && r.isNullAt(6)),
+      "a place with null coordinates and score keeps a null cell and sd")
+    // the dedupe path over the same inputs
+    assertFusedEqualsStaged("edge gazetteer, dedupe", docs, gaz, k = 50, dedupe = true)
+    // doc_id is the page key: a repeated page row gets its own top-k
+    val twice = docs.union(docs.filter(col("doc_id") === 1L))
+    assert(fwdRows(Geocode.forward(twice, gaz, 50)) ==
+      (a ++ a.filter(_.startsWith("[1,"))).sorted)
+    // empty docs, empty gazetteer
+    assert(Geocode.forward(docs.limit(0), gaz).collect().isEmpty)
+    assert(Geocode.forward(docs, gaz.limit(0)).collect().isEmpty)
+    assert(Geocode.forwardStaged(docs.limit(0), gaz, 5, dedupe = false).collect().isEmpty)
+  }
 }

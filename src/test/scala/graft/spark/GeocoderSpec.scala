@@ -146,6 +146,23 @@ class GeocoderSpec extends SparkTestBase {
       "fixture must actually produce clone candidates without dedupe")
   }
 
+  test("lang_fallback fails loudly on a page language outside FallbackLangs") {
+    import spark.implicits._
+    import graft.queries.Queries
+    def corpus(langs: String*): String = {
+      val dir = java.nio.file.Files.createTempDirectory("langfb").toString
+      langs.zipWithIndex.map { case (l, i) => (i.toLong, "hash join data", l) }
+        .toDF("doc_id", "text", "lang").write.parquet(s"$dir/documents.parquet")
+      dir
+    }
+    assert(Queries.langFallback(spark, corpus("en", "de")).collect().nonEmpty)
+    Seq(corpus("en", "xx"), corpus("en", null)).foreach { dir =>
+      val e = intercept[Exception](Queries.langFallback(spark, dir).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("is not in FallbackLangs")), e.toString)
+    }
+  }
+
   test("stack filter prunes candidates before matching") {
     import graft.queries.Queries
     val out = Queries.fwdStacks(spark, "/root/testdata/sf0.001").collect()

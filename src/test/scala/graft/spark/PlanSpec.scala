@@ -10,8 +10,18 @@ class PlanSpec extends SparkTestBase {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  test("fwd_geocode: stack join shuffles, gazetteer broadcasts, top-k pushed") {
+  test("fwd_geocode: one map-only stage over the broadcast gazetteer dictionary") {
     val p = plan(Queries.fwdGeocode(spark, "/root/testdata/sf0.001"))
+    assert(p.contains("fwd_topk"), p)
+    assert(!p.contains("Exchange") && !p.contains("Window") && !p.contains("InMemoryTableScan"),
+      s"forward must be map-only:\n$p")
+  }
+
+  test("fwd_geocode: stack join shuffles, gazetteer broadcasts, top-k pushed") {
+    // the staged path: forward's over-ceiling fallback and the equivalence reference
+    val p = plan(graft.ops.Geocode.forwardStaged(
+      graft.synth.Synth.docPages(spark, "/root/testdata/sf0.001"),
+      graft.synth.Synth.gazDf(spark), 5, dedupe = false))
     assert(p.contains("ShuffledHashJoin") || p.contains("SortMergeJoin"),
       "per-doc stack join must not be a broadcast")
     assert(p.contains("BroadcastHashJoin"), "gazetteer join should broadcast")
