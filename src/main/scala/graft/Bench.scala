@@ -10,8 +10,11 @@ import graft.synth.Synth
   * Reports (a) per-query wall seconds for every SparkEntry query at the
   * env-selected parallelism, and (b) the headline geocode-join throughput
   * (docs/sec, amplified pages input) measured at local[N] and local[4N]
-  * (default N=2) on the same input — the sandbox stand-in for N vs 4N
-  * executors (BASELINE.md): scaling efficiency = rate_4N / (4 × rate_N).
+  * (default N = max(1, CPUs/4), so 4N fits the box) on the same input —
+  * the sandbox stand-in for N vs 4N executors (BASELINE.md): scaling
+  * efficiency = rate_4N / (4 × rate_N). A sample whose child JVM yields no
+  * rate is a FAILED pair: left out of every median and efficiency and
+  * counted in `failed_pairs`; with no successful pair the rates print null.
   */
 object Bench {
 
@@ -107,8 +110,20 @@ object Bench {
   // clean pairs; see the headline-section comment for the full rationale.
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
-    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+    if (s.isEmpty) Double.NaN
+    else if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
   }
+  /** JSON number with `d` decimals; NaN (no successful sample) is null. */
+  private[graft] def num(x: Double, d: Int = 1): String =
+    if (x.isNaN) "null" else s"%.${d}f".format(x)
+  private def arr(xs: Seq[Option[Double]]): String =
+    xs.map(_.fold("null")(num(_))).mkString("[", ",", "]")
+  /** The N/4N pair fields shared by every scaling mode's JSON line. */
+  private def pairFields(ps: PairStats): String =
+    s""""docs_per_sec_n":${num(ps.rateA)},"docs_per_sec_4n":${num(ps.rateB)},"scaling_efficiency":${num(median(ps.pairEffs), 3)},"samples_n":${arr(ps.samplesA)},"samples_4n":${arr(ps.samplesB)},"pair_efficiencies":${ps.pairEffs.map(num(_, 3)).mkString("[", ",", "]")},"clean_pairs":${ps.cleanPairs},"failed_pairs":${ps.failedPairs}"""
+  /** Default N of the N-vs-4N pairs: 4N never exceeds the box's CPUs. */
+  private def scaleN: Int =
+    sys.env.get("SPARK_GRAFT_SCALE_N").map(_.toInt).getOrElse(math.max(1, totalCpus / 4))
   private def probeSec(): Double = {
     var acc = 0L; var i = 0L
     val t0 = System.nanoTime()
@@ -145,8 +160,24 @@ object Bench {
     }
     r
   }
-  /** Interleaved pinned sample pairs of `sample(cores, warm)`; returns
-    * (medianRateA, medianRateB, samplesA, samplesB, perPairEffs, cleanPairs).
+  /** Summary of interleaved (A, B) sample pairs. A pair with a failed
+    * sample (None) is left out of the medians and efficiencies and counted
+    * in `failedPairs`; the rest are summarized over the clean pairs (all
+    * four load probes ≤ [[CleanRatio]]) when at least two are clean, else
+    * over every successful pair. Medians of no pair are NaN. */
+  private[graft] final case class PairStats(rateA: Double, rateB: Double,
+      samplesA: Seq[Option[Double]], samplesB: Seq[Option[Double]],
+      pairEffs: Seq[Double], cleanPairs: Int, failedPairs: Int)
+  private[graft] def summarizePairs(a: Seq[Option[Double]], b: Seq[Option[Double]],
+                                    dirt: Seq[Double]): PairStats = {
+    val ok = a.indices.filter(j => a(j).isDefined && b(j).isDefined)
+    val clean = ok.filter(dirt(_) <= CleanRatio)
+    val sel = if (clean.size >= 2) clean else ok
+    PairStats(median(sel.map(a(_).get)), median(sel.map(b(_).get)), a, b,
+      sel.map(j => b(j).get / (4.0 * a(j).get)), clean.size, a.size - ok.size)
+  }
+  /** Interleaved pinned sample pairs of `sample(cores, warm)` (None = the
+    * sample failed), summarized by [[summarizePairs]].
     *
     * Bimodal low-mode re-run (bounded): BENCH.md's six same-day re-runs
     * diagnosed the residual pair-ratio spread as host-side contention
@@ -157,19 +188,18 @@ object Bench {
     * stays the median over ALL clean pairs — extra data, never selective
     * discarding, so a genuinely-low plan still reads low. */
   private val BimodalExtras = 3
-  private def pairLoop(sample: (String, Boolean) => Double,
-                       coresA: String, coresB: String, samples: Int)
-      : (Double, Double, Seq[Double], Seq[Double], Seq[Double], Int) = {
-    val a = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val b = scala.collection.mutable.ArrayBuffer.empty[Double]
+  private def pairLoop(sample: (String, Boolean) => Option[Double],
+                       coresA: String, coresB: String, samples: Int): PairStats = {
+    val a = scala.collection.mutable.ArrayBuffer.empty[Option[Double]]
+    val b = scala.collection.mutable.ArrayBuffer.empty[Option[Double]]
     val dirt = scala.collection.mutable.ArrayBuffer.empty[Double]
-    def cleanIdx = dirt.indices.filter(dirt(_) <= CleanRatio)
+    def stats = summarizePairs(a.toSeq, b.toSeq, dirt.toSeq)
     def bimodal = {
-      val e = cleanIdx.map(j => b(j) / (4.0 * a(j)))
-      e.size >= 2 && median(e.toSeq) < 0.85 * e.max
+      val s = stats
+      s.cleanPairs >= 2 && median(s.pairEffs) < 0.85 * s.pairEffs.max
     }
     var i = 0
-    while (i < samples || (i < samples + 4 && cleanIdx.size < 2) ||
+    while (i < samples || (i < samples + 4 && stats.cleanPairs < 2) ||
            (i < samples + BimodalExtras && bimodal)) {
       val patience = if (i < samples) 6 else 12 // make-up pairs wait harder
       pinCpus(coresA.toInt)
@@ -184,10 +214,7 @@ object Bench {
       dirt += Seq(pa0, pa1, pb0, pb1).max
       i += 1
     }
-    val sel = if (cleanIdx.size >= 2) cleanIdx else dirt.indices.toSeq
-    val pairEffs = sel.map(j => b(j) / (4.0 * a(j))).toSeq
-    (median(sel.map(a).toSeq), median(sel.map(b).toSeq), a.toSeq, b.toSeq,
-      pairEffs, cleanIdx.size)
+    stats
   }
 
   // ---- child-JVM sample isolation (headline + dedup scaling modes) ----
@@ -195,7 +222,7 @@ object Bench {
   // block-manager history across the run: the IDENTICAL 8-core dedup sample
   // measured 17.8 s in a fresh context vs 25 s mid-pairLoop, swinging the
   // efficiency estimate 0.43↔0.70 on JVM history alone (BENCH.md). A child
-  // JVM per sample (taskset-confined at launch, same add-opens/-Xmx as the
+  // JVM per sample (taskset-confined at launch, same add-opens as the
   // parent, fixed pre-touched heap so heap-grow/GC timing is not sample
   // luck) makes samples iid — the single-box analogue of "every executor
   // starts equal". JVM+session startup stays OUTSIDE the timed region: the
@@ -206,41 +233,71 @@ object Bench {
     java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.toSeq
   }
-  private lazy val childHeap = parentJvmArgs.collectFirst {
-    case a if a.startsWith("-Xmx") => a.stripPrefix("-Xmx")
-  }.getOrElse("16g")
-  private val rateRe = """\{"rate":([0-9.]+)\}""".r
+  /** Sample-child heap in MB: the parent's max heap, capped at a quarter of
+    * the box's MemTotal so the pre-touched heap fits beside the parent. */
+  private lazy val childHeapMb: Long = {
+    val parentMb = Runtime.getRuntime.maxMemory >> 20
+    val quarterBoxMb = scala.util.Try {
+      val src = scala.io.Source.fromFile("/proc/meminfo")
+      try src.getLines().collectFirst {
+        case l if l.startsWith("MemTotal:") => l.split("\\s+")(1).toLong / 1024 / 4
+      }.get finally src.close()
+    }.getOrElse(parentMb)
+    math.min(parentMb, quarterBoxMb)
+  }
+  private[graft] def parseRate(out: String): Option[Double] =
+    """\{"rate":([0-9.]+)\}""".r.findFirstMatchIn(out).map(_.group(1).toDouble)
+
+  /** Run a child JVM with its stderr kept in a temp file and `parse` its
+    * stdout. No result: the stderr file is kept, its path and last lines
+    * go to this process's stderr, and the path is returned as Left. */
+  private[graft] def childResult[A](what: String, cmd: Seq[String],
+                                    env: Map[String, String])
+                                   (parse: String => Option[A]): Either[java.nio.file.Path, A] = {
+    val err = java.nio.file.Files.createTempFile("graft-bench-child", ".err")
+    val pb = new ProcessBuilder(cmd: _*)
+    env.foreach { case (k, v) => pb.environment().put(k, v) }
+    pb.redirectError(err.toFile)
+    val p = pb.start()
+    val out = new String(p.getInputStream.readAllBytes,
+      java.nio.charset.StandardCharsets.UTF_8)
+    val code = p.waitFor()
+    parse(out) match {
+      case Some(a) => java.nio.file.Files.delete(err); Right(a)
+      case None =>
+        import scala.jdk.CollectionConverters._
+        val tail = java.nio.file.Files.readAllLines(err).asScala.map(_.trim)
+          .filterNot(l => l.startsWith("at ") || l.matches("""\.\.\. \d+ more""")).takeRight(20)
+        System.err.println(s"[bench] $what produced no result (exit $code); " +
+          s"stdout tail: ${out.takeRight(300).trim}")
+        System.err.println(s"[bench] its stderr is kept in $err; last lines (stack frames omitted):")
+        tail.foreach(l => System.err.println(s"[bench]   $l"))
+        Left(err)
+    }
+  }
   /** Fork one `graft.Bench` child pinned to `cores` CPUs, with `childEnv`
-    * selecting the child-mode branch; parse its {"rate":...} line. The
+    * selecting the child-mode branch; parse its {"rate":...} line (None:
+    * the child printed no rate — a failed sample, see [[childResult]]). The
     * parent (holding the table-build session's garbage) must NOT share the
     * child's pinned set: unpin while the child runs — the OS keeps the
     * unpinned parent on the idle low cores — and re-pin for the bracketing
     * post-sample probe. */
-  private def forkRate(cores: String, childEnv: Map[String, String]): Double = {
+  private def forkRate(cores: String, childEnv: Map[String, String]): Option[Double] = {
     val k = cores.toInt
     // same fail-soft contract as pinCpus: without taskset the child runs
     // unpinned (cpu_pinning:false already flags the run), and k >= total
     // CPUs means no confinement (oversubscribed but valid — pinCpus's own
     // guard; an unguarded range would go negative on a narrower box and
-    // taskset would exit without exec'ing the child, banking rate 0.0)
+    // taskset would exit without exec'ing the child: a failed sample)
     val pin = if (pinningWorks && k < totalCpus)
       Seq("taskset", "-c", s"${totalCpus - k}-${totalCpus - 1}") else Seq.empty
     val cmd = pin ++ Seq(javaBin) ++ parentJvmArgs ++
-      Seq(s"-Xms$childHeap", "-XX:+AlwaysPreTouch",
+      Seq(s"-Xmx${childHeapMb}m", s"-Xms${childHeapMb}m", "-XX:+AlwaysPreTouch",
         "-cp", System.getProperty("java.class.path"), "graft.Bench")
-    val pb = new ProcessBuilder(cmd: _*)
-    childEnv.foreach { case (k2, v) => pb.environment().put(k2, v) }
-    pb.redirectError(ProcessBuilder.Redirect.DISCARD)
     unpinCpus()
-    val p = pb.start()
-    val out = new String(p.getInputStream.readAllBytes,
-      java.nio.charset.StandardCharsets.UTF_8)
-    p.waitFor()
+    val rate = childResult(s"$k-core sample child", cmd, childEnv)(parseRate)
     pinCpus(k)
-    rateRe.findFirstMatchIn(out).map(_.group(1).toDouble).getOrElse {
-      System.err.println(s"[bench] child produced no rate: ${out.takeRight(500)}")
-      0.0
-    }
+    rate.toOption
   }
 
   def main(args: Array[String]): Unit = {
@@ -362,7 +419,7 @@ object Bench {
       // that caps scaling efficiency at any core count.
       val evalMod = 41L * ampC
       val evalRes = 3L * ampC
-      def curateRate(cores: String, warm: Boolean): Double = {
+      def curateRate(cores: String, warm: Boolean): Option[Double] = {
         val s = session(cores, cores.toInt)
         try {
           def docs = s.read.parquet(docsPath)
@@ -371,17 +428,15 @@ object Bench {
             evalMod = evalMod, evalRes = evalRes).count()
           val nDocs = docs.count()
           s.catalog.clearCache()
-          nDocs / time(graft.ops.TextOps.curate(
+          Some(nDocs / time(graft.ops.TextOps.curate(
             graft.ops.TextOps.curationFixture(docs),
-            evalMod = evalMod, evalRes = evalRes).count())
+            evalMod = evalMod, evalRes = evalRes).count()))
         } finally s.stop()
       }
-      val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "2").toInt
+      val n = scaleN
       val samples = sys.env.getOrElse("SPARK_GRAFT_SAMPLES", "3").toInt
-      def arr0(xs: Seq[Double]): String = xs.map(x => f"$x%.1f").mkString("[", ",", "]")
-      val (rn, r4n, sa, sb, effs, clean) =
-        pairLoop(curateRate, n.toString, (4 * n).toString, samples)
-      println(s"""{"metric":"corpus-curate throughput (docs/sec)","scale_n":$n,"docs_per_sec_n":${f"$rn%.1f"},"docs_per_sec_4n":${f"$r4n%.1f"},"scaling_efficiency":${f"${median(effs)}%.3f"},"samples_n":${arr0(sa)},"samples_4n":${arr0(sb)},"pair_efficiencies":${effs.map(x => f"$x%.3f").mkString("[", ",", "]")},"clean_pairs":$clean,"cpu_pinning":$pinningWorks,"load_probe_worst_ratio":${f"$probeWorst%.2f"},"amplification":$ampC,"sf":"$sfDir"}""")
+      val ps = pairLoop(curateRate, n.toString, (4 * n).toString, samples)
+      println(s"""{"metric":"corpus-curate throughput (docs/sec)","scale_n":$n,${pairFields(ps)},"cpu_pinning":$pinningWorks,"load_probe_worst_ratio":${f"$probeWorst%.2f"},"amplification":$ampC,"sf":"$sfDir"}""")
       return
     }
 
@@ -426,7 +481,7 @@ object Bench {
       }
       // Each sample forks a fresh child JVM (see forkRate); the warm flag
       // is moot — every child warms itself.
-      def dedupRate(cores: String, warm: Boolean): Double =
+      def dedupRate(cores: String, warm: Boolean): Option[Double] =
         forkRate(cores, Map("SPARK_GRAFT_DEDUP_CHILD" -> cores,
           "SPARK_GRAFT_DEDUP_PATH" -> docsPath))
       // stage-breakdown sub-mode (SPARK_GRAFT_DEDUP_STAGES=1): time each
@@ -453,19 +508,17 @@ object Bench {
             Seq("exact_reps" -> tReps, "reps_sigs" -> tSigs, "full" -> tFull)
           } finally { s.stop(); unpinCpus() }
         }
-        val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "2").toInt
+        val n = scaleN
         val lo = stages(n.toString); val hi = stages((4 * n).toString)
         def js(xs: Seq[(String, Double)]) =
           xs.map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }.mkString("{", ",", "}")
         println(s"""{"metric":"minhash-dedup stage seconds","scale_n":$n,"stages_n":${js(lo)},"stages_4n":${js(hi)},"amplification":$ampD,"sf":"$sfDir"}""")
         return
       }
-      val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "2").toInt
+      val n = scaleN
       val samples = sys.env.getOrElse("SPARK_GRAFT_SAMPLES", "3").toInt
-      def arr0(xs: Seq[Double]): String = xs.map(x => f"$x%.1f").mkString("[", ",", "]")
-      val (rn, r4n, sa, sb, effs, clean) =
-        pairLoop(dedupRate, n.toString, (4 * n).toString, samples)
-      println(s"""{"metric":"minhash-dedup throughput (docs/sec)","scale_n":$n,"docs_per_sec_n":${f"$rn%.1f"},"docs_per_sec_4n":${f"$r4n%.1f"},"scaling_efficiency":${f"${median(effs)}%.3f"},"samples_n":${arr0(sa)},"samples_4n":${arr0(sb)},"pair_efficiencies":${effs.map(x => f"$x%.3f").mkString("[", ",", "]")},"clean_pairs":$clean,"cpu_pinning":$pinningWorks,"load_probe_worst_ratio":${f"$probeWorst%.2f"},"amplification":$ampD,"sf":"$sfDir"}""")
+      val ps = pairLoop(dedupRate, n.toString, (4 * n).toString, samples)
+      println(s"""{"metric":"minhash-dedup throughput (docs/sec)","scale_n":$n,${pairFields(ps)},"cpu_pinning":$pinningWorks,"load_probe_worst_ratio":${f"$probeWorst%.2f"},"amplification":$ampD,"sf":"$sfDir"}""")
       return
     }
 
@@ -500,7 +553,7 @@ object Bench {
       * pre-materialized 32-split pages table — every sample pays a
       * parallel scan, not a serial re-amplification. The warm flag is
       * moot in child mode. */
-    def sampleRate(cores: String, warm: Boolean): Double =
+    def sampleRate(cores: String, warm: Boolean): Option[Double] =
       forkRate(cores, Map("SPARK_GRAFT_HEADLINE_CHILD" -> cores,
         "SPARK_GRAFT_PAGES_PATH" -> pagesPath,
         "SPARK_GRAFT_HEADLINE_PARTS" -> headlineParts(cores).toString))
@@ -530,8 +583,7 @@ object Bench {
       *    count are reported so rejection is visible in the JSON. */
     val samplesPerConfig = sys.env.getOrElse("SPARK_GRAFT_SAMPLES", "5").toInt
     def headlinePair(coresA: String, coresB: String,
-                     samples: Int = samplesPerConfig)
-        : (Double, Double, Seq[Double], Seq[Double], Seq[Double], Int) =
+                     samples: Int = samplesPerConfig): PairStats =
       pairLoop(sampleRate, coresA, coresB, samples)
     // at-scale forward paths (grid-index equi-join, no gazetteer broadcast)
     // measured at 4N for comparison with the broadcast-path headline:
@@ -587,32 +639,19 @@ object Bench {
 
     // N vs 4N cores (BASELINE.json: "N and 4N executors"); N overridable —
     // small N measures cleanest on a shared box (GC/IO threads are JVM-wide
-    // and would otherwise subsidize the small configuration). The full-width
-    // 8-vs-32 pair is reported ALONGSIDE (BASELINE.md's stated config);
-    // disable with SPARK_GRAFT_SKIP_8V32=1 when iterating locally.
-    def arr(xs: Seq[Double]): String = xs.map(x => f"$x%.1f").mkString("[", ",", "]")
-
-    if (sys.env.get("SPARK_GRAFT_ONLY_QUERIES").contains("1")) {
-      val results = runQueries()
-      val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-      val total = results.map(_._2).sum
-      println(s"""{"metric":"per-query seconds only","total_query_sec":${f"$total%.3f"},"queries":$qs,"idf_dict_sec":${f"$idfDictSec%.3f"},"sf":"$sfDir"}""")
-      return
-    }
-
-    val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "2").toInt
-    val (rateN, rate4N, sN, s4N, pairEffs, cleanPairs) =
-      headlinePair(n.toString, (4 * n).toString)
-    val eff = median(pairEffs)
+    // and would otherwise subsidize the small configuration). On a box with
+    // at least 32 CPUs the full-width 8-vs-32 pair is reported ALONGSIDE
+    // (BASELINE.md's stated config).
+    val n = scaleN
+    val ps = headlinePair(n.toString, (4 * n).toString)
     val wide =
-      if (sys.env.get("SPARK_GRAFT_SKIP_8V32").contains("1") || n == 8) ""
+      if (totalCpus < 32 || n == 8) ""
       else {
-        // the 8v32 pair is reported ALONGSIDE (it measures the box's memory
-        // ceiling, not the plan — BENCH.md); 3 samples keep total bench
-        // wall-time bounded while the PRIMARY N/4N pair gets the full 5
-        val (r8, r32, s8, s32, e832, _) = headlinePair("8", "32", math.min(3, samplesPerConfig))
-        s""","docs_per_sec_8":${f"$r8%.1f"},"docs_per_sec_32":${f"$r32%.1f"},"scaling_efficiency_8_32":${f"${median(e832)}%.3f"},"samples_8":${arr(s8)},"samples_32":${arr(s32)}"""
+        // the 8v32 pair measures the box's memory ceiling, not the plan
+        // (BENCH.md); 3 samples keep total bench wall-time bounded while
+        // the PRIMARY N/4N pair gets the full 5
+        val w = headlinePair("8", "32", math.min(3, samplesPerConfig))
+        s""","docs_per_sec_8":${num(w.rateA)},"docs_per_sec_32":${num(w.rateB)},"scaling_efficiency_8_32":${num(median(w.pairEffs), 3)},"samples_8":${arr(w.samplesA)},"samples_32":${arr(w.samplesB)},"failed_pairs_8_32":${w.failedPairs}"""
       }
 
     // the at-scale index-path rates pin to the same 4N CPU set as the
@@ -634,25 +673,17 @@ object Bench {
     else {
       val cmd = Seq(javaBin) ++ parentJvmArgs ++
         Seq("-cp", System.getProperty("java.class.path"), "graft.Bench")
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.environment().put("SPARK_GRAFT_PERQ_ONLY", "1")
-      pb.redirectError(ProcessBuilder.Redirect.DISCARD)
-      val p = pb.start()
-      val out = new String(p.getInputStream.readAllBytes,
-        java.nio.charset.StandardCharsets.UTF_8)
-      p.waitFor()
-      val obj = """"queries":(\{[^}]*\})""".r.findFirstMatchIn(out).map(_.group(1))
-        .getOrElse { System.err.println(
-          s"[bench] query child produced no JSON: ${out.takeRight(300)}"); "{}" }
-      val tot = """"[a-z0-9_]+":([0-9.]+)""".r.findAllMatchIn(obj)
+      val obj = childResult("query-sweep child", cmd, Map("SPARK_GRAFT_PERQ_ONLY" -> "1"))(
+        out => """"queries":(\{[^}]*\})""".r.findFirstMatchIn(out).map(m =>
+          (m.group(1), """"idf_dict_sec":([0-9.]+)""".r.findFirstMatchIn(out)
+            .map(_.group(1)).getOrElse("0.000"))))
+      val (q, idf) = obj.getOrElse(("{}", "0.000"))
+      val tot = """"[a-z0-9_]+":([0-9.]+)""".r.findAllMatchIn(q)
         .map(_.group(1).toDouble).sum
-      val idf = """"idf_dict_sec":([0-9.]+)""".r.findFirstMatchIn(out)
-        .map(_.group(1)).getOrElse("0.000")
-      (obj, tot, idf)
+      (q, tot, idf)
     }
-    val pairEffStr = pairEffs.map(x => f"$x%.3f").mkString("[", ",", "]")
     println(
-      s"""{"metric":"geocode-join throughput (docs/sec)","value":${f"$rate4N%.1f"},"unit":"docs/sec","total_query_sec":${f"$total%.3f"},"queries":$qs,"scale_n":$n,"docs_per_sec_n":${f"$rateN%.1f"},"docs_per_sec_4n":${f"$rate4N%.1f"},"scaling_efficiency":${f"$eff%.3f"},"samples_n":${arr(sN)},"samples_4n":${arr(s4N)},"pair_efficiencies":$pairEffStr,"clean_pairs":$cleanPairs,"cpu_pinning":$pinningWorks,"idf_dict_sec":$idfStr,"estimator":"pinned-pair-ratio-median_clean_probe_le_1.2-interleaved-$samplesPerConfig","load_probe_worst_ratio":${f"$probeWorst%.2f"}$wide,"docs_per_sec_indexed_4n":${f"$rateIdx%.1f"},"docs_per_sec_fat_4n":${f"$rateFat%.1f"},"docs_per_sec_bucketed_4n":${f"$rateBuck%.1f"},"amplification":$amp,"sf":"$sfDir"}""")
+      s"""{"metric":"geocode-join throughput (docs/sec)","value":${num(ps.rateB)},"unit":"docs/sec","total_query_sec":${f"$total%.3f"},"queries":$qs,"scale_n":$n,${pairFields(ps)},"cpu_pinning":$pinningWorks,"idf_dict_sec":$idfStr,"estimator":"pinned-pair-ratio-median_clean_probe_le_1.2-interleaved-$samplesPerConfig","load_probe_worst_ratio":${f"$probeWorst%.2f"}$wide,"docs_per_sec_indexed_4n":${f"$rateIdx%.1f"},"docs_per_sec_fat_4n":${f"$rateFat%.1f"},"docs_per_sec_bucketed_4n":${f"$rateBuck%.1f"},"amplification":$amp,"sf":"$sfDir"}""")
   }
 }
 

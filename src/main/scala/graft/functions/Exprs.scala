@@ -338,46 +338,6 @@ object Exprs {
     override protected def withNewChildInternal(c: Expression): PhraseFormExpr = copy(child = c)
   }
 
-  /** mention_windows(text): UDTF emitting the DISTINCT token windows of
-    * lengths 1..maxLen — the B4 subquery generator fused into one pass
-    * (tokenize → windows → dedupe) with no intermediate Catalyst arrays.
-    * Row-identical to explode(array_distinct(unigrams ++ bigrams)). */
-  case class MentionWindows(child: Expression, maxLen: Int)
-      extends UnaryExpression with Generator with CodegenFallback {
-    override def elementSchema: StructType =
-      StructType(StructField("phrase", StringType, nullable = false) :: Nil)
-    override def prettyName: String = "mention_windows"
-    override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-      val t = child.eval(input)
-      if (t == null) return Iterator.empty
-      val toks = Text.tokenize(t.toString)
-      val seen = new java.util.LinkedHashSet[String]()
-      var len = 1
-      while (len <= maxLen) {
-        var i = 0
-        while (i + len <= toks.length) {
-          if (len == 1) seen.add(toks(i))
-          else {
-            val sb = new java.lang.StringBuilder(toks(i))
-            var j = 1
-            while (j < len) { sb.append(' ').append(toks(i + j)); j += 1 }
-            seen.add(sb.toString)
-          }
-          i += 1
-        }
-        len += 1
-      }
-      val it = seen.iterator()
-      new Iterator[InternalRow] {
-        override def hasNext: Boolean = it.hasNext
-        override def next(): InternalRow =
-          InternalRow(UTF8String.fromString(it.next()))
-      }
-    }
-    override protected def withNewChildInternal(c: Expression): MentionWindows =
-      copy(child = c)
-  }
-
   /** window_strings(text): the DISTINCT space-joined token windows of the
     * given EXACT lengths — native single pass feeding a built-in explode
     * (the array-HOF form — nested transform/array_join/array_distinct
@@ -521,78 +481,6 @@ object Exprs {
       new GenericArrayData(out)
     }
     override protected def withNewChildInternal(c: Expression): DelKeys = copy(child = c)
-  }
-
-  /** ac_mentions(text): UDTF emitting the DISTINCT gazetteer phrases that
-    * occur in the text as contiguous token subsequences, via a broadcast
-    * Aho–Corasick automaton — one pass over the token stream regardless of
-    * the longest name's token count (the B8 matcher for big dictionaries
-    * with long names; window generation multiplies rows by maxLen). */
-  case class AcMentions(child: Expression,
-                        bc: org.apache.spark.broadcast.Broadcast[graft.core.AhoCorasickData])
-      extends UnaryExpression with Generator with CodegenFallback {
-    override def elementSchema: StructType =
-      StructType(StructField("phrase", StringType, nullable = false) :: Nil)
-    override def prettyName: String = "ac_mentions"
-    override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-      val t = child.eval(input)
-      if (t == null) return Iterator.empty
-      bc.value.matchTokens(Text.tokenize(t.toString)).iterator
-        .map(p => InternalRow(UTF8String.fromString(p)))
-    }
-    override protected def withNewChildInternal(c: Expression): AcMentions =
-      copy(child = c)
-  }
-
-  /** Per-executor automaton memo for [[AcMentionsLazy]], keyed by broadcast
-    * id: the trie is built ONCE per executor JVM from the broadcast name
-    * array, never serialized from the driver (a 10^7-name automaton is ~10×
-    * its name payload in pointer-heavy trie nodes — shipping the flat
-    * string array and building locally is the scale-correct shape). */
-  private object AcAutomatonCache {
-    private val memo =
-      new java.util.concurrent.ConcurrentHashMap[Long, graft.core.AhoCorasickData]()
-    def get(bc: org.apache.spark.broadcast.Broadcast[Seq[String]]): graft.core.AhoCorasickData =
-      memo.computeIfAbsent(bc.id, _ => graft.core.AhoCorasick.build(bc.value))
-  }
-
-  /** [[AcMentions]] over a broadcast NAME ARRAY instead of a prebuilt
-    * automaton — row-identical; the automaton is constructed lazily on each
-    * executor (see [[AcAutomatonCache]]). */
-  case class AcMentionsLazy(child: Expression,
-                            bc: org.apache.spark.broadcast.Broadcast[Seq[String]])
-      extends UnaryExpression with Generator with CodegenFallback {
-    override def elementSchema: StructType =
-      StructType(StructField("phrase", StringType, nullable = false) :: Nil)
-    override def prettyName: String = "ac_mentions_lazy"
-    override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-      val t = child.eval(input)
-      if (t == null) return Iterator.empty
-      AcAutomatonCache.get(bc).matchTokens(Text.tokenize(t.toString)).iterator
-        .map(p => InternalRow(UTF8String.fromString(p)))
-    }
-    override protected def withNewChildInternal(c: Expression): AcMentionsLazy =
-      copy(child = c)
-  }
-
-  /** [[AcMentionsLazy]] emitting (phrase, pos) — pos the 1-based token index
-    * of the phrase's first occurrence, identical to [[WindowPos]]'s, so the
-    * AC and window matchers stay row-identical with penalties on. */
-  case class AcMentionsPosLazy(child: Expression,
-                               bc: org.apache.spark.broadcast.Broadcast[Seq[String]])
-      extends UnaryExpression with Generator with CodegenFallback {
-    override def elementSchema: StructType =
-      StructType(StructField("phrase", StringType, nullable = false) ::
-        StructField("pos", IntegerType, nullable = false) :: Nil)
-    override def prettyName: String = "ac_mentions_pos_lazy"
-    override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-      val t = child.eval(input)
-      if (t == null) return Iterator.empty
-      AcAutomatonCache.get(bc).matchTokensPos(Text.tokenize(t.toString)).iterator
-        .map { case (p, pos) => InternalRow(UTF8String.fromString(p), pos) }
-    }
-    override protected def withNewChildInternal(c: Expression): AcMentionsPosLazy =
-      copy(child = c)
   }
 
   // ---------------------------------------------------------------
@@ -1020,14 +908,6 @@ object F {
   def extractText(html: Column): Column = c(ExtractText(x(html)))
   def tokenize(s: Column): Column = c(TokenizeExpr(x(s)))
   def phraseForm(s: Column): Column = c(PhraseFormExpr(x(s)))
-  def mentionWindows(s: Column, maxLen: Int = 2): Column =
-    c(MentionWindows(x(s), maxLen))
-  def acMentions(s: Column,
-                 bc: org.apache.spark.broadcast.Broadcast[graft.core.AhoCorasickData]): Column =
-    c(AcMentions(x(s), bc))
-  def acMentionsLazy(s: Column,
-                     bc: org.apache.spark.broadcast.Broadcast[Seq[String]]): Column =
-    c(AcMentionsLazy(x(s), bc))
   def docFingerprint(s: Column): Column = c(DocFingerprint(x(s)))
   def mix64(v: Column): Column = c(Mix64(x(v)))
   def fnv1a64(s: Column): Column = c(Fnv1a64(x(s)))
@@ -1050,9 +930,6 @@ object F {
     c(WindowStrings(x(text), lengths))
   def windowPos(text: Column, lengths: Seq[Int]): Column =
     c(WindowPos(x(text), lengths))
-  def acMentionsPosLazy(s: Column,
-                        bc: org.apache.spark.broadcast.Broadcast[Seq[String]]): Column =
-    c(AcMentionsPosLazy(x(s), bc))
   def shingleHashes(text: Column, n: Int): Column =
     c(ShingleHashes(x(text), n))
   def delKeys(tok: Column): Column = c(DelKeys(x(tok)))

@@ -19,31 +19,21 @@ import graft.synth.Synth
 object ForwardJob {
 
   def run(spark: SparkSession, sfDir: String, outDir: String,
-          nRanges: Int = 8, failAfter: Option[Int] = None): Seq[Int] = {
-    val results = Geocode.forward(Synth.docPages(spark, sfDir), Synth.gazDf(spark))
-      .withColumn("hkey", F.hilbertCell(F.parentCell(col("cell"), lit(8))))
-      .persist() // local stand-in for the checkpointed mentions/results table
-    val ranges = Checkpoint.uniformRanges(8, nRanges)
-    Checkpoint.runResumable(spark,
-      (lo, hi) => results.filter(col("hkey") >= lo && col("hkey") < hi),
-      ranges, outDir, failAfter)
-  }
+          nRanges: Int = 8, failAfter: Option[Int] = None): Seq[Int] =
+    runRanges(spark, Geocode.forward(Synth.docPages(spark, sfDir), Synth.gazDf(spark))
+      .withColumn("hkey", F.hilbertCell(F.parentCell(col("cell"), lit(8)))),
+      outDir, nRanges, failAfter)
 
   /** The at-scale variant: forward geocode over the BUILT grid index (no
     * gazetteer broadcast — the 10^7-feature path), same per-Hilbert-range
     * checkpoint + resume machinery. Row-identical to [[run]] over the same
     * gazetteer. */
   def runIndexed(spark: SparkSession, sfDir: String, outDir: String,
-                 nRanges: Int = 8, failAfter: Option[Int] = None): Seq[Int] = {
-    val results = Geocode.forwardIndexed(Synth.docPages(spark, sfDir),
+                 nRanges: Int = 8, failAfter: Option[Int] = None): Seq[Int] =
+    runRanges(spark, Geocode.forwardIndexed(Synth.docPages(spark, sfDir),
         graft.queries.Queries.gazGridParquet(spark), Synth.gazDf(spark))
-      .withColumn("hkey", F.hilbertCell(F.parentCell(col("cell"), lit(8))))
-      .persist()
-    val ranges = Checkpoint.uniformRanges(8, nRanges)
-    Checkpoint.runResumable(spark,
-      (lo, hi) => results.filter(col("hkey") >= lo && col("hkey") < hi),
-      ranges, outDir, failAfter)
-  }
+      .withColumn("hkey", F.hilbertCell(F.parentCell(col("cell"), lit(8)))),
+      outDir, nRanges, failAfter)
 
   /** N-level variant: the 4-level stack coalesce (continent→country→region→
     * place chains) under the same per-Hilbert-range checkpoint + resume
@@ -54,15 +44,21 @@ object ForwardJob {
     // multi-level results carry cells at each LEAF's own zoom (z4..z12), so
     // the range key comes from the feature center's z8 cell, not an
     // ancestor of the result cell (parentCell to a finer zoom is undefined)
-    val results = Geocode.rank(Geocode.coalesceN(m),
+    runRanges(spark, Geocode.rank(Geocode.coalesceN(m),
         extraCols = Seq("chain", "glon", "glat"))
       .withColumn("hkey", F.hilbertCell(F.cellAt(lit(8), col("glon"), col("glat"))))
-      .drop("glon", "glat")
-      .persist()
-    val ranges = Checkpoint.uniformRanges(8, nRanges)
+      .drop("glon", "glat"), outDir, nRanges, failAfter)
+  }
+
+  /** The shared tail: persist the keyed results (local stand-in for the
+    * checkpointed results table) and write them per uniform Hilbert range
+    * of `hkey` via [[Checkpoint.runResumable]]. */
+  private def runRanges(spark: SparkSession, keyed: DataFrame, outDir: String,
+                        nRanges: Int, failAfter: Option[Int]): Seq[Int] = {
+    val results = keyed.persist()
     Checkpoint.runResumable(spark,
       (lo, hi) => results.filter(col("hkey") >= lo && col("hkey") < hi),
-      ranges, outDir, failAfter)
+      Checkpoint.uniformRanges(8, nRanges), outDir, failAfter)
   }
 
   /** Checkpointed run + ATOMIC publish: slices land in a staging dir under

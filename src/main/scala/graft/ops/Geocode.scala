@@ -132,30 +132,6 @@ object Geocode {
     } else windows
   }
 
-  /** B4: the DISTINCT contiguous token windows (lengths 1..maxLen) of each
-    * doc's text, one row per (doc, window phrase). Map-side only: built with
-    * array higher-order functions + explode so the whole stage stays inside
-    * whole-stage codegen (measured ~1.7× faster than a fused CodegenFallback
-    * Generator — see BENCH.md). */
-  def tokenWindows(docs: DataFrame, maxLen: Int, extraCols: Seq[String] = Seq("qlon", "qlat")): DataFrame = {
-    val toks = docs.withColumn("toks", F.tokenize(col("text")))
-    def winsOfLen(len: Int): Column =
-      if (len == 1) col("toks")
-      else if (len == 2)
-        // zip_with shape measured fastest for the dominant bigram case
-        zip_with(
-          slice(col("toks"), lit(1), greatest(size(col("toks")) - 1, lit(0))),
-          slice(col("toks"), lit(2), greatest(size(col("toks")) - 1, lit(0))),
-          (a, b) => concat(a, lit(" "), b))
-      else when(size(col("toks")) >= len,
-        transform(sequence(lit(1), size(col("toks")) - lit(len - 1)),
-          i => array_join(slice(col("toks"), i, lit(len)), " ")))
-        .otherwise(array().cast("array<string>"))
-    val wins = array_distinct(concat((1 to maxLen).map(winsOfLen): _*))
-    toks.select(col("doc_id") +: extraCols.map(col) :+
-      explode(wins).as("phrase"): _*)
-  }
-
   /** Carmen's stack-relevance penalties (upstream verifymatch/spatialmatch
     * [U] — tree empty at survey time, constants FROZEN here and documented):
     * a stacked pair loses GapPenalty when its two mentions are non-adjacent
@@ -167,10 +143,12 @@ object Geocode {
   final val GapPenalty = 0.01
   final val OrderPenalty = 0.01
 
-  /** [[tokenWindows]] with each phrase's first-occurrence 1-based token
-    * index, via the native [[graft.functions.Exprs.WindowPos]] pass (the
-    * in-row first-occurrence dedup is a linear hashmap; the HOF equivalent
-    * is a quadratic array_position scan per window). */
+  /** B4: the DISTINCT contiguous token windows (lengths 1..maxLen) of each
+    * doc's text, one row per (doc, window phrase), with the phrase's
+    * first-occurrence 1-based token index. Map-side only, via the native
+    * [[graft.functions.Exprs.WindowPos]] pass feeding a built-in explode
+    * (the in-row first-occurrence dedup is a linear hashmap; the HOF
+    * equivalent is a quadratic array_position scan per window). */
   def tokenWindowsPos(docs: DataFrame, maxLen: Int,
                       extraCols: Seq[String] = Seq("qlon", "qlat")): DataFrame =
     docs.select(col("doc_id") +: extraCols.map(col) :+
@@ -196,10 +174,11 @@ object Geocode {
     maxLenMemo.computeIfAbsent(gaz.queryExecution.analyzed.canonicalized, _ =>
       math.max(1, gaz.agg(max(size(split(col("name"), " ")))).head().getInt(0)))
 
-  /** B4+B8+D1: mention extraction via token windows matched against a
-    * broadcast gazetteer (the literal-gazetteer demo path; the at-scale path
-    * is [[forwardIndexed]] which equi-joins phrase ids against the built
-    * grid index instead of broadcasting names).
+  /** B4+B8+D1: mention extraction via token windows matched against the
+    * gazetteer names (the literal-gazetteer path; the at-scale path is
+    * [[forwardIndexed]] which equi-joins phrase ids against the built grid
+    * index instead of broadcasting names). Emits the matched name's
+    * first-occurrence `pos` and its token count `plen`.
     *
     * Semantics: a gazetteer name matches iff its token sequence is a
     * contiguous subsequence of the document's token sequence (equivalently,
@@ -207,20 +186,7 @@ object Geocode {
     */
   def mentions(docs: DataFrame, gaz: DataFrame,
                extraCols: Seq[String] = Seq("qlon", "qlat"),
-               dictCeiling: Long = BroadcastDictCeiling): DataFrame =
-    // auto-switch: with long names the window path emits one window set per
-    // length 1..maxLen (5-token names = 5× explode volume) while the
-    // automaton stays one pass — measured crossover ≈ 3 (BENCH.md). The AC
-    // path needs the broadcast dictionary, so over-ceiling stays on windows.
-    if (maxNameTokens(gaz) > 3 && memoCount(gaz) <= dictCeiling)
-      mentionsAC(docs, gaz, extraCols, dictCeiling)
-    else mentionsWindows(docs, gaz, extraCols, dictCeiling)
-
-  /** The raw window-join matcher (see [[mentions]] for the dispatching
-    * surface; this stays public as the AC equivalence-test baseline). */
-  def mentionsWindows(docs: DataFrame, gaz: DataFrame,
-                      extraCols: Seq[String] = Seq("qlon", "qlat"),
-                      dictCeiling: Long = BroadcastDictCeiling): DataFrame = {
+               dictCeiling: Long = BroadcastDictCeiling): DataFrame = {
     // ceiling probe: an over-ceiling gazetteer shuffles on the phrase key
     // instead of broadcasting (the forwardIndexed grid join is the preferred
     // at-scale form; this keeps the literal-gazetteer surface correct too)
@@ -232,67 +198,42 @@ object Geocode {
       .withColumn("plen", size(split(col("name"), " ")))
   }
 
-  /** B8 alternative matcher: mention extraction via a broadcast token-level
-    * Aho–Corasick automaton — ONE pass over each doc's token stream,
-    * independent of the longest gazetteer name (window generation emits one
-    * window set per length 1..maxLen; with 5-token names that is 5× the
-    * explode volume). Row-identical to [[mentions]] (equivalence-tested);
-    * the trade is a CodegenFallback Generator (breaks the codegen span —
-    * measured slower for maxLen ≤ 2, the win arrives with long names). */
-  def mentionsAC(docs: DataFrame, gaz: DataFrame,
-                 extraCols: Seq[String] = Seq("qlon", "qlat"),
-                 dictCeiling: Long = BroadcastDictCeiling): DataFrame = {
-    import graft.core.AhoCorasick
-    // ceiling probe IN CODE: an automaton over an over-ceiling dictionary
-    // cannot ship to executors — fall back to the window equi-join (which
-    // itself shuffles past the ceiling). Row-identical (equivalence-tested).
-    if (memoCount(gaz) > dictCeiling) return mentions(docs, gaz, extraCols, dictCeiling)
-    // names ship as a broadcast STRING ARRAY (the dictionary, same payload
-    // PhraseDict broadcasts); the automaton is built lazily once per
-    // executor from that array — the driver never serializes trie nodes
-    val names = gaz.select(col("name")).collect().map(_.getString(0)).toSeq
-    val bc = docs.sparkSession.sparkContext.broadcast(names)
-    docs
-      .select(col("doc_id") +: extraCols.map(col) :+
-        F.acMentionsPosLazy(col("text"), bc).as(Seq("phrase", "pos")): _*)
-      .join(broadcast(gaz), col("phrase") === col("name"))
-      .withColumn("w", size(split(col("name"), " ")) / lit(3.0))
-      .withColumn("plen", size(split(col("name"), " ")))
-  }
-
   /** D2+E2: zoom-aligned coalesce — place candidates stack with mentioned
     * region candidates whose z8 cell contains the place's z8 ancestor cell;
     * best region per place resolved by (weight desc, id asc). Region-only
     * candidates survive standalone.
     *
-    * Relevance (B4/E2): with `maskRelev` (the carmen-faithful default) the
-    * stacked relev is the COVERED-TOKEN count — |tokens(place name) ∪
-    * tokens(region name)| / 3 — so windows that overlap on a token (place
-    * "big data" under region "data") never double-count. `maskRelev=false`
-    * keeps additive weights for externally-weighted mentions (IDF path). */
-  def coalesce2(m: DataFrame, maskRelev: Boolean = true): DataFrame = {
+    * Relevance (B4/E2): the stacked relev is the COVERED-TOKEN count —
+    * |tokens(place name) ∪ tokens(region name)| / 3 — so windows that
+    * overlap on a token (place "big data" under region "data") never
+    * double-count. */
+  def coalesce2(m: DataFrame): DataFrame = {
     val placeCands = m.filter(col("typ") === "place")
       .withColumn("cell", F.cellAt(lit(ZPlace), col("glon"), col("glat")))
       .withColumn("cell8p", F.parentCell(col("cell"), lit(ZRegion)))
     val regionCands = m.filter(col("typ") === "region")
       .withColumn("cell", F.cellAt(lit(ZRegion), col("glon"), col("glat")))
-    stackAndUnion(placeCands, regionCands, maskRelev)
+    stackAndUnion(placeCands, regionCands)
   }
 
-  /** The stack join + union shared by [[coalesce2]] (cells computed from
-    * coordinates) and [[forwardIndexed]] (cells consumed from the grid
-    * index). `placeCands` must carry (doc_id, gid, name, typ, w, score,
-    * glon, glat, qlon, qlat, cell, cell8p); `regionCands` the same minus
-    * cell8p. */
   /** F1: stack-count prune — regions competing for stacks are capped per doc
     * BEFORE the stack join (carmen's spatialmatch bounds the stack
     * combinations it scores). Harmless at 2 index levels with a tiny
     * gazetteer (docs never mention > cap regions); load-bearing at 8 levels
     * where the stack fan-out is the product of per-level candidate counts. */
   final val StackRegionCap = 16
+  /** F2: grid-stage prune of the indexed forward paths — per (doc, phrase,
+    * typ) only the best GridStackCap index entries by (relev_q desc,
+    * score_q desc, id) reach verify and coalesce. Row-identical to the
+    * broadcast path while it exceeds the per-phrase feature count. */
+  final val GridStackCap = 64
 
-  private def stackAndUnion(placeCands: DataFrame, regionCands: DataFrame,
-                            maskRelev: Boolean): DataFrame = {
+  /** The stack join + union shared by [[coalesce2]] (cells computed from
+    * coordinates) and [[forwardIndexed]] (cells consumed from the grid
+    * index). `placeCands` must carry (doc_id, gid, name, typ, w, score,
+    * glon, glat, qlon, qlat, cell, cell8p, pos, plen); `regionCands` the
+    * same minus cell8p. */
+  private def stackAndUnion(placeCands: DataFrame, regionCands: DataFrame): DataFrame = {
     val regionSide = regionCands.select(
       col("doc_id").as("r_doc_id"), col("cell").as("r_cell"),
       col("gid").as("rid"), col("w").as("wr"), col("name").as("rname"),
@@ -315,11 +256,9 @@ object Geocode {
         when(col("r_pos") < col("pos"), lit(OrderPenalty)).otherwise(lit(0.0)))
 
     val stackedRelev =
-      (if (maskRelev)
-        when(col("rid").isNull, col("w"))
-          .otherwise(size(array_distinct(concat(
-            split(col("name"), " "), split(col("rname"), " ")))) / lit(3.0))
-      else col("w") + coalesce(col("wr"), lit(0.0))) - stackPen
+      when(col("rid").isNull, col("w"))
+        .otherwise(size(array_distinct(concat(
+          split(col("name"), " "), split(col("rname"), " ")))) / lit(3.0)) - stackPen
 
     // The region side is per-doc data (grows with the corpus, 10^12-row
     // design point) — never broadcastable. Force a shuffle-hash join so the
@@ -383,7 +322,7 @@ object Geocode {
     *
     * Relevance is the covered-token mask: |∪ tokens(chain names)| / 3 —
     * overlapping windows never double-count (E2), identical to coalesce2's
-    * maskRelev at 2 levels (equivalence-tested in GeocoderSpec).
+    * relev at 2 levels (equivalence-tested in GeocoderSpec).
     *
     * The pool side is per-doc data (grows with the corpus) — shuffle_hash
     * hinted, never broadcast, like every per-doc join side in this engine. */
@@ -687,52 +626,33 @@ object Geocode {
   /** D1/A3/H7 at scale: forward geocode over the BUILT grid index instead of
     * a broadcast name list — the path that survives a 10^7-feature gazetteer.
     *
-    *   1. doc token windows → `phrase_id = xxhash64(phrase)` (map-side);
+    *   1. doc token windows → `phrase_id = xxhash64(phrase)`, prefiltered
+    *      map-side ([[gridWindows]]);
     *   2. equi-join against the grid index on phrase_id (shuffle-hash — the
     *      index is 10s of GB at the design point, never broadcastable);
     *      the index row carries (cell, feature_id, relev_q, score_q);
-    *   3. F2 grid-stage prune: per (doc, phrase, typ) keep the `stackCap`
-    *      best entries by (relev_q desc, score_q desc, id) — the quantized
-    *      ranking is exactly what carmen's coalesce consumes before verify;
+    *   3. F2 grid-stage prune ([[gridPrune]]) — the quantized ranking is
+    *      exactly what carmen's coalesce consumes before verify;
     *   4. D4 verify: join the feature table by id and require the feature's
     *      name to equal the matched phrase (drops phrase-id hash collisions);
     *   5. coalesce + rank re-using the index cells (never recomputed).
     *
     * Row-identical to [[forward]] over the same gazetteer as long as
-    * `stackCap` exceeds the per-phrase feature count (GeocoderSpec asserts
-    * this at sf0.001).
+    * [[GridStackCap]] exceeds the per-phrase feature count (GeocoderSpec
+    * asserts this at sf0.001).
     */
   def forwardIndexed(docs: DataFrame, grid: DataFrame, features: DataFrame,
-                     k: Int = 5, stackCap: Int = 64,
-                     dedupe: Boolean = false,
+                     k: Int = 5, dedupe: Boolean = false,
                      dictCeiling: Long = BroadcastDictCeiling): DataFrame = {
-    val maxLen = maxNameTokens(features)
-    val windows = tokenWindowsPos(docs, maxLen)
-      .withColumn("phrase_id", xxhash64(col("phrase")))
-    // Semi-join reduction BEFORE the shuffle (see [[prefilterPhrases]]):
-    // exact set ≤ ceiling, Bloom ≤ 8× ceiling, unfiltered beyond.
-    val prefiltered = prefilterPhrases(windows, grid, dictCeiling)
-    val hits = prefiltered.join(grid.hint("shuffle_hash"), "phrase_id")
-    val pruned = hits
-      .withColumn("gr", row_number().over(
-        Window.partitionBy(col("doc_id"), col("phrase_id"), col("typ"))
-          .orderBy(col("relev_q").desc, col("score_q").desc, col("feature_id").asc)))
-      .filter(col("gr") <= stackCap)
+    val windows = gridWindows(docs, features, grid, dictCeiling)
+    val pruned = gridPrune(windows.join(grid.hint("shuffle_hash"), "phrase_id"))
       .drop("gr", "typ")
     val feats = features.select(col("gid"), col("name"), col("typ"),
       col("score"), col("glon"), col("glat"))
-    val verified = pruned
+    rankVerified(pruned
       .join(feats.hint("shuffle_hash"), pruned("feature_id") === feats("gid"))
       .filter(col("phrase") === col("name"))
-      .select(col("doc_id"), col("qlon"), col("qlat"), col("gid"), col("name"),
-        col("typ"), col("score"), col("glon"), col("glat"), col("cell"),
-        (size(split(col("name"), " ")) / lit(3.0)).as("w"),
-        col("pos"), size(split(col("name"), " ")).as("plen"))
-      .persist()
-    val placeCands = verified.filter(col("typ") === "place")
-      .withColumn("cell8p", F.parentCell(col("cell"), lit(ZRegion)))
-    val regionCands = verified.filter(col("typ") === "region")
-    rank(stackAndUnion(placeCands, regionCands, maskRelev = true), k, dedupe)
+      .select(verifiedCols(col("gid")): _*), k, dedupe)
   }
 
   /** [[forwardIndexed]] over a FAT grid index
@@ -742,86 +662,93 @@ object Geocode {
     * full shuffle of the per-doc candidate frame, on feature_id — is gone.
     * Exchanges on the doc lineage drop 3 → 2: the phrase_id match join and
     * the doc_id stack join (whose exchange the rank windows then reuse).
-    * The grid-prune window needs no exchange of its own: its partition keys
-    * (doc_id, phrase_id, typ) are a superset of the join's phrase_id
-    * hash-partitioning, which therefore already clusters them.
     *
     * Row-identical to [[forward]] and [[forwardIndexed]] under the same
-    * `stackCap`-exceeds-per-phrase-fanout condition (GeocoderSpec); verify
-    * runs BEFORE the cap here (it is free in-row), so hash-collision ghosts
-    * can never crowd real candidates out of the cap window. */
+    * [[GridStackCap]]-exceeds-per-phrase-fanout condition (GeocoderSpec);
+    * verify runs BEFORE the cap here (it is free in-row), so hash-collision
+    * ghosts can never crowd real candidates out of the cap window. */
   def forwardIndexedFat(docs: DataFrame, fatGrid: DataFrame,
-                        k: Int = 5, stackCap: Int = 64,
-                        dedupe: Boolean = false,
-                        dictCeiling: Long = BroadcastDictCeiling): DataFrame = {
-    val maxLen = maxNameTokens(fatGrid)
-    val windows = tokenWindowsPos(docs, maxLen)
-      .withColumn("phrase_id", xxhash64(col("phrase")))
-    // same tiered semi-join prefilter as [[forwardIndexed]]: the distinct
-    // phrase-id SET stays dictionary-sized no matter how fat the index rows
-    val prefiltered = prefilterPhrases(windows, fatGrid, dictCeiling)
-    // D4 verify, in-row. Written as a RANGE pair (<= AND >=), not `===`:
-    // Catalyst extracts any one-side-each equality into the join KEYS, which
-    // would re-key the exchange on (phrase_id, phrase) — and the grid-prune
-    // window below (clustered by doc_id, phrase_id, typ) would then need an
-    // exchange of its own. As residual predicates the join stays keyed on
-    // phrase_id alone and the window reuses its exchange (same trick as the
-    // doc_id-keyed stack join — see [[stackAndUnion]]).
-    val verified = prefiltered.join(fatGrid.hint("shuffle_hash"),
-        prefiltered("phrase_id") === fatGrid("phrase_id") &&
-          col("phrase") <= col("name") && col("phrase") >= col("name"))
-      .drop(fatGrid("phrase_id"))
-      .withColumn("gr", row_number().over(
-        Window.partitionBy(col("doc_id"), col("phrase_id"), col("typ"))
-          .orderBy(col("relev_q").desc, col("score_q").desc, col("feature_id").asc)))
-      .filter(col("gr") <= stackCap)
-      .select(col("doc_id"), col("qlon"), col("qlat"),
-        col("feature_id").as("gid"), col("name"), col("typ"), col("score"),
-        col("glon"), col("glat"), col("cell"),
-        (size(split(col("name"), " ")) / lit(3.0)).as("w"),
-        col("pos"), size(split(col("name"), " ")).as("plen"))
-      .persist()
-    val placeCands = verified.filter(col("typ") === "place")
-      .withColumn("cell8p", F.parentCell(col("cell"), lit(ZRegion)))
-    val regionCands = verified.filter(col("typ") === "region")
-    rank(stackAndUnion(placeCands, regionCands, maskRelev = true), k, dedupe)
-  }
+                        k: Int = 5, dedupe: Boolean = false,
+                        dictCeiling: Long = BroadcastDictCeiling): DataFrame =
+    rankVerified(fatGridMatch(docs, fatGrid, dictCeiling)
+      .select(verifiedCols(col("feature_id").as("gid")): _*), k, dedupe)
 
   /** The at-scale N-level forward: [[coalesceN]]'s chain construction fed
     * from the FAT grid index ([[graft.index.IndexBuild.gazetteerGridFatLevels]])
     * instead of a broadcast gazetteer — the path that stacks
     * "austin, travis county, texas, usa" without ever shipping the
     * 10^7-feature dictionary to executors. Match join + in-row verify +
-    * grid-stage prune are identical to [[forwardIndexedFat]]; the verified
-    * candidate frame (which carries the denormalized glon/glat) then flows
-    * through the SAME coalesceN the broadcast path uses, so the two are
-    * row-identical under the usual stackCap condition and share one oracle.
-    * The verified frame is persisted: coalesceN reads it once per level. */
+    * grid-stage prune are [[forwardIndexedFat]]'s; the verified candidate
+    * frame (which carries the denormalized glon/glat) then flows through
+    * the SAME coalesceN the broadcast path uses, so the two are
+    * row-identical under the usual [[GridStackCap]] condition and share one
+    * oracle. The verified frame is persisted: coalesceN reads it once per
+    * level. */
   def forwardIndexedMultiFat(docs: DataFrame, fatGrid: DataFrame,
                              levels: Seq[IndexLevel] = DefaultLevels,
-                             k: Int = 5, stackCap: Int = 64,
+                             k: Int = 5,
                              dictCeiling: Long = BroadcastDictCeiling): DataFrame = {
-    val maxLen = maxNameTokens(fatGrid)
-    val windows = tokenWindowsPos(docs, maxLen)
-      .withColumn("phrase_id", xxhash64(col("phrase")))
-    val prefiltered = prefilterPhrases(windows, fatGrid, dictCeiling)
-    // in-row D4 verify as a RANGE residual (see [[forwardIndexedFat]]): the
-    // join stays keyed on phrase_id alone and the grid-prune window reuses
-    // the exchange
-    val verified = prefiltered.join(fatGrid.hint("shuffle_hash"),
-        prefiltered("phrase_id") === fatGrid("phrase_id") &&
-          col("phrase") <= col("name") && col("phrase") >= col("name"))
-      .drop(fatGrid("phrase_id"))
-      .withColumn("gr", row_number().over(
-        Window.partitionBy(col("doc_id"), col("phrase_id"), col("typ"))
-          .orderBy(col("relev_q").desc, col("score_q").desc, col("feature_id").asc)))
-      .filter(col("gr") <= stackCap)
+    val verified = fatGridMatch(docs, fatGrid, dictCeiling)
       .select(col("doc_id"), col("qlon"), col("qlat"),
         col("feature_id").as("gid"), col("name"), col("typ"), col("score"),
         col("glon"), col("glat"),
         col("pos"), size(split(col("name"), " ")).as("plen"))
       .persist()
     rank(coalesceN(verified, levels), k, extraCols = Seq("chain"))
+  }
+
+  /** The grid-match front of the indexed paths: token windows up to the
+    * longest name in `names` → `phrase_id = xxhash64(phrase)` (map-side) →
+    * the tiered semi-join prefilter against `grid` ([[prefilterPhrases]]:
+    * exact set ≤ ceiling, Bloom ≤ 8× ceiling, unfiltered beyond), so
+    * windows that match no phrase die BEFORE the phrase_id exchange. */
+  private def gridWindows(docs: DataFrame, names: DataFrame, grid: DataFrame,
+                          dictCeiling: Long): DataFrame =
+    prefilterPhrases(tokenWindowsPos(docs, maxNameTokens(names))
+      .withColumn("phrase_id", xxhash64(col("phrase"))), grid, dictCeiling)
+
+  /** F2 grid-stage prune: per (doc, phrase, typ) keep the [[GridStackCap]]
+    * best index entries by (relev_q desc, score_q desc, id). Its partition
+    * keys are a superset of the match join's phrase_id hash-partitioning,
+    * so the window reuses that exchange. */
+  private def gridPrune(hits: DataFrame): DataFrame =
+    hits.withColumn("gr", row_number().over(
+        Window.partitionBy(col("doc_id"), col("phrase_id"), col("typ"))
+          .orderBy(col("relev_q").desc, col("score_q").desc, col("feature_id").asc)))
+      .filter(col("gr") <= GridStackCap)
+
+  /** Match join, in-row D4 verify and grid-stage prune over a FAT grid
+    * index. Verify is written as a RANGE pair (<= AND >=), not `===`:
+    * Catalyst extracts any one-side-each equality into the join KEYS, which
+    * would re-key the exchange on (phrase_id, phrase) — and the grid-prune
+    * window (clustered by doc_id, phrase_id, typ) would then need an
+    * exchange of its own. As residual predicates the join stays keyed on
+    * phrase_id alone and the window reuses its exchange (same trick as the
+    * doc_id-keyed stack join — see [[stackAndUnion]]). */
+  private def fatGridMatch(docs: DataFrame, fatGrid: DataFrame,
+                           dictCeiling: Long): DataFrame = {
+    val windows = gridWindows(docs, fatGrid, fatGrid, dictCeiling)
+    gridPrune(windows.join(fatGrid.hint("shuffle_hash"),
+        windows("phrase_id") === fatGrid("phrase_id") &&
+          col("phrase") <= col("name") && col("phrase") >= col("name"))
+      .drop(fatGrid("phrase_id")))
+  }
+
+  /** The verified 2-level candidate columns; `gid` names the feature id. */
+  private def verifiedCols(gid: Column): Seq[Column] = Seq(
+    col("doc_id"), col("qlon"), col("qlat"), gid, col("name"),
+    col("typ"), col("score"), col("glon"), col("glat"), col("cell"),
+    (size(split(col("name"), " ")) / lit(3.0)).as("w"),
+    col("pos"), size(split(col("name"), " ")).as("plen"))
+
+  /** Stack and rank verified 2-level candidates that carry their index
+    * cells. The frame feeds three consumers (place candidates, the region
+    * side of the stack join, standalone regions), so it is persisted. */
+  private def rankVerified(verified: DataFrame, k: Int, dedupe: Boolean): DataFrame = {
+    val v = verified.persist()
+    val placeCands = v.filter(col("typ") === "place")
+      .withColumn("cell8p", F.parentCell(col("cell"), lit(ZRegion)))
+    rank(stackAndUnion(placeCands, v.filter(col("typ") === "region")), k, dedupe)
   }
 
   /** D5+C4: reverse geocode join — probe points equi-joined on the z-cell to

@@ -6641,7 +6641,7 @@ object Queries {
     }
     val eff = effRows.toDF("elang", "gid", "ename", "used_lang")
     val maxLen = effRows.map(_._3.count(_ == ' ') + 1).max
-    Geocode.tokenWindows(docs, maxLen, extraCols = Seq("lang"))
+    Geocode.tokenWindowsPos(docs, maxLen, extraCols = Seq("lang")).drop("pos")
       .join(broadcast(eff),
         col("lang") === col("elang") && col("phrase") === col("ename"))
       .select(col("doc_id"), col("gid"), col("used_lang"))

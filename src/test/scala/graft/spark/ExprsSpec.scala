@@ -75,23 +75,6 @@ class ExprsSpec extends SparkTestBase {
     assert(r.getString(2) == Text.phraseForm("Hash JOIN, fast!"))
   }
 
-  test("mention_windows generator equals the array-HOF window derivation") {
-    import spark.implicits._
-    val docs = Seq("the hash join data pipeline", "one", "a a a b").toDF("text")
-    val viaGen = docs.select(col("text"), F.mentionWindows(col("text")).as("phrase"))
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val viaHof = docs
-      .withColumn("toks", F.tokenize(col("text")))
-      .select(col("text"), explode(array_distinct(concat(
-        col("toks"),
-        zip_with(
-          slice(col("toks"), lit(1), greatest(size(col("toks")) - 1, lit(0))),
-          slice(col("toks"), lit(2), greatest(size(col("toks")) - 1, lit(0))),
-          (a, b) => concat(a, lit(" "), b))))).as("phrase"))
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(viaGen == viaHof)
-  }
-
   test("del_keys equals the HOF deletion-neighborhood derivation") {
     import spark.implicits._
     val toks = Seq("paris", "a", "", "tokyo", "aa").toDF("tok")

@@ -18,23 +18,14 @@ class FallbackSpec extends SparkTestBase {
     val gaz = Synth.gazDf(spark)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id", "gid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val bcast = Geocode.mentionsWindows(docs, gaz)
-    val over = Geocode.mentionsWindows(docs, gaz, dictCeiling = 1)
+    val bcast = Geocode.mentions(docs, gaz)
+    val over = Geocode.mentions(docs, gaz, dictCeiling = 1)
     assert(rows(bcast) == rows(over) && rows(over).nonEmpty)
     val plan = over.queryExecution.executedPlan.toString
     assert(plan.contains("ShuffledHashJoin"),
       "over-ceiling mention join must be a shuffled hash join")
     assert(!plan.contains("BroadcastHashJoin"),
       "over-ceiling mention join must not broadcast the gazetteer")
-  }
-
-  test("mentionsAC: over-ceiling dictionary falls back to the window join") {
-    val docs = Synth.docPages(spark, sf)
-    val gaz = Synth.gazDf(spark)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id", "gid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(rows(Geocode.mentionsAC(docs, gaz)) ==
-      rows(Geocode.mentionsAC(docs, gaz, dictCeiling = 1)))
   }
 
   test("forwardIdf: over-ceiling term dictionary uses the join path, row-identical") {
@@ -195,7 +186,7 @@ class FallbackSpec extends SparkTestBase {
     val r0 = Synth.regions(0); val r1 = Synth.regions(1); val r3 = Synth.regions(3)
     val hashJoin = Synth.places.find(_.name == "hash join").get
     val extra: Seq[G] = Seq(
-      // a 5-token name: the staged path switches to the Aho-Corasick matcher
+      // a 5-token name: the staged path derives windows of lengths 1..5
       (900L, "alpha beta gamma delta eps", "place", Some(50.0), Some(r0.lon + 0.01), Some(r0.lat + 0.01), "na"),
       // not a place or region: never a candidate, even sharing a region's name
       (901L, "data", "country", Some(99.0), Some(r0.lon), Some(r0.lat), "na"),

@@ -172,32 +172,36 @@ class GeocoderSpec extends SparkTestBase {
     assert(out.forall(r => allowed.contains(r.getLong(1))))
   }
 
-  test("Aho-Corasick mentions equal window mentions; handles 3+-token names") {
+  test("mentions: contiguous-token matches with first-occurrence pos and plen, 1- to 5-token names") {
     import spark.implicits._
+    // fixture corpus: every name whose token sequence occurs contiguously in
+    // the page's token sequence, and nothing else
     val docs = Synth.docPages(spark, "/root/testdata/sf0.001")
-    val gaz = Synth.gazDf(spark)
-    val a = Geocode.mentions(docs, gaz).select("doc_id", "gid")
+    val got = Geocode.mentions(docs, Synth.gazDf(spark)).select("doc_id", "gid")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = Geocode.mentionsAC(docs, gaz).select("doc_id", "gid")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a.nonEmpty && a == b)
-    // long names: both matchers must find the 3- and 4-token phrases
+    val want = docs.select("doc_id", "text").collect().flatMap { r =>
+      val padded = graft.core.Text.tokenize(r.getString(1)).mkString(" ", " ", " ")
+      Synth.gazetteer.filter(g => padded.contains(s" ${g.name} ")).map(g => (r.getLong(0), g.id))
+    }.toSet
+    assert(got.nonEmpty && got == want)
+    // long and overlapping names: pos is the 1-based token index of the
+    // name's FIRST occurrence, plen its token count
     val longGaz = Seq(
       (1L, "new york city", "place", 5.0, 0.0, 0.0, "na"),
       (2L, "port of new york authority", "place", 4.0, 0.0, 0.0, "na"),
-      (3L, "york", "region", 3.0, 0.0, 0.0, "na"))
+      (3L, "york", "region", 3.0, 0.0, 0.0, "na"),
+      (4L, "new york", "region", 2.0, 0.0, 0.0, "na"))
       .toDF("gid", "name", "typ", "score", "glon", "glat", "stack")
-    val page = Seq((7L, "the port of new york authority runs new york city docks", 0.0, 0.0))
+    val pages = Seq(
+      (7L, "the port of new york authority runs new york city docks", 0.0, 0.0),
+      (8L, "big new york city and new york", 0.0, 0.0))
       .toDF("doc_id", "text", "qlon", "qlat")
-    // mentionsWindows is the raw window path: mentions() itself auto-switches
-    // to the automaton for maxNameTokens > 3, so the equivalence must be
-    // asserted against the explicit window baseline
-    val wa = Geocode.mentionsWindows(page, longGaz).select("gid").collect().map(_.getLong(0)).toSet
-    val ac = Geocode.mentionsAC(page, longGaz).select("gid").collect().map(_.getLong(0)).toSet
-    assert(wa == Set(1L, 2L, 3L) && ac == Set(1L, 2L, 3L))
-    // and the dispatching surface picks the automaton but stays row-identical
-    val auto = Geocode.mentions(page, longGaz).select("gid").collect().map(_.getLong(0)).toSet
-    assert(auto == wa)
+    val rows = Geocode.mentions(pages, longGaz).select("doc_id", "gid", "pos", "plen")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3))).toSet
+    assert(rows == Set(
+      (7L, 1L, 8, 3), (7L, 2L, 2, 5), (7L, 3L, 5, 1), (7L, 4L, 4, 2),
+      // "new york" first occurs inside "new york city"
+      (8L, 1L, 2, 3), (8L, 3L, 3, 1), (8L, 4L, 2, 2)))
   }
 
   test("F1 StackRegionCap: a doc mentioning >16 regions caps the stack side") {
