@@ -172,7 +172,7 @@ class GeocoderSpec extends SparkTestBase {
     assert(out.forall(r => allowed.contains(r.getLong(1))))
   }
 
-  test("mentions: contiguous-token matches with first-occurrence pos and plen, 1- to 5-token names") {
+  test("mentions: contiguous-token matches, pos and plen, 1- to 5-token names") {
     import spark.implicits._
     // fixture corpus: every name whose token sequence occurs contiguously in
     // the page's token sequence, and nothing else
