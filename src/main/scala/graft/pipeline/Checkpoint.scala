@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -59,9 +59,11 @@ object Checkpoint {
       if (failAfter.exists(processed.length >= _))
         throw new RuntimeException(s"injected failure after ${processed.length} ranges")
       val t0 = System.nanoTime()
-      val slice = makeSlice(r.lo, r.hi)
-      slice.write.mode("overwrite").parquet(s"$outDir/range=${r.id}")
-      val rows = spark.read.parquet(s"$outDir/range=${r.id}").count()
+      // the row count rides on the slice write (one job per range, no re-read)
+      val written = new Observation(s"range-${r.id}")
+      makeSlice(r.lo, r.hi).observe(written, count(lit(1)).as("rows"))
+        .write.mode("overwrite").parquet(s"$outDir/range=${r.id}")
+      val rows = written.get("rows")
       val ms = (System.nanoTime() - t0) / 1000000
       graft.index.TableIO.appendLine(s"$outDir/_lineage.jsonl",
         s"""{"range": ${r.id}, "lo": ${r.lo}, "hi": ${r.hi}, "rows": $rows, "wall_ms": $ms, "ts": ${System.currentTimeMillis()}, "status": "done"}""")

@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bench's failure path: a sample child that prints no rate is a failed
@@ -33,5 +35,39 @@ class BenchSpec extends AnyFunSuite {
     val none = Bench.summarizePairs(Seq(None), Seq(Some(5.0)), Seq(1.0))
     assert(none.failedPairs == 1 && none.pairEffs.isEmpty)
     assert(Bench.num(none.rateB) == "null" && Bench.num(42.04) == "42.0")
+  }
+
+  private val json = new ObjectMapper()
+  private def geocodeLine(extra: Seq[(String, String)]) = Bench.jsonLine(
+    Bench.pipeline("geocode"), Bench.summarizePairs(Seq(Some(10.0)), Seq(None), Seq(1.0)),
+    1, 1, 10, "sf", extra)
+
+  test("the early and the final headline lines parse as JSON with the same keys") {
+    val early = json.readTree(geocodeLine(Bench.geocodeFields(Bench.NoSweep, Map.empty)))
+    val last = json.readTree(geocodeLine(Bench.geocodeFields(
+      Bench.Sweep("""{"a":1.500,"b":0.250}""", 1.75, 0.5),
+      Map("docs_per_sec_indexed_4n" -> 10.0, "docs_per_sec_fat_4n" -> 20.0,
+        "docs_per_sec_bucketed_4n" -> 30.0))))
+    assert(early.isObject && last.isObject)
+    assert(early.fieldNames.asScala.toList == last.fieldNames.asScala.toList)
+    assert(early.get("queries").isObject && early.get("queries").size == 0)
+    assert(early.get("docs_per_sec_fat_4n").isNull && early.get("total_query_sec").isNull)
+    assert(last.get("queries").get("b").asDouble == 0.25 && last.get("docs_per_sec_fat_4n").asDouble == 20.0)
+    assert(early.get("failed_pairs").asInt == 1 && early.get("value").isNull)
+  }
+
+  test("a failed index rate prints null, not NaN") {
+    val failed = Bench.softRate("fat index")(throw new IllegalStateException("no grid"))
+    assert(failed.isNaN && Bench.num(failed) == "null" && Bench.num(1.0 / 0) == "null")
+    val line = json.readTree(geocodeLine(Bench.geocodeFields(Bench.NoSweep,
+      Map("docs_per_sec_fat_4n" -> failed, "docs_per_sec_indexed_4n" -> 12.0))))
+    assert(line.get("docs_per_sec_fat_4n").isNull)
+    assert(line.get("docs_per_sec_indexed_4n").asDouble == 12.0)
+  }
+
+  test("an unknown SPARK_GRAFT_PIPELINE fails loudly and names the valid ones") {
+    val e = intercept[IllegalArgumentException](Bench.pipeline("geocod"))
+    assert(e.getMessage.contains("'geocod'") && e.getMessage.contains("curate, dedup, geocode"))
+    assert(Bench.pipelines.keySet == Set("geocode", "curate", "dedup"))
   }
 }

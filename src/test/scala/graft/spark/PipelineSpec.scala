@@ -8,6 +8,7 @@ import graft.synth.Synth
 import graft.pipeline.{Checkpoint, Skew}
 import graft.index.{IndexBuild, TableIO}
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** End-to-end pipeline contracts: forward geocode semantics, reverse PIP
   * equivalence, kNN-vs-brute-force, salted-join equivalence, index build
@@ -160,6 +161,23 @@ class PipelineSpec extends SparkTestBase {
     val b = Checkpoint.readAll(spark, out2).select("event_id").collect().map(_.getLong(0)).sorted
     assert(a.sameElements(b))
     assert(a.length == pts.count())
+  }
+
+  test("checkpoint: lineage rows equal each range's parquet count; an empty range records 0") {
+    val out = tmp("ckpt_rows")
+    val pts = spark.range(5000).select(col("id").as("event_id"),
+      F.hilbertCell(F.cellAt(lit(8), docLon(col("id")), docLat(col("id")))).as("hkey"))
+    val ranges = Checkpoint.uniformRanges(8, 4) :+ Checkpoint.RangeSpec(4, -2L, -1L)
+    Checkpoint.runResumable(spark, (lo, hi) =>
+      pts.filter(col("hkey") >= lo && col("hkey") < hi).select("event_id"), ranges, out)
+    val lineage = Files.readAllLines(java.nio.file.Paths.get(out, "_lineage.jsonl")).asScala
+      .map { l =>
+        "\"range\": (\\d+)".r.findFirstMatchIn(l).get.group(1).toInt ->
+          "\"rows\": (\\d+)".r.findFirstMatchIn(l).get.group(1).toLong
+      }.toMap
+    assert(lineage.keySet == (0 to 4).toSet)
+    ranges.foreach(r => assert(lineage(r.id) == spark.read.parquet(s"$out/range=${r.id}").count()))
+    assert(lineage(4) == 0L && lineage.values.sum == pts.count())
   }
 
   test("as-of join semantics: latest version <= ts, equal-ts visible, pre-first null") {
