@@ -12,3 +12,12 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
+
+object DataFrameBridge {
+  /** A frame over `plan`, in the session of `df` (the classic-mode
+    * `Dataset.ofRows`, private[sql]). */
+  def ofRows(df: org.apache.spark.sql.DataFrame,
+             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+}

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.F
@@ -52,47 +52,41 @@ object Geocode {
   private def memoCount(df: DataFrame): Long =
     countMemo.computeIfAbsent(df.queryExecution.analyzed.canonicalized, _ => df.count())
 
-  /** Broadcast kNN point index per (feature-point plan, zoom), built once
-    * per SparkContext like the ceiling probe: repeated reverse calls
-    * neither re-collect nor re-broadcast it. */
-  private val pointIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-    (org.apache.spark.SparkContext, org.apache.spark.broadcast.Broadcast[graft.index.PointIndexData])]()
-  private def pointIndex(featurePoints: DataFrame, z: Int, n: Long)
-      : org.apache.spark.broadcast.Broadcast[graft.index.PointIndexData] = {
-    val sc = featurePoints.sparkSession.sparkContext
-    pointIndexMemo.compute((featurePoints.queryExecution.analyzed.canonicalized, z), (_, old) =>
-      if (old != null && (old._1 eq sc)) old
-      else (sc, sc.broadcast(graft.index.CellIndex.buildPoints(featurePoints, z, n))))._2
+  private type Plan = org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+  private type Bc[T] = org.apache.spark.broadcast.Broadcast[T]
+  private type BcMemo[K, T] = java.util.concurrent.ConcurrentHashMap[K, (org.apache.spark.SparkContext, Bc[T])]
+
+  /** `build` broadcast once per `key` and SparkContext: repeated calls
+    * neither rebuild nor re-broadcast it. */
+  private def memoBroadcast[K, T: scala.reflect.ClassTag](memo: BcMemo[K, T], key: K, df: DataFrame)
+                                                         (build: => T): Bc[T] = {
+    val sc = df.sparkSession.sparkContext
+    memo.compute(key, (_, old) => if (old != null && (old._1 eq sc)) old else (sc, sc.broadcast(build)))._2
   }
 
-  /** Broadcast forward-geocode dictionary per gazetteer plan, built once
-    * per SparkContext like [[pointIndex]]. */
-  private val gazDictMemo = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-    (org.apache.spark.SparkContext, org.apache.spark.broadcast.Broadcast[graft.index.GazDictData])]()
-  private def gazDict(gaz: DataFrame, n: Long)
-      : org.apache.spark.broadcast.Broadcast[graft.index.GazDictData] = {
-    val sc = gaz.sparkSession.sparkContext
-    gazDictMemo.compute(gaz.queryExecution.analyzed.canonicalized, (_, old) =>
-      if (old != null && (old._1 eq sc)) old
-      else (sc, sc.broadcast(graft.index.GazDict.build(gaz, n))))._2
-  }
+  /** Broadcast kNN point index per (feature-point plan, zoom). */
+  private val pointIndexMemo = new BcMemo[(Plan, Int), graft.index.PointIndexData]()
+  private def pointIndex(featurePoints: DataFrame, z: Int, n: Long): Bc[graft.index.PointIndexData] =
+    memoBroadcast(pointIndexMemo, (featurePoints.queryExecution.analyzed.canonicalized, z), featurePoints)(
+      graft.index.CellIndex.buildPoints(featurePoints, z, n))
 
-  /** Memoized sorted distinct phrase-id array of a grid index (the
+  /** Broadcast forward-geocode dictionary per gazetteer plan. */
+  private val gazDictMemo = new BcMemo[Plan, graft.index.GazDictData]()
+  private def gazDict(gaz: DataFrame, n: Long): Bc[graft.index.GazDictData] =
+    memoBroadcast(gazDictMemo, gaz.queryExecution.analyzed.canonicalized, gaz)(
+      graft.index.GazDict.build(gaz, n))
+
+  /** Broadcast sorted distinct phrase-id array of a grid index (the
     * [[forwardIndexed]] semi-join prefilter — a per-index-epoch build, not
     * a per-query collect). */
-  private val phraseIdMemo = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Array[Long]]()
+  private val phraseIdMemo = new BcMemo[Plan, Array[Long]]()
 
   /** Bloom tier of the phrase prefilter: ~1.2 B/entry at 1% fpp vs 8 B for
     * the exact array, so the map-side kill survives a dictionary ~8× past
     * [[BroadcastDictCeiling]] before the prefilter is dropped entirely. */
   final val BloomCeilingMult = 8L
   final val BloomFpp = 0.01
-  private val bloomMemo = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-    org.apache.spark.util.sketch.BloomFilter]()
+  private val bloomMemo = new BcMemo[Plan, org.apache.spark.util.sketch.BloomFilter]()
 
   /** Semi-join reduction shared by the indexed forward paths: kill token
     * windows that match no dictionary phrase BEFORE they ride the phrase_id
@@ -117,19 +111,14 @@ object Geocode {
     import graft.index.CellIndex
     val dict = grid.select(col("phrase_id")).distinct()
     val n = memoCount(dict)
-    if (n <= dictCeiling) {
-      val ids = phraseIdMemo.computeIfAbsent(
-        grid.queryExecution.analyzed.canonicalized,
-        _ => dict.collect().map(_.getLong(0)).sorted)
-      val bc = windows.sparkSession.sparkContext.broadcast(ids)
-      windows.filter(CellIndex.longSetContains(col("phrase_id"), bc))
-    } else if (n <= dictCeiling * BloomCeilingMult) {
-      val bf = bloomMemo.computeIfAbsent(
-        grid.queryExecution.analyzed.canonicalized,
-        _ => dict.stat.bloomFilter("phrase_id", n, BloomFpp))
-      val bc = windows.sparkSession.sparkContext.broadcast(bf)
-      windows.filter(CellIndex.bloomMightContain(col("phrase_id"), bc))
-    } else windows
+    val key = grid.queryExecution.analyzed.canonicalized
+    if (n <= dictCeiling)
+      windows.filter(CellIndex.longSetContains(col("phrase_id"),
+        memoBroadcast(phraseIdMemo, key, grid)(dict.collect().map(_.getLong(0)).sorted)))
+    else if (n <= dictCeiling * BloomCeilingMult)
+      windows.filter(CellIndex.bloomMightContain(col("phrase_id"),
+        memoBroadcast(bloomMemo, key, grid)(dict.stat.bloomFilter("phrase_id", n, BloomFpp))))
+    else windows
   }
 
   /** Carmen's stack-relevance penalties (upstream verifymatch/spatialmatch
@@ -228,11 +217,9 @@ object Geocode {
     * broadcast path while it exceeds the per-phrase feature count. */
   final val GridStackCap = 64
 
-  /** The stack join + union shared by [[coalesce2]] (cells computed from
-    * coordinates) and [[forwardIndexed]] (cells consumed from the grid
-    * index). `placeCands` must carry (doc_id, gid, name, typ, w, score,
-    * glon, glat, qlon, qlat, cell, cell8p, pos, plen); `regionCands` the
-    * same minus cell8p. */
+  /** The stack join + union of [[coalesce2]]. `placeCands` must carry
+    * (doc_id, gid, name, typ, w, score, glon, glat, qlon, qlat, cell,
+    * cell8p, pos, plen); `regionCands` the same minus cell8p. */
   private def stackAndUnion(placeCands: DataFrame, regionCands: DataFrame): DataFrame = {
     val regionSide = regionCands.select(
       col("doc_id").as("r_doc_id"), col("cell").as("r_cell"),
@@ -592,11 +579,13 @@ object Geocode {
     * probe) the whole pipeline is ONE map-only stage: the place and region
     * rows are packed into a [[graft.index.GazDictData]] and broadcast, once
     * per gazetteer plan, and the `fwd_topk` kernel replays windows → name
-    * matches → stack → rank inside each page row, row-identical to the
-    * staged path (FallbackSpec). No exchange, window, persist or count.
+    * matches in-row, then the shared [[graft.index.StackRank]] kernel
+    * stacks and ranks them, row-identical to the staged operators
+    * (FallbackSpec). No exchange, window, persist or count.
     *
-    * Over the ceiling the dictionary never reaches the driver and the
-    * staged operators run instead ([[forwardStaged]]). */
+    * Over the ceiling the dictionary never reaches the driver:
+    * [[forwardStaged]] matches by join and runs the same kernel after one
+    * doc_id exchange. */
   def forward(docs: DataFrame, gaz: DataFrame, k: Int = 5,
               dedupe: Boolean = false): DataFrame = {
     val n = memoCount(gaz)
@@ -611,17 +600,17 @@ object Geocode {
         col("c.ctx").as("ctx"), round(col("c.sd"), 4).as("sd"), col("c.rank").as("rank"))
   }
 
-  /** The staged form of [[forward]], and its over-ceiling path. The
-    * mention stage feeds three consumers (place candidates, the region
-    * build side of the stack join, and standalone region candidates);
-    * without materialization Catalyst re-derives all three from the source
-    * scan, so the mention frame is persisted; at cluster scale the same cut
-    * point is the checkpointed mentions table (SURVEY.md §2.A6). */
+  /** The staged form of [[forward]], and its over-ceiling path: the
+    * gazetteer joins the token windows on name ([[mentions]]: broadcast,
+    * or shuffled past [[BroadcastDictCeiling]]), each mention takes its
+    * index cell, and one doc_id exchange feeds every page's mentions to the
+    * stack-and-rank kernel ([[stackRankPages]]). Rows sharing a `doc_id`
+    * pool their mentions. */
   private[graft] def forwardStaged(docs: DataFrame, gaz: DataFrame, k: Int,
-                                   dedupe: Boolean): DataFrame = {
-    val m = mentions(docs, gaz).persist()
-    rank(coalesce2(m), k, dedupe)
-  }
+                                   dedupe: Boolean): DataFrame =
+    stackRankPages(mentions(docs, gaz).withColumn("cell",
+      F.cellAt(when(col("typ") === "place", lit(ZPlace)).otherwise(lit(ZRegion)), col("glon"), col("glat"))),
+      k, dedupe, gridCap = false)
 
   /** D1/A3/H7 at scale: forward geocode over the BUILT grid index instead of
     * a broadcast name list — the path that survives a 10^7-feature gazetteer.
@@ -635,7 +624,8 @@ object Geocode {
     *      exactly what carmen's coalesce consumes before verify;
     *   4. D4 verify: join the feature table by id and require the feature's
     *      name to equal the matched phrase (drops phrase-id hash collisions);
-    *   5. coalesce + rank re-using the index cells (never recomputed).
+    *   5. one doc_id exchange → the stack-and-rank kernel per page
+    *      ([[stackRankPages]]), re-using the index cells (never recomputed).
     *
     * Row-identical to [[forward]] over the same gazetteer as long as
     * [[GridStackCap]] exceeds the per-phrase feature count (GeocoderSpec
@@ -649,36 +639,37 @@ object Geocode {
       .drop("gr", "typ")
     val feats = features.select(col("gid"), col("name"), col("typ"),
       col("score"), col("glon"), col("glat"))
-    rankVerified(pruned
+    stackRankPages(pruned
       .join(feats.hint("shuffle_hash"), pruned("feature_id") === feats("gid"))
-      .filter(col("phrase") === col("name"))
-      .select(verifiedCols(col("gid")): _*), k, dedupe)
+      .filter(col("phrase") === col("name")), k, dedupe, gridCap = false)
   }
 
   /** [[forwardIndexed]] over a FAT grid index
     * ([[graft.index.IndexBuild.gazetteerGridFat]]): the index row carries the
-    * rank-time payload (name, typ, score, glon, glat), so D4 verify is an
-    * in-row `phrase = name` FILTER and the feature-table join — a second
-    * full shuffle of the per-doc candidate frame, on feature_id — is gone.
-    * Exchanges on the doc lineage drop 3 → 2: the phrase_id match join and
-    * the doc_id stack join (whose exchange the rank windows then reuse).
+    * rank-time payload (name, typ, score, glon, glat), so D4 verify is a
+    * residual predicate of the phrase_id match join and the feature-table
+    * join is gone. The verified hits then take one doc_id exchange to the
+    * stack-and-rank kernel, which runs the F2 grid-stage prune in-row (it
+    * sees every hit of the page): two exchanges on the doc lineage, one
+    * hash join, no window and no persist.
     *
     * Row-identical to [[forward]] and [[forwardIndexed]] under the same
     * [[GridStackCap]]-exceeds-per-phrase-fanout condition (GeocoderSpec);
-    * verify runs BEFORE the cap here (it is free in-row), so hash-collision
-    * ghosts can never crowd real candidates out of the cap window. */
+    * verify runs BEFORE the cap here (it is free in the join), so
+    * hash-collision ghosts can never crowd real candidates out of the cap. */
   def forwardIndexedFat(docs: DataFrame, fatGrid: DataFrame,
                         k: Int = 5, dedupe: Boolean = false,
                         dictCeiling: Long = BroadcastDictCeiling): DataFrame =
-    rankVerified(fatGridMatch(docs, fatGrid, dictCeiling)
-      .select(verifiedCols(col("feature_id").as("gid")): _*), k, dedupe)
+    stackRankPages(fatGridMatch(docs, fatGrid, dictCeiling).withColumnRenamed("feature_id", "gid"),
+      k, dedupe, gridCap = true)
 
   /** The at-scale N-level forward: [[coalesceN]]'s chain construction fed
     * from the FAT grid index ([[graft.index.IndexBuild.gazetteerGridFatLevels]])
     * instead of a broadcast gazetteer — the path that stacks
     * "austin, travis county, texas, usa" without ever shipping the
-    * 10^7-feature dictionary to executors. Match join + in-row verify +
-    * grid-stage prune are [[forwardIndexedFat]]'s; the verified candidate
+    * 10^7-feature dictionary to executors. Match join + verify are
+    * [[forwardIndexedFat]]'s, the grid-stage prune the [[gridPrune]]
+    * window; the verified candidate
     * frame (which carries the denormalized glon/glat) then flows through
     * the SAME coalesceN the broadcast path uses, so the two are
     * row-identical under the usual [[GridStackCap]] condition and share one
@@ -688,7 +679,7 @@ object Geocode {
                              levels: Seq[IndexLevel] = DefaultLevels,
                              k: Int = 5,
                              dictCeiling: Long = BroadcastDictCeiling): DataFrame = {
-    val verified = fatGridMatch(docs, fatGrid, dictCeiling)
+    val verified = gridPrune(fatGridMatch(docs, fatGrid, dictCeiling))
       .select(col("doc_id"), col("qlon"), col("qlat"),
         col("feature_id").as("gid"), col("name"), col("typ"), col("score"),
         col("glon"), col("glat"),
@@ -717,38 +708,41 @@ object Geocode {
           .orderBy(col("relev_q").desc, col("score_q").desc, col("feature_id").asc)))
       .filter(col("gr") <= GridStackCap)
 
-  /** Match join, in-row D4 verify and grid-stage prune over a FAT grid
-    * index. Verify is written as a RANGE pair (<= AND >=), not `===`:
-    * Catalyst extracts any one-side-each equality into the join KEYS, which
-    * would re-key the exchange on (phrase_id, phrase) — and the grid-prune
-    * window (clustered by doc_id, phrase_id, typ) would then need an
-    * exchange of its own. As residual predicates the join stays keyed on
+  /** Match join with in-row D4 verify over a FAT grid index. Verify is
+    * written as a RANGE pair (<= AND >=), not `===`: Catalyst extracts any
+    * one-side-each equality into the join KEYS, which would re-key the
+    * exchange on (phrase_id, phrase) — and [[forwardIndexedMultiFat]]'s
+    * grid-prune window (clustered by doc_id, phrase_id, typ) would then need
+    * an exchange of its own. As residual predicates the join stays keyed on
     * phrase_id alone and the window reuses its exchange (same trick as the
     * doc_id-keyed stack join — see [[stackAndUnion]]). */
   private def fatGridMatch(docs: DataFrame, fatGrid: DataFrame,
                            dictCeiling: Long): DataFrame = {
     val windows = gridWindows(docs, fatGrid, fatGrid, dictCeiling)
-    gridPrune(windows.join(fatGrid.hint("shuffle_hash"),
+    windows.join(fatGrid.hint("shuffle_hash"),
         windows("phrase_id") === fatGrid("phrase_id") &&
           col("phrase") <= col("name") && col("phrase") >= col("name"))
-      .drop(fatGrid("phrase_id")))
+      .drop(fatGrid("phrase_id"))
   }
 
-  /** The verified 2-level candidate columns; `gid` names the feature id. */
-  private def verifiedCols(gid: Column): Seq[Column] = Seq(
-    col("doc_id"), col("qlon"), col("qlat"), gid, col("name"),
-    col("typ"), col("score"), col("glon"), col("glat"), col("cell"),
-    (size(split(col("name"), " ")) / lit(3.0)).as("w"),
-    col("pos"), size(split(col("name"), " ")).as("plen"))
-
-  /** Stack and rank verified 2-level candidates that carry their index
-    * cells. The frame feeds three consumers (place candidates, the region
-    * side of the stack join, standalone regions), so it is persisted. */
-  private def rankVerified(verified: DataFrame, k: Int, dedupe: Boolean): DataFrame = {
-    val v = verified.persist()
-    val placeCands = v.filter(col("typ") === "place")
-      .withColumn("cell8p", F.parentCell(col("cell"), lit(ZRegion)))
-    rank(stackAndUnion(placeCands, v.filter(col("typ") === "region")), k, dedupe)
+  /** The stack-and-rank tail of the 2-level forward paths: the candidate
+    * rows of each page (`doc_id`, gid, typ, name, index cell, glon, glat,
+    * score, qlon, qlat, pos; with `gridCap` also phrase_id, relev_q and
+    * score_q for the in-row F2 prune) take ONE doc_id exchange and a sort
+    * to the [[graft.index.StackRank]] kernel, which replays [[coalesce2]] →
+    * [[rank]] per page ([[graft.plans.GroupKernel]]): no stack join, no
+    * window, no persist. Output: [[rank]]'s columns. */
+  private def stackRankPages(cands: DataFrame, k: Int, dedupe: Boolean,
+                             gridCap: Boolean): DataFrame = {
+    val layout = Seq(col("doc_id"), col("gid").cast("long"), (col("typ") === "region").as("region"),
+      col("name"), col("cell").cast("long"), col("glon").cast("double"), col("glat").cast("double"),
+      col("score").cast("double"), col("qlon").cast("double"), col("qlat").cast("double"), col("pos")) ++
+      (if (gridCap) Seq(col("phrase_id").cast("long"), col("relev_q").cast("int"), col("score_q").cast("int"))
+       else Nil)
+    graft.plans.GroupKernel(cands.filter(col("typ").isin("place", "region")).select(layout: _*),
+        graft.index.StackRank.Pages(k, dedupe, gridCap))
+      .select(col("doc_id"), col("feature_id").cast(cands.schema("gid").dataType).as("feature_id"),
+        col("typ"), col("relev"), col("cell"), col("ctx"), round(col("sd"), 4).as("sd"), col("rank"))
   }
 
   /** D5+C4: reverse geocode join — probe points equi-joined on the z-cell to

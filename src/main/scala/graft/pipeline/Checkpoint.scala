@@ -72,7 +72,14 @@ object Checkpoint {
     processed.reverse
   }
 
-  /** Union of all completed range outputs. */
-  def readAll(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/range=*")
+  /** Union of the completed range outputs: the directories of the ranges
+    * `_lineage.jsonl` marks done, read by name (a `range=*` glob would also
+    * pick up a range whose write was killed before its lineage line). Fails
+    * when no range is done. */
+  def readAll(spark: SparkSession, outDir: String): DataFrame = {
+    val done = completedRanges(outDir).toSeq.sorted
+    if (done.isEmpty)
+      throw new IllegalStateException(s"no completed range in $outDir: _lineage.jsonl marks none done")
+    spark.read.parquet(done.map(id => s"$outDir/range=$id"): _*)
+  }
 }

@@ -235,4 +235,134 @@ class FallbackSpec extends SparkTestBase {
     assert(Geocode.forward(docs, gaz.limit(0)).collect().isEmpty)
     assert(Geocode.forwardStaged(docs.limit(0), gaz, 5, dedupe = false).collect().isEmpty)
   }
+
+  test("prefilter broadcasts: one broadcast per grid plan and tier") {
+    val docs = Synth.docPages(spark, sf)
+    val grid = graft.queries.Queries.gazGridFatParquet(spark)
+    val n = grid.select("phrase_id").distinct().count()
+    def prefilterIds(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+        case e: graft.index.CellIndex.LongSetContains => e.bc.id
+        case b: graft.index.CellIndex.BloomMightContain => b.bc.id
+      }))
+    val exact = Seq(Geocode.forwardIndexedFat(docs, grid), Geocode.forwardIndexedFat(docs.limit(5), grid, 3))
+      .flatMap(prefilterIds)
+    assert(exact.size == 2 && exact.distinct.size == 1, exact.toString)
+    val bloom = Seq(Geocode.forwardIndexedFat(docs, grid, dictCeiling = n - 1),
+      Geocode.forwardIndexedFat(docs.limit(5), grid, dictCeiling = n - 1)).flatMap(prefilterIds)
+    assert(bloom.size == 2 && bloom.distinct.size == 1 && bloom.head != exact.head, bloom.toString)
+  }
+
+  /** The explicit staged composition every stack-and-rank kernel path must
+    * reproduce. */
+  private def composed(docs: org.apache.spark.sql.DataFrame, gaz: org.apache.spark.sql.DataFrame,
+                       k: Int, dedupe: Boolean) =
+    Geocode.rank(Geocode.coalesce2(Geocode.mentions(docs, gaz)), k, dedupe)
+
+  /** forwardStaged, forwardIndexedFat and forwardIndexed over grids built
+    * from `gaz` ≡ `want` (default: [[composed]]) on sorted row lists, types
+    * included; returns the rows. */
+  private def assertKernelPaths(what: String, docs: org.apache.spark.sql.DataFrame,
+                                gaz: org.apache.spark.sql.DataFrame, k: Int, dedupe: Boolean,
+                                want: Option[org.apache.spark.sql.DataFrame] = None): Seq[String] = {
+    import graft.index.IndexBuild
+    val ref = want.getOrElse(composed(docs, gaz, k, dedupe))
+    val expected = fwdRows(ref)
+    Seq(
+      "staged" -> Geocode.forwardStaged(docs, gaz, k, dedupe),
+      "fat" -> Geocode.forwardIndexedFat(docs,
+        IndexBuild.gazetteerGridFat(gaz, Geocode.ZPlace, Geocode.ZRegion), k, dedupe),
+      "thin" -> Geocode.forwardIndexed(docs,
+        IndexBuild.gazetteerGrid(gaz, Geocode.ZPlace, Geocode.ZRegion), gaz, k, dedupe)
+    ).foreach { case (path, df) =>
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("GroupKernel") && !plan.contains("InMemoryTableScan"), s"$what, $path:\n$plan")
+      assert(df.schema.map(f => (f.name, f.dataType)) == ref.schema.map(f => (f.name, f.dataType)),
+        s"$what, $path")
+      assert(fwdRows(df) == expected, s"$what, $path")
+    }
+    expected
+  }
+
+  test("stack-and-rank kernel: staged, fat, thin and bucketed paths ≡ rank(coalesce2(mentions)) at sf0.001") {
+    val docs = Synth.docPages(spark, sf)
+    val gaz = Synth.gazDf(spark)
+    val dup = Synth.dupGazDf(spark)
+    val nullQ = docs.withColumn("qlon", when(col("doc_id") % 3 === 0, lit(null)).otherwise(col("qlon")))
+    Seq(
+      ("gazDf k = 1", docs, gaz, 1, false),
+      ("gazDf k = 30", docs, gaz, 30, false),
+      ("dupGazDf k = 30", docs, dup, 30, false),
+      ("dupGazDf dedupe k = 1", docs, dup, 1, true),
+      ("dupGazDf dedupe k = 30", docs, dup, 30, true),
+      ("null qlon on a third of the pages", nullQ, gaz, 30, false)
+    ).foreach { case (what, d, g, k, dedupe) =>
+      assert(assertKernelPaths(what, d, g, k, dedupe).nonEmpty, what)
+    }
+    val bucketed = graft.queries.Queries.gazGridFatBucketed(spark)
+    Seq(1, 30).foreach { k =>
+      assert(fwdRows(Geocode.forwardIndexedFat(docs, bucketed, k)) == fwdRows(composed(docs, gaz, k, false)),
+        s"bucketed k = $k")
+    }
+  }
+
+  test("stack-and-rank kernel edge cases: null q, coordinates and score, pooled doc_id, 70 hits of one phrase") {
+    import spark.implicits._
+    val r0 = Synth.regions(0); val r1 = Synth.regions(1)
+    val extra: Seq[G] = Seq(
+      (901L, "data", "country", Some(99.0), Some(r0.lon), Some(r0.lat), "na"),
+      (903L, "cove", "region", Some(5.0), None, Some(r0.lat), "na"),
+      (904L, "bay", "place", None, Some(r0.lon + 0.01), None, "na"),
+      (905L, "park", "place", Some(11.0), Some(r0.lon + 0.01), Some(r0.lat + 0.01), "na")) ++
+      (700 until 720).map { g =>
+        val r = if (g < 716) r1 else r0
+        (g.toLong, "zone", "region", Some(g % 13 + 1.0), Some(r.lon), Some(r.lat), "na"): G
+      }
+    val base: Seq[G] = Synth.gazetteer.map(g => (g.id, g.name, g.typ, Some(g.score), Some(g.lon), Some(g.lat), g.stack))
+    val gaz = (base ++ extra).toDF("gid", "name", "typ", "score", "glon", "glat", "stack")
+    val docs = Seq[(Long, String, Option[Double], Option[Double])](
+      (1L, "data hash join cove bay", Some(r0.lon), Some(r0.lat)),
+      (2L, null, Some(0.0), Some(0.0)),
+      (3L, "hash join data cove bay", Some(r0.lon), None),
+      // doc_id 1 again: its mentions pool with the first row's, each
+      // keeping its own row's query point; park never stacks past the cap
+      (1L, "zone park spark", Some(10.0), Some(20.0))
+    ).toDF("doc_id", "text", "qlon", "qlat")
+    Seq((50, false), (50, true), (1, false)).foreach { case (k, dedupe) =>
+      assert(assertKernelPaths(s"edge gazetteer k = $k dedupe = $dedupe", docs, gaz, k, dedupe).nonEmpty)
+    }
+    val rows = Geocode.forwardStaged(docs, gaz, 50, dedupe = false).collect()
+    val hashJoin = Synth.places.find(_.name == "hash join").get
+    val doc1 = rows.filter(_.getLong(0) == 1L).map(_.getLong(1)).toSet
+    assert(Set(hashJoin.id, 904L, 905L, 700L, 719L).subsetOf(doc1), s"doc 1 pools both rows' mentions: $doc1")
+    assert(rows.exists(r => r.getLong(1) == 904L && r.isNullAt(4) && r.isNullAt(6)),
+      "a place with null coordinates and score keeps a null cell and sd")
+
+    // one phrase with 70 place features: the in-row F2 prune keeps the
+    // GridStackCap best by (relev_q desc, score_q desc, gid asc), so the 10
+    // close low-score features (score_q 0) lose 6 to the 60 far ones
+    val metro = (1 to 70).map { i =>
+      val near = i > 60
+      (2000L + i, "metro", "place", Some(if (near) 1.5 else 128.0),
+        Some(if (near) 10.0 else -150.0), Some(20.0), "na"): G
+    }
+    val metroGaz = metro.toDF("gid", "name", "typ", "score", "glon", "glat", "stack")
+    val page = Seq[(Long, String, Option[Double], Option[Double])](
+      (7L, "metro", Some(10.0), Some(20.0))).toDF("doc_id", "text", "qlon", "qlat")
+    import graft.index.IndexBuild
+    val capped = Geocode.rank(Geocode.coalesce2(Geocode.mentions(page, metroGaz)
+      .withColumn("gr", row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy(col("doc_id"), col("name"), col("typ"))
+        .orderBy(IndexBuild.relevQ(lit(1.0)).desc, IndexBuild.scoreQ(col("score")).desc, col("gid").asc)))
+      .filter(col("gr") <= Geocode.GridStackCap).drop("gr")), 30)
+    val fat = Geocode.forwardIndexedFat(page,
+      IndexBuild.gazetteerGridFat(metroGaz, Geocode.ZPlace, Geocode.ZRegion), 30)
+    val thin = Geocode.forwardIndexed(page,
+      IndexBuild.gazetteerGrid(metroGaz, Geocode.ZPlace, Geocode.ZRegion), metroGaz, 30)
+    val want = fwdRows(capped)
+    assert(fwdRows(fat) == want && fwdRows(thin) == want)
+    val ids = fat.collect().map(_.getLong(1)).toSet
+    assert(ids.count(_ > 2060L) == 4 && ids.contains(2064L) && !ids.contains(2065L), ids.toString)
+    assert(want != fwdRows(composed(page, metroGaz, 30, dedupe = false)), "the cap must bite")
+  }
 }

@@ -229,6 +229,32 @@ class GeocoderSpec extends SparkTestBase {
     assert(unc.filter(_.getLong(1) == 101L).head.getLong(5) == 17L)
   }
 
+  test("F1 StackRegionCap: staged, fat and thin kernel paths cap the 17-region page") {
+    import spark.implicits._
+    import graft.index.IndexBuild
+    // the page of the test above, through every stack-and-rank kernel path
+    val regions = (1 to 17).map(j =>
+      (j.toLong, f"reg$j%02d", "region", 10.0 + j, -160.0 + 10.0 * j, 10.0, "na"))
+    val place = (101L, "px", "place", 50.0, -160.0 + 10.0 * 17, 10.0, "na")
+    val gaz = (regions :+ place).toDF("gid", "name", "typ", "score", "glon", "glat", "stack")
+    val allText = ((1 to 17).map(j => f"reg$j%02d") :+ "px").mkString(" ")
+    val doc17 = Seq((1L, allText, 0.0, 0.0)).toDF("doc_id", "text", "qlon", "qlat")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val want = rows(Geocode.rank(Geocode.coalesce2(Geocode.mentions(doc17, gaz)), k = 30))
+    Seq(
+      "staged" -> Geocode.forwardStaged(doc17, gaz, 30, dedupe = false),
+      "fat" -> Geocode.forwardIndexedFat(doc17,
+        IndexBuild.gazetteerGridFat(gaz, Geocode.ZPlace, Geocode.ZRegion), 30),
+      "thin" -> Geocode.forwardIndexed(doc17,
+        IndexBuild.gazetteerGrid(gaz, Geocode.ZPlace, Geocode.ZRegion), gaz, 30)
+    ).foreach { case (path, df) =>
+      val got = df.collect()
+      assert(rows(df) == want, path)
+      assert(got.length == 18 && got.filter(_.getLong(1) == 101L).head.getLong(5) == -1L,
+        s"$path: px's only stacking region is capped away")
+    }
+  }
+
   test("multi-level Geocoder surfaces the chain path through the options pipeline") {
     import spark.implicits._
     val g = Geocoder.multi(spark)

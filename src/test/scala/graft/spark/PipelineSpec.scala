@@ -180,6 +180,27 @@ class PipelineSpec extends SparkTestBase {
     assert(lineage(4) == 0L && lineage.values.sum == pts.count())
   }
 
+  test("checkpoint: after a killed run readAll returns exactly the done ranges' rows") {
+    val out = tmp("ckpt_readall")
+    val pts = spark.range(5000).select(col("id").as("event_id"),
+      F.hilbertCell(F.cellAt(lit(8), docLon(col("id")), docLat(col("id")))).as("hkey"))
+    val ranges = Checkpoint.uniformRanges(8, 4)
+    def slice(lo: Long, hi: Long) = pts.filter(col("hkey") >= lo && col("hkey") < hi).select("event_id")
+    intercept[RuntimeException](Checkpoint.runResumable(spark, slice, ranges, out, failAfter = Some(2)))
+    val done = Checkpoint.completedRanges(out)
+    assert(done.size == 2)
+    // a range whose write was cut before its lineage line
+    val cut = ranges.find(r => !done.contains(r.id)).get
+    slice(cut.lo, cut.hi).write.parquet(s"$out/range=${cut.id}")
+    val got = Checkpoint.readAll(spark, out)
+    assert(got.columns.toSeq == Seq("event_id"))
+    val want = ranges.filter(r => done.contains(r.id))
+      .flatMap(r => slice(r.lo, r.hi).collect().map(_.getLong(0))).sorted
+    assert(want.nonEmpty && got.collect().map(_.getLong(0)).sorted.toSeq == want)
+    val none = intercept[IllegalStateException](Checkpoint.readAll(spark, tmp("ckpt_none")))
+    assert(none.getMessage.contains("no completed range"))
+  }
+
   test("as-of join semantics: latest version <= ts, equal-ts visible, pre-first null") {
     import spark.implicits._
     val probe = Seq(

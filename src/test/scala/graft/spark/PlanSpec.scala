@@ -18,14 +18,24 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("fwd_geocode: stack join shuffles, gazetteer broadcasts, top-k pushed") {
-    // the staged path: forward's over-ceiling fallback and the equivalence reference
-    val p = plan(graft.ops.Geocode.forwardStaged(
+    import graft.ops.Geocode
+    val (docs, gaz) = (
       graft.synth.Synth.docPages(spark, "/root/testdata/sf0.001"),
-      graft.synth.Synth.gazDf(spark), 5, dedupe = false))
+      graft.synth.Synth.gazDf(spark))
+    // the staged operators: the equivalence reference (and Geocoder.forward's tail)
+    val p = plan(Geocode.rank(Geocode.coalesce2(Geocode.mentions(docs, gaz)), 5))
     assert(p.contains("ShuffledHashJoin") || p.contains("SortMergeJoin"),
       "per-doc stack join must not be a broadcast")
     assert(p.contains("BroadcastHashJoin"), "gazetteer join should broadcast")
     assert(p.contains("WindowGroupLimit"), "top-k should use WindowGroupLimit pushdown")
+    // forward's over-ceiling path: mentions → one doc_id exchange → the
+    // stack-and-rank kernel; no stack join, no window
+    val s = plan(Geocode.forwardStaged(docs, gaz, 5, dedupe = false))
+    assert(s.contains("BroadcastHashJoin") && s.contains("GroupKernel"), s)
+    assert(!s.contains("ShuffledHashJoin") && !s.contains("SortMergeJoin") && !s.contains("Window") &&
+      !s.contains("InMemoryTableScan"), s"staged forward keeps no stack join or window:\n$s")
+    assert("Exchange hashpartitioning\\(doc_id#".r.findAllIn(s).size == 1 &&
+      "(?<!Broadcast)Exchange ".r.findAllIn(s).size == 1, s"one doc_id exchange:\n$s")
   }
 
   test("reverse_pip: single probe pass, broadcast cover index, no extra exchange") {
@@ -102,9 +112,16 @@ class PlanSpec extends SparkTestBase {
       "semi-join reduction filter must run before the grid shuffle")
     def nJoins(p: String) = "\\(\\d+\\) ShuffledHashJoin".r.findAllIn(p).size
     def nExch(p: String) = "\\(\\d+\\) Exchange".r.findAllIn(p).size
-    assert(nJoins(pFat) == 2,
-      s"fat path should have exactly 2 shuffle joins (match, stack); got ${nJoins(pFat)}")
-    assert(nJoins(pSkinny) == 3, "skinny path pays the feature verify-join")
+    assert(nJoins(pFat) == 1,
+      s"fat path should have exactly 1 shuffle join (match); got ${nJoins(pFat)}")
+    assert(nJoins(pSkinny) == 2, "skinny path pays the feature verify-join")
+    // stack and rank run in-row after one doc_id exchange: no window, no
+    // persisted frame, and the only exchanges are the phrase_id pair and doc_id
+    assert(!pFat.contains("Window") && !pFat.contains("InMemoryTableScan") &&
+      pFat.contains("GroupKernel"), s"fat path stacks and ranks in-row:\n$pFat")
+    val keys = "Arguments: hashpartitioning\\((\\w+)#".r.findAllMatchIn(pFat).map(_.group(1)).toSeq.sorted
+    assert(nExch(pFat) == 3 && keys == Seq("doc_id", "phrase_id", "phrase_id"),
+      s"fat exchanges must be the phrase_id pair and doc_id, got $keys:\n$pFat")
     assert(nExch(pFat) < nExch(pSkinny),
       s"fat path must shuffle strictly less (${nExch(pFat)} vs ${nExch(pSkinny)})")
     // the grid-prune window must REUSE the match join's phrase_id exchange:
