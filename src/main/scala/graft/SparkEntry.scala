@@ -50,6 +50,8 @@ object SparkEntry {
     // grid DBSCAN over event points: eps-grid blocking, CC core clusters,
     // deterministic min-label border attachment
     "dbscan" -> ((s, d) => Queries.dbscan(s, d)),
+    // D7 on the eps-grid self-join: hot eps cells salted, rows identical to dbscan
+    "dbscan_salted" -> ((s, d) => Queries.dbscanSalted(s, d)),
     // trajectory analytics: OD cell-transition matrix and time-gap trip
     // segmentation (one user-keyed exchange each)
     "od_flows" -> ((s, d) => Queries.odFlows(s, d)),
@@ -148,8 +150,7 @@ object SparkEntry {
     "cell_compact" -> ((s, d) => Queries.cellCompact(s, d)),
     "reverse_pip" -> ((s, d) => Queries.reversePip(s, d)),
     "reverse_bcast" -> ((s, d) =>
-      ops.Geocode.reverseBcast(s, Synth.eventPoints(s, d), Synth.custFeatures(s, d), 8,
-        cacheKey = Some(s"$d/customer"))
+      ops.Geocode.reverseBcast(s, Synth.eventPoints(s, d), Synth.custFeatures(s, d), 8)
         .select(col("event_id"), col("feature_id"))),
     "reverse_salted" -> ((s, d) =>
       // D7 in the driver surface: hot-cell salted reverse join — row-identical
@@ -425,6 +426,7 @@ object SparkEntry {
     "poly_centroid" -> Queries.polyCentroidSql,
     "seg_join" -> Queries.segJoinSql,
     "dbscan" -> Queries.dbscanSql,
+    "dbscan_salted" -> Queries.dbscanSql,
     "od_flows" -> Queries.odFlowsSql,
     "trip_segments" -> Queries.tripSegmentsSql,
     "co_locate" -> Queries.coLocateSql,

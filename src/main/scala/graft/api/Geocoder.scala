@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.F
@@ -105,24 +105,56 @@ final class Geocoder(spark: SparkSession, gaz: DataFrame,
         (if (levels.isDefined) Seq(col("chain")) else Nil): _*)
   }
 
-  /** Reverse geocode: context chain of containing features per type plus a
-    * kNN nearest place for points with no containment hit at all. Output:
-    * (event_id, typ, feature_id, via) — via ∈ {pip, knn}. `event_id` is
-    * the point key: one row per point ([[Geocode.knnExpanding]]). */
+  /** Reverse geocode: the context chain of containing features per type
+    * ([[Geocode.contextChain]]: the smallest containing feature_id of each
+    * type) plus, for a point with no containment hit at all, the kNN
+    * nearest feature of the last type ([[Geocode.knnExpanding]] at zoom
+    * `knnZ`). Output: (event_id, typ, feature_id, via) — via ∈ {pip, knn};
+    * a point with neither gets no row. `event_id` is the point key and must
+    * be unique: each point row gets its own rows.
+    *
+    * Under the cover and point ceilings this is ONE map-only select: the
+    * `context_cover` kernel gives the point's hits, and a point without one
+    * runs the `knn_rings` kernel and the shared nearest pick in the same
+    * row, inside a CASE branch — no exchange, join, aggregate, window or
+    * persist. Over either ceiling the staged composition runs: the chain,
+    * an anti-join for the unmatched points and [[Geocode.knnExpanding]];
+    * rows are identical (FallbackSpec). */
   def reverse(points: DataFrame,
               typed: Seq[(String, DataFrame, Int)],
-              knnZ: Int = 8): DataFrame = {
-    val pip = Geocode.contextChain(points, typed)
-      .withColumn("via", lit("pip"))
-    val unmatched = points.join(pip.select("event_id").distinct(),
-      Seq("event_id"), "left_anti")
+              knnZ: Int = 8): DataFrame =
+    reverseWith(points, typed, knnZ, Geocode.BroadcastCoverCeiling)
+
+  /** [[reverse]] with the cover ceiling as a parameter (tests force the
+    * staged composition with 1). */
+  private[graft] def reverseWith(points: DataFrame, typed: Seq[(String, DataFrame, Int)],
+                                 knnZ: Int, coverCeiling: Long): DataFrame = {
+    val knnTyp = typed.last._1
     val fallbackFeats = typed.last._2
       .select(col("feature_id"),
         col("flon"), col("flat"))
-    val knn = Geocode.knnExpanding(unmatched, fallbackFeats, knnZ)
-      .select(col("event_id"), lit(typed.last._1).as("typ"), col("feature_id"))
-      .withColumn("via", lit("knn"))
-    pip.unionByName(knn)
+    (Geocode.contextCover(typed, coverCeiling),
+      Geocode.knnRings(fallbackFeats, knnZ, Geocode.KnnRadii)) match {
+      case (Some(cover), Some(rings)) =>
+        def hit(typ: Column, fid: Column, via: String) =
+          struct(typ.as("typ"), fid.as("feature_id"), lit(via).as("via"))
+        val pip = transform(col("pip"), h => hit(h("typ"), h("feature_id"), "pip"))
+        val knn = transform(rings, k => hit(lit(knnTyp), Geocode.nearest(k("cands"))("feature_id"), "knn"))
+        points
+          .select(col("event_id"), col("elon"), col("elat"), cover.as("pip"))
+          .select(col("event_id"), explode(when(size(col("pip")) > 0, pip).otherwise(knn)).as("r"))
+          .select(col("event_id"), col("r.typ").as("typ"),
+            col("r.feature_id").cast(Geocode.chainIdType(typed)).as("feature_id"), col("r.via").as("via"))
+      case _ =>
+        val pip = Geocode.contextChain(points, typed, coverCeiling)
+          .withColumn("via", lit("pip"))
+        val unmatched = points.join(pip.select("event_id").distinct(),
+          Seq("event_id"), "left_anti")
+        val knn = Geocode.knnExpanding(unmatched, fallbackFeats, knnZ)
+          .select(col("event_id"), lit(knnTyp).as("typ"), col("feature_id"))
+          .withColumn("via", lit("knn"))
+        pip.unionByName(knn)
+    }
   }
 
   /** Reverse with `limit > 1` — carmen allows this only with a SINGLE type:

@@ -3,28 +3,37 @@ package graft.index
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.functions._
-import graft.core.CellMath
+import graft.core.{CellMath, Geo}
 import graft.functions.F
 
-/** The north star's "broadcastable sorted cell->feature-id array replacing
-  * Carmen's grid/cover index": two parallel Long arrays (cells ascending,
-  * ids tie-sorted) + binary-search range lookup. Replaces carmen-cache's
-  * per-phrase grid lists / RocksDB pointer chases with one cache-friendly
-  * sorted array that ships to every executor as a broadcast — a cell →
-  * feature-ids probe is then pure in-memory binary search inside a map
-  * stage: the reverse-geocode join needs NO shuffle at all.
+/** The polygon-cover index of one feature set at one zoom: the broadcast
+  * form of carmen's tile cover (`lib/context.js` [U]: covering tile, then
+  * point-in-polygon on that tile's features; GeoBlocks, PAPERS.md).
   *
-  * Size: 16 B/entry → 10^8 cover entries ≈ 1.6 GB, the practical broadcast
-  * ceiling; beyond that the same layout lives as the Hilbert-sorted parquet
-  * table ([[IndexBuild]]) and the probe becomes the D5 cell equi-join.
+  *   - `cells`/`fids`: the distinct (cell, feature_id) cover entries,
+  *     sorted by cell, then id — a cell's features are one binary-searched
+  *     slice, ids ascending. 16 B per entry.
+  *   - `polyIds`/`polys`: every polygon feature's rings, decoded once with
+  *     [[Geo.parseWkb]], ids ascending; a feature_id that appears in
+  *     several rows keeps each row's rings. 16 B per ring vertex.
+  *
+  * [[CellIndex.ContextCover]] walks a cell's slice in id order and stops at
+  * the first id whose rings pass [[Geo.pointInRings]] — the cell equi-join,
+  * PIP and `min(feature_id)` of [[graft.ops.Geocode.reversePip]] in one
+  * probe. [[CellIndex.CellLookup]] returns the slice itself. Past the
+  * broadcast ceiling (~10^8 entries plus vertices) the same entries live as
+  * the Hilbert-sorted parquet table ([[IndexBuild]]) and the probe is the
+  * D5 cell equi-join.
   */
-final class CellIndexData(val cells: Array[Long], val fids: Array[Long])
+final class CellIndexData(val cells: Array[Long], val fids: Array[Long],
+                          polyIds: Array[Long], polys: Array[Array[Array[Array[Double]]]])
     extends Serializable {
 
   /** All feature ids covering `cell` (ascending, distinct by construction). */
@@ -34,6 +43,19 @@ final class CellIndexData(val cells: Array[Long], val fids: Array[Long])
     val start = i
     while (i < cells.length && cells(i) == cell) i += 1
     java.util.Arrays.copyOfRange(fids, start, i)
+  }
+
+  /** Entry index of the smallest feature id covering `cell` with a polygon
+    * that contains (lon, lat), or -1. Points, lines and null geometries
+    * have no rings here, so they never hit. */
+  def firstContaining(cell: Long, lon: Double, lat: Double): Int = {
+    var i = CellIndex.lowerBound(cells, cell)
+    while (i < cells.length && cells(i) == cell) {
+      val p = java.util.Arrays.binarySearch(polyIds, fids(i))
+      if (p >= 0 && polys(p).exists(Geo.pointInRings(_, lon, lat))) return i
+      i += 1
+    }
+    -1
   }
 
   def size: Int = cells.length
@@ -71,34 +93,34 @@ object CellIndex {
     lo
   }
 
-  /** Process-wide memo of built indexes: the collect-and-sort build is a
-    * batch-index job, not a per-query step — a query path that rebuilt the
-    * (up to ~1.6 GB) array per invocation would be a driver collect per
-    * query at the ceiling. Keyed by caller-supplied identity (source table
-    * path + zoom); survives session restarts within the JVM. */
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, CellIndexData]()
-  def cached(key: String)(build: => CellIndexData): CellIndexData =
-    memo.computeIfAbsent(key, _ => build)
-
-  /** Build from a (cell, feature_id) frame. The distributed sort happens in
-    * Spark (range shuffle); only the final compact arrays are collected —
-    * the same rows [[IndexBuild]] writes as the on-disk sorted table. */
-  def build(cover: DataFrame): CellIndexData = {
-    val rows = cover.select(col("cell").cast("long"), col("feature_id").cast("long"))
-      .sort("cell", "feature_id")
-      .collect()
-    val cells = new Array[Long](rows.length)
-    val fids = new Array[Long](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      cells(i) = rows(i).getLong(0); fids(i) = rows(i).getLong(1); i += 1
+  /** Build the [[CellIndexData]] of (feature_id, geom_wkb) features at zoom
+    * z. The cover explode, distinct and sort run in Spark (the same rows
+    * [[IndexBuild]] writes as the on-disk sorted table); the entries and
+    * then the id-sorted geometries stream back one partition at a time into
+    * primitive arrays, as in [[buildPoints]]. Rows with a null id or
+    * geometry are skipped: the cell equi-join drops them too. A batch-index
+    * build — the caller memoizes it per feature plan and zoom. */
+  def buildFromFeatures(features: DataFrame, z: Int): CellIndexData = {
+    val fid = col("feature_id").cast("long").as("feature_id")
+    val rows = features.filter(col("feature_id").isNotNull && col("geom_wkb").isNotNull)
+    val cells = Array.newBuilder[Long]; val fids = Array.newBuilder[Long]
+    val it = rows.select(explode(F.tileCover(col("geom_wkb"), lit(z))).as("cell"), fid)
+      .distinct().sort("cell", "feature_id").toLocalIterator()
+    while (it.hasNext) { val r = it.next(); cells += r.getLong(0); fids += r.getLong(1) }
+    val polyIds = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val polys = scala.collection.mutable.ArrayBuffer.empty[Array[Array[Array[Double]]]]
+    val git = rows.select(fid, col("geom_wkb")).sort("feature_id").toLocalIterator()
+    while (git.hasNext) {
+      val r = git.next()
+      val g = Geo.parseWkb(r.getAs[Array[Byte]](1))
+      if (g.kind == Geo.Geom.Poly) {
+        val id = r.getLong(0)
+        if (polyIds.nonEmpty && polyIds.last == id) polys(polys.length - 1) :+= g.rings
+        else { polyIds += id; polys += Array(g.rings) }
+      }
     }
-    new CellIndexData(cells, fids)
+    new CellIndexData(cells.result(), fids.result(), polyIds.toArray, polys.toArray)
   }
-
-  def buildFromFeatures(features: DataFrame, z: Int): CellIndexData =
-    build(features.select(col("feature_id"),
-      explode(F.tileCover(col("geom_wkb"), lit(z))).as("cell")))
 
   /** Build a [[PointIndexData]] at zoom z from (feature_id, flon, flat),
     * `n` rows at most. The sort runs in Spark and the rows stream back one
@@ -159,6 +181,47 @@ object CellIndex {
 
   def knnRingsCol(cell: Column, bc: Broadcast[PointIndexData], radii: Seq[Int]): Column =
     ColumnBridge.column(KnnRings(ColumnBridge.expression(cell), bc, radii))
+
+  private val ContainType: StructType = new StructType()
+    .add("typ", StringType, nullable = false)
+    .add("feature_id", LongType, nullable = false)
+
+  /** context_cover(lon, lat): for each type in order, the smallest
+    * feature_id whose polygon contains the point, as `[struct(typ,
+    * feature_id)]` — one entry per type with a hit. Per type it computes
+    * the point's cell at that type's zoom with [[CellMath.lonLatToCell]]
+    * and probes that type's broadcast [[CellIndexData]]; candidates, PIP
+    * and the minimum id are those of `reversePip` + `min(feature_id)` by
+    * construction. A null coordinate gives null (no rows once exploded). */
+  case class ContextCover(left: Expression, right: Expression, typs: Seq[String],
+                          zs: Seq[Int], bcs: Seq[Broadcast[CellIndexData]])
+      extends BinaryExpression with CodegenFallback {
+    override def dataType: DataType = ArrayType(ContainType, containsNull = false)
+    override def nullIntolerant: Boolean = true
+    override def prettyName: String = "context_cover"
+    @transient private lazy val names = typs.map(UTF8String.fromString).toArray
+    @transient private lazy val zoom = zs.toArray
+    @transient private lazy val index = bcs.map(_.value).toArray
+    override def nullSafeEval(lo: Any, la: Any): Any = {
+      val lon = lo.asInstanceOf[Double]; val lat = la.asInstanceOf[Double]
+      val out = new Array[Any](index.length)
+      var t = 0; var k = 0
+      while (t < index.length) {
+        val idx = index(t)
+        val i = idx.firstContaining(CellMath.lonLatToCell(zoom(t), lon, lat), lon, lat)
+        if (i >= 0) { out(k) = InternalRow(names(t), idx.fids(i)); k += 1 }
+        t += 1
+      }
+      new GenericArrayData(if (k == out.length) out else out.take(k))
+    }
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): ContextCover =
+      copy(left = l, right = r)
+  }
+
+  def contextCoverCol(lon: Column, lat: Column, typs: Seq[String], zs: Seq[Int],
+                      bcs: Seq[Broadcast[CellIndexData]]): Column =
+    ColumnBridge.column(ContextCover(ColumnBridge.expression(lon), ColumnBridge.expression(lat),
+      typs, zs, bcs))
 
   /** cell_lookup(cell): array of feature ids — binary search against the
     * broadcast index, evaluated inside the map stage (no shuffle, no join). */

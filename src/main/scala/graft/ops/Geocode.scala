@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 import graft.functions.F
 
 /** The geocoding operator set (SURVEY.md §2.B4/B8, §2.D1–D6, §2.E2, §2.F2–F4):
@@ -69,6 +70,28 @@ object Geocode {
   private def pointIndex(featurePoints: DataFrame, z: Int, n: Long): Bc[graft.index.PointIndexData] =
     memoBroadcast(pointIndexMemo, (featurePoints.queryExecution.analyzed.canonicalized, z), featurePoints)(
       graft.index.CellIndex.buildPoints(featurePoints, z, n))
+
+  /** Broadcast polygon-cover index per (feature plan, zoom). */
+  private val coverIndexMemo = new BcMemo[(Plan, Int), graft.index.CellIndexData]()
+  private def coverIndex(features: DataFrame, z: Int): Bc[graft.index.CellIndexData] =
+    memoBroadcast(coverIndexMemo, (features.queryExecution.analyzed.canonicalized, z), features)(
+      graft.index.CellIndex.buildFromFeatures(features, z))
+
+  /** Size of a cover index: its entries plus ring vertices (16 B each,
+    * counted against [[BroadcastCoverCeiling]]; vertices as WKB bytes / 16),
+    * and the rows with a geometry but a null feature_id. */
+  private final case class CoverSize(entries: Long, nullIds: Long)
+  private val coverSizeMemo = new java.util.concurrent.ConcurrentHashMap[(Plan, Int), CoverSize]()
+  /** The ceiling probe of [[coverIndex]]: one small job per feature plan
+    * and zoom, so an over-ceiling index never reaches the driver. */
+  private def coverSize(features: DataFrame, z: Int): CoverSize =
+    coverSizeMemo.computeIfAbsent((features.queryExecution.analyzed.canonicalized, z), _ => {
+      val wkb = col("geom_wkb")
+      val r = features.filter(wkb.isNotNull).agg(
+        coalesce(sum(size(F.tileCover(wkb, lit(z))) + floor(octet_length(wkb) / 16)), lit(0L)),
+        count(when(col("feature_id").isNull, 1))).head()
+      CoverSize(r.getLong(0), r.getLong(1))
+    })
 
   /** Broadcast forward-geocode dictionary per gazetteer plan. */
   private val gazDictMemo = new BcMemo[Plan, graft.index.GazDictData]()
@@ -859,30 +882,22 @@ object Geocode {
       .filter(F.pipWkb(col("geom_wkb"), col("elon"), col("elat")))
   }
 
-  /** D5 over the broadcast sorted cell→feature-id array (the north-star
-    * index structure): the probe side binary-searches the broadcast index
-    * inside the map stage — NO shuffle, no exploded cover frame. Equivalent
-    * results to [[reversePip]]; this is the path that wins when the cover
-    * index fits the broadcast ceiling (~10^8 entries). */
+  /** D5 over the broadcast polygon-cover index: the probe side
+    * binary-searches the memoized [[graft.index.CellIndexData]] of
+    * `features` at zoom z ([[coverIndex]]: built and broadcast once per
+    * feature plan and zoom) inside the map stage, then joins the
+    * broadcast features and runs PIP — no shuffle, no exploded cover
+    * frame. Rows equal [[reversePip]]'s. Over `coverCeiling` (cover entries
+    * plus ring vertices, one memoized probe) the index never reaches the
+    * driver and [[reversePip]] runs instead. */
   def reverseBcast(spark: org.apache.spark.sql.SparkSession, points: DataFrame,
                    features: DataFrame, z: Int,
-                   cacheKey: Option[String] = None,
                    coverCeiling: Long = BroadcastCoverCeiling): DataFrame = {
     import graft.index.CellIndex
-    // ceiling probe IN CODE: count the exploded cover before collecting it —
-    // an over-ceiling index never reaches the driver; the operator degrades
-    // to the shuffled cell equi-join (reversePip), row-identical.
-    val coverN = memoCount(features
-      .select(col("feature_id"), explode(F.tileCover(col("geom_wkb"), lit(z))).as("cell")))
-    if (coverN > coverCeiling) return reversePip(points, features, z)
-    val data = cacheKey match {
-      case Some(key) => CellIndex.cached(s"$key@z$z")(CellIndex.buildFromFeatures(features, z))
-      case None => CellIndex.buildFromFeatures(features, z)
-    }
-    val bc = spark.sparkContext.broadcast(data)
+    if (coverSize(features, z).entries > coverCeiling) return reversePip(points, features, z)
     val probes = points
       .withColumn("cell", F.cellAt(lit(z), col("elon"), col("elat")))
-      .withColumn("feature_id", explode(CellIndex.lookupCol(col("cell"), bc)))
+      .withColumn("feature_id", explode(CellIndex.lookupCol(col("cell"), coverIndex(features, z))))
     probes.join(broadcast(features), "feature_id")
       .filter(F.pipWkb(col("geom_wkb"), col("elon"), col("elat")))
   }
@@ -911,24 +926,42 @@ object Geocode {
     * index never reaches the driver and the per-round loop runs instead
     * ([[knnLoop]]), row-identical (FallbackSpec). */
   def knnExpanding(points: DataFrame, featurePoints: DataFrame, z: Int,
-                   radii: Seq[Int] = Seq(2, 4, 8)): DataFrame = {
+                   radii: Seq[Int] = KnnRadii): DataFrame =
+    knnRings(featurePoints, z, radii) match {
+      case None => knnLoop(points, featurePoints, z, radii)
+      case Some(rings) =>
+        val best = nearest(col("k.cands"))
+        points
+          .select(col("event_id"), col("elon"), col("elat"), explode(rings).as("k"))
+          .select(col("event_id"), col("k.radius").as("radius"), best.as("best"))
+          .select(col("event_id"),
+            col("best.feature_id").cast(featurePoints.schema("feature_id").dataType).as("feature_id"),
+            round(col("best.dist"), 3).as("dist_km"), col("radius"))
+    }
+
+  /** The kNN radius ladder [[knnExpanding]] and `Geocoder.reverse` use. */
+  final val KnnRadii = Seq(2, 4, 8)
+
+  /** The `knn_rings` kernel over the point's (elon, elat) cell at zoom z:
+    * `[struct(radius, cands)]` over the memoized broadcast point index, or
+    * None over [[BroadcastPointCeiling]] (memoized count probe). */
+  private[graft] def knnRings(featurePoints: DataFrame, z: Int, radii: Seq[Int]): Option[Column] = {
     require(radii.nonEmpty && radii.head >= 0 && radii.zip(radii.tail).forall { case (a, b) => a < b },
       s"radii must be a non-empty strictly ascending ladder, got $radii")
     val n = memoCount(featurePoints)
-    if (n > BroadcastPointCeiling) return knnLoop(points, featurePoints, z, radii)
-    import graft.index.CellIndex
-    val bc = pointIndex(featurePoints, z, n)
-    val nearest = array_min(transform(col("k.cands"), c => struct(
+    if (n > BroadcastPointCeiling) None
+    else Some(graft.index.CellIndex.knnRingsCol(
+      F.cellAt(lit(z), col("elon"), col("elat")), pointIndex(featurePoints, z, n), radii))
+  }
+
+  /** The nearest of a `knn_rings` candidate array: `struct(dist,
+    * feature_id)`, the least by (haversine from (elon, elat), feature_id)
+    * — Spark's own [[F.haversineKm]] and struct order inside `array_min`,
+    * so the pick is the round loop's window order, bit for bit. */
+  private[graft] def nearest(cands: Column): Column =
+    array_min(transform(cands, c => struct(
       F.haversineKm(col("elon"), col("elat"), c("flon"), c("flat")).as("dist"),
       c("feature_id").as("feature_id"))))
-    points
-      .select(col("event_id"), col("elon"), col("elat"), explode(
-        CellIndex.knnRingsCol(F.cellAt(lit(z), col("elon"), col("elat")), bc, radii)).as("k"))
-      .select(col("event_id"), col("k.radius").as("radius"), nearest.as("best"))
-      .select(col("event_id"),
-        col("best.feature_id").cast(featurePoints.schema("feature_id").dataType).as("feature_id"),
-        round(col("best.dist"), 3).as("dist_km"), col("radius"))
-  }
 
   /** Over-ceiling path of [[knnExpanding]]: one round per ladder radius.
     * Each round probes only the residual (left_anti of matched points) on
@@ -958,11 +991,34 @@ object Geocode {
     acc.get
   }
 
-  /** D5+F4: context chain — for each point, the containing feature per index
-    * type (min id per type, carmen picks the first hit), exploded as
-    * (event_id, typ, feature_id) rows ordered coarse→fine. */
-  def contextChain(points: DataFrame,
-                   typed: Seq[(String, DataFrame, Int)]): DataFrame = {
+  /** D5+F4: context chain — for each point, the containing feature per
+    * index type (the smallest containing feature_id: carmen picks the first
+    * hit), as (event_id, typ, feature_id) rows. `event_id` is the point
+    * key and must be unique: each point row gets its own rows (the staged
+    * body would fold rows sharing an event_id into one).
+    *
+    * Up to `coverCeiling` per type (cover entries plus ring vertices, one
+    * memoized probe per feature plan and zoom) this is ONE map-only stage:
+    * points → the `context_cover` kernel over each type's broadcast
+    * [[graft.index.CellIndexData]] → explode. No shuffle, join, aggregate
+    * or persist. Otherwise — or when a type's feature_id is not an integer
+    * or some geometry has a null id — [[contextChainStaged]] runs,
+    * row-identical (FallbackSpec). */
+  def contextChain(points: DataFrame, typed: Seq[(String, DataFrame, Int)],
+                   coverCeiling: Long = BroadcastCoverCeiling): DataFrame =
+    contextCover(typed, coverCeiling) match {
+      case None => contextChainStaged(points, typed)
+      case Some(cover) =>
+        points.select(col("event_id"), explode(cover).as("c"))
+          .select(col("event_id"), col("c.typ").as("typ"),
+            col("c.feature_id").cast(chainIdType(typed)).as("feature_id"))
+    }
+
+  /** Over-ceiling path and test reference of [[contextChain]]: per type a
+    * shuffled [[reversePip]] cell join and a `groupBy(event_id)` min,
+    * unioned. */
+  private[graft] def contextChainStaged(points: DataFrame,
+                                        typed: Seq[(String, DataFrame, Int)]): DataFrame = {
     val parts = typed.map { case (typ, feats, z) =>
       reversePip(points, feats, z)
         .groupBy(col("event_id"))
@@ -972,4 +1028,26 @@ object Geocode {
     parts.reduce(_ unionByName _)
       .select(col("event_id"), col("typ"), col("feature_id"))
   }
+
+  /** The `context_cover` kernel over (elon, elat) for `typed`, or None when
+    * [[contextChainStaged]] must run: no types, a non-integer feature_id,
+    * a geometry with a null id (the staged `min` would emit a null-id row),
+    * or a cover over `coverCeiling`. */
+  private[graft] def contextCover(typed: Seq[(String, DataFrame, Int)],
+                                  coverCeiling: Long): Option[Column] = {
+    val fits = typed.nonEmpty && typed.forall { case (_, feats, z) =>
+      Seq(ByteType, ShortType, IntegerType, LongType).contains(feats.schema("feature_id").dataType) && {
+        val n = coverSize(feats, z)
+        n.entries <= coverCeiling && n.nullIds == 0
+      }
+    }
+    if (!fits) None
+    else Some(graft.index.CellIndex.contextCoverCol(col("elon"), col("elat"),
+      typed.map(_._1), typed.map(_._3), typed.map { case (_, feats, z) => coverIndex(feats, z) }))
+  }
+
+  /** The feature_id type of the chain: the staged union's widening of the
+    * types' integer id columns. */
+  private[graft] def chainIdType(typed: Seq[(String, DataFrame, Int)]): DataType =
+    typed.map(_._2.schema("feature_id").dataType).maxBy(_.defaultSize)
 }

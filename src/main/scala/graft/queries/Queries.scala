@@ -1119,6 +1119,16 @@ object Queries {
     dbscanOf(dbscanPoints(spark, sfDir), n)
   }
 
+  /** [[dbscan]] with the D7 hot-cell salting on its eps-grid self-join:
+    * eps cells holding ≥ [[DbscanSaltedHot]] points (at sf0.001 several
+    * hold 4–5) replicate ×4 on the home side. Rows are [[dbscan]]'s, so it
+    * shares [[dbscanSql]]. */
+  def dbscanSalted(spark: SparkSession, sfDir: String): DataFrame =
+    dbscanOf(dbscanPoints(spark, sfDir), graft.index.TableIO.rowCount(spark, s"$sfDir/events.parquet"),
+      salt = 4, hotThreshold = DbscanSaltedHot)
+
+  private[graft] val DbscanSaltedHot = 4L
+
   /** [[dbscan]] core over any (id, xq, yq) milli-lattice point frame with
     * corpus size `n` supplied by the caller (from table metadata — never a
     * scan). `salt > 1` activates the D7 hot-cell treatment on the eps-grid

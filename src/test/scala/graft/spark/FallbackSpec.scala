@@ -66,6 +66,195 @@ class FallbackSpec extends SparkTestBase {
     val b = rows(Geocode.reverseBcast(spark, pts, feats, 8, coverCeiling = 1))
     val c = rows(Geocode.reversePip(pts, feats, 8))
     assert(a == c && b == c)
+    // the cover index is built and broadcast once per feature plan and zoom
+    def lookupIds(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+        case l: graft.index.CellIndex.CellLookup => l.bc.id
+      }))
+    val ids = Seq(Geocode.reverseBcast(spark, pts, feats, 8),
+      Geocode.reverseBcast(spark, pts.limit(5), Synth.custFeatures(spark, sf), 8)).flatMap(lookupIds)
+    assert(ids.size == 2 && ids.distinct.size == 1, ids.toString)
+    assert(lookupIds(Geocode.reverseBcast(spark, pts, feats, 6)).head != ids.head)
+  }
+
+  private type DF = org.apache.spark.sql.DataFrame
+
+  /** Column types and sorted rows. */
+  private def typedRows(df: DF) =
+    (df.schema.map(f => (f.name, f.dataType)), df.collect().map(_.toString).sorted.toSeq)
+
+  private def assertMapOnly(what: String, df: DF, kernel: String): Unit = {
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains(kernel), s"$what:\n$plan")
+    Seq("Exchange", "Join", "Aggregate", "Window", "InMemoryTableScan").foreach { op =>
+      assert(!plan.contains(op), s"$what: fused plan has $op:\n$plan")
+    }
+  }
+
+  private def rectRing(w: Double, s: Double, e: Double, n: Double) =
+    Array(w, s, e, s, e, n, w, n, w, s)
+  private def rect(w: Double, s: Double, e: Double, n: Double): Array[Byte] =
+    graft.core.Geo.writeWkbPolygon(Array(rectRing(w, s, e, n)))
+  private def multiRect(rs: (Double, Double, Double, Double)*): Array[Byte] = {
+    val parts = rs.map { case (w, s, e, n) => rect(w, s, e, n) }
+    val bb = java.nio.ByteBuffer.allocate(9 + parts.map(_.length).sum).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.put(1.toByte); bb.putInt(6); bb.putInt(parts.length); parts.foreach(p => bb.put(p))
+    bb.array()
+  }
+  private def cellRect(z: Int, lon: Double, lat: Double) =
+    graft.core.CellMath.cellBounds(graft.core.CellMath.lonLatToCell(z, lon, lat))
+
+  /** A feature row (feature_id, geom_wkb, flon, flat) and a point row
+    * (event_id, elon, elat). */
+  private type Fz = (Option[Long], Option[Array[Byte]], Double, Double)
+  private type P = (Long, Option[Double], Option[Double])
+
+  /** Edge-case feature sets at z4/z6/z8 and probe points (see the test). */
+  private def chainFixture() = {
+    import spark.implicits._
+    import graft.core.Geo
+    def feats(rows: Seq[Fz]) = rows.toDF("feature_id", "geom_wkb", "flon", "flat")
+    val aligned = Seq(4 -> (100.2, 30.2), 6 -> (100.6, 30.6), 8 -> (100.7, 30.7))
+      .map { case (z, (lon, lat)) => z -> cellRect(z, lon, lat) }.toMap
+    def alignedRect(z: Int) = { val (w, s, e, n) = aligned(z); rect(w, s, e, n) }
+    val continent: Seq[Fz] = Seq(
+      (Some(1L), Some(rect(0, 0, 10, 10)), 5.0, 5.0),
+      (Some(0L), Some(rect(5, 5, 15, 15)), 10.0, 10.0),   // overlaps 1: min id wins
+      (Some(2L), Some(Geo.writeWkbPolygon(Array(rectRing(20, 0, 30, 10), rectRing(22, 2, 28, 8)))), 25.0, 5.0),
+      (Some(3L), Some(multiRect((40, 0, 42, 2), (44, 0, 46, 2))), 43.0, 1.0),
+      (Some(4L), Some(rect(50, 0, 52, 2)), 51.0, 1.0),    // one id, two geometries
+      (Some(4L), Some(rect(54, 0, 56, 2)), 55.0, 1.0),
+      (Some(5L), None, 1.0, 1.0),                          // null geometry
+      (Some(6L), Some(Geo.writeWkbPoint(1.0, 1.0)), 1.0, 1.0),
+      (Some(7L), Some(Geo.writeWkbLineString(Array(2.0, 2.0, 3.0, 3.0))), 2.5, 2.5),
+      (Some(8L), Some(alignedRect(4)), 100.2, 30.2))
+    val country: Seq[Fz] = Seq(
+      (Some(11L), Some(rect(0, 0, 10, 10)), 5.0, 5.0),
+      (Some(10L), Some(alignedRect(6)), 100.6, 30.6))
+    val place: Seq[Fz] = Seq(
+      (Some(21L), Some(rect(1, 1, 3, 3)), 2.0, 2.0),
+      (Some(22L), Some(rect(21, 1, 22, 2)), 21.5, 1.5),
+      (Some(20L), Some(alignedRect(8)), 100.7, 30.7),
+      (Some(23L), None, 60.0, 5.0))                        // a kNN-only point feature
+    // the continent ids are INT: the chain's feature_id widens to BIGINT
+    val typed = Seq(
+      ("continent", feats(continent).withColumn("feature_id", col("feature_id").cast("int")), 4),
+      ("country", feats(country), 6),
+      ("place", feats(place), 8))
+    val base: Seq[P] = Seq(
+      (1L, Some(5.0), Some(5.0)), (2L, Some(0.0), Some(5.0)), (3L, Some(10.0), Some(5.0)),
+      (4L, Some(5.0), Some(0.0)), (5L, Some(5.0), Some(10.0)), (6L, Some(2.0), Some(12.0)),
+      (7L, Some(25.0), Some(5.0)), (8L, Some(21.0), Some(5.0)), (9L, Some(41.0), Some(1.0)),
+      (10L, Some(45.0), Some(1.0)), (11L, Some(43.0), Some(1.0)), (12L, Some(51.0), Some(1.0)),
+      (13L, Some(55.0), Some(1.0)), (14L, Some(1.0), Some(1.0)), (15L, Some(2.5), Some(2.5)),
+      (16L, Some(59.0), Some(4.0)),
+      (30L, None, Some(5.0)), (31L, Some(5.0), None),
+      (32L, Some(-100.0), Some(-60.0)))                    // nothing within disk(8)
+    // corners and edge midpoints of the cell-aligned rects: west/south in,
+    // east/north out, and every one on a z4/z6/z8 cell edge
+    val edges: Seq[P] = aligned.toSeq.sortBy(_._1).zipWithIndex.flatMap { case ((_, (w, s, e, n)), i) =>
+      val (mx, my) = ((w + e) / 2, (s + n) / 2)
+      Seq((w, s), (e, s), (w, n), (e, n), (w, my), (e, my), (mx, s), (mx, n)).zipWithIndex.map {
+        case ((x, y), j) => (100L + 10 * i + j, Some(x), Some(y)): P
+      }
+    }
+    ((base ++ edges).toDF("event_id", "elon", "elat"), typed)
+  }
+
+  test("contextChain: broadcast polygon-cover kernel is one map-only stage, row-identical to the staged chain") {
+    // the events, plus each customer rect's center (inside the rect, in its
+    // frame's hole) and a point in its frame's west band
+    val cust = Synth.custFeatures(spark, sf)
+    val pts = Synth.eventPoints(spark, sf)
+      .union(cust.select((col("feature_id") + 100000).as("event_id"), col("flon").as("elon"), col("flat").as("elat")))
+      .union(cust.select((col("feature_id") + 200000).as("event_id"), (col("west") - 1.4).as("elon"),
+        col("flat").as("elat")))
+    val frames = Synth.custFeatures(spark, sf).select((col("feature_id") * 2).as("feature_id"),
+        (col("west") - 1.5).as("west"), (col("south") - 1.5).as("south"),
+        (col("east") + 1.5).as("east"), (col("north") + 1.5).as("north"))
+      .withColumn("geom_wkb", graft.functions.F.frameWkb(col("west"), col("south"), col("east"), col("north"), 0.2))
+    val typed = Seq(
+      ("continent", Synth.continentFeatures(spark, sf), 4),
+      ("country", Synth.nationFeatures(spark, sf), 6),
+      ("place", Synth.custFeatures(spark, sf), 8),
+      ("frame", frames, 6))
+    val fused = Geocode.contextChain(pts, typed)
+    assertMapOnly("sf0.001 chain", fused, "context_cover")
+    val a = typedRows(fused)
+    assert(a == typedRows(Geocode.contextChainStaged(pts, typed)))
+    assert(a == typedRows(Geocode.contextChain(pts, typed, coverCeiling = 1)))
+    val hitTypes = fused.select("typ").distinct().collect().map(_.getString(0)).toSet
+    assert(hitTypes == Set("continent", "country", "place", "frame"), hitTypes.toString)
+  }
+
+  test("contextChain edge cases: holes, multipolygons, half-open and cell edges, nulls, repeated ids, empty sides") {
+    val (pts, typed) = chainFixture()
+    val fused = Geocode.contextChain(pts, typed)
+    assertMapOnly("edge chain", fused, "context_cover")
+    val a = typedRows(fused)
+    assert(a == typedRows(Geocode.contextChainStaged(pts, typed)))
+    assert(a._1.map(_._2) == Seq(org.apache.spark.sql.types.LongType,
+      org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.LongType))
+    val hits = fused.filter(col("typ") === "continent" && col("event_id") < 100L)
+      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    assert(hits == Map(1L -> 0L, 2L -> 1L, 3L -> 0L, 4L -> 1L, 5L -> 0L, 8L -> 2L, 9L -> 3L, 10L -> 3L,
+      12L -> 4L, 13L -> 4L, 14L -> 1L, 15L -> 1L), hits.toString)
+    // each type's cell-aligned rect holds its west/south corner and its
+    // west and south edge midpoints, and none of the east/north points
+    Seq(("continent", 8L), ("country", 10L), ("place", 20L)).zipWithIndex.foreach { case ((typ, fid), i) =>
+      val lo = 100L + 10 * i
+      val in = fused.filter(col("typ") === typ && col("feature_id") === fid &&
+        col("event_id").between(lo, lo + 7)).collect().map(_.getLong(0)).toSet
+      assert(in == Set(lo, lo + 4, lo + 6), s"$typ: $in")
+    }
+    // one type with no features; no points
+    val withEmpty = typed.patch(1, Seq(("empty", typed(1)._2.limit(0), 6)), 0)
+    assert(typedRows(Geocode.contextChain(pts, withEmpty)) == a)
+    assert(typedRows(Geocode.contextChainStaged(pts, withEmpty)) == a)
+    assert(Geocode.contextChain(pts.limit(0), typed).collect().isEmpty)
+    // event_id is the point key: a repeated point row gets its own rows,
+    // where the staged chain folds rows sharing an event_id into one min
+    val twice = pts.union(pts.filter(col("event_id") === 8L).withColumn("event_id", lit(1L)))
+    val dup = Geocode.contextChain(twice, typed).filter(col("event_id") === 1L && col("typ") === "continent")
+    assert(dup.collect().map(_.getLong(2)).sorted.toSeq == Seq(0L, 2L))
+    // a geometry with a null id: the staged min emits a null-id row, so the
+    // chain falls back to it
+    val nullId = typed.updated(2, ("place", typed(2)._2.union(typed(2)._2
+      .filter(col("feature_id") === 21L).withColumn("feature_id", lit(null).cast("long"))), 8))
+    val n = Geocode.contextChain(pts, nullId)
+    assert(!n.queryExecution.executedPlan.toString.contains("context_cover"))
+    assert(typedRows(n) == typedRows(Geocode.contextChainStaged(pts, nullId)))
+  }
+
+  test("Geocoder.reverse: one map-only select under the ceilings, row-identical to the staged composition") {
+    val g = graft.api.Geocoder.default(spark)
+    val (pts, typed) = chainFixture()
+    val sfTyped = Seq(
+      ("continent", Synth.continentFeatures(spark, sf), 4),
+      ("country", Synth.nationFeatures(spark, sf), 6),
+      ("place", Synth.custFeatures(spark, sf), 8))
+    // (the optimizer evaluates a projection over a local relation itself, so
+    // only the parquet input shows the kernels in its plan)
+    val sfPts = Synth.eventPoints(spark, sf)
+    assertMapOnly("sf0.001", g.reverse(sfPts, sfTyped), "context_cover")
+    assert(g.reverse(sfPts, sfTyped).queryExecution.executedPlan.toString.contains("knn_rings"))
+    val withEmpty = typed.patch(1, Seq(("empty", typed(1)._2.limit(0), 6)), 0)
+    Seq(("edge fixture", pts, typed), ("sf0.001", sfPts, sfTyped), ("one type without features", pts, withEmpty))
+      .foreach { case (what, p, t) =>
+        val staged = g.reverseWith(p, t, 8, coverCeiling = 1)
+        assert(!staged.queryExecution.executedPlan.toString.contains("context_cover"), what)
+        assert(typedRows(g.reverse(p, t)) == typedRows(staged), what)
+      }
+    assert(g.reverse(pts.limit(0), typed).collect().isEmpty)
+    val rows = g.reverse(pts, typed).collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
+    val via = rows.groupBy(_._1).map { case (id, rs) => id -> rs.map(_._4).toSet }
+    assert(via(1L) == Set("pip") && via(16L) == Set("knn") && via(7L) == Set("knn"), via.toString)
+    assert(rows.contains((16L, "place", 23L, "knn")), "the nearest place feature, a point row")
+    Seq(30L, 31L, 32L).foreach(id => assert(!via.contains(id), s"point $id must have no row"))
+    // a repeated event_id: each point row gets its own rows
+    val twice = pts.union(pts.filter(col("event_id") === 16L).withColumn("event_id", lit(1L)))
+    val one = g.reverse(twice, typed).filter(col("event_id") === 1L).collect().map(_.getString(3))
+    assert(one.count(_ == "knn") == 1 && one.count(_ == "pip") == 2, one.toSeq.toString)
   }
 
   private def knnRows(df: org.apache.spark.sql.DataFrame) =

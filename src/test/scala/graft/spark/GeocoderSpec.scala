@@ -375,6 +375,17 @@ class GeocoderSpec extends SparkTestBase {
     assert(plain.nonEmpty && salted == plain)
   }
 
+  test("dbscan_salted: salts hot eps cells at sf0.001, rows equal dbscan") {
+    import graft.queries.Queries
+    val sf = "/root/testdata/sf0.001"
+    val salted = Queries.dbscanSalted(spark, sf)
+    // the salt column exists only when the hot set is non-empty
+    assert(salted.queryExecution.executedPlan.toString.contains("_salt"),
+      s"no eps cell holds ${Queries.DbscanSaltedHot} points at sf0.001")
+    val rows = salted.collect().toSet
+    assert(rows.nonEmpty && rows == Queries.dbscan(spark, sf).collect().toSet)
+  }
+
   test("dbscan: salted hot-cell self-join is row-identical to the plain plan") {
     import graft.queries.Queries
     // hot-cell fixture: the even half crowds one eps-cell (eps = 10,700 at

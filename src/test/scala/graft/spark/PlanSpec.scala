@@ -17,6 +17,24 @@ class PlanSpec extends SparkTestBase {
       s"forward must be map-only:\n$p")
   }
 
+  test("context_chain and Geocoder.reverse: one map-only stage with the context_cover kernel") {
+    import graft.synth.Synth
+    val sf = "/root/testdata/sf0.001"
+    val typed = Seq(
+      ("continent", Synth.continentFeatures(spark, sf), 4),
+      ("country", Synth.nationFeatures(spark, sf), 6),
+      ("place", Synth.custFeatures(spark, sf), 8))
+    Seq(
+      "context_chain" -> plan(Queries.contextChain(spark, sf)),
+      "reverse" -> plan(graft.api.Geocoder.default(spark).reverse(Synth.eventPoints(spark, sf), typed))
+    ).foreach { case (what, p) =>
+      assert(p.contains("context_cover"), s"$what:\n$p")
+      Seq("Exchange", "Join", "Aggregate", "Window", "InMemoryTableScan").foreach { op =>
+        assert(!p.contains(op), s"$what must be map-only, found $op:\n$p")
+      }
+    }
+  }
+
   test("fwd_geocode: stack join shuffles, gazetteer broadcasts, top-k pushed") {
     import graft.ops.Geocode
     val (docs, gaz) = (
