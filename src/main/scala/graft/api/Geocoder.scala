@@ -117,9 +117,11 @@ final class Geocoder(spark: SparkSession, gaz: DataFrame,
     * `context_cover` kernel gives the point's hits, and a point without one
     * runs the `knn_rings` kernel and the shared nearest pick in the same
     * row, inside a CASE branch — no exchange, join, aggregate, window or
-    * persist. Over either ceiling the staged composition runs: the chain,
-    * an anti-join for the unmatched points and [[Geocode.knnExpanding]];
-    * rows are identical (FallbackSpec). */
+    * persist. The cover indexes and the point index (32 B per point, two
+    * cover entries) share the [[Geocode.BroadcastCoverCeiling]] budget;
+    * past it, or past [[Geocode.BroadcastPointCeiling]], the staged
+    * composition runs: the staged chain, an anti-join for the unmatched
+    * points and [[Geocode.knnExpanding]]; rows are identical (FallbackSpec). */
   def reverse(points: DataFrame,
               typed: Seq[(String, DataFrame, Int)],
               knnZ: Int = 8): DataFrame =
@@ -133,9 +135,8 @@ final class Geocoder(spark: SparkSession, gaz: DataFrame,
     val fallbackFeats = typed.last._2
       .select(col("feature_id"),
         col("flon"), col("flat"))
-    (Geocode.contextCover(typed, coverCeiling),
-      Geocode.knnRings(fallbackFeats, knnZ, Geocode.KnnRadii)) match {
-      case (Some(cover), Some(rings)) =>
+    Geocode.reverseKernels(typed, fallbackFeats, knnZ, coverCeiling) match {
+      case Some((cover, rings)) =>
         def hit(typ: Column, fid: Column, via: String) =
           struct(typ.as("typ"), fid.as("feature_id"), lit(via).as("via"))
         val pip = transform(col("pip"), h => hit(h("typ"), h("feature_id"), "pip"))
@@ -145,8 +146,8 @@ final class Geocoder(spark: SparkSession, gaz: DataFrame,
           .select(col("event_id"), explode(when(size(col("pip")) > 0, pip).otherwise(knn)).as("r"))
           .select(col("event_id"), col("r.typ").as("typ"),
             col("r.feature_id").cast(Geocode.chainIdType(typed)).as("feature_id"), col("r.via").as("via"))
-      case _ =>
-        val pip = Geocode.contextChain(points, typed, coverCeiling)
+      case None =>
+        val pip = Geocode.contextChainStaged(points, typed)
           .withColumn("via", lit("pip"))
         val unmatched = points.join(pip.select("event_id").distinct(),
           Seq("event_id"), "left_anti")

@@ -22,7 +22,9 @@ import graft.functions.F
   *     slice, ids ascending. 16 B per entry.
   *   - `polyIds`/`polys`: every polygon feature's rings, decoded once with
   *     [[Geo.parseWkb]], ids ascending; a feature_id that appears in
-  *     several rows keeps each row's rings. 16 B per ring vertex.
+  *     several rows keeps each row's rings. 16 B per ring vertex. Empty in
+  *     an index built without rings (the [[CellIndex.CellLookup]] probe
+  *     reads entries only).
   *
   * [[CellIndex.ContextCover]] walks a cell's slice in id order and stops at
   * the first id whose rings pass [[Geo.pointInRings]] — the cell equi-join,
@@ -97,10 +99,11 @@ object CellIndex {
     * z. The cover explode, distinct and sort run in Spark (the same rows
     * [[IndexBuild]] writes as the on-disk sorted table); the entries and
     * then the id-sorted geometries stream back one partition at a time into
-    * primitive arrays, as in [[buildPoints]]. Rows with a null id or
-    * geometry are skipped: the cell equi-join drops them too. A batch-index
-    * build — the caller memoizes it per feature plan and zoom. */
-  def buildFromFeatures(features: DataFrame, z: Int): CellIndexData = {
+    * primitive arrays, as in [[buildPoints]]; without `rings` only the
+    * entries. Rows with a null id or geometry are skipped: the cell
+    * equi-join drops them too. A batch-index build — the caller memoizes it
+    * per feature plan, zoom and `rings`. */
+  def buildFromFeatures(features: DataFrame, z: Int, rings: Boolean = true): CellIndexData = {
     val fid = col("feature_id").cast("long").as("feature_id")
     val rows = features.filter(col("feature_id").isNotNull && col("geom_wkb").isNotNull)
     val cells = Array.newBuilder[Long]; val fids = Array.newBuilder[Long]
@@ -109,7 +112,8 @@ object CellIndex {
     while (it.hasNext) { val r = it.next(); cells += r.getLong(0); fids += r.getLong(1) }
     val polyIds = scala.collection.mutable.ArrayBuffer.empty[Long]
     val polys = scala.collection.mutable.ArrayBuffer.empty[Array[Array[Array[Double]]]]
-    val git = rows.select(fid, col("geom_wkb")).sort("feature_id").toLocalIterator()
+    val git = if (rings) rows.select(fid, col("geom_wkb")).sort("feature_id").toLocalIterator()
+              else java.util.Collections.emptyIterator[org.apache.spark.sql.Row]()
     while (git.hasNext) {
       val r = git.next()
       val g = Geo.parseWkb(r.getAs[Array[Byte]](1))

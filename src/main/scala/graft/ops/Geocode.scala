@@ -71,27 +71,34 @@ object Geocode {
     memoBroadcast(pointIndexMemo, (featurePoints.queryExecution.analyzed.canonicalized, z), featurePoints)(
       graft.index.CellIndex.buildPoints(featurePoints, z, n))
 
-  /** Broadcast polygon-cover index per (feature plan, zoom). */
-  private val coverIndexMemo = new BcMemo[(Plan, Int), graft.index.CellIndexData]()
-  private def coverIndex(features: DataFrame, z: Int): Bc[graft.index.CellIndexData] =
-    memoBroadcast(coverIndexMemo, (features.queryExecution.analyzed.canonicalized, z), features)(
-      graft.index.CellIndex.buildFromFeatures(features, z))
+  /** Broadcast polygon-cover index per (feature plan, zoom, with rings):
+    * [[contextChain]] probes it with the decoded rings, [[reverseBcast]]
+    * with the cover entries alone. */
+  private val coverIndexMemo = new BcMemo[(Plan, Int, Boolean), graft.index.CellIndexData]()
+  private def coverIndex(features: DataFrame, z: Int, rings: Boolean): Bc[graft.index.CellIndexData] =
+    memoBroadcast(coverIndexMemo, (features.queryExecution.analyzed.canonicalized, z, rings), features)(
+      graft.index.CellIndex.buildFromFeatures(features, z, rings))
 
-  /** Size of a cover index: its entries plus ring vertices (16 B each,
-    * counted against [[BroadcastCoverCeiling]]; vertices as WKB bytes / 16),
-    * and the rows with a geometry but a null feature_id. */
-  private final case class CoverSize(entries: Long, nullIds: Long)
+  /** Size of a cover index, 16 B units each, counted against
+    * [[BroadcastCoverCeiling]]: its cover entries, its ring vertices (WKB
+    * bytes / 16), and the rows with a geometry but a null feature_id. */
+  private[graft] final case class CoverSize(entries: Long, vertices: Long, nullIds: Long)
   private val coverSizeMemo = new java.util.concurrent.ConcurrentHashMap[(Plan, Int), CoverSize]()
   /** The ceiling probe of [[coverIndex]]: one small job per feature plan
     * and zoom, so an over-ceiling index never reaches the driver. */
-  private def coverSize(features: DataFrame, z: Int): CoverSize =
+  private[graft] def coverSize(features: DataFrame, z: Int): CoverSize =
     coverSizeMemo.computeIfAbsent((features.queryExecution.analyzed.canonicalized, z), _ => {
       val wkb = col("geom_wkb")
       val r = features.filter(wkb.isNotNull).agg(
-        coalesce(sum(size(F.tileCover(wkb, lit(z))) + floor(octet_length(wkb) / 16)), lit(0L)),
+        coalesce(sum(size(F.tileCover(wkb, lit(z)))), lit(0L)),
+        coalesce(sum(floor(octet_length(wkb) / 16)), lit(0L)),
         count(when(col("feature_id").isNull, 1))).head()
-      CoverSize(r.getLong(0), r.getLong(1))
+      CoverSize(r.getLong(0), r.getLong(1), r.getLong(2))
     })
+
+  /** Points of the kNN index in cover-ceiling units: 32 B per point
+    * ([[BroadcastPointCeiling]]) is two 16 B cover entries. */
+  private final val PointUnits = BroadcastCoverCeiling / BroadcastPointCeiling
 
   /** Broadcast forward-geocode dictionary per gazetteer plan. */
   private val gazDictMemo = new BcMemo[Plan, graft.index.GazDictData]()
@@ -882,14 +889,14 @@ object Geocode {
       .filter(F.pipWkb(col("geom_wkb"), col("elon"), col("elat")))
   }
 
-  /** D5 over the broadcast polygon-cover index: the probe side
+  /** D5 over the broadcast cell-cover index: the probe side
     * binary-searches the memoized [[graft.index.CellIndexData]] of
-    * `features` at zoom z ([[coverIndex]]: built and broadcast once per
-    * feature plan and zoom) inside the map stage, then joins the
-    * broadcast features and runs PIP — no shuffle, no exploded cover
-    * frame. Rows equal [[reversePip]]'s. Over `coverCeiling` (cover entries
-    * plus ring vertices, one memoized probe) the index never reaches the
-    * driver and [[reversePip]] runs instead. */
+    * `features` at zoom z ([[coverIndex]] without rings: built and
+    * broadcast once per feature plan and zoom) inside the map stage, then
+    * joins the broadcast features and runs PIP on each joined row's WKB —
+    * no shuffle, no exploded cover frame. Rows equal [[reversePip]]'s.
+    * Over `coverCeiling` cover entries (one memoized probe) the index never
+    * reaches the driver and [[reversePip]] runs instead. */
   def reverseBcast(spark: org.apache.spark.sql.SparkSession, points: DataFrame,
                    features: DataFrame, z: Int,
                    coverCeiling: Long = BroadcastCoverCeiling): DataFrame = {
@@ -897,7 +904,7 @@ object Geocode {
     if (coverSize(features, z).entries > coverCeiling) return reversePip(points, features, z)
     val probes = points
       .withColumn("cell", F.cellAt(lit(z), col("elon"), col("elat")))
-      .withColumn("feature_id", explode(CellIndex.lookupCol(col("cell"), coverIndex(features, z))))
+      .withColumn("feature_id", explode(CellIndex.lookupCol(col("cell"), coverIndex(features, z, rings = false))))
     probes.join(broadcast(features), "feature_id")
       .filter(F.pipWkb(col("geom_wkb"), col("elon"), col("elat")))
   }
@@ -997,15 +1004,20 @@ object Geocode {
     * key and must be unique: each point row gets its own rows (the staged
     * body would fold rows sharing an event_id into one).
     *
-    * Up to `coverCeiling` per type (cover entries plus ring vertices, one
-    * memoized probe per feature plan and zoom) this is ONE map-only stage:
-    * points → the `context_cover` kernel over each type's broadcast
-    * [[graft.index.CellIndexData]] → explode. No shuffle, join, aggregate
-    * or persist. Otherwise — or when a type's feature_id is not an integer
-    * or some geometry has a null id — [[contextChainStaged]] runs,
-    * row-identical (FallbackSpec). */
-  def contextChain(points: DataFrame, typed: Seq[(String, DataFrame, Int)],
-                   coverCeiling: Long = BroadcastCoverCeiling): DataFrame =
+    * While all types' cover indexes together fit [[BroadcastCoverCeiling]]
+    * (cover entries plus ring vertices, one memoized probe per feature plan
+    * and zoom) this is ONE map-only stage: points → the `context_cover`
+    * kernel over each type's broadcast [[graft.index.CellIndexData]] →
+    * explode. No shuffle, join, aggregate or persist. Otherwise — or when a
+    * type's feature_id is not an integer or some geometry has a null id —
+    * [[contextChainStaged]] runs, row-identical (FallbackSpec). */
+  def contextChain(points: DataFrame, typed: Seq[(String, DataFrame, Int)]): DataFrame =
+    contextChainWith(points, typed, BroadcastCoverCeiling)
+
+  /** [[contextChain]] with the cover ceiling as a parameter (tests force
+    * the staged chain with a small one). */
+  private[graft] def contextChainWith(points: DataFrame, typed: Seq[(String, DataFrame, Int)],
+                                      coverCeiling: Long): DataFrame =
     contextCover(typed, coverCeiling) match {
       case None => contextChainStaged(points, typed)
       case Some(cover) =>
@@ -1032,18 +1044,31 @@ object Geocode {
   /** The `context_cover` kernel over (elon, elat) for `typed`, or None when
     * [[contextChainStaged]] must run: no types, a non-integer feature_id,
     * a geometry with a null id (the staged `min` would emit a null-id row),
-    * or a cover over `coverCeiling`. */
+    * or cover indexes that together exceed `coverCeiling` (the kernel
+    * holds every type's index at once). */
   private[graft] def contextCover(typed: Seq[(String, DataFrame, Int)],
                                   coverCeiling: Long): Option[Column] = {
-    val fits = typed.nonEmpty && typed.forall { case (_, feats, z) =>
-      Seq(ByteType, ShortType, IntegerType, LongType).contains(feats.schema("feature_id").dataType) && {
-        val n = coverSize(feats, z)
-        n.entries <= coverCeiling && n.nullIds == 0
-      }
+    val ints = typed.nonEmpty && typed.forall { case (_, feats, _) =>
+      Seq(ByteType, ShortType, IntegerType, LongType).contains(feats.schema("feature_id").dataType)
     }
-    if (!fits) None
+    lazy val sizes = typed.map { case (_, feats, z) => coverSize(feats, z) }
+    if (!ints || sizes.exists(_.nullIds > 0) || sizes.map(n => n.entries + n.vertices).sum > coverCeiling) None
     else Some(graft.index.CellIndex.contextCoverCol(col("elon"), col("elat"),
-      typed.map(_._1), typed.map(_._3), typed.map { case (_, feats, z) => coverIndex(feats, z) }))
+      typed.map(_._1), typed.map(_._3), typed.map { case (_, feats, z) => coverIndex(feats, z, rings = true) }))
+  }
+
+  /** The `context_cover` and `knn_rings` kernels of `Geocoder.reverse`,
+    * which holds both indexes at once: None when the point index is over
+    * [[BroadcastPointCeiling]] or the cover indexes and the point index
+    * together exceed `coverCeiling`, and the staged composition must run. */
+  private[graft] def reverseKernels(typed: Seq[(String, DataFrame, Int)], featurePoints: DataFrame,
+                                    knnZ: Int, coverCeiling: Long): Option[(Column, Column)] = {
+    val n = memoCount(featurePoints)
+    if (n > BroadcastPointCeiling) None
+    else for {
+      cover <- contextCover(typed, coverCeiling - PointUnits * n)
+      rings <- knnRings(featurePoints, knnZ, KnnRadii)
+    } yield (cover, rings)
   }
 
   /** The feature_id type of the chain: the staged union's widening of the

@@ -182,7 +182,7 @@ class FallbackSpec extends SparkTestBase {
     assertMapOnly("sf0.001 chain", fused, "context_cover")
     val a = typedRows(fused)
     assert(a == typedRows(Geocode.contextChainStaged(pts, typed)))
-    assert(a == typedRows(Geocode.contextChain(pts, typed, coverCeiling = 1)))
+    assert(a == typedRows(Geocode.contextChainWith(pts, typed, coverCeiling = 1)))
     val hitTypes = fused.select("typ").distinct().collect().map(_.getString(0)).toSet
     assert(hitTypes == Set("continent", "country", "place", "frame"), hitTypes.toString)
   }
@@ -255,6 +255,31 @@ class FallbackSpec extends SparkTestBase {
     val twice = pts.union(pts.filter(col("event_id") === 16L).withColumn("event_id", lit(1L)))
     val one = g.reverse(twice, typed).filter(col("event_id") === 1L).collect().map(_.getString(3))
     assert(one.count(_ == "knn") == 1 && one.count(_ == "pip") == 2, one.toSeq.toString)
+  }
+
+  test("contextChain and Geocoder.reverse: the cover and point indexes share one broadcast budget") {
+    val g = graft.api.Geocoder.default(spark)
+    val pts = Synth.eventPoints(spark, sf)
+    val typed = Seq(
+      ("continent", Synth.continentFeatures(spark, sf), 4),
+      ("country", Synth.nationFeatures(spark, sf), 6),
+      ("place", Synth.custFeatures(spark, sf), 8))
+    val sizes = typed.map { case (_, f, z) => val n = Geocode.coverSize(f, z); n.entries + n.vertices }
+    val total = sizes.sum
+    assert(sizes.forall(_ > 0), sizes.toString)
+    def fused(df: DF) = df.queryExecution.executedPlan.toString.contains("context_cover")
+    // each type fits the ceiling on its own; together they do not
+    val chain = Geocode.contextChainWith(pts, typed, coverCeiling = sizes.max)
+    assert(!fused(chain))
+    assert(typedRows(chain) == typedRows(Geocode.contextChain(pts, typed)))
+    assert(fused(Geocode.contextChainWith(pts, typed, coverCeiling = total)))
+    // reverse also holds the kNN point index: 32 B, two cover entries, per point
+    val pointUnits = 2 * typed.last._2.count()
+    assert(pointUnits > 0)
+    val rev = g.reverseWith(pts, typed, 8, coverCeiling = total + pointUnits - 1)
+    assert(!fused(rev))
+    assert(typedRows(rev) == typedRows(g.reverse(pts, typed)))
+    assert(fused(g.reverseWith(pts, typed, 8, coverCeiling = total + pointUnits)))
   }
 
   private def knnRows(df: org.apache.spark.sql.DataFrame) =
