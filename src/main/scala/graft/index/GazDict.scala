@@ -2,6 +2,7 @@ package graft.index
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -10,20 +11,21 @@ import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
 import graft.core.Text
-import graft.functions.F
 
-/** The broadcast forward-geocode dictionary behind `fwd_topk`: every place
-  * and region row of a gazetteer as parallel primitive arrays grouped by
-  * name, with an open-addressing name table over one string pool. `cells`
-  * holds each row's index cell (z12 for places, z8 for regions, the cells
-  * [[graft.ops.Geocode.coalesce2]] computes). ~41 B per row plus ~16 B and
-  * the name's chars per distinct name; rows of any other `typ` never
-  * become candidates and are left out. Only the name match runs over it:
-  * a page's matched rows go to the [[StackRank]] kernel, which the
-  * indexed and staged forward paths share.
+/** The broadcast forward-geocode dictionary behind `fwd_topk`: the place
+  * and region rows of a gazetteer, or of a fat grid index, as parallel
+  * primitive arrays grouped by name, with an open-addressing name table
+  * over one string pool. `cells` holds each row's index cell, as the
+  * build took it ([[GazDict.build]]: z12 for places and z8 for regions,
+  * the cells [[graft.ops.Geocode.coalesce2]] computes;
+  * [[GazDict.buildFromGrid]]: the grid's own `cell`). ~41 B per row plus
+  * ~16 B and the name's chars per distinct name; rows of any other `typ`
+  * never become candidates and are left out. Only the name match runs
+  * over it: a page's matched rows go to the [[StackRank]] kernel, which
+  * the indexed and staged forward paths share.
   *
-  * `flags` bits: [[Region]] (else place), [[GidNull]], [[CoordNull]] (glon
-  * or glat null, so no cell), [[ScoreNull]]. */
+  * `flags` are [[StackRank]]'s row bits: Region (else place), GidNull,
+  * CellNull, CoordNull (glon or glat null), ScoreNull. */
 final class GazDictData(pool: String, nameOff: Array[Int], slots: Array[Int],
                         rowOff: Array[Int], val gids: Array[Long], val cells: Array[Long],
                         val lons: Array[Double], val lats: Array[Double],
@@ -67,20 +69,14 @@ final class GazDictData(pool: String, nameOff: Array[Int], slots: Array[Int],
 
 object GazDict {
 
-  /** Row flags, in [[StackRank]]'s bits (a row with a null glon or glat
-    * has no cell either). */
-  final val Region: Byte = StackRank.Region.toByte
-  final val GidNull: Byte = StackRank.GidNull.toByte
-  final val CoordNull: Byte = (StackRank.CellNull | StackRank.CoordNull).toByte
-  final val ScoreNull: Byte = StackRank.ScoreNull.toByte
-
   private[index] def spread(h: Int): Int = { val x = h * 0x9E3779B9; x ^ (x >>> 16) }
 
   /** Build a [[GazDictData]] from the place and region rows of `gaz`
-    * (`n` rows at most). The rows are sorted by name in Spark and stream
-    * back one partition at a time into primitive arrays, like
+    * (name, typ, gid, glon, glat, score; `n` rows at most), each row at
+    * the index cell `cell`. The rows are sorted by name in Spark and
+    * stream back one partition at a time into primitive arrays, like
     * [[CellIndex.buildPoints]]. */
-  def build(gaz: DataFrame, n: Long): GazDictData = {
+  def build(gaz: DataFrame, cell: Column, n: Long): GazDictData = {
     require(n <= Int.MaxValue, s"$n gazetteer rows do not fit one array")
     val pool = new java.lang.StringBuilder
     val nameOff = Array.newBuilder[Int]; val rowOff = Array.newBuilder[Int]
@@ -91,11 +87,9 @@ object GazDict {
     Seq(gids, cells).foreach(_.sizeHint(n.toInt))
     Seq(lons, lats, scores).foreach(_.sizeHint(n.toInt))
     flags.sizeHint(n.toInt)
-    val region = col("typ") === "region"
-    val cell = when(region, F.cellAt(lit(8), col("glon"), col("glat")))
-      .otherwise(F.cellAt(lit(12), col("glon"), col("glat")))
     val it = gaz.filter(col("typ").isin("place", "region") && col("name").isNotNull)
-      .select(col("name"), region.as("region"), col("gid").cast("long"), cell.as("cell"),
+      .select(col("name"), (col("typ") === "region").as("region"), col("gid").cast("long"),
+        cell.cast("long").as("cell"),
         col("glon").cast("double"), col("glat").cast("double"), col("score").cast("double"))
       .sort("name")
       .toLocalIterator()
@@ -110,10 +104,11 @@ object GazDict {
         maxLen = math.max(maxLen, name.split(" ", -1).length)
         prev = name
       }
-      var f = if (r.getBoolean(1)) Region else 0
-      if (r.isNullAt(2)) f |= GidNull
-      if (r.isNullAt(3)) f |= CoordNull
-      if (r.isNullAt(6)) f |= ScoreNull
+      var f = if (r.getBoolean(1)) StackRank.Region else 0
+      if (r.isNullAt(2)) f |= StackRank.GidNull
+      if (r.isNullAt(3)) f |= StackRank.CellNull
+      if (r.isNullAt(4) || r.isNullAt(5)) f |= StackRank.CoordNull
+      if (r.isNullAt(6)) f |= StackRank.ScoreNull
       flags += f.toByte
       gids += (if (r.isNullAt(2)) 0L else r.getLong(2))
       cells += (if (r.isNullAt(3)) 0L else r.getLong(3))
@@ -136,6 +131,43 @@ object GazDict {
     new GazDictData(pool.toString, nameOff.result(), slots, rowOff.result(), gids.result(),
       cells.result(), lons.result(), lats.result(), scores.result(), flags.result(), maxLen)
   }
+
+  /** The rows of a fat grid index ([[IndexBuild.gazetteerGridFat]]) that
+    * a token window can match, `feature_id` renamed `gid`: place and
+    * region rows whose `phrase_id` is their name's
+    * [[IndexBuild.phraseId]]. The grid match joins a window on its
+    * phrase's id and verifies `phrase = name`, so any other row never
+    * matches. */
+  def gridRows(grid: DataFrame): DataFrame =
+    grid.filter(col("typ").isin("place", "region") && col("name").isNotNull &&
+        col("phrase_id") === IndexBuild.phraseId(col("name")))
+      .withColumnRenamed("feature_id", "gid")
+
+  /** Size and collision guard of [[gridRows]]: the row count and the most
+    * distinct names that share one phrase_id (more than one only on an
+    * xxhash64 collision). */
+  final case class GridProbe(rows: Long, namesPerPhrase: Long)
+
+  def probe(rows: DataFrame): GridProbe = {
+    val r = rows.groupBy("phrase_id").agg(count(lit(1)).as("n"), countDistinct("name").as("names"))
+      .agg(coalesce(sum("n"), lit(0L)), coalesce(max("names"), lit(0L))).head()
+    GridProbe(r.getLong(0), r.getLong(1))
+  }
+
+  /** Build a [[GazDictData]] from a fat grid index: its [[gridRows]] at
+    * their own `cell` (a grid may be built at any zooms), with the F2
+    * grid-stage prune applied once: the [[graft.ops.Geocode.GridStackCap]]
+    * best rows per (phrase_id, typ) by (relev_q desc, score_q desc, gid
+    * asc), [[StackRank.Pages]]' order. The shuffled grid path prunes the
+    * same groups per page; with one name per phrase_id
+    * ([[GridProbe.namesPerPhrase]] ≤ 1) a page's group is every grid row
+    * of that name, so the build-time cap is exact. */
+  def buildFromGrid(grid: DataFrame, n: Long): GazDictData =
+    build(gridRows(grid)
+      .withColumn("gr", row_number().over(Window.partitionBy(col("phrase_id"), col("typ"))
+        .orderBy(col("relev_q").cast("int").desc_nulls_last, col("score_q").cast("int").desc_nulls_last,
+          col("gid").cast("long").asc_nulls_first)))
+      .filter(col("gr") <= graft.ops.Geocode.GridStackCap), col("cell"), n)
 
   /** fwd_topk(text, qlon, qlat): one page's forward geocode over a
     * broadcast [[GazDictData]]: windows ([[graft.functions.Exprs.WindowPos]])

@@ -104,7 +104,19 @@ object Geocode {
   private val gazDictMemo = new BcMemo[Plan, graft.index.GazDictData]()
   private def gazDict(gaz: DataFrame, n: Long): Bc[graft.index.GazDictData] =
     memoBroadcast(gazDictMemo, gaz.queryExecution.analyzed.canonicalized, gaz)(
-      graft.index.GazDict.build(gaz, n))
+      graft.index.GazDict.build(gaz, indexCell, n))
+
+  /** Broadcast forward-geocode dictionary per fat grid plan, with its
+    * probe: one small job per grid plan sizes the rows a window can match
+    * and checks that no two names share a phrase_id. */
+  private val gridDictMemo = new BcMemo[Plan, graft.index.GazDictData]()
+  private val gridProbeMemo = new java.util.concurrent.ConcurrentHashMap[Plan, graft.index.GazDict.GridProbe]()
+  private[graft] def gridProbe(grid: DataFrame): graft.index.GazDict.GridProbe =
+    gridProbeMemo.computeIfAbsent(grid.queryExecution.analyzed.canonicalized,
+      _ => graft.index.GazDict.probe(graft.index.GazDict.gridRows(grid)))
+  private def gridDict(grid: DataFrame, n: Long): Bc[graft.index.GazDictData] =
+    memoBroadcast(gridDictMemo, grid.queryExecution.analyzed.canonicalized, grid)(
+      graft.index.GazDict.buildFromGrid(grid, n))
 
   /** Broadcast sorted distinct phrase-id array of a grid index (the
     * [[forwardIndexed]] semi-join prefilter — a per-index-epoch build, not
@@ -139,7 +151,8 @@ object Geocode {
   private def prefilterPhrases(windows: DataFrame, grid: DataFrame,
                                dictCeiling: Long): DataFrame = {
     import graft.index.CellIndex
-    val dict = grid.select(col("phrase_id")).distinct()
+    // a null phrase_id joins no window
+    val dict = grid.select(col("phrase_id")).where(col("phrase_id").isNotNull).distinct()
     val n = memoCount(dict)
     val key = grid.queryExecution.analyzed.canonicalized
     if (n <= dictCeiling)
@@ -243,7 +256,8 @@ object Geocode {
   final val StackRegionCap = 16
   /** F2: grid-stage prune of the indexed forward paths — per (doc, phrase,
     * typ) only the best GridStackCap index entries by (relev_q desc,
-    * score_q desc, id) reach verify and coalesce. Row-identical to the
+    * score_q desc, id) reach verify and coalesce (the fused fat path caps
+    * each phrase once, when its dictionary is built). Row-identical to the
     * broadcast path while it exceeds the per-phrase feature count. */
   final val GridStackCap = 64
 
@@ -606,12 +620,15 @@ object Geocode {
     *
     * Every mention, stack and candidate of a page comes from that one page
     * row, so up to [[BroadcastGazCeiling]] gazetteer rows (memoized count
-    * probe) the whole pipeline is ONE map-only stage: the place and region
-    * rows are packed into a [[graft.index.GazDictData]] and broadcast, once
-    * per gazetteer plan, and the `fwd_topk` kernel replays windows → name
-    * matches in-row, then the shared [[graft.index.StackRank]] kernel
-    * stacks and ranks them, row-identical to the staged operators
-    * (FallbackSpec). No exchange, window, persist or count.
+    * probe) the whole pipeline is ONE map-only stage ([[forwardTopK]]):
+    * the place and region rows are packed into a
+    * [[graft.index.GazDictData]] at their z12/z8 index cells and
+    * broadcast, once per gazetteer plan, and the `fwd_topk` kernel replays
+    * windows → name matches in-row, then the shared
+    * [[graft.index.StackRank]] kernel stacks and ranks them, row-identical
+    * to the staged operators (FallbackSpec). No exchange, window, persist
+    * or count. [[forwardIndexedFat]] runs the same stage over a dictionary
+    * built from a fat grid.
     *
     * Over the ceiling the dictionary never reaches the driver:
     * [[forwardStaged]] matches by join and runs the same kernel after one
@@ -620,15 +637,24 @@ object Geocode {
               dedupe: Boolean = false): DataFrame = {
     val n = memoCount(gaz)
     if (n > BroadcastGazCeiling) return forwardStaged(docs, gaz, k, dedupe)
-    val bc = gazDict(gaz, n)
+    forwardTopK(docs, gazDict(gaz, n), k, dedupe, gaz.schema("gid").dataType)
+  }
+
+  /** The fused forward stage: `docs → explode(fwd_topk(text, qlon, qlat))
+    * → select` over a broadcast dictionary, feature ids cast to `idType`.
+    * One top-k per page row. */
+  private def forwardTopK(docs: DataFrame, bc: Bc[graft.index.GazDictData], k: Int,
+                          dedupe: Boolean, idType: DataType): DataFrame =
     docs
       .select(col("doc_id"), explode(graft.index.GazDict.fwdTopKCol(col("text"),
         col("qlon").cast("double"), col("qlat").cast("double"), bc, k, dedupe)).as("c"))
-      .select(col("doc_id"),
-        col("c.feature_id").cast(gaz.schema("gid").dataType).as("feature_id"),
+      .select(col("doc_id"), col("c.feature_id").cast(idType).as("feature_id"),
         col("c.typ").as("typ"), col("c.relev").as("relev"), col("c.cell").as("cell"),
         col("c.ctx").as("ctx"), round(col("c.sd"), 4).as("sd"), col("c.rank").as("rank"))
-  }
+
+  /** The index cell of a gazetteer row: z12 for places, z8 otherwise. */
+  private def indexCell: Column =
+    F.cellAt(when(col("typ") === "place", lit(ZPlace)).otherwise(lit(ZRegion)), col("glon"), col("glat"))
 
   /** The staged form of [[forward]], and its over-ceiling path: the
     * gazetteer joins the token windows on name ([[mentions]]: broadcast,
@@ -638,9 +664,7 @@ object Geocode {
     * pool their mentions. */
   private[graft] def forwardStaged(docs: DataFrame, gaz: DataFrame, k: Int,
                                    dedupe: Boolean): DataFrame =
-    stackRankPages(mentions(docs, gaz).withColumn("cell",
-      F.cellAt(when(col("typ") === "place", lit(ZPlace)).otherwise(lit(ZRegion)), col("glon"), col("glat"))),
-      k, dedupe, gridCap = false)
+    stackRankPages(mentions(docs, gaz).withColumn("cell", indexCell), k, dedupe, gridCap = false)
 
   /** D1/A3/H7 at scale: forward geocode over the BUILT grid index instead of
     * a broadcast name list — the path that survives a 10^7-feature gazetteer.
@@ -676,22 +700,49 @@ object Geocode {
 
   /** [[forwardIndexed]] over a FAT grid index
     * ([[graft.index.IndexBuild.gazetteerGridFat]]): the index row carries the
-    * rank-time payload (name, typ, score, glon, glat), so D4 verify is a
-    * residual predicate of the phrase_id match join and the feature-table
-    * join is gone. The verified hits then take one doc_id exchange to the
-    * stack-and-rank kernel, which runs the F2 grid-stage prune in-row (it
-    * sees every hit of the page): two exchanges on the doc lineage, one
-    * hash join, no window and no persist.
+    * rank-time payload (name, typ, score, glon, glat), so it alone is the
+    * gazetteer. `doc_id` is the page key and must be unique and non-null,
+    * as in [[forward]].
+    *
+    * Up to [[BroadcastGazCeiling]] matchable grid rows, and with one name
+    * per phrase_id (one memoized probe per grid plan, [[gridProbe]]), it
+    * runs as [[forward]] does: ONE map-only `fwd_topk` stage over a
+    * [[graft.index.GazDictData]] built once per grid plan from the grid's
+    * own rows and cells, with the F2 [[GridStackCap]] prune applied per
+    * phrase at build time, as carmen's grid cache holds one capped list
+    * per phrase ([[graft.index.GazDict.buildFromGrid]]). Over the ceiling,
+    * or on a phrase_id shared by two names, the grid is never collected
+    * and [[forwardIndexedFatWith]]'s shuffled body runs.
     *
     * Row-identical to [[forward]] and [[forwardIndexed]] under the same
     * [[GridStackCap]]-exceeds-per-phrase-fanout condition (GeocoderSpec);
-    * verify runs BEFORE the cap here (it is free in the join), so
-    * hash-collision ghosts can never crowd real candidates out of the cap. */
+    * verify runs BEFORE the cap (a row whose phrase_id is not its name's
+    * never matches), so hash-collision ghosts can never crowd real
+    * candidates out of the cap. */
   def forwardIndexedFat(docs: DataFrame, fatGrid: DataFrame,
                         k: Int = 5, dedupe: Boolean = false,
                         dictCeiling: Long = BroadcastDictCeiling): DataFrame =
-    stackRankPages(fatGridMatch(docs, fatGrid, dictCeiling).withColumnRenamed("feature_id", "gid"),
-      k, dedupe, gridCap = true)
+    forwardIndexedFatWith(docs, fatGrid, k, dedupe, dictCeiling, BroadcastGazCeiling)
+
+  /** [[forwardIndexedFat]] with its broadcast ceiling as a parameter; the
+    * over-ceiling body is the shuffled grid match and the test reference:
+    * D4 verify is a residual predicate of the phrase_id match join (no
+    * feature-table join), then the verified hits take one doc_id exchange
+    * to the stack-and-rank kernel, which runs the F2 grid-stage prune
+    * in-row (it sees every hit of the page): two exchanges on the doc
+    * lineage, one hash join, no window and no persist. Rows sharing a
+    * `doc_id` pool their hits. `dictCeiling` tiers this path's phrase
+    * prefilter only. */
+  private[graft] def forwardIndexedFatWith(docs: DataFrame, fatGrid: DataFrame, k: Int,
+                                           dedupe: Boolean, dictCeiling: Long,
+                                           gridCeiling: Long): DataFrame = {
+    val probe = gridProbe(fatGrid)
+    if (probe.namesPerPhrase <= 1 && probe.rows <= gridCeiling)
+      forwardTopK(docs, gridDict(fatGrid, probe.rows), k, dedupe, fatGrid.schema("feature_id").dataType)
+    else
+      stackRankPages(fatGridMatch(docs, fatGrid, dictCeiling).withColumnRenamed("feature_id", "gid"),
+        k, dedupe, gridCap = true)
+  }
 
   /** The at-scale N-level forward: [[coalesceN]]'s chain construction fed
     * from the FAT grid index ([[graft.index.IndexBuild.gazetteerGridFatLevels]])

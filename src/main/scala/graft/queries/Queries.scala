@@ -264,9 +264,10 @@ object Queries {
     spark.read.parquet(p)
   }
 
-  /** Forward geocode over the FAT grid index: D4 verify in-row, no feature
-    * join — one fewer big-side exchange than fwd_geocode_indexed. Row-
-    * identical to fwd_geocode, shares its oracle. */
+  /** Forward geocode over the FAT grid index: no feature join; under the
+    * broadcast ceiling one map-only stage over the grid's dictionary, over
+    * it one fewer big-side exchange than fwd_geocode_indexed. Row-identical
+    * to fwd_geocode, shares its oracle. */
   def fwdGeocodeFat(spark: SparkSession, sfDir: String): DataFrame =
     Geocode.forwardIndexedFat(docPages(spark, sfDir), gazGridFatParquet(spark))
 
@@ -296,9 +297,10 @@ object Queries {
     spark.table(GazGridBucketedTable)
   }
 
-  /** [[fwdGeocodeFat]] over the bucketed index table — same operator, the
-    * index-side exchange now eliminated by the table layout (PlanSpec pins
-    * it). Row-identical to fwd_geocode, shares its oracle. */
+  /** [[fwdGeocodeFat]] over the bucketed index table — same operator; over
+    * the broadcast ceiling the table layout eliminates the index-side
+    * exchange (PlanSpec pins it). Row-identical to fwd_geocode, shares its
+    * oracle. */
   def fwdGeocodeBucketed(spark: SparkSession, sfDir: String): DataFrame =
     Geocode.forwardIndexedFat(docPages(spark, sfDir), gazGridFatBucketed(spark))
 
@@ -1321,12 +1323,16 @@ object Queries {
     * chooses that same ancestor), so no dedup is needed; the oracle is the
     * DIRECT half-open containment join, which this must equal exactly —
     * the compare doubles as the disjointness + cover-completeness proof. */
-  def reverseCompact(spark: SparkSession, sfDir: String): DataFrame = {
+  def reverseCompact(spark: SparkSession, sfDir: String): DataFrame =
+    reverseCompactOf(spark, sfDir, Synth.eventPoints(spark, sfDir))
+
+  /** [[reverseCompact]] for any probe points (event_id, elon, elat). */
+  def reverseCompactOf(spark: SparkSession, sfDir: String, points: DataFrame): DataFrame = {
     val idx = cellCompact(spark, sfDir)
       .join(custFeatures(spark, sfDir)
         .select(col("feature_id"), col("west"), col("south"), col("east"), col("north")),
         "feature_id")
-    val pts = Synth.eventPoints(spark, sfDir)
+    val pts = points
       .withColumn("cell8", F.cellAt(lit(8), col("elon"), col("elat")))
     pts
       .withColumn("g", explode(sequence(lit(CompactMinZ), lit(8))))

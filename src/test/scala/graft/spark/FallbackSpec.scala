@@ -44,10 +44,11 @@ class FallbackSpec extends SparkTestBase {
     assert(n >= 2, "fixture must have a multi-phrase dictionary")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
-    val exact = Geocode.forwardIndexedFat(docs, grid)
+    // the shuffled grid path, where the prefilter runs
+    val exact = fatShuffled(docs, grid)
     // dict in (ceil, 8*ceil] → tier 2 (Bloom); beyond 8*ceil → tier 3 (none)
-    val bloom = Geocode.forwardIndexedFat(docs, grid, dictCeiling = n - 1)
-    val none = Geocode.forwardIndexedFat(docs, grid, dictCeiling = 0)
+    val bloom = fatShuffled(docs, grid, dictCeiling = n - 1)
+    val none = fatShuffled(docs, grid, dictCeiling = 0)
     assert(exact.queryExecution.executedPlan.toString.contains("long_set_contains"))
     assert(bloom.queryExecution.executedPlan.toString.contains("bloom_might_contain"))
     val noPlan = none.queryExecution.executedPlan.toString
@@ -78,6 +79,12 @@ class FallbackSpec extends SparkTestBase {
   }
 
   private type DF = org.apache.spark.sql.DataFrame
+
+  /** [[Geocode.forwardIndexedFat]]'s shuffled body: with a grid ceiling
+    * of 0 the grid is never collected. */
+  private def fatShuffled(docs: DF, grid: DF, k: Int = 5, dedupe: Boolean = false,
+                          dictCeiling: Long = Geocode.BroadcastDictCeiling): DF =
+    Geocode.forwardIndexedFatWith(docs, grid, k, dedupe, dictCeiling, gridCeiling = 0)
 
   /** Column types and sorted rows. */
   private def typedRows(df: DF) =
@@ -459,11 +466,11 @@ class FallbackSpec extends SparkTestBase {
         case e: graft.index.CellIndex.LongSetContains => e.bc.id
         case b: graft.index.CellIndex.BloomMightContain => b.bc.id
       }))
-    val exact = Seq(Geocode.forwardIndexedFat(docs, grid), Geocode.forwardIndexedFat(docs.limit(5), grid, 3))
+    val exact = Seq(fatShuffled(docs, grid), fatShuffled(docs.limit(5), grid, 3))
       .flatMap(prefilterIds)
     assert(exact.size == 2 && exact.distinct.size == 1, exact.toString)
-    val bloom = Seq(Geocode.forwardIndexedFat(docs, grid, dictCeiling = n - 1),
-      Geocode.forwardIndexedFat(docs.limit(5), grid, dictCeiling = n - 1)).flatMap(prefilterIds)
+    val bloom = Seq(fatShuffled(docs, grid, dictCeiling = n - 1),
+      fatShuffled(docs.limit(5), grid, dictCeiling = n - 1)).flatMap(prefilterIds)
     assert(bloom.size == 2 && bloom.distinct.size == 1 && bloom.head != exact.head, bloom.toString)
   }
 
@@ -473,24 +480,28 @@ class FallbackSpec extends SparkTestBase {
                        k: Int, dedupe: Boolean) =
     Geocode.rank(Geocode.coalesce2(Geocode.mentions(docs, gaz)), k, dedupe)
 
-  /** forwardStaged, forwardIndexedFat and forwardIndexed over grids built
-    * from `gaz` ≡ `want` (default: [[composed]]) on sorted row lists, types
-    * included; returns the rows. */
+  /** forwardStaged, forwardIndexedFat (shuffled, and fused unless `docs`
+    * repeat a doc_id: the fused path keeps one top-k per page row) and
+    * forwardIndexed over grids built from `gaz` ≡ `want` (default:
+    * [[composed]]) on sorted row lists, types included; returns the rows. */
   private def assertKernelPaths(what: String, docs: org.apache.spark.sql.DataFrame,
                                 gaz: org.apache.spark.sql.DataFrame, k: Int, dedupe: Boolean,
-                                want: Option[org.apache.spark.sql.DataFrame] = None): Seq[String] = {
+                                want: Option[org.apache.spark.sql.DataFrame] = None,
+                                pooled: Boolean = false): Seq[String] = {
     import graft.index.IndexBuild
     val ref = want.getOrElse(composed(docs, gaz, k, dedupe))
     val expected = fwdRows(ref)
-    Seq(
+    val fatGrid = IndexBuild.gazetteerGridFat(gaz, Geocode.ZPlace, Geocode.ZRegion)
+    (Seq(
       "staged" -> Geocode.forwardStaged(docs, gaz, k, dedupe),
-      "fat" -> Geocode.forwardIndexedFat(docs,
-        IndexBuild.gazetteerGridFat(gaz, Geocode.ZPlace, Geocode.ZRegion), k, dedupe),
+      "fat" -> fatShuffled(docs, fatGrid, k, dedupe),
       "thin" -> Geocode.forwardIndexed(docs,
-        IndexBuild.gazetteerGrid(gaz, Geocode.ZPlace, Geocode.ZRegion), gaz, k, dedupe)
+        IndexBuild.gazetteerGrid(gaz, Geocode.ZPlace, Geocode.ZRegion), gaz, k, dedupe)) ++
+      (if (pooled) Nil else Seq("fat fused" -> Geocode.forwardIndexedFat(docs, fatGrid, k, dedupe)))
     ).foreach { case (path, df) =>
       val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("GroupKernel") && !plan.contains("InMemoryTableScan"), s"$what, $path:\n$plan")
+      if (path == "fat fused") assertMapOnly(s"$what, $path", df, "fwd_topk")
+      else assert(plan.contains("GroupKernel") && !plan.contains("InMemoryTableScan"), s"$what, $path:\n$plan")
       assert(df.schema.map(f => (f.name, f.dataType)) == ref.schema.map(f => (f.name, f.dataType)),
         s"$what, $path")
       assert(fwdRows(df) == expected, s"$what, $path")
@@ -515,8 +526,9 @@ class FallbackSpec extends SparkTestBase {
     }
     val bucketed = graft.queries.Queries.gazGridFatBucketed(spark)
     Seq(1, 30).foreach { k =>
-      assert(fwdRows(Geocode.forwardIndexedFat(docs, bucketed, k)) == fwdRows(composed(docs, gaz, k, false)),
-        s"bucketed k = $k")
+      val want = fwdRows(composed(docs, gaz, k, false))
+      assert(fwdRows(Geocode.forwardIndexedFat(docs, bucketed, k)) == want, s"bucketed k = $k")
+      assert(fwdRows(fatShuffled(docs, bucketed, k)) == want, s"bucketed shuffled k = $k")
     }
   }
 
@@ -543,7 +555,8 @@ class FallbackSpec extends SparkTestBase {
       (1L, "zone park spark", Some(10.0), Some(20.0))
     ).toDF("doc_id", "text", "qlon", "qlat")
     Seq((50, false), (50, true), (1, false)).foreach { case (k, dedupe) =>
-      assert(assertKernelPaths(s"edge gazetteer k = $k dedupe = $dedupe", docs, gaz, k, dedupe).nonEmpty)
+      assert(assertKernelPaths(s"edge gazetteer k = $k dedupe = $dedupe", docs, gaz, k, dedupe,
+        pooled = true).nonEmpty)
     }
     val rows = Geocode.forwardStaged(docs, gaz, 50, dedupe = false).collect()
     val hashJoin = Synth.places.find(_.name == "hash join").get
@@ -569,14 +582,113 @@ class FallbackSpec extends SparkTestBase {
         .partitionBy(col("doc_id"), col("name"), col("typ"))
         .orderBy(IndexBuild.relevQ(lit(1.0)).desc, IndexBuild.scoreQ(col("score")).desc, col("gid").asc)))
       .filter(col("gr") <= Geocode.GridStackCap).drop("gr")), 30)
-    val fat = Geocode.forwardIndexedFat(page,
-      IndexBuild.gazetteerGridFat(metroGaz, Geocode.ZPlace, Geocode.ZRegion), 30)
+    val metroGrid = IndexBuild.gazetteerGridFat(metroGaz, Geocode.ZPlace, Geocode.ZRegion)
     val thin = Geocode.forwardIndexed(page,
       IndexBuild.gazetteerGrid(metroGaz, Geocode.ZPlace, Geocode.ZRegion), metroGaz, 30)
     val want = fwdRows(capped)
-    assert(fwdRows(fat) == want && fwdRows(thin) == want)
-    val ids = fat.collect().map(_.getLong(1)).toSet
-    assert(ids.count(_ > 2060L) == 4 && ids.contains(2064L) && !ids.contains(2065L), ids.toString)
+    assert(fwdRows(thin) == want)
+    // the shuffled fat path caps in the kernel, the fused one at build time
+    Seq("fat" -> fatShuffled(page, metroGrid, 30), "fat fused" -> Geocode.forwardIndexedFat(page, metroGrid, 30))
+      .foreach { case (path, fat) =>
+        assert(fwdRows(fat) == want, path)
+        val ids = fat.collect().map(_.getLong(1)).toSet
+        assert(ids.count(_ > 2060L) == 4 && ids.contains(2064L) && !ids.contains(2065L), s"$path: $ids")
+      }
     assert(want != fwdRows(composed(page, metroGaz, 30, dedupe = false)), "the cap must bite")
+  }
+
+  /** A hand-built grid row: (feature_id, name, typ, score, glon, glat,
+    * relev_q, score_q, the phrase the row's phrase_id hashes, or null). */
+  private type R = (Option[Long], String, String, Option[Double], Option[Double], Option[Double],
+    Option[Int], Option[Int], String)
+
+  /** A hand-built fat grid (IndexBuild.gazetteerGridFat's columns), cells
+    * at `zPlace`/`zRegion`. */
+  private def handGrid(zPlace: Int, zRegion: Int): DF = {
+    import spark.implicits._
+    val r0 = Synth.regions(0); val r1 = Synth.regions(1)
+    val hashJoin = Synth.places.find(_.name == "hash join").get
+    def row(g: Long, name: String, typ: String, score: Double, lon: Double, lat: Double): R =
+      (Some(g), name, typ, Some(score), Some(lon), Some(lat), Some(3), Some(3), name)
+    val rows: Seq[R] = Seq(
+      row(101L, "zone", "region", 4.0, r0.lon, r0.lat),
+      row(102L, "zone", "region", 9.0, r1.lon, r1.lat),
+      row(103L, "park", "place", 11.0, r0.lon + 0.01, r0.lat + 0.01),
+      row(104L, "hash join", "place", 7.0, hashJoin.lon, hashJoin.lat),
+      row(105L, "data", "region", 2.0, r0.lon, r0.lat),
+      // phrase_id ≠ xxhash64(name): "zone"'s windows find it, verify drops it
+      row(110L, "park", "place", 99.0, r0.lon, r0.lat).copy(_9 = "zone"),
+      row(111L, "data", "place", 99.0, r0.lon, r0.lat).copy(_9 = null),
+      // null name, null typ, a typ that is no candidate
+      row(112L, null, "place", 99.0, r0.lon, r0.lat).copy(_9 = "park"),
+      row(113L, "park", null, 99.0, r0.lon, r0.lat),
+      row(114L, "data", "country", 99.0, r0.lon, r0.lat),
+      // null gid, score and coordinates
+      row(115L, "cove", "region", 5.0, r0.lon, r0.lat).copy(_1 = None),
+      row(116L, "bay", "place", 0.0, r0.lon + 0.01, r0.lat).copy(_4 = None, _6 = None),
+      row(117L, "cove", "place", 3.0, r0.lon, r0.lat).copy(_5 = None)) ++
+      // 71 "metro" places past the cap of 64: the 60 at relev_q 3 stay, then
+      // 4 of the 11 at a null relev_q by (score_q desc nulls last, gid asc
+      // nulls first): gid 1, 5, 7 (score_q 1) and the null gid (score_q 0)
+      // beat gid 2 (score_q 0)
+      (1 to 70).map { i =>
+        (Some(if (i <= 10) i.toLong else 3000L + i), "metro", "place", Some(1.0 + i), Some(-150.0 + i),
+          Some(20.0), if (i <= 10) None else Some(3), if (i % 3 == 0) None else Some(i % 2), "metro"): R
+      } :+
+      ((None, "metro", "place", Some(5.0), Some(-100.0), Some(20.0), None, Some(0), "metro"): R)
+    rows.toDF("feature_id", "name", "typ", "score", "glon", "glat", "relev_q", "score_q", "pid")
+      .withColumn("phrase_id", when(col("pid").isNotNull, xxhash64(col("pid"))))
+      .withColumn("cell", graft.functions.F.cellAt(
+        when(col("typ") === "place", lit(zPlace)).otherwise(lit(zRegion)), col("glon"), col("glat")))
+      .drop("pid")
+  }
+
+  test("forwardIndexedFat: the fused grid dictionary ≡ the shuffled grid path on a hand-built grid") {
+    import spark.implicits._
+    val r0 = Synth.regions(0)
+    val docs = Seq[(Long, String, Option[Double], Option[Double])](
+      (1L, "metro zone park data hash join", Some(r0.lon), Some(r0.lat)),
+      (2L, null, Some(0.0), Some(0.0)),
+      (3L, "park zone cove bay", Some(r0.lon), None),
+      (4L, "hash join x metro cove", None, None),
+      (5L, "", Some(1.0), Some(1.0))
+    ).toDF("doc_id", "text", "qlon", "qlat")
+    Seq((Geocode.ZPlace, Geocode.ZRegion), (13, 7)).foreach { case (zp, zr) =>
+      val grid = handGrid(zp, zr)
+      Seq((80, false), (80, true), (1, false)).foreach { case (k, dedupe) =>
+        val what = s"z$zp/z$zr k = $k dedupe = $dedupe"
+        val fused = Geocode.forwardIndexedFat(docs, grid, k, dedupe)
+        assertMapOnly(what, fused, "fwd_topk")
+        val a = typedRows(fused)
+        assert(a == typedRows(fatShuffled(docs, grid, k, dedupe)), what)
+        assert(a._2.nonEmpty, what)
+      }
+      val rows = Geocode.forwardIndexedFat(docs, grid, 80).collect()
+      def fids(doc: Long) = rows.filter(_.getLong(0) == doc).map(r => if (r.isNullAt(1)) -1L else r.getLong(1))
+      assert(fids(1L).count(_ != 104L) == 64 + 4, s"64 capped metros, 2 zones, park, data: ${fids(1L).sorted.toSeq}")
+      assert(Set(1L, 5L, 7L, -1L).subsetOf(fids(1L).toSet) && !fids(1L).contains(2L), "the cap's boundary")
+      assert(!rows.exists(r => !r.isNullAt(1) && (110L to 114L).contains(r.getLong(1))),
+        "rows no window can match never become candidates")
+      assert(fids(2L).isEmpty && fids(5L).isEmpty, "null and empty text have no mentions")
+      assert(rows.exists(r => !r.isNullAt(1) && r.getLong(1) == 116L && r.isNullAt(4) && r.isNullAt(6)))
+      // doc_id is the page key: a repeated page row gets its own top-k
+      val all = fwdRows(Geocode.forwardIndexedFat(docs, grid, 80))
+      val twice = docs.union(docs.filter(col("doc_id") === 1L))
+      assert(fwdRows(Geocode.forwardIndexedFat(twice, grid, 80)) == (all ++ all.filter(_.startsWith("[1,"))).sorted)
+      assert(Geocode.forwardIndexedFat(docs.limit(0), grid).collect().isEmpty)
+      assert(Geocode.forwardIndexedFat(docs, grid.limit(0)).collect().isEmpty)
+    }
+  }
+
+  test("forwardIndexedFat: the grid probe counts matchable rows and flags a phrase_id two names share") {
+    import spark.implicits._
+    import graft.index.GazDict
+    val shared = Seq((1L, "a"), (1L, "b"), (1L, "a"), (2L, "c")).toDF("phrase_id", "name")
+    assert(GazDict.probe(shared) == GazDict.GridProbe(4, 2))
+    assert(GazDict.probe(shared.filter(col("name") =!= "b")) == GazDict.GridProbe(3, 1))
+    assert(GazDict.probe(shared.limit(0)) == GazDict.GridProbe(0, 0))
+    // gids 110..114 of the hand grid can never match: 71 metros + 8 others
+    assert(Geocode.gridProbe(handGrid(Geocode.ZPlace, Geocode.ZRegion)) == GazDict.GridProbe(71 + 8, 1))
+    assert(Geocode.gridProbe(graft.queries.Queries.gazGridFatParquet(spark)).namesPerPhrase == 1)
   }
 }

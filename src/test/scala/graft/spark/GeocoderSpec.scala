@@ -316,6 +316,28 @@ class GeocoderSpec extends SparkTestBase {
     assert(a == b)
   }
 
+  test("reverse_pip, reverse_bcast, reverse_salted, reverse_compact ≡ a brute half-open rect test at sf0.001") {
+    val sf = "/root/testdata/sf0.001"
+    val cust = Synth.custFeatures(spark, sf)
+    val events = Synth.eventPoints(spark, sf)
+    // no sf0.001 event falls in a customer rect: each rect's centre joins
+    // the events as a probe point, so every path has hits to agree on
+    val off = events.agg(max("event_id")).head().getLong(0) + 1
+    val pts = events.union(cust.select((col("feature_id") + off).as("event_id"),
+      col("flon").as("elon"), col("flat").as("elat")))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("event_id", "feature_id").collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val brute = pairs(pts.crossJoin(cust).filter(col("elon") >= col("west") && col("elon") < col("east") &&
+      col("elat") >= col("south") && col("elat") < col("north")))
+    assert(brute.nonEmpty && brute.forall(_._1 >= off), "only the rect centres hit")
+    Seq(
+      "reverse_pip" -> Geocode.reversePip(pts, cust, 8),
+      "reverse_bcast" -> Geocode.reverseBcast(spark, pts, cust, 8),
+      "reverse_salted" -> Geocode.reversePipSalted(pts, cust, 8, s = 4, hotK = 8, hotThreshold = 1000),
+      "reverse_compact" -> graft.queries.Queries.reverseCompactOf(spark, sf, pts)
+    ).foreach { case (what, df) => assert(pairs(df) == brute, what) }
+  }
+
   test("salted reverse PIP equals unsalted") {
     val pts = Synth.eventPoints(spark, "/root/testdata/sf0.001")
     val feats = Synth.custFeatures(spark, "/root/testdata/sf0.001")

@@ -10,6 +10,16 @@ class PlanSpec extends SparkTestBase {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  private val sf = "/root/testdata/sf0.001"
+
+  /** fwd_geocode_fat / fwd_geocode_bucketed on forwardIndexedFat's
+    * shuffled body (with a grid ceiling of 0 the grid is never collected). */
+  private def fatShuffled(grid: org.apache.spark.sql.DataFrame) =
+    graft.ops.Geocode.forwardIndexedFatWith(graft.synth.Synth.docPages(spark, sf), grid, 5, false,
+      graft.ops.Geocode.BroadcastDictCeiling, gridCeiling = 0)
+  private def fatShuffledParquet = fatShuffled(Queries.gazGridFatParquet(spark))
+  private def fatShuffledBucketed = fatShuffled(Queries.gazGridFatBucketed(spark))
+
   test("fwd_geocode: one map-only stage over the broadcast gazetteer dictionary") {
     val p = plan(Queries.fwdGeocode(spark, "/root/testdata/sf0.001"))
     assert(p.contains("fwd_topk"), p)
@@ -116,13 +126,24 @@ class PlanSpec extends SparkTestBase {
     assert(p.contains("ShuffledHashJoin"), "phrase_id/verify joins should shuffle-hash")
   }
 
+  test("fwd_geocode_fat and fwd_geocode_bucketed: one map-only fwd_topk stage under the broadcast ceiling") {
+    Seq("fwd_geocode_fat" -> Queries.fwdGeocodeFat(spark, sf),
+      "fwd_geocode_bucketed" -> Queries.fwdGeocodeBucketed(spark, sf)).foreach { case (what, df) =>
+      val p = plan(df)
+      assert(p.contains("fwd_topk"), s"$what:\n$p")
+      Seq("Exchange", "Join", "Sort", "Window", "InMemoryTableScan").foreach { op =>
+        assert(!p.contains(op), s"$what must be map-only, found $op:\n$p")
+      }
+    }
+  }
+
   test("fwd_geocode_fat: verify is in-row — one fewer join/exchange than the skinny index") {
     // FormattedMode lists each physical node ONCE in the details section
     // (the simple toString re-prints the persisted subtree per
     // InMemoryTableScan consumer, triple-counting the cached match join)
     def fmt(df: org.apache.spark.sql.DataFrame): String =
       df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-    val pFat = fmt(Queries.fwdGeocodeFat(spark, "/root/testdata/sf0.001"))
+    val pFat = fmt(fatShuffledParquet)
     val pSkinny = fmt(Queries.fwdGeocodeIndexed(spark, "/root/testdata/sf0.001"))
     assert(!pFat.contains("BroadcastHashJoin") && !pFat.contains("BroadcastNestedLoopJoin"),
       "fat-index path must not broadcast the index in any form")
@@ -152,8 +173,8 @@ class PlanSpec extends SparkTestBase {
   test("fwd_geocode_bucketed: the bucketed index arrives pre-partitioned — one fewer exchange") {
     def fmt(df: org.apache.spark.sql.DataFrame): String =
       df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-    val pBuck = fmt(Queries.fwdGeocodeBucketed(spark, "/root/testdata/sf0.001"))
-    val pFat = fmt(Queries.fwdGeocodeFat(spark, "/root/testdata/sf0.001"))
+    val pBuck = fmt(fatShuffledBucketed)
+    val pFat = fmt(fatShuffledParquet)
     def nExch(p: String) = "\\(\\d+\\) Exchange".r.findAllIn(p).size
     assert(pBuck.contains("SelectedBucketsCount"),
       s"index scan must be a bucketed scan:\n${pBuck.take(800)}")
@@ -161,8 +182,8 @@ class PlanSpec extends SparkTestBase {
       s"bucket layout must eliminate exactly the index-side exchange (${nExch(pBuck)} vs ${nExch(pFat)})")
     // row-identity with the parquet fat path (both share fwd_geocode's oracle,
     // but the bucketed catalog table never reaches the DuckDB gate directly)
-    val a = Queries.fwdGeocodeBucketed(spark, "/root/testdata/sf0.001").collect().toSet
-    val b = Queries.fwdGeocodeFat(spark, "/root/testdata/sf0.001").collect().toSet
+    val a = fatShuffledBucketed.collect().toSet
+    val b = fatShuffledParquet.collect().toSet
     assert(a == b, "bucketed path must be row-identical to the fat parquet path")
   }
 
