@@ -115,13 +115,14 @@ final class Geocoder(spark: SparkSession, gaz: DataFrame,
     *
     * Under the cover and point ceilings this is ONE map-only select: the
     * `context_cover` kernel gives the point's hits, and a point without one
-    * runs the `knn_rings` kernel and the shared nearest pick in the same
-    * row, inside a CASE branch — no exchange, join, aggregate, window or
-    * persist. The cover indexes and the point index (32 B per point, two
-    * cover entries) share the [[Geocode.BroadcastCoverCeiling]] budget;
-    * past it, or past [[Geocode.BroadcastPointCeiling]], the staged
-    * composition runs: the staged chain, an anti-join for the unmatched
-    * points and [[Geocode.knnExpanding]]; rows are identical (FallbackSpec). */
+    * takes its nearest feature from the `knn_rings` kernel in the same
+    * row, inside a CASE branch — no exchange, join, aggregate, window,
+    * persist or candidate array. The cover indexes and the point index
+    * (32 B per point, two cover entries) share the
+    * [[Geocode.BroadcastCoverCeiling]] budget; past it, or past
+    * [[Geocode.BroadcastPointCeiling]], the staged composition runs: the
+    * staged chain, an anti-join for the unmatched points and
+    * [[Geocode.knnExpanding]]; rows are identical (FallbackSpec). */
   def reverse(points: DataFrame,
               typed: Seq[(String, DataFrame, Int)],
               knnZ: Int = 8): DataFrame =
@@ -140,7 +141,7 @@ final class Geocoder(spark: SparkSession, gaz: DataFrame,
         def hit(typ: Column, fid: Column, via: String) =
           struct(typ.as("typ"), fid.as("feature_id"), lit(via).as("via"))
         val pip = transform(col("pip"), h => hit(h("typ"), h("feature_id"), "pip"))
-        val knn = transform(rings, k => hit(lit(knnTyp), Geocode.nearest(k("cands"))("feature_id"), "knn"))
+        val knn = transform(rings, k => hit(lit(knnTyp), k("feature_id"), "knn"))
         points
           .select(col("event_id"), col("elon"), col("elat"), cover.as("pip"))
           .select(col("event_id"), explode(when(size(col("pip")) > 0, pip).otherwise(knn)).as("r"))

@@ -100,34 +100,18 @@ object CellMath {
     * clamped to the grid (no antimeridian wrap in v1; points near the
     * dateline simply see a truncated ring). r=0 returns the cell itself.
     * Used by the kNN ring-expansion reverse geocode (SURVEY.md §2.D6). */
-  def ringCells(cell: Long, r: Int): Array[Long] = {
-    val z = zOf(cell); val x = xOf(cell); val y = yOf(cell)
-    val max = (1L << z) - 1
-    if (r == 0) return Array(cell)
-    val buf = new scala.collection.mutable.ArrayBuffer[Long](8 * r)
-    var dx = -r
-    while (dx <= r) {
-      var dy = -r
-      while (dy <= r) {
-        if (math.max(math.abs(dx), math.abs(dy)) == r) {
-          val nx = x + dx; val ny = y + dy
-          if (nx >= 0 && nx <= max && ny >= 0 && ny <= max)
-            buf += pack(z, nx, ny)
-        }
-        dy += 1
-      }
-      dx += 1
-    }
-    buf.toArray
-  }
+  def ringCells(cell: Long, r: Int): Array[Long] =
+    if (r < 0) Array.emptyLongArray else annulusCells(cell, r - 1, r)
 
   /** All cells within Chebyshev distance r (disk = rings 0..r). */
   def diskCells(cell: Long, r: Int): Array[Long] =
-    (0 to r).iterator.flatMap(ringCells(cell, _)).toArray
+    if (r < 0) Array.emptyLongArray else annulusCells(cell, -1, r)
 
   /** Cells with Chebyshev distance in (rIn, rOut] — the annulus between two
-    * disks (rIn = -1 degenerates to the full disk). One pass over the outer
-    * square, skipping the inner square, same clamping as [[ringCells]].
+    * disks (rIn = -1 degenerates to the full disk), ring by ring, each
+    * ring by dx then dy ascending, clamped to the grid like [[ringCells]].
+    * Written into one primitive array of the unclamped size, trimmed once
+    * when the grid edge clamps it.
     * Used by the expanding-ring kNN's over-ceiling round loop (and the
     * `knn_disk` query): a residual point's previous disk is
     * provably feature-free, so the next round probes only the new annulus
@@ -136,30 +120,26 @@ object CellMath {
     require(rIn < rOut, s"annulus needs rIn < rOut, got ($rIn, $rOut)")
     val z = zOf(cell); val x = xOf(cell); val y = yOf(cell)
     val max = (1L << z) - 1
-    val buf = new scala.collection.mutable.ArrayBuffer[Long](
-      (2 * rOut + 1) * (2 * rOut + 1) - (2 * math.max(rIn, -1) + 1) * (2 * math.max(rIn, -1) + 1))
-    var d = rIn + 1
-    // ring-by-ring (coarse→fine ordering matches diskCells for rIn = -1)
+    val inner = if (rIn < 0) 0L else 2L * rIn + 1
+    val out = new Array[Long](Math.toIntExact((2L * rOut + 1) * (2L * rOut + 1) - inner * inner))
+    var k = 0
+    var d = math.max(rIn + 1, 0)
     while (d <= rOut) {
-      if (d == 0) buf += cell
+      if (d == 0) { out(k) = cell; k += 1 }
       else {
-        var dx = -d
-        while (dx <= d) {
-          var dy = -d
-          while (dy <= d) {
-            if (math.max(math.abs(dx), math.abs(dy)) == d) {
-              val nx = x + dx; val ny = y + dy
-              if (nx >= 0 && nx <= max && ny >= 0 && ny <= max)
-                buf += pack(z, nx, ny)
-            }
-            dy += 1
+        var nx = math.max(x - d, 0L)
+        while (nx <= math.min(x + d, max)) {
+          var ny = math.max(y - d, 0L)
+          while (ny <= math.min(y + d, max)) {
+            if (math.max(math.abs(nx - x), math.abs(ny - y)) == d) { out(k) = pack(z, nx, ny); k += 1 }
+            ny += 1
           }
-          dx += 1
+          nx += 1
         }
       }
       d += 1
     }
-    buf.toArray
+    if (k == out.length) out else java.util.Arrays.copyOf(out, k)
   }
 
   // ---- Hilbert curve (sort/partition key; SURVEY.md §2.H4) ----

@@ -682,6 +682,17 @@ object Geo {
     2.0 * EarthRadiusKm * math.asin(math.min(1.0, math.sqrt(a)))
   }
 
+  /** [[graft.functions.F.haversineKm]] bit for bit: its operation order,
+    * Spark's `StrictMath.pow` and `Math.sin/cos/asin/sqrt`, and `least(1.0,
+    * x)`, which keeps 1.0 for a NaN x (Spark orders NaN above numbers). */
+  def sparkHaversineKm(lon1: Double, lat1: Double, lon2: Double, lat2: Double): Double = {
+    val p = math.Pi / 180.0
+    val a = StrictMath.pow(math.sin((lat2 - lat1) * p / 2), 2) +
+      math.cos(lat1 * p) * math.cos(lat2 * p) * StrictMath.pow(math.sin((lon2 - lon1) * p / 2), 2)
+    val s = math.sqrt(a)
+    2.0 * EarthRadiusKm * math.asin(if (s < 1.0) s else 1.0)
+  }
+
   /** Frozen proximity decay (FIXTURES.md; reference constants live in
     * upstream `lib/util/proximity.js` [U~] and are re-derived when the
     * reference tree appears). Pure rational arithmetic — no transcendentals —

@@ -75,7 +75,7 @@ object Exprs {
     override def nullIntolerant: Boolean = true
     override def prettyName: String = "ring_cells"
     override def nullSafeEval(cell: Any, r: Any): Any =
-      new GenericArrayData(CellMath.ringCells(cell.asInstanceOf[Long], r.asInstanceOf[Int]))
+      UnsafeArrayData.fromPrimitiveArray(CellMath.ringCells(cell.asInstanceOf[Long], r.asInstanceOf[Int]))
     override protected def withNewChildrenInternal(l: Expression, r: Expression): RingCells =
       copy(left = l, right = r)
   }
@@ -87,7 +87,7 @@ object Exprs {
     override def nullIntolerant: Boolean = true
     override def prettyName: String = "disk_cells"
     override def nullSafeEval(cell: Any, r: Any): Any =
-      new GenericArrayData(CellMath.diskCells(cell.asInstanceOf[Long], r.asInstanceOf[Int]))
+      UnsafeArrayData.fromPrimitiveArray(CellMath.diskCells(cell.asInstanceOf[Long], r.asInstanceOf[Int]))
     override protected def withNewChildrenInternal(l: Expression, r: Expression): DiskCells =
       copy(left = l, right = r)
   }
@@ -102,7 +102,7 @@ object Exprs {
     override def nullIntolerant: Boolean = true
     override def prettyName: String = "annulus_cells"
     override def nullSafeEval(cell: Any, rIn: Any, rOut: Any): Any =
-      new GenericArrayData(CellMath.annulusCells(
+      UnsafeArrayData.fromPrimitiveArray(CellMath.annulusCells(
         cell.asInstanceOf[Long], rIn.asInstanceOf[Int], rOut.asInstanceOf[Int]))
     override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): AnnulusCells =
       copy(first = f, second = s, third = t)

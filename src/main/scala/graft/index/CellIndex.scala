@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftshim.ColumnBridge
@@ -64,30 +64,47 @@ final class CellIndexData(val cells: Array[Long], val fids: Array[Long],
 }
 
 /** The kNN fallback's feature-point index: every feature point as parallel
-  * arrays sorted by (cell at one zoom, feature_id), so a cell's features
-  * are one binary-searched slice. 32 B/point. */
+  * arrays sorted by (cell at one zoom, feature_id). 32 B/point. The
+  * `z:5|x:28|y:28` packing makes a disk's grid column (x, ylo..yhi) one key
+  * range `[pack(z, x, ylo), pack(z, x, yhi) + 1)` — at y = 2^28 − 1 the
+  * `+ 1` carries into x, still the right bound — so [[nearest]] walks
+  * disk(r) as 2r + 1 ranges, two binary searches each (GeoBlocks). */
 final class PointIndexData(val cells: Array[Long], val fids: Array[Long],
                            val lons: Array[Double], val lats: Array[Double])
     extends Serializable {
 
-  /** Index range of the features in `cell`. */
-  private def slice(cell: Long): Range =
-    CellIndex.lowerBound(cells, cell) until CellIndex.lowerBound(cells, cell + 1)
-
-  /** Smallest Chebyshev ring d in 0..maxR around `cell` that holds a
-    * feature, or -1 ([[CellMath.ringCells]], so grid-clamped). */
-  def firstRing(cell: Long, maxR: Int): Int =
-    (0 to maxR).find(d => CellMath.ringCells(cell, d).exists(slice(_).nonEmpty)).getOrElse(-1)
-
-  /** Indexes of the features in disk(r) around `cell`, grid-clamped. */
-  def disk(cell: Long, r: Int): Array[Int] = CellMath.diskCells(cell, r).flatMap(slice)
+  /** Index of the least feature of disk(r) around `cell`, grid-clamped
+    * as [[CellMath.diskCells]], by ([[Geo.sparkHaversineKm]] from (lon,
+    * lat), feature_id) — doubles compared as Spark's struct ordering does,
+    * `==` first, then `Double.compare` — or -1 when the disk is empty. */
+  def nearest(cell: Long, lon: Double, lat: Double, r: Int): Int = {
+    val z = CellMath.zOf(cell); val x = CellMath.xOf(cell); val y = CellMath.yOf(cell)
+    val max = (1L << z) - 1
+    val ylo = math.max(0L, y - r); val yhi = math.min(max, y + r)
+    var best = -1; var bestD = 0.0
+    var cx = math.max(0L, x - r); var from = 0
+    while (cx <= math.min(max, x + r)) {
+      var i = CellIndex.lowerBound(cells, CellMath.pack(z, cx, ylo), from)
+      from = CellIndex.lowerBound(cells, CellMath.pack(z, cx, yhi) + 1, i)
+      while (i < from) {
+        val d = Geo.sparkHaversineKm(lon, lat, lons(i), lats(i))
+        if (best < 0 || (if (d == bestD) fids(i) < fids(best) else java.lang.Double.compare(d, bestD) < 0)) {
+          best = i; bestD = d
+        }
+        i += 1
+      }
+      cx += 1
+    }
+    best
+  }
 }
 
 object CellIndex {
 
-  /** First index of `cells` (ascending) holding a value >= key. */
-  private[index] def lowerBound(cells: Array[Long], key: Long): Int = {
-    var lo = 0; var hi = cells.length
+  /** First index of `cells` (ascending) at or after `from` holding a
+    * value >= key. */
+  private[index] def lowerBound(cells: Array[Long], key: Long, from: Int = 0): Int = {
+    var lo = from; var hi = cells.length
     while (lo < hi) {
       val mid = (lo + hi) >>> 1
       if (cells(mid) < key) lo = mid + 1 else hi = mid
@@ -150,41 +167,42 @@ object CellIndex {
     new PointIndexData(cells.result(), fids.result(), lons.result(), lats.result())
   }
 
-  private val KnnCandType: StructType = new StructType()
+  private val KnnType: StructType = new StructType()
+    .add("radius", IntegerType, nullable = false)
     .add("feature_id", LongType, nullable = false)
-    .add("flon", DoubleType, nullable = false)
-    .add("flat", DoubleType, nullable = false)
+    .add("dist", DoubleType, nullable = false)
 
-  /** knn_rings(cell): the closed form of the expanding-ring kNN over a
-    * broadcast [[PointIndexData]]. With d the smallest Chebyshev ring
-    * holding a feature and r* the smallest ladder radius >= d, returns
-    * `[struct(radius = r*, cands = features in disk(r*))]`, or `[]` when
-    * disk(radii.last) is empty — a 0/1-element array consumed by explode,
-    * so the optimizer can never inline the kernel into two consumers. */
-  case class KnnRings(child: Expression, bc: Broadcast[PointIndexData], radii: Seq[Int])
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = ArrayType(new StructType()
-      .add("radius", IntegerType, nullable = false)
-      .add("cands", ArrayType(KnnCandType, containsNull = false), nullable = false),
-      containsNull = false)
+  /** knn_rings(cell, elon, elat): the closed form of the expanding-ring
+    * kNN over a broadcast [[PointIndexData]]. With r* the first ladder
+    * radius whose disk around `cell` holds a feature, returns
+    * `[struct(radius = r*, feature_id, dist)]` for that disk's
+    * [[PointIndexData.nearest]] feature, or `[]` when disk(radii.last) is
+    * empty — a 0/1-element array consumed by explode, so the optimizer can
+    * never inline the kernel into two consumers. */
+  case class KnnRings(first: Expression, second: Expression, third: Expression,
+                      bc: Broadcast[PointIndexData], radii: Seq[Int])
+      extends TernaryExpression with CodegenFallback {
+    override def dataType: DataType = ArrayType(KnnType, containsNull = false)
     override def nullIntolerant: Boolean = true
     override def prettyName: String = "knn_rings"
-    override def nullSafeEval(c: Any): Any = {
+    @transient private lazy val ladder = radii.toArray
+    override def nullSafeEval(c: Any, lo: Any, la: Any): Any = {
       val idx = bc.value
-      val cell = c.asInstanceOf[Long]
-      val d = idx.firstRing(cell, radii.last)
-      if (d < 0) return new GenericArrayData(Array.empty[Any])
-      val r = radii.find(_ >= d).get
-      val cands = idx.disk(cell, r).map { i =>
-        InternalRow(idx.fids(i), idx.lons(i), idx.lats(i)): Any
-      }
-      new GenericArrayData(Array[Any](InternalRow(r, new GenericArrayData(cands))))
+      val cell = c.asInstanceOf[Long]; val lon = lo.asInstanceOf[Double]; val lat = la.asInstanceOf[Double]
+      var t = 0; var i = -1
+      while (i < 0 && t < ladder.length) { i = idx.nearest(cell, lon, lat, ladder(t)); t += 1 }
+      if (i < 0) new GenericArrayData(Array.empty[Any])
+      else new GenericArrayData(Array[Any](InternalRow(ladder(t - 1), idx.fids(i),
+        Geo.sparkHaversineKm(lon, lat, idx.lons(i), idx.lats(i)))))
     }
-    override protected def withNewChildInternal(c: Expression): KnnRings = copy(child = c)
+    override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): KnnRings =
+      copy(first = f, second = s, third = t)
   }
 
-  def knnRingsCol(cell: Column, bc: Broadcast[PointIndexData], radii: Seq[Int]): Column =
-    ColumnBridge.column(KnnRings(ColumnBridge.expression(cell), bc, radii))
+  def knnRingsCol(cell: Column, lon: Column, lat: Column, bc: Broadcast[PointIndexData],
+                  radii: Seq[Int]): Column =
+    ColumnBridge.column(KnnRings(ColumnBridge.expression(cell), ColumnBridge.expression(lon),
+      ColumnBridge.expression(lat), bc, radii))
 
   private val ContainType: StructType = new StructType()
     .add("typ", StringType, nullable = false)

@@ -140,7 +140,7 @@ final class StackRank {
       val m = cm(c)
       val dist =
         if (has(m, QNull | CoordNull)) NullDistKm
-        else haversineKm(qlons(m), qlats(m), lons(m), lats(m))
+        else Geo.sparkHaversineKm(qlons(m), qlats(m), lons(m), lats(m))
       sd(c) = scores(m) / (1.0 + dist / Geo.ProximityScaleKm)
       c += 1
     }
@@ -213,17 +213,6 @@ object StackRank {
   /** [[graft.functions.F.haversineKm]] when any coordinate is null:
     * Spark's `least` skips the null `sqrt(a)`, leaving asin(1.0). */
   private val NullDistKm = 2.0 * Geo.EarthRadiusKm * math.asin(1.0)
-
-  /** [[graft.functions.F.haversineKm]] with Spark's exact calls:
-    * `StrictMath.pow`, `Math.sin/cos/asin/sqrt`, and `least(1.0, x)`,
-    * which keeps 1.0 for a NaN x (Spark orders NaN above every number). */
-  private def haversineKm(lon1: Double, lat1: Double, lon2: Double, lat2: Double): Double = {
-    val p = math.Pi / 180.0
-    val a = StrictMath.pow(math.sin((lat2 - lat1) * p / 2), 2) +
-      math.cos(lat1 * p) * math.cos(lat2 * p) * StrictMath.pow(math.sin((lon2 - lon1) * p / 2), 2)
-    val s = math.sqrt(a)
-    2.0 * Geo.EarthRadiusKm * math.asin(if (s < 1.0) s else 1.0)
-  }
 
   /** The kernel over one page's candidate rows, for
     * [[graft.plans.GroupKernel]]. Row layout: doc_id, gid (long), region

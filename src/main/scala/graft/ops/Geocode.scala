@@ -46,14 +46,30 @@ object Geocode {
     * the cover ceiling's entries keeps the held arrays near ~1.5 GB. */
   final val BroadcastGazCeiling = BroadcastCoverCeiling / 5
 
+  /** The key of every plan memo below: a frame's canonicalized plan
+    * OBJECT (structural equality, which covers a LocalRelation's rows; the
+    * 32-bit semantic hash can collide) and the (path, length, modification
+    * time) of each file its file relations already listed. The plan alone
+    * compares a file index by its root paths, so a path rewritten in place
+    * would keep serving the old entry. */
+  private type PlanKey = (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Seq[(String, Long, Long)])
+  private def planKey(df: DataFrame): PlanKey = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+    val plan = df.queryExecution.analyzed
+    val files = plan.collectWithSubqueries { case l: LogicalRelation => l.relation }.flatMap {
+      case HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _) =>
+        index.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sortBy(_._1)
+      case _ => Nil
+    }
+    (plan.canonicalized, files)
+  }
+
   /** Memoized count of a dimension frame (the ceiling probe): one tiny job
     * per distinct plan, like [[maxNameTokens]]. */
-  private val countMemo = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, java.lang.Long]()
+  private val countMemo = new java.util.concurrent.ConcurrentHashMap[PlanKey, java.lang.Long]()
   private def memoCount(df: DataFrame): Long =
-    countMemo.computeIfAbsent(df.queryExecution.analyzed.canonicalized, _ => df.count())
+    countMemo.computeIfAbsent(planKey(df), _ => df.count())
 
-  private type Plan = org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   private type Bc[T] = org.apache.spark.broadcast.Broadcast[T]
   private type BcMemo[K, T] = java.util.concurrent.ConcurrentHashMap[K, (org.apache.spark.SparkContext, Bc[T])]
 
@@ -66,28 +82,28 @@ object Geocode {
   }
 
   /** Broadcast kNN point index per (feature-point plan, zoom). */
-  private val pointIndexMemo = new BcMemo[(Plan, Int), graft.index.PointIndexData]()
+  private val pointIndexMemo = new BcMemo[(PlanKey, Int), graft.index.PointIndexData]()
   private def pointIndex(featurePoints: DataFrame, z: Int, n: Long): Bc[graft.index.PointIndexData] =
-    memoBroadcast(pointIndexMemo, (featurePoints.queryExecution.analyzed.canonicalized, z), featurePoints)(
+    memoBroadcast(pointIndexMemo, (planKey(featurePoints), z), featurePoints)(
       graft.index.CellIndex.buildPoints(featurePoints, z, n))
 
   /** Broadcast polygon-cover index per (feature plan, zoom, with rings):
     * [[contextChain]] probes it with the decoded rings, [[reverseBcast]]
     * with the cover entries alone. */
-  private val coverIndexMemo = new BcMemo[(Plan, Int, Boolean), graft.index.CellIndexData]()
+  private val coverIndexMemo = new BcMemo[(PlanKey, Int, Boolean), graft.index.CellIndexData]()
   private def coverIndex(features: DataFrame, z: Int, rings: Boolean): Bc[graft.index.CellIndexData] =
-    memoBroadcast(coverIndexMemo, (features.queryExecution.analyzed.canonicalized, z, rings), features)(
+    memoBroadcast(coverIndexMemo, (planKey(features), z, rings), features)(
       graft.index.CellIndex.buildFromFeatures(features, z, rings))
 
   /** Size of a cover index, 16 B units each, counted against
     * [[BroadcastCoverCeiling]]: its cover entries, its ring vertices (WKB
     * bytes / 16), and the rows with a geometry but a null feature_id. */
   private[graft] final case class CoverSize(entries: Long, vertices: Long, nullIds: Long)
-  private val coverSizeMemo = new java.util.concurrent.ConcurrentHashMap[(Plan, Int), CoverSize]()
+  private val coverSizeMemo = new java.util.concurrent.ConcurrentHashMap[(PlanKey, Int), CoverSize]()
   /** The ceiling probe of [[coverIndex]]: one small job per feature plan
     * and zoom, so an over-ceiling index never reaches the driver. */
   private[graft] def coverSize(features: DataFrame, z: Int): CoverSize =
-    coverSizeMemo.computeIfAbsent((features.queryExecution.analyzed.canonicalized, z), _ => {
+    coverSizeMemo.computeIfAbsent((planKey(features), z), _ => {
       val wkb = col("geom_wkb")
       val r = features.filter(wkb.isNotNull).agg(
         coalesce(sum(size(F.tileCover(wkb, lit(z)))), lit(0L)),
@@ -101,34 +117,34 @@ object Geocode {
   private final val PointUnits = BroadcastCoverCeiling / BroadcastPointCeiling
 
   /** Broadcast forward-geocode dictionary per gazetteer plan. */
-  private val gazDictMemo = new BcMemo[Plan, graft.index.GazDictData]()
+  private val gazDictMemo = new BcMemo[PlanKey, graft.index.GazDictData]()
   private def gazDict(gaz: DataFrame, n: Long): Bc[graft.index.GazDictData] =
-    memoBroadcast(gazDictMemo, gaz.queryExecution.analyzed.canonicalized, gaz)(
+    memoBroadcast(gazDictMemo, planKey(gaz), gaz)(
       graft.index.GazDict.build(gaz, indexCell, n))
 
   /** Broadcast forward-geocode dictionary per fat grid plan, with its
     * probe: one small job per grid plan sizes the rows a window can match
     * and checks that no two names share a phrase_id. */
-  private val gridDictMemo = new BcMemo[Plan, graft.index.GazDictData]()
-  private val gridProbeMemo = new java.util.concurrent.ConcurrentHashMap[Plan, graft.index.GazDict.GridProbe]()
+  private val gridDictMemo = new BcMemo[PlanKey, graft.index.GazDictData]()
+  private val gridProbeMemo = new java.util.concurrent.ConcurrentHashMap[PlanKey, graft.index.GazDict.GridProbe]()
   private[graft] def gridProbe(grid: DataFrame): graft.index.GazDict.GridProbe =
-    gridProbeMemo.computeIfAbsent(grid.queryExecution.analyzed.canonicalized,
+    gridProbeMemo.computeIfAbsent(planKey(grid),
       _ => graft.index.GazDict.probe(graft.index.GazDict.gridRows(grid)))
   private def gridDict(grid: DataFrame, n: Long): Bc[graft.index.GazDictData] =
-    memoBroadcast(gridDictMemo, grid.queryExecution.analyzed.canonicalized, grid)(
+    memoBroadcast(gridDictMemo, planKey(grid), grid)(
       graft.index.GazDict.buildFromGrid(grid, n))
 
   /** Broadcast sorted distinct phrase-id array of a grid index (the
     * [[forwardIndexed]] semi-join prefilter — a per-index-epoch build, not
     * a per-query collect). */
-  private val phraseIdMemo = new BcMemo[Plan, Array[Long]]()
+  private val phraseIdMemo = new BcMemo[PlanKey, Array[Long]]()
 
   /** Bloom tier of the phrase prefilter: ~1.2 B/entry at 1% fpp vs 8 B for
     * the exact array, so the map-side kill survives a dictionary ~8× past
     * [[BroadcastDictCeiling]] before the prefilter is dropped entirely. */
   final val BloomCeilingMult = 8L
   final val BloomFpp = 0.01
-  private val bloomMemo = new BcMemo[Plan, org.apache.spark.util.sketch.BloomFilter]()
+  private val bloomMemo = new BcMemo[PlanKey, org.apache.spark.util.sketch.BloomFilter]()
 
   /** Semi-join reduction shared by the indexed forward paths: kill token
     * windows that match no dictionary phrase BEFORE they ride the phrase_id
@@ -154,7 +170,7 @@ object Geocode {
     // a null phrase_id joins no window
     val dict = grid.select(col("phrase_id")).where(col("phrase_id").isNotNull).distinct()
     val n = memoCount(dict)
-    val key = grid.queryExecution.analyzed.canonicalized
+    val key = planKey(grid)
     if (n <= dictCeiling)
       windows.filter(CellIndex.longSetContains(col("phrase_id"),
         memoBroadcast(phraseIdMemo, key, grid)(dict.collect().map(_.getLong(0)).sorted)))
@@ -191,19 +207,13 @@ object Geocode {
   /** Max window length needed to match every gazetteer name — derived from
     * the data (a 3-token name silently never matching was the failure mode
     * of a hard-coded cap). A static property of the dictionary, so the tiny
-    * agg job runs once per distinct gazetteer plan (memoized by semantic
-    * hash), not once per query invocation. */
-  // Keyed by the canonicalized plan OBJECT (full structural equality — for
-  // literal relations that includes the data), not its 32-bit semantic hash:
-  // a hash collision between two gazetteer plans would silently return the
-  // wrong maxLen and reproduce the silent-never-matching failure mode this
-  // derivation exists to prevent. (Plan toString is not a valid key either:
-  // LocalRelation prints only its schema, so two literal gazetteers with
-  // different rows would collide.)
-  private val maxLenMemo = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int]()
+    * agg job runs once per distinct gazetteer plan (memoized by
+    * [[planKey]], never by semantic hash: a collision between two
+    * gazetteer plans would silently return the wrong maxLen), not once per
+    * query invocation. */
+  private val maxLenMemo = new java.util.concurrent.ConcurrentHashMap[PlanKey, Int]()
   def maxNameTokens(gaz: DataFrame): Int =
-    maxLenMemo.computeIfAbsent(gaz.queryExecution.analyzed.canonicalized, _ =>
+    maxLenMemo.computeIfAbsent(planKey(gaz), _ =>
       math.max(1, gaz.agg(max(size(split(col("name"), " ")))).head().getInt(0)))
 
   /** B4+B8+D1: mention extraction via token windows matched against the
@@ -483,18 +493,15 @@ object Geocode {
 
   /** The broadcast freq-cache DICTIONARY memo (carmen builds its freq cache
     * once per index epoch, not once per query): the sorted term array +
-    * quantized IDF values, keyed by the canonicalized idf PLAN object (same
-    * collision rationale as [[maxNameTokens]]). A cold build scans the corpus
+    * quantized IDF values, keyed by the idf frame's [[planKey]]. A cold build scans the corpus
     * once for the (term, idf_q) agg + collect; every later [[forwardIdf]]
     * over the same corpus plan reuses the array with ZERO jobs — the r3
     * driver-vs-local 2× `fwd_geocode_idf` contradiction was exactly this
     * build running inside every timed query invocation. Bench reports the
     * build separately (`idf_dict_sec`). */
-  private val termStatsMemo = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-    graft.index.TermStatsData]()
+  private val termStatsMemo = new java.util.concurrent.ConcurrentHashMap[PlanKey, graft.index.TermStatsData]()
   private def idfDict(idf: DataFrame): graft.index.TermStatsData =
-    termStatsMemo.computeIfAbsent(idf.queryExecution.analyzed.canonicalized,
+    termStatsMemo.computeIfAbsent(planKey(idf),
       _ => graft.index.TermStats.build(idf))
 
   /** Force-build the freq-cache dictionary for `docs` (the per-index-epoch
@@ -970,15 +977,17 @@ object Geocode {
     *
     * The ladder has a closed form (the `knn_expand` oracle's): with d the
     * smallest Chebyshev ring around the point's cell that holds a feature,
-    * radius* = the smallest ladder radius >= d, and the candidates are the
-    * features in disk(radius*). Up to [[BroadcastPointCeiling]] feature
-    * points that is ONE map-only stage: the feature points are sorted by
-    * (cell, feature_id) into a [[graft.index.PointIndexData]] and
-    * broadcast, once per feature-point plan and zoom; the `knn_rings`
-    * kernel walks rings 0..radii.last over it and the nearest pick reuses
-    * [[F.haversineKm]] inside `array_min`, so distances and (dist,
-    * feature_id) order are the loop's, bit for bit. No shuffle, no window,
-    * no persist — the call returns a lazy plan.
+    * radius* = the smallest ladder radius >= d, and the answer is the
+    * nearest feature in disk(radius*). Up to [[BroadcastPointCeiling]]
+    * feature points that is ONE map-only stage: the feature points are
+    * sorted by (cell, feature_id) into a [[graft.index.PointIndexData]] and
+    * broadcast, once per feature-point plan and zoom, and the `knn_rings`
+    * kernel returns the answer itself: per ladder radius it walks the
+    * disk one grid column (one key range) at a time and keeps the least
+    * (haversine, feature_id), the haversine being
+    * [[graft.core.Geo.sparkHaversineKm]], [[F.haversineKm]]'s double, so
+    * distances and order are the loop's, bit for bit. No candidate
+    * arrays, shuffle, window or persist — the call returns a lazy plan.
     *
     * Over the ceiling (memoized count probe, like [[reverseBcast]]) the
     * index never reaches the driver and the per-round loop runs instead
@@ -988,38 +997,28 @@ object Geocode {
     knnRings(featurePoints, z, radii) match {
       case None => knnLoop(points, featurePoints, z, radii)
       case Some(rings) =>
-        val best = nearest(col("k.cands"))
         points
-          .select(col("event_id"), col("elon"), col("elat"), explode(rings).as("k"))
-          .select(col("event_id"), col("k.radius").as("radius"), best.as("best"))
+          .select(col("event_id"), explode(rings).as("k"))
           .select(col("event_id"),
-            col("best.feature_id").cast(featurePoints.schema("feature_id").dataType).as("feature_id"),
-            round(col("best.dist"), 3).as("dist_km"), col("radius"))
+            col("k.feature_id").cast(featurePoints.schema("feature_id").dataType).as("feature_id"),
+            round(col("k.dist"), 3).as("dist_km"), col("k.radius").as("radius"))
     }
 
   /** The kNN radius ladder [[knnExpanding]] and `Geocoder.reverse` use. */
   final val KnnRadii = Seq(2, 4, 8)
 
-  /** The `knn_rings` kernel over the point's (elon, elat) cell at zoom z:
-    * `[struct(radius, cands)]` over the memoized broadcast point index, or
-    * None over [[BroadcastPointCeiling]] (memoized count probe). */
+  /** The `knn_rings` kernel over the point (elon, elat) and its cell at
+    * zoom z: `[struct(radius, feature_id, dist)]` over the memoized
+    * broadcast point index, or None over [[BroadcastPointCeiling]]
+    * (memoized count probe). */
   private[graft] def knnRings(featurePoints: DataFrame, z: Int, radii: Seq[Int]): Option[Column] = {
     require(radii.nonEmpty && radii.head >= 0 && radii.zip(radii.tail).forall { case (a, b) => a < b },
       s"radii must be a non-empty strictly ascending ladder, got $radii")
     val n = memoCount(featurePoints)
     if (n > BroadcastPointCeiling) None
-    else Some(graft.index.CellIndex.knnRingsCol(
-      F.cellAt(lit(z), col("elon"), col("elat")), pointIndex(featurePoints, z, n), radii))
+    else Some(graft.index.CellIndex.knnRingsCol(F.cellAt(lit(z), col("elon"), col("elat")),
+      col("elon").cast("double"), col("elat").cast("double"), pointIndex(featurePoints, z, n), radii))
   }
-
-  /** The nearest of a `knn_rings` candidate array: `struct(dist,
-    * feature_id)`, the least by (haversine from (elon, elat), feature_id)
-    * — Spark's own [[F.haversineKm]] and struct order inside `array_min`,
-    * so the pick is the round loop's window order, bit for bit. */
-  private[graft] def nearest(cands: Column): Column =
-    array_min(transform(cands, c => struct(
-      F.haversineKm(col("elon"), col("elat"), c("flon"), c("flat")).as("dist"),
-      c("feature_id").as("feature_id"))))
 
   /** Over-ceiling path of [[knnExpanding]]: one round per ladder radius.
     * Each round probes only the residual (left_anti of matched points) on

@@ -128,4 +128,39 @@ class ExprsSpec extends SparkTestBase {
     assert(math.abs(d - Geo.haversineKm(-0.1276, 51.5072, 2.3522, 48.8566)) < 1e-9)
     assert(math.abs(d - 343.5) < 1.0)
   }
+
+  test("sparkHaversineKm is F.haversineKm bit for bit (interpreted and codegen)") {
+    import spark.implicits._
+    val r = new scala.util.Random(20261019L)
+    def lon() = r.nextDouble() * 360.0 - 180.0
+    def lat() = r.nextDouble() * 180.0 - 90.0
+    val nan = Double.NaN
+    val special = Seq(
+      (2.3522, 48.8566, 2.3522, 48.8566), (0.0, 0.0, 0.0, 0.0),         // identical points
+      (0.0, 0.0, 180.0, 0.0), (10.0, 20.0, -170.0, -20.0),              // antipodes
+      (0.0, 90.0, 123.0, 90.0), (0.0, 90.0, 0.0, -90.0), (45.0, -90.0, 45.0, 89.999),  // poles
+      (179.9, 10.0, -179.9, 10.0), (-180.0, 0.0, 180.0, 0.0),           // the antimeridian
+      (179.999999, -45.0, -179.999999, -45.000001),
+      (nan, 10.0, 20.0, 30.0), (10.0, nan, 20.0, 30.0),                 // NaN: least keeps 1.0
+      (10.0, 20.0, nan, nan), (nan, nan, nan, nan),
+      (-0.0, -0.0, 0.0, 0.0), (1e-12, 0.0, 0.0, 0.0))
+    val random = Seq.fill(2000)((lon(), lat(), lon(), lat())) ++
+      Seq.fill(500) { val (a, b) = (lon(), lat()); (a, b, a + r.nextGaussian() * 1e-3, b + r.nextGaussian() * 1e-3) }
+    val pairs = special ++ random
+    val dist = F.haversineKm(col("a"), col("b"), col("c"), col("d")).as("dist")
+    val df = pairs.toDF("a", "b", "c", "d")
+    // a projection over a local relation is evaluated by the optimizer
+    // (interpreted); behind a shuffle it runs in generated code
+    Seq("interpreted" -> df, "codegen" -> df.repartition(3)).foreach { case (what, in) =>
+      val got = in.select(col("a"), col("b"), col("c"), col("d"), dist).collect()
+      assert(got.length == pairs.length, what)
+      got.foreach { row =>
+        val want = Geo.sparkHaversineKm(row.getDouble(0), row.getDouble(1), row.getDouble(2), row.getDouble(3))
+        assert(java.lang.Double.doubleToRawLongBits(row.getDouble(4)) == java.lang.Double.doubleToRawLongBits(want),
+          s"$what: ${(row.getDouble(0), row.getDouble(1), row.getDouble(2), row.getDouble(3))} -> " +
+            s"${row.getDouble(4)} vs $want")
+      }
+    }
+    assert(Geo.sparkHaversineKm(nan, 10.0, 20.0, 30.0) == 2.0 * Geo.EarthRadiusKm * math.asin(1.0))
+  }
 }

@@ -353,6 +353,88 @@ class FallbackSpec extends SparkTestBase {
     assert(Geocode.knnLoop(emptyPts, feats, 5, radii).collect().isEmpty)
   }
 
+  /** A kNN point or feature row: (id, lon, lat). */
+  private type Pt = (Long, Double, Double)
+
+  test("knn_rings column walk ≡ knnLoop: grid-corner carry, cross-column ties, ±2^62 ids, radius 0, NaN") {
+    import spark.implicits._
+    import graft.core.{CellMath, Geo}
+    def check(what: String, pts: Seq[Pt], feats: Seq[Pt], z: Int, radii: Seq[Int]) = {
+      val (p, f) = (pts.toDF("event_id", "elon", "elat"), feats.toDF("feature_id", "flon", "flat"))
+      val kernel = Geocode.knnExpanding(p, f, z, radii)
+      // a projection over a local relation is folded by the optimizer, so
+      // the kernel shows in the analyzed plan only
+      assert(knnIndexIds(kernel).size == 1, what)
+      val a = knnRows(kernel)
+      assert(a == knnRows(Geocode.knnLoop(p, f, z, radii)), what)
+      a.map(r => r._1 -> r).toMap
+    }
+    val big = 1L << 62
+    // z28: the last column and row, where pack(z, x, yhi) + 1 carries into
+    // x, and past the last column into z
+    val max = (1L << 28) - 1
+    def centre(id: Long, x: Long, y: Long): Pt = {
+      val (lon, lat) = CellMath.cellCenter(CellMath.pack(28, x, y)); (id, lon, lat)
+    }
+    val cornerFeats = Seq(centre(big, max, max), centre(-big, max - 1, max), centre(big - 1, max, max - 3),
+      centre(-big + 1, max - 2, max - 2), centre(5L, max - 1, 0L), centre(6L, 0L, max))
+    assert(CellMath.lonLatToCell(28, cornerFeats.head._2, cornerFeats.head._3) == CellMath.pack(28, max, max))
+    val corner = check("z28 corner", Seq((1L, 180.0, -89.0), centre(2L, max, max - 3), centre(3L, max - 1, max - 1),
+      centre(4L, max - 3, max - 5)), cornerFeats, 28, Seq(1, 2, 4))
+    assert(corner.keySet == Set(1L, 2L, 3L, 4L), corner.toString)
+    assert(corner(1L)._4 == 1 && corner(4L)._4 == 4, corner.toString)
+    // z8 with a ladder from radius 0
+    val nan = Double.NaN
+    val feats8 = Seq[Pt](
+      (501L, 8.5, 20.0), (500L, 11.5, 20.0),      // equal distances in columns 134 and 136
+      (600L, 30.9, 40.0), (601L, 29.52, 40.0),    // 600 shares the point's cell, 601 is nearer
+      (big, 50.0, 10.0), (-big, 50.0, 10.0), (big - 1, 49.7, 10.0), (-big + 1, 51.0, 10.0),
+      (700L, -179.5, 20.0), (699L, -179.0, 20.5), (900L, nan, 84.9), (901L, -179.0, nan))
+    val pts8 = Seq[Pt]((1L, 10.0, 20.0), (2L, 30.0, 40.0), (3L, 50.2, 10.1),
+      (4L, nan, 20.0), (5L, -179.5, nan), (6L, nan, nan))
+    assert(Geo.sparkHaversineKm(10.0, 20.0, 8.5, 20.0) == Geo.sparkHaversineKm(10.0, 20.0, 11.5, 20.0))
+    val z8 = check("z8 from radius 0", pts8, feats8, 8, Seq(0, 2))
+    assert(z8(1L)._2 == 500L && z8(1L)._4 == 2, z8.toString)
+    assert(z8(2L)._2 == 600L && z8(2L)._4 == 0, z8.toString)
+    assert(z8(3L)._2 == -big, z8.toString)
+    // a NaN coordinate: every distance is π·R (Spark's least keeps 1.0)
+    val far = BigDecimal(2.0 * Geo.EarthRadiusKm * math.asin(1.0)).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
+    Seq(4L, 5L, 6L).foreach(id => assert(z8(id)._3 == far, z8.toString))
+    check("z8 ladder", pts8, feats8, 8, Seq(1, 2, 4))
+    // reverse takes the kernel's answer: no candidate array, array_min or
+    // interpreted haversine in the plan
+    val g = graft.api.Geocoder.default(spark)
+    val sfTyped = Seq(
+      ("continent", Synth.continentFeatures(spark, sf), 4),
+      ("country", Synth.nationFeatures(spark, sf), 6),
+      ("place", Synth.custFeatures(spark, sf), 8))
+    Seq(g.reverse(Synth.eventPoints(spark, sf), sfTyped),
+      Geocode.knnExpanding(Synth.eventPoints(spark, sf), Synth.custFeatures(spark, sf), 8)).foreach { df =>
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("knn_rings"), plan)
+      Seq("array_min", "asin", "cands").foreach(op => assert(!plan.toLowerCase.contains(op), s"$op in\n$plan"))
+    }
+  }
+
+  test("plan memos: a gazetteer path rewritten in place is read afresh") {
+    val dir = java.nio.file.Files.createTempDirectory("gaz-rewrite")
+    try {
+      val path = dir.resolve("gaz").toString
+      val docs = Synth.docPages(spark, sf)
+      val gaz = Synth.gazDf(spark)
+      val regions = gaz.filter(col("typ") =!= "place")
+      gaz.write.parquet(path)
+      val before = fwdRows(Geocode.forward(docs, spark.read.parquet(path)))
+      assert(before == fwdRows(Geocode.forward(docs, gaz)) && before.nonEmpty)
+      regions.write.mode("overwrite").parquet(path)
+      val after = fwdRows(Geocode.forward(docs, spark.read.parquet(path)))
+      assert(after == fwdRows(Geocode.forward(docs, regions)))
+      assert(after != before)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
   /** A gazetteer row: (gid, name, typ, score, glon, glat, stack). */
   private type G = (Long, String, String, Option[Double], Option[Double], Option[Double], String)
 

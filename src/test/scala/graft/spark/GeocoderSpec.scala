@@ -306,13 +306,24 @@ class GeocoderSpec extends SparkTestBase {
     assert(chainOf(3L, 1L) == "501>1")
   }
 
+  /** The sf0.001 events plus each customer rect's centre as a probe point:
+    * no sf0.001 event falls in a customer rect, so without the centres a
+    * reverse-PIP equivalence compares two empty sets. */
+  private def eventsAndRectCentres(sf: String) = {
+    val events = Synth.eventPoints(spark, sf)
+    val off = events.agg(max("event_id")).head().getLong(0) + 1
+    events.union(Synth.custFeatures(spark, sf).select((col("feature_id") + off).as("event_id"),
+      col("flon").as("elon"), col("flat").as("elat")))
+  }
+
   test("pre-clipped reverse PIP equals unclipped") {
-    val pts = Synth.eventPoints(spark, "/root/testdata/sf0.001")
+    val pts = eventsAndRectCentres("/root/testdata/sf0.001")
     val feats = Synth.custFeatures(spark, "/root/testdata/sf0.001")
     val a = Geocode.reversePipClipped(pts, feats, 8)
       .select("event_id", "feature_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val b = Geocode.reversePip(pts, feats, 8)
       .select("event_id", "feature_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(a.nonEmpty && b.nonEmpty)
     assert(a == b)
   }
 
@@ -339,12 +350,13 @@ class GeocoderSpec extends SparkTestBase {
   }
 
   test("salted reverse PIP equals unsalted") {
-    val pts = Synth.eventPoints(spark, "/root/testdata/sf0.001")
+    val pts = eventsAndRectCentres("/root/testdata/sf0.001")
     val feats = Synth.custFeatures(spark, "/root/testdata/sf0.001")
     val a = Geocode.reversePipSalted(pts, feats, 8, s = 4, hotK = 8, hotThreshold = 2)
       .select("event_id", "feature_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val b = Geocode.reversePip(pts, feats, 8)
       .select("event_id", "feature_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(a.nonEmpty && b.nonEmpty)
     assert(a == b)
   }
 
