@@ -1,6 +1,8 @@
 package graft.core
 
 import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deterministic text kernel: tokenizer, token-replacement rules, and the
   * frozen HTML→text extractor. The byte-identical contract (BASELINE.json
@@ -17,28 +19,116 @@ object Text {
   // B2: tokenize — lowercase, strip punctuation, collapse ws, split
   // ------------------------------------------------------------------
 
-  /** ASCII-deterministic normalization: letters/digits kept (ASCII letters
-    * lowercased by +32; non-ASCII letters/digits kept via Character calls,
-    * stable on a fixed JVM), everything else is a separator. */
+  /** The token char of each UTF-16 char, 0 for a separator: ASCII letters
+    * lowercased by +32 and digits kept; a non-ASCII letter or digit kept
+    * as `Character.toLowerCase` (stable on a fixed JVM); everything else,
+    * lone surrogates included, separates. */
+  private val Fold: Array[Char] = Array.tabulate(65536) { i =>
+    val c = i.toChar
+    if (c >= 'a' && c <= 'z') c
+    else if (c >= 'A' && c <= 'Z') (c + 32).toChar
+    else if (c >= '0' && c <= '9') c
+    else if (c > 127 && Character.isLetterOrDigit(c)) Character.toLowerCase(c)
+    else 0.toChar
+  }
+
+  /** The tokens of the last [[scan]], lowercased and back to back in
+    * `chars`: token `t` is `chars(offs(t) until offs(t + 1))` and its
+    * `String.hashCode` is `hashes(t)`, `n` tokens. The arrays grow to the
+    * longest text scanned and are kept, so a kernel scans every row of a
+    * task into one buffer. */
+  final class Tokens(capacity: Int = 256) {
+    var chars: Array[Char] = new Array[Char](math.max(16, capacity))
+    var offs: Array[Int] = new Array[Int](32)
+    var hashes: Array[Int] = new Array[Int](32)
+    var n = 0
+    private var end = 0
+    private var h = 0
+
+    def token(t: Int): String = new String(chars, offs(t), offs(t + 1) - offs(t))
+
+    private[Text] def clear(): Unit = { n = 0; end = 0; h = 0 }
+
+    /** Append token char `c`, or end the open token on a separator (0). */
+    private[Text] def put(c: Char): Unit =
+      if (c != 0) {
+        if (end == chars.length) chars = java.util.Arrays.copyOf(chars, end * 2)
+        chars(end) = c
+        end += 1
+        h = 31 * h + c
+      } else close()
+
+    private[Text] def close(): Unit =
+      if (end > offs(n)) {
+        hashes(n) = h; h = 0
+        n += 1
+        if (n == offs.length) {
+          offs = java.util.Arrays.copyOf(offs, n * 2); hashes = java.util.Arrays.copyOf(hashes, n * 2)
+        }
+        offs(n) = end
+      }
+  }
+
+  /** Tokenize `s` into `t` (cleared first; null is no tokens): every
+    * char through [[Fold]], a token per run of kept chars. */
+  def scan(s: String, t: Tokens): Tokens = {
+    t.clear()
+    if (s != null) {
+      var i = 0
+      while (i < s.length) { t.put(Fold(s.charAt(i))); i += 1 }
+    }
+    t.close()
+    t
+  }
+
+  /** [[scan]] of `u.toString`, decoded in place: a well-formed 1- to
+    * 3-byte UTF-8 sequence is its char; any other byte separates, as the
+    * JDK decoder's U+FFFD for a malformed sequence and the surrogates of
+    * a 4-byte one do. The JDK replaces a maximal prefix of a well-formed
+    * sequence, never an ASCII or lead byte after it, so the two agree. */
+  def scan(u: UTF8String, t: Tokens): Tokens = u.getBaseObject match {
+    case a: Array[Byte] => scan(a, (u.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, u.numBytes, t)
+    case _ => val a = u.getBytes; scan(a, 0, a.length, t)
+  }
+
+  private def scan(bs: Array[Byte], from: Int, len: Int, t: Tokens): Tokens = {
+    t.clear()
+    val end = from + len
+    var i = from
+    while (i < end) {
+      val b = bs(i)
+      if (b >= 0) { t.put(Fold(b)); i += 1 }
+      else {
+        val x = b & 0xff
+        var c = -1
+        if (x >= 0xC2 && x <= 0xDF && i + 1 < end) {
+          val b1 = bs(i + 1)
+          if ((b1 & 0xC0) == 0x80) { c = ((x & 0x1F) << 6) | (b1 & 0x3F); i += 1 }
+        } else if (x >= 0xE0 && x <= 0xEF && i + 2 < end) {
+          val b1 = bs(i + 1) & 0xff; val b2 = bs(i + 2)
+          // E0 needs A0..BF (not overlong), ED 80..9F (not a surrogate)
+          val lo = if (x == 0xE0) 0xA0 else 0x80
+          val hi = if (x == 0xED) 0x9F else 0xBF
+          if (b1 >= lo && b1 <= hi && (b2 & 0xC0) == 0x80) {
+            c = ((x & 0x0F) << 12) | ((b1 & 0x3F) << 6) | (b2 & 0x3F); i += 2
+          }
+        }
+        t.put(if (c < 0) 0.toChar else Fold(c))
+        i += 1
+      }
+    }
+    t.close()
+    t
+  }
+
+  /** [[scan]] with each token materialized as a String. */
   def tokenize(s: String): Array[String] = {
     if (s == null) return Array.empty
-    val out = new ArrayBuffer[String](8)
-    val sb = new java.lang.StringBuilder(16)
+    val t = scan(s, new Tokens(s.length))
+    val out = new Array[String](t.n)
     var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      val keep: Char =
-        if (c >= 'a' && c <= 'z') c
-        else if (c >= 'A' && c <= 'Z') (c + 32).toChar
-        else if (c >= '0' && c <= '9') c
-        else if (c > 127 && Character.isLetterOrDigit(c)) Character.toLowerCase(c)
-        else 0
-      if (keep != 0) sb.append(keep)
-      else if (sb.length > 0) { out += sb.toString; sb.setLength(0) }
-      i += 1
-    }
-    if (sb.length > 0) out += sb.toString
-    out.toArray
+    while (i < t.n) { out(i) = t.token(i); i += 1 }
+    out
   }
 
   def normalize(s: String): String = tokenize(s).mkString(" ")

@@ -39,11 +39,14 @@ object Geocode {
     * of a 1 GB heap at 4·10^6. */
   final val BroadcastPointCeiling = BroadcastCoverCeiling / 2
   /** Forward-geocode gazetteer rows ([[graft.index.GazDictData]]): 41 B
-    * of primitive arrays per row plus ~16 B and the name's chars per
-    * distinct name. Measured on a local-mode driver with distinct 11-char
-    * names: ~76 B/row held after the streamed build, ~128 B/row once
-    * broadcast; 5·10^6 rows build and broadcast in a 1 GB heap. A fifth of
-    * the cover ceiling's entries keeps the held arrays near ~1.5 GB. */
+    * of primitive arrays per row, plus per distinct name its token ids and
+    * table slots, plus per distinct token its chars and table slots.
+    * Measured on a local-mode driver with 11-char names: ~90 B/row held
+    * after the streamed build and ~147 B/row once broadcast when every
+    * name is one distinct token (the worst case: nothing is shared), ~70
+    * and ~104 B/row for two-token names over a 10^4-word vocabulary; 5·10^6
+    * rows of either build and broadcast in a 1 GB heap. A fifth of the
+    * cover ceiling's entries keeps the held arrays near 1.4–1.8 GB. */
   final val BroadcastGazCeiling = BroadcastCoverCeiling / 5
 
   /** The key of every plan memo below: a frame's canonicalized plan

@@ -152,6 +152,23 @@ class GeoSpec extends AnyFunSuite {
     assert(haversineKm(10, 20, 10, 20) == 0.0)
   }
 
+  test("asin is Math.asin and v * v is StrictMath.pow(v, 2), bit for bit") {
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    def same(a: Double, b: Double) = bits(a) == bits(b) || (a.isNaN && b.isNaN)
+    val r = new java.util.SplittableRandom(20261019L)
+    val hx = Seq(0x3ff00000L, 0x3fe00000L, 0x3e400000L, 0x3FEF3333L).flatMap(h => Seq(h << 32, (h << 32) - 1))
+    val edges = Seq(0.0, -0.0, 1.0, -1.0, 0.5, -0.5, 0.975, Math.nextUp(1.0), 2.0, Double.NaN,
+      Double.PositiveInfinity, Double.NegativeInfinity, Double.MinPositiveValue, 1e-300) ++
+      hx.map(java.lang.Double.longBitsToDouble).flatMap(x => Seq(x, -x))
+    val xs = edges ++ Seq.fill(2000000)(r.nextDouble() * 2 - 1) ++
+      Seq.fill(200000)(1.0 - math.pow(10, -r.nextDouble() * 17)) ++
+      Seq.fill(200000)(java.lang.Double.longBitsToDouble(r.nextLong()))
+    xs.foreach { x =>
+      assert(same(asin(x), Math.asin(x)), s"asin($x): ${asin(x)} vs ${Math.asin(x)}")
+      assert(bits(x * x) == bits(StrictMath.pow(x, 2)) || x.isNaN, s"pow($x, 2)")
+    }
+  }
+
   test("scoredist is monotone decreasing in distance") {
     assert(scoredist(100.0, 0.0) == 100.0)
     assert(scoredist(100.0, 40.0) == 50.0)

@@ -499,7 +499,18 @@ class FallbackSpec extends SparkTestBase {
       (903L, "cove", "region", Some(5.0), None, Some(r0.lat), "na"),
       (904L, "bay", "place", None, Some(r0.lon + 0.01), None, "na"),
       // "park" sits in r0's z8 cell, under the "zone" regions 716..719 only
-      (905L, "park", "place", Some(11.0), Some(r0.lon + 0.01), Some(r0.lat + 0.01), "na")) ++
+      (905L, "park", "place", Some(11.0), Some(r0.lon + 0.01), Some(r0.lat + 0.01), "na"),
+      // extreme ids and values: gids at the Long range's ends and near
+      // ±2^62, NaN and -0.0 scores and coordinates
+      (Long.MaxValue, "metro", "place", Some(12.0), Some(r1.lon + 0.02), Some(r1.lat + 0.02), "na"),
+      (Long.MinValue, "metro", "region", Some(3.0), Some(r1.lon), Some(r1.lat), "na"),
+      ((1L << 62) + 1, "harbor", "place", Some(Double.NaN), Some(r0.lon + 0.02), Some(r0.lat - 0.01), "na"),
+      (-(1L << 62) - 1, "harbor", "place", Some(-0.0), Some(-0.0), Some(-0.0), "na"),
+      ((1L << 62) - 1, "harbor", "region", Some(0.0), Some(Double.NaN), Some(r0.lat), "na"),
+      (-(1L << 62), "harbor", "place", Some(6.0), Some(r0.lon + 0.03), Some(Double.NaN), "na"),
+      // never reachable: page tokens are non-empty and lowercased
+      (910L, "a  b", "place", Some(90.0), Some(r0.lon), Some(r0.lat), "na"),
+      (911L, "Data", "region", Some(90.0), Some(r0.lon), Some(r0.lat), "na")) ++
       // 20 region rows named "zone": with "spark" (gid 2, r1's cell) the
       // cap of 16 by (wr desc, rid asc) keeps 2 and 700..714, so 716..719
       // (r0's cell) never stack "park"
@@ -514,7 +525,9 @@ class FallbackSpec extends SparkTestBase {
       (2L, null, Some(0.0), Some(0.0)),
       (3L, "hash join data cove bay", Some(hashJoin.lon), None),
       (4L, "zone park spark", Some(10.0), Some(20.0)),
-      (5L, "bay x data cove data hash join window", None, None)
+      (5L, "bay x data cove data hash join window", None, None),
+      (6L, "metro harbor a  b Data a b DATA harbor", Some(r1.lon), Some(r1.lat)),
+      (7L, "A  B data HARBOR, metro", Some(-0.0), Some(-0.0))
     ).toDF("doc_id", "text", "qlon", "qlat")
     val a = assertFusedEqualsStaged("edge gazetteer", docs, gaz, k = 50)
     val rows = Geocode.forward(docs, gaz, 50).collect()
@@ -527,8 +540,20 @@ class FallbackSpec extends SparkTestBase {
     assert(park.getLong(5) == -1L, s"park must stay unstacked past the region cap: $park")
     assert(rows.exists(r => r.getLong(1) == 904L && r.isNullAt(4) && r.isNullAt(6)),
       "a place with null coordinates and score keeps a null cell and sd")
+    val extreme = Set(Long.MaxValue, Long.MinValue, (1L << 62) + 1, -(1L << 62) - 1, (1L << 62) - 1, -(1L << 62))
+    assert(extreme.subsetOf(fids(6L)) && extreme.subsetOf(fids(7L)), s"${fids(6L)} ${fids(7L)}")
     // the dedupe path over the same inputs
     assertFusedEqualsStaged("edge gazetteer, dedupe", docs, gaz, k = 50, dedupe = true)
+    // every forward path agrees, and "a  b" and "Data" stay unreachable
+    Seq(false, true).foreach { dedupe =>
+      assertKernelPaths(s"edge gazetteer, dedupe = $dedupe", docs, gaz, 50, dedupe)
+      Seq(Geocode.forward(docs, gaz, 50, dedupe), Geocode.forwardStaged(docs, gaz, 50, dedupe),
+        Geocode.forwardIndexedFat(docs, graft.index.IndexBuild.gazetteerGridFat(gaz, Geocode.ZPlace, Geocode.ZRegion),
+          50, dedupe)).foreach { df =>
+        val ids = df.collect().map(_.getLong(1)).toSet
+        assert(ids.contains(Long.MinValue) && !ids.contains(910L) && !ids.contains(911L), ids.toString)
+      }
+    }
     // doc_id is the page key: a repeated page row gets its own top-k
     val twice = docs.union(docs.filter(col("doc_id") === 1L))
     assert(fwdRows(Geocode.forward(twice, gaz, 50)) ==
@@ -537,6 +562,99 @@ class FallbackSpec extends SparkTestBase {
     assert(Geocode.forward(docs.limit(0), gaz).collect().isEmpty)
     assert(Geocode.forward(docs, gaz.limit(0)).collect().isEmpty)
     assert(Geocode.forwardStaged(docs.limit(0), gaz, 5, dedupe = false).collect().isEmpty)
+  }
+
+  /** `n` seeded pages (doc_id, text, qlon, qlat) over 8 partitions: each
+    * token one of `names` (as-is, upper-cased, capitalized or with a
+    * Unicode case variant that lowercases back: U+0130 for i, the Kelvin
+    * sign for k) or filler, joined by mixed separators; every 5th page
+    * ends in a name, every 100th runs to 500+ tokens, and some rows have
+    * a null text, qlon or qlat. */
+  private def seededPages(names: IndexedSeq[String], n: Int, seed: Long): DF = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val r = new java.util.SplittableRandom(seed)
+    val filler = IndexedSeq("the", "of", "zzz", "dataset", "spark2", "x", "\u00FC", "\uFF24ata", "h-ash", "a")
+    val seps = IndexedSeq(" ", "  ", ", ", "-", "\t", ". ", " / ")
+    def name(): String = {
+      val nm = names(r.nextInt(names.size))
+      r.nextInt(6) match {
+        case 0 => nm.toUpperCase(java.util.Locale.ROOT)
+        case 1 => nm.replace('i', '\u0130').replace('k', '\u212A')
+        case 2 => nm.capitalize
+        case _ => nm
+      }
+    }
+    val rows = (0 until n).map { i =>
+      val len = if (i % 100 == 7) 500 + r.nextInt(100) else r.nextInt(60)
+      val toks = Seq.fill(len)(if (r.nextInt(3) == 0) filler(r.nextInt(filler.size)) else name()) ++
+        (if (i % 5 == 0) Seq(name()) else Nil)
+      val text = toks.map(t => seps(r.nextInt(seps.size)) + t).mkString
+      Row(i.toLong, if (i % 97 == 3) null else text,
+        if (i % 89 == 5) null else r.nextInt(360000) / 1000.0 - 180.0,
+        if (i % 83 == 6) null else r.nextInt(140000) / 1000.0 - 70.0)
+    }
+    val schema = StructType(Seq(StructField("doc_id", LongType, nullable = false),
+      StructField("text", StringType), StructField("qlon", DoubleType), StructField("qlat", DoubleType)))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 8), schema)
+  }
+
+  test("fwd_topk ≡ forwardStaged on 2,000 seeded pages: k, dedupe, both gazetteers, codegen on and off") {
+    import spark.implicits._
+    val r0 = Synth.regions(0)
+    val five = Seq((900L, "alpha beta gamma delta eps", "place", 50.0, r0.lon + 0.01, r0.lat + 0.01, "na"))
+      .toDF("gid", "name", "typ", "score", "glon", "glat", "stack")
+    val gazes = Seq("gazDf" -> Synth.gazDf(spark).unionByName(five), "dupGazDf" -> Synth.dupGazDf(spark).unionByName(five))
+    val names = (Synth.gazetteer.map(_.name) :+ "alpha beta gamma delta eps").toIndexedSeq
+    val docs = seededPages(names, 2000, 20261019L)
+    val key = "spark.sql.codegen.wholeStage"
+    val was = spark.conf.get(key)
+    try {
+      for ((gname, gaz) <- gazes; codegen <- Seq("true", "false")) {
+        spark.conf.set(key, codegen)
+        val grid = graft.index.IndexBuild.gazetteerGridFat(gaz, Geocode.ZPlace, Geocode.ZRegion)
+        for (k <- Seq(1, 5, 50); dedupe <- Seq(false, true)) {
+          val what = s"$gname codegen = $codegen k = $k dedupe = $dedupe"
+          val want = fwdRows(Geocode.forwardStaged(docs, gaz, k, dedupe))
+          assert(want.size > 1000, what)
+          Seq("forward" -> Geocode.forward(docs, gaz, k, dedupe),
+            "fat fused" -> Geocode.forwardIndexedFat(docs, grid, k, dedupe)).foreach { case (path, df) =>
+            assertMapOnly(s"$what, $path", df, "fwd_topk")
+            assert(fwdRows(df) == want, s"$what, $path")
+          }
+        }
+      }
+    } finally spark.conf.set(key, was)
+  }
+
+  test("fwd_topk allocates at most 2 KB per warmed page") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.{DoubleType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val names = Synth.gazetteer.map(_.name).toIndexedSeq
+    val pages = seededPages(names, 2000, 101L).collect().map { r =>
+      InternalRow(if (r.isNullAt(1)) null else UTF8String.fromString(r.getString(1)),
+        if (r.isNullAt(2)) null else r.getDouble(2), if (r.isNullAt(3)) null else r.getDouble(3))
+    }
+    val fwd = Geocode.forward(seededPages(names, 1, 1L), Synth.gazDf(spark))
+    val kernel = fwd.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+      case k: graft.index.GazDict.FwdTopK => k
+    })).head.copy(first = BoundReference(0, StringType, nullable = true),
+      second = BoundReference(1, DoubleType, nullable = true), third = BoundReference(2, DoubleType, nullable = true))
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    var out = 0L
+    def pass(): Long = {
+      val before = mx.getThreadAllocatedBytes(tid)
+      pages.foreach(p => out += kernel.eval(p).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].numElements())
+      mx.getThreadAllocatedBytes(tid) - before
+    }
+    (0 until 40).foreach(_ => pass())
+    val perPage = (0 until 5).map(_ => pass()).min.toDouble / pages.length
+    assert(out > 0)
+    assert(perPage <= 2048, f"$perPage%.0f B allocated per page")
   }
 
   test("prefilter broadcasts: one broadcast per grid plan and tier") {
