@@ -435,19 +435,21 @@ object Bench {
   }
 
   /** At-scale forward paths timed at 4N beside the broadcast headline, by
-    * JSON key: the skinny index (grid-index equi-join plus feature
-    * verify-join), the fat index (payload denormalized) and the fat index
-    * from the BUCKETED catalog table. Under the broadcast ceiling both fat
-    * keys run `forwardIndexedFat` as one map-only `fwd_topk` stage over the
-    * grid's dictionary, so they time the same plan; only over the ceiling
-    * does the bucketed layout save its index-side exchange (the index
-    * arrives pre-hash-partitioned from disk, so the match join plans no
-    * exchange above the index scan). */
+    * JSON key, all over the fat grid index (payload denormalized): its
+    * shuffled body (the phrase_id match join with in-row verify, which
+    * `forwardIndexedFat` runs past its broadcast ceiling), then
+    * `forwardIndexedFat` over the parquet index and over the BUCKETED
+    * catalog table. Under the broadcast ceiling both `forwardIndexedFat`
+    * keys run one map-only `fwd_topk` stage over the grid's dictionary, so
+    * they time the same plan; only over the ceiling does the bucketed
+    * layout save its index-side exchange (the index arrives
+    * pre-hash-partitioned from disk, so the match join plans no exchange
+    * above the index scan). */
   private val IndexPaths: Seq[(String, SparkSession => DataFrame => DataFrame)] = Seq(
     "docs_per_sec_indexed_4n" -> { s =>
-      val feats = Synth.gazDf(s)
-      val grid = Queries.gazGridParquet(s)
-      pages => Geocode.forwardIndexed(pages, grid, feats)
+      val grid = Queries.gazGridFatParquet(s)
+      pages => Geocode.forwardIndexedFatWith(pages, grid, 5, false,
+        Geocode.BroadcastDictCeiling, gridCeiling = 0)
     },
     "docs_per_sec_fat_4n" -> { s =>
       val grid = Queries.gazGridFatParquet(s)

@@ -405,8 +405,8 @@ object SparkEntry {
     * rasterMaskSql). */
   def oracleSql: Map[String, String] = Map(
     "fwd_geocode" -> Queries.fwdGeocodeSql,
-    // indexed + fat-indexed paths are row-identical to fwd_geocode by
-    // D4-verify equivalence
+    // the fat grid-index paths (shuffled, fused, bucketed) are row-identical
+    // to fwd_geocode by D4-verify equivalence
     "fwd_geocode_indexed" -> Queries.fwdGeocodeSql,
     "fwd_geocode_fat" -> Queries.fwdGeocodeSql,
     "fwd_geocode_bucketed" -> Queries.fwdGeocodeSql,

@@ -41,28 +41,16 @@ object IndexBuild {
       .select("phrase_id", "cell", "feature_id", "relev_q", "score_q", "hkey")
 
   /** D1/A3: grid-index rows for a POINT-feature gazetteer (one cell per
-    * feature at its type's index zoom) — the table [[graft.ops.Geocode.forwardIndexed]]
-    * equi-joins doc windows against. Schema matches [[gridEntries]] plus the
-    * index type: (phrase_id, typ, cell, feature_id, relev_q, score_q, hkey). */
-  def gazetteerGrid(gaz: DataFrame, zPlace: Int, zRegion: Int): DataFrame =
-    gaz.select(
-      phraseId(col("name")).as("phrase_id"),
-      col("typ"),
-      F.cellAt(when(col("typ") === "place", lit(zPlace)).otherwise(lit(zRegion)),
-        col("glon"), col("glat")).as("cell"),
-      col("gid").as("feature_id"),
-      relevQ(lit(1.0)).as("relev_q"),
-      scoreQ(col("score")).as("score_q"))
-      .withColumn("hkey", F.hilbertCell(col("cell")))
-
-  /** [[gazetteerGrid]] with the rank-time feature payload (name, score, lon,
-    * lat) DENORMALIZED into the index row — the "fat" index. D4 name-verify
-    * becomes an in-row `phrase = name` filter and the per-candidate feature
-    * join — a full shuffle of the candidate frame on feature_id — disappears
-    * from the query plan ([[graft.ops.Geocode.forwardIndexedFat]]). Index
-    * rows grow by one string + three doubles (~40 B); at the 10^7-feature
-    * design point that is well under 1 GB extra table for one fewer big-side
-    * exchange on EVERY query — the classic index-only-scan trade. */
+    * feature at its type's index zoom), the table
+    * [[graft.ops.Geocode.forwardIndexedFat]] matches doc windows against:
+    * [[gridEntries]]' columns plus the index type and the rank-time feature
+    * payload (name, score, lon, lat) DENORMALIZED into the index row — the
+    * "fat" index. D4 name-verify is an in-row `phrase = name` predicate, so
+    * no per-candidate feature join (a full shuffle of the candidate frame
+    * on feature_id) enters the query plan. The payload costs one string +
+    * three doubles (~40 B) a row; at the 10^7-feature design point that is
+    * well under 1 GB of extra table for one fewer big-side exchange on
+    * EVERY query — the classic index-only-scan trade. */
   def gazetteerGridFat(gaz: DataFrame, zPlace: Int, zRegion: Int): DataFrame =
     gaz.select(
       phraseId(col("name")).as("phrase_id"),

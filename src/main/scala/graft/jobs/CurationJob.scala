@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -77,9 +77,12 @@ object CurationJob {
           throw new RuntimeException(s"injected failure after ${processed.length} stages")
         val t0 = System.nanoTime()
         val rowsIn = cur.count()
-        st.apply(cur).write.mode("overwrite").parquet(path)
+        // rows_out is counted by the write itself, not by a re-read
+        val written = new Observation(s"stage-${st.name}")
+        st.apply(cur).observe(written, count(lit(1)).as("rows"))
+          .write.mode("overwrite").parquet(path)
+        val rowsOut = written.get("rows")
         cur = spark.read.parquet(path)
-        val rowsOut = cur.count()
         val ms = (System.nanoTime() - t0) / 1000000
         graft.index.TableIO.appendLine(s"$outDir/_lineage.jsonl",
           s"""{"stage": "${st.name}", "rows_in": $rowsIn, "rows_out": $rowsOut, "wall_ms": $ms, "ts": ${System.currentTimeMillis()}, "status": "done"}""")

@@ -24,14 +24,15 @@ object ForwardJob {
       .withColumn("hkey", F.hilbertCell(F.parentCell(col("cell"), lit(8)))),
       outDir, nRanges, failAfter)
 
-  /** The at-scale variant: forward geocode over the BUILT grid index (no
-    * gazetteer broadcast — the 10^7-feature path), same per-Hilbert-range
-    * checkpoint + resume machinery. Row-identical to [[run]] over the same
-    * gazetteer. */
+  /** The at-scale variant: forward geocode over the BUILT fat grid index
+    * (`Geocode.forwardIndexedFat`: one map-only stage under its broadcast
+    * ceiling, the shuffled grid match beyond it — the 10^7-feature path),
+    * same per-Hilbert-range checkpoint + resume machinery. Row-identical to
+    * [[run]] over the same gazetteer. */
   def runIndexed(spark: SparkSession, sfDir: String, outDir: String,
                  nRanges: Int = 8, failAfter: Option[Int] = None): Seq[Int] =
-    runRanges(spark, Geocode.forwardIndexed(Synth.docPages(spark, sfDir),
-        graft.queries.Queries.gazGridParquet(spark), Synth.gazDf(spark))
+    runRanges(spark, Geocode.forwardIndexedFat(Synth.docPages(spark, sfDir),
+        graft.queries.Queries.gazGridFatParquet(spark))
       .withColumn("hkey", F.hilbertCell(F.parentCell(col("cell"), lit(8)))),
       outDir, nRanges, failAfter)
 

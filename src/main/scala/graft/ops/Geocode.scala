@@ -138,7 +138,7 @@ object Geocode {
       graft.index.GazDict.buildFromGrid(grid, n))
 
   /** Broadcast sorted distinct phrase-id array of a grid index (the
-    * [[forwardIndexed]] semi-join prefilter — a per-index-epoch build, not
+    * semi-join prefilter of [[fatGridMatch]] — a per-index-epoch build, not
     * a per-query collect). */
   private val phraseIdMemo = new BcMemo[PlanKey, Array[Long]]()
 
@@ -221,7 +221,7 @@ object Geocode {
 
   /** B4+B8+D1: mention extraction via token windows matched against the
     * gazetteer names (the literal-gazetteer path; the at-scale path is
-    * [[forwardIndexed]] which equi-joins phrase ids against the built grid
+    * [[forwardIndexedFat]], which matches phrase ids against the built grid
     * index instead of broadcasting names). Emits the matched name's
     * first-occurrence `pos` and its token count `plen`.
     *
@@ -233,7 +233,7 @@ object Geocode {
                extraCols: Seq[String] = Seq("qlon", "qlat"),
                dictCeiling: Long = BroadcastDictCeiling): DataFrame = {
     // ceiling probe: an over-ceiling gazetteer shuffles on the phrase key
-    // instead of broadcasting (the forwardIndexed grid join is the preferred
+    // instead of broadcasting (the forwardIndexedFat grid join is the preferred
     // at-scale form; this keeps the literal-gazetteer surface correct too)
     val gazSide =
       if (memoCount(gaz) <= dictCeiling) broadcast(gaz) else gaz.hint("shuffle_hash")
@@ -676,42 +676,11 @@ object Geocode {
                                    dedupe: Boolean): DataFrame =
     stackRankPages(mentions(docs, gaz).withColumn("cell", indexCell), k, dedupe, gridCap = false)
 
-  /** D1/A3/H7 at scale: forward geocode over the BUILT grid index instead of
-    * a broadcast name list — the path that survives a 10^7-feature gazetteer.
-    *
-    *   1. doc token windows → `phrase_id = xxhash64(phrase)`, prefiltered
-    *      map-side ([[gridWindows]]);
-    *   2. equi-join against the grid index on phrase_id (shuffle-hash — the
-    *      index is 10s of GB at the design point, never broadcastable);
-    *      the index row carries (cell, feature_id, relev_q, score_q);
-    *   3. F2 grid-stage prune ([[gridPrune]]) — the quantized ranking is
-    *      exactly what carmen's coalesce consumes before verify;
-    *   4. D4 verify: join the feature table by id and require the feature's
-    *      name to equal the matched phrase (drops phrase-id hash collisions);
-    *   5. one doc_id exchange → the stack-and-rank kernel per page
-    *      ([[stackRankPages]]), re-using the index cells (never recomputed).
-    *
-    * Row-identical to [[forward]] over the same gazetteer as long as
-    * [[GridStackCap]] exceeds the per-phrase feature count (GeocoderSpec
-    * asserts this at sf0.001).
-    */
-  def forwardIndexed(docs: DataFrame, grid: DataFrame, features: DataFrame,
-                     k: Int = 5, dedupe: Boolean = false,
-                     dictCeiling: Long = BroadcastDictCeiling): DataFrame = {
-    val windows = gridWindows(docs, features, grid, dictCeiling)
-    val pruned = gridPrune(windows.join(grid.hint("shuffle_hash"), "phrase_id"))
-      .drop("gr", "typ")
-    val feats = features.select(col("gid"), col("name"), col("typ"),
-      col("score"), col("glon"), col("glat"))
-    stackRankPages(pruned
-      .join(feats.hint("shuffle_hash"), pruned("feature_id") === feats("gid"))
-      .filter(col("phrase") === col("name")), k, dedupe, gridCap = false)
-  }
-
-  /** [[forwardIndexed]] over a FAT grid index
-    * ([[graft.index.IndexBuild.gazetteerGridFat]]): the index row carries the
-    * rank-time payload (name, typ, score, glon, glat), so it alone is the
-    * gazetteer. `doc_id` is the page key and must be unique and non-null,
+  /** D1/A3/H7 at scale: forward geocode over the BUILT grid index
+    * ([[graft.index.IndexBuild.gazetteerGridFat]]) instead of a broadcast
+    * name list — the path that survives a 10^7-feature gazetteer. The index row carries
+    * the rank-time payload (name, typ, score, glon, glat), so it alone is
+    * the gazetteer. `doc_id` is the page key and must be unique and non-null,
     * as in [[forward]].
     *
     * Up to [[BroadcastGazCeiling]] matchable grid rows, and with one name
@@ -724,25 +693,32 @@ object Geocode {
     * or on a phrase_id shared by two names, the grid is never collected
     * and [[forwardIndexedFatWith]]'s shuffled body runs.
     *
-    * Row-identical to [[forward]] and [[forwardIndexed]] under the same
+    * Row-identical to [[forward]] under the same
     * [[GridStackCap]]-exceeds-per-phrase-fanout condition (GeocoderSpec);
     * verify runs BEFORE the cap (a row whose phrase_id is not its name's
     * never matches), so hash-collision ghosts can never crowd real
     * candidates out of the cap. */
   def forwardIndexedFat(docs: DataFrame, fatGrid: DataFrame,
-                        k: Int = 5, dedupe: Boolean = false,
-                        dictCeiling: Long = BroadcastDictCeiling): DataFrame =
-    forwardIndexedFatWith(docs, fatGrid, k, dedupe, dictCeiling, BroadcastGazCeiling)
+                        k: Int = 5, dedupe: Boolean = false): DataFrame =
+    forwardIndexedFatWith(docs, fatGrid, k, dedupe, BroadcastDictCeiling, BroadcastGazCeiling)
 
-  /** [[forwardIndexedFat]] with its broadcast ceiling as a parameter; the
-    * over-ceiling body is the shuffled grid match and the test reference:
-    * D4 verify is a residual predicate of the phrase_id match join (no
-    * feature-table join), then the verified hits take one doc_id exchange
-    * to the stack-and-rank kernel, which runs the F2 grid-stage prune
-    * in-row (it sees every hit of the page): two exchanges on the doc
-    * lineage, one hash join, no window and no persist. Rows sharing a
-    * `doc_id` pool their hits. `dictCeiling` tiers this path's phrase
-    * prefilter only. */
+  /** [[forwardIndexedFat]] with its ceilings as parameters. The
+    * over-ceiling body is the shuffled grid match, the
+    * `fwd_geocode_indexed` query and the test reference:
+    *
+    *   1. doc token windows → `phrase_id = xxhash64(phrase)`, prefiltered
+    *      map-side ([[fatGridMatch]]);
+    *   2. equi-join against the grid on phrase_id (shuffle-hash — the index
+    *      is 10s of GB at the design point, never broadcastable), with D4
+    *      verify as a residual predicate of that join (no feature-table
+    *      join);
+    *   3. one doc_id exchange → the stack-and-rank kernel per page
+    *      ([[stackRankPages]]), which runs the F2 grid-stage prune in-row
+    *      (it sees every hit of the page) and re-uses the index cells.
+    *
+    * Two exchanges on the doc lineage, one hash join, no window and no
+    * persist. Rows sharing a `doc_id` pool their hits. `dictCeiling` tiers
+    * this path's phrase prefilter only. */
   private[graft] def forwardIndexedFatWith(docs: DataFrame, fatGrid: DataFrame, k: Int,
                                            dedupe: Boolean, dictCeiling: Long,
                                            gridCeiling: Long): DataFrame = {
@@ -768,9 +744,8 @@ object Geocode {
     * level. */
   def forwardIndexedMultiFat(docs: DataFrame, fatGrid: DataFrame,
                              levels: Seq[IndexLevel] = DefaultLevels,
-                             k: Int = 5,
-                             dictCeiling: Long = BroadcastDictCeiling): DataFrame = {
-    val verified = gridPrune(fatGridMatch(docs, fatGrid, dictCeiling))
+                             k: Int = 5): DataFrame = {
+    val verified = gridPrune(fatGridMatch(docs, fatGrid, BroadcastDictCeiling))
       .select(col("doc_id"), col("qlon"), col("qlat"),
         col("feature_id").as("gid"), col("name"), col("typ"), col("score"),
         col("glon"), col("glat"),
@@ -778,16 +753,6 @@ object Geocode {
       .persist()
     rank(coalesceN(verified, levels), k, extraCols = Seq("chain"))
   }
-
-  /** The grid-match front of the indexed paths: token windows up to the
-    * longest name in `names` → `phrase_id = xxhash64(phrase)` (map-side) →
-    * the tiered semi-join prefilter against `grid` ([[prefilterPhrases]]:
-    * exact set ≤ ceiling, Bloom ≤ 8× ceiling, unfiltered beyond), so
-    * windows that match no phrase die BEFORE the phrase_id exchange. */
-  private def gridWindows(docs: DataFrame, names: DataFrame, grid: DataFrame,
-                          dictCeiling: Long): DataFrame =
-    prefilterPhrases(tokenWindowsPos(docs, maxNameTokens(names))
-      .withColumn("phrase_id", xxhash64(col("phrase"))), grid, dictCeiling)
 
   /** F2 grid-stage prune: per (doc, phrase, typ) keep the [[GridStackCap]]
     * best index entries by (relev_q desc, score_q desc, id). Its partition
@@ -799,8 +764,12 @@ object Geocode {
           .orderBy(col("relev_q").desc, col("score_q").desc, col("feature_id").asc)))
       .filter(col("gr") <= GridStackCap)
 
-  /** Match join with in-row D4 verify over a FAT grid index. Verify is
-    * written as a RANGE pair (<= AND >=), not `===`: Catalyst extracts any
+  /** The grid match of the indexed paths: token windows up to the grid's
+    * longest name → `phrase_id = xxhash64(phrase)` (map-side) → the tiered
+    * semi-join prefilter ([[prefilterPhrases]]: exact set ≤ ceiling, Bloom
+    * ≤ 8× ceiling, unfiltered beyond), so windows that match no phrase die
+    * BEFORE the phrase_id exchange → the match join with in-row D4 verify.
+    * Verify is written as a RANGE pair (<= AND >=), not `===`: Catalyst extracts any
     * one-side-each equality into the join KEYS, which would re-key the
     * exchange on (phrase_id, phrase) — and [[forwardIndexedMultiFat]]'s
     * grid-prune window (clustered by doc_id, phrase_id, typ) would then need
@@ -809,7 +778,8 @@ object Geocode {
     * doc_id-keyed stack join — see [[stackAndUnion]]). */
   private def fatGridMatch(docs: DataFrame, fatGrid: DataFrame,
                            dictCeiling: Long): DataFrame = {
-    val windows = gridWindows(docs, fatGrid, fatGrid, dictCeiling)
+    val windows = prefilterPhrases(tokenWindowsPos(docs, maxNameTokens(fatGrid))
+      .withColumn("phrase_id", xxhash64(col("phrase"))), fatGrid, dictCeiling)
     windows.join(fatGrid.hint("shuffle_hash"),
         windows("phrase_id") === fatGrid("phrase_id") &&
           col("phrase") <= col("name") && col("phrase") >= col("name"))

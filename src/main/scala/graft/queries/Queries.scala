@@ -30,7 +30,8 @@ object Queries {
     "CASE WHEN rid IS NULL THEN w ELSE len(list_distinct(list_cat(string_split(name, ' '), string_split(rname, ' ')))) / 3.0 END"
 
   /** The forward-geocode SQL pipeline over an effective gazetteer CTE `gaz`
-    * — shared by fwd_geocode / fwd_geocode_indexed (same rows by D4-verify
+    * — shared by fwd_geocode and its grid-index forms fwd_geocode_indexed,
+    * fwd_geocode_fat and fwd_geocode_bucketed (same rows by D4-verify
     * equivalence), fwd_stacks (C2 filter) and fwd_dedup (E4 result dedupe). */
   private def forwardSql(gazCtes: String, stackFilter: Option[Seq[String]],
                          dedup: Boolean): String = {
@@ -210,64 +211,53 @@ object Queries {
   }
 
   // =================================================================
-  // D1/A3/H7: forward geocode over the BUILT grid index (phrase_id
-  // equi-join against the persisted index table; relev_q/score_q
-  // consumed by the grid-stage prune; D4 name-verify) — row-identical
-  // to fwd_geocode, so it shares the oracle.
+  // D1/A3/H7: forward geocode over the BUILT fat grid index (phrase_id
+  // equi-join against the persisted index table; D4 name-verify in the
+  // index row; relev_q/score_q consumed by the grid-stage prune) —
+  // row-identical to fwd_geocode, so it shares the oracle.
   // =================================================================
 
-  private val gazGridPath = new java.util.concurrent.atomic.AtomicReference[String](null)
+  /** Where a built index table lives: `SPARK_GRAFT_TMP/<name>` when set
+    * (cluster launches point it at a shared scratch path), else a per-JVM
+    * java.nio temp dir — never a hard-coded sandbox path. */
+  private def indexPath(name: String): String =
+    sys.env.get("SPARK_GRAFT_TMP").map(t => s"$t/$name")
+      .getOrElse(java.nio.file.Files.createTempDirectory(s"graft-$name").resolve(name).toString)
 
-  /** The gazetteer grid index as an on-disk parquet table (built once per
-    * JVM, sorted by phrase_id so the probe join scans a real index table —
-    * at the design point this is the Hilbert-range-partitioned table that
-    * IndexBuild.build writes per index epoch).
-    *
-    * Location: `SPARK_GRAFT_TMP` when set (cluster launches point it at a
-    * shared scratch path), else a per-JVM java.nio temp dir — never a
-    * hard-coded sandbox path. */
-  def gazGridParquet(spark: SparkSession): DataFrame = this.synchronized {
-    var p = gazGridPath.get
-    if (p == null) {
-      p = sys.env.get("SPARK_GRAFT_TMP")
-        .map(t => s"$t/gazgrid")
-        .getOrElse(java.nio.file.Files.createTempDirectory("graft-gazgrid")
-          .resolve("gazgrid").toString)
-      graft.index.IndexBuild.gazetteerGrid(gazDf(spark), Geocode.ZPlace, Geocode.ZRegion)
-        .coalesce(1).sortWithinPartitions("phrase_id", "cell", "feature_id")
+  private val gridPaths = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** A grid index as an on-disk parquet table at [[indexPath]]`(name)`,
+    * built once per JVM and sorted by phrase_id so the probe join scans a
+    * real index table — at the design point this is the
+    * Hilbert-range-partitioned table that IndexBuild.build writes per index
+    * epoch. */
+  private def gridParquet(spark: SparkSession, name: String)(build: => DataFrame): DataFrame =
+    spark.read.parquet(gridPaths.computeIfAbsent(name, _ => {
+      val p = indexPath(name)
+      build.coalesce(1).sortWithinPartitions("phrase_id", "cell", "feature_id")
         .write.mode("overwrite").parquet(p)
-      gazGridPath.set(p)
-    }
-    spark.read.parquet(p)
-  }
-
-  def fwdGeocodeIndexed(spark: SparkSession, sfDir: String): DataFrame =
-    Geocode.forwardIndexed(docPages(spark, sfDir), gazGridParquet(spark), gazDf(spark))
-
-  private val gazGridFatPath = new java.util.concurrent.atomic.AtomicReference[String](null)
+      p
+    }))
 
   /** The FAT gazetteer grid index on disk (payload columns denormalized —
-    * [[graft.index.IndexBuild.gazetteerGridFat]]); same location policy as
-    * [[gazGridParquet]]. */
-  def gazGridFatParquet(spark: SparkSession): DataFrame = this.synchronized {
-    var p = gazGridFatPath.get
-    if (p == null) {
-      p = sys.env.get("SPARK_GRAFT_TMP")
-        .map(t => s"$t/gazgridfat")
-        .getOrElse(java.nio.file.Files.createTempDirectory("graft-gazgridfat")
-          .resolve("gazgridfat").toString)
-      graft.index.IndexBuild.gazetteerGridFat(gazDf(spark), Geocode.ZPlace, Geocode.ZRegion)
-        .coalesce(1).sortWithinPartitions("phrase_id", "cell", "feature_id")
-        .write.mode("overwrite").parquet(p)
-      gazGridFatPath.set(p)
-    }
-    spark.read.parquet(p)
-  }
+    * [[graft.index.IndexBuild.gazetteerGridFat]]). */
+  def gazGridFatParquet(spark: SparkSession): DataFrame =
+    gridParquet(spark, "gazgridfat")(
+      graft.index.IndexBuild.gazetteerGridFat(gazDf(spark), Geocode.ZPlace, Geocode.ZRegion))
+
+  /** Forward geocode over the fat grid index on its at-scale body: the
+    * shuffled phrase_id match join with in-row verify, which never
+    * broadcasts (`forwardIndexedFat` past its broadcast ceiling; with a
+    * grid ceiling of 0 the grid is never collected, at any scale factor).
+    * Row-identical to fwd_geocode, shares its oracle. */
+  def fwdGeocodeIndexed(spark: SparkSession, sfDir: String): DataFrame =
+    Geocode.forwardIndexedFatWith(docPages(spark, sfDir), gazGridFatParquet(spark), 5, false,
+      Geocode.BroadcastDictCeiling, gridCeiling = 0)
 
   /** Forward geocode over the FAT grid index: no feature join; under the
     * broadcast ceiling one map-only stage over the grid's dictionary, over
-    * it one fewer big-side exchange than fwd_geocode_indexed. Row-identical
-    * to fwd_geocode, shares its oracle. */
+    * it the shuffled body of fwd_geocode_indexed. Row-identical to
+    * fwd_geocode, shares its oracle. */
   def fwdGeocodeFat(spark: SparkSession, sfDir: String): DataFrame =
     Geocode.forwardIndexedFat(docPages(spark, sfDir), gazGridFatParquet(spark))
 
@@ -282,18 +272,13 @@ object Queries {
     * saves the index-side shuffle. Registered in the session catalog
     * (bucket metadata lives there); rebuilt lazily per catalog. */
   def gazGridFatBucketed(spark: SparkSession): DataFrame = this.synchronized {
-    if (!spark.catalog.tableExists(GazGridBucketedTable)) {
-      val p = sys.env.get("SPARK_GRAFT_TMP")
-        .map(t => s"$t/gazgridfatb")
-        .getOrElse(java.nio.file.Files.createTempDirectory("graft-gazgridfatb")
-          .resolve("gazgridfatb").toString)
+    if (!spark.catalog.tableExists(GazGridBucketedTable))
       graft.index.IndexBuild.gazetteerGridFat(gazDf(spark), Geocode.ZPlace, Geocode.ZRegion)
         .write.mode("overwrite")
         .bucketBy(32, "phrase_id").sortBy("phrase_id")
-        .option("path", p)
+        .option("path", indexPath("gazgridfatb"))
         .format("parquet")
         .saveAsTable(GazGridBucketedTable)
-    }
     spark.table(GazGridBucketedTable)
   }
 
@@ -304,26 +289,12 @@ object Queries {
   def fwdGeocodeBucketed(spark: SparkSession, sfDir: String): DataFrame =
     Geocode.forwardIndexedFat(docPages(spark, sfDir), gazGridFatBucketed(spark))
 
-  private val gazGridMultiFatPath = new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** The 4-level gazetteer as a FAT grid index (one leaf cell per feature at
-    * its type's zoom — [[graft.index.IndexBuild.gazetteerGridFatLevels]]);
-    * same location policy as [[gazGridParquet]]. */
-  def gazGridMultiFatParquet(spark: SparkSession): DataFrame = this.synchronized {
-    var p = gazGridMultiFatPath.get
-    if (p == null) {
-      p = sys.env.get("SPARK_GRAFT_TMP")
-        .map(t => s"$t/gazgridmfat")
-        .getOrElse(java.nio.file.Files.createTempDirectory("graft-gazgridmfat")
-          .resolve("gazgridmfat").toString)
+    * its type's zoom — [[graft.index.IndexBuild.gazetteerGridFatLevels]]). */
+  def gazGridMultiFatParquet(spark: SparkSession): DataFrame =
+    gridParquet(spark, "gazgridmfat")(
       graft.index.IndexBuild.gazetteerGridFatLevels(gazMultiDf(spark),
-          Geocode.DefaultLevels.map(l => (l.typ, l.zoom)))
-        .coalesce(1).sortWithinPartitions("phrase_id", "cell", "feature_id")
-        .write.mode("overwrite").parquet(p)
-      gazGridMultiFatPath.set(p)
-    }
-    spark.read.parquet(p)
-  }
+        Geocode.DefaultLevels.map(l => (l.typ, l.zoom))))
 
   /** N-level stack coalesce over the BUILT fat index (no gazetteer
     * broadcast) — the at-scale form of fwd_geocode_multi. Row-identical to

@@ -36,6 +36,12 @@ class CurationJobSpec extends SparkTestBase {
     val lineage = java.nio.file.Files.readAllLines(
       java.nio.file.Paths.get(out, "_lineage.jsonl"))
     assert(lineage.size == 6)
+    // rows_out, observed on the stage write, is the row count of the stage table
+    lineage.forEach { l =>
+      val stage = "\"stage\": \"([a-z_]+)\"".r.findFirstMatchIn(l).get.group(1)
+      val rowsOut = "\"rows_out\": (\\d+)".r.findFirstMatchIn(l).get.group(1).toLong
+      assert(rowsOut == spark.read.parquet(s"$out/stage=$stage").count(), l)
+    }
     val got = CurationJob.readFinal(spark, out)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(got == expect)

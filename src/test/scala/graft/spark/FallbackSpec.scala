@@ -680,10 +680,10 @@ class FallbackSpec extends SparkTestBase {
                        k: Int, dedupe: Boolean) =
     Geocode.rank(Geocode.coalesce2(Geocode.mentions(docs, gaz)), k, dedupe)
 
-  /** forwardStaged, forwardIndexedFat (shuffled, and fused unless `docs`
-    * repeat a doc_id: the fused path keeps one top-k per page row) and
-    * forwardIndexed over grids built from `gaz` ≡ `want` (default:
-    * [[composed]]) on sorted row lists, types included; returns the rows. */
+  /** forwardStaged and forwardIndexedFat over a grid built from `gaz`
+    * (shuffled, and fused unless `docs` repeat a doc_id: the fused path
+    * keeps one top-k per page row) ≡ `want` (default: [[composed]]) on
+    * sorted row lists, types included; returns the rows. */
   private def assertKernelPaths(what: String, docs: org.apache.spark.sql.DataFrame,
                                 gaz: org.apache.spark.sql.DataFrame, k: Int, dedupe: Boolean,
                                 want: Option[org.apache.spark.sql.DataFrame] = None,
@@ -694,9 +694,7 @@ class FallbackSpec extends SparkTestBase {
     val fatGrid = IndexBuild.gazetteerGridFat(gaz, Geocode.ZPlace, Geocode.ZRegion)
     (Seq(
       "staged" -> Geocode.forwardStaged(docs, gaz, k, dedupe),
-      "fat" -> fatShuffled(docs, fatGrid, k, dedupe),
-      "thin" -> Geocode.forwardIndexed(docs,
-        IndexBuild.gazetteerGrid(gaz, Geocode.ZPlace, Geocode.ZRegion), gaz, k, dedupe)) ++
+      "fat" -> fatShuffled(docs, fatGrid, k, dedupe)) ++
       (if (pooled) Nil else Seq("fat fused" -> Geocode.forwardIndexedFat(docs, fatGrid, k, dedupe)))
     ).foreach { case (path, df) =>
       val plan = df.queryExecution.executedPlan.toString
@@ -709,7 +707,7 @@ class FallbackSpec extends SparkTestBase {
     expected
   }
 
-  test("stack-and-rank kernel: staged, fat, thin and bucketed paths ≡ rank(coalesce2(mentions)) at sf0.001") {
+  test("stack-and-rank kernel: staged, fat and bucketed paths ≡ rank(coalesce2(mentions)) at sf0.001") {
     val docs = Synth.docPages(spark, sf)
     val gaz = Synth.gazDf(spark)
     val dup = Synth.dupGazDf(spark)
@@ -783,10 +781,7 @@ class FallbackSpec extends SparkTestBase {
         .orderBy(IndexBuild.relevQ(lit(1.0)).desc, IndexBuild.scoreQ(col("score")).desc, col("gid").asc)))
       .filter(col("gr") <= Geocode.GridStackCap).drop("gr")), 30)
     val metroGrid = IndexBuild.gazetteerGridFat(metroGaz, Geocode.ZPlace, Geocode.ZRegion)
-    val thin = Geocode.forwardIndexed(page,
-      IndexBuild.gazetteerGrid(metroGaz, Geocode.ZPlace, Geocode.ZRegion), metroGaz, 30)
     val want = fwdRows(capped)
-    assert(fwdRows(thin) == want)
     // the shuffled fat path caps in the kernel, the fused one at build time
     Seq("fat" -> fatShuffled(page, metroGrid, 30), "fat fused" -> Geocode.forwardIndexedFat(page, metroGrid, 30))
       .foreach { case (path, fat) =>

@@ -229,7 +229,7 @@ class GeocoderSpec extends SparkTestBase {
     assert(unc.filter(_.getLong(1) == 101L).head.getLong(5) == 17L)
   }
 
-  test("F1 StackRegionCap: staged, fat and thin kernel paths cap the 17-region page") {
+  test("F1 StackRegionCap: staged and fat kernel paths cap the 17-region page") {
     import spark.implicits._
     import graft.index.IndexBuild
     // the page of the test above, through every stack-and-rank kernel path
@@ -244,9 +244,7 @@ class GeocoderSpec extends SparkTestBase {
     Seq(
       "staged" -> Geocode.forwardStaged(doc17, gaz, 30, dedupe = false),
       "fat" -> Geocode.forwardIndexedFat(doc17,
-        IndexBuild.gazetteerGridFat(gaz, Geocode.ZPlace, Geocode.ZRegion), 30),
-      "thin" -> Geocode.forwardIndexed(doc17,
-        IndexBuild.gazetteerGrid(gaz, Geocode.ZPlace, Geocode.ZRegion), gaz, 30)
+        IndexBuild.gazetteerGridFat(gaz, Geocode.ZPlace, Geocode.ZRegion), 30)
     ).foreach { case (path, df) =>
       val got = df.collect()
       assert(rows(df) == want, path)

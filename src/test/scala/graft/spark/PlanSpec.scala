@@ -12,13 +12,12 @@ class PlanSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
 
-  /** fwd_geocode_fat / fwd_geocode_bucketed on forwardIndexedFat's
-    * shuffled body (with a grid ceiling of 0 the grid is never collected). */
-  private def fatShuffled(grid: org.apache.spark.sql.DataFrame) =
-    graft.ops.Geocode.forwardIndexedFatWith(graft.synth.Synth.docPages(spark, sf), grid, 5, false,
-      graft.ops.Geocode.BroadcastDictCeiling, gridCeiling = 0)
-  private def fatShuffledParquet = fatShuffled(Queries.gazGridFatParquet(spark))
-  private def fatShuffledBucketed = fatShuffled(Queries.gazGridFatBucketed(spark))
+  /** fwd_geocode_bucketed on forwardIndexedFat's shuffled body (with a
+    * grid ceiling of 0 the grid is never collected), as fwd_geocode_indexed
+    * runs it over the parquet index. */
+  private def fatShuffledBucketed =
+    graft.ops.Geocode.forwardIndexedFatWith(graft.synth.Synth.docPages(spark, sf),
+      Queries.gazGridFatBucketed(spark), 5, false, graft.ops.Geocode.BroadcastDictCeiling, gridCeiling = 0)
 
   test("fwd_geocode: one map-only stage over the broadcast gazetteer dictionary") {
     val p = plan(Queries.fwdGeocode(spark, "/root/testdata/sf0.001"))
@@ -137,36 +136,34 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
-  test("fwd_geocode_fat: verify is in-row — one fewer join/exchange than the skinny index") {
-    // FormattedMode lists each physical node ONCE in the details section
-    // (the simple toString re-prints the persisted subtree per
-    // InMemoryTableScan consumer, triple-counting the cached match join)
-    def fmt(df: org.apache.spark.sql.DataFrame): String =
-      df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-    val pFat = fmt(fatShuffledParquet)
-    val pSkinny = fmt(Queries.fwdGeocodeIndexed(spark, "/root/testdata/sf0.001"))
-    assert(!pFat.contains("BroadcastHashJoin") && !pFat.contains("BroadcastNestedLoopJoin"),
-      "fat-index path must not broadcast the index in any form")
-    assert(pFat.contains("long_set_contains"),
-      "semi-join reduction filter must run before the grid shuffle")
-    def nJoins(p: String) = "\\(\\d+\\) ShuffledHashJoin".r.findAllIn(p).size
-    def nExch(p: String) = "\\(\\d+\\) Exchange".r.findAllIn(p).size
-    assert(nJoins(pFat) == 1,
-      s"fat path should have exactly 1 shuffle join (match); got ${nJoins(pFat)}")
-    assert(nJoins(pSkinny) == 2, "skinny path pays the feature verify-join")
+  test("fwd_geocode_indexed: verify is in-row — one match join, the phrase_id pair and doc_id exchanges") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val df = Queries.fwdGeocodeIndexed(spark, sf)
+    val p = df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    def count(re: String) = re.r.findAllIn(p).size
+    assert(count("\\(\\d+\\) ShuffledHashJoin") == 1,
+      s"exactly 1 shuffle join (the phrase_id match; no feature verify-join):\n$p")
+    val keys = "Arguments: hashpartitioning\\((\\w+)#".r.findAllMatchIn(p).map(_.group(1)).toSeq.sorted
+    assert(count("\\(\\d+\\) Exchange") == 3 && keys == Seq("doc_id", "phrase_id", "phrase_id"),
+      s"exchanges must be the phrase_id pair and doc_id, got $keys:\n$p")
+    // the semi-join reduction runs map-side, under the windows' phrase_id exchange
+    val phys = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    val windowSide = phys.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.toString.contains("phrase_id") &&
+        e.child.treeString.contains("window_pos") => e.child.treeString
+    }
+    assert(windowSide.size == 1 && windowSide.head.contains("long_set_contains"),
+      s"the phrase prefilter must run before the windows' shuffle:\n$p")
     // stack and rank run in-row after one doc_id exchange: no window, no
-    // persisted frame, and the only exchanges are the phrase_id pair and doc_id
-    assert(!pFat.contains("Window") && !pFat.contains("InMemoryTableScan") &&
-      pFat.contains("GroupKernel"), s"fat path stacks and ranks in-row:\n$pFat")
-    val keys = "Arguments: hashpartitioning\\((\\w+)#".r.findAllMatchIn(pFat).map(_.group(1)).toSeq.sorted
-    assert(nExch(pFat) == 3 && keys == Seq("doc_id", "phrase_id", "phrase_id"),
-      s"fat exchanges must be the phrase_id pair and doc_id, got $keys:\n$pFat")
-    assert(nExch(pFat) < nExch(pSkinny),
-      s"fat path must shuffle strictly less (${nExch(pFat)} vs ${nExch(pSkinny)})")
-    // the grid-prune window must REUSE the match join's phrase_id exchange:
-    // verify stays a residual predicate, never a join key (re-keying the
-    // shuffle on (phrase_id, phrase) would force a window exchange of its own)
-    assert("hashpartitioning\\([^)]*phrase#".r.findAllIn(pFat).isEmpty,
+    // persisted frame
+    assert(!p.contains("Window") && !p.contains("InMemoryTableScan") && p.contains("GroupKernel"),
+      s"stack and rank run in-row:\n$p")
+    // verify stays a residual predicate, never a join key
+    assert("hashpartitioning\\([^)]*phrase#".r.findAllIn(p).isEmpty,
       "phrase must not become a shuffle key (verify is residual)")
   }
 
@@ -174,7 +171,7 @@ class PlanSpec extends SparkTestBase {
     def fmt(df: org.apache.spark.sql.DataFrame): String =
       df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
     val pBuck = fmt(fatShuffledBucketed)
-    val pFat = fmt(fatShuffledParquet)
+    val pFat = fmt(Queries.fwdGeocodeIndexed(spark, sf))
     def nExch(p: String) = "\\(\\d+\\) Exchange".r.findAllIn(p).size
     assert(pBuck.contains("SelectedBucketsCount"),
       s"index scan must be a bucketed scan:\n${pBuck.take(800)}")
@@ -183,7 +180,7 @@ class PlanSpec extends SparkTestBase {
     // row-identity with the parquet fat path (both share fwd_geocode's oracle,
     // but the bucketed catalog table never reaches the DuckDB gate directly)
     val a = fatShuffledBucketed.collect().toSet
-    val b = fatShuffledParquet.collect().toSet
+    val b = Queries.fwdGeocodeIndexed(spark, sf).collect().toSet
     assert(a == b, "bucketed path must be row-identical to the fat parquet path")
   }
 
