@@ -100,7 +100,7 @@ object Bench {
   private def inputTable(spark: SparkSession, sfDir: String, p: Pipeline, amp: Int): String = {
     val out = java.nio.file.Files.createTempDirectory("graft-bench-input")
       .resolve(s"amp$amp").toString
-    p.input(spark.read.parquet(s"$sfDir/documents.parquet")
+    p.input(graft.index.TableIO.read(spark, s"$sfDir/documents.parquet")
         .withColumn("rep", explode(sequence(lit(0), lit(amp - 1))))
         .withColumn("doc_id", col("doc_id") * amp + col("rep")))
       .repartition(32)

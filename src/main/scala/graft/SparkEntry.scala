@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.index.TableIO
 import graft.queries.Queries
 import graft.ops.{TextOps, Ann, Multimodal}
 import graft.synth.Synth
@@ -163,7 +164,7 @@ object SparkEntry {
     "asof_epoch" -> ((s, d) => Queries.asofEpoch(s, d)),
     "interval_join" -> ((s, d) => Queries.intervalJoin(s, d)),
     "quantiles_lang" -> ((s, d) =>
-      TextOps.quantilesByLang(s.read.parquet(s"$d/documents.parquet"))),
+      TextOps.quantilesByLang(TableIO.read(s, s"$d/documents.parquet"))),
     "knn_expand" -> ((s, d) =>
       ops.Geocode.knnExpanding(Synth.eventPoints(s, d),
         Synth.custFeatures(s, d).select(col("feature_id"), col("flon"), col("flat")), 8)),
@@ -212,7 +213,7 @@ object SparkEntry {
     // politeness-batched crawl scheduling: per-(host,batch) rank + slots
     "crawl_frontier" -> ((s, d) => Queries.crawlFrontier(s, d)),
     // KMV k-minimum-values distinct sketch per lang (bigram hashes)
-    "kmv_distinct" -> ((s, d) => TextOps.kmvDistinct(s.read.parquet(s"$d/documents.parquet"))),
+    "kmv_distinct" -> ((s, d) => TextOps.kmvDistinct(TableIO.read(s, s"$d/documents.parquet"))),
     // union area per group via coordinate-compression sweep (dissolve)
     "rect_dissolve" -> ((s, d) => Queries.rectDissolve(s, d)),
     // Sort-Tile-Recursive leaf packing of the feature dim (partitioner build)
@@ -224,7 +225,7 @@ object SparkEntry {
     // DTW trajectory-similarity join, origin-blocked + candidate-capped
     "dtw_tracks" -> ((s, d) => Queries.dtwTracks(s, d)),
     // per-(term, crawl-batch) burstiness z-scores, integer deviations
-    "term_burst" -> ((s, d) => TextOps.termBurst(s.read.parquet(s"$d/documents.parquet"))),
+    "term_burst" -> ((s, d) => TextOps.termBurst(TableIO.read(s, s"$d/documents.parquet"))),
     // HMM map matching: Viterbi decode over snap candidates, 7 DP rounds
     "viterbi_match" -> ((s, d) => Queries.viterbiMatch(s, d)),
     // overlay analysis: Liang-Barsky clipped road length per zone rect
@@ -256,140 +257,140 @@ object SparkEntry {
       ops.Raster.rasterTiles(s, Synth.custFeatures(s, d), 8)
         .select(col("cell"), col("n_features"), col("pop"))),
     // --- training-data pipeline ops ---
-    "dedup_exact" -> ((s, d) => TextOps.dedupExact(s.read.parquet(s"$d/documents.parquet"))),
+    "dedup_exact" -> ((s, d) => TextOps.dedupExact(TableIO.read(s, s"$d/documents.parquet"))),
     "dedup_minhash" -> ((s, d) =>
-      TextOps.dedupMinHash(TextOps.withMutatedCopies(s.read.parquet(s"$d/documents.parquet")))),
+      TextOps.dedupMinHash(TextOps.withMutatedCopies(TableIO.read(s, s"$d/documents.parquet")))),
     "dedup_simhash" -> ((s, d) =>
-      TextOps.dedupSimHash(TextOps.withMutatedCopies(s.read.parquet(s"$d/documents.parquet")))),
+      TextOps.dedupSimHash(TextOps.withMutatedCopies(TableIO.read(s, s"$d/documents.parquet")))),
     "dedup_winnow" -> ((s, d) =>
-      TextOps.dedupWinnow(TextOps.withMutatedCopies(s.read.parquet(s"$d/documents.parquet")))),
+      TextOps.dedupWinnow(TextOps.withMutatedCopies(TableIO.read(s, s"$d/documents.parquet")))),
     "ngram_jaccard" -> ((s, d) =>
-      TextOps.ngramJaccard(TextOps.withMutatedCopies(s.read.parquet(s"$d/documents.parquet")))),
+      TextOps.ngramJaccard(TextOps.withMutatedCopies(TableIO.read(s, s"$d/documents.parquet")))),
     "dup_clusters" -> ((s, d) =>
       TextOps.dupClusters(TextOps.ngramJaccard(
-        TextOps.withMutatedCopies(s.read.parquet(s"$d/documents.parquet"))))),
+        TextOps.withMutatedCopies(TableIO.read(s, s"$d/documents.parquet"))))),
     "sample_stratified" -> ((s, d) =>
-      TextOps.stratifiedSample(s.read.parquet(s"$d/documents.parquet"))),
+      TextOps.stratifiedSample(TableIO.read(s, s"$d/documents.parquet"))),
     // Efraimidis-Spirakis weighted sample per lang (exponential keys)
     "sample_weighted" -> ((s, d) =>
-      TextOps.weightedSample(s.read.parquet(s"$d/documents.parquet"))),
+      TextOps.weightedSample(TableIO.read(s, s"$d/documents.parquet"))),
     // DSIR importance resampling: hashed-unigram target/raw models,
     // quantized log-ratio weights, deterministic Gumbel-top-k
     "dsir_select" -> ((s, d) =>
-      TextOps.dsirSelect(s.read.parquet(s"$d/documents.parquet"))),
-    "lang_id" -> ((s, d) => TextOps.langId(s.read.parquet(s"$d/documents.parquet"))),
+      TextOps.dsirSelect(TableIO.read(s, s"$d/documents.parquet"))),
+    "lang_id" -> ((s, d) => TextOps.langId(TableIO.read(s, s"$d/documents.parquet"))),
     "lang_id_ngram" -> ((s, d) =>
-      TextOps.langIdNgram(s.read.parquet(s"$d/documents.parquet"))),
+      TextOps.langIdNgram(TableIO.read(s, s"$d/documents.parquet"))),
     "lang_id_wide" -> ((s, d) =>
-      TextOps.langIdNgramJoin(s.read.parquet(s"$d/documents.parquet"),
+      TextOps.langIdNgramJoin(TableIO.read(s, s"$d/documents.parquet"),
         TextOps.langNgramProfilesWide)),
-    "quality_score" -> ((s, d) => TextOps.qualityScore(s.read.parquet(s"$d/documents.parquet"))),
+    "quality_score" -> ((s, d) => TextOps.qualityScore(TableIO.read(s, s"$d/documents.parquet"))),
     "quality_repetition" -> ((s, d) =>
-      TextOps.qualityRepetition(s.read.parquet(s"$d/documents.parquet"))),
+      TextOps.qualityRepetition(TableIO.read(s, s"$d/documents.parquet"))),
     "pii_scrub" -> ((s, d) =>
-      TextOps.piiScrub(TextOps.withPiiPlanted(s.read.parquet(s"$d/documents.parquet")))),
+      TextOps.piiScrub(TextOps.withPiiPlanted(TableIO.read(s, s"$d/documents.parquet")))),
     "url_dedup" -> ((s, d) =>
-      TextOps.urlDedup(TextOps.syntheticUrls(s.read.parquet(s"$d/documents.parquet")))),
+      TextOps.urlDedup(TextOps.syntheticUrls(TableIO.read(s, s"$d/documents.parquet")))),
     // C4-style cross-doc line dedup: boilerplate lines (planted by the
     // withLines fixture) survive only at their corpus-wide first occurrence
     "line_dedup" -> ((s, d) =>
-      TextOps.lineDedup(TextOps.withLines(s.read.parquet(s"$d/documents.parquet")))),
+      TextOps.lineDedup(TextOps.withLines(TableIO.read(s, s"$d/documents.parquet")))),
     // exact substring dedup (Lee et al. ExactSubstr, k-gram granular): the
     // mutated clones plant long shared substrings at any SF
     "dedup_substr" -> ((s, d) =>
       TextOps.dedupSubstr(TextOps.withMutatedCopies(
-        s.read.parquet(s"$d/documents.parquet")))),
+        TableIO.read(s, s"$d/documents.parquet")))),
     // data-mixing stage: per-domain stats + temperature-sampled mixture
     // weights (α=1/2 — the one exponent that is oracle-exact) over a
     // skewed synthetic host histogram
     "domain_mix" -> ((s, d) =>
-      TextOps.domainMix(TextOps.syntheticHosts(s.read.parquet(s"$d/documents.parquet")))),
-    "token_count" -> ((s, d) => TextOps.tokenCount(s.read.parquet(s"$d/documents.parquet"))),
+      TextOps.domainMix(TextOps.syntheticHosts(TableIO.read(s, s"$d/documents.parquet")))),
+    "token_count" -> ((s, d) => TextOps.tokenCount(TableIO.read(s, s"$d/documents.parquet"))),
     // HLL distinct-token sketch per language — fully mirrored integer
     // registers (SqlHash FNV + bin()-rho), exact count alongside
-    "hll_distinct" -> ((s, d) => TextOps.hllDistinct(s.read.parquet(s"$d/documents.parquet"))),
+    "hll_distinct" -> ((s, d) => TextOps.hllDistinct(TableIO.read(s, s"$d/documents.parquet"))),
     // Count-Min sketch (4×1024, Kirsch–Mitzenmacher row hashes) — point
     // estimates vs exact counts for the frozen vocab terms; fully mirrored
-    "cms_topk" -> ((s, d) => TextOps.cmsTopk(s.read.parquet(s"$d/documents.parquet"))),
+    "cms_topk" -> ((s, d) => TextOps.cmsTopk(TableIO.read(s, s"$d/documents.parquet"))),
     // positional phrase search: slot-vote aggregation (one shuffle)
     // replaces the n-way postings self-join; broadcast phrase-slot dim
-    "phrase_search" -> ((s, d) => TextOps.phraseSearch(s.read.parquet(s"$d/documents.parquet"))),
+    "phrase_search" -> ((s, d) => TextOps.phraseSearch(TableIO.read(s, s"$d/documents.parquet"))),
     // Zipf rank-frequency power-law fit over the top-k vocabulary —
     // integer-quantized regression sums, exact until the final division
-    "zipf_fit" -> ((s, d) => TextOps.zipfFit(s.read.parquet(s"$d/documents.parquet"))),
+    "zipf_fit" -> ((s, d) => TextOps.zipfFit(TableIO.read(s, s"$d/documents.parquet"))),
     // global bigram LM counts, top-100 (map-combined groupBy + TakeOrdered)
-    "ngram_counts" -> ((s, d) => TextOps.ngramCounts(s.read.parquet(s"$d/documents.parquet"))),
+    "ngram_counts" -> ((s, d) => TextOps.ngramCounts(TableIO.read(s, s"$d/documents.parquet"))),
     // full-text retrieval: BM25 top-k per fixed query set; per-doc TF-IDF
     // keywords — per-term scores int-quantized BEFORE summing so the agg is
     // order-independent (same discipline as ann_cosine's integer dot)
     "bm25_topk" -> ((s, d) =>
-      TextOps.bm25TopK(s.read.parquet(s"$d/documents.parquet"))),
+      TextOps.bm25TopK(TableIO.read(s, s"$d/documents.parquet"))),
     "keywords_tfidf" -> ((s, d) =>
-      TextOps.keywordsTfIdf(s.read.parquet(s"$d/documents.parquet"))),
+      TextOps.keywordsTfIdf(TableIO.read(s, s"$d/documents.parquet"))),
     // unigram-LM perplexity gate (CCNet-style) and eval-set n-gram
     // decontamination (GPT-3-style) — the two classic corpus scrubs
     "lm_perplexity" -> ((s, d) =>
-      TextOps.lmPerplexity(s.read.parquet(s"$d/documents.parquet"))),
+      TextOps.lmPerplexity(TableIO.read(s, s"$d/documents.parquet"))),
     // planted contamination: the mutated copies share 5-gram shingles with
     // their originals, so eval-slice members flag their train-side twins
     "decontaminate" -> ((s, d) =>
       TextOps.decontaminate(TextOps.withMutatedCopies(
-        s.read.parquet(s"$d/documents.parquet")))),
+        TableIO.read(s, s"$d/documents.parquet")))),
     // the COMPOSED curation scrub: every gate above as independent per-doc
     // flags conjoined into the final keep (the sequential materialized form
     // is graft.jobs.CurationJob)
     "corpus_curate" -> ((s, d) =>
       TextOps.curate(TextOps.curationFixture(
-        s.read.parquet(s"$d/documents.parquet")))),
+        TableIO.read(s, s"$d/documents.parquet")))),
     "doc_fingerprint" -> ((s, d) =>
-      TextOps.docFingerprints(s.read.parquet(s"$d/documents.parquet"))),
+      TextOps.docFingerprints(TableIO.read(s, s"$d/documents.parquet"))),
     "ann_cosine" -> ((s, d) =>
-      Ann.bruteForceTopK(s.read.parquet(s"$d/embeddings.parquet"), 50, 5)),
+      Ann.bruteForceTopK(TableIO.read(s, s"$d/embeddings.parquet"), 50, 5)),
     "ann_lsh" -> ((s, d) =>
-      Ann.lshTopK(s.read.parquet(s"$d/embeddings.parquet"), 50, 5)),
+      Ann.lshTopK(TableIO.read(s, s"$d/embeddings.parquet"), 50, 5)),
     // occupancy-adaptive multi-probe: probe list per (query, table) cut once
     // the probed buckets already hold `budget` corpus vectors
     "ann_lsh_adaptive" -> ((s, d) =>
-      Ann.lshTopKAdaptive(s.read.parquet(s"$d/embeddings.parquet"), 50, 5, budget = 8)),
+      Ann.lshTopKAdaptive(TableIO.read(s, s"$d/embeddings.parquet"), 50, 5, budget = 8)),
     // nList=16 is the frozen ORACLE variant (the SQL mirror's centroid CTE);
     // the library default derives nList from the corpus count — see
     // Ann.derivedNList* and the AnnSpec sub-quadratic guard
     "ann_ivf" -> ((s, d) =>
-      Ann.ivfTopK(s.read.parquet(s"$d/embeddings.parquet"), 50, 5, nList0 = 16)),
+      Ann.ivfTopK(TableIO.read(s, s"$d/embeddings.parquet"), 50, 5, nList0 = 16)),
     // one-Lloyd-round trained centroids (spherical k-means step, exact
     // reproducible arithmetic — the oracle replays the training round)
     "ann_ivf_trained" -> ((s, d) =>
-      Ann.ivfTopKTrained(s.read.parquet(s"$d/embeddings.parquet"), 50, 5, nList0 = 16)),
+      Ann.ivfTopKTrained(TableIO.read(s, s"$d/embeddings.parquet"), 50, 5, nList0 = 16)),
     // product quantization + ADC (per-subspace trained codebooks; corpus
     // scored through its 4-int codes and a broadcast query lookup table)
     "ann_pq" -> ((s, d) =>
-      Ann.pqTopK(s.read.parquet(s"$d/embeddings.parquet"), 50, 5)),
+      Ann.pqTopK(TableIO.read(s, s"$d/embeddings.parquet"), 50, 5)),
     "dedup_embed" -> ((s, d) =>
-      Ann.dedupEmbed(s.read.parquet(s"$d/embeddings.parquet"), nList0 = 16)),
+      Ann.dedupEmbed(TableIO.read(s, s"$d/embeddings.parquet"), nList0 = 16)),
     // multi-round Lloyd k-means (the oracle replays all 3 training rounds
     // in unrolled CTEs) and SemDeDup-style within-cluster semantic dedup
     "embed_kmeans" -> ((s, d) =>
-      Ann.kmeansAssign(s.read.parquet(s"$d/embeddings.parquet"), rounds = 3, nList0 = 16)),
+      Ann.kmeansAssign(TableIO.read(s, s"$d/embeddings.parquet"), rounds = 3, nList0 = 16)),
     "semantic_dedup" -> ((s, d) =>
-      Ann.semanticDedup(s.read.parquet(s"$d/embeddings.parquet"), rounds = 3, nList0 = 16)),
+      Ann.semanticDedup(TableIO.read(s, s"$d/embeddings.parquet"), rounds = 3, nList0 = 16)),
     // SSL-prototypes pruning: keep the least prototypical examples per
     // trained cluster (cosine-to-centroid rank, hardest-first)
     "proto_prune" -> ((s, d) =>
-      Ann.protoPrune(s.read.parquet(s"$d/embeddings.parquet"), rounds = 3, nList0 = 16)),
+      Ann.protoPrune(TableIO.read(s, s"$d/embeddings.parquet"), rounds = 3, nList0 = 16)),
     // REAL media decode (JDK ImageIO): deterministic PNG synthesis is the
     // ground truth; decode/resize/frame-parse must recover it (oracles are
     // closed forms over the synthesis parameters / pixel formula)
-    "mm_decode" -> ((s, d) => Multimodal.decodeMeta(s, s.read.parquet(s"$d/documents.parquet"))),
-    "mm_frames" -> ((s, d) => Multimodal.frameSample(s, s.read.parquet(s"$d/documents.parquet"))),
-    "mm_decode_jpeg" -> ((s, d) => Multimodal.decodeJpeg(s, s.read.parquet(s"$d/documents.parquet"))),
-    "mm_frames_gif" -> ((s, d) => Multimodal.frameSampleGif(s, s.read.parquet(s"$d/documents.parquet"))),
-    "mm_features" -> ((s, d) => Multimodal.features(s, s.read.parquet(s"$d/documents.parquet"))),
-    "mm_resize" -> ((s, d) => Multimodal.resize(s, s.read.parquet(s"$d/documents.parquet"))),
-    "mm_audio" -> ((s, d) => Multimodal.decodeAudio(s, s.read.parquet(s"$d/documents.parquet"))),
+    "mm_decode" -> ((s, d) => Multimodal.decodeMeta(s, TableIO.read(s, s"$d/documents.parquet"))),
+    "mm_frames" -> ((s, d) => Multimodal.frameSample(s, TableIO.read(s, s"$d/documents.parquet"))),
+    "mm_decode_jpeg" -> ((s, d) => Multimodal.decodeJpeg(s, TableIO.read(s, s"$d/documents.parquet"))),
+    "mm_frames_gif" -> ((s, d) => Multimodal.frameSampleGif(s, TableIO.read(s, s"$d/documents.parquet"))),
+    "mm_features" -> ((s, d) => Multimodal.features(s, TableIO.read(s, s"$d/documents.parquet"))),
+    "mm_resize" -> ((s, d) => Multimodal.resize(s, TableIO.read(s, s"$d/documents.parquet"))),
+    "mm_audio" -> ((s, d) => Multimodal.decodeAudio(s, TableIO.read(s, s"$d/documents.parquet"))),
     // --- generic window/agg coverage (F2/F3 shape) ---
     "window_topk" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      s.read.parquet(s"$d/events.parquet")
+      TableIO.read(s, s"$d/events.parquet")
         .withColumn("rank", row_number().over(
           Window.partitionBy(col("user_id")).orderBy(col("value").desc, col("event_id").asc)))
         .filter(col("rank") <= 3)

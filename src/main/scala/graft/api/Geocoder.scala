@@ -1,7 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.F
 import graft.ops.Geocode
@@ -113,12 +112,13 @@ final class Geocoder(spark: SparkSession, gaz: DataFrame,
     * a point with neither gets no row. `event_id` is the point key and must
     * be unique: each point row gets its own rows.
     *
-    * Under the cover and point ceilings this is ONE map-only select: the
-    * `context_cover` kernel gives the point's hits, and a point without one
-    * takes its nearest feature from the `knn_rings` kernel in the same
-    * row, inside a CASE branch — no exchange, join, aggregate, window,
-    * persist or candidate array. The cover indexes and the point index
-    * (32 B per point, two cover entries) share the
+    * Under the cover and point ceilings this is one kernel call per point
+    * in one map-only select: points → explode(`context_cover` with its kNN
+    * fallback) → select. The kernel returns the API's rows itself — the
+    * point's PIP hits in type order, or the nearest feature of the last
+    * type as one `knn` row — so the plan has no exchange, join, aggregate,
+    * window, persist, CASE or candidate array. The cover indexes and the
+    * point index (32 B per point, two cover entries) share the
     * [[Geocode.BroadcastCoverCeiling]] budget; past it, or past
     * [[Geocode.BroadcastPointCeiling]], the staged composition runs: the
     * staged chain, an anti-join for the unmatched points and
@@ -133,18 +133,11 @@ final class Geocoder(spark: SparkSession, gaz: DataFrame,
   private[graft] def reverseWith(points: DataFrame, typed: Seq[(String, DataFrame, Int)],
                                  knnZ: Int, coverCeiling: Long): DataFrame = {
     val knnTyp = typed.last._1
-    val fallbackFeats = typed.last._2
-      .select(col("feature_id"),
-        col("flon"), col("flat"))
+    val fallbackFeats = typed.last._2.select(col("feature_id"), col("flon"), col("flat"))
     Geocode.reverseKernels(typed, fallbackFeats, knnZ, coverCeiling) match {
-      case Some((cover, rings)) =>
-        def hit(typ: Column, fid: Column, via: String) =
-          struct(typ.as("typ"), fid.as("feature_id"), lit(via).as("via"))
-        val pip = transform(col("pip"), h => hit(h("typ"), h("feature_id"), "pip"))
-        val knn = transform(rings, k => hit(lit(knnTyp), k("feature_id"), "knn"))
+      case Some(kernel) =>
         points
-          .select(col("event_id"), col("elon"), col("elat"), cover.as("pip"))
-          .select(col("event_id"), explode(when(size(col("pip")) > 0, pip).otherwise(knn)).as("r"))
+          .select(col("event_id"), explode(kernel).as("r"))
           .select(col("event_id"), col("r.typ").as("typ"),
             col("r.feature_id").cast(Geocode.chainIdType(typed)).as("feature_id"), col("r.via").as("via"))
       case None =>

@@ -54,7 +54,14 @@ final class CellIndexData(val cells: Array[Long], val fids: Array[Long],
     var i = CellIndex.lowerBound(cells, cell)
     while (i < cells.length && cells(i) == cell) {
       val p = java.util.Arrays.binarySearch(polyIds, fids(i))
-      if (p >= 0 && polys(p).exists(Geo.pointInRings(_, lon, lat))) return i
+      if (p >= 0) {
+        val rows = polys(p)
+        var g = 0
+        while (g < rows.length) {
+          if (Geo.pointInRings(rows(g), lon, lat)) return i
+          g += 1
+        }
+      }
       i += 1
     }
     -1
@@ -172,6 +179,23 @@ object CellIndex {
     .add("feature_id", LongType, nullable = false)
     .add("dist", DoubleType, nullable = false)
 
+  /** The expanding-ring ladder over `idx`: with t the first position of
+    * `ladder` whose disk around `cell` holds a feature, `(t << 32) | i`
+    * for that disk's [[PointIndexData.nearest]] feature i, or -1 when
+    * disk(ladder.last) is empty. One loop for [[KnnRings]] and the kNN
+    * fallback of [[ContextCover]]; packed so the per-row call allocates
+    * nothing. */
+  private def ladderNearest(idx: PointIndexData, ladder: Array[Int],
+                            cell: Long, lon: Double, lat: Double): Long = {
+    var t = 0
+    while (t < ladder.length) {
+      val i = idx.nearest(cell, lon, lat, ladder(t))
+      if (i >= 0) return (t.toLong << 32) | i
+      t += 1
+    }
+    -1L
+  }
+
   /** knn_rings(cell, elon, elat): the closed form of the expanding-ring
     * kNN over a broadcast [[PointIndexData]]. With r* the first ladder
     * radius whose disk around `cell` holds a feature, returns
@@ -188,12 +212,14 @@ object CellIndex {
     @transient private lazy val ladder = radii.toArray
     override def nullSafeEval(c: Any, lo: Any, la: Any): Any = {
       val idx = bc.value
-      val cell = c.asInstanceOf[Long]; val lon = lo.asInstanceOf[Double]; val lat = la.asInstanceOf[Double]
-      var t = 0; var i = -1
-      while (i < 0 && t < ladder.length) { i = idx.nearest(cell, lon, lat, ladder(t)); t += 1 }
-      if (i < 0) new GenericArrayData(Array.empty[Any])
-      else new GenericArrayData(Array[Any](InternalRow(ladder(t - 1), idx.fids(i),
-        Geo.sparkHaversineKm(lon, lat, idx.lons(i), idx.lats(i)))))
+      val lon = lo.asInstanceOf[Double]; val lat = la.asInstanceOf[Double]
+      val hit = ladderNearest(idx, ladder, c.asInstanceOf[Long], lon, lat)
+      if (hit < 0) new GenericArrayData(Array.empty[Any])
+      else {
+        val i = hit.toInt
+        new GenericArrayData(Array[Any](InternalRow(ladder((hit >>> 32).toInt), idx.fids(i),
+          Geo.sparkHaversineKm(lon, lat, idx.lons(i), idx.lats(i)))))
+      }
     }
     override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): KnnRings =
       copy(first = f, second = s, third = t)
@@ -207,16 +233,34 @@ object CellIndex {
   private val ContainType: StructType = new StructType()
     .add("typ", StringType, nullable = false)
     .add("feature_id", LongType, nullable = false)
+    .add("via", StringType, nullable = false)
+  private val ViaPip = UTF8String.fromString("pip")
+  private val ViaKnn = UTF8String.fromString("knn")
 
-  /** context_cover(lon, lat): for each type in order, the smallest
-    * feature_id whose polygon contains the point, as `[struct(typ,
-    * feature_id)]` — one entry per type with a hit. Per type it computes
-    * the point's cell at that type's zoom with [[CellMath.lonLatToCell]]
-    * and probes that type's broadcast [[CellIndexData]]; candidates, PIP
-    * and the minimum id are those of `reversePip` + `min(feature_id)` by
-    * construction. A null coordinate gives null (no rows once exploded). */
+  /** The kNN fallback of [[ContextCover]]: the broadcast feature-point
+    * index at zoom `z`, the radius ladder, and the type its rows carry. */
+  final case class KnnFallback(bc: Broadcast[PointIndexData], z: Int, radii: Seq[Int], typ: String)
+
+  /** context_cover(lon, lat): a point's reverse-geocode rows as
+    * `[struct(typ, feature_id, via)]`.
+    *
+    * For each type in order, the smallest feature_id whose polygon
+    * contains the point, with `via = "pip"` — one entry per type with a
+    * hit. Per type it computes the point's cell at that type's zoom with
+    * [[CellMath.lonLatToCell]] and probes that type's broadcast
+    * [[CellIndexData]]; candidates, PIP and the minimum id are those of
+    * `reversePip` + `min(feature_id)` by construction.
+    *
+    * With a [[KnnFallback]], a point without any hit instead gets one
+    * `via = "knn"` row of the fallback's type: the feature [[KnnRings]]
+    * answers for the point's cell at the fallback zoom (the same ladder
+    * loop), or no row when the last ladder disk is empty. That is carmen's
+    * reverse context with its nearest-feature fallback (`lib/context.js`
+    * [U]) as one row function, so `Geocoder.reverse` is points → explode →
+    * select. A null coordinate gives null (no rows once exploded). */
   case class ContextCover(left: Expression, right: Expression, typs: Seq[String],
-                          zs: Seq[Int], bcs: Seq[Broadcast[CellIndexData]])
+                          zs: Seq[Int], bcs: Seq[Broadcast[CellIndexData]],
+                          knn: Option[KnnFallback] = None)
       extends BinaryExpression with CodegenFallback {
     override def dataType: DataType = ArrayType(ContainType, containsNull = false)
     override def nullIntolerant: Boolean = true
@@ -224,26 +268,35 @@ object CellIndex {
     @transient private lazy val names = typs.map(UTF8String.fromString).toArray
     @transient private lazy val zoom = zs.toArray
     @transient private lazy val index = bcs.map(_.value).toArray
+    @transient private lazy val points = knn.map(_.bc.value).orNull
+    @transient private lazy val ladder = knn.map(_.radii.toArray).orNull
+    @transient private lazy val knnZ = knn.map(_.z).getOrElse(0)
+    @transient private lazy val knnTyp = knn.map(k => UTF8String.fromString(k.typ)).orNull
     override def nullSafeEval(lo: Any, la: Any): Any = {
       val lon = lo.asInstanceOf[Double]; val lat = la.asInstanceOf[Double]
-      val out = new Array[Any](index.length)
+      val out = new Array[AnyRef](index.length)
       var t = 0; var k = 0
       while (t < index.length) {
         val idx = index(t)
         val i = idx.firstContaining(CellMath.lonLatToCell(zoom(t), lon, lat), lon, lat)
-        if (i >= 0) { out(k) = InternalRow(names(t), idx.fids(i)); k += 1 }
+        if (i >= 0) { out(k) = InternalRow(names(t), idx.fids(i), ViaPip); k += 1 }
         t += 1
       }
-      new GenericArrayData(if (k == out.length) out else out.take(k))
+      if (k == 0 && points != null) {
+        val hit = ladderNearest(points, ladder, CellMath.lonLatToCell(knnZ, lon, lat), lon, lat)
+        if (hit >= 0) { out(0) = InternalRow(knnTyp, points.fids(hit.toInt), ViaKnn); k = 1 }
+      }
+      new GenericArrayData((if (k == out.length) out else java.util.Arrays.copyOf(out, k)).asInstanceOf[Array[Any]])
     }
     override protected def withNewChildrenInternal(l: Expression, r: Expression): ContextCover =
       copy(left = l, right = r)
   }
 
+  /** The [[ContextCover]] column over (lon, lat) cast to double. */
   def contextCoverCol(lon: Column, lat: Column, typs: Seq[String], zs: Seq[Int],
-                      bcs: Seq[Broadcast[CellIndexData]]): Column =
-    ColumnBridge.column(ContextCover(ColumnBridge.expression(lon), ColumnBridge.expression(lat),
-      typs, zs, bcs))
+                      bcs: Seq[Broadcast[CellIndexData]], knn: Option[KnnFallback] = None): Column =
+    ColumnBridge.column(ContextCover(ColumnBridge.expression(lon.cast("double")),
+      ColumnBridge.expression(lat.cast("double")), typs, zs, bcs, knn))
 
   /** cell_lookup(cell): array of feature ids — binary search against the
     * broadcast index, evaluated inside the map stage (no shuffle, no join). */

@@ -2,6 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** Iceberg-emulated table layout (SURVEY.md §7.6): no Iceberg jars ship in
@@ -47,7 +48,43 @@ object TableIO {
     Files.writeString(Paths.get(path, "_manifest.json"), manifest)
   }
 
-  def read(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
+  /** Read the parquet table at `path`, as `spark.read.parquet(path)` does
+    * but without its schema-inference job. Inference reads a footer in a
+    * one-task Spark job on every call; here the inferred schema is
+    * memoized per session, the session's parquet and file-source conf
+    * (`binaryAsString` and the like change what inference returns), the
+    * path and each listed file's (path, length, modification time), and a
+    * read with a memoized schema goes through `spark.read.schema(...)`,
+    * which lists the files on the driver and runs no job. A path rewritten
+    * in place lists other files and infers afresh. A missing or empty path
+    * memoizes nothing and fails exactly as `spark.read.parquet` does. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val files = listed(spark, path)
+    if (files.isEmpty) return spark.read.parquet(path)
+    val conf = spark.conf.getAll.filter { case (k, _) =>
+      k.contains("parquet") || k.startsWith("spark.sql.files.") || k == "spark.sql.caseSensitive"
+    }
+    val schema = schemaMemo.computeIfAbsent((spark, conf, path, files), _ => spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, Map[String, String], String, Seq[(String, Long, Long)]), StructType]()
+
+  /** (path, length, modification time) of every file under `path`, sorted;
+    * empty when the path does not exist (or is a glob). */
+  private def listed(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(p)) return Nil
+    val it = fs.listFiles(p, true)
+    val out = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    out.result().sortBy(_._1)
+  }
 
   def manifestJson(path: String): Option[String] = {
     val p = Paths.get(path, "_manifest.json")

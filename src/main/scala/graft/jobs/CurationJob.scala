@@ -107,7 +107,7 @@ object CurationJob {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = TextOps.curationFixture(
-      spark.read.parquet(s"$sfDir/documents.parquet"))
+      graft.index.TableIO.read(spark, s"$sfDir/documents.parquet"))
     val done = run(spark, docs, outDir)
     val kept = readFinal(spark, outDir).count()
     println(s"""{"job":"curation","stages_processed":${done.length},"docs_kept":$kept,"out":"$outDir"}""")

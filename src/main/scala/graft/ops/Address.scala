@@ -32,7 +32,7 @@ object Address {
     * range keyed on s_suppkey. */
   def streets(spark: SparkSession, sfDir: String): DataFrame = {
     val k = col("s_suppkey").cast("long")
-    spark.read.parquet(s"$sfDir/supplier.parquet")
+    graft.index.TableIO.read(spark, s"$sfDir/supplier.parquet")
       .select(k.as("street_id"),
         ((k * 7919 % 350000) / 1000.0 - 175.0).as("x0"),
         ((k * 104729 % 160000) / 1000.0 - 80.0).as("y0"),
@@ -133,7 +133,7 @@ object Address {
     def pc(j: Column): Column =
       when(j % 3 === 0, "O").when(j % 3 === 1, "E").otherwise("B")
     val b = (k % 50) * 2
-    spark.read.parquet(s"$sfDir/supplier.parquet")
+    graft.index.TableIO.read(spark, s"$sfDir/supplier.parquet")
       .select(k.as("street_id"),
         ((k * 7919 % 350000) / 1000.0 - 175.0).as("x0"),
         ((k * 104729 % 160000) / 1000.0 - 80.0).as("y0"),

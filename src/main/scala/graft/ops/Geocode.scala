@@ -1070,28 +1070,35 @@ object Geocode {
     * or cover indexes that together exceed `coverCeiling` (the kernel
     * holds every type's index at once). */
   private[graft] def contextCover(typed: Seq[(String, DataFrame, Int)],
-                                  coverCeiling: Long): Option[Column] = {
+                                  coverCeiling: Long): Option[Column] =
+    if (coverFits(typed, coverCeiling)) Some(coverKernel(typed, None)) else None
+
+  private def coverFits(typed: Seq[(String, DataFrame, Int)], coverCeiling: Long): Boolean = {
     val ints = typed.nonEmpty && typed.forall { case (_, feats, _) =>
       Seq(ByteType, ShortType, IntegerType, LongType).contains(feats.schema("feature_id").dataType)
     }
     lazy val sizes = typed.map { case (_, feats, z) => coverSize(feats, z) }
-    if (!ints || sizes.exists(_.nullIds > 0) || sizes.map(n => n.entries + n.vertices).sum > coverCeiling) None
-    else Some(graft.index.CellIndex.contextCoverCol(col("elon"), col("elat"),
-      typed.map(_._1), typed.map(_._3), typed.map { case (_, feats, z) => coverIndex(feats, z, rings = true) }))
+    ints && !sizes.exists(_.nullIds > 0) && sizes.map(n => n.entries + n.vertices).sum <= coverCeiling
   }
 
-  /** The `context_cover` and `knn_rings` kernels of `Geocoder.reverse`,
-    * which holds both indexes at once: None when the point index is over
-    * [[BroadcastPointCeiling]] or the cover indexes and the point index
-    * together exceed `coverCeiling`, and the staged composition must run. */
+  private def coverKernel(typed: Seq[(String, DataFrame, Int)],
+                          knn: Option[graft.index.CellIndex.KnnFallback]): Column =
+    graft.index.CellIndex.contextCoverCol(col("elon"), col("elat"), typed.map(_._1), typed.map(_._3),
+      typed.map { case (_, feats, z) => coverIndex(feats, z, rings = true) }, knn)
+
+  /** The one kernel of `Geocoder.reverse`: `context_cover` with the kNN
+    * fallback over the memoized broadcast point index of `featurePoints`
+    * at zoom `knnZ` and the [[KnnRadii]] ladder, its rows typed as the
+    * last type. The kernel holds the cover indexes and the point index at
+    * once, so None when the point index is over [[BroadcastPointCeiling]]
+    * or the two together exceed `coverCeiling`, and the staged
+    * composition must run. */
   private[graft] def reverseKernels(typed: Seq[(String, DataFrame, Int)], featurePoints: DataFrame,
-                                    knnZ: Int, coverCeiling: Long): Option[(Column, Column)] = {
+                                    knnZ: Int, coverCeiling: Long): Option[Column] = {
     val n = memoCount(featurePoints)
-    if (n > BroadcastPointCeiling) None
-    else for {
-      cover <- contextCover(typed, coverCeiling - PointUnits * n)
-      rings <- knnRings(featurePoints, knnZ, KnnRadii)
-    } yield (cover, rings)
+    if (n > BroadcastPointCeiling || !coverFits(typed, coverCeiling - PointUnits * n)) None
+    else Some(coverKernel(typed, Some(graft.index.CellIndex.KnnFallback(
+      pointIndex(featurePoints, knnZ, n), knnZ, KnnRadii, typed.last._1))))
   }
 
   /** The feature_id type of the chain: the staged union's widening of the

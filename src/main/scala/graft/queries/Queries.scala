@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.F
+import graft.index.TableIO
 import graft.ops.Geocode
 import graft.synth.Synth
 
@@ -1071,7 +1072,7 @@ object Queries {
     * cluster ≤ ~50 at sf0.001/0.01/0.1). Exact BIGINT on both engines. */
   private def dbscanPoints(spark: SparkSession, sfDir: String): DataFrame = {
     val k = col("event_id")
-    spark.read.parquet(s"$sfDir/events.parquet")
+    TableIO.read(spark, s"$sfDir/events.parquet")
       .select(k.as("id"),
         ((k * k * 7919 + k * 104729) % 360000 - 180000).as("xq"),
         ((k * k * 104729 + k * 7919) % 160000 - 80000).as("yq"))
@@ -1329,7 +1330,7 @@ object Queries {
     * comparisons in floored epoch SECONDS — integer-exact on both
     * engines. */
   def asofEpoch(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$sfDir/events.parquet")
+    val ev = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"), unix_timestamp(col("ts")).as("t"),
         Synth.evLon(col("event_id")).as("elon"), Synth.evLat(col("event_id")).as("elat"))
       .withColumn("cell", F.cellAt(lit(4), col("elon"), col("elat")))
@@ -1367,7 +1368,7 @@ object Queries {
     * covers ≤ 2 bins. Oracle is the raw theta join the binned equi-join
     * must equal exactly. */
   def intervalJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$sfDir/events.parquet")
+    val ev = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"), unix_timestamp(col("ts")).as("t"))
     val win = spark.range(0, 200).toDF("w")
       .select(col("w"),
@@ -1743,7 +1744,7 @@ object Queries {
 
   def cohortRetention(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
-    val base = spark.read.parquet(s"$sfDir/events.parquet")
+    val base = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("user_id"), unix_micros(col("ts").cast("timestamp")).as("us"))
     val st = base.agg(min(col("us")).as("mn"), max(col("us")).as("mx"))
     base.crossJoin(broadcast(st))
@@ -1784,7 +1785,7 @@ object Queries {
 
   def homeCell(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("n").desc, col("cell").asc)
-    spark.read.parquet(s"$sfDir/events.parquet")
+    TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("user_id"),
         expr("(unix_micros(CAST(ts AS TIMESTAMP)) div 3600000000) % 24").as("hour"),
         F.cellAt(lit(6), evLon(col("event_id")), evLat(col("event_id"))).as("cell"))
@@ -1822,7 +1823,7 @@ object Queries {
   // =================================================================
 
   def hostSim(spark: SparkSession, sfDir: String): DataFrame = {
-    val t = spark.read.parquet(s"$sfDir/documents.parquet")
+    val t = TableIO.read(spark, s"$sfDir/documents.parquet")
       .select(expr("concat('h', CAST(doc_id % 97 AS STRING), '.example.org')").as("host"),
         explode(expr("array_distinct(split(text, ' '))")).as("tok"))
       .distinct()
@@ -1875,7 +1876,7 @@ object Queries {
   // =================================================================
 
   def joinCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    val tc = spark.read.parquet(s"$sfDir/events.parquet")
+    val tc = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_type"),
         F.cellAt(lit(6), evLon(col("event_id")), evLat(col("event_id"))).as("cell"))
       .groupBy(col("cell"), col("event_type")).agg(count(lit(1)).as("n"))
@@ -2062,7 +2063,7 @@ object Queries {
   // =================================================================
 
   def gridIndex(spark: SparkSession, sfDir: String): DataFrame = {
-    val cust = spark.read.parquet(s"$sfDir/customer.parquet")
+    val cust = TableIO.read(spark, s"$sfDir/customer.parquet")
       .select(col("c_custkey").as("feature_id"), F.phraseForm(col("c_name")).as("phrase"))
     custFeatures(spark, sfDir)
       .join(cust, "feature_id")
@@ -2092,7 +2093,7 @@ object Queries {
   // =================================================================
 
   def gridLists(spark: SparkSession, sfDir: String): DataFrame = {
-    val cust = spark.read.parquet(s"$sfDir/customer.parquet")
+    val cust = TableIO.read(spark, s"$sfDir/customer.parquet")
       .select(col("c_custkey").as("feature_id"), F.phraseForm(col("c_name")).as("phrase"))
     custFeatures(spark, sfDir)
       .join(cust, "feature_id")
@@ -2124,7 +2125,7 @@ object Queries {
   // =================================================================
 
   def phraseDegens(spark: SparkSession, sfDir: String): DataFrame = {
-    val c = spark.read.parquet(s"$sfDir/customer.parquet")
+    val c = TableIO.read(spark, s"$sfDir/customer.parquet")
       .select(col("c_custkey").as("feature_id"),
         concat(col("c_name"), lit(", "), col("c_name"), lit(" district")).as("text"))
     val phrases = c.select(col("feature_id"),
@@ -2152,7 +2153,7 @@ object Queries {
   // =================================================================
 
   def freqIndex(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    TableIO.read(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"), explode(array_distinct(F.tokenize(col("text")))).as("term"))
       .groupBy("term").agg(count(lit(1)).as("df"))
 
@@ -2196,7 +2197,7 @@ object Queries {
     * no text or payload rides either exchange. */
   def odFlows(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts").asc, col("event_id").asc)
-    spark.read.parquet(s"$sfDir/events.parquet")
+    TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"), col("ts"), col("user_id"))
       .withColumn("o_cell", F.cellAt(lit(6), evLon(col("event_id")), evLat(col("event_id"))))
       .withColumn("d_cell", lead(col("o_cell"), 1).over(w))
@@ -2228,7 +2229,7 @@ object Queries {
     // us ≡ ts ordering (microsecond precision both), so the window orders
     // by the projected integer — the oracle does the same
     val w = Window.partitionBy(col("user_id")).orderBy(col("us").asc, col("event_id").asc)
-    spark.read.parquet(s"$sfDir/events.parquet")
+    TableIO.read(spark, s"$sfDir/events.parquet")
       // ts is parquet TIMESTAMP_NTZ; the UTC session makes the LTZ cast an
       // identity on wall values, matching DuckDB's naive-as-UTC epoch_us
       .select(col("event_id"), col("user_id"),
@@ -2403,7 +2404,7 @@ object Queries {
     * explode(array(..)) so the many unrolled references downstream hit
     * the column, not inlined copies of the transform. */
   private def mkDense(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = spark.read.parquet(s"$sfDir/events.parquet")
+    val base = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"),
         evLon(col("event_id")).as("elon"),
@@ -2534,7 +2535,7 @@ object Queries {
       "ELSE 'historical' END"
 
   def emergingHotspot(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = spark.read.parquet(s"$sfDir/events.parquet")
+    val base = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"),
         evLon(col("event_id")).as("elon"),
@@ -2642,7 +2643,7 @@ object Queries {
   // =================================================================
 
   def geofenceEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$sfDir/events.parquet")
+    val ev = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"),
         evLon(col("event_id")).as("elon"), evLat(col("event_id")).as("elat"))
@@ -2697,7 +2698,7 @@ object Queries {
 
   def arealInterp(spark: SparkSession, sfDir: String): DataFrame = {
     val k = col("c_custkey")
-    spark.read.parquet(s"$sfDir/customer.parquet")
+    TableIO.read(spark, s"$sfDir/customer.parquet")
       .select(k.as("src_id"),
         ((k % 1000) + lit(10L)).as("pop"),
         (k * 7919 % 350000 - 175000 - (lit(300L) + (k % 7) * 150)).as("wm"),
@@ -2756,7 +2757,7 @@ object Queries {
   // =================================================================
 
   def hexBin(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/events.parquet")
+    TableIO.read(spark, s"$sfDir/events.parquet")
       .select(
         expr("CAST((event_id * 7919) % 360000 - 180000 AS DOUBLE)").as("xd"),
         expr("CAST((event_id * 104729) % 160000 - 80000 AS DOUBLE)").as("yd"))
@@ -2853,7 +2854,7 @@ object Queries {
   // =================================================================
 
   def decayHeat(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = spark.read.parquet(s"$sfDir/events.parquet")
+    val base = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"),
         evLon(col("event_id")).as("elon"), evLat(col("event_id")).as("elat"))
@@ -2890,7 +2891,7 @@ object Queries {
 
   def speedFilter(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("us").asc, col("event_id").asc)
-    spark.read.parquet(s"$sfDir/events.parquet")
+    TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"),
         expr("((event_id * event_id * 7919 + event_id * 104729) % 360000) - 180000").as("x"),
@@ -3032,7 +3033,7 @@ object Queries {
   }
 
   def snapPoints(spark: SparkSession, sfDir: String, z: Int = 6): DataFrame = {
-    val pts = spark.read.parquet(s"$sfDir/events.parquet")
+    val pts = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"),
         (col("event_id") * 7919 % 360000 - 180000).as("px"),
         (col("event_id") * 104729 % 160000 - 80000).as("py"))
@@ -3055,7 +3056,7 @@ object Queries {
   // =================================================================
 
   def eventRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$sfDir/events.parquet")
+    val ev = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_type"), col("event_id"), col("value"))
       .withColumn("cell", F.cellAt(lit(4), evLon(col("event_id")), evLat(col("event_id"))))
       .withColumn("vq", round(col("value") * lit(100.0), 0).cast("long"))
@@ -3134,7 +3135,7 @@ object Queries {
 
   def cellDwell(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("us").asc, col("event_id").asc)
-    spark.read.parquet(s"$sfDir/events.parquet")
+    TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"))
       .withColumn("cell", F.cellAt(lit(6), evLon(col("event_id")), evLat(col("event_id"))))
@@ -3438,7 +3439,7 @@ object Queries {
 
   def viterbiMatch(spark: SparkSession, sfDir: String): DataFrame = {
     val wu = Window.partitionBy("user_id").orderBy(col("us").asc, col("event_id").asc)
-    val fixes = spark.read.parquet(s"$sfDir/events.parquet")
+    val fixes = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"))
       .withColumn("t", row_number().over(wu)).filter(col("t") <= VitT)
@@ -3900,7 +3901,7 @@ object Queries {
 
   def trajSimplify(spark: SparkSession, sfDir: String): DataFrame = {
     val tol2 = SimplifyTol * SimplifyTol
-    spark.read.parquet(s"$sfDir/events.parquet")
+    TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"),
         (col("event_id") * 7919 % 360000 - 180000).as("x"),
@@ -3980,7 +3981,7 @@ object Queries {
       s"IF($s.lt - $s.at >= ${StayTUs}L, concat($s.stays, array(named_struct(" +
         s"'st', $s.at, 'en', $s.lt, 'np', $s.n, " +
         s"'cx', $s.sx div $s.n - 180000, 'cy', $s.sy div $s.n - 80000))), $s.stays)"
-    spark.read.parquet(s"$sfDir/events.parquet")
+    TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"),
         expr("((event_id * event_id * 7919 + event_id * 104729) % 360000) - 180000").as("x"),
@@ -4083,7 +4084,7 @@ object Queries {
 
   def dpSimplify(spark: SparkSession, sfDir: String): DataFrame =
     dpSimplifyOf(
-      spark.read.parquet(s"$sfDir/events.parquet")
+      TableIO.read(spark, s"$sfDir/events.parquet")
         .select(col("event_id").as("id"), col("user_id"),
           unix_micros(col("ts").cast("timestamp")).as("us"),
           expr("((event_id * event_id * 7919 + event_id * 104729) % 360000) - 180000").as("x"),
@@ -4180,7 +4181,7 @@ object Queries {
   private val CoLocWindowUs = 21600000000L     // 6 h in microseconds
 
   def coLocate(spark: SparkSession, sfDir: String): DataFrame = {
-    val pts = spark.read.parquet(s"$sfDir/events.parquet")
+    val pts = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id").as("id"), col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"),
         expr(s"((event_id * event_id * 7919 + event_id * 104729) % 360000) div $CoLocCellMilli").as("cx"),
@@ -4682,7 +4683,7 @@ object Queries {
 
   def stdEllipse(spark: SparkSession, sfDir: String): DataFrame = {
     val k = col("event_id")
-    val pts = spark.read.parquet(s"$sfDir/events.parquet")
+    val pts = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_type").as("etype"),
         ((k * k * 7919 + k * 104729) % 360000 - 180000).as("xq"),
         ((k * k * 104729 + k * 7919) % 160000 - 80000).as("yq"))
@@ -4771,7 +4772,7 @@ object Queries {
 
   def knox(spark: SparkSession, sfDir: String): DataFrame = {
     val k = col("event_id")
-    val pts = spark.read.parquet(s"$sfDir/events.parquet")
+    val pts = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(k.as("id"), unix_micros(col("ts").cast("timestamp")).as("us"),
         ((k * k * 7919 + k * 104729) % 360000 - 180000).as("xq"),
         ((k * k * 104729 + k * 7919) % 160000 - 80000).as("yq"))
@@ -4856,7 +4857,7 @@ object Queries {
 
   def convexHull(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("etype")).orderBy(col("event_id").asc)
-    val cand = spark.read.parquet(s"$sfDir/events.parquet")
+    val cand = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"), col("event_type").as("etype"),
         expr("(event_id * event_id * 7919 + event_id * 104729) % 360000").as("x"),
         expr("(event_id * event_id * 104729 + event_id * 7919) % 160000").as("y"))
@@ -4934,13 +4935,13 @@ object Queries {
   private val IdwScale = 1000000000000L
 
   def idwGrid(spark: SparkSession, sfDir: String): DataFrame = {
-    val st = spark.read.parquet(s"$sfDir/customer.parquet")
+    val st = TableIO.read(spark, s"$sfDir/customer.parquet")
       .select((col("c_custkey") % 997).as("v"),
         expr("c_custkey * 7919 % 350000 - 175000").as("sx"),
         expr("c_custkey * 104729 % 160000 - 80000").as("sy"))
       .withColumn("cx", expr(s"(sx + 180000) div $IdwRadiusMilli"))
       .withColumn("cy", expr(s"(sy + 80000) div $IdwRadiusMilli"))
-    val pr = spark.read.parquet(s"$sfDir/events.parquet")
+    val pr = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"),
         expr("event_id * 7919 % 360000 - 180000").as("px"),
         expr("event_id * 104729 % 160000 - 80000").as("py"))
@@ -5011,7 +5012,7 @@ object Queries {
   def trackHeading(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("us").asc, col("event_id").asc)
     val rad = lit(Math.PI) / lit(180.0)
-    val pts = spark.read.parquet(s"$sfDir/events.parquet")
+    val pts = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"),
         evLon(col("event_id")).as("lon1"), evLat(col("event_id")).as("lat1"))
@@ -5064,7 +5065,7 @@ object Queries {
   def trackResample(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("us").asc, col("event_id").asc)
     val rad = lit(Math.PI) / lit(180.0)
-    val pts = spark.read.parquet(s"$sfDir/events.parquet")
+    val pts = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"),
         evLon(col("event_id")).as("lon1"), evLat(col("event_id")).as("lat1"))
@@ -5302,7 +5303,7 @@ object Queries {
     *    name's blocking position); name side only for the rarest one, which
     *    bounds fan-out by the rarest token's neighborhood df. */
   def fuzzyMentions(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = TableIO.read(spark, s"$sfDir/documents.parquet")
     val gaz = gazDf(spark)
     // --- single-token arm ---
     val toks = docs
@@ -5385,7 +5386,7 @@ object Queries {
   def pagePipeline(spark: SparkSession, sfDir: String): DataFrame = {
     val html = concat(lit("<html><head><title>Doc "), col("doc_id").cast("string"),
       lit("</title></head><body><p>"), col("text"), lit("</p></body></html>"))
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    TableIO.read(spark, s"$sfDir/documents.parquet")
       .select(
         concat(lit("https://example.org/doc/"), col("doc_id").cast("string")).as("url"),
         timestamp_seconds(lit(1767225600L) + col("doc_id") * 7).as("warc_ts"),
@@ -5405,7 +5406,7 @@ object Queries {
   def extractTextQ(spark: SparkSession, sfDir: String): DataFrame = {
     val html = concat(lit("<html><head><title>Doc "), col("doc_id").cast("string"),
       lit("</title></head><body><p>"), col("text"), lit("</p></body></html>"))
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    TableIO.read(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"), F.extractText(encode(html, "UTF-8")).as("extracted"))
   }
 
@@ -5571,7 +5572,7 @@ object Queries {
   // =================================================================
 
   def linkGraph(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id")
+    val docs = TableIO.read(spark, s"$sfDir/documents.parquet").select("doc_id")
     val html = concat(
       lit("<html><body>"),
       concat_ws("", transform(sequence(lit(1), lit(3)), j =>
@@ -5620,7 +5621,7 @@ object Queries {
 
   def medianCenter(spark: SparkSession, sfDir: String): DataFrame = {
     def d(c: Column) = c.cast("decimal(38,0)")
-    val pts = spark.read.parquet(s"$sfDir/events.parquet")
+    val pts = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_type"),
         expr("(event_id * 7919) % 360000").as("xs"),
         expr("(event_id * 104729) % 160000").as("ys"))
@@ -5699,7 +5700,7 @@ object Queries {
   // =================================================================
 
   def tileDiff(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = spark.read.parquet(s"$sfDir/events.parquet")
+    val base = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(unix_micros(col("ts").cast("timestamp")).as("us"),
         F.cellAt(lit(6), evLon(col("event_id")), evLat(col("event_id"))).as("cell"))
     val st = base.agg(min(col("us")).as("mn"), max(col("us")).as("mx"))
@@ -5749,7 +5750,7 @@ object Queries {
 
   def hostGeo(spark: SparkSession, sfDir: String): DataFrame = {
     def d(c: Column) = c.cast("decimal(38,0)")
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    TableIO.read(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"),
         expr("concat('h', CAST(doc_id % 97 AS STRING), '.example.org')").as("host"),
         expr("(doc_id * 7919) % 360000").as("xs"),
@@ -5801,7 +5802,7 @@ object Queries {
     val step = (k: Int, prev: String) =>
       s"IF(p.event_type = '${FunnelSteps(k)}' AND $prev <> -1 AND s.t${k + 1} = -1 " +
         s"AND p.us > $prev AND p.us <= $prev + $FunnelWinUs, p.us, s.t${k + 1})"
-    spark.read.parquet(s"$sfDir/events.parquet")
+    TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"),
         col("event_id"), col("event_type"))
@@ -5903,7 +5904,7 @@ object Queries {
   // =================================================================
 
   def dowProfile(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet")
+    TableIO.read(spark, s"$sfDir/events.parquet")
       .select(F.cellAt(lit(6), evLon(col("event_id")), evLat(col("event_id"))).as("cell"),
         expr("(unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000 + 4) % 7").as("dow"))
       .groupBy(col("cell"), col("dow")).agg(count(lit(1)).as("o"))
@@ -5948,7 +5949,7 @@ object Queries {
   // =================================================================
 
   def pmiPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = TableIO.read(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"), expr("slice(split(text, ' '), 1, 10)").as("toks"))
       .select(col("doc_id"), array_distinct(col("toks")).as("toks"))
       .persist() // pair explode + marginal counts
@@ -6016,7 +6017,7 @@ object Queries {
   // =================================================================
 
   def anchorText(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    val docs = TableIO.read(spark, s"$sfDir/documents.parquet").select("doc_id", "text")
     val html = concat(
       lit("<html><body>"),
       concat_ws("", transform(sequence(lit(1), lit(3)), j =>
@@ -6066,7 +6067,7 @@ object Queries {
 
   def userEntropy(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
-    spark.read.parquet(s"$sfDir/events.parquet")
+    TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("user_id"),
         F.cellAt(lit(6), evLon(col("event_id")), evLat(col("event_id"))).as("cell"))
       .groupBy(col("user_id"), col("cell")).agg(count(lit(1)).as("v"))
@@ -6191,7 +6192,7 @@ object Queries {
   def crawlFrontier(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("host"), col("batch"))
       .orderBy(col("n_chars").desc, col("doc_id").asc)
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    TableIO.read(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("n_chars"),
         concat(lit("h"), (col("doc_id") % 97).cast("string"),
           lit(".example.org")).as("host"),
@@ -6496,7 +6497,7 @@ object Queries {
 
   def dtwTracks(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("us").asc, col("event_id").asc)
-    val fixes = spark.read.parquet(s"$sfDir/events.parquet")
+    val fixes = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"))
       .withColumn("cell", F.cellAt(lit(8), evLon(col("event_id")), evLat(col("event_id"))))
@@ -6606,7 +6607,7 @@ object Queries {
     // the list must cover the corpus: a page in any other language (or
     // none) fails the query instead of silently losing its matches, which
     // the oracle keeps (it matches every language)
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = TableIO.read(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"),
         when(col("lang").isin(FallbackLangs: _*), col("lang")).otherwise(raise_error(
           concat(lit("lang_fallback: page language "), coalesce(col("lang"), lit("NULL")),

@@ -281,7 +281,7 @@ object Synth {
   /** Customer rect features: feature_id, score, center, bounds, WKB geometry. */
   def custFeatures(spark: SparkSession, sfDir: String): DataFrame = {
     val k = col("c_custkey")
-    spark.read.parquet(s"$sfDir/customer.parquet")
+    graft.index.TableIO.read(spark, s"$sfDir/customer.parquet")
       .select(
         k.as("feature_id"),
         custScore(k).as("fscore"),
@@ -313,7 +313,7 @@ object Synth {
 
   def nationFeatures(spark: SparkSession, sfDir: String): DataFrame = {
     val k = col("n_nationkey").cast("long")
-    spark.read.parquet(s"$sfDir/nation.parquet")
+    graft.index.TableIO.read(spark, s"$sfDir/nation.parquet")
       .select(
         k.as("feature_id"),
         (natLon(k) - lit(15.0)).as("west"),
@@ -337,7 +337,7 @@ object Synth {
     val k = col("r_regionkey").cast("long")
     val lon = (k * 7919 % 240000) / 1000.0 - 120.0
     val lat = (k * 104729 % 100000) / 1000.0 - 50.0
-    spark.read.parquet(s"$sfDir/region.parquet")
+    graft.index.TableIO.read(spark, s"$sfDir/region.parquet")
       .select(k.as("feature_id"),
         (lon - lit(20.0)).as("west"), (lat - lit(12.0)).as("south"),
         (lon + lit(20.0)).as("east"), (lat + lit(12.0)).as("north"))
@@ -353,7 +353,7 @@ object Synth {
   /** Events with derived probe point. */
   def eventPoints(spark: SparkSession, sfDir: String): DataFrame = {
     val k = col("event_id")
-    spark.read.parquet(s"$sfDir/events.parquet")
+    graft.index.TableIO.read(spark, s"$sfDir/events.parquet")
       .select(k.as("event_id"), evLon(k).as("elon"), evLat(k).as("elat"))
   }
 
@@ -363,7 +363,7 @@ object Synth {
   /** Documents with derived proximity point. */
   def docPages(spark: SparkSession, sfDir: String): DataFrame = {
     val k = col("doc_id")
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    graft.index.TableIO.read(spark, s"$sfDir/documents.parquet")
       .select(k.as("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"),
         docLon(k).as("qlon"), docLat(k).as("qlat"))
   }

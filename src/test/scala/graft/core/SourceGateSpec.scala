@@ -28,4 +28,16 @@ class SourceGateSpec extends AnyFunSuite {
     } yield s"$p:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("\n"))
   }
+
+  test("fixture tables are read through TableIO.read, not a schemaless read.parquet") {
+    // a schemaless `spark.read.parquet` runs a footer-inference job per
+    // call; TableIO.read memoizes the inferred schema
+    val raw = """read\.parquet\(s"\$\{?(sfDir|d)\}?/""".r
+    val hits = for {
+      p <- mainSources if p.getFileName.toString != "TableIO.scala"
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if raw.findFirstIn(line).isDefined
+    } yield s"$p:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }

@@ -142,7 +142,8 @@ class FallbackSpec extends SparkTestBase {
       (Some(21L), Some(rect(1, 1, 3, 3)), 2.0, 2.0),
       (Some(22L), Some(rect(21, 1, 22, 2)), 21.5, 1.5),
       (Some(20L), Some(alignedRect(8)), 100.7, 30.7),
-      (Some(23L), None, 60.0, 5.0))                        // a kNN-only point feature
+      (Some(23L), None, 60.0, 5.0),                        // a kNN-only point feature
+      (Some(24L), None, -179.0, 5.0))                      // in the NaN-longitude point's z8 column x = 0
     // the continent ids are INT: the chain's feature_id widens to BIGINT
     val typed = Seq(
       ("continent", feats(continent).withColumn("feature_id", col("feature_id").cast("int")), 4),
@@ -156,7 +157,8 @@ class FallbackSpec extends SparkTestBase {
       (13L, Some(55.0), Some(1.0)), (14L, Some(1.0), Some(1.0)), (15L, Some(2.5), Some(2.5)),
       (16L, Some(59.0), Some(4.0)),
       (30L, None, Some(5.0)), (31L, Some(5.0), None),
-      (32L, Some(-100.0), Some(-60.0)))                    // nothing within disk(8)
+      (32L, Some(-100.0), Some(-60.0)),                    // nothing within disk(8)
+      (33L, Some(Double.NaN), Some(5.0)))                  // NaN longitude: grid column 0, no PIP
     // corners and edge midpoints of the cell-aligned rects: west/south in,
     // east/north out, and every one on a z4/z6/z8 cell edge
     val edges: Seq[P] = aligned.toSeq.sortBy(_._1).zipWithIndex.flatMap { case ((_, (w, s, e, n)), i) =>
@@ -233,6 +235,20 @@ class FallbackSpec extends SparkTestBase {
     assert(typedRows(n) == typedRows(Geocode.contextChainStaged(pts, nullId)))
   }
 
+  /** `Geocoder.reverse`'s fused plan: one map-only `context_cover` that
+    * carries the kNN point index itself — no CASE around it, no
+    * `transform`, candidate array, `array_min` or interpreted haversine. */
+  private def assertOneReverseKernel(what: String, df: DF): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, CaseWhen}
+    assertMapOnly(what, df, "context_cover")
+    val exprs = df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    val covers = exprs.collect { case c: graft.index.CellIndex.ContextCover => c }
+    assert(covers.size == 1 && covers.head.knn.isDefined, s"$what: ${covers.map(_.knn)}")
+    assert(!exprs.exists(e => e.isInstanceOf[CaseWhen] || e.isInstanceOf[ArrayTransform]), what)
+    val plan = df.queryExecution.executedPlan.toString.toLowerCase
+    Seq("knn_rings", "array_min", "asin", "cands").foreach(op => assert(!plan.contains(op), s"$what: $op in\n$plan"))
+  }
+
   test("Geocoder.reverse: one map-only select under the ceilings, row-identical to the staged composition") {
     val g = graft.api.Geocoder.default(spark)
     val (pts, typed) = chainFixture()
@@ -243,25 +259,62 @@ class FallbackSpec extends SparkTestBase {
     // (the optimizer evaluates a projection over a local relation itself, so
     // only the parquet input shows the kernels in its plan)
     val sfPts = Synth.eventPoints(spark, sf)
-    assertMapOnly("sf0.001", g.reverse(sfPts, sfTyped), "context_cover")
-    assert(g.reverse(sfPts, sfTyped).queryExecution.executedPlan.toString.contains("knn_rings"))
+    assertOneReverseKernel("sf0.001", g.reverse(sfPts, sfTyped))
+    // the events plus a NaN and a null coordinate and a point near the
+    // pole, north of every customer's disk(8)
+    val odd = {
+      import spark.implicits._
+      Seq[P]((-1L, Some(Double.NaN), Some(5.0)), (-2L, None, Some(5.0)), (-3L, Some(0.0), Some(84.9)))
+        .toDF("event_id", "elon", "elat")
+    }
+    val sfOdd = sfPts.unionByName(odd)
     val withEmpty = typed.patch(1, Seq(("empty", typed(1)._2.limit(0), 6)), 0)
-    Seq(("edge fixture", pts, typed), ("sf0.001", sfPts, sfTyped), ("one type without features", pts, withEmpty))
+    Seq(("edge fixture", pts, typed), ("sf0.001 + odd points", sfOdd, sfTyped),
+      ("one type without features", pts, withEmpty))
       .foreach { case (what, p, t) =>
         val staged = g.reverseWith(p, t, 8, coverCeiling = 1)
         assert(!staged.queryExecution.executedPlan.toString.contains("context_cover"), what)
         assert(typedRows(g.reverse(p, t)) == typedRows(staged), what)
       }
+    val oddIds = g.reverse(sfOdd, sfTyped).filter(col("event_id") < 0L).collect().map(_.getLong(0)).toSet
+    assert(!oddIds.contains(-2L) && !oddIds.contains(-3L), oddIds.toString)
     assert(g.reverse(pts.limit(0), typed).collect().isEmpty)
     val rows = g.reverse(pts, typed).collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
     val via = rows.groupBy(_._1).map { case (id, rs) => id -> rs.map(_._4).toSet }
     assert(via(1L) == Set("pip") && via(16L) == Set("knn") && via(7L) == Set("knn"), via.toString)
     assert(rows.contains((16L, "place", 23L, "knn")), "the nearest place feature, a point row")
+    assert(rows.contains((33L, "place", 24L, "knn")), "a NaN longitude takes grid column 0's feature")
     Seq(30L, 31L, 32L).foreach(id => assert(!via.contains(id), s"point $id must have no row"))
     // a repeated event_id: each point row gets its own rows
     val twice = pts.union(pts.filter(col("event_id") === 16L).withColumn("event_id", lit(1L)))
     val one = g.reverse(twice, typed).filter(col("event_id") === 1L).collect().map(_.getString(3))
     assert(one.count(_ == "knn") == 1 && one.count(_ == "pip") == 2, one.toSeq.toString)
+  }
+
+  /** The Spark jobs `body` starts. */
+  private def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.TestListenerBus.drain(sc) } finally sc.removeSparkListener(l)
+    jobs.get
+  }
+
+  test("Geocoder.reverse over the parquet fixtures runs one Spark job per warm call") {
+    val g = graft.api.Geocoder.default(spark)
+    def call() = g.reverse(Synth.eventPoints(spark, sf), Seq(
+      ("continent", Synth.continentFeatures(spark, sf), 4),
+      ("country", Synth.nationFeatures(spark, sf), 6),
+      ("place", Synth.custFeatures(spark, sf), 8))).collect().map(_.toString).sorted.toSeq
+    val warm = call()
+    assert(warm.nonEmpty)
+    var again = Seq.empty[String]
+    assert(jobsOf { again = call() } == 1)
+    assert(again == warm)
   }
 
   test("contextChain and Geocoder.reverse: the cover and point indexes share one broadcast budget") {
@@ -401,19 +454,13 @@ class FallbackSpec extends SparkTestBase {
     val far = BigDecimal(2.0 * Geo.EarthRadiusKm * math.asin(1.0)).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
     Seq(4L, 5L, 6L).foreach(id => assert(z8(id)._3 == far, z8.toString))
     check("z8 ladder", pts8, feats8, 8, Seq(1, 2, 4))
-    // reverse takes the kernel's answer: no candidate array, array_min or
-    // interpreted haversine in the plan
-    val g = graft.api.Geocoder.default(spark)
-    val sfTyped = Seq(
-      ("continent", Synth.continentFeatures(spark, sf), 4),
-      ("country", Synth.nationFeatures(spark, sf), 6),
-      ("place", Synth.custFeatures(spark, sf), 8))
-    Seq(g.reverse(Synth.eventPoints(spark, sf), sfTyped),
-      Geocode.knnExpanding(Synth.eventPoints(spark, sf), Synth.custFeatures(spark, sf), 8)).foreach { df =>
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("knn_rings"), plan)
-      Seq("array_min", "asin", "cands").foreach(op => assert(!plan.toLowerCase.contains(op), s"$op in\n$plan"))
-    }
+    // knnExpanding takes the kernel's answer: no candidate array,
+    // array_min or interpreted haversine in the plan (reverse's plan:
+    // assertOneReverseKernel)
+    val knn = Geocode.knnExpanding(Synth.eventPoints(spark, sf), Synth.custFeatures(spark, sf), 8)
+    val plan = knn.queryExecution.executedPlan.toString
+    assert(plan.contains("knn_rings"), plan)
+    Seq("array_min", "asin", "cands").foreach(op => assert(!plan.toLowerCase.contains(op), s"$op in\n$plan"))
   }
 
   test("plan memos: a gazetteer path rewritten in place is read afresh") {
@@ -430,6 +477,43 @@ class FallbackSpec extends SparkTestBase {
       val after = fwdRows(Geocode.forward(docs, spark.read.parquet(path)))
       assert(after == fwdRows(Geocode.forward(docs, regions)))
       assert(after != before)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  test("TableIO.read: a memoized schema runs no job; rewritten paths, conf and missing paths as read.parquet") {
+    import spark.implicits._
+    import graft.index.TableIO
+    val dir = java.nio.file.Files.createTempDirectory("tableio-read")
+    def failure(read: => Any) = intercept[org.apache.spark.sql.AnalysisException](read)
+    try {
+      val path = dir.resolve("t").toString
+      Seq((1L, "a")).toDF("id", "a").write.parquet(path)
+      assert(jobsOf(TableIO.read(spark, path)) >= 1)
+      assert(jobsOf(TableIO.read(spark, path)) == 0)
+      assert(TableIO.read(spark, path).schema == spark.read.parquet(path).schema)
+      // parquet conf changes what inference returns
+      Seq((2L, 3)).toDF("id", "b").write.mode("append").parquet(path)
+      val merged = try {
+        spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+        TableIO.read(spark, path).schema
+      } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+      assert(merged.fieldNames.toSet == Set("id", "a", "b"), merged.toString)
+      assert(TableIO.read(spark, path).schema == spark.read.parquet(path).schema)
+      assert(TableIO.read(spark, path).schema.size == 2)
+      // rewritten in place with another schema
+      Seq((2.5, 7)).toDF("x", "y").write.mode("overwrite").parquet(path)
+      val again = TableIO.read(spark, path)
+      assert(again.schema == spark.read.parquet(path).schema && again.columns.toSeq == Seq("x", "y"))
+      assert(again.collect().map(r => (r.getDouble(0), r.getInt(1))).toSeq == Seq((2.5, 7)))
+      // a missing path and an empty directory fail as spark.read.parquet does
+      val missing = dir.resolve("missing").toString
+      val e = failure(TableIO.read(spark, missing))
+      assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+      assert(e.getMessage == failure(spark.read.parquet(missing)).getMessage)
+      val empty = java.nio.file.Files.createDirectory(dir.resolve("empty")).toString
+      assert(failure(TableIO.read(spark, empty)).getMessage == failure(spark.read.parquet(empty)).getMessage)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
