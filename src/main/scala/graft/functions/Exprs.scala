@@ -553,24 +553,6 @@ object Exprs {
     override protected def withNewChildInternal(c: Expression): SimHash = copy(child = c)
   }
 
-  /** minhash_bands(text, k, numHashes, rowsPerBand): LSH band keys of the
-    * MinHash signature of the text's k-shingles. */
-  case class MinHashBands(first: Expression, second: Expression, third: Expression, fourth: Expression)
-      extends QuaternaryExpression with CodegenFallback {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullIntolerant: Boolean = true
-    override def prettyName: String = "minhash_bands"
-    override def nullSafeEval(s: Any, k: Any, nh: Any, rpb: Any): Any = {
-      val toks = Text.tokenize(s.toString)
-      val sig = Fingerprint.minhash(
-        Fingerprint.shingles(toks, k.asInstanceOf[Int]), nh.asInstanceOf[Int])
-      new GenericArrayData(Fingerprint.lshBands(sig, rpb.asInstanceOf[Int]))
-    }
-    override protected def withNewChildrenInternal(
-        f: Expression, s: Expression, t: Expression, q: Expression): MinHashBands =
-      copy(first = f, second = s, third = t, fourth = q)
-  }
-
   /** lsh_bands(sig, rowsPerBand): LSH band keys derived from an existing
     * MinHash signature — avoids re-hashing the document when both the
     * signature and its bands are needed. */
@@ -641,101 +623,65 @@ object Exprs {
     override protected def withNewChildInternal(c: Expression): LangNgramBest = copy(child = c)
   }
 
+  /** The rolling-row DP shared by [[DtwCells]] and [[FrechetCells]] over
+    * two packed-cell tracks under Manhattan ground distance on the (x, y)
+    * tile lattice: cost(i, j) = step(d(i, j), min(cost(i−1, j),
+    * cost(i, j−1), cost(i−1, j−1))), two rolling rows, O(|a|·|b|) time and
+    * O(|b|) state. Integer-exact; track lengths are capped upstream. */
+  private def cellTrackDp(a: ArrayData, b: ArrayData, step: (Long, Long) => Long): Long = {
+    val m = a.numElements(); val n = b.numElements()
+    val bx = new Array[Long](n); val by = new Array[Long](n)
+    var j = 0
+    while (j < n) {
+      val c = b.getLong(j)
+      bx(j) = CellMath.xOf(c); by(j) = CellMath.yOf(c)
+      j += 1
+    }
+    val Big = Long.MaxValue / 4
+    var prev = Array.fill(n + 1)(Big)
+    var cur = new Array[Long](n + 1)
+    prev(0) = 0L
+    var i = 0
+    while (i < m) {
+      val c = a.getLong(i)
+      val ax = CellMath.xOf(c); val ay = CellMath.yOf(c)
+      cur(0) = Big
+      j = 1
+      while (j <= n) {
+        val d = math.abs(ax - bx(j - 1)) + math.abs(ay - by(j - 1))
+        cur(j) = step(d, math.min(prev(j), math.min(cur(j - 1), prev(j - 1))))
+        j += 1
+      }
+      val t = prev; prev = cur; cur = t
+      i += 1
+    }
+    prev(n)
+  }
+
   /** dtw_cells(a, b): dynamic-time-warping distance between two packed-cell
-    * tracks under Manhattan ground distance on the (x, y) tile lattice —
-    * the classic full-window DP with two rolling rows, O(|a|·|b|) per pair
-    * and O(|b|) state. Integer-exact end-to-end; mirrored in DuckDB as an
-    * anti-diagonal wave recursion (Queries.dtwTracksSql). Track lengths
-    * are capped upstream, so the per-row cost is a small constant. */
+    * tracks — [[cellTrackDp]] with (+, min). Mirrored in DuckDB as an
+    * anti-diagonal wave recursion (Queries.dtwTracksSql). */
   case class DtwCells(left: Expression, right: Expression)
       extends BinaryExpression with CodegenFallback {
     override def dataType: DataType = LongType
     override def nullIntolerant: Boolean = true
     override def prettyName: String = "dtw_cells"
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val xa = a.asInstanceOf[ArrayData]; val xb = b.asInstanceOf[ArrayData]
-      val m = xa.numElements(); val n = xb.numElements()
-      val ax = new Array[Long](m); val ay = new Array[Long](m)
-      var i = 0
-      while (i < m) {
-        val c = xa.getLong(i)
-        ax(i) = (c % 72057594037927936L) / 268435456L; ay(i) = c % 268435456L
-        i += 1
-      }
-      val bx = new Array[Long](n); val by = new Array[Long](n)
-      var j = 0
-      while (j < n) {
-        val c = xb.getLong(j)
-        bx(j) = (c % 72057594037927936L) / 268435456L; by(j) = c % 268435456L
-        j += 1
-      }
-      val Big = Long.MaxValue / 4
-      var prev = Array.fill(n + 1)(Big)
-      var cur = new Array[Long](n + 1)
-      prev(0) = 0L
-      i = 1
-      while (i <= m) {
-        cur(0) = Big
-        j = 1
-        while (j <= n) {
-          val d = math.abs(ax(i - 1) - bx(j - 1)) + math.abs(ay(i - 1) - by(j - 1))
-          cur(j) = d + math.min(prev(j), math.min(cur(j - 1), prev(j - 1)))
-          j += 1
-        }
-        val t = prev; prev = cur; cur = t
-        i += 1
-      }
-      prev(n)
-    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      cellTrackDp(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], _ + _)
     override protected def withNewChildrenInternal(l: Expression, r: Expression): DtwCells =
       copy(left = l, right = r)
   }
 
   /** frechet_cells(a, b): DISCRETE Fréchet distance (Eiter–Mannila '94)
-    * between two packed-cell tracks under Manhattan ground distance — the
-    * same rolling-row DP as [[DtwCells]] with (+, min) replaced by
-    * (max, min): F(i,j) = max(d(i,j), min(F(i−1,j), F(i,j−1), F(i−1,j−1))).
-    * Integer-exact; shares the wave-recursion oracle. */
+    * between two packed-cell tracks — [[cellTrackDp]] with (max, min).
+    * Shares the wave-recursion oracle. */
   case class FrechetCells(left: Expression, right: Expression)
       extends BinaryExpression with CodegenFallback {
     override def dataType: DataType = LongType
     override def nullIntolerant: Boolean = true
     override def prettyName: String = "frechet_cells"
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val xa = a.asInstanceOf[ArrayData]; val xb = b.asInstanceOf[ArrayData]
-      val m = xa.numElements(); val n = xb.numElements()
-      val ax = new Array[Long](m); val ay = new Array[Long](m)
-      var i = 0
-      while (i < m) {
-        val c = xa.getLong(i)
-        ax(i) = (c % 72057594037927936L) / 268435456L; ay(i) = c % 268435456L
-        i += 1
-      }
-      val bx = new Array[Long](n); val by = new Array[Long](n)
-      var j = 0
-      while (j < n) {
-        val c = xb.getLong(j)
-        bx(j) = (c % 72057594037927936L) / 268435456L; by(j) = c % 268435456L
-        j += 1
-      }
-      val Big = Long.MaxValue / 4
-      var prev = Array.fill(n + 1)(Big)
-      var cur = new Array[Long](n + 1)
-      prev(0) = 0L
-      i = 1
-      while (i <= m) {
-        cur(0) = Big
-        j = 1
-        while (j <= n) {
-          val d = math.abs(ax(i - 1) - bx(j - 1)) + math.abs(ay(i - 1) - by(j - 1))
-          cur(j) = math.max(d, math.min(prev(j), math.min(cur(j - 1), prev(j - 1))))
-          j += 1
-        }
-        val t = prev; prev = cur; cur = t
-        i += 1
-      }
-      prev(n)
-    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      cellTrackDp(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], math.max)
     override protected def withNewChildrenInternal(l: Expression, r: Expression): FrechetCells =
       copy(left = l, right = r)
   }
@@ -913,8 +859,6 @@ object F {
   def fnv1a64(s: Column): Column = c(Fnv1a64(x(s)))
   def charNgrams(s: Column, n: Int): Column = c(CharNgrams(x(s), n))
   def simhash64(s: Column): Column = c(SimHash(x(s)))
-  def minhashBands(s: Column, k: Column, numHashes: Column, rowsPerBand: Column): Column =
-    c(MinHashBands(x(s), x(k), x(numHashes), x(rowsPerBand)))
   def minhashSig(s: Column, k: Column, numHashes: Column): Column =
     c(MinHashSig(x(s), x(k), x(numHashes)))
   def lshBandsFromSig(sig: Column, rowsPerBand: Column): Column =

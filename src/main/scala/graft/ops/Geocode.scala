@@ -512,14 +512,6 @@ object Geocode {
     * returns the dictionary size. No-op on a warm memo. */
   def warmIdfDict(docs: DataFrame): Int = idfDict(termIdfQ(docs)).size
 
-  /** B6 name weights: Σ idf_q over the name's tokens (ordering weight for
-    * the best-region resolution; the relev itself uses the covered-token
-    * UNION — see [[forwardIdf]]). */
-  def nameWeightsQ(docs: DataFrame, gaz: DataFrame): DataFrame =
-    gaz.select(col("gid"), explode(split(col("name"), " ")).as("term"))
-      .join(broadcast(termIdfQ(docs)), "term")
-      .groupBy("gid").agg(sum("idf_q").as("w_q"))
-
   /** B4+B6+E2, carmen-faithful relev: the IDF SHARE of the doc's tokens
     * covered by the match — relev = Σ idf_q(tokens(place) ∪ tokens(region))
     * / Σ idf_q(distinct doc tokens). Overlapping windows count once (the
@@ -830,28 +822,19 @@ object Geocode {
     * have matched), so skipping it is row-identical while cutting the
     * ring-explode volume (disk(8) = 289 cells vs annulus(4,8] = 208). */
   def knnDisk(points: DataFrame, featurePoints: DataFrame, z: Int, r: Int,
-              rIn: Int = -1): DataFrame = {
-    val probes = points
-      .withColumn("cell0", F.cellAt(lit(z), col("elon"), col("elat")))
-      .withColumn("cell", explode(F.annulusCells(col("cell0"), lit(rIn), lit(r))))
-    val feats = featurePoints
-      .withColumn("cell", F.cellAt(lit(z), col("flon"), col("flat")))
-    probes.join(feats, "cell")
-      .withColumn("dist", F.haversineKm(col("elon"), col("elat"), col("flon"), col("flat")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("event_id")).orderBy(col("dist").asc, col("feature_id").asc)))
-      .filter(col("rn") === 1)
+              rIn: Int = -1): DataFrame =
+    knnDiskK(points, featurePoints, z, r, 1, rIn)
       .select(col("event_id"), col("feature_id"), round(col("dist"), 3).as("dist_km"))
-  }
 
   /** [[knnDisk]] generalized to top-k (carmen's reverse `limit > 1`, legal
     * only with a single type): up to k nearest features per point within
-    * the disk, ranked by (haversine, id). */
+    * the annulus (rIn, r] (the full disk by default), ranked by
+    * (haversine, id). */
   def knnDiskK(points: DataFrame, featurePoints: DataFrame, z: Int, r: Int,
-               k: Int): DataFrame = {
+               k: Int, rIn: Int = -1): DataFrame = {
     val probes = points
       .withColumn("cell0", F.cellAt(lit(z), col("elon"), col("elat")))
-      .withColumn("cell", explode(F.diskCells(col("cell0"), lit(r))))
+      .withColumn("cell", explode(F.annulusCells(col("cell0"), lit(rIn), lit(r))))
     val feats = featurePoints
       .withColumn("cell", F.cellAt(lit(z), col("flon"), col("flat")))
     probes.join(feats, "cell")

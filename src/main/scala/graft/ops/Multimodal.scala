@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Fingerprint
+import graft.synth.Synth
 
 /** Multimodal columns: opaque binary media payloads + typed metadata,
   * decoded in partition-sized batches.
@@ -406,8 +407,8 @@ object Multimodal {
       .select(F.cellAt(lit(8), col("elon"), col("elat")).as("cell"))
       .groupBy("cell").agg(count(lit(1)).as("cnt"))
       .withColumn("tile4", F.parentCell(col("cell"), lit(4)))
-      .withColumn("ix", expr("((cell % 72057594037927936) div 268435456) % 16"))
-      .withColumn("iy", expr("(cell % 268435456) % 16"))
+      .withColumn("ix", Synth.cellX(col("cell")) % 16)
+      .withColumn("iy", Synth.cellY(col("cell")) % 16)
     counts
       .select(col("tile4"), struct(col("ix"), col("iy"), col("cnt")).as("c"))
       .groupBy("tile4").agg(collect_list(col("c")).as("cells"))
@@ -442,9 +443,7 @@ object Multimodal {
        |  SELECT cell, CAST(count(*) AS BIGINT) AS cnt
        |  FROM (SELECT $cell8Sql AS cell FROM pts)
        |  GROUP BY 1)
-       |SELECT (4 * 72057594037927936 +
-       |        (((cell % 72057594037927936) // 268435456) // 16) * 268435456 +
-       |        ((cell % 268435456) // 16)) AS tile4,
+       |SELECT ${Synth.parentCellSql("cell", 8, "4")} AS tile4,
        |       CAST(16 AS BIGINT) AS w, CAST(16 AS BIGINT) AS h,
        |       CAST(sum(least(cnt, 255)) AS BIGINT) AS pix_sum,
        |       CAST(count(*) AS BIGINT) AS n_lit

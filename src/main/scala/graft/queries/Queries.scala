@@ -434,15 +434,12 @@ object Queries {
       F.parentCell(col("cell12"), lit(6)).as("cell6"))
   }
 
-  def parentCellsSql: String = {
-    // unpack z:5|x:28|y:28 with integer arithmetic, reshift at target zoom
-    def parent(zp: Int, dz: Int) =
-      s"(${zp}::BIGINT * 72057594037927936 + ((cell12 // 268435456) % 268435456 // ${1L << dz}) * 268435456 + (cell12 % 268435456) // ${1L << dz})"
+  def parentCellsSql: String =
     s"""WITH pts AS (${eventPointsSql}),
        |c AS (SELECT event_id, ${cellSql(12, "elon", "elat")} AS cell12 FROM pts)
-       |SELECT event_id, cell12, ${parent(8, 4)} AS cell8, ${parent(6, 6)} AS cell6
+       |SELECT event_id, cell12, ${parentCellSql("cell12", 12, "8")} AS cell8,
+       |       ${parentCellSql("cell12", 12, "6")} AS cell6
        |FROM c""".stripMargin
-  }
 
   // =================================================================
   // H3d: Bing quadkey encoding — the interleaved-bit string key of a
@@ -457,8 +454,8 @@ object Queries {
   def quadkey(spark: SparkSession, sfDir: String): DataFrame =
     eventPoints(spark, sfDir)
       .withColumn("cell", F.cellAt(lit(14), col("elon"), col("elat")))
-      .withColumn("tx", expr("shiftright(cell, 28) & 268435455"))
-      .withColumn("ty", expr("cell & 268435455"))
+      .withColumn("tx", cellX(col("cell")))
+      .withColumn("ty", cellY(col("cell")))
       .select(col("event_id"), expr(
         "concat_ws('', transform(sequence(1, 14), " +
           "i -> cast((shiftright(ty, 14 - i) & 1) * 2 + (shiftright(tx, 14 - i) & 1) as string)))")
@@ -467,8 +464,8 @@ object Queries {
   def quadkeySql: String =
     s"""WITH pts AS (${eventPointsSql}),
        |c AS (SELECT event_id, ${cellSql(14, "elon", "elat")} AS cell FROM pts),
-       |b AS (SELECT event_id, (cell // 268435456) % 268435456 AS tx,
-       |             cell % 268435456 AS ty FROM c)
+       |b AS (SELECT event_id, ${cellXSql("cell")} AS tx,
+       |             ${cellYSql("cell")} AS ty FROM c)
        |SELECT event_id, array_to_string(list_transform(generate_series(1, 14),
        |  i -> CAST(((ty >> (14 - i)) & 1) * 2 + ((tx >> (14 - i)) & 1) AS VARCHAR)), '') AS qk
        |FROM b""".stripMargin
@@ -557,16 +554,9 @@ object Queries {
   }
 
   def tilePyramidSql: String = {
-    // parent of a packed z12 cell at zoom zp (dz = 12 - zp): unpack
-    // z:5|x:28|y:28, shift x/y right by dz, repack — same arithmetic as
-    // parentCellsSql
-    def parent(zp: Int) = {
-      val dz = 12 - zp
-      s"(${zp}::BIGINT * 72057594037927936 + ((cell // 268435456) % 268435456 // ${1L << dz}) * 268435456 + (cell % 268435456) // ${1L << dz})"
-    }
     val levels = PyramidZooms.drop(1).map { zp =>
       s"""SELECT CAST($zp AS INTEGER) AS z, pcell AS cell, CAST(sum(n) AS BIGINT) AS n_events
-         |FROM (SELECT ${parent(zp)} AS pcell, n FROM base) GROUP BY pcell""".stripMargin
+         |FROM (SELECT ${parentCellSql("cell", 12, zp.toString)} AS pcell, n FROM base) GROUP BY pcell""".stripMargin
     }
     s"""WITH pts AS (${eventPointsSql}),
        |base AS (
@@ -587,11 +577,8 @@ object Queries {
 
   def tileCoverRectSql: String =
     s"""WITH cf AS (${custFeaturesSql})
-       |SELECT f.feature_id,
-       |       (8::BIGINT * 72057594037927936 + xs.x * 268435456 + ys.y) AS cell
-       |FROM cf f,
-       |LATERAL (SELECT unnest(generate_series(${tileXSql(8, "f.west")}, ${tileXSql(8, "f.east")})) AS x) xs,
-       |LATERAL (SELECT unnest(generate_series(${tileYSql(8, "f.north")}, ${tileYSql(8, "f.south")})) AS y) ys""".stripMargin
+       |SELECT f.feature_id, ${rectCellSql(8)} AS cell
+       |FROM ${rectCoverSql(8, "cf f")}""".stripMargin
 
   // =================================================================
   // D8: polygon×polygon overlap SELF-JOIN (the classic distributed
@@ -1262,27 +1249,21 @@ object Queries {
   def cellCompactSql: String =
     s"""WITH cf AS (${custFeaturesSql}),
        |cov AS (
-       |  SELECT f.feature_id, xs.x AS cx, ys.y AS cy
-       |  FROM cf f,
-       |  LATERAL (SELECT unnest(generate_series(${tileXSql(8, "f.west")}, ${tileXSql(8, "f.east")})) AS x) xs,
-       |  LATERAL (SELECT unnest(generate_series(${tileYSql(8, "f.north")}, ${tileYSql(8, "f.south")})) AS y) ys),
+       |  SELECT f.feature_id, ${rectCellSql(8)} AS cell
+       |  FROM ${rectCoverSql(8, "cf f")}),
        |anc AS (
-       |  SELECT feature_id, cx, cy, gs.g,
-       |         (gs.g * 72057594037927936 + (cx // (1::BIGINT << (8 - gs.g))) * 268435456
-       |          + (cy // (1::BIGINT << (8 - gs.g)))) AS anc
+       |  SELECT feature_id, cell, gs.g, ${parentCellSql("cell", 8, "gs.g")} AS anc
        |  FROM cov, (SELECT unnest(generate_series($CompactMinZ, 8)) AS g) gs),
        |complete AS (
        |  SELECT feature_id, g, anc FROM anc
        |  GROUP BY 1, 2, 3
        |  HAVING count(*) = (1::BIGINT << (2 * (8 - g)))),
        |coarsest AS (
-       |  SELECT a.feature_id, a.cx, a.cy, min(a.g) AS z
+       |  SELECT a.feature_id, a.cell, min(a.g) AS z
        |  FROM anc a JOIN complete c
        |    ON a.feature_id = c.feature_id AND a.g = c.g AND a.anc = c.anc
-       |  GROUP BY 1, 2, 3)
-       |SELECT DISTINCT feature_id,
-       |       (z * 72057594037927936 + (cx // (1::BIGINT << (8 - z))) * 268435456
-       |        + (cy // (1::BIGINT << (8 - z)))) AS cell,
+       |  GROUP BY 1, 2)
+       |SELECT DISTINCT feature_id, ${parentCellSql("cell", 8, "z")} AS cell,
        |       CAST(z AS INTEGER) AS z
        |FROM coarsest""".stripMargin
 
@@ -1410,11 +1391,8 @@ object Queries {
     val te = "((cx+1) / 256.0 * 360.0 - 180.0)"
     s"""WITH cf AS (${custFeaturesSql}),
        |cov AS (
-       |  SELECT f.*, (8::BIGINT * 72057594037927936 + xs.x * 268435456 + ys.y) AS cell,
-       |         xs.x AS cx, ys.y AS cy
-       |  FROM cf f,
-       |  LATERAL (SELECT unnest(generate_series(${tileXSql(8, "f.west")}, ${tileXSql(8, "f.east")})) AS x) xs,
-       |  LATERAL (SELECT unnest(generate_series(${tileYSql(8, "f.north")}, ${tileYSql(8, "f.south")})) AS y) ys),
+       |  SELECT f.*, ${rectCellSql(8)} AS cell, xs.x AS cx, ys.y AS cy
+       |  FROM ${rectCoverSql(8, "cf f")}),
        |px AS (
        |  SELECT cell, cy, feature_id, south, north,
        |         GREATEST(0, CAST(ceil((west - $tw) / ($te - $tw) * 256 - 0.5) AS INTEGER)) AS c0,
@@ -1457,8 +1435,8 @@ object Queries {
     val n = (1L << z).toDouble
     val cov = custFeatures(spark, sfDir)
       .withColumn("cell", explode(F.tileCover(col("geom_wkb"), lit(z))))
-      .withColumn("cx", expr("shiftright(cell, 28) & 268435455"))
-      .withColumn("cy", expr("cell & 268435455"))
+      .withColumn("cx", cellX(col("cell")))
+      .withColumn("cy", cellY(col("cell")))
     val clon = (col("cx").cast("double") + lit(0.5)) / lit(n) * lit(360.0) - lit(180.0)
     val yy = lit(Math.PI) * (lit(1.0) - lit(2.0) * (col("cy").cast("double") + lit(0.5)) / lit(n))
     val clat = atan((exp(yy) - exp(-yy)) / lit(2.0)) * lit(180.0) / lit(Math.PI)
@@ -1477,12 +1455,10 @@ object Queries {
     s"""WITH cf AS (${custFeaturesSql}),
        |cov AS (
        |  SELECT f.feature_id, f.west, f.east, f.south, f.north,
-       |         (10::BIGINT * 72057594037927936 + xs.x * 268435456 + ys.y) AS cell,
+       |         ${rectCellSql(10)} AS cell,
        |         (CAST(xs.x AS DOUBLE) + 0.5) / 1024.0 * 360.0 - 180.0 AS clon,
        |         atan((exp($yy) - exp(-$yy)) / 2.0) * 180.0 / pi() AS clat
-       |  FROM cf f,
-       |  LATERAL (SELECT unnest(generate_series(${tileXSql(10, "f.west")}, ${tileXSql(10, "f.east")})) AS x) xs,
-       |  LATERAL (SELECT unnest(generate_series(${tileYSql(10, "f.north")}, ${tileYSql(10, "f.south")})) AS y) ys)
+       |  FROM ${rectCoverSql(10, "cf f")})
        |SELECT feature_id, CAST(count(*) AS BIGINT) AS n_cells,
        |       CAST(sum(cell % 1000) AS BIGINT) AS sum_val,
        |       max(cell % 1000) AS max_val
@@ -2077,11 +2053,8 @@ object Queries {
        |nm AS (SELECT c_custkey AS feature_id, lower(replace(c_name, '#', ' ')) AS phrase
        |       FROM customer),
        |cover AS (
-       |  SELECT n.phrase,
-       |         (8::BIGINT * 72057594037927936 + xs.x * 268435456 + ys.y) AS cell
-       |  FROM cf f JOIN nm n ON n.feature_id = f.feature_id,
-       |  LATERAL (SELECT unnest(generate_series(${tileXSql(8, "f.west")}, ${tileXSql(8, "f.east")})) AS x) xs,
-       |  LATERAL (SELECT unnest(generate_series(${tileYSql(8, "f.north")}, ${tileYSql(8, "f.south")})) AS y) ys)
+       |  SELECT n.phrase, ${rectCellSql(8)} AS cell
+       |  FROM ${rectCoverSql(8, "cf f JOIN nm n ON n.feature_id = f.feature_id")})
        |SELECT phrase, count(*) AS n_cells, min(cell) AS min_cell, max(cell) AS max_cell
        |FROM cover GROUP BY 1""".stripMargin
 
@@ -2108,11 +2081,8 @@ object Queries {
        |nm AS (SELECT c_custkey AS feature_id, lower(replace(c_name, '#', ' ')) AS phrase
        |       FROM customer),
        |cover AS (
-       |  SELECT n.phrase,
-       |         (8::BIGINT * 72057594037927936 + xs.x * 268435456 + ys.y) AS cell
-       |  FROM cf f JOIN nm n ON n.feature_id = f.feature_id,
-       |  LATERAL (SELECT unnest(generate_series(${tileXSql(8, "f.west")}, ${tileXSql(8, "f.east")})) AS x) xs,
-       |  LATERAL (SELECT unnest(generate_series(${tileYSql(8, "f.north")}, ${tileYSql(8, "f.south")})) AS y) ys)
+       |  SELECT n.phrase, ${rectCellSql(8)} AS cell
+       |  FROM ${rectCoverSql(8, "cf f JOIN nm n ON n.feature_id = f.feature_id")})
        |SELECT phrase,
        |       array_to_string(list_slice(list_sort(list(cell)), 1, 20), ',') AS cells
        |FROM cover GROUP BY 1""".stripMargin
@@ -2261,6 +2231,55 @@ object Queries {
        |       CAST(max(us) - min(us) AS BIGINT) AS dur_us
        |FROM trips GROUP BY user_id, trip""".stripMargin
 
+  /** The z6 event-count surface the queen-stencil statistics share:
+    * (cell, keys…, cnt, x, y) per occupied z6 cell of `pts` (elon, elat,
+    * keys…), persisted — every caller reads it at least twice. */
+  private def z6Counts(pts: DataFrame, keys: String*): DataFrame =
+    pts.select(F.cellAt(lit(6), col("elon"), col("elat")).as("cell") +: keys.map(col): _*)
+      .groupBy("cell", keys: _*).agg(count(lit(1)).as("cnt"))
+      .withColumn("x", cellX(col("cell")))
+      .withColumn("y", cellY(col("cell")))
+      .persist()
+
+  /** SQL twin of [[z6Counts]]: the `counts` CTE over `pts`. `bin` is
+    * emerging_hotspot's extra key: (b's expression, the FROM it reads). */
+  private def z6CountsSql(bin: Option[(String, String)] = None): String = {
+    val cell = s"${cellSql(6, "elon", "elat")} AS cell"
+    val (key, src, grp) = bin match {
+      case None => ("", s"(SELECT $cell FROM pts)", "1")
+      case Some((b, from)) =>
+        (" b,", s"(SELECT $cell,\n               $b AS b\n        FROM $from)", "1, 2")
+    }
+    s"""counts AS MATERIALIZED (
+       |  SELECT cell,$key CAST(count(*) AS BIGINT) AS cnt,
+       |         ${cellXSql("cell")} AS x,
+       |         ${cellYSql("cell")} AS y
+       |  FROM $src
+       |  GROUP BY $grp)""".stripMargin
+  }
+
+  /** Grid-clamped queen stencil (3×3, self included) over a z6 frame with
+    * (cell, x, y): each row re-keyed to every in-grid neighbour cell,
+    * keeping `carry` (evaluated with the row's offset `dx`, `dy` in scope). */
+  private def queen(df: DataFrame, carry: Column*): DataFrame =
+    df.withColumn("dx", explode(sequence(lit(-1), lit(1))))
+      .withColumn("dy", explode(sequence(lit(-1), lit(1))))
+      .filter(col("x") + col("dx") >= 0 && col("x") + col("dx") < 64 &&
+        col("y") + col("dy") >= 0 && col("y") + col("dy") < 64)
+      .select(cellOffset(col("cell"), col("dx"), col("dy")).as("cell") +: carry: _*)
+
+  /** SQL twin of [[queen]] aggregated: the `contrib` CTE over `src`,
+    * grouped by `grp`. `sel` continues the select list after the
+    * neighbour cell: its head on that line, each further line below. */
+  private def queenSql(src: String, sel: Seq[String], grp: String = "1"): String =
+    s"""contrib AS (
+       |  SELECT ${cellOffsetSql("cell", "dx.d", "dy.d")} AS cell${sel.head}${sel.tail.map("\n         " + _).mkString}
+       |  FROM $src,
+       |       (SELECT unnest([-1, 0, 1]) AS d) dx,
+       |       (SELECT unnest([-1, 0, 1]) AS d) dy
+       |  WHERE x + dx.d >= 0 AND x + dx.d < 64 AND y + dy.d >= 0 AND y + dy.d < 64
+       |  GROUP BY $grp)""".stripMargin
+
   /** 3×3 box smoothing of per-cell event counts (the KDE/heatmap
     * smoothing pass of raster analytics): counts per z6 cell, then each
     * cell's smoothed value sums its existing neighbors' counts. Cell ids
@@ -2269,19 +2288,8 @@ object Queries {
     * the [0, 2^z) grid. Two map-combined aggregations + one cell join —
     * all integer arithmetic. */
   def cellSmooth(spark: SparkSession, sfDir: String): DataFrame = {
-    val counts = eventPoints(spark, sfDir)
-      .select(F.cellAt(lit(6), col("elon"), col("elat")).as("cell"))
-      .groupBy("cell").agg(count(lit(1)).as("cnt"))
-      .withColumn("x", expr("(cell % 72057594037927936) div 268435456"))
-      .withColumn("y", col("cell") % lit(268435456L))
-      .persist()
-    val contrib = counts
-      .withColumn("dx", explode(sequence(lit(-1), lit(1))))
-      .withColumn("dy", explode(sequence(lit(-1), lit(1))))
-      .filter(col("x") + col("dx") >= 0 && col("x") + col("dx") < 64 &&
-        col("y") + col("dy") >= 0 && col("y") + col("dy") < 64)
-      .select((col("cell") + col("dx") * lit(268435456L) + col("dy")).as("cell"),
-        col("cnt"))
+    val counts = z6Counts(eventPoints(spark, sfDir))
+    val contrib = queen(counts, col("cnt"))
       .groupBy("cell").agg(sum(col("cnt")).as("sm"))
     counts.select(col("cell"), col("cnt")).join(contrib, "cell")
       .select(col("cell"), col("cnt"), col("sm"))
@@ -2289,19 +2297,8 @@ object Queries {
 
   def cellSmoothSql: String =
     s"""WITH pts AS (${eventPointsSql}),
-       |counts AS MATERIALIZED (
-       |  SELECT cell, CAST(count(*) AS BIGINT) AS cnt,
-       |         (cell % 72057594037927936) // 268435456 AS x,
-       |         cell % 268435456 AS y
-       |  FROM (SELECT ${cellSql(6, "elon", "elat")} AS cell FROM pts)
-       |  GROUP BY 1),
-       |contrib AS (
-       |  SELECT cell + dx.d * 268435456 + dy.d AS cell, CAST(sum(cnt) AS BIGINT) AS sm
-       |  FROM counts,
-       |       (SELECT unnest([-1, 0, 1]) AS d) dx,
-       |       (SELECT unnest([-1, 0, 1]) AS d) dy
-       |  WHERE x + dx.d >= 0 AND x + dx.d < 64 AND y + dy.d >= 0 AND y + dy.d < 64
-       |  GROUP BY 1)
+       |${z6CountsSql()},
+       |${queenSql("counts", Seq(", CAST(sum(cnt) AS BIGINT) AS sm"))}
        |SELECT counts.cell, counts.cnt, contrib.sm
        |FROM counts JOIN contrib ON counts.cell = contrib.cell""".stripMargin
 
@@ -2331,19 +2328,8 @@ object Queries {
   }
 
   def giStar(spark: SparkSession, sfDir: String): DataFrame = {
-    val counts = eventPoints(spark, sfDir)
-      .select(F.cellAt(lit(6), col("elon"), col("elat")).as("cell"))
-      .groupBy("cell").agg(count(lit(1)).as("cnt"))
-      .withColumn("x", expr("(cell % 72057594037927936) div 268435456"))
-      .withColumn("y", col("cell") % lit(268435456L))
-      .persist() // 3 consumers: neighbor contrib, global moments, final join
-    val contrib = counts
-      .withColumn("dx", explode(sequence(lit(-1), lit(1))))
-      .withColumn("dy", explode(sequence(lit(-1), lit(1))))
-      .filter(col("x") + col("dx") >= 0 && col("x") + col("dx") < 64 &&
-        col("y") + col("dy") >= 0 && col("y") + col("dy") < 64)
-      .select((col("cell") + col("dx") * lit(268435456L) + col("dy")).as("cell"),
-        col("cnt"))
+    val counts = z6Counts(eventPoints(spark, sfDir))
+    val contrib = queen(counts, col("cnt"))
       .groupBy("cell").agg(sum(col("cnt")).as("sm"), count(lit(1)).as("wn"))
     val glob = counts.agg(count(lit(1)).as("n"), sum(col("cnt")).as("sumc"),
       sum(col("cnt") * col("cnt")).as("sumc2"))
@@ -2355,20 +2341,8 @@ object Queries {
 
   def giStarSql: String =
     s"""WITH pts AS (${eventPointsSql}),
-       |counts AS MATERIALIZED (
-       |  SELECT cell, CAST(count(*) AS BIGINT) AS cnt,
-       |         (cell % 72057594037927936) // 268435456 AS x,
-       |         cell % 268435456 AS y
-       |  FROM (SELECT ${cellSql(6, "elon", "elat")} AS cell FROM pts)
-       |  GROUP BY 1),
-       |contrib AS (
-       |  SELECT cell + dx.d * 268435456 + dy.d AS cell,
-       |         CAST(sum(cnt) AS BIGINT) AS sm, CAST(count(*) AS BIGINT) AS wn
-       |  FROM counts,
-       |       (SELECT unnest([-1, 0, 1]) AS d) dx,
-       |       (SELECT unnest([-1, 0, 1]) AS d) dy
-       |  WHERE x + dx.d >= 0 AND x + dx.d < 64 AND y + dy.d >= 0 AND y + dy.d < 64
-       |  GROUP BY 1),
+       |${z6CountsSql()},
+       |${queenSql("counts", Seq(",", "CAST(sum(cnt) AS BIGINT) AS sm, CAST(count(*) AS BIGINT) AS wn"))},
        |gstat AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cnt) AS BIGINT) AS sumc,
        |                 CAST(sum(cnt * cnt) AS BIGINT) AS sumc2 FROM counts)
        |SELECT counts.cell, counts.cnt, contrib.sm, contrib.wn, $giZExpr AS z_gi
@@ -2541,20 +2515,9 @@ object Queries {
         evLon(col("event_id")).as("elon"),
         evLat(col("event_id")).as("elat"))
     val st = base.agg(min(col("us")).as("mn"), max(col("us")).as("mx"))
-    val counts = base.crossJoin(broadcast(st))
-      .withColumn("b", expr("((us - mn) * 8) div (mx - mn + 1)"))
-      .select(F.cellAt(lit(6), col("elon"), col("elat")).as("cell"), col("b"))
-      .groupBy(col("cell"), col("b")).agg(count(lit(1)).as("cnt"))
-      .withColumn("x", expr("(cell % 72057594037927936) div 268435456"))
-      .withColumn("y", col("cell") % lit(268435456L))
-      .persist() // 3 consumers: neighbor contrib, per-bin moments, final join
-    val contrib = counts
-      .withColumn("dx", explode(sequence(lit(-1), lit(1))))
-      .withColumn("dy", explode(sequence(lit(-1), lit(1))))
-      .filter(col("x") + col("dx") >= 0 && col("x") + col("dx") < 64 &&
-        col("y") + col("dy") >= 0 && col("y") + col("dy") < 64)
-      .select((col("cell") + col("dx") * lit(268435456L) + col("dy")).as("cell"),
-        col("b"), col("cnt"))
+    val counts = z6Counts(base.crossJoin(broadcast(st))
+      .withColumn("b", expr("((us - mn) * 8) div (mx - mn + 1)")), "b")
+    val contrib = queen(counts, col("b"), col("cnt"))
       .groupBy(col("cell"), col("b")).agg(sum(col("cnt")).as("sm"), count(lit(1)).as("wn"))
     val glob = counts.groupBy(col("b")).agg(count(lit(1)).as("n"),
       sum(col("cnt")).as("sumc"), sum(col("cnt") * col("cnt")).as("sumc2"))
@@ -2586,22 +2549,8 @@ object Queries {
     s"""WITH pts AS (SELECT event_id, epoch_us(ts) AS us,
        |               $evLonSql AS elon, $evLatSql AS elat FROM events),
        |st AS (SELECT min(us) AS mn, max(us) AS mx FROM pts),
-       |counts AS MATERIALIZED (
-       |  SELECT cell, b, CAST(count(*) AS BIGINT) AS cnt,
-       |         (cell % 72057594037927936) // 268435456 AS x,
-       |         cell % 268435456 AS y
-       |  FROM (SELECT ${cellSql(6, "elon", "elat")} AS cell,
-       |               ((us - mn) * 8) // (mx - mn + 1) AS b
-       |        FROM pts CROSS JOIN st)
-       |  GROUP BY 1, 2),
-       |contrib AS (
-       |  SELECT cell + dx.d * 268435456 + dy.d AS cell, b,
-       |         CAST(sum(cnt) AS BIGINT) AS sm, CAST(count(*) AS BIGINT) AS wn
-       |  FROM counts,
-       |       (SELECT unnest([-1, 0, 1]) AS d) dx,
-       |       (SELECT unnest([-1, 0, 1]) AS d) dy
-       |  WHERE x + dx.d >= 0 AND x + dx.d < 64 AND y + dy.d >= 0 AND y + dy.d < 64
-       |  GROUP BY 1, 2),
+       |${z6CountsSql(Some(("((us - mn) * 8) // (mx - mn + 1)", "pts CROSS JOIN st")))},
+       |${queenSql("counts", Seq(", b,", "CAST(sum(cnt) AS BIGINT) AS sm, CAST(count(*) AS BIGINT) AS wn"), "1, 2")},
        |gstat AS (SELECT b, CAST(count(*) AS BIGINT) AS n, CAST(sum(cnt) AS BIGINT) AS sumc,
        |                 CAST(sum(cnt * cnt) AS BIGINT) AS sumc2 FROM counts GROUP BY b),
        |zt AS MATERIALIZED (
@@ -2993,17 +2942,15 @@ object Queries {
       .withColumn("c0", F.cellAt(lit(z), evLon(col("event_id")), evLat(col("event_id"))))
       // mercator row span of the R-excursion (y grows as lat falls)
       .withColumn("yTop",
-        F.cellAt(lit(z), evLon(col("event_id")) , evLat(col("event_id")) + lit(rDeg)) % lit(268435456L))
+        cellY(F.cellAt(lit(z), evLon(col("event_id")), evLat(col("event_id")) + lit(rDeg))))
       .withColumn("yBot",
-        F.cellAt(lit(z), evLon(col("event_id")), evLat(col("event_id")) - lit(rDeg)) % lit(268435456L))
+        cellY(F.cellAt(lit(z), evLon(col("event_id")), evLat(col("event_id")) - lit(rDeg))))
       .withColumn("dxv", explode(sequence(lit(-1L), lit(1L))))
       .withColumn("yv", explode(sequence(col("yTop"), col("yBot"))))
+      .withColumn("xv", cellX(col("c0")) + col("dxv"))
       // column index stays on the 64-wide grid (nothing spans ±180°)
-      .filter(expr("(c0 % 72057594037927936) div 268435456") + col("dxv") >= 0 &&
-        expr("(c0 % 72057594037927936) div 268435456") + col("dxv") < 64)
-      .select(keep :+
-        (col("c0") - col("c0") % lit(268435456L) +
-          col("dxv") * lit(268435456L) + col("yv")).as("cell"): _*)
+      .filter(col("xv") >= 0 && col("xv") < 64)
+      .select(keep :+ cellPack(lit(z), col("xv"), col("yv")).as("cell"): _*)
     val dx = col("bx") - col("ax")
     val dy = col("by") - col("ay")
     val apx = col("px") - col("ax")
@@ -3201,22 +3148,17 @@ object Queries {
       byZ(8).filter(col("cnt") > QtCap)
         .select(col("cell"), col("cnt"), lit(1L).as("forced")))
     leaves.reduce(_ unionByName _)
-      .withColumn("z", expr("cell div 72057594037927936"))
+      .withColumn("z", cellZ(col("cell")))
       .select(col("z"), col("cell"), col("cnt"), col("forced"))
   }
 
   def quadTreeSql: String = {
-    // parent of a packed cell, one level up: z-1 | x>>1 | y>>1
-    def par(c: String): String =
-      s"(($c // 72057594037927936 - 1) * 72057594037927936 + " +
-        s"((($c % 72057594037927936) // 268435456) // 2) * 268435456 + " +
-        s"(($c % 268435456) // 2))"
     val lvls = (7 to 4 by -1).map { z =>
-      s"c$z AS MATERIALIZED (SELECT ${par("cell")} AS cell, CAST(sum(cnt) AS BIGINT) AS cnt FROM c${z + 1} GROUP BY 1)"
+      s"c$z AS MATERIALIZED (SELECT ${parentCellSql("cell", z + 1, z.toString)} AS cell, CAST(sum(cnt) AS BIGINT) AS cnt FROM c${z + 1} GROUP BY 1)"
     }.mkString(",\n")
     val leafLvls = (5 to 8).map { z =>
       s"""SELECT s.cell, s.cnt, 0 AS forced
-         |FROM c$z s JOIN c${z - 1} p ON ${par("s.cell")} = p.cell
+         |FROM c$z s JOIN c${z - 1} p ON ${parentCellSql("s.cell", z, (z - 1).toString)} = p.cell
          |WHERE s.cnt <= $QtCap AND p.cnt > $QtCap""".stripMargin
     }.mkString("\nUNION ALL\n")
     s"""WITH pts AS (${eventPointsSql}),
@@ -3231,7 +3173,7 @@ object Queries {
        |SELECT cell, cnt, 0 AS forced FROM c4 WHERE cnt <= $QtCap
        |UNION ALL
        |SELECT cell, cnt, 1 AS forced FROM c8 WHERE cnt > $QtCap)
-       |SELECT cell // 72057594037927936 AS z, cell,
+       |SELECT ${cellZSql("cell")} AS z, cell,
        |       cnt, CAST(forced AS BIGINT) AS forced
        |FROM leaves""".stripMargin
   }
@@ -3721,9 +3663,8 @@ object Queries {
   def gravityFit(spark: SparkSession, sfDir: String): DataFrame = {
     val q = odFlows(spark, sfDir)
       .filter(col("o_cell") =!= col("d_cell"))
-      .withColumn("dx", expr(
-        "(o_cell % 72057594037927936) div 268435456 - (d_cell % 72057594037927936) div 268435456"))
-      .withColumn("dy", expr("o_cell % 268435456 - d_cell % 268435456"))
+      .withColumn("dx", cellX(col("o_cell")) - cellX(col("d_cell")))
+      .withColumn("dy", cellY(col("o_cell")) - cellY(col("d_cell")))
       .withColumn("d2", col("dx") * col("dx") + col("dy") * col("dy"))
       .select(
         round(log(col("d2").cast("double")) * lit(1000000.0), 0).cast("long").as("xq"),
@@ -3744,9 +3685,8 @@ object Queries {
   def gravityFitSql: String =
     s"""WITH $odEdgeCtes,
        |pairs AS (
-       |  SELECT (o_cell % 72057594037927936) // 268435456
-       |           - (d_cell % 72057594037927936) // 268435456 AS dx,
-       |         o_cell % 268435456 - d_cell % 268435456 AS dy,
+       |  SELECT ${cellXSql("o_cell")} - ${cellXSql("d_cell")} AS dx,
+       |         ${cellYSql("o_cell")} - ${cellYSql("d_cell")} AS dy,
        |         flows
        |  FROM edges),
        |q AS (SELECT
@@ -4389,23 +4329,12 @@ object Queries {
   // =================================================================
 
   def moranI(spark: SparkSession, sfDir: String): DataFrame = {
-    val counts = eventPoints(spark, sfDir)
-      .select(F.cellAt(lit(6), col("elon"), col("elat")).as("cell"))
-      .groupBy("cell").agg(count(lit(1)).as("cnt"))
-      .withColumn("x", expr("(cell % 72057594037927936) div 268435456"))
-      .withColumn("y", col("cell") % lit(268435456L))
-      .persist()
+    val counts = z6Counts(eventPoints(spark, sfDir))
     val glob = counts.agg(count(lit(1)).as("n"), sum(col("cnt")).as("sumc"))
     val cells = counts.crossJoin(broadcast(glob))
       .withColumn("u", col("n") * col("cnt") - col("sumc"))
       .persist() // probe, build and the final moment agg all read it
-    val contrib = cells
-      .withColumn("dx", explode(sequence(lit(-1), lit(1))))
-      .withColumn("dy", explode(sequence(lit(-1), lit(1))))
-      .filter(col("x") + col("dx") >= 0 && col("x") + col("dx") < 64 &&
-        col("y") + col("dy") >= 0 && col("y") + col("dy") < 64)
-      .select((col("cell") + col("dx") * lit(268435456L) + col("dy")).as("cell"),
-        col("u").as("nu"))
+    val contrib = queen(cells, col("u").as("nu"))
       .groupBy("cell").agg(sum(col("nu")).as("su"), count(lit(1)).as("nn"))
     cells.join(contrib, "cell")
       .agg(max(col("n")).as("n_cells"),
@@ -4420,25 +4349,13 @@ object Queries {
 
   def moranISql: String =
     s"""WITH pts AS (${eventPointsSql}),
-       |counts AS MATERIALIZED (
-       |  SELECT cell, CAST(count(*) AS BIGINT) AS cnt,
-       |         (cell % 72057594037927936) // 268435456 AS x,
-       |         cell % 268435456 AS y
-       |  FROM (SELECT ${cellSql(6, "elon", "elat")} AS cell FROM pts)
-       |  GROUP BY 1),
+       |${z6CountsSql()},
        |gstat AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cnt) AS BIGINT) AS sumc
        |          FROM counts),
        |cells AS MATERIALIZED (
        |  SELECT cell, x, y, n, n * cnt - sumc AS u
        |  FROM counts CROSS JOIN gstat),
-       |contrib AS (
-       |  SELECT cell + dx.d * 268435456 + dy.d AS cell,
-       |         CAST(sum(u) AS BIGINT) AS su, CAST(count(*) AS BIGINT) AS nn
-       |  FROM cells,
-       |       (SELECT unnest([-1, 0, 1]) AS d) dx,
-       |       (SELECT unnest([-1, 0, 1]) AS d) dy
-       |  WHERE x + dx.d >= 0 AND x + dx.d < 64 AND y + dy.d >= 0 AND y + dy.d < 64
-       |  GROUP BY 1),
+       |${queenSql("cells", Seq(",", "CAST(sum(u) AS BIGINT) AS su, CAST(count(*) AS BIGINT) AS nn"))},
        |agg AS (SELECT CAST(max(n) AS BIGINT) AS n_cells,
        |               CAST(sum(nn - 1) AS BIGINT) AS w_sum,
        |               CAST(sum(u * (su - u)) AS BIGINT) AS num,
@@ -4464,20 +4381,9 @@ object Queries {
   // =================================================================
 
   def gearyC(spark: SparkSession, sfDir: String): DataFrame = {
-    val counts = eventPoints(spark, sfDir)
-      .select(F.cellAt(lit(6), col("elon"), col("elat")).as("cell"))
-      .groupBy("cell").agg(count(lit(1)).as("cnt"))
-      .withColumn("x", expr("(cell % 72057594037927936) div 268435456"))
-      .withColumn("y", col("cell") % lit(268435456L))
-      .persist() // contrib probe, the final join and both 1-row aggs read it
+    val counts = z6Counts(eventPoints(spark, sfDir))
     val glob = counts.agg(count(lit(1)).as("n"), sum(col("cnt")).as("sumc"))
-    val contrib = counts
-      .withColumn("dx", explode(sequence(lit(-1), lit(1))))
-      .withColumn("dy", explode(sequence(lit(-1), lit(1))))
-      .filter(col("x") + col("dx") >= 0 && col("x") + col("dx") < 64 &&
-        col("y") + col("dy") >= 0 && col("y") + col("dy") < 64)
-      .select((col("cell") + col("dx") * lit(268435456L) + col("dy")).as("cell"),
-        col("cnt").as("nc"))
+    val contrib = queen(counts, col("cnt").as("nc"))
       .groupBy("cell").agg(sum(col("nc")).as("sm"),
         sum(col("nc") * col("nc")).as("sq"), count(lit(1)).as("wn"))
     counts.join(contrib, "cell").crossJoin(broadcast(glob))
@@ -4497,24 +4403,11 @@ object Queries {
 
   def gearyCSql: String =
     s"""WITH pts AS (${eventPointsSql}),
-       |counts AS MATERIALIZED (
-       |  SELECT cell, CAST(count(*) AS BIGINT) AS cnt,
-       |         (cell % 72057594037927936) // 268435456 AS x,
-       |         cell % 268435456 AS y
-       |  FROM (SELECT ${cellSql(6, "elon", "elat")} AS cell FROM pts)
-       |  GROUP BY 1),
+       |${z6CountsSql()},
        |gstat AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cnt) AS BIGINT) AS sumc
        |          FROM counts),
-       |contrib AS (
-       |  SELECT cell + dx.d * 268435456 + dy.d AS cell,
-       |         CAST(sum(cnt) AS BIGINT) AS sm,
-       |         CAST(sum(cnt * cnt) AS BIGINT) AS sq,
-       |         CAST(count(*) AS BIGINT) AS wn
-       |  FROM counts,
-       |       (SELECT unnest([-1, 0, 1]) AS d) dx,
-       |       (SELECT unnest([-1, 0, 1]) AS d) dy
-       |  WHERE x + dx.d >= 0 AND x + dx.d < 64 AND y + dy.d >= 0 AND y + dy.d < 64
-       |  GROUP BY 1),
+       |${queenSql("counts", Seq(",", "CAST(sum(cnt) AS BIGINT) AS sm,",
+         "CAST(sum(cnt * cnt) AS BIGINT) AS sq,", "CAST(count(*) AS BIGINT) AS wn"))},
        |agg AS (SELECT CAST(max(n) AS BIGINT) AS n_cells,
        |               CAST(sum(wn - 1) AS BIGINT) AS w_sum,
        |               CAST(sum((wn - 1) * cnt * cnt - 2 * cnt * (sm - cnt) + (sq - cnt * cnt)) AS BIGINT) AS num,
@@ -4541,24 +4434,13 @@ object Queries {
   // =================================================================
 
   def localMoran(spark: SparkSession, sfDir: String): DataFrame = {
-    val counts = eventPoints(spark, sfDir)
-      .select(F.cellAt(lit(6), col("elon"), col("elat")).as("cell"))
-      .groupBy("cell").agg(count(lit(1)).as("cnt"))
-      .withColumn("x", expr("(cell % 72057594037927936) div 268435456"))
-      .withColumn("y", col("cell") % lit(268435456L))
-      .persist()
+    val counts = z6Counts(eventPoints(spark, sfDir))
     val glob = counts.agg(count(lit(1)).as("n"), sum(col("cnt")).as("sumc"))
     val cells = counts.crossJoin(broadcast(glob))
       .withColumn("u", col("n") * col("cnt") - col("sumc"))
       .persist() // contrib probe, Σu² agg and the final join all read it
     val den = cells.agg(sum(col("u") * col("u")).as("den"))
-    val contrib = cells
-      .withColumn("dx", explode(sequence(lit(-1), lit(1))))
-      .withColumn("dy", explode(sequence(lit(-1), lit(1))))
-      .filter(col("x") + col("dx") >= 0 && col("x") + col("dx") < 64 &&
-        col("y") + col("dy") >= 0 && col("y") + col("dy") < 64)
-      .select((col("cell") + col("dx") * lit(268435456L) + col("dy")).as("cell"),
-        col("u").as("nu"))
+    val contrib = queen(cells, col("u").as("nu"))
       .groupBy("cell").agg(sum(col("nu")).as("su"))
     cells.join(contrib, "cell").crossJoin(broadcast(den))
       .withColumn("lag", col("su") - col("u"))
@@ -4575,26 +4457,14 @@ object Queries {
 
   def localMoranSql: String =
     s"""WITH pts AS (${eventPointsSql}),
-       |counts AS MATERIALIZED (
-       |  SELECT cell, CAST(count(*) AS BIGINT) AS cnt,
-       |         (cell % 72057594037927936) // 268435456 AS x,
-       |         cell % 268435456 AS y
-       |  FROM (SELECT ${cellSql(6, "elon", "elat")} AS cell FROM pts)
-       |  GROUP BY 1),
+       |${z6CountsSql()},
        |gstat AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cnt) AS BIGINT) AS sumc
        |          FROM counts),
        |cells AS MATERIALIZED (
        |  SELECT cell, x, y, cnt, n, n * cnt - sumc AS u
        |  FROM counts CROSS JOIN gstat),
        |dstat AS (SELECT CAST(sum(u * u) AS BIGINT) AS den FROM cells),
-       |contrib AS (
-       |  SELECT cell + dx.d * 268435456 + dy.d AS cell,
-       |         CAST(sum(u) AS BIGINT) AS su
-       |  FROM cells,
-       |       (SELECT unnest([-1, 0, 1]) AS d) dx,
-       |       (SELECT unnest([-1, 0, 1]) AS d) dy
-       |  WHERE x + dx.d >= 0 AND x + dx.d < 64 AND y + dy.d >= 0 AND y + dy.d < 64
-       |  GROUP BY 1)
+       |${queenSql("cells", Seq(",", "CAST(sum(u) AS BIGINT) AS su"))}
        |SELECT cells.cell, cnt, u, su - u AS lag,
        |  CASE WHEN u > 0 AND su - u > 0 THEN 'HH' WHEN u < 0 AND su - u < 0 THEN 'LL'
        |       WHEN u > 0 AND su - u < 0 THEN 'HL' WHEN u < 0 AND su - u > 0 THEN 'LH'
@@ -6365,18 +6235,8 @@ object Queries {
   // =================================================================
 
   def slopeAspect(spark: SparkSession, sfDir: String): DataFrame = {
-    val counts = eventPoints(spark, sfDir)
-      .select(F.cellAt(lit(6), col("elon"), col("elat")).as("cell"))
-      .groupBy("cell").agg(count(lit(1)).as("cnt"))
-      .withColumn("x", expr("(cell % 72057594037927936) div 268435456"))
-      .withColumn("y", col("cell") % lit(268435456L))
-      .persist() // two consumers: the scatter and the final cell join
-    val contrib = counts
-      .withColumn("dx", explode(sequence(lit(-1), lit(1))))
-      .withColumn("dy", explode(sequence(lit(-1), lit(1))))
-      .filter(col("x") + col("dx") >= 0 && col("x") + col("dx") < 64 &&
-        col("y") + col("dy") >= 0 && col("y") + col("dy") < 64)
-      .select((col("cell") + col("dx") * lit(268435456L) + col("dy")).as("cell"),
+    val counts = z6Counts(eventPoints(spark, sfDir))
+    val contrib = queen(counts,
         (-col("dx") * (lit(2) - abs(col("dy"))) * col("cnt")).as("cx"),
         (-col("dy") * (lit(2) - abs(col("dx"))) * col("cnt")).as("cy"))
       .groupBy("cell").agg(sum(col("cx")).as("gx"), sum(col("cy")).as("gy"))
@@ -6394,21 +6254,9 @@ object Queries {
 
   def slopeAspectSql: String =
     s"""WITH pts AS (${eventPointsSql}),
-       |counts AS MATERIALIZED (
-       |  SELECT cell, CAST(count(*) AS BIGINT) AS cnt,
-       |         (cell % 72057594037927936) // 268435456 AS x,
-       |         cell % 268435456 AS y
-       |  FROM (SELECT ${cellSql(6, "elon", "elat")} AS cell FROM pts)
-       |  GROUP BY 1),
-       |contrib AS (
-       |  SELECT cell + dx.d * 268435456 + dy.d AS cell,
-       |         CAST(sum(-dx.d * (2 - abs(dy.d)) * cnt) AS BIGINT) AS gx,
-       |         CAST(sum(-dy.d * (2 - abs(dx.d)) * cnt) AS BIGINT) AS gy
-       |  FROM counts,
-       |       (SELECT unnest([-1, 0, 1]) AS d) dx,
-       |       (SELECT unnest([-1, 0, 1]) AS d) dy
-       |  WHERE x + dx.d >= 0 AND x + dx.d < 64 AND y + dy.d >= 0 AND y + dy.d < 64
-       |  GROUP BY 1)
+       |${z6CountsSql()},
+       |${queenSql("counts", Seq(",", "CAST(sum(-dx.d * (2 - abs(dy.d)) * cnt) AS BIGINT) AS gx,",
+         "CAST(sum(-dy.d * (2 - abs(dx.d)) * cnt) AS BIGINT) AS gy"))}
        |SELECT counts.cell, counts.cnt, contrib.gx, contrib.gy,
        |       round(atan(sqrt(CAST(gx AS DOUBLE) * CAST(gx AS DOUBLE) +
        |             CAST(gy AS DOUBLE) * CAST(gy AS DOUBLE)) / 800.0) * 180.0 / pi(), 4) AS slope_deg,
@@ -6524,9 +6372,10 @@ object Queries {
   }
 
   def dtwTracksSql: String = {
-    def dcost(ae: String, be: String, ie: String, je: String): String =
-      s"(abs(($ae[$ie] % 72057594037927936) // 268435456 - ($be[$je] % 72057594037927936) // 268435456)" +
-        s" + abs($ae[$ie] % 268435456 - $be[$je] % 268435456))"
+    def dcost(ae: String, be: String, ie: String, je: String): String = {
+      val (a, b) = (s"$ae[$ie]", s"$be[$je]")
+      s"(abs(${cellXSql(a)} - ${cellXSql(b)}) + abs(${cellYSql(a)} - ${cellYSql(b)}))"
+    }
     val big = "1152921504606846976"
     s"""WITH RECURSIVE raw AS (
        |  SELECT event_id, user_id, epoch_us(ts) AS us,
@@ -6541,10 +6390,7 @@ object Queries {
        |         CAST(count(*) AS BIGINT) AS m
        |  FROM fx WHERE rn <= $DtwK GROUP BY 1 HAVING count(*) >= 2),
        |blk AS MATERIALIZED (
-       |  SELECT user_id, cells, m,
-       |         (2 * 72057594037927936 +
-       |          ((cells[1] % 72057594037927936) // 268435456 // 64) * 268435456 +
-       |          (cells[1] % 268435456) // 64) AS o
+       |  SELECT user_id, cells, m, ${parentCellSql("cells[1]", 8, "2")} AS o
        |  FROM trk),
        |pairs AS MATERIALIZED (
        |  SELECT * FROM (

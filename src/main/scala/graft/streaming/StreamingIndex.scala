@@ -78,16 +78,6 @@ object StreamingIndex {
   def reverseStream(points: DataFrame, features: DataFrame, z: Int): DataFrame =
     graft.ops.Geocode.reversePip(points, features, z)
 
-  /** Watermarked per-window mention-rate aggregation over a stream of
-    * (warc_ts, url) page arrivals — the streaming-side E6 metrics shape. */
-  def pageRate(pages: DataFrame, watermark: String = "10 minutes",
-               window: String = "5 minutes"): DataFrame =
-    pages
-      .withWatermark("warc_ts", watermark)
-      .groupBy(org.apache.spark.sql.functions.window(col("warc_ts"), window))
-      .agg(count(lit(1)).as("pages"))
-      .select(col("window.start").as("win_start"), col("pages"))
-
   /** Streaming exact dedup of a page stream: state key is the 32-byte
     * sha2(text) (same key discipline as the batch dedup — the raw document
     * must never be the state/shuffle key), bounded by the event-time

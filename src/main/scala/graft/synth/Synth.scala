@@ -2,6 +2,8 @@ package graft.synth
 
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.{IntegralDivide, Literal, Remainder}
+import org.apache.spark.sql.graftshim.ColumnBridge
 import graft.core.CellMath
 import graft.functions.F
 
@@ -223,12 +225,8 @@ object Synth {
   /** Packed cell `z:5|x:28|y:28` as exact integer arithmetic in SQL.
     * Valid for lon in [-180,180) and lat within mercator range (no clamp —
     * all synthesized coords are in-range by construction). */
-  def cellSql(z: Int, lonE: String, latE: String): String = {
-    val n = 1L << z
-    val x = s"CAST(floor((($lonE) + 180.0) / 360.0 * $n.0) AS BIGINT)"
-    val y = s"CAST(floor($n.0 * (1.0 - ln(tan(($latE) * pi() / 180.0) + 1.0 / cos(($latE) * pi() / 180.0)) / pi()) / 2.0) AS BIGINT)"
-    s"(${z}::BIGINT * 72057594037927936 + $x * 268435456 + $y)"
-  }
+  def cellSql(z: Int, lonE: String, latE: String): String =
+    cellPackSql(s"$z::BIGINT", tileXSql(z, lonE), tileYSql(z, latE))
 
   def tileXSql(z: Int, lonE: String): String = {
     val n = 1L << z
@@ -239,6 +237,52 @@ object Synth {
     val n = 1L << z
     s"CAST(floor($n.0 * (1.0 - ln(tan(($latE) * pi() / 180.0) + 1.0 / cos(($latE) * pi() / 180.0)) / pi()) / 2.0) AS BIGINT)"
   }
+
+  // ---------------------------------------------------------------
+  // Packed-key codec: the SQL and Column twins of CellMath.{pack, zOf,
+  // xOf, yOf, parentCell}. Every query-layer decode and pack of a cell
+  // goes through these (SourceGateSpec fails on the key's constants
+  // anywhere else). Arguments are atoms: a column, `t.col` or `a[i]`.
+  // ---------------------------------------------------------------
+
+  /** `CellMath.pack`; `zE` is BIGINT- or INTEGER-typed (z·2^56 fits both). */
+  def cellPackSql(zE: String, xE: String, yE: String): String =
+    s"($zE * 72057594037927936 + $xE * 268435456 + $yE)"
+  def cellZSql(c: String): String = s"$c // 72057594037927936"
+  def cellXSql(c: String): String = s"($c % 72057594037927936) // 268435456"
+  def cellYSql(c: String): String = s"$c % 268435456"
+
+  /** The cell `dx`, `dy` tiles from `c` at its own zoom; the caller keeps
+    * x + dx and y + dy inside the grid. */
+  def cellOffsetSql(c: String, dxE: String, dyE: String): String =
+    s"$c + $dxE * 268435456 + $dyE"
+
+  /** `CellMath.parentCell` of a zoom-`z` cell at zoom `zp` (an integer
+    * literal or column, zp <= z); the Spark side is `F.parentCell`. */
+  def parentCellSql(c: String, z: Int, zp: String): String = {
+    val f = s"(1::BIGINT << ($z - $zp))"
+    cellPackSql(zp, s"(${cellXSql(c)} // $f)", s"(${cellYSql(c)} // $f)")
+  }
+
+  /** FROM clause covering each rect of `rects` — a FROM head whose rect
+    * row (west, south, east, north) is aliased `f` — by its zoom-`z` tiles
+    * `xs.x` × `ys.y`; [[rectCellSql]] packs them. Mirrors `F.tileCover`
+    * over a rect's WKB. */
+  def rectCoverSql(z: Int, rects: String): String =
+    s"""$rects,
+       |LATERAL (SELECT unnest(generate_series(${tileXSql(z, "f.west")}, ${tileXSql(z, "f.east")})) AS x) xs,
+       |LATERAL (SELECT unnest(generate_series(${tileYSql(z, "f.north")}, ${tileYSql(z, "f.south")})) AS y) ys""".stripMargin
+
+  def rectCellSql(z: Int): String = cellPackSql(s"$z::BIGINT", "xs.x", "ys.y")
+
+  def cellPack(z: Column, x: Column, y: Column): Column =
+    z.cast("long") * lit(72057594037927936L) + x * lit(268435456L) + y
+  def cellZ(c: Column): Column =
+    ColumnBridge.column(IntegralDivide(ColumnBridge.expression(c), Literal(72057594037927936L)))
+  def cellX(c: Column): Column = ColumnBridge.column(IntegralDivide(
+    Remainder(ColumnBridge.expression(c), Literal(72057594037927936L)), Literal(268435456)))
+  def cellY(c: Column): Column = c % lit(268435456L)
+  def cellOffset(c: Column, dx: Column, dy: Column): Column = c + dx * lit(268435456L) + dy
 
   /** Haversine km in SQL — mirrors F.haversineKm exactly. */
   def haversineSql(lon1: String, lat1: String, lon2: String, lat2: String): String = {

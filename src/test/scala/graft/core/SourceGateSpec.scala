@@ -3,6 +3,7 @@ package graft.core
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 /** Source-level gates over `src/main`: patterns that compile and pass the
   * fixtures but break at the id ranges the design claims. */
@@ -17,27 +18,32 @@ class SourceGateSpec extends AnyFunSuite {
     finally walk.close()
   }
 
+  /** `file:line: text` of every `src/main` line matching `raw`, outside the
+    * files named in `owners`. */
+  private def hits(raw: Regex, owners: Set[String] = Set.empty): Seq[String] = for {
+    p <- mainSources if !owners.contains(p.getFileName.toString)
+    (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+    if raw.findFirstIn(line).isDefined
+  } yield s"$p:${i + 1}: ${line.trim}"
+
   test("no raw Knuth multiply on unbounded ids (overflows BIGINT under ANSI)") {
     // `id * 2654435761` leaves the Long range once id > ~3.5e9; derive
     // per-id draws from mix64 (modular by construction) instead
-    val raw = """\*\s*2654435761""".r
-    val hits = for {
-      p <- mainSources
-      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
-      if raw.findFirstIn(line).isDefined
-    } yield s"$p:${i + 1}: ${line.trim}"
-    assert(hits.isEmpty, hits.mkString("\n"))
+    val found = hits("""\*\s*2654435761""".r)
+    assert(found.isEmpty, found.mkString("\n"))
   }
 
   test("fixture tables are read through TableIO.read, not a schemaless read.parquet") {
     // a schemaless `spark.read.parquet` runs a footer-inference job per
     // call; TableIO.read memoizes the inferred schema
-    val raw = """read\.parquet\(s"\$\{?(sfDir|d)\}?/""".r
-    val hits = for {
-      p <- mainSources if p.getFileName.toString != "TableIO.scala"
-      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
-      if raw.findFirstIn(line).isDefined
-    } yield s"$p:${i + 1}: ${line.trim}"
-    assert(hits.isEmpty, hits.mkString("\n"))
+    val found = hits("""read\.parquet\(s"\$\{?(sfDir|d)\}?/""".r, Set("TableIO.scala"))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("cell-key arithmetic goes through CellMath or Synth's SQL/Column twins") {
+    // the packed key z:5|x:28|y:28 has one owner per engine; a hand-written
+    // 2^28 multiply, divide or mask elsewhere is a second copy of the format
+    val found = hits("""26843545[56]""".r, Set("CellMath.scala", "Synth.scala"))
+    assert(found.isEmpty, found.mkString("\n"))
   }
 }

@@ -26,6 +26,54 @@ class ExprsSpec extends SparkTestBase {
     assert(CellMath.xOf(paris) == 8299 && CellMath.yOf(paris) == 5636)
   }
 
+  test("Synth's cell-key twins match CellMath and F.parentCell on grid-edge cells and null") {
+    import spark.implicits._
+    import graft.synth.Synth._
+    // x and y at 0 and 2^z - 1 for z = 0, 6, 12, 28; each cell's parent at
+    // zoom 0, z/2 and z, and its in-grid queen neighbours; plus a null cell
+    val edge = for {
+      z <- Seq(0, 6, 12, 28); x <- Seq(0L, (1L << z) - 1); y <- Seq(0L, (1L << z) - 1)
+      zp <- Seq(0, z / 2, z).distinct
+      dx <- -1 to 1; dy <- -1 to 1
+      if x + dx >= 0 && x + dx < (1L << z) && y + dy >= 0 && y + dy < (1L << z)
+    } yield (z, Option(x), Option(y), zp, dx, dy)
+    val cases = (edge :+ ((6, None, None, 3, 0, 0))).zipWithIndex
+    val got = cases.map { case ((z, x, y, zp, dx, dy), i) =>
+      (i, z, x, y, zp, dx, dy, x.map(CellMath.pack(z, _, y.get)))
+    }.toDF("i", "z", "x", "y", "zp", "dx", "dy", "cell")
+      .select(col("i"), cellZ(col("cell")), cellX(col("cell")), cellY(col("cell")),
+        cellPack(col("z"), col("x"), col("y")), F.parentCell(col("cell"), col("zp")),
+        cellOffset(col("cell"), col("dx"), col("dy")))
+      .collect().map(r => r.getInt(0) -> (1 to 6).map(k => Option(r.get(k)).map(_.toString)))
+      .toMap
+    // the SQL twins, evaluated by the oracle engine (DuckDB)
+    val sql = cases.map { case ((z, x, y, zp, dx, dy), i) =>
+      val c = x.map(CellMath.pack(z, _, y.get).toString).getOrElse("NULL")
+      s"SELECT $i, ${cellZSql("c")}, ${cellXSql("c")}, ${cellYSql("c")}, " +
+        s"${cellPackSql("z", "x", "y")}, ${parentCellSql("c", z, "zp")}, " +
+        s"${cellOffsetSql("c", "dx", "dy")} FROM (SELECT CAST($c AS BIGINT) AS c, $z AS z, " +
+        s"CAST(${x.getOrElse("NULL")} AS BIGINT) AS x, CAST(${y.getOrElse("NULL")} AS BIGINT) AS y, " +
+        s"$zp AS zp, $dx AS dx, $dy AS dy)"
+    }.mkString(" UNION ALL ")
+    val py = "import sys, duckdb\nfor r in duckdb.sql(sys.argv[1]).fetchall():\n" +
+      "    print(','.join('' if v is None else str(v) for v in r))"
+    val duck = scala.sys.process.Process(Seq("python3", "-c", py, sql)).!!.trim.split("\n")
+      .map(_.split(",", -1)).map(r => r(0).toInt -> r.drop(1).map(v => Option(v).filter(_.nonEmpty)).toSeq)
+      .toMap
+    assert(got.size == cases.size && duck.size == cases.size)
+    cases.foreach { case ((z, x, y, zp, dx, dy), i) =>
+      val want = x match {
+        case Some(xx) =>
+          val c = CellMath.pack(z, xx, y.get)
+          Seq(z.toLong, xx, y.get, c, CellMath.parentCell(c, zp), CellMath.pack(z, xx + dx, y.get + dy))
+            .map(v => Some(v.toString))
+        case None => Seq.fill(6)(None)
+      }
+      assert(got(i) == want, s"Column twins, case $i")
+      assert(duck(i) == want, s"SQL twins, case $i")
+    }
+  }
+
   test("ring/disk cells expressions match core") {
     import spark.implicits._
     val c = CellMath.lonLatToCell(8, 10.0, 50.0)
