@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
+import graft.synth.Synth.{custLattice, custLat, custLon}
 
 /** H8 + C5: address-range predicate (housenumber within [lfromhn, ltohn]
   * with parity) and linear interpolation of the address point along the
@@ -28,14 +29,15 @@ object Address {
       .otherwise(y0 + (h - from).cast("double") / (to - from).cast("double") * (y1 - y0))
 
   /** Street segments derived from the supplier table (deterministic, SQL-
-    * mirrored): a horizontal 0.01° segment per supplier with an odd housenum
-    * range keyed on s_suppkey. */
+    * mirrored): a horizontal 0.01° segment per supplier, starting on the
+    * customer lattice over s_suppkey, with an odd housenum range keyed on
+    * s_suppkey. */
   def streets(spark: SparkSession, sfDir: String): DataFrame = {
     val k = col("s_suppkey").cast("long")
     graft.index.TableIO.read(spark, s"$sfDir/supplier.parquet")
       .select(k.as("street_id"),
-        ((k * 7919 % 350000) / 1000.0 - 175.0).as("x0"),
-        ((k * 104729 % 160000) / 1000.0 - 80.0).as("y0"),
+        custLon(k).as("x0"),
+        custLat(k).as("y0"),
         ((k % 50) * 2 + 1).as("fromhn"),
         ((k % 50) * 2 + 99).as("tohn"),
         when(k % 3 === 0, "O").when(k % 3 === 1, "E").otherwise("B").as("parity"))
@@ -43,17 +45,19 @@ object Address {
       .withColumn("y1", col("y0"))
   }
 
-  def streetsSql: String =
-    """SELECT CAST(s_suppkey AS BIGINT) AS street_id,
-      |       ((s_suppkey * 7919) % 350000) / 1000.0 - 175.0 AS x0,
-      |       ((s_suppkey * 104729) % 160000) / 1000.0 - 80.0 AS y0,
-      |       (s_suppkey % 50) * 2 + 1 AS fromhn,
-      |       (s_suppkey % 50) * 2 + 99 AS tohn,
-      |       CASE WHEN s_suppkey % 3 = 0 THEN 'O'
-      |            WHEN s_suppkey % 3 = 1 THEN 'E' ELSE 'B' END AS parity,
-      |       ((s_suppkey * 7919) % 350000) / 1000.0 - 175.0 + 0.01 AS x1,
-      |       ((s_suppkey * 104729) % 160000) / 1000.0 - 80.0 AS y1
-      |FROM supplier""".stripMargin
+  def streetsSql: String = {
+    val (x0, y0) = (custLattice.x.degSql("s_suppkey"), custLattice.y.degSql("s_suppkey"))
+    s"""SELECT CAST(s_suppkey AS BIGINT) AS street_id,
+       |       $x0 AS x0,
+       |       $y0 AS y0,
+       |       (s_suppkey % 50) * 2 + 1 AS fromhn,
+       |       (s_suppkey % 50) * 2 + 99 AS tohn,
+       |       CASE WHEN s_suppkey % 3 = 0 THEN 'O'
+       |            WHEN s_suppkey % 3 = 1 THEN 'E' ELSE 'B' END AS parity,
+       |       $x0 + 0.01 AS x1,
+       |       $y0 AS y1
+       |FROM supplier""".stripMargin
+  }
 
   /** Query: interpolate deterministic probe housenumbers against their
     * street's range (the query housenumber is keyed off the street id). */
@@ -135,8 +139,8 @@ object Address {
     val b = (k % 50) * 2
     graft.index.TableIO.read(spark, s"$sfDir/supplier.parquet")
       .select(k.as("street_id"),
-        ((k * 7919 % 350000) / 1000.0 - 175.0).as("x0"),
-        ((k * 104729 % 160000) / 1000.0 - 80.0).as("y0"),
+        custLon(k).as("x0"),
+        custLat(k).as("y0"),
         array(b + 1, b + 51).as("lfromhn"),
         array(b + 49, b + 99).as("ltohn"),
         array(pc(k), pc(k + 1)).as("parityl"),
@@ -159,23 +163,24 @@ object Address {
     def pc(j: String) =
       s"CASE WHEN ($j) % 3 = 0 THEN 'O' WHEN ($j) % 3 = 1 THEN 'E' ELSE 'B' END"
     val b = "((s_suppkey % 50) * 2)"
+    val (x0, y0) = (custLattice.x.degSql("s_suppkey"), custLattice.y.degSql("s_suppkey"))
     s"""SELECT CAST(s_suppkey AS BIGINT) AS street_id,
-       |       ((s_suppkey * 7919) % 350000) / 1000.0 - 175.0 AS x0,
-       |       ((s_suppkey * 104729) % 160000) / 1000.0 - 80.0 AS y0,
+       |       $x0 AS x0,
+       |       $y0 AS y0,
        |       [$b + 1, $b + 51] AS lfromhn,
        |       [$b + 49, $b + 99] AS ltohn,
        |       [${pc("s_suppkey")}, ${pc("s_suppkey + 1")}] AS parityl,
        |       [$b + 2, $b + 52] AS rfromhn,
        |       [$b + 50, $b + 100] AS rtohn,
        |       [${pc("s_suppkey + 2")}, ${pc("s_suppkey")}] AS parityr,
-       |       ((s_suppkey * 7919) % 350000) / 1000.0 - 175.0 + 0.01 AS x1,
-       |       ((s_suppkey * 104729) % 160000) / 1000.0 - 80.0 AS y1,
-       |       ((s_suppkey * 7919) % 350000) / 1000.0 - 175.0 + 0.01 + 0.006 AS x2,
-       |       ((s_suppkey * 104729) % 160000) / 1000.0 - 80.0 + 0.008 AS y2,
-       |       ((s_suppkey * 7919) % 350000) / 1000.0 - 175.0 + 0.01 + 0.006 + 0.004 AS x3,
-       |       ((s_suppkey * 104729) % 160000) / 1000.0 - 80.0 + 0.008 - 0.003 AS y3,
-       |       ((s_suppkey * 7919) % 350000) / 1000.0 - 175.0 + 0.01 + 0.006 + 0.004 + 0.007 AS x4,
-       |       ((s_suppkey * 104729) % 160000) / 1000.0 - 80.0 + 0.008 - 0.003 + 0.005 AS y4
+       |       $x0 + 0.01 AS x1,
+       |       $y0 AS y1,
+       |       $x0 + 0.01 + 0.006 AS x2,
+       |       $y0 + 0.008 AS y2,
+       |       $x0 + 0.01 + 0.006 + 0.004 AS x3,
+       |       $y0 + 0.008 - 0.003 AS y3,
+       |       $x0 + 0.01 + 0.006 + 0.004 + 0.007 AS x4,
+       |       $y0 + 0.008 - 0.003 + 0.005 AS y4
        |FROM supplier""".stripMargin
   }
 

@@ -1031,7 +1031,7 @@ object Queries {
 
   // =================================================================
   // Density clustering (grid DBSCAN): the mention-clustering / POI-
-  // conflation op. eps is DERIVED from the corpus count (eps = ⌊K/√n⌋)
+  // conflation op. eps is DERIVED from the corpus count (⌊K/√n⌋, ≥ 1)
   // so the expected neighbor degree πK²/A stays constant across SFs —
   // subcritical for continuum percolation, so clusters stay finite (the
   // CC closure's round count stays bounded) at every scale. Blocking:
@@ -1048,28 +1048,6 @@ object Queries {
 
   private val DbscanK = 214000.0
   private val DbscanMinPts = 4
-
-  /** DBSCAN probe points: event ids scattered by a QUADRATIC hash, not the
-    * linear multiplicative lattice of [[eventPointsSql]] — on the linear
-    * lattice a pair is within eps iff the id DIFFERENCE Δ has both
-    * residues small, so the neighbor graph degenerates into arithmetic
-    * chains whose existence flips with eps (measured: eps=2140 at sf0.01
-    * admits ZERO pairs — a vacuous gate). The quadratic map scatters
-    * Poisson-like at every SF (measured: pairs ∝ n, ~45% core, max
-    * cluster ≤ ~50 at sf0.001/0.01/0.1). Exact BIGINT on both engines. */
-  private def dbscanPoints(spark: SparkSession, sfDir: String): DataFrame = {
-    val k = col("event_id")
-    TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(k.as("id"),
-        ((k * k * 7919 + k * 104729) % 360000 - 180000).as("xq"),
-        ((k * k * 104729 + k * 7919) % 160000 - 80000).as("yq"))
-  }
-
-  private val dbscanPointsSql: String =
-    """SELECT event_id AS id,
-      |       (event_id * event_id * 7919 + event_id * 104729) % 360000 - 180000 AS xq,
-      |       (event_id * event_id * 104729 + event_id * 7919) % 160000 - 80000 AS yq
-      |FROM events""".stripMargin
 
   def dbscan(spark: SparkSession, sfDir: String): DataFrame = {
     // eps derives from the corpus size read from table METADATA
@@ -1102,7 +1080,9 @@ object Queries {
     * fixture). */
   def dbscanOf(points: DataFrame, n: Long, salt: Int = 1,
                hotThreshold: Long = 1000000L): DataFrame = {
-    val eps = math.floor(DbscanK / math.sqrt(n.toDouble)).toLong
+    // eps ≥ 1: past n = 214000² the floor reaches 0, and a zero-width grid
+    // has no cells to divide by
+    val eps = math.max(1L, math.floor(DbscanK / math.sqrt(n.toDouble)).toLong)
     // pts persisted: probe side, home side, and the core/border joins all
     // read it (same multi-consumer convention as the cover frames above).
     // ck packs (sx, sy) into ONE key column — both grid coords are
@@ -1166,7 +1146,7 @@ object Queries {
     * shape), and min-label border attachment. */
   def dbscanSql: String =
     s"""WITH RECURSIVE pts AS MATERIALIZED (${dbscanPointsSql}),
-       |par AS (SELECT CAST(floor(214000.0 / sqrt(count(*))) AS BIGINT) AS eps FROM pts),
+       |par AS (SELECT greatest(1, CAST(floor(214000.0 / sqrt(count(*))) AS BIGINT)) AS eps FROM pts),
        |g AS MATERIALIZED (
        |  SELECT id, xq, yq,
        |         (xq + 180000) // eps AS sx, (yq + 80000) // eps AS sy
@@ -2647,13 +2627,14 @@ object Queries {
 
   def arealInterp(spark: SparkSession, sfDir: String): DataFrame = {
     val k = col("c_custkey")
+    val (x, y) = (custLattice.x.milli(k), custLattice.y.milli(k))
     TableIO.read(spark, s"$sfDir/customer.parquet")
       .select(k.as("src_id"),
         ((k % 1000) + lit(10L)).as("pop"),
-        (k * 7919 % 350000 - 175000 - (lit(300L) + (k % 7) * 150)).as("wm"),
-        (k * 104729 % 160000 - 80000 - (lit(200L) + (k % 5) * 100)).as("sm"),
-        (k * 7919 % 350000 - 175000 + (lit(300L) + (k % 7) * 150)).as("em"),
-        (k * 104729 % 160000 - 80000 + (lit(200L) + (k % 5) * 100)).as("nm"))
+        (x - (lit(300L) + (k % 7) * 150)).as("wm"),
+        (y - (lit(200L) + (k % 5) * 100)).as("sm"),
+        (x + (lit(300L) + (k % 7) * 150)).as("em"),
+        (y + (lit(200L) + (k % 5) * 100)).as("nm"))
       .withColumn("sa", (col("em") - col("wm")) * (col("nm") - col("sm")))
       .withColumn("gx", explode(expr(
         "sequence((wm + 180000) div 15000, (em - 1 + 180000) div 15000)")))
@@ -2667,14 +2648,15 @@ object Queries {
         sum(expr("(pop * ia * 1000000000) div sa")).as("pop_q"))
   }
 
-  def arealInterpSql: String =
+  def arealInterpSql: String = {
+    val (x, y) = (custLattice.x.milliSql("c_custkey"), custLattice.y.milliSql("c_custkey"))
     s"""WITH src AS (
        |  SELECT c_custkey AS src_id,
        |         (c_custkey % 1000) + 10 AS pop,
-       |         (c_custkey * 7919) % 350000 - 175000 - (300 + (c_custkey % 7) * 150) AS wm,
-       |         (c_custkey * 104729) % 160000 - 80000 - (200 + (c_custkey % 5) * 100) AS sm,
-       |         (c_custkey * 7919) % 350000 - 175000 + (300 + (c_custkey % 7) * 150) AS em,
-       |         (c_custkey * 104729) % 160000 - 80000 + (200 + (c_custkey % 5) * 100) AS nm
+       |         $x - (300 + (c_custkey % 7) * 150) AS wm,
+       |         $y - (200 + (c_custkey % 5) * 100) AS sm,
+       |         $x + (300 + (c_custkey % 7) * 150) AS em,
+       |         $y + (200 + (c_custkey % 5) * 100) AS nm
        |  FROM customer),
        |gxs AS (SELECT *, unnest(generate_series((wm + 180000) // 15000,
        |                                          (em - 1 + 180000) // 15000)) AS gx
@@ -2690,6 +2672,7 @@ object Queries {
        |SELECT gx, gy, CAST(count(*) AS BIGINT) AS n_src,
        |       CAST(sum((pop * ia * 1000000000) // sa) AS BIGINT) AS pop_q
        |FROM cells GROUP BY 1, 2""".stripMargin
+  }
 
   // =================================================================
   // Hexagonal binning (the H3-style complement to the square tile
@@ -2707,9 +2690,8 @@ object Queries {
 
   def hexBin(spark: SparkSession, sfDir: String): DataFrame =
     TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(
-        expr("CAST((event_id * 7919) % 360000 - 180000 AS DOUBLE)").as("xd"),
-        expr("CAST((event_id * 104729) % 160000 - 80000 AS DOUBLE)").as("yd"))
+      .select(evLattice.x.milli(col("event_id")).cast("double").as("xd"),
+        evLattice.y.milli(col("event_id")).cast("double").as("yd"))
       .withColumn("q0", expr("(sqrt(3.0) / 3.0 * xd - yd / 3.0) / 9000.0"))
       .withColumn("r0", expr("yd * 2.0 / 3.0 / 9000.0"))
       .withColumn("y0", expr("-q0 - r0"))
@@ -2731,8 +2713,8 @@ object Queries {
     * token-for-token by hexBinSql / hexSmoothSql. */
   private def hexCtes: String =
     s"""pts AS (
-       |  SELECT CAST((event_id * 7919) % 360000 - 180000 AS DOUBLE) AS xd,
-       |         CAST((event_id * 104729) % 160000 - 80000 AS DOUBLE) AS yd
+       |  SELECT CAST(${evLattice.x.milliSql("event_id")} AS DOUBLE) AS xd,
+       |         CAST(${evLattice.y.milliSql("event_id")} AS DOUBLE) AS yd
        |  FROM events),
        |a AS (SELECT (sqrt(3.0) / 3.0 * xd - yd / 3.0) / 9000.0 AS q0,
        |             yd * 2.0 / 3.0 / 9000.0 AS r0
@@ -2843,8 +2825,7 @@ object Queries {
     TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"),
-        expr("((event_id * event_id * 7919 + event_id * 104729) % 360000) - 180000").as("x"),
-        expr("((event_id * event_id * 104729 + event_id * 7919) % 160000) - 80000").as("y"))
+        scatter.x.milli(col("event_id")).as("x"), scatter.y.milli(col("event_id")).as("y"))
       .withColumn("px", lag(col("x"), 1).over(w))
       .withColumn("py", lag(col("y"), 1).over(w))
       .withColumn("pus", lag(col("us"), 1).over(w))
@@ -2860,8 +2841,8 @@ object Queries {
   def speedFilterSql: String =
     s"""WITH ev AS (
        |  SELECT event_id, user_id, epoch_us(ts) AS us,
-       |         ((event_id * event_id * 7919 + event_id * 104729) % 360000) - 180000 AS x,
-       |         ((event_id * event_id * 104729 + event_id * 7919) % 160000) - 80000 AS y
+       |         ${scatter.x.milliSql("event_id")} AS x,
+       |         ${scatter.y.milliSql("event_id")} AS y
        |  FROM events),
        |sq AS (
        |  SELECT user_id, event_id, us, x, y,
@@ -2908,17 +2889,6 @@ object Queries {
   // =================================================================
 
   private val SnapR = 2000L // milli-degrees
-
-  /** Synthetic road layer: 1000 short segments (≤ 4000 milli per axis) on
-    * the milli lattice, endpoints kept inside the world so the z6 cover is
-    * defined; ~25% of event points land within R of some road. */
-  private def roadSegs(spark: SparkSession): DataFrame =
-    spark.range(0, 1000).toDF("seg_id")
-      .select(col("seg_id"),
-        (col("seg_id") * 7919 % 352000 - 176000).as("ax"),
-        (col("seg_id") * 104729 % 152000 - 76000).as("ay"))
-      .withColumn("bx", col("ax") + (col("seg_id") * 31 % 81 - 40) * 100)
-      .withColumn("by", col("ay") + (col("seg_id") * 17 % 81 - 40) * 100)
 
   /** R-gated candidate (point, segment) pairs with exact rational squared
     * distance — the cell blocking + in-row verify core shared by
@@ -2982,8 +2952,8 @@ object Queries {
   def snapPoints(spark: SparkSession, sfDir: String, z: Int = 6): DataFrame = {
     val pts = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"),
-        (col("event_id") * 7919 % 360000 - 180000).as("px"),
-        (col("event_id") * 104729 % 160000 - 80000).as("py"))
+        evLattice.x.milli(col("event_id")).as("px"),
+        evLattice.y.milli(col("event_id")).as("py"))
     val w = Window.partitionBy(col("event_id"))
       .orderBy(col("d2").asc, col("seg_id").asc)
     snapCands(spark, pts, z)
@@ -3218,16 +3188,7 @@ object Queries {
   }
 
   def bearingHistSql: String =
-    s"""WITH roads AS (
-       |  SELECT r AS seg_id,
-       |         r * 7919 % 352000 - 176000 AS ax,
-       |         r * 104729 % 152000 - 76000 AS ay
-       |  FROM (SELECT unnest(generate_series(0, 999)) AS r)),
-       |segs AS (
-       |  SELECT seg_id, ax, ay,
-       |         ax + (seg_id * 31 % 81 - 40) * 100 AS bx,
-       |         ay + (seg_id * 17 % 81 - 40) * 100 AS by
-       |  FROM roads),
+    s"""WITH segs AS (${roadSegsSql}),
        |d AS (
        |  SELECT seg_id, bx - ax AS dx, by - ay AS dy,
        |         ${cellSql(3, "CAST(ax + bx AS DOUBLE) / 2000.0", "CAST(ay + by AS DOUBLE) / 2000.0")} AS district
@@ -3311,16 +3272,7 @@ object Queries {
 
   def clipLengthSql: String = {
     def fr(q: String, p: String) = s"CAST($q AS DOUBLE) / CAST($p AS DOUBLE)"
-    s"""WITH roads AS (
-       |  SELECT r AS seg_id,
-       |         r * 7919 % 352000 - 176000 AS ax,
-       |         r * 104729 % 152000 - 76000 AS ay
-       |  FROM (SELECT unnest(generate_series(0, 999)) AS r)),
-       |segs AS (
-       |  SELECT seg_id, ax, ay,
-       |         ax + (seg_id * 31 % 81 - 40) * 100 AS bx,
-       |         ay + (seg_id * 17 % 81 - 40) * 100 AS by
-       |  FROM roads),
+    s"""WITH segs AS (${roadSegsSql}),
        |cf AS (${custFeaturesSql}),
        |zones AS (
        |  SELECT feature_id,
@@ -3386,8 +3338,8 @@ object Queries {
         unix_micros(col("ts").cast("timestamp")).as("us"))
       .withColumn("t", row_number().over(wu)).filter(col("t") <= VitT)
       .select(col("user_id"), col("t"), col("event_id"),
-        (col("event_id") * 7919 % 360000 - 180000).as("px"),
-        (col("event_id") * 104729 % 160000 - 80000).as("py"))
+        evLattice.x.milli(col("event_id")).as("px"),
+        evLattice.y.milli(col("event_id")).as("py"))
     val top = snapCands(spark, fixes)
       .select(col("user_id"), col("t"), col("seg_id"), col("d2"), col("d2n"), col("d2d"),
         (col("ax") + col("bx")).as("mx"), (col("ay") + col("by")).as("my"))
@@ -3443,44 +3395,11 @@ object Queries {
        |fx AS (
        |  SELECT user_id, event_id,
        |         row_number() OVER (PARTITION BY user_id ORDER BY us, event_id) AS t,
-       |         event_id * 7919 % 360000 - 180000 AS px,
-       |         event_id * 104729 % 160000 - 80000 AS py
+       |         ${evLattice.x.milliSql("event_id")} AS px,
+       |         ${evLattice.y.milliSql("event_id")} AS py
        |  FROM ev
        |  QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY us, event_id) <= $VitT),
-       |roads AS (
-       |  SELECT r AS seg_id,
-       |         r * 7919 % 352000 - 176000 AS ax,
-       |         r * 104729 % 152000 - 76000 AS ay
-       |  FROM (SELECT unnest(generate_series(0, 999)) AS r)),
-       |segs AS MATERIALIZED (
-       |  SELECT seg_id, ax, ay,
-       |         ax + (seg_id * 31 % 81 - 40) * 100 AS bx,
-       |         ay + (seg_id * 17 % 81 - 40) * 100 AS by
-       |  FROM roads),
-       |m AS (
-       |  SELECT f.user_id, f.t, s.seg_id, s.ax + s.bx AS mx, s.ay + s.by AS my,
-       |         s.bx - s.ax AS dx, s.by - s.ay AS dy,
-       |         f.px - s.ax AS apx, f.py - s.ay AS apy,
-       |         f.px - s.bx AS bpx, f.py - s.by AS bpy
-       |  FROM fx f JOIN segs s
-       |    ON f.px >= least(s.ax, s.bx) - $SnapR AND f.px <= greatest(s.ax, s.bx) + $SnapR
-       |   AND f.py >= least(s.ay, s.by) - $SnapR AND f.py <= greatest(s.ay, s.by) + $SnapR),
-       |d AS (
-       |  SELECT user_id, t, seg_id, mx, my,
-       |         CASE WHEN dx * apx + dy * apy <= 0
-       |                THEN CAST(apx * apx + apy * apy AS DOUBLE)
-       |              WHEN dx * apx + dy * apy >= dx * dx + dy * dy
-       |                THEN CAST(bpx * bpx + bpy * bpy AS DOUBLE)
-       |              ELSE CAST((dx * apy - dy * apx) * (dx * apy - dy * apx) AS DOUBLE)
-       |                   / CAST(dx * dx + dy * dy AS DOUBLE) END AS d2,
-       |         CASE WHEN dx * apx + dy * apy <= 0
-       |                THEN apx * apx + apy * apy
-       |              WHEN dx * apx + dy * apy >= dx * dx + dy * dy
-       |                THEN bpx * bpx + bpy * bpy
-       |              ELSE (dx * apy - dy * apx) * (dx * apy - dy * apx) END AS d2n,
-       |         CASE WHEN dx * apx + dy * apy <= 0 OR dx * apx + dy * apy >= dx * dx + dy * dy
-       |                THEN 1 ELSE dx * dx + dy * dy END AS d2d
-       |  FROM m),
+       |${snapCandsSql("fx", Seq("user_id", "t"), Seq("s.ax + s.bx" -> "mx", "s.ay + s.by" -> "my"))},
        |cand AS (
        |  SELECT user_id, t, seg_id, mx, my, d2n // d2d AS emit
        |  FROM d WHERE d2 <= CAST(${SnapR * SnapR} AS DOUBLE)
@@ -3511,36 +3430,25 @@ object Queries {
        |FROM fin
        |QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY cost, seg) = 1""".stripMargin
 
-  /** Mirror of [[snapPoints]]: the raw θ-join on the R-expanded bbox gate
-    * with token-identical distance arithmetic — the tile blocking never
-    * crosses engines, so the compare proves the cover/disk blocking
-    * loss-free for the surviving (d ≤ R) pairs. */
-  def snapPointsSql: String =
-    s"""WITH roads AS (
-       |  SELECT r AS seg_id,
-       |         r * 7919 % 352000 - 176000 AS ax,
-       |         r * 104729 % 152000 - 76000 AS ay
-       |  FROM (SELECT unnest(generate_series(0, 999)) AS r)),
-       |segs AS MATERIALIZED (
-       |  SELECT seg_id, ax, ay,
-       |         ax + (seg_id * 31 % 81 - 40) * 100 AS bx,
-       |         ay + (seg_id * 17 % 81 - 40) * 100 AS by
-       |  FROM roads),
-       |pts AS (
-       |  SELECT event_id,
-       |         event_id * 7919 % 360000 - 180000 AS px,
-       |         event_id * 104729 % 160000 - 80000 AS py
-       |  FROM events),
+  /** SQL twin of [[snapCands]]' verify: CTEs `segs`, `m` (the raw θ-join
+    * of the CTE `pts` (px, py, `keep`…) with every segment on the
+    * R-expanded bbox gate, plus `segCols` (expression over `s`, alias)) and
+    * `d` (`keep`…, the `segCols` aliases, seg_id, d2, d2n, d2d) with
+    * snapCands' exact distance arithmetic. */
+  private def snapCandsSql(pts: String, keep: Seq[String],
+                           segCols: Seq[(String, String)] = Nil): String = {
+    val mCols = keep.map("p." + _) ++ segCols.map { case (e, a) => s"$e AS $a" } :+ "s.seg_id"
+    s"""segs AS MATERIALIZED (${roadSegsSql}),
        |m AS (
-       |  SELECT p.event_id, s.seg_id,
+       |  SELECT ${mCols.mkString(", ")},
        |         s.bx - s.ax AS dx, s.by - s.ay AS dy,
        |         p.px - s.ax AS apx, p.py - s.ay AS apy,
        |         p.px - s.bx AS bpx, p.py - s.by AS bpy
-       |  FROM pts p JOIN segs s
+       |  FROM $pts p JOIN segs s
        |    ON p.px >= least(s.ax, s.bx) - $SnapR AND p.px <= greatest(s.ax, s.bx) + $SnapR
        |   AND p.py >= least(s.ay, s.by) - $SnapR AND p.py <= greatest(s.ay, s.by) + $SnapR),
        |d AS (
-       |  SELECT event_id, seg_id,
+       |  SELECT ${(keep ++ segCols.map(_._2) :+ "seg_id").mkString(", ")},
        |         CASE WHEN dx * apx + dy * apy <= 0
        |                THEN CAST(apx * apx + apy * apy AS DOUBLE)
        |              WHEN dx * apx + dy * apy >= dx * dx + dy * dy
@@ -3554,7 +3462,20 @@ object Queries {
        |              ELSE (dx * apy - dy * apx) * (dx * apy - dy * apx) END AS d2n,
        |         CASE WHEN dx * apx + dy * apy <= 0 OR dx * apx + dy * apy >= dx * dx + dy * dy
        |                THEN 1 ELSE dx * dx + dy * dy END AS d2d
-       |  FROM m)
+       |  FROM m)""".stripMargin
+  }
+
+  /** Mirror of [[snapPoints]]: the raw θ-join on the R-expanded bbox gate
+    * with token-identical distance arithmetic — the tile blocking never
+    * crosses engines, so the compare proves the cover/disk blocking
+    * loss-free for the surviving (d ≤ R) pairs. */
+  def snapPointsSql: String =
+    s"""WITH pts AS (
+       |  SELECT event_id,
+       |         ${evLattice.x.milliSql("event_id")} AS px,
+       |         ${evLattice.y.milliSql("event_id")} AS py
+       |  FROM events),
+       |${snapCandsSql("pts", Seq("event_id"))}
        |SELECT event_id, seg_id, CAST(d2n AS BIGINT) AS d2n, CAST(d2d AS BIGINT) AS d2d
        |FROM d
        |WHERE d2 <= CAST(${SnapR * SnapR} AS DOUBLE)
@@ -3844,8 +3765,8 @@ object Queries {
     TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"),
-        (col("event_id") * 7919 % 360000 - 180000).as("x"),
-        (col("event_id") * 104729 % 160000 - 80000).as("y"))
+        evLattice.x.milli(col("event_id")).as("x"),
+        evLattice.y.milli(col("event_id")).as("y"))
       .groupBy(col("user_id"))
       // (us, event_id) is a unique sort prefix, so the lexicographic
       // struct sort equals the oracle's ORDER BY us, event_id
@@ -3866,15 +3787,17 @@ object Queries {
     * accumulators — a THEN-after-ELSE(s)-after-THEN chain drops a LIST
     * state field, and with several rows in one vector the accumulator
     * BLEEDS ACROSS ROWS (user 14's kept set absorbed other users' ids).
-    * Minimal repros in NOTES.md; the recursive walk sidesteps the lambda
-    * machinery entirely. */
+    * Seen on the fold's first oracle; no standalone repro was kept, and a
+    * plain `list_reduce` over `{'lx', 'ly', 'ids'}` structs built by
+    * `list(… ORDER BY us, id)` per user is correct on DuckDB 1.0.0 at
+    * sf0.01. The recursive walk sidesteps the lambda machinery entirely. */
   def trajSimplifySql: String = {
     val tol2 = SimplifyTol * SimplifyTol
     val far = s"(p.x - w.lx) * (p.x - w.lx) + (p.y - w.ly) * (p.y - w.ly) > $tol2"
     s"""WITH RECURSIVE pts AS (
        |  SELECT user_id, event_id AS id,
-       |         event_id * 7919 % 360000 - 180000 AS x,
-       |         event_id * 104729 % 160000 - 80000 AS y,
+       |         ${evLattice.x.milliSql("event_id")} AS x,
+       |         ${evLattice.y.milliSql("event_id")} AS y,
        |         row_number() OVER (PARTITION BY user_id
        |                            ORDER BY epoch_us(ts), event_id) AS rn
        |  FROM events),
@@ -3924,8 +3847,7 @@ object Queries {
     TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"),
-        expr("((event_id * event_id * 7919 + event_id * 104729) % 360000) - 180000").as("x"),
-        expr("((event_id * event_id * 104729 + event_id * 7919) % 160000) - 80000").as("y"))
+        scatter.x.milli(col("event_id")).as("x"), scatter.y.milli(col("event_id")).as("y"))
       .groupBy(col("user_id"))
       // (us, event_id) is a unique sort prefix — lexicographic struct
       // sort equals the oracle's ORDER BY us, event_id
@@ -3954,8 +3876,8 @@ object Queries {
       s"<= $StayD2"
     s"""WITH RECURSIVE pts AS (
        |  SELECT user_id, event_id AS id, epoch_us(ts) AS us,
-       |         ((event_id * event_id * 7919 + event_id * 104729) % 360000) - 180000 AS x,
-       |         ((event_id * event_id * 104729 + event_id * 7919) % 160000) - 80000 AS y,
+       |         ${scatter.x.milliSql("event_id")} AS x,
+       |         ${scatter.y.milliSql("event_id")} AS y,
        |         row_number() OVER (PARTITION BY user_id
        |                            ORDER BY epoch_us(ts), event_id) AS rn
        |  FROM events),
@@ -4027,8 +3949,7 @@ object Queries {
       TableIO.read(spark, s"$sfDir/events.parquet")
         .select(col("event_id").as("id"), col("user_id"),
           unix_micros(col("ts").cast("timestamp")).as("us"),
-          expr("((event_id * event_id * 7919 + event_id * 104729) % 360000) - 180000").as("x"),
-          expr("((event_id * event_id * 104729 + event_id * 7919) % 160000) - 80000").as("y")),
+          scatter.x.milli(col("event_id")).as("x"), scatter.y.milli(col("event_id")).as("y")),
       Seq("user_id"))
 
   /** The per-track LOCAL DP shape over any (id, us, x, y, keyCols...)
@@ -4062,8 +3983,8 @@ object Queries {
   def dpSimplifySql: String =
     s"""WITH RECURSIVE pts AS (
        |  SELECT user_id, event_id AS id, epoch_us(ts) AS us,
-       |         ((event_id * event_id * 7919 + event_id * 104729) % 360000) - 180000 AS x,
-       |         ((event_id * event_id * 104729 + event_id * 7919) % 160000) - 80000 AS y,
+       |         ${scatter.x.milliSql("event_id")} AS x,
+       |         ${scatter.y.milliSql("event_id")} AS y,
        |         row_number() OVER (PARTITION BY user_id
        |                            ORDER BY epoch_us(ts), event_id) AS rn
        |  FROM events),
@@ -4101,43 +4022,91 @@ object Queries {
        |FROM kept k JOIN pts p ON p.user_id = k.user_id AND p.rn = k.rn""".stripMargin
 
   // =================================================================
+  // Blocked pair self-joins, one per shape and engine. epsPairs: every
+  // unordered pair within distance r on the milli box — width-r blocks,
+  // the probe side explodes its 3×3 ring toward the build point's OWN
+  // block, so each id-ordered pair meets exactly once (ripley_k,
+  // variogram, knox's spatial side). timePairs: every time-ordered pair
+  // within w — the EARLIER event probes buckets {b, b+1} of b = us div w,
+  // the later keys its own b; the two probe keys are disjoint, so each
+  // pair meets exactly once (co_locate, knox's temporal side). Both pin
+  // shuffle_hash on the build side: at 10^12 points a block or bucket key
+  // bounds every hash group (pipeline.Skew for hot keys). The oracles run
+  // the UNBLOCKED θ self-joins (DuckDB IEJoin), so bit-equality proves
+  // the blocking drops nothing and double-counts nothing.
+  // =================================================================
+
+  /** Pairs ia < ib of `pts` (id, xq, yq, `carry`…) with d² ≤ r², as exact
+    * BIGINT: columns ia, xa, ya, ib, xb, yb, d2 and each carried column
+    * suffixed a / b. */
+  private[graft] def epsPairs(pts: DataFrame, r: Long, carry: String*): DataFrame = {
+    def side(s: String) = Seq(col("id").as(s"i$s"), col("xq").as(s"x$s"), col("yq").as(s"y$s")) ++
+      carry.map(c => col(c).as(c + s))
+    val blocked = pts
+      .withColumn("gx", expr(s"(xq + 180000) div $r"))
+      .withColumn("gy", expr(s"(yq + 80000) div $r"))
+    val probe = blocked
+      .withColumn("dx", explode(sequence(lit(-1), lit(1))))
+      .withColumn("dy", explode(sequence(lit(-1), lit(1))))
+      .select((col("gx") + col("dx")).as("gx") +: (col("gy") + col("dy")).as("gy") +: side("a"): _*)
+    val build = blocked.select(col("gx") +: col("gy") +: side("b"): _*)
+    val d2 = (col("xa") - col("xb")) * (col("xa") - col("xb")) +
+      (col("ya") - col("yb")) * (col("ya") - col("yb"))
+    probe.join(build.hint("shuffle_hash"), Seq("gx", "gy"))
+      .withColumn("d2", d2)
+      .filter(col("ia") < col("ib") && col("d2") <= lit(r * r))
+  }
+
+  /** SQL twin of [[epsPairs]] over the CTE `t` (id, xq, yq, `carry`…):
+    * columns d2 and each carried column suffixed a / b. */
+  private def epsPairsSql(t: String, r: Long, carry: String*): String = {
+    val d2 = "(a.xq - b.xq) * (a.xq - b.xq) + (a.yq - b.yq) * (a.yq - b.yq)"
+    val cs = carry.map(c => s", a.$c AS ${c}a, b.$c AS ${c}b").mkString
+    s"""SELECT $d2 AS d2$cs
+       |  FROM $t a JOIN $t b
+       |    ON b.xq BETWEEN a.xq - $r AND a.xq + $r
+       |   AND b.yq BETWEEN a.yq - $r AND a.yq + $r
+       |   AND a.id < b.id
+       |  WHERE $d2 <= ${r * r}""".stripMargin
+  }
+
+  /** Pairs of `pts` (id, us, `keys`…, `carry`…) equal on `keys`, with a
+    * before b (ua < ub, ties by ia < ib) and ub − ua ≤ w: columns keys,
+    * bk, ia, ua, ib, ub and each carried column suffixed a / b. */
+  private def timePairs(pts: DataFrame, w: Long, keys: Seq[String], carry: String*): DataFrame = {
+    val b = expr(s"us div $w")
+    def side(s: String) = Seq(col("id").as(s"i$s"), col("us").as(s"u$s")) ++
+      carry.map(c => col(c).as(c + s))
+    val early = pts.select(keys.map(col) ++ (explode(array(b, b + 1)).as("bk") +: side("a")): _*)
+    val late = pts.select(keys.map(col) ++ (b.as("bk") +: side("b")): _*)
+    early.join(late.hint("shuffle_hash"), keys :+ "bk")
+      .filter((col("ua") < col("ub") ||
+        (col("ua") === col("ub") && col("ia") < col("ib"))) &&
+        col("ub") - col("ua") <= lit(w))
+  }
+
+  // =================================================================
   // Spatio-temporal co-location join: user pairs observed in the same
   // grid cell within a 6-hour window (the classic trajectory "meets"
-  // join). Blocking is (cell, time-bucket) with bucket width == the
-  // window Δ: the EARLIER event probes buckets {b, b+1}, the later keys
-  // its own b — any pair with 0 ≤ t_late − t_early ≤ Δ lands in exactly
-  // one of the two, so the equi-join is loss-free AND exactly-once (the
-  // two probe keys are disjoint), which the θ-join oracle proves. At
-  // 10^12 events the bucket key bounds every hash group to one cell ×
-  // one window (hot cells — cities — salt via pipeline.Skew); the
-  // θ-join's same-cell-any-time candidate set (58× larger at sf0.1) is
-  // exactly what the bucket key prunes. Positions use the QUADRATIC
-  // id-hash scatter (dbscanPoints rationale: the linear synth lattice
-  // admits zero same-cell cross-user pairs); all arithmetic — cells,
-  // buckets, gaps — is exact BIGINT on both engines.
+  // join): timePairs keyed on the cell. The θ-join oracle's
+  // same-cell-any-time candidate set (58× larger at sf0.1) is exactly
+  // what the bucket key prunes. Positions use the QUADRATIC id-hash
+  // scatter (the linear synth lattice admits zero same-cell cross-user
+  // pairs); cells, buckets and gaps are exact BIGINT on both engines.
   // =================================================================
 
   private val CoLocCellMilli = 6000L           // ~6° grid: 60 × 27 cells
   private val CoLocWindowUs = 21600000000L     // 6 h in microseconds
 
   def coLocate(spark: SparkSession, sfDir: String): DataFrame = {
+    def cell(a: Axis) = expr(s"${a.resSql("event_id")} div $CoLocCellMilli")
     val pts = TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(col("event_id").as("id"), col("user_id"),
+      .select(col("event_id").as("id"), col("user_id").as("s"),
         unix_micros(col("ts").cast("timestamp")).as("us"),
-        expr(s"((event_id * event_id * 7919 + event_id * 104729) % 360000) div $CoLocCellMilli").as("cx"),
-        expr(s"((event_id * event_id * 104729 + event_id * 7919) % 160000) div $CoLocCellMilli").as("cy"))
-      .withColumn("b", expr(s"us div $CoLocWindowUs"))
+        cell(scatter.x).as("cx"), cell(scatter.y).as("cy"))
       .persist() // both join sides read it
-    val early = pts.select(col("cx"), col("cy"),
-      explode(array(col("b"), col("b") + 1)).as("bk"),
-      col("id").as("ia"), col("us").as("ua"), col("user_id").as("sa"))
-    val late = pts.select(col("cx"), col("cy"), col("b").as("bk"),
-      col("id").as("ib"), col("us").as("ub"), col("user_id").as("sb"))
-    early.join(late.hint("shuffle_hash"), Seq("cx", "cy", "bk"))
-      .filter(col("ua") < col("ub") ||
-        (col("ua") === col("ub") && col("ia") < col("ib")))
-      .filter(col("ub") - col("ua") <= lit(CoLocWindowUs) &&
-        col("sa") =!= col("sb"))
+    timePairs(pts, CoLocWindowUs, Seq("cx", "cy"), "s")
+      .filter(col("sa") =!= col("sb"))
       .groupBy(least(col("sa"), col("sb")).as("u1"),
         greatest(col("sa"), col("sb")).as("u2"))
       .agg(count(lit(1)).as("n_meets"),
@@ -4152,8 +4121,8 @@ object Queries {
   def coLocateSql: String =
     s"""WITH pts AS MATERIALIZED (
        |  SELECT event_id AS id, user_id, epoch_us(ts) AS us,
-       |         ((event_id * event_id * 7919 + event_id * 104729) % 360000) // $CoLocCellMilli AS cx,
-       |         ((event_id * event_id * 104729 + event_id * 7919) % 160000) // $CoLocCellMilli AS cy
+       |         ${scatter.x.resSql("event_id")} // $CoLocCellMilli AS cx,
+       |         ${scatter.y.resSql("event_id")} // $CoLocCellMilli AS cy
        |  FROM events)
        |SELECT least(a.user_id, b.user_id) AS u1,
        |       greatest(a.user_id, b.user_id) AS u2,
@@ -4170,20 +4139,13 @@ object Queries {
   // Ripley's K function (Ripley '76): the cumulative second-moment
   // statistic of point-pattern analysis — K̂(r) = A/n² · Σ_{i≠j}
   // 1[d_ij ≤ r] over a radius ladder (no edge correction; declared —
-  // the gate pins the raw estimator). ONE cell-blocked pair self-join
-  // at r_max serves the whole ladder: cell width = r_max, the probe
-  // side explodes its 3×3 ring targeting the build point's OWN cell,
-  // so each unordered id-ordered pair meets exactly once; then a
-  // single aggregation with one conditional sum per radius. Distances
-  // are exact BIGINT squares on the quadratic id-hash scatter
-  // (dbscanPoints — the linear lattice is degenerate); the only
-  // doubles are the final K̂ normalizations, written token-identically
-  // (the 115200.0·n_pairs product stays an exact integer-valued
-  // decimal below 2^53 on both engines before the double division).
-  // At 10^12 points the cell key bounds every hash group to one
-  // r_max-cell (pipeline.Skew for hot cells); the oracle is the
-  // UNBLOCKED range θ self-join (DuckDB IEJoin) — bit-equality proves
-  // the blocking drops nothing and double-counts nothing.
+  // the gate pins the raw estimator). ONE epsPairs join at r_max
+  // serves the whole ladder, then a single aggregation with one
+  // conditional sum per radius over the quadratic id-hash scatter. The
+  // only doubles are the final K̂ normalizations, written
+  // token-identically (the 115200.0·n_pairs product stays an exact
+  // integer-valued decimal below 2^53 on both engines before the
+  // double division).
   // =================================================================
 
   private val RipleyRMax = 10000L
@@ -4191,24 +4153,11 @@ object Queries {
 
   def ripleyK(spark: SparkSession, sfDir: String): DataFrame = {
     val pts = dbscanPoints(spark, sfDir)
-      .withColumn("gx", expr(s"(xq + 180000) div $RipleyRMax"))
-      .withColumn("gy", expr(s"(yq + 80000) div $RipleyRMax"))
       .persist() // probe + build + the n_pts count all read it
     val nRow = pts.agg(count(lit(1)).as("n_pts"))
-    val probe = pts
-      .withColumn("dx", explode(sequence(lit(-1), lit(1))))
-      .withColumn("dy", explode(sequence(lit(-1), lit(1))))
-      .select((col("gx") + col("dx")).as("gx"), (col("gy") + col("dy")).as("gy"),
-        col("id").as("ia"), col("xq").as("xa"), col("yq").as("ya"))
-    val build = pts.select(col("gx"), col("gy"), col("id").as("ib"),
-      col("xq").as("xb"), col("yq").as("yb"))
-    val d2 = (col("xa") - col("xb")) * (col("xa") - col("xb")) +
-      (col("ya") - col("yb")) * (col("ya") - col("yb"))
     val aggCols = RipleyRadii.map(r =>
-      sum(when(d2 <= lit(r * r), 1L).otherwise(0L)).as(s"c$r"))
-    val sums = probe.join(build.hint("shuffle_hash"), Seq("gx", "gy"))
-      .filter(col("ia") < col("ib") && d2 <= lit(RipleyRMax * RipleyRMax))
-      .agg(aggCols.head, aggCols.tail: _*)
+      sum(when(col("d2") <= lit(r * r), 1L).otherwise(0L)).as(s"c$r"))
+    val sums = epsPairs(pts, RipleyRMax).agg(aggCols.head, aggCols.tail: _*)
     sums.crossJoin(broadcast(nRow))
       .select(col("n_pts"), explode(array(RipleyRadii.map(r =>
         struct(lit(r).as("r_milli"), col(s"c$r").as("n_pairs"))): _*)).as("rc"))
@@ -4221,13 +4170,7 @@ object Queries {
     s"""WITH pts AS MATERIALIZED ($dbscanPointsSql),
        |st AS (SELECT CAST(count(*) AS BIGINT) AS n_pts FROM pts),
        |pr AS MATERIALIZED (
-       |  SELECT (a.xq - b.xq) * (a.xq - b.xq) + (a.yq - b.yq) * (a.yq - b.yq) AS d2
-       |  FROM pts a JOIN pts b
-       |    ON b.xq BETWEEN a.xq - $RipleyRMax AND a.xq + $RipleyRMax
-       |   AND b.yq BETWEEN a.yq - $RipleyRMax AND a.yq + $RipleyRMax
-       |   AND a.id < b.id
-       |  WHERE (a.xq - b.xq) * (a.xq - b.xq) + (a.yq - b.yq) * (a.yq - b.yq)
-       |        <= ${RipleyRMax * RipleyRMax}),
+       |  ${epsPairsSql("pts", RipleyRMax)}),
        |radii AS (SELECT CAST(unnest([${RipleyRadii.mkString(", ")}]) AS BIGINT) AS r_milli),
        |cnt AS (SELECT r.r_milli,
        |               CAST(sum(CASE WHEN p.d2 <= r.r_milli * r.r_milli THEN 1 ELSE 0 END) AS BIGINT) AS n_pairs
@@ -4239,8 +4182,8 @@ object Queries {
   // =================================================================
   // Empirical semivariogram (Matheron '62): γ̂(h) = Σ (v_i − v_j)² /
   // (2·N_h) over annular distance bins — the kriging-input statistic
-  // of geostatistics. Reuses Ripley's exactly-once 3×3 pair blocking
-  // at r_max; the value field is a deterministic integer trend surface
+  // of geostatistics. Ripley's epsPairs join at r_max carries the
+  // value v; the value field is a deterministic integer trend surface
   // plus id-hash noise (so γ̂ actually RISES with h — a white-noise
   // field would flatline and mask binning bugs). Squared differences
   // and bin counts are exact BIGINT; γ̂ is the only double. One pair
@@ -4258,18 +4201,8 @@ object Queries {
     val bins = RipleyRadii // annuli (prev, r]
     val pts = dbscanPoints(spark, sfDir)
       .withColumn("v", expr(varioValSql))
-      .withColumn("gx", expr(s"(xq + 180000) div $RipleyRMax"))
-      .withColumn("gy", expr(s"(yq + 80000) div $RipleyRMax"))
       .persist()
-    val probe = pts
-      .withColumn("dx", explode(sequence(lit(-1), lit(1))))
-      .withColumn("dy", explode(sequence(lit(-1), lit(1))))
-      .select((col("gx") + col("dx")).as("gx"), (col("gy") + col("dy")).as("gy"),
-        col("id").as("ia"), col("xq").as("xa"), col("yq").as("ya"), col("v").as("va"))
-    val build = pts.select(col("gx"), col("gy"), col("id").as("ib"),
-      col("xq").as("xb"), col("yq").as("yb"), col("v").as("vb"))
-    val d2 = (col("xa") - col("xb")) * (col("xa") - col("xb")) +
-      (col("ya") - col("yb")) * (col("ya") - col("yb"))
+    val d2 = col("d2")
     val dv2 = (col("va") - col("vb")) * (col("va") - col("vb"))
     val lohi = bins.zip(0L +: bins.init)
     val aggCols = lohi.flatMap { case (hi, lo) =>
@@ -4277,8 +4210,7 @@ object Queries {
       Seq(sum(when(in, 1L).otherwise(0L)).as(s"n$hi"),
         sum(when(in, dv2).otherwise(lit(0L))).as(s"s$hi"))
     }
-    probe.join(build.hint("shuffle_hash"), Seq("gx", "gy"))
-      .filter(col("ia") < col("ib") && d2 <= lit(RipleyRMax * RipleyRMax))
+    epsPairs(pts, RipleyRMax, "v")
       .agg(aggCols.head, aggCols.tail: _*)
       .select(explode(array(lohi.map { case (hi, lo) =>
         struct(lit(lo).as("bin_lo"), lit(hi).as("bin_hi"),
@@ -4295,14 +4227,8 @@ object Queries {
     s"""WITH pts AS MATERIALIZED (
        |  SELECT id, xq, yq, $varioValDuck AS v FROM ($dbscanPointsSql)),
        |pr AS MATERIALIZED (
-       |  SELECT (a.xq - b.xq) * (a.xq - b.xq) + (a.yq - b.yq) * (a.yq - b.yq) AS d2,
-       |         (a.v - b.v) * (a.v - b.v) AS dv2
-       |  FROM pts a JOIN pts b
-       |    ON b.xq BETWEEN a.xq - $RipleyRMax AND a.xq + $RipleyRMax
-       |   AND b.yq BETWEEN a.yq - $RipleyRMax AND a.yq + $RipleyRMax
-       |   AND a.id < b.id
-       |  WHERE (a.xq - b.xq) * (a.xq - b.xq) + (a.yq - b.yq) * (a.yq - b.yq)
-       |        <= ${RipleyRMax * RipleyRMax}),
+       |  SELECT d2, (va - vb) * (va - vb) AS dv2
+       |  FROM (${epsPairsSql("pts", RipleyRMax, "v")})),
        |bins AS (SELECT CAST(lo AS BIGINT) AS bin_lo, CAST(hi AS BIGINT) AS bin_hi
        |         FROM (VALUES $binRows) t(lo, hi)),
        |cnt AS (SELECT b.bin_lo, b.bin_hi,
@@ -4552,13 +4478,10 @@ object Queries {
   // =================================================================
 
   def stdEllipse(spark: SparkSession, sfDir: String): DataFrame = {
-    val k = col("event_id")
     val pts = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_type").as("etype"),
-        ((k * k * 7919 + k * 104729) % 360000 - 180000).as("xq"),
-        ((k * k * 104729 + k * 7919) % 160000 - 80000).as("yq"))
-      .withColumn("xc", expr("(xq + 180000) div 100"))
-      .withColumn("yc", expr("(yq + 80000) div 100"))
+        expr(s"${scatter.x.resSql("event_id")} div 100").as("xc"),
+        expr(s"${scatter.y.resSql("event_id")} div 100").as("yc"))
     pts.groupBy("etype")
       .agg(count(lit(1)).as("n"),
         sum(col("xc")).as("sx"), sum(col("yc")).as("sy"),
@@ -4593,8 +4516,8 @@ object Queries {
   def stdEllipseSql: String =
     s"""WITH pts AS (
        |  SELECT event_type AS etype,
-       |         ((event_id * event_id * 7919 + event_id * 104729) % 360000 - 180000 + 180000) // 100 AS xc,
-       |         ((event_id * event_id * 104729 + event_id * 7919) % 160000 - 80000 + 80000) // 100 AS yc
+       |         ${scatter.x.resSql("event_id")} // 100 AS xc,
+       |         ${scatter.y.resSql("event_id")} // 100 AS yc
        |  FROM events),
        |m AS (SELECT etype, CAST(count(*) AS BIGINT) AS n,
        |             CAST(sum(xc) AS BIGINT) AS sx, CAST(sum(yc) AS BIGINT) AS sy,
@@ -4625,12 +4548,11 @@ object Queries {
   // BOTH space (δ) and time (τ), referenced against the independence
   // expectation S·T/P (S spatial-close, T temporal-close, P all
   // pairs) — the classic epidemiology cluster statistic. Two blocked
-  // pair self-joins, never three: the spatial join (Ripley's 3×3
-  // exactly-once scheme) yields S and X in ONE aggregation (X is a
-  // conditional sum over the spatial pairs' time gaps); the temporal
-  // join uses co_locate's 1-d {b, b+1} probe. All pair counts exact
-  // BIGINT; the ratio is the only double, identical-operand on both
-  // engines. Oracle: two unblocked range θ self-joins (IEJoin).
+  // pair self-joins, never three: the spatial epsPairs join carries us
+  // and yields S and X in ONE aggregation (X is a conditional sum over
+  // the spatial pairs' time gaps); the temporal one is timePairs. All
+  // pair counts exact BIGINT; the ratio is the only double,
+  // identical-operand on both engines.
   // =================================================================
 
   private val KnoxDeltaMilli = 10000L  // 10° spatial closeness
@@ -4644,35 +4566,14 @@ object Queries {
     val k = col("event_id")
     val pts = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(k.as("id"), unix_micros(col("ts").cast("timestamp")).as("us"),
-        ((k * k * 7919 + k * 104729) % 360000 - 180000).as("xq"),
-        ((k * k * 104729 + k * 7919) % 160000 - 80000).as("yq"))
-      .withColumn("gx", expr(s"(xq + 180000) div $KnoxDeltaMilli"))
-      .withColumn("gy", expr(s"(yq + 80000) div $KnoxDeltaMilli"))
-      .withColumn("tb", expr(s"us div $KnoxTauUs"))
+        scatter.x.milli(k).as("xq"), scatter.y.milli(k).as("yq"))
       .persist() // four consumers: spatial probe/build, temporal probe/build
     val nRow = pts.agg(count(lit(1)).as("n_pts"))
-    val sProbe = pts
-      .withColumn("dx", explode(sequence(lit(-1), lit(1))))
-      .withColumn("dy", explode(sequence(lit(-1), lit(1))))
-      .select((col("gx") + col("dx")).as("gx"), (col("gy") + col("dy")).as("gy"),
-        col("id").as("ia"), col("xq").as("xa"), col("yq").as("ya"), col("us").as("ua"))
-    val sBuild = pts.select(col("gx"), col("gy"), col("id").as("ib"),
-      col("xq").as("xb"), col("yq").as("yb"), col("us").as("ub"))
-    val d2 = (col("xa") - col("xb")) * (col("xa") - col("xb")) +
-      (col("ya") - col("yb")) * (col("ya") - col("yb"))
-    val sx = sProbe.join(sBuild.hint("shuffle_hash"), Seq("gx", "gy"))
-      .filter(col("ia") < col("ib") && d2 <= lit(KnoxDeltaMilli * KnoxDeltaMilli))
+    val sx = epsPairs(pts, KnoxDeltaMilli, "us")
       .agg(count(lit(1)).as("s_pairs"),
-        sum(when(abs(col("ua") - col("ub")) <= lit(KnoxTauUs), 1L).otherwise(0L))
+        sum(when(abs(col("usa") - col("usb")) <= lit(KnoxTauUs), 1L).otherwise(0L))
           .as("x_pairs"))
-    val tProbe = pts.select(explode(array(col("tb"), col("tb") + 1)).as("tb"),
-      col("id").as("ia"), col("us").as("ua"))
-    val tBuild = pts.select(col("tb"), col("id").as("ib"), col("us").as("ub"))
-    val tp = tProbe.join(tBuild.hint("shuffle_hash"), Seq("tb"))
-      .filter((col("ua") < col("ub") ||
-        (col("ua") === col("ub") && col("ia") < col("ib"))) &&
-        col("ub") - col("ua") <= lit(KnoxTauUs))
-      .agg(count(lit(1)).as("t_pairs"))
+    val tp = timePairs(pts, KnoxTauUs, Nil).agg(count(lit(1)).as("t_pairs"))
     nRow.crossJoin(broadcast(sx)).crossJoin(broadcast(tp))
       .withColumn("p_pairs", expr("(n_pts * (n_pts - 1)) div 2"))
       .withColumn("knox_ratio", expr(knoxRatioSql))
@@ -4683,19 +4584,14 @@ object Queries {
   def knoxSql: String =
     s"""WITH pts AS MATERIALIZED (
        |  SELECT event_id AS id, epoch_us(ts) AS us,
-       |         (event_id * event_id * 7919 + event_id * 104729) % 360000 - 180000 AS xq,
-       |         (event_id * event_id * 104729 + event_id * 7919) % 160000 - 80000 AS yq
+       |         ${scatter.x.milliSql("event_id")} AS xq,
+       |         ${scatter.y.milliSql("event_id")} AS yq
        |  FROM events),
        |st AS (SELECT n_pts, (n_pts * (n_pts - 1)) // 2 AS p_pairs
        |       FROM (SELECT CAST(count(*) AS BIGINT) AS n_pts FROM pts)),
        |sp AS (SELECT CAST(count(*) AS BIGINT) AS s_pairs,
-       |              CAST(sum(CASE WHEN abs(a.us - b.us) <= $KnoxTauUs THEN 1 ELSE 0 END) AS BIGINT) AS x_pairs
-       |       FROM pts a JOIN pts b
-       |         ON b.xq BETWEEN a.xq - $KnoxDeltaMilli AND a.xq + $KnoxDeltaMilli
-       |        AND b.yq BETWEEN a.yq - $KnoxDeltaMilli AND a.yq + $KnoxDeltaMilli
-       |        AND a.id < b.id
-       |       WHERE (a.xq - b.xq) * (a.xq - b.xq) + (a.yq - b.yq) * (a.yq - b.yq)
-       |             <= ${KnoxDeltaMilli * KnoxDeltaMilli}),
+       |              CAST(sum(CASE WHEN abs(usa - usb) <= $KnoxTauUs THEN 1 ELSE 0 END) AS BIGINT) AS x_pairs
+       |       FROM (${epsPairsSql("pts", KnoxDeltaMilli, "us")})),
        |tp AS (SELECT CAST(count(*) AS BIGINT) AS t_pairs
        |       FROM pts a JOIN pts b
        |         ON b.us BETWEEN a.us AND a.us + $KnoxTauUs
@@ -4729,8 +4625,7 @@ object Queries {
     val w = Window.partitionBy(col("etype")).orderBy(col("event_id").asc)
     val cand = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"), col("event_type").as("etype"),
-        expr("(event_id * event_id * 7919 + event_id * 104729) % 360000").as("x"),
-        expr("(event_id * event_id * 104729 + event_id * 7919) % 160000").as("y"))
+        scatter.x.res(col("event_id")).as("x"), scatter.y.res(col("event_id")).as("y"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= HullCap)
       .select(col("etype"), col("x"), col("y"))
@@ -4760,8 +4655,8 @@ object Queries {
     val s3 = cr("d", "a", "c")
     s"""WITH pts AS (
        |  SELECT event_id, event_type AS etype,
-       |         (event_id * event_id * 7919 + event_id * 104729) % 360000 AS x,
-       |         (event_id * event_id * 104729 + event_id * 7919) % 160000 AS y
+       |         ${scatter.x.resSql("event_id")} AS x,
+       |         ${scatter.y.resSql("event_id")} AS y
        |  FROM events),
        |cap AS (
        |  SELECT etype, x, y FROM (
@@ -4807,14 +4702,14 @@ object Queries {
   def idwGrid(spark: SparkSession, sfDir: String): DataFrame = {
     val st = TableIO.read(spark, s"$sfDir/customer.parquet")
       .select((col("c_custkey") % 997).as("v"),
-        expr("c_custkey * 7919 % 350000 - 175000").as("sx"),
-        expr("c_custkey * 104729 % 160000 - 80000").as("sy"))
+        custLattice.x.milli(col("c_custkey")).as("sx"),
+        custLattice.y.milli(col("c_custkey")).as("sy"))
       .withColumn("cx", expr(s"(sx + 180000) div $IdwRadiusMilli"))
       .withColumn("cy", expr(s"(sy + 80000) div $IdwRadiusMilli"))
     val pr = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"),
-        expr("event_id * 7919 % 360000 - 180000").as("px"),
-        expr("event_id * 104729 % 160000 - 80000").as("py"))
+        evLattice.x.milli(col("event_id")).as("px"),
+        evLattice.y.milli(col("event_id")).as("py"))
       .withColumn("dx", explode(sequence(lit(-1L), lit(1L))))
       .withColumn("dy", explode(sequence(lit(-1L), lit(1L))))
       .withColumn("cx", expr(s"(px + 180000) div $IdwRadiusMilli") + col("dx"))
@@ -4840,8 +4735,8 @@ object Queries {
   def idwGridSql: String =
     s"""WITH st AS MATERIALIZED (
        |  SELECT c_custkey % 997 AS v,
-       |         c_custkey * 7919 % 350000 - 175000 AS sx,
-       |         c_custkey * 104729 % 160000 - 80000 AS sy
+       |         ${custLattice.x.milliSql("c_custkey")} AS sx,
+       |         ${custLattice.y.milliSql("c_custkey")} AS sy
        |  FROM customer),
        |stc AS MATERIALIZED (
        |  SELECT v, sx, sy,
@@ -4850,8 +4745,8 @@ object Queries {
        |  FROM st),
        |pr AS (
        |  SELECT event_id,
-       |         event_id * 7919 % 360000 - 180000 AS px,
-       |         event_id * 104729 % 160000 - 80000 AS py
+       |         ${evLattice.x.milliSql("event_id")} AS px,
+       |         ${evLattice.y.milliSql("event_id")} AS py
        |  FROM events),
        |pairs AS (
        |  SELECT p.event_id,
@@ -5493,8 +5388,8 @@ object Queries {
     def d(c: Column) = c.cast("decimal(38,0)")
     val pts = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_type"),
-        expr("(event_id * 7919) % 360000").as("xs"),
-        expr("(event_id * 104729) % 160000").as("ys"))
+        evLattice.x.res(col("event_id")).as("xs"),
+        evLattice.y.res(col("event_id")).as("ys"))
       .persist() // read by the init mean + every Weiszfeld round
     var ctr = pts.groupBy("event_type")
       .agg(count(lit(1)).as("n"),
@@ -5545,8 +5440,8 @@ object Queries {
     }.mkString(",\n")
     s"""WITH pts AS MATERIALIZED (
        |  SELECT event_type,
-       |         (event_id * 7919) % 360000 AS xs,
-       |         (event_id * 104729) % 160000 AS ys
+       |         ${evLattice.x.resSql("event_id")} AS xs,
+       |         ${evLattice.y.resSql("event_id")} AS ys
        |  FROM events),
        |c0 AS MATERIALIZED (
        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
@@ -5623,8 +5518,8 @@ object Queries {
     TableIO.read(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"),
         expr("concat('h', CAST(doc_id % 97 AS STRING), '.example.org')").as("host"),
-        expr("(doc_id * 7919) % 360000").as("xs"),
-        expr("(doc_id * 104729) % 140000").as("ys"))
+        docLattice.x.res(col("doc_id")).as("xs"),
+        docLattice.y.res(col("doc_id")).as("ys"))
       .groupBy(col("host"))
       .agg(count(lit(1)).as("n"),
         sum(d(col("xs"))).as("sx"), sum(d(col("ys"))).as("sy"),
@@ -5638,8 +5533,8 @@ object Queries {
   def hostGeoSql: String =
     s"""WITH p AS (
        |  SELECT 'h' || (doc_id % 97) || '.example.org' AS host,
-       |         (doc_id * 7919) % 360000 AS xs,
-       |         (doc_id * 104729) % 140000 AS ys
+       |         ${docLattice.x.resSql("doc_id")} AS xs,
+       |         ${docLattice.y.resSql("doc_id")} AS ys
        |  FROM documents),
        |a AS (SELECT host, CAST(count(*) AS BIGINT) AS n,
        |             sum(xs) AS sx, sum(ys) AS sy,

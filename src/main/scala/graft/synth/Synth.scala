@@ -293,31 +293,90 @@ object Synth {
   }
 
   // ---------------------------------------------------------------
-  // Derived point / feature tables (exact rational arithmetic on keys)
+  // Synthetic point lattices: every derived fixture coordinate. A key k
+  // maps, per axis, to a milli-degree residue r in [0, m); the centred
+  // milli form is r − m/2 and the degree form r / 1000.0 − m/2000. Each
+  // form has an SQL twin (`…Sql`) and a Column twin, and the query layer
+  // takes its coordinates from them (SourceGateSpec fails on the
+  // multipliers anywhere else in src/main). Keys are non-negative table
+  // keys, so the residues need no sign fix-up on either engine.
   // ---------------------------------------------------------------
 
+  /** One lattice axis: the residue of a key, and its centred forms. */
+  sealed abstract class Axis(val m: Int) {
+    def resSql(k: String): String
+    def res(k: Column): Column
+    def milliSql(k: String): String = s"${resSql(k)} - ${m / 2}"
+    def milli(k: Column): Column = res(k) - m / 2
+    def degSql(k: String): String = s"(${resSql(k)}) / 1000.0 - ${m / 2000.0}"
+    def deg(k: Column): Column = res(k) / 1000.0 - m / 2000.0
+  }
+
+  /** The linear lattice `k·c mod m`. */
+  final class Linear(c: Int, m: Int) extends Axis(m) {
+    def resSql(k: String): String = s"($k * $c) % $m"
+    def res(k: Column): Column = k * c % m
+  }
+
+  /** The quadratic scatter `(k²·c1 + k·c2) mod m`, with the key reduced by
+    * m before it squares: `a = k % m`, then `(a·a % m · c1 + a · c2) % m`.
+    * Every intermediate stays below m·max(m, c1 + c2), so the form is exact
+    * for every non-negative BIGINT key (the unreduced k·k·c1 leaves the
+    * Long range once k > 9,384,505). */
+  final class Scatter(c1: Int, c2: Int, m: Int) extends Axis(m) {
+    def resSql(k: String): String = {
+      val a = s"($k % $m)"
+      s"($a * $a % $m * $c1 + $a * $c2) % $m"
+    }
+    def res(k: Column): Column = {
+      val a = k % m
+      (a * a % m * c1 + a * c2) % m
+    }
+  }
+
+  final case class Lattice(x: Axis, y: Axis)
+
+  private def linear(mx: Int, my: Int) = Lattice(new Linear(7919, mx), new Linear(104729, my))
+
+  val evLattice: Lattice = linear(360000, 160000)
+  val docLattice: Lattice = linear(360000, 140000)
+  val custLattice: Lattice = linear(350000, 160000)
+  val natLattice: Lattice = linear(300000, 120000)
+  val contLattice: Lattice = linear(240000, 100000)
+  val roadLattice: Lattice = linear(352000, 152000)
+
+  /** Events on a QUADRATIC hash of the id over the events box: on the
+    * linear lattice a pair is within eps iff the id DIFFERENCE Δ has both
+    * residues small, so neighbor graphs degenerate into arithmetic chains
+    * whose existence flips with eps (measured: eps=2140 at sf0.01 admits
+    * ZERO pairs — a vacuous gate). The quadratic map scatters Poisson-like
+    * at every SF (measured: pairs ∝ n, ~45% core, max dbscan cluster ≤ ~50
+    * at sf0.001/0.01/0.1). */
+  val scatter: Lattice =
+    Lattice(new Scatter(7919, 104729, 360000), new Scatter(104729, 7919, 160000))
+
   // Documents: proximity point of the "query" (the page).
-  val docLonSql = "((doc_id * 7919) % 360000) / 1000.0 - 180.0"
-  val docLatSql = "((doc_id * 104729) % 140000) / 1000.0 - 70.0"
-  def docLon(c: Column): Column = (c * 7919 % 360000) / 1000.0 - 180.0
-  def docLat(c: Column): Column = (c * 104729 % 140000) / 1000.0 - 70.0
+  val docLonSql: String = docLattice.x.degSql("doc_id")
+  val docLatSql: String = docLattice.y.degSql("doc_id")
+  def docLon(c: Column): Column = docLattice.x.deg(c)
+  def docLat(c: Column): Column = docLattice.y.deg(c)
 
   // Events: reverse-geocode probe points.
-  val evLonSql = "((event_id * 7919) % 360000) / 1000.0 - 180.0"
-  val evLatSql = "((event_id * 104729) % 160000) / 1000.0 - 80.0"
-  def evLon(c: Column): Column = (c * 7919 % 360000) / 1000.0 - 180.0
-  def evLat(c: Column): Column = (c * 104729 % 160000) / 1000.0 - 80.0
+  val evLonSql: String = evLattice.x.degSql("event_id")
+  val evLatSql: String = evLattice.y.degSql("event_id")
+  def evLon(c: Column): Column = evLattice.x.deg(c)
+  def evLat(c: Column): Column = evLattice.y.deg(c)
 
   // Customer-derived polygon features (rectangles): the bulk feature table
   // for reverse geocoding / kNN / tile cover. Half-open PIP semantics
   // [west,east) x [south,north) mirror the ray-cast exactly.
-  val custLonSql = "((c_custkey * 7919) % 350000) / 1000.0 - 175.0"
-  val custLatSql = "((c_custkey * 104729) % 160000) / 1000.0 - 80.0"
+  val custLonSql: String = custLattice.x.degSql("c_custkey")
+  val custLatSql: String = custLattice.y.degSql("c_custkey")
   val custHalfWSql = "(0.3 + (c_custkey % 7) * 0.15)"
   val custHalfHSql = "(0.2 + (c_custkey % 5) * 0.1)"
   val custScoreSql = "((c_custkey % 1000) / 10.0 + 1.0)"
-  def custLon(c: Column): Column = (c * 7919 % 350000) / 1000.0 - 175.0
-  def custLat(c: Column): Column = (c * 104729 % 160000) / 1000.0 - 80.0
+  def custLon(c: Column): Column = custLattice.x.deg(c)
+  def custLat(c: Column): Column = custLattice.y.deg(c)
   def custHalfW(c: Column): Column = lit(0.3) + (c % 7) * lit(0.15)
   def custHalfH(c: Column): Column = lit(0.2) + (c % 5) * lit(0.1)
   def custScore(c: Column): Column = (c % 1000) / lit(10.0) + lit(1.0)
@@ -350,10 +409,10 @@ object Synth {
        |FROM customer""".stripMargin
 
   // Nation-derived coarse "country" rectangles (context chains).
-  val natLonSql = "((n_nationkey * 7919) % 300000) / 1000.0 - 150.0"
-  val natLatSql = "((n_nationkey * 104729) % 120000) / 1000.0 - 60.0"
-  def natLon(c: Column): Column = (c * 7919 % 300000) / 1000.0 - 150.0
-  def natLat(c: Column): Column = (c * 104729 % 120000) / 1000.0 - 60.0
+  val natLonSql: String = natLattice.x.degSql("n_nationkey")
+  val natLatSql: String = natLattice.y.degSql("n_nationkey")
+  def natLon(c: Column): Column = natLattice.x.deg(c)
+  def natLat(c: Column): Column = natLattice.y.deg(c)
 
   def nationFeatures(spark: SparkSession, sfDir: String): DataFrame = {
     val k = col("n_nationkey").cast("long")
@@ -374,13 +433,15 @@ object Synth {
        |FROM nation""".stripMargin
 
   // Region-table-derived "continent" rectangles (coarsest context level).
-  val contLonSql = "((r_regionkey * 7919) % 240000) / 1000.0 - 120.0"
-  val contLatSql = "((r_regionkey * 104729) % 100000) / 1000.0 - 50.0"
+  val contLonSql: String = contLattice.x.degSql("r_regionkey")
+  val contLatSql: String = contLattice.y.degSql("r_regionkey")
+  def contLon(c: Column): Column = contLattice.x.deg(c)
+  def contLat(c: Column): Column = contLattice.y.deg(c)
 
   def continentFeatures(spark: SparkSession, sfDir: String): DataFrame = {
     val k = col("r_regionkey").cast("long")
-    val lon = (k * 7919 % 240000) / 1000.0 - 120.0
-    val lat = (k * 104729 % 100000) / 1000.0 - 50.0
+    val lon = contLon(k)
+    val lat = contLat(k)
     graft.index.TableIO.read(spark, s"$sfDir/region.parquet")
       .select(k.as("feature_id"),
         (lon - lit(20.0)).as("west"), (lat - lit(12.0)).as("south"),
@@ -403,6 +464,40 @@ object Synth {
 
   def eventPointsSql: String =
     s"SELECT event_id, $evLonSql AS elon, $evLatSql AS elat FROM events"
+
+  /** Events on the [[scatter]] as (id, xq, yq) centred milli — the probe
+    * points of dbscan and the pair statistics. */
+  def dbscanPoints(spark: SparkSession, sfDir: String): DataFrame = {
+    val k = col("event_id")
+    graft.index.TableIO.read(spark, s"$sfDir/events.parquet")
+      .select(k.as("id"), scatter.x.milli(k).as("xq"), scatter.y.milli(k).as("yq"))
+  }
+
+  val dbscanPointsSql: String =
+    s"""SELECT event_id AS id,
+       |       ${scatter.x.milliSql("event_id")} AS xq,
+       |       ${scatter.y.milliSql("event_id")} AS yq
+       |FROM events""".stripMargin
+
+  /** Synthetic road layer: 1000 short segments (≤ 4000 milli per axis) on
+    * the milli lattice, endpoints kept inside the world so the z6 cover is
+    * defined; ~25% of event points land within 2000 milli of some road. */
+  def roadSegs(spark: SparkSession): DataFrame = {
+    val r = col("seg_id")
+    spark.range(0, 1000).toDF("seg_id")
+      .select(r, roadLattice.x.milli(r).as("ax"), roadLattice.y.milli(r).as("ay"))
+      .withColumn("bx", col("ax") + (r * 31 % 81 - 40) * 100)
+      .withColumn("by", col("ay") + (r * 17 % 81 - 40) * 100)
+  }
+
+  /** SQL mirror of [[roadSegs]] as a CTE body: (seg_id, ax, ay, bx, by). */
+  val roadSegsSql: String =
+    s"""SELECT seg_id, ax, ay,
+       |       ax + (seg_id * 31 % 81 - 40) * 100 AS bx,
+       |       ay + (seg_id * 17 % 81 - 40) * 100 AS by
+       |FROM (SELECT r AS seg_id, ${roadLattice.x.milliSql("r")} AS ax,
+       |             ${roadLattice.y.milliSql("r")} AS ay
+       |      FROM (SELECT unnest(generate_series(0, 999)) AS r))""".stripMargin
 
   /** Documents with derived proximity point. */
   def docPages(spark: SparkSession, sfDir: String): DataFrame = {

@@ -46,4 +46,12 @@ class SourceGateSpec extends AnyFunSuite {
     val found = hits("""26843545[56]""".r, Set("CellMath.scala", "Synth.scala"))
     assert(found.isEmpty, found.mkString("\n"))
   }
+
+  test("synthetic coordinates come from Synth's lattice twins") {
+    // each fixture lattice (linear or quadratic scatter) has one SQL and one
+    // Column twin in Synth; a hand-written multiplier elsewhere is a second
+    // copy of a formula both engines must evaluate identically
+    val found = hits("""7919|104729""".r, Set("Synth.scala"))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
 }

@@ -24,6 +24,30 @@ class PairStatsSpec extends SparkTestBase {
       .as[(Long, Long, Long, Long)].collect()
   }
 
+  test("epsPairs matches brute pair enumeration on block borders, d = R and the grid edges") {
+    import spark.implicits._
+    // R-block borders sit at xq = −180000 + kR, yq = −80000 + kR
+    val r = 10000L
+    val pts = Seq(
+      (1L, 0L, 0L), (2L, 10000L, 0L), (3L, 6000L, 8000L), (4L, 10001L, 0L),  // d = R, R + 1
+      (5L, -170001L, -70001L), (6L, -169999L, -69999L), (7L, -169999L, -70001L),  // block corner
+      (8L, -180000L, -80000L), (9L, -170000L, -80000L), (10L, -180000L, -70000L), // low edge
+      (11L, 179999L, 79999L), (12L, 169999L, 79999L), (13L, 172928L, 72928L),   // high edge
+      (14L, -180000L, 79999L), (15L, 179999L, -80000L), (16L, -175000L, 79999L),
+      (17L, 20000L, 0L), (18L, 20000L, 0L))                                     // coincident
+    val want = (for {
+      a <- pts; b <- pts if a._1 < b._1
+      d2 = (a._2 - b._2) * (a._2 - b._2) + (a._3 - b._3) * (a._3 - b._3)
+      if d2 <= r * r
+    } yield (a._1, b._1, d2, a._1 * 10, b._1 * 10)).toSet
+    val got = Queries.epsPairs(pts.toDF("id", "xq", "yq").withColumn("v", $"id" * 10), r, "v")
+      .select("ia", "ib", "d2", "va", "vb").as[(Long, Long, Long, Long, Long)].collect()
+    assert(got.length == want.size && got.toSet == want)
+    Seq((1L, 2L), (1L, 3L), (2L, 17L), (5L, 6L), (8L, 9L), (8L, 10L), (11L, 12L), (14L, 16L), (17L, 18L))
+      .foreach(p => assert(want.exists(w => (w._1, w._2) == p), s"fixture lost pair $p"))
+    assert(!want.exists(w => (w._1, w._2) == ((1L, 4L))))
+  }
+
   test("ripley_k matches brute pair counting at every radius") {
     val pts = quadPts()
     val radii = Seq(2500L, 5000L, 7500L, 10000L)

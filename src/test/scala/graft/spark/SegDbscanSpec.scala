@@ -99,14 +99,10 @@ class SegDbscanSpec extends SparkTestBase {
     assert(want.keySet.exists { case (x, y) => y == x + 1 && x % 2 == 0 })
   }
 
-  test("dbscan matches a brute-force driver DBSCAN on sf0.001 events") {
-    val pts = spark.read.parquet(s"$sf/events.parquet")
-      .select(col("event_id"),
-        (col("event_id") * col("event_id") * 7919 + col("event_id") * 104729) % 360000 - 180000,
-        (col("event_id") * col("event_id") * 104729 + col("event_id") * 7919) % 160000 - 80000)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val eps = math.floor(214000.0 / math.sqrt(pts.length.toDouble)).toLong
-    val byId = pts.map(p => p._1 -> p).toMap
+  /** Driver-side DBSCAN over (id, xq, yq): core = ≥ 3 neighbors within
+    * eps, clusters = core connected components labelled by their min id,
+    * a border point takes the min label of its core neighbors. */
+  private def bruteDbscan(pts: Seq[(Long, Long, Long)], eps: Long): Set[(Long, Long, String)] = {
     val nbrs: Map[Long, Set[Long]] = pts.map { p =>
       p._1 -> pts.filter(q => q._1 != p._1 &&
         (p._2 - q._2) * (p._2 - q._2) + (p._3 - q._3) * (p._3 - q._3) <= eps * eps)
@@ -128,11 +124,91 @@ class SegDbscanSpec extends SparkTestBase {
         val cn = nbrs(id).filter(core)
         if (cn.isEmpty) None else Some(id -> cn.map(coreLbl).min)
       }.toMap
-    val want = coreLbl.map { case (k, v) => (k, v, "core") }.toSet ++
+    coreLbl.map { case (k, v) => (k, v, "core") }.toSet ++
       borderLbl.map { case (k, v) => (k, v, "border") }.toSet
-    val got = Queries.dbscan(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    assert(byId.nonEmpty && core.nonEmpty)
-    assert(got == want)
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, String)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+
+  test("dbscan matches a brute-force driver DBSCAN on sf0.001 events") {
+    val pts = spark.read.parquet(s"$sf/events.parquet")
+      .select(col("event_id"),
+        (col("event_id") * col("event_id") * 7919 + col("event_id") * 104729) % 360000 - 180000,
+        (col("event_id") * col("event_id") * 104729 + col("event_id") * 7919) % 160000 - 80000)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val eps = math.floor(214000.0 / math.sqrt(pts.length.toDouble)).toLong
+    val want = bruteDbscan(pts, eps)
+    assert(want.exists(_._3 == "core"))
+    assert(rows(Queries.dbscan(spark, sf)) == want)
+  }
+
+  test("dbscan eps stays at least 1 past n = 214000²") {
+    // ⌊214000/√n⌋ is 0 for n = 5·10^10; eps clamps to 1 (a zero-width grid
+    // divides by zero under ANSI). Two 3×3 unit blocks (cores: centre and
+    // edge midpoints, borders: corners), a unit-step line (no core), and a
+    // lone point at the grid's low corner.
+    import spark.implicits._
+    val block = (x0: Long, y0: Long, id0: Long) =>
+      for (i <- 0 until 3; j <- 0 until 3) yield (id0 + 3 * i + j, x0 + i, y0 + j)
+    val pts = block(0L, 0L, 1L) ++ block(179997L, 79997L, 20L) ++
+      (0 until 5).map(i => (40L + i, 5000L + i, -3000L)) :+ ((99L, -180000L, -80000L))
+    val want = bruteDbscan(pts, 1L)
+    assert(want.count(_._3 == "core") == 10 && want.count(_._3 == "border") == 8)
+    assert(rows(Queries.dbscanOf(pts.toDF("id", "xq", "yq"), 50000000000L)) == want)
+  }
+
+  test("dbscan and speed_filter stay exact on event ids past 10^7 and near 2^62 under ANSI") {
+    // the unreduced scatter k·k·104729 leaves the Long range at k = 9,384,506;
+    // the twins reduce k first. Ids are chosen so two thirds land in one
+    // 30,000-milli box (dbscan finds clusters there) and the rest scatter.
+    import spark.implicits._
+    assert(spark.conf.get("spark.sql.ansi.enabled").toBoolean)
+    def sc(k: Long, c1: Int, c2: Int, m: Int): Long =
+      ((BigInt(k) * k * c1 + BigInt(k) * c2) % m).toLong
+    def pt(k: Long) = (k, sc(k, 7919, 104729, 360000) - 180000, sc(k, 104729, 7919, 160000) - 80000)
+    val ids = Seq(10000000L, (1L << 62) - 100000L).flatMap { base =>
+      val boxed = Iterator.from(0).map(base + _).filter { k =>
+        val (_, x, y) = pt(k); x >= 0 && x < 30000 && y >= 0 && y < 30000
+      }.take(40).toSeq
+      boxed ++ (base until base + 20)
+    }.distinct
+    val t0 = 1700000000000000L
+    val ev = ids.zipWithIndex.map { case (k, i) =>
+      // ten fixes per user; every fifth repeats its predecessor's timestamp
+      // (the dt = 0 branch)
+      (k, (i / 10).toLong, new java.sql.Timestamp((t0 + (i - (if (i % 5 == 4) 1 else 0)) * 600000000L) / 1000))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-scatter").toString
+    ev.toDF("event_id", "user_id", "ts").coalesce(1).write.parquet(s"$dir/events.parquet")
+
+    val pts = ids.map(pt)
+    val eps = math.floor(214000.0 / math.sqrt(ids.length.toDouble)).toLong
+    val wantDb = bruteDbscan(pts, eps)
+    assert(wantDb.exists(_._3 == "core") && wantDb.exists(_._1 > (1L << 61)))
+    assert(rows(Queries.dbscan(spark, dir)) == wantDb)
+
+    val pos = pts.map(p => p._1 -> p).toMap
+    val wantSf = ev.groupBy(_._2).toSeq.flatMap { case (u, rs) =>
+      val tr = rs.map { case (k, _, ts) => (k, ts.getTime * 1000L) }.sortBy(r => (r._2, r._1))
+      tr.zip(tr.drop(1)).map { case ((pk, pus), (k, us)) =>
+        val (px, py, x, y) = (pos(pk)._2, pos(pk)._3, pos(k)._2, pos(k)._3)
+        val d2 = (x - px) * (x - px) + (y - py) * (y - py)
+        val dt = us - pus
+        (u, k, d2, dt, if (dt == 0) d2 > 0 else d2.toDouble / (dt.toDouble * dt.toDouble) > 1e-9)
+      }
+    }.toSet
+    val gotSf = Queries.speedFilter(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4))).toSet
+    assert(gotSf == wantSf && wantSf.exists(_._4 == 0))
+
+    // the SQL twin, evaluated by DuckDB over the same file
+    val sql = s"WITH events AS (SELECT * FROM read_parquet('$dir/events.parquet/*.parquet')) " +
+      s"SELECT id, xq, yq FROM (${graft.synth.Synth.dbscanPointsSql})"
+    val py = "import sys, duckdb\nfor r in duckdb.sql(sys.argv[1]).fetchall():\n" +
+      "    print(','.join(str(v) for v in r))"
+    val duck = scala.sys.process.Process(Seq("python3", "-c", py, sql)).!!.trim.split("\n")
+      .map(_.split(",").map(_.toLong)).map(a => (a(0), a(1), a(2))).toSet
+    assert(duck == pts.toSet)
   }
 }
