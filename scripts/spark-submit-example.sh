@@ -31,7 +31,7 @@ spark-submit --class graft.jobs.ForwardJob "${COMMON[@]}" "$JAR" "$SF_DIR" "$OUT
 # consumers (TableIO.readCurrent) never observe a partial corpus; a killed
 # run resumes its staging and publishes when complete. Library call:
 #   ForwardJob.runPublished(spark, sfDir, s"$OUT/forward_staging",
-#                           s"$OUT/forward_table", nRanges = N * 4)
+#                           s"$OUT/forward_table")
 
 # Grid-index build (Hilbert-range-partitioned sorted table + freq table)
 # runs through graft.index.IndexBuild.build from a small driver class of

@@ -24,19 +24,6 @@ import graft.synth.Synth
   */
 object Bench {
 
-  private def session(cores: String, partitions: Int = 0): SparkSession = {
-    val parts = if (partitions > 0) partitions else cores.toInt
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(s)
-    s
-  }
-
   /** One scaling pipeline: default amplification and samples per core
     * count; the transform from amplified documents (`doc_id` already
     * distinct per copy, `rep` the copy number) to its input table; its
@@ -362,7 +349,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     args match {
       case Array() =>
       case Array(name, cores, inputPath) => sampleChild(name, cores, inputPath); return
@@ -373,7 +359,7 @@ object Bench {
     // per-query-only mode: the query timings and nothing else (the sweep
     // child, and the development loop for single-query regressions)
     if (sys.env.contains("SPARK_GRAFT_PERQ_ONLY")) {
-      val (results, idfDictSec) = timeQueries(sfDir, cpus)
+      val (results, idfDictSec) = timeQueries(sfDir)
       val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
       println(s"""{"queries":$qs,"idf_dict_sec":${f"$idfDictSec%.3f"},"sf":"$sfDir"}""")
       return
@@ -384,7 +370,7 @@ object Bench {
     val amp = ampOf(p)
     val samples = envInt("SPARK_GRAFT_SAMPLES", p.samples)
     val input = phase("input") {
-      val s = session(cpus)
+      val s = GraftSession.get()
       try inputTable(s, sfDir, p, amp) finally s.stop()
     }
     // N vs 4N cores (BASELINE.json: "N and 4N executors"); N overridable —
@@ -423,7 +409,7 @@ object Bench {
   private def sampleChild(name: String, cores: String, inputPath: String): Unit = {
     val p = pipeline(name)
     val amp = ampOf(p)
-    val s = session(cores, p.parts(cores.toInt, amp))
+    val s = GraftSession.get(cores.toInt, p.parts(cores.toInt, amp))
     try {
       def input = s.read.parquet(inputPath)
       p.job(s, input.limit(WarmRows), amp).count()
@@ -464,7 +450,7 @@ object Bench {
     * best of 3 timed runs. */
   private def indexRate(forward: SparkSession => DataFrame => DataFrame, cores: Int,
                         parts: Int, inputPath: String): Double = {
-    val s = session(cores.toString, parts)
+    val s = GraftSession.get(cores, parts)
     try {
       val run = forward(s)
       def pages = s.read.parquet(inputPath)
@@ -515,8 +501,8 @@ object Bench {
   /** Per-query wall seconds (min of 2 passes) for every SparkEntry query,
     * or the `SPARK_GRAFT_QUERIES` subset, and the idf dictionary build
     * seconds. */
-  private def timeQueries(sfDir: String, cpus: String): (Seq[(String, Double)], Double) = {
-    val spark = session(cpus)
+  private def timeQueries(sfDir: String): (Seq[(String, Double)], Double) = {
+    val spark = GraftSession.get()
     try {
       // warmup: JIT + codegen + parquet footer caches
       try Queries.fwdGeocode(spark, sfDir).count() catch { case _: Throwable => () }
@@ -526,19 +512,13 @@ object Bench {
       val idfDictSec = time {
         try Queries.warmIdfDict(spark, sfDir) catch { case _: Throwable => () }
       }
-      val filt = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSet)
       // min-of-2 passes: a shared-box load spike during one pass does not
       // land in the scoreboard as a per-query "regression"
-      def onePass(): Seq[(String, Double)] = {
-        spark.catalog.clearCache() // drop persisted frames: each pass pays its own cuts
-        SparkEntry.queries.toSeq.sortBy(_._1)
-          .filter { case (name, _) => filt.forall(_.contains(name)) }
-          .map { case (name, fn) =>
-            name -> time {
-              try fn(spark, sfDir).count()
-              catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}"); -1L }
-            }
-          }
+      def onePass(): Seq[(String, Double)] = SparkEntry.eachQuery(spark, sfDir) { (name, df) =>
+        time {
+          try df().count()
+          catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}"); -1L }
+        }
       }
       val p1 = onePass(); val p2 = onePass().toMap
       (p1.map { case (k, v) => k -> math.min(v, p2(k)) }, idfDictSec)

@@ -1,23 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for selected queries
   * (usage: runMain graft.Explain <sfDir> <query...>). */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val which = if (args.length > 1) args.drop(1).toSet else Set("fwd_geocode", "reverse_pip")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries.filter(q => which.contains(q._1)).foreach { case (name, fn) =>
+    val which = if (args.length > 1) args.drop(1).toSeq else Seq("fwd_geocode", "reverse_pip")
+    val spark = GraftSession.get()
+    SparkEntry.eachQuery(spark, sfDir, which) { (name, df) =>
       println(s"========== $name ==========")
-      println(fn(spark, sfDir).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      println(df().queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
     }
     spark.stop()
   }

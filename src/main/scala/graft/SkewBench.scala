@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.pipeline.Skew
 
@@ -13,17 +12,12 @@ import graft.pipeline.Skew
   */
 object SkewBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = GraftSession.cpus
     val rows = sys.env.getOrElse("SPARK_GRAFT_SKEW_ROWS", "2000000").toLong
     val fanout = sys.env.getOrElse("SPARK_GRAFT_SKEW_FANOUT", "400").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.skewJoin.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get(cpus)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
 
     val hotCell = 424242L
     // probes: 80% on the hot cell, the rest uniform over 1000 cells
@@ -47,7 +41,7 @@ object SkewBench {
     val plainSec = time(run(probe.join(index.hint("merge"), "cell")))
     val hot = Skew.hotKeys(probe, "cell", k = 8, threshold = rows / 20)
     val saltedSec = time(
-      run(Skew.saltedJoin(probe, index.hint("merge"), "cell", "pid", hot, s = cpus.toInt)))
+      run(Skew.saltedJoin(probe, index.hint("merge"), "cell", "pid", hot, s = cpus)))
     println(f"""{"metric":"skew-join plain vs salted","rows":$rows,"cores":$cpus,"plain_sec":$plainSec%.2f,"salted_sec":$saltedSec%.2f,"speedup":${plainSec / saltedSec}%.2f,"hot_keys":${hot.length}}""")
     spark.stop()
   }

@@ -398,6 +398,22 @@ object SparkEntry {
     }),
   )
 
+  /** Run `body` on each query in `names` (default: the comma-separated
+    * `SPARK_GRAFT_QUERIES`, else every query by name), in that order,
+    * handing it the query's frame builder; the session's cache is cleared
+    * after each. Queries persist frames they never unpersist, and a later
+    * query must not plan over an earlier one's cache. */
+  def eachQuery[A](spark: SparkSession, sfDir: String,
+                   names: Seq[String] = sys.env.get("SPARK_GRAFT_QUERIES")
+                     .fold(queries.keys.toSeq.sorted)(_.split(",").toSeq))
+                  (body: (String, () => DataFrame) => A): Seq[(String, A)] = {
+    val all = queries
+    names.map { name =>
+      val fn = all.getOrElse(name, throw new IllegalArgumentException(s"no query named $name"))
+      try name -> body(name, () => fn(spark, sfDir)) finally spark.catalog.clearCache()
+    }
+  }
+
   /** DuckDB mirrors over the bare table names (driver registers views).
     * EVERY query has a bit-exact mirror — including the sketch family
     * (mix64/FNV-1a/SimHash/MinHash/winnowing via queries.SqlHash HUGEINT

@@ -21,12 +21,20 @@ object TableIO {
     * written footers. Range partitioning gives (a) clustered locality for
     * range predicates, (b) file-level min/max pruning on the sort key. */
   def writeSorted(df: DataFrame, path: String, rangeKey: String,
-                  sortCols: Seq[String], numRanges: Int): Unit = {
+                  sortCols: Seq[String], numRanges: Int): Unit =
+    writeWithManifest(df, path, Paths.get(path, "_manifest.json"), "\"format\": \"graft-table-v1\"",
+      rangeKey, sortCols, numRanges)
+
+  /** [[writeSorted]]'s layout under `dataDir`, and its manifest at
+    * `manifest`, opening with `head` (the format tag and any per-caller
+    * keys). */
+  private def writeWithManifest(df: DataFrame, dataDir: String, manifest: java.nio.file.Path,
+                                head: String, rangeKey: String, sortCols: Seq[String],
+                                numRanges: Int): Unit = {
     df.repartitionByRange(numRanges, col(rangeKey))
       .sortWithinPartitions(sortCols.map(col): _*)
-      .write.mode("overwrite").parquet(path)
-    val spark = df.sparkSession
-    val written = spark.read.parquet(path)
+      .write.mode("overwrite").parquet(dataDir)
+    val written = df.sparkSession.read.parquet(dataDir)
     val stats = written
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("rows"),
@@ -36,16 +44,15 @@ object TableIO {
     val files = stats.map { r =>
       s"""{"file": ${q(r.getString(0).replaceFirst("^file:", ""))}, "rows": ${r.getLong(1)}, "lo": ${r.getLong(2)}, "hi": ${r.getLong(3)}}"""
     }.mkString("[", ", ", "]")
-    val manifest =
-      s"""{"format": "graft-table-v1",
+    Files.writeString(manifest,
+      s"""{$head,
          | "schema": ${q(written.schema.json)},
          | "range_key": ${q(rangeKey)},
          | "sorted_by": ${sortCols.map(q).mkString("[", ", ", "]")},
          | "num_files": ${stats.length},
          | "total_rows": ${stats.map(_.getLong(1)).sum},
          | "snapshot_ms": ${System.currentTimeMillis()},
-         | "files": $files}""".stripMargin
-    Files.writeString(Paths.get(path, "_manifest.json"), manifest)
+         | "files": $files}""".stripMargin)
   }
 
   /** Read the parquet table at `path`, as `spark.read.parquet(path)` does
@@ -137,31 +144,8 @@ object TableIO {
   def commit(df: DataFrame, path: String, rangeKey: String,
              sortCols: Seq[String], numRanges: Int): Long = {
     val id = nextSnapshotId(path)
-    val dataDir = s"$path/snap-$id"
-    df.repartitionByRange(numRanges, col(rangeKey))
-      .sortWithinPartitions(sortCols.map(col): _*)
-      .write.mode("overwrite").parquet(dataDir)
-    val spark = df.sparkSession
-    val written = spark.read.parquet(dataDir)
-    val stats = written
-      .groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("rows"),
-        min(col(rangeKey)).as("lo"), max(col(rangeKey)).as("hi"))
-      .orderBy("lo")
-      .collect()
-    val files = stats.map { r =>
-      s"""{"file": ${q(r.getString(0).replaceFirst("^file:", ""))}, "rows": ${r.getLong(1)}, "lo": ${r.getLong(2)}, "hi": ${r.getLong(3)}}"""
-    }.mkString("[", ", ", "]")
-    val manifest =
-      s"""{"format": "graft-table-v2", "snapshot_id": $id,
-         | "schema": ${q(written.schema.json)},
-         | "range_key": ${q(rangeKey)},
-         | "sorted_by": ${sortCols.map(q).mkString("[", ", ", "]")},
-         | "num_files": ${stats.length},
-         | "total_rows": ${stats.map(_.getLong(1)).sum},
-         | "snapshot_ms": ${System.currentTimeMillis()},
-         | "files": $files}""".stripMargin
-    Files.writeString(Paths.get(path, s"_manifest-$id.json"), manifest)
+    writeWithManifest(df, s"$path/snap-$id", Paths.get(path, s"_manifest-$id.json"),
+      s""""format": "graft-table-v2", "snapshot_id": $id""", rangeKey, sortCols, numRanges)
     // the ONLY mutation visible to readers: an atomic pointer flip
     val tmp = Paths.get(path, s"_current.json.tmp-$id")
     Files.writeString(tmp, s"""{"snapshot_id": $id}""")
@@ -240,7 +224,10 @@ object TableIO {
     drop
   }
 
-  private def q(s: String): String = "\"" + s.flatMap {
+  /** A JSON string literal: backslash, quote and ALL control chars (< 0x20)
+    * escaped — a tab or CR in hand-written SQL would otherwise make a JSON
+    * reader of `oracle_sql.json` fail. */
+  private[graft] def q(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

@@ -1,10 +1,10 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
+import graft.GraftSession
 import graft.ops.TextOps
+import graft.pipeline.Checkpoint
 
 /** The sequential, materialized form of the corpus-curation scrub (the
   * per-doc diagnostic view is `TextOps.curate` / the `corpus_curate`
@@ -26,12 +26,11 @@ object CurationJob {
   /** The gates, each reduced to "filter the corpus frame". Per-row gates
     * semi-join their own doc_id verdict back (one doc_id-keyed exchange on
     * a flag-sized frame); dedups keep their representative rows; the
-    * decontamination stage drops the eval slice itself plus every train doc
-    * sharing a shingle with it. */
-  def stages(qualityMin: Double = 0.75,
-             evalMod: Long = 41L, evalRes: Long = 3L): Seq[Stage] = Seq(
+    * decontamination stage drops the eval slice (doc_id % 41 == 3) itself
+    * plus every train doc sharing a shingle with it. */
+  val stages: Seq[Stage] = Seq(
     Stage("quality", d => d.join(
-      TextOps.qualityScore(d).filter(col("quality") >= qualityMin)
+      TextOps.qualityScore(d).filter(col("quality") >= 0.75)
         .select(col("doc_id")), "doc_id")),
     Stage("repetition", d => d.join(
       TextOps.qualityRepetition(d).filter(col("keep") === 1)
@@ -44,72 +43,32 @@ object CurationJob {
         .select(col("rep_doc").as("doc_id")), "doc_id")),
     Stage("exact_dedup", d => TextOps.exactReps(d)),
     Stage("decontaminate", d =>
-      d.filter(col("doc_id") % evalMod =!= evalRes)
-        .join(TextOps.decontaminate(d, evalMod = evalMod, evalRes = evalRes)
-          .select(col("doc_id")), Seq("doc_id"), "left_anti"))
+      d.filter(col("doc_id") % 41L =!= 3L)
+        .join(TextOps.decontaminate(d).select(col("doc_id")), Seq("doc_id"), "left_anti"))
   )
 
-  def completedStages(outDir: String): Set[String] = {
-    val p = Paths.get(outDir, "_lineage.jsonl")
-    if (!Files.exists(p)) Set.empty
-    else Files.readAllLines(p).asScala
-      .filter(_.contains("\"status\": \"done\""))
-      .flatMap("\"stage\": \"([a-z_]+)\"".r.findFirstMatchIn(_).map(_.group(1)))
-      .toSet
-  }
-
-  /** Run every not-yet-completed stage in order; `failAfter` injects a
-    * crash after N newly processed stages (the kill-and-resume test hook).
-    * Returns the stage names processed THIS run. The final corpus is the
-    * last stage's parquet (`readFinal`). */
+  /** Run every not-yet-completed stage in order, each over the previous
+    * stage's table, under [[Checkpoint.runStages]]'s ledger; `failAfter`
+    * injects a crash after N newly processed stages (the kill-and-resume
+    * test hook). Returns the stage names processed THIS run. The final
+    * corpus is the last stage's parquet (`readFinal`). */
   def run(spark: SparkSession, docs: DataFrame, outDir: String,
-          qualityMin: Double = 0.75, failAfter: Option[Int] = None): Seq[String] = {
-    Files.createDirectories(Paths.get(outDir))
-    val done = completedStages(outDir)
-    var cur = docs.select(col("doc_id"), col("text"))
-    var processed = List.empty[String]
-    stages(qualityMin).foreach { st =>
-      val path = s"$outDir/stage=${st.name}"
-      if (done.contains(st.name)) {
-        cur = spark.read.parquet(path) // completed: read back, zero recompute
-      } else {
-        if (failAfter.exists(processed.length >= _))
-          throw new RuntimeException(s"injected failure after ${processed.length} stages")
-        val t0 = System.nanoTime()
-        val rowsIn = cur.count()
-        // rows_out is counted by the write itself, not by a re-read
-        val written = new Observation(s"stage-${st.name}")
-        st.apply(cur).observe(written, count(lit(1)).as("rows"))
-          .write.mode("overwrite").parquet(path)
-        val rowsOut = written.get("rows")
-        cur = spark.read.parquet(path)
-        val ms = (System.nanoTime() - t0) / 1000000
-        graft.index.TableIO.appendLine(s"$outDir/_lineage.jsonl",
-          s"""{"stage": "${st.name}", "rows_in": $rowsIn, "rows_out": $rowsOut, "wall_ms": $ms, "ts": ${System.currentTimeMillis()}, "status": "done"}""")
-        processed ::= st.name
-      }
-    }
-    processed.reverse
-  }
+          failAfter: Option[Int] = None): Seq[String] =
+    Checkpoint.runStages(spark, docs.select(col("doc_id"), col("text")),
+      stages.map(st => st.name -> st.apply), outDir, failAfter)
 
   /** The curated corpus: the last completed stage's table. */
   def readFinal(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/stage=${stages().last.name}")
+    spark.read.parquet(s"$outDir/stage=${stages.last.name}")
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("/tmp/graft_curation_out")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get()
     val docs = TextOps.curationFixture(
       graft.index.TableIO.read(spark, s"$sfDir/documents.parquet"))
     val done = run(spark, docs, outDir)
-    val kept = readFinal(spark, outDir).count()
+    val kept = Checkpoint.completed(outDir, "stage")(stages.last.name) // the ledger's rows, no count
     println(s"""{"job":"curation","stages_processed":${done.length},"docs_kept":$kept,"out":"$outDir"}""")
     spark.stop()
   }

@@ -18,11 +18,14 @@ import graft.synth.Synth
   */
 object ForwardJob {
 
+  /** Hilbert ranges per run. */
+  private val NRanges = 8
+
   def run(spark: SparkSession, sfDir: String, outDir: String,
-          nRanges: Int = 8, failAfter: Option[Int] = None): Seq[Int] =
+          failAfter: Option[Int] = None): Seq[Int] =
     runRanges(spark, Geocode.forward(Synth.docPages(spark, sfDir), Synth.gazDf(spark))
       .withColumn("hkey", F.hilbertCell(F.parentCell(col("cell"), lit(8)))),
-      outDir, nRanges, failAfter)
+      outDir, failAfter)
 
   /** The at-scale variant: forward geocode over the BUILT fat grid index
     * (`Geocode.forwardIndexedFat`: one map-only stage under its broadcast
@@ -30,17 +33,17 @@ object ForwardJob {
     * same per-Hilbert-range checkpoint + resume machinery. Row-identical to
     * [[run]] over the same gazetteer. */
   def runIndexed(spark: SparkSession, sfDir: String, outDir: String,
-                 nRanges: Int = 8, failAfter: Option[Int] = None): Seq[Int] =
+                 failAfter: Option[Int] = None): Seq[Int] =
     runRanges(spark, Geocode.forwardIndexedFat(Synth.docPages(spark, sfDir),
         graft.queries.Queries.gazGridFatParquet(spark))
       .withColumn("hkey", F.hilbertCell(F.parentCell(col("cell"), lit(8)))),
-      outDir, nRanges, failAfter)
+      outDir, failAfter)
 
   /** N-level variant: the 4-level stack coalesce (continent→country→region→
     * place chains) under the same per-Hilbert-range checkpoint + resume
     * machinery — the job surface of `fwd_geocode_multi`. */
   def runMulti(spark: SparkSession, sfDir: String, outDir: String,
-               nRanges: Int = 8, failAfter: Option[Int] = None): Seq[Int] = {
+               failAfter: Option[Int] = None): Seq[Int] = {
     val m = Geocode.mentions(Synth.docPages(spark, sfDir), Synth.gazMultiDf(spark)).persist()
     // multi-level results carry cells at each LEAF's own zoom (z4..z12), so
     // the range key comes from the feature center's z8 cell, not an
@@ -48,18 +51,18 @@ object ForwardJob {
     runRanges(spark, Geocode.rank(Geocode.coalesceN(m),
         extraCols = Seq("chain", "glon", "glat"))
       .withColumn("hkey", F.hilbertCell(F.cellAt(lit(8), col("glon"), col("glat"))))
-      .drop("glon", "glat"), outDir, nRanges, failAfter)
+      .drop("glon", "glat"), outDir, failAfter)
   }
 
   /** The shared tail: persist the keyed results (local stand-in for the
     * checkpointed results table) and write them per uniform Hilbert range
     * of `hkey` via [[Checkpoint.runResumable]]. */
   private def runRanges(spark: SparkSession, keyed: DataFrame, outDir: String,
-                        nRanges: Int, failAfter: Option[Int]): Seq[Int] = {
+                        failAfter: Option[Int]): Seq[Int] = {
     val results = keyed.persist()
     Checkpoint.runResumable(spark,
       (lo, hi) => results.filter(col("hkey") >= lo && col("hkey") < hi),
-      Checkpoint.uniformRanges(8, nRanges), outDir, failAfter)
+      Checkpoint.uniformRanges(8, NRanges), outDir, failAfter)
   }
 
   /** Checkpointed run + ATOMIC publish: slices land in a staging dir under
@@ -70,25 +73,18 @@ object ForwardJob {
     * epoch or the complete new one — never a partially-geocoded corpus.
     * Returns the published snapshot id. */
   def runPublished(spark: SparkSession, sfDir: String, stagingDir: String,
-                   tableDir: String, nRanges: Int = 8,
-                   failAfter: Option[Int] = None): Long = {
-    run(spark, sfDir, stagingDir, nRanges, failAfter) // throws on injected kill
+                   tableDir: String, failAfter: Option[Int] = None): Long = {
+    run(spark, sfDir, stagingDir, failAfter) // throws on injected kill
     // slices already carry hkey (the checkpoint range key)
     graft.index.TableIO.commit(Checkpoint.readAll(spark, stagingDir),
       tableDir, rangeKey = "hkey", sortCols = Seq("hkey", "doc_id"),
-      numRanges = nRanges)
+      numRanges = NRanges)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("/tmp/graft_forward_out")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.get()
     val done = run(spark, sfDir, outDir)
     println(s"""{"job":"forward","ranges_processed":${done.length},"out":"$outDir"}""")
     spark.stop()

@@ -4,21 +4,27 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import graft.index.TableIO
 
-/** Resumable per-cell-range checkpointing (SURVEY.md §2.A6; north rule:
-  * "resumable from checkpoint with per-partition lineage + metrics").
+/** Resumable units of work and their run ledger (SURVEY.md §2.A6; north
+  * rule: "resumable from checkpoint with per-partition lineage + metrics").
   *
-  * The Hilbert-ordered cell-key space is cut into `ranges` contiguous
-  * slices; each slice is written as its own parquet subdir and appended to
-  * `_lineage.jsonl` (range id, bounds, row count, wall ms, attempt
-  * timestamp). A restart reads the lineage, anti-joins the completed range
-  * ids, and only processes the remainder — zero recompute of finished
-  * ranges. At cluster scale each slice maps to a pruned scan of the sorted
-  * index (file min/max on hkey), so a slice never rescans the whole input.
+  * Each unit is written as its own parquet subdir of the run's output dir,
+  * then one line is appended to the dir's `_lineage.jsonl`: the unit key
+  * (`"range": <id>` or `"stage": "<name>"`), the unit's own fields, then
+  * `rows` (counted on the write), `wall_ms`, `ts` and `status` (README
+  * "Sessions and the run ledger"). A restart skips every unit the ledger
+  * marks done — zero recompute of finished units. A Hilbert range
+  * ([[runResumable]]) maps at cluster scale to a pruned scan of the sorted
+  * index (file min/max on hkey), so a slice never rescans the whole input;
+  * a stage ([[runStages]]) reads the previous stage's table.
   */
 object Checkpoint {
 
   final case class RangeSpec(id: Int, lo: Long, hi: Long) // [lo, hi)
+
+  private val Ledger = "_lineage.jsonl"
+  private val Rows = "\"rows\": (\\d+)".r
 
   /** Equal-width slices of the Hilbert domain [0, 4^z). Balanced enough for
     * the synthetic fixtures; production would cut on approxQuantile of the
@@ -33,44 +39,76 @@ object Checkpoint {
     }
   }
 
-  def completedRanges(outDir: String): Set[Int] = {
-    val p = Paths.get(outDir, "_lineage.jsonl")
-    if (!Files.exists(p)) Set.empty
-    else Files.readAllLines(p).asScala
-      .filter(_.contains("\"status\": \"done\""))
-      .flatMap { l =>
-        "\"range\": (\\d+)".r.findFirstMatchIn(l).map(_.group(1).toInt)
-      }.toSet
+  /** The units of `key` that `outDir`'s ledger marks done: id → rows. */
+  def completed(outDir: String, key: String): Map[String, Long] = {
+    val p = Paths.get(outDir, Ledger)
+    val unit = ("\"" + key + "\": \"?([a-z_0-9]+)").r
+    if (!Files.exists(p)) Map.empty
+    else Files.readAllLines(p).asScala.filter(_.contains("\"status\": \"done\"")).flatMap { l =>
+      for (u <- unit.findFirstMatchIn(l); r <- Rows.findFirstMatchIn(l)) yield u.group(1) -> r.group(1).toLong
+    }.toMap
   }
 
-  /** Run `makeSlice(lo, hi)` for every not-yet-completed range and persist
-    * results + lineage. `failAfter` injects a crash after N slices (test
-    * hook for the kill-and-resume contract). Returns ids processed this run. */
+  def completedRanges(outDir: String): Set[Int] = completed(outDir, "range").keySet.map(_.toInt)
+
+  /** One unit: its ledger id, its output dir under the run's, its own
+    * ledger fields given the previous unit's rows (None for the first
+    * unit), and the frame it writes. */
+  private final case class UnitSpec(id: String, dir: String, fields: Option[Long] => String,
+                                    frame: () => DataFrame)
+
+  /** Write every unit the ledger does not mark done, in order; `failAfter`
+    * injects a crash after N newly written units (the kill-and-resume test
+    * hook). Each unit's row count rides on its write (one job per unit, no
+    * re-read). Returns the ids written this run. */
+  private def run(outDir: String, key: String, units: Seq[UnitSpec], failAfter: Option[Int]): Seq[String] = {
+    Files.createDirectories(Paths.get(outDir))
+    val done = completed(outDir, key)
+    var prev = Option.empty[Long]
+    var processed = List.empty[String]
+    units.foreach { u =>
+      prev = done.get(u.id).orElse {
+        if (failAfter.exists(processed.length >= _))
+          throw new RuntimeException(s"injected failure after ${processed.length} units")
+        val t0 = System.nanoTime()
+        val own = u.fields(prev)
+        val written = new Observation(s"$key-${u.id}")
+        u.frame().observe(written, count(lit(1)).as("rows"))
+          .write.mode("overwrite").parquet(s"$outDir/${u.dir}")
+        val rows = written.get("rows").asInstanceOf[Long]
+        val ms = (System.nanoTime() - t0) / 1000000
+        val id = if (u.id.forall(_.isDigit)) u.id else TableIO.q(u.id)
+        TableIO.appendLine(s"$outDir/$Ledger",
+          s"""{"$key": $id, $own"rows": $rows, "wall_ms": $ms, "ts": ${System.currentTimeMillis()}, "status": "done"}""")
+        processed ::= u.id
+        Some(rows)
+      }
+    }
+    processed.reverse
+  }
+
+  /** Run `makeSlice(lo, hi)` for every not-yet-completed range. Returns ids
+    * processed this run. */
   def runResumable(spark: SparkSession,
                    makeSlice: (Long, Long) => DataFrame,
                    ranges: Seq[RangeSpec],
                    outDir: String,
-                   failAfter: Option[Int] = None): Seq[Int] = {
-    Files.createDirectories(Paths.get(outDir))
-    val done = completedRanges(outDir)
-    val pending = ranges.filterNot(r => done.contains(r.id))
-    var processed = List.empty[Int]
-    pending.foreach { r =>
-      if (failAfter.exists(processed.length >= _))
-        throw new RuntimeException(s"injected failure after ${processed.length} ranges")
-      val t0 = System.nanoTime()
-      // the row count rides on the slice write (one job per range, no re-read)
-      val written = new Observation(s"range-${r.id}")
-      makeSlice(r.lo, r.hi).observe(written, count(lit(1)).as("rows"))
-        .write.mode("overwrite").parquet(s"$outDir/range=${r.id}")
-      val rows = written.get("rows")
-      val ms = (System.nanoTime() - t0) / 1000000
-      graft.index.TableIO.appendLine(s"$outDir/_lineage.jsonl",
-        s"""{"range": ${r.id}, "lo": ${r.lo}, "hi": ${r.hi}, "rows": $rows, "wall_ms": $ms, "ts": ${System.currentTimeMillis()}, "status": "done"}""")
-      processed ::= r.id
-    }
-    processed.reverse
-  }
+                   failAfter: Option[Int] = None): Seq[Int] =
+    run(outDir, "range", ranges.map(r => UnitSpec(r.id.toString, s"range=${r.id}",
+      _ => s""""lo": ${r.lo}, "hi": ${r.hi}, """, () => makeSlice(r.lo, r.hi))), failAfter)
+      .map(_.toInt)
+
+  /** Run every not-yet-completed stage of the chain over `input`, each over
+    * the previous stage's table. Only the first stage counts its input
+    * (`rows_in`); later stages take the previous stage's `rows`. Returns the
+    * stage names processed this run. */
+  def runStages(spark: SparkSession, input: DataFrame, stages: Seq[(String, DataFrame => DataFrame)],
+                outDir: String, failAfter: Option[Int] = None): Seq[String] =
+    run(outDir, "stage", stages.zipWithIndex.map { case ((name, apply), i) =>
+      def in = if (i == 0) input else spark.read.parquet(s"$outDir/stage=${stages(i - 1)._1}")
+      UnitSpec(name, s"stage=$name", prev => s""""rows_in": ${prev.getOrElse(in.count())}, """,
+        () => apply(in))
+    }, failAfter)
 
   /** Union of the completed range outputs: the directories of the ranges
     * `_lineage.jsonl` marks done, read by name (a `range=*` glob would also

@@ -54,4 +54,16 @@ class SourceGateSpec extends AnyFunSuite {
     val found = hits("""7919|104729""".r, Set("Synth.scala"))
     assert(found.isEmpty, found.mkString("\n"))
   }
+
+  test("sessions are built only in GraftSession") {
+    // one owner decides what a launcher's --master and --conf may override
+    val found = hits("""SparkSession\.builder""".r, Set("GraftSession.scala"))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("the run ledger is written and parsed only in Checkpoint") {
+    // one `_lineage.jsonl` line format, one reader of the done units
+    val found = hits("""_lineage\.jsonl""".r, Set("Checkpoint.scala"))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
 }

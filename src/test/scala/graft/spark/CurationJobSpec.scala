@@ -3,7 +3,9 @@ package graft.spark
 import org.apache.spark.sql.functions._
 import graft.jobs.CurationJob
 import graft.ops.TextOps
-import java.nio.file.Files
+import graft.pipeline.Checkpoint
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Staged corpus curation: kill mid-pipeline, resume, final corpus
   * identical to an uninterrupted run; no completed stage recomputes; the
@@ -18,7 +20,7 @@ class CurationJobSpec extends SparkTestBase {
   test("killed curation job resumes to the identical final corpus, zero recompute") {
     val single = Files.createTempDirectory("curjob_a").toString
     val done = CurationJob.run(spark, fixture, single)
-    assert(done == CurationJob.stages().map(_.name))
+    assert(done == CurationJob.stages.map(_.name))
     val expect = CurationJob.readFinal(spark, single)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(expect.nonEmpty && expect.size < fixture.count())
@@ -28,7 +30,7 @@ class CurationJobSpec extends SparkTestBase {
       CurationJob.run(spark, fixture, out, failAfter = Some(3))
     }
     assert(crashed.getMessage.contains("injected"))
-    val doneBefore = CurationJob.completedStages(out)
+    val doneBefore = Checkpoint.completed(out, "stage").keySet
     assert(doneBefore.size == 3)
     val resumed = CurationJob.run(spark, fixture, out)
     assert(resumed.size == 3 && resumed.toSet.intersect(doneBefore).isEmpty)
@@ -36,10 +38,10 @@ class CurationJobSpec extends SparkTestBase {
     val lineage = java.nio.file.Files.readAllLines(
       java.nio.file.Paths.get(out, "_lineage.jsonl"))
     assert(lineage.size == 6)
-    // rows_out, observed on the stage write, is the row count of the stage table
+    // rows, observed on the stage write, is the row count of the stage table
     lineage.forEach { l =>
       val stage = "\"stage\": \"([a-z_]+)\"".r.findFirstMatchIn(l).get.group(1)
-      val rowsOut = "\"rows_out\": (\\d+)".r.findFirstMatchIn(l).get.group(1).toLong
+      val rowsOut = "\"rows\": (\\d+)".r.findFirstMatchIn(l).get.group(1).toLong
       assert(rowsOut == spark.read.parquet(s"$out/stage=$stage").count(), l)
     }
     val got = CurationJob.readFinal(spark, out)
@@ -62,5 +64,45 @@ class CurationJobSpec extends SparkTestBase {
     // quality-filtered can become the surviving rep sequentially).
     val keeps = flags.collect { case (id, 1) => id }.toSet
     assert(keeps.nonEmpty && keeps.subsetOf(survivors))
+  }
+
+  /** One uninterrupted run's output dir and the call sites of the `count`
+    * actions it issued. Each action is one SQL execution, described by its
+    * call site; under AQE its jobs run on other threads, so the jobs' own
+    * stage names do not show the action. */
+  private lazy val counted: (String, Seq[String]) = {
+    val out = Files.createTempDirectory("curjob_d").toString
+    val docs = fixture
+    val sc = spark.sparkContext
+    val counts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+            if s.description.startsWith("count at ") =>
+          counts.add(s.description.stripPrefix("count at ").takeWhile(_ != ':'))
+        case _ =>
+      }
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try { CurationJob.run(spark, docs, out); org.apache.spark.TestListenerBus.drain(sc) }
+    finally sc.removeSparkListener(l)
+    (out, counts.asScala.toSeq)
+  }
+
+  test("each stage's rows_in is the previous stage's rows; the first stage's the fixture count") {
+    val (out, _) = counted
+    val lines = Files.readAllLines(Paths.get(out, "_lineage.jsonl")).asScala.toSeq
+    def field(l: String, k: String) = ("\"" + k + "\": (\\d+)").r.findFirstMatchIn(l).get.group(1).toLong
+    assert(lines.map("\"stage\": \"([a-z_]+)\"".r.findFirstMatchIn(_).get.group(1)) ==
+      CurationJob.stages.map(_.name))
+    assert(field(lines.head, "rows_in") == fixture.count())
+    lines.zip(lines.tail).foreach { case (a, b) => assert(field(b, "rows_in") == field(a, "rows"), b) }
+  }
+
+  test("one curation run counts rows once: stage 1's rows_in, not one count per stage") {
+    // the other count is the perplexity gate's own vocabulary-size probe
+    // (TextOps.lmPerplexity picks broadcast vs join with it)
+    assert(counted._2.sorted == Seq("Checkpoint.scala", "TextOps.scala"), counted._2)
   }
 }

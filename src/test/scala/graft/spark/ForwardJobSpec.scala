@@ -15,7 +15,7 @@ class ForwardJobSpec extends SparkTestBase {
     val sf = "/root/testdata/sf0.001"
     val out = Files.createTempDirectory("fwdjob").toString
     val crashed = intercept[RuntimeException] {
-      ForwardJob.run(spark, sf, out, nRanges = 8, failAfter = Some(3))
+      ForwardJob.run(spark, sf, out, failAfter = Some(3))
     }
     assert(crashed.getMessage.contains("injected"))
     val doneBefore = Checkpoint.completedRanges(out)
@@ -37,7 +37,7 @@ class ForwardJobSpec extends SparkTestBase {
     val sf = "/root/testdata/sf0.001"
     val out = Files.createTempDirectory("fwdjob_multi").toString
     intercept[RuntimeException] {
-      ForwardJob.runMulti(spark, sf, out, nRanges = 8, failAfter = Some(2))
+      ForwardJob.runMulti(spark, sf, out, failAfter = Some(2))
     }
     val resumed = ForwardJob.runMulti(spark, sf, out)
     assert(resumed.size == 6)
@@ -54,7 +54,7 @@ class ForwardJobSpec extends SparkTestBase {
     val sf = "/root/testdata/sf0.001"
     val out = Files.createTempDirectory("fwdjob_idx").toString
     intercept[RuntimeException] {
-      ForwardJob.runIndexed(spark, sf, out, nRanges = 8, failAfter = Some(2))
+      ForwardJob.runIndexed(spark, sf, out, failAfter = Some(2))
     }
     val resumed = ForwardJob.runIndexed(spark, sf, out)
     assert(resumed.size == 6)
@@ -73,7 +73,7 @@ class ForwardJobSpec extends SparkTestBase {
     val table = Files.createTempDirectory("fwdtable").toString
 
     intercept[RuntimeException] {
-      ForwardJob.runPublished(spark, sf, staging, table, nRanges = 8, failAfter = Some(3))
+      ForwardJob.runPublished(spark, sf, staging, table, failAfter = Some(3))
     }
     // the kill happened mid-staging: the consumer table has NO snapshot at
     // all — a reader cannot observe the partially-geocoded corpus

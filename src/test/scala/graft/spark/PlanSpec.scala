@@ -365,4 +365,36 @@ class PlanSpec extends SparkTestBase {
     assert(p.contains("ShuffledHashJoin") || p.contains("SortMergeJoin"),
       "cells self-join is corpus-sized on both sides — it must shuffle")
   }
+
+  test("GraftSession leaves master and partitions to a configured launcher") {
+    import org.apache.spark.SparkConf
+    val launched = new SparkConf(false).set("spark.master", "local[2]")
+      .set("spark.sql.shuffle.partitions", "7")
+    val set = graft.GraftSession.options(launched, 3, 3).toMap
+    assert(!set.contains("spark.master") && !set.contains("spark.sql.shuffle.partitions"), set)
+    val bare = graft.GraftSession.options(new SparkConf(false), 3, 3).toMap
+    assert(bare("spark.master") == "local[3]" && bare("spark.sql.shuffle.partitions") == "3", bare)
+    Seq(set, bare).foreach { o =>
+      assert(o("spark.sql.session.timeZone") == "UTC" && o("spark.ui.enabled") == "false", o)
+    }
+  }
+
+  test("the query loop clears the cache after each query: dbscan plans as it does alone") {
+    val cache = spark.sharedState.cacheManager
+    def plans(names: String*): Map[String, String] = {
+      val got = graft.SparkEntry.eachQuery(spark, sf, names) { (_, df) =>
+        val d = df()
+        // expression and plan ids differ between any two plannings
+        val p = plan(d).replaceAll("#\\d+L?", "#").replaceAll("plan_id=\\d+", "plan_id=")
+        d.collect()
+        p
+      }
+      assert(cache.isEmpty, s"cache left after ${names.mkString(", ")}")
+      got.toMap
+    }
+    spark.catalog.clearCache()
+    val alone = plans("dbscan")("dbscan")
+    assert(plans("ripley_k").contains("ripley_k"))
+    assert(plans("ripley_k", "dbscan")("dbscan") == alone)
+  }
 }
