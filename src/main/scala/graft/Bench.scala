@@ -48,13 +48,14 @@ object Bench {
     // rep, exact rep, decontamination): an agg/join-heavy second witness.
     // The eval slice must stay DIM-SIZED under amplification (it is a
     // benchmark suite, not a corpus share): with ids b*amp+rep,
-    // id % (41*amp) == 3*amp selects exactly (b % 41 == 3, rep == 0), the
-    // base slice once. A slice growing with amp measured ~10 s of
-    // driver-serial broadcast build at amp=100, capping efficiency.
+    // id % (EvalMod*amp) == EvalRes*amp selects exactly (b % EvalMod ==
+    // EvalRes, rep == 0), the base slice once. A slice growing with amp
+    // measured ~10 s of driver-serial broadcast build at amp=100, capping
+    // efficiency.
     "curate" -> Pipeline("corpus-curate throughput (docs/sec)", 20, 3,
       _.select("doc_id", "text"), (cores, _) => cores,
       (_, docs, amp) => TextOps.curate(TextOps.curationFixture(docs),
-        evalMod = 41L * amp, evalRes = 3L * amp)),
+        evalMod = TextOps.EvalMod * amp, evalRes = TextOps.EvalRes * amp)),
     // MinHash+LSH near-dup pipeline (shingle -> signature -> band buckets
     // -> capped bucket self-join -> jaccard verify). Every variant must be
     // textually DISTINCT or the work stays constant in amp (a rep%4

@@ -351,7 +351,7 @@ object SparkEntry {
     // occupancy-adaptive multi-probe: probe list per (query, table) cut once
     // the probed buckets already hold `budget` corpus vectors
     "ann_lsh_adaptive" -> ((s, d) =>
-      Ann.lshTopKAdaptive(TableIO.read(s, s"$d/embeddings.parquet"), 50, 5, budget = 8)),
+      Ann.lshTopKAdaptive(TableIO.read(s, s"$d/embeddings.parquet"), 50, 5)),
     // nList=16 is the frozen ORACLE variant (the SQL mirror's centroid CTE);
     // the library default derives nList from the corpus count — see
     // Ann.derivedNList* and the AnnSpec sub-quadratic guard
@@ -370,13 +370,13 @@ object SparkEntry {
     // multi-round Lloyd k-means (the oracle replays all 3 training rounds
     // in unrolled CTEs) and SemDeDup-style within-cluster semantic dedup
     "embed_kmeans" -> ((s, d) =>
-      Ann.kmeansAssign(TableIO.read(s, s"$d/embeddings.parquet"), rounds = 3, nList0 = 16)),
+      Ann.kmeansAssign(TableIO.read(s, s"$d/embeddings.parquet"), nList0 = 16)),
     "semantic_dedup" -> ((s, d) =>
-      Ann.semanticDedup(TableIO.read(s, s"$d/embeddings.parquet"), rounds = 3, nList0 = 16)),
+      Ann.semanticDedup(TableIO.read(s, s"$d/embeddings.parquet"), nList0 = 16)),
     // SSL-prototypes pruning: keep the least prototypical examples per
     // trained cluster (cosine-to-centroid rank, hardest-first)
     "proto_prune" -> ((s, d) =>
-      Ann.protoPrune(TableIO.read(s, s"$d/embeddings.parquet"), rounds = 3, nList0 = 16)),
+      Ann.protoPrune(TableIO.read(s, s"$d/embeddings.parquet"), nList0 = 16)),
     // REAL media decode (JDK ImageIO): deterministic PNG synthesis is the
     // ground truth; decode/resize/frame-parse must recover it (oracles are
     // closed forms over the synthesis parameters / pixel formula)
@@ -559,47 +559,47 @@ object SparkEntry {
         |  FROM documents) WHERE rn = 1""".stripMargin,
     "ngram_jaccard" -> TextOps.ngramJaccardSql,
     "dup_clusters" -> TextOps.dupClustersSql,
-    "sample_stratified" -> TextOps.stratifiedSampleSql(),
-    "sample_weighted" -> TextOps.weightedSampleSql(),
-    "dsir_select" -> TextOps.dsirSelectSql(),
+    "sample_stratified" -> TextOps.stratifiedSampleSql,
+    "sample_weighted" -> TextOps.weightedSampleSql,
+    "dsir_select" -> TextOps.dsirSelectSql,
     // 64-bit sketch hashing IS SQL-expressible after all: HUGEINT limb
     // arithmetic reproduces mix64/FNV-1a/SimHash bit-exactly (SqlHash)
     "doc_fingerprint" -> TextOps.docFingerprintSql,
-    "dedup_simhash" -> TextOps.dedupSimHashSql(),
-    "dedup_minhash" -> TextOps.dedupMinHashSql(),
-    "dedup_winnow" -> TextOps.dedupWinnowSql(),
+    "dedup_simhash" -> TextOps.dedupSimHashSql,
+    "dedup_minhash" -> TextOps.dedupMinHashSql,
+    "dedup_winnow" -> TextOps.dedupWinnowSql,
     "lang_id" -> TextOps.langIdSql,
     "lang_id_ngram" -> TextOps.langIdNgramSql,
     "lang_id_wide" -> TextOps.langIdNgramWideSql,
     "quality_score" -> TextOps.qualityScoreSql,
-    "quality_repetition" -> TextOps.qualityRepetitionSql(),
+    "quality_repetition" -> TextOps.qualityRepetitionSql,
     "pii_scrub" -> TextOps.piiScrubSql,
     "url_dedup" -> TextOps.urlDedupSql,
     "line_dedup" -> TextOps.lineDedupSql,
-    "dedup_substr" -> TextOps.dedupSubstrSql(),
-    "domain_mix" -> TextOps.domainMixSql(),
+    "dedup_substr" -> TextOps.dedupSubstrSql,
+    "domain_mix" -> TextOps.domainMixSql,
     "token_count" -> TextOps.tokenCountSql,
     "hll_distinct" -> TextOps.hllDistinctSql,
     "cms_topk" -> TextOps.cmsTopkSql,
     "phrase_search" -> TextOps.phraseSearchSql,
-    "zipf_fit" -> TextOps.zipfFitSql(),
+    "zipf_fit" -> TextOps.zipfFitSql,
     "ngram_counts" -> TextOps.ngramCountsSql,
-    "bm25_topk" -> TextOps.bm25Sql(),
-    "keywords_tfidf" -> TextOps.keywordsTfIdfSql(),
-    "lm_perplexity" -> TextOps.lmPerplexitySql(),
-    "decontaminate" -> TextOps.decontaminateSql(),
-    "corpus_curate" -> TextOps.curateSql(),
+    "bm25_topk" -> TextOps.bm25Sql,
+    "keywords_tfidf" -> TextOps.keywordsTfIdfSql,
+    "lm_perplexity" -> TextOps.lmPerplexitySql,
+    "decontaminate" -> TextOps.decontaminateSql,
+    "corpus_curate" -> TextOps.curateSql,
     "ann_cosine" -> Ann.bruteForceTopKSql(50, 5),
     // full mirror: integer hyperplane sign test + SQL-side mix64 planes
     "ann_lsh" -> Ann.lshTopKSql(50, 5),
-    "ann_lsh_adaptive" -> Ann.lshTopKAdaptiveSql(50, 5, budget = 8),
+    "ann_lsh_adaptive" -> Ann.lshTopKAdaptiveSql(50, 5),
     "ann_pq" -> Ann.pqTopKSql(50, 5),
     "ann_ivf" -> Ann.ivfTopKSql(50, 5),
     "ann_ivf_trained" -> Ann.ivfTopKTrainedSql(50, 5),
-    "dedup_embed" -> Ann.dedupEmbedSql(),
-    "embed_kmeans" -> Ann.kmeansAssignSql(rounds = 3, nList = 16),
-    "proto_prune" -> Ann.protoPruneSql(rounds = 3, nList = 16),
-    "semantic_dedup" -> Ann.semanticDedupSql(rounds = 3, nList = 16),
+    "dedup_embed" -> Ann.dedupEmbedSql,
+    "embed_kmeans" -> Ann.kmeansAssignSql,
+    "proto_prune" -> Ann.protoPruneSql,
+    "semantic_dedup" -> Ann.semanticDedupSql,
     "mm_decode" -> Multimodal.decodeMetaSql,
     "mm_frames" -> Multimodal.frameSampleSql,
     "mm_decode_jpeg" -> Multimodal.decodeJpegSql,

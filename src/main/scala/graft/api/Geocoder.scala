@@ -125,7 +125,7 @@ final class Geocoder(spark: SparkSession, gaz: DataFrame,
     * [[Geocode.knnExpanding]]; rows are identical (FallbackSpec). */
   def reverse(points: DataFrame,
               typed: Seq[(String, DataFrame, Int)],
-              knnZ: Int = 8): DataFrame =
+              knnZ: Int = Geocode.KnnZ): DataFrame =
     reverseWith(points, typed, knnZ, Geocode.BroadcastCoverCeiling)
 
   /** [[reverse]] with the cover ceiling as a parameter (tests force the
@@ -154,12 +154,12 @@ final class Geocoder(spark: SparkSession, gaz: DataFrame,
 
   /** Reverse with `limit > 1` — carmen allows this only with a SINGLE type:
     * up to `limit` features of that type per point, containing features
-    * first, then nearest by center distance. `feats` must carry
+    * first, then nearest by center distance, over the kNN zoom's cells
+    * within the ladder's first radius. `feats` must carry
     * (feature_id, geom_wkb, flon, flat). */
-  def reverseK(points: DataFrame, feats: DataFrame, limit: Int,
-               z: Int = 8, r: Int = 2): DataFrame = {
+  def reverseK(points: DataFrame, feats: DataFrame, limit: Int): DataFrame = {
     require(limit >= 1, "limit must be >= 1")
-    Geocode.reverseTopK(points, feats, z, r, limit)
+    Geocode.reverseTopK(points, feats, Geocode.KnnZ, Geocode.KnnRadii.head, limit)
   }
 }
 

@@ -286,11 +286,14 @@ object Text {
     (1 to toks.length).map(k => toks.take(k).mkString(" ")).toArray
   }
 
+  /** Tokens of a query [[subqueries]] keeps (upstream caps similarly). */
+  final val MaxQueryTokens = 20
+
   /** Contiguous token windows of a query, longest first, with coverage
-    * bitmask. Returns (phrase, mask, startPos). Query capped at 20 tokens
-    * (upstream caps similarly). */
-  def subqueries(query: String, maxLen: Int = 20): Array[(String, Long, Int)] = {
-    val toks = applyTokenRules(tokenize(query)).take(maxLen)
+    * bitmask. Returns (phrase, mask, startPos). Query capped at
+    * [[MaxQueryTokens]] tokens. */
+  def subqueries(query: String): Array[(String, Long, Int)] = {
+    val toks = applyTokenRules(tokenize(query)).take(MaxQueryTokens)
     val nT = toks.length
     val out = new ArrayBuffer[(String, Long, Int)](nT * (nT + 1) / 2)
     var len = nT

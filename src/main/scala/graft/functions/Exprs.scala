@@ -893,7 +893,7 @@ object F {
       .map { case (k, vs) => (k, vs.map(_._2).toArray) }
     c(LangNgramBest(x(text), profiles.map(_._1), packed))
   }
-  def winnowFps(s: Column, k: Int = 8, w: Int = 16): Column =
+  def winnowFps(s: Column, k: Int, w: Int): Column =
     c(WinnowFps(x(s), k, w))
 
   import org.apache.spark.sql.functions._

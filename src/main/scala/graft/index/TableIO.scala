@@ -2,8 +2,13 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.paths.SparkPath
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import scala.jdk.CollectionConverters._
 
 /** Iceberg-emulated table layout (SURVEY.md §7.6): no Iceberg jars ship in
   * this sandbox, so a table = Parquet files + `_manifest.json` snapshot
@@ -31,26 +36,38 @@ object TableIO {
   private def writeWithManifest(df: DataFrame, dataDir: String, manifest: java.nio.file.Path,
                                 head: String, rangeKey: String, sortCols: Seq[String],
                                 numRanges: Int): Unit = {
+    val spark = df.sparkSession
     df.repartitionByRange(numRanges, col(rangeKey))
       .sortWithinPartitions(sortCols.map(col): _*)
       .write.mode("overwrite").parquet(dataDir)
-    val written = df.sparkSession.read.parquet(dataDir)
-    val stats = written
-      .groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("rows"),
-        min(col(rangeKey)).as("lo"), max(col(rangeKey)).as("hi"))
-      .orderBy("lo")
-      .collect()
-    val files = stats.map { r =>
-      s"""{"file": ${q(r.getString(0).replaceFirst("^file:", ""))}, "rows": ${r.getLong(1)}, "lo": ${r.getLong(2)}, "hi": ${r.getLong(3)}}"""
+    // per-file (rows, lo, hi) from the footers' row counts and column
+    // statistics; files with no rows have no key range and are left out
+    val written = footers(spark, dataDir)
+    val stats = written.flatMap { case (file, meta) =>
+      val blocks = meta.getBlocks.asScala.filter(_.getRowCount > 0)
+      def keyStats = blocks.map(_.getColumns.asScala.find(_.getPath.toDotString == rangeKey)
+        .getOrElse(throw new IllegalStateException(s"$file has no column $rangeKey")).getStatistics)
+      if (blocks.isEmpty) None
+      else Some((file.replaceFirst("^file:", ""), blocks.map(_.getRowCount).sum,
+        keyStats.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min,
+        keyStats.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max))
+    }.sortBy(s => (s._3, s._1))
+    val files = stats.map { case (file, rows, lo, hi) =>
+      s"""{"file": ${q(file)}, "rows": $rows, "lo": $lo, "hi": $hi}"""
     }.mkString("[", ", ", "]")
+    // the schema a read infers: the first footer's Spark schema, made
+    // nullable by a user-schema read (which lists the files, no job)
+    val schema = written.headOption
+      .flatMap(f => Option(f._2.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)))
+      .map(js => spark.read.schema(DataType.fromJson(js).asInstanceOf[StructType]).parquet(dataDir).schema)
+      .getOrElse(spark.read.parquet(dataDir).schema)
     Files.writeString(manifest,
       s"""{$head,
-         | "schema": ${q(written.schema.json)},
+         | "schema": ${q(schema.json)},
          | "range_key": ${q(rangeKey)},
          | "sorted_by": ${sortCols.map(q).mkString("[", ", ", "]")},
          | "num_files": ${stats.length},
-         | "total_rows": ${stats.map(_.getLong(1)).sum},
+         | "total_rows": ${stats.map(_._2).sum},
          | "snapshot_ms": ${System.currentTimeMillis()},
          | "files": $files}""".stripMargin)
   }
@@ -104,25 +121,30 @@ object TableIO {
     * reads, NO Spark job: parameters derived from the corpus size (eps
     * sizing, nList sizing) must not pay a full scan pre-pass at 10^12
     * rows. */
-  def rowCount(spark: SparkSession, path: String): Long = {
+  def rowCount(spark: SparkSession, path: String): Long =
     manifestJson(path).flatMap { js =>
       """"total_rows":\s*(\d+)""".r.findFirstMatchIn(js).map(_.group(1).toLong)
-    }.getOrElse {
-      val conf = spark.sessionState.newHadoopConf()
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(conf)
-      val it = fs.listFiles(p, true)
-      var total = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.isFile && f.getPath.getName.endsWith(".parquet")) {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try total += r.getRecordCount finally r.close()
-        }
+    }.getOrElse(footers(spark, path).map(_._2.getBlocks.asScala.map(_.getRowCount).sum).sum)
+
+  /** The key under which Spark writes a parquet file's Spark schema. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** (file, footer) of every parquet file under `path`, in listing order,
+    * the file as `input_file_name()` shows it: O(files) driver-side footer
+    * reads, no Spark job. */
+  private def footers(spark: SparkSession, path: String): Seq[(String, ParquetMetadata)] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new org.apache.hadoop.fs.Path(path)
+    val it = p.getFileSystem(conf).listFiles(p, true)
+    val out = Seq.newBuilder[(String, ParquetMetadata)]
+    while (it.hasNext) {
+      val f = it.next()
+      if (f.isFile && f.getPath.getName.endsWith(".parquet")) {
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try out += (SparkPath.fromPath(f.getPath).urlEncoded -> r.getFooter) finally r.close()
       }
-      total
     }
+    out.result()
   }
 
   // =================================================================

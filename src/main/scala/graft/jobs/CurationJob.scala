@@ -26,11 +26,12 @@ object CurationJob {
   /** The gates, each reduced to "filter the corpus frame". Per-row gates
     * semi-join their own doc_id verdict back (one doc_id-keyed exchange on
     * a flag-sized frame); dedups keep their representative rows; the
-    * decontamination stage drops the eval slice (doc_id % 41 == 3) itself
-    * plus every train doc sharing a shingle with it. */
+    * decontamination stage drops the eval slice (doc_id % EvalMod ==
+    * EvalRes) itself plus every train doc sharing a shingle with it. The
+    * gates read TextOps' constants, so they are `curate`'s. */
   val stages: Seq[Stage] = Seq(
     Stage("quality", d => d.join(
-      TextOps.qualityScore(d).filter(col("quality") >= 0.75)
+      TextOps.qualityScore(d).filter(col("quality") >= TextOps.QualityMin)
         .select(col("doc_id")), "doc_id")),
     Stage("repetition", d => d.join(
       TextOps.qualityRepetition(d).filter(col("keep") === 1)
@@ -43,7 +44,7 @@ object CurationJob {
         .select(col("rep_doc").as("doc_id")), "doc_id")),
     Stage("exact_dedup", d => TextOps.exactReps(d)),
     Stage("decontaminate", d =>
-      d.filter(col("doc_id") % 41L =!= 3L)
+      d.filter(col("doc_id") % TextOps.EvalMod =!= TextOps.EvalRes)
         .join(TextOps.decontaminate(d).select(col("doc_id")), Seq("doc_id"), "left_anti"))
   )
 

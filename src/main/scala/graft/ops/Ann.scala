@@ -32,15 +32,39 @@ object Ann {
     // parquet file = one input split; a real corpus arrives pre-split)
     val e = emb.select(col("vec_id"), quant(col("embedding")).as("q"))
       .repartition(emb.sparkSession.sparkContext.defaultParallelism)
-    val queries = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("q").as("qv"))
-    e.join(broadcast(queries), col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"), dot(col("qv"), col("q")).as("dp"))
+    topK(e.join(broadcast(queryVecs(e, nQueries)), col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id").as("nid"), dot(col("qv"), col("q")).as("dp")), k)
+  }
+
+  /** Per-query top-k of the scored pairs (qid, nid, dp): dp desc, nid asc. */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    scored
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("dp").desc, col("nid").asc)))
       .filter(col("rank") <= k)
       .select(col("qid"), col("nid"), col("dp").cast("double").as("dp"), col("rank"))
-  }
+
+  /** The SQL twin of [[topK]] over the `pairs` CTE: its last CTE and the
+    * final select. */
+  private def topKSql(k: Int): String =
+    s"""ranked AS (
+       |  SELECT qid, nid, dp,
+       |         row_number() OVER (PARTITION BY qid ORDER BY dp DESC, nid ASC) AS rank
+       |  FROM pairs)
+       |SELECT qid, nid, CAST(dp AS DOUBLE) AS dp, rank FROM ranked WHERE rank <= $k""".stripMargin
+
+  /** Exact top-k re-rank of candidate (qid, nid) pairs over the quantized
+    * base: vectors re-attach after the candidate dedup, the query side
+    * broadcast. */
+  private def rerank(base: DataFrame, cands: DataFrame, nQueries: Int, k: Int): DataFrame =
+    topK(cands
+      .join(base.select(col("vec_id").as("nid"), col("q")), "nid")
+      .join(broadcast(queryVecs(base, nQueries)), "qid")
+      .select(col("qid"), col("nid"), dot(col("qv"), col("q")).as("dp")), k)
+
+  /** The query vectors (qid, qv): vec_id < nQueries. */
+  private def queryVecs(base: DataFrame, nQueries: Int): DataFrame =
+    base.filter(col("vec_id") < nQueries).select(col("vec_id").as("qid"), col("q").as("qv"))
 
   def bruteForceTopKSql(nQueries: Int, k: Int): String =
     // NB: x must be widened to DOUBLE before the multiply — DuckDB keeps
@@ -53,11 +77,7 @@ object Ann {
        |pairs AS (
        |  SELECT qs.qid, e.vec_id AS nid, list_inner_product(qs.qv, e.q) AS dp
        |  FROM e, qs WHERE e.vec_id <> qs.qid),
-       |ranked AS (
-       |  SELECT qid, nid, dp,
-       |         row_number() OVER (PARTITION BY qid ORDER BY dp DESC, nid ASC) AS rank
-       |  FROM pairs)
-       |SELECT qid, nid, CAST(dp AS DOUBLE) AS dp, rank FROM ranked WHERE rank <= $k""".stripMargin
+       |${topKSql(k)}""".stripMargin
 
   /** Deterministic pseudo-random hyperplane component h(p, i) in [-1, 1). */
   private val dimLit = 64
@@ -68,15 +88,24 @@ object Ann {
   private def probeMasks(bits: Int, maxFlips: Int): Array[Long] =
     (0L until (1L << bits)).filter(java.lang.Long.bitCount(_) <= maxFlips).toArray
 
+  /** The sign-LSH shape: [[LshTables]] tables of [[LshPlanes]] sign bits,
+    * queries probing every bucket within [[LshFlips]] bit flips (the SQL
+    * twins enumerate exactly that ≤2-flip ball), and the adaptive probe
+    * cut's default occupancy budget. */
+  final val LshTables = 8
+  final val LshPlanes = 16
+  final val LshFlips = 2
+  final val LshBudget = 8L
+
   /** Candidate (qid, nid) pairs from multi-table sign-LSH with multi-probe.
     *
     * Scale shape: each corpus vector lands in ONE bucket per table
-    * (`planesPerTable` = 16 sign bits → 65,536 buckets/table, so a bucket
+    * ([[LshPlanes]] = 16 sign bits → 65,536 buckets/table, so a bucket
     * holds ~n/65k vectors — the self-join is sub-quadratic, unlike few-bit
     * bucketing where every bucket holds n/2^b ≈ n and the "LSH" join is a
     * cartesian product with extra steps). Recall is recovered on the QUERY
     * side only: each query probes the buckets within Hamming distance
-    * `probeFlips` of its own bucket (137 probes/table at 16 bits, 2 flips),
+    * [[LshFlips]] of its own bucket (137 probes/table at 16 bits, 2 flips),
     * so the corpus is never exploded. The join output is the SKINNY id pair
     * (qid, nid) — vectors re-attach after dedup, so duplicate candidates
     * from different tables/probes never carry 64-long arrays through the
@@ -85,27 +114,21 @@ object Ann {
     emb.select(col("vec_id"), quant(col("embedding")).as("q"))
       .repartition(emb.sparkSession.sparkContext.defaultParallelism)
 
-  def lshCandidates(emb: DataFrame, nQueries: Int,
-                    nTables: Int = 8, planesPerTable: Int = 16,
-                    probeFlips: Int = 2): DataFrame =
-    candidatesFromBase(quantBase(emb).persist(), nQueries, nTables,
-      planesPerTable, probeFlips)
+  def lshCandidates(emb: DataFrame, nQueries: Int): DataFrame =
+    candidatesFromBase(quantBase(emb).persist(), nQueries)
 
-  private def candidatesFromBase(base: DataFrame, nQueries: Int,
-                                 nTables: Int, planesPerTable: Int,
-                                 probeFlips: Int): DataFrame = {
-    require(planesPerTable <= 24, "bucket key uses the low 32 bits")
+  private def candidatesFromBase(base: DataFrame, nQueries: Int): DataFrame = {
     import graft.functions.F
-    val masks = probeMasks(planesPerTable, probeFlips)
+    val masks = probeMasks(LshPlanes, LshFlips)
     // corpus side: one (bucket, id) row per table — no vector payload; all
     // table buckets computed by one native expression (F.lshBuckets)
     val corpusBuckets = base
-      .withColumn("bucket", explode(F.lshBuckets(col("q"), nTables, planesPerTable)))
+      .withColumn("bucket", explode(F.lshBuckets(col("q"), LshTables, LshPlanes)))
       .select(col("bucket"), col("vec_id"))
     // query side: probe the Hamming ball around each per-table bucket
     // (XOR with the low probe bits keeps the table tag intact)
     val queryBuckets = base.filter(col("vec_id") < nQueries)
-      .withColumn("b0", explode(F.lshBuckets(col("q"), nTables, planesPerTable)))
+      .withColumn("b0", explode(F.lshBuckets(col("q"), LshTables, LshPlanes)))
       .withColumn("bucket", explode(array(masks.map(m => col("b0").bitwiseXOR(lit(m))): _*)))
       .select(col("bucket"), col("vec_id").as("qid"))
     corpusBuckets.join(queryBuckets, "bucket")
@@ -119,33 +142,29 @@ object Ann {
     * table) once the buckets probed so far already hold `budget` corpus
     * vectors. Dense home buckets (hot clusters) stop at the first probes;
     * sparse ones keep probing the full ball to recover recall. Occupancy is
-    * a corpus aggregate whose size is CAPPED at nTables·2^planesPerTable
+    * a corpus aggregate whose size is CAPPED at LshTables·2^LshPlanes
     * rows (≤524k at the defaults) — a broadcastable dim at any corpus size —
     * and the cut itself is a window over the QUERY-side probe rows only, so
     * the corpus is never exploded or rescanned. Deterministic integer
     * arithmetic end-to-end (driver oracle `ann_lsh_adaptive`). */
   def lshCandidatesAdaptive(emb: DataFrame, nQueries: Int,
-                            nTables: Int = 8, planesPerTable: Int = 16,
-                            probeFlips: Int = 2, budget: Long = 8): DataFrame =
-    candidatesAdaptiveFromBase(quantBase(emb).persist(), nQueries, nTables,
-      planesPerTable, probeFlips, budget)
+                            budget: Long = LshBudget): DataFrame =
+    candidatesAdaptiveFromBase(quantBase(emb).persist(), nQueries, budget)
 
   private def candidatesAdaptiveFromBase(base: DataFrame, nQueries: Int,
-                                         nTables: Int, planesPerTable: Int,
-                                         probeFlips: Int, budget: Long): DataFrame = {
-    require(planesPerTable <= 24, "bucket key uses the low 32 bits")
+                                         budget: Long): DataFrame = {
     import graft.functions.F
-    val masksOrdered = probeMasks(planesPerTable, probeFlips)
+    val masksOrdered = probeMasks(LshPlanes, LshFlips)
       .sortBy(m => (java.lang.Long.bitCount(m), m))
     val corpusBuckets = base
-      .withColumn("bucket", explode(F.lshBuckets(col("q"), nTables, planesPerTable)))
+      .withColumn("bucket", explode(F.lshBuckets(col("q"), LshTables, LshPlanes)))
       .select(col("bucket"), col("vec_id"))
     val occ = corpusBuckets.groupBy(col("bucket")).agg(count(lit(1)).as("occ"))
     val probeStructs = array(masksOrdered.zipWithIndex.map { case (m, i) =>
       struct(lit(i).as("pr"), lit(m).as("mask"))
     }: _*)
     val queryProbes = base.filter(col("vec_id") < nQueries)
-      .withColumn("b0", explode(F.lshBuckets(col("q"), nTables, planesPerTable)))
+      .withColumn("b0", explode(F.lshBuckets(col("q"), LshTables, LshPlanes)))
       .withColumn("p", explode(probeStructs))
       .select(col("vec_id").as("qid"), col("b0"), col("p.pr").as("pr"),
         col("b0").bitwiseXOR(col("p.mask")).as("bucket"))
@@ -166,20 +185,9 @@ object Ann {
 
   /** [[lshTopK]] over the occupancy-cut candidate set. */
   def lshTopKAdaptive(emb: DataFrame, nQueries: Int, k: Int,
-                      nTables: Int = 8, planesPerTable: Int = 16,
-                      probeFlips: Int = 2, budget: Long = 8): DataFrame = {
+                      budget: Long = LshBudget): DataFrame = {
     val base = quantBase(emb).persist()
-    val queries = base.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("q").as("qv"))
-    candidatesAdaptiveFromBase(base, nQueries, nTables, planesPerTable,
-      probeFlips, budget)
-      .join(base.select(col("vec_id").as("nid"), col("q")), "nid")
-      .join(broadcast(queries), "qid")
-      .select(col("qid"), col("nid"), dot(col("qv"), col("q")).as("dp"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dp").desc, col("nid").asc)))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("dp").cast("double").as("dp"), col("rank"))
+    rerank(base, candidatesAdaptiveFromBase(base, nQueries, budget), nQueries, k)
   }
 
   // ---------------------------------------------------------------
@@ -192,11 +200,19 @@ object Ann {
   //
   // Sizing at scale: candidate volume per query is ~ n·nProbe/nList and
   // assignment costs n·nList dots, so nList ≈ sqrt(n·nProbe) balances the
-  // two (10^9 vectors → ~10^4.7 lists, trained centroids). The default
-  // nList=16 is frozen small so the oracle's centroid CTE stays readable —
-  // the plan shape (assign → cell equi-join → windowed top-k) is the same
-  // at any nList.
+  // two (10^9 vectors → ~10^4.7 lists, trained centroids). The oracle's
+  // NList=16 is frozen small so its centroid CTE stays readable — the plan
+  // shape (assign → cell equi-join → windowed top-k) is the same at any
+  // nList.
   // ---------------------------------------------------------------
+
+  /** The oracle queries' list count (the SQL twins' centroid VALUES), the
+    * cells a query probes, the Lloyd rounds of the k-means family and the
+    * embedding-dedup cosine floor. */
+  final val NList = 16
+  final val NProbe = 4
+  final val LloydRounds = 3
+  final val DedupCos = 0.995
 
   /** Frozen integer centroids: component ∈ [-1000, 1000]. */
   def ivfCentroid(c: Int): Array[Long] =
@@ -223,7 +239,7 @@ object Ann {
     * Search: candidates/query ≈ n·nProbe/nList and assignment costs n·nList
     * dots → nList = √(n·nProbe) balances them (both n^1.5 total).
     * Dedup: blocked pairs ≈ n²/nList vs assignment n·nList → nList = √n.
-    * The driver's oracle queries pass nList=16 explicitly (the frozen
+    * The driver's oracle queries pass [[NList]] explicitly (the frozen
     * centroid CTE in the SQL mirror); everything else derives. */
   def derivedNListTopK(n: Long, nProbe: Int): Int =
     math.max(16, math.ceil(math.sqrt(n.toDouble * nProbe)).toInt)
@@ -238,54 +254,54 @@ object Ann {
 
   /** IVF ANN top-k: corpus in its best cell, queries probe nProbe cells.
     * `nList <= 0` (the default) derives √(n·nProbe) from the corpus count. */
-  def ivfTopK(emb: DataFrame, nQueries: Int, k: Int,
-              nList0: Int = 0, nProbe: Int = 4): DataFrame = {
+  def ivfTopK(emb: DataFrame, nQueries: Int, k: Int, nList0: Int = 0): DataFrame = {
     val base = quantBase(emb).persist()
-    val nList = if (nList0 > 0) nList0 else derivedNListTopK(base.count(), nProbe)
-    val ranks = centroidRanks(base, nList).persist()
+    val nList = if (nList0 > 0) nList0 else derivedNListTopK(base.count(), NProbe)
+    ivfSearch(base, centroidRanks(base, nList).persist(), nQueries, k)
+  }
+
+  /** IVF search over per-vector centroid ranks: each corpus vector in its
+    * best cell, each query probing its [[NProbe]] best, exact top-k among
+    * the probed cells' vectors. */
+  private def ivfSearch(base: DataFrame, ranks: DataFrame, nQueries: Int, k: Int): DataFrame = {
     val corpusCells = ranks.filter(col("crn") === 1)
       .select(col("cid"), col("vec_id"), col("q"))
-    val queryCells = ranks.filter(col("vec_id") < nQueries && col("crn") <= nProbe)
+    val queryCells = ranks.filter(col("vec_id") < nQueries && col("crn") <= NProbe)
       .select(col("cid"), col("vec_id").as("qid"))
-    val queries = base.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("q").as("qv"))
-    corpusCells.join(queryCells, "cid")
+    topK(corpusCells.join(queryCells, "cid")
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"), col("q"))
-      .join(broadcast(queries), "qid")
-      .select(col("qid"), col("nid"), dot(col("qv"), col("q")).as("dp"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dp").desc, col("nid").asc)))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("dp").cast("double").as("dp"), col("rank"))
+      .join(broadcast(queryVecs(base, nQueries)), "qid")
+      .select(col("qid"), col("nid"), dot(col("qv"), col("q")).as("dp")), k)
   }
 
   /** Full DuckDB mirror of [[ivfTopK]] (frozen centroids as a VALUES CTE). */
-  def ivfTopKSql(nQueries: Int, k: Int, nList: Int = 16, nProbe: Int = 4): String = {
-    val centRows = (0 until nList).map(c =>
-      s"($c, [${ivfCentroid(c).mkString(", ")}])").mkString(", ")
+  def ivfTopKSql(nQueries: Int, k: Int): String =
     s"""WITH cent(cid, cv) AS (VALUES $centRows),
        |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT)) AS q
        |      FROM embeddings),
-       |ranks AS (
+       |${ivfSearchSql(nQueries, k)}""".stripMargin
+
+  /** The frozen seed centroids as VALUES rows (cid, cv), [[NList]] of them. */
+  private def centRows: String =
+    (0 until NList).map(c => s"($c, [${ivfCentroid(c).mkString(", ")}])").mkString(", ")
+
+  /** The SQL twin of [[ivfSearch]] over the `e` and `cent` CTEs. */
+  private def ivfSearchSql(nQueries: Int, k: Int): String =
+    s"""ranks AS (
        |  SELECT e.vec_id, e.q, c.cid, list_inner_product(e.q, c.cv) AS cdp,
        |         row_number() OVER (PARTITION BY e.vec_id
        |                            ORDER BY list_inner_product(e.q, c.cv) DESC, c.cid ASC) AS crn
        |  FROM e CROSS JOIN cent c),
        |corpus AS (SELECT cid, vec_id, q FROM ranks WHERE crn = 1),
        |probes AS (SELECT cid, vec_id AS qid FROM ranks
-       |           WHERE vec_id < $nQueries AND crn <= $nProbe),
+       |           WHERE vec_id < $nQueries AND crn <= $NProbe),
        |qs AS (SELECT vec_id AS qid, q AS qv FROM e WHERE vec_id < $nQueries),
        |pairs AS (
        |  SELECT p.qid, c.vec_id AS nid, list_inner_product(qs.qv, c.q) AS dp
        |  FROM corpus c JOIN probes p ON p.cid = c.cid AND c.vec_id <> p.qid
        |  JOIN qs ON qs.qid = p.qid),
-       |ranked AS (
-       |  SELECT qid, nid, dp,
-       |         row_number() OVER (PARTITION BY qid ORDER BY dp DESC, nid ASC) AS rank
-       |  FROM pairs)
-       |SELECT qid, nid, CAST(dp AS DOUBLE) AS dp, rank FROM ranked WHERE rank <= $k""".stripMargin
-  }
+       |${topKSql(k)}""".stripMargin
 
   // ---------------------------------------------------------------
   // Trained centroids (k-means-lite): one Lloyd round of spherical k-means
@@ -332,37 +348,18 @@ object Ann {
         Window.partitionBy(col("vec_id")).orderBy(col("cdp").desc, col("cid").asc)))
 
   /** [[ivfTopK]] with one-Lloyd-round trained centroids. `nList <= 0`
-    * derives √(n·nProbe); the driver oracle passes nList=16 (the mirror
+    * derives √(n·nProbe); the driver oracle passes [[NList]] (the mirror
     * reproduces the training round in SQL). */
-  def ivfTopKTrained(emb: DataFrame, nQueries: Int, k: Int,
-                     nList0: Int = 0, nProbe: Int = 4): DataFrame = {
+  def ivfTopKTrained(emb: DataFrame, nQueries: Int, k: Int, nList0: Int = 0): DataFrame = {
     val base = quantBase(emb).persist()
-    val nList = if (nList0 > 0) nList0 else derivedNListTopK(base.count(), nProbe)
-    val cent = trainCentroids(base, nList)
-    val ranks = centroidRanksTrained(base, cent).persist()
-    val corpusCells = ranks.filter(col("crn") === 1)
-      .select(col("cid"), col("vec_id"), col("q"))
-    val queryCells = ranks.filter(col("vec_id") < nQueries && col("crn") <= nProbe)
-      .select(col("cid"), col("vec_id").as("qid"))
-    val queries = base.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("q").as("qv"))
-    corpusCells.join(queryCells, "cid")
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"), col("q"))
-      .join(broadcast(queries), "qid")
-      .select(col("qid"), col("nid"), dot(col("qv"), col("q")).as("dp"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dp").desc, col("nid").asc)))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("dp").cast("double").as("dp"), col("rank"))
+    val nList = if (nList0 > 0) nList0 else derivedNListTopK(base.count(), NProbe)
+    ivfSearch(base, centroidRanksTrained(base, trainCentroids(base, nList)).persist(), nQueries, k)
   }
 
   /** Full DuckDB mirror of [[ivfTopKTrained]]: seed CTE → seed assignment →
     * per-component rounded-mean CTE (same single-division floor(x+0.5)) →
     * re-assignment → probe/top-k, all exact integer dots. */
-  def ivfTopKTrainedSql(nQueries: Int, k: Int, nList: Int = 16, nProbe: Int = 4): String = {
-    val centRows = (0 until nList).map(c =>
-      s"($c, [${ivfCentroid(c).mkString(", ")}])").mkString(", ")
+  def ivfTopKTrainedSql(nQueries: Int, k: Int): String =
     s"""WITH seed(cid, cv) AS (VALUES $centRows),
        |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT)) AS q
        |      FROM embeddings),
@@ -381,25 +378,7 @@ object Ann {
        |  FROM comp GROUP BY cid),
        |cent AS (SELECT seed.cid, COALESCE(m.mv, seed.cv) AS cv
        |         FROM seed LEFT JOIN means m ON m.cid = seed.cid),
-       |ranks AS (
-       |  SELECT e.vec_id, e.q, c.cid, list_inner_product(e.q, c.cv) AS cdp,
-       |         row_number() OVER (PARTITION BY e.vec_id
-       |                            ORDER BY list_inner_product(e.q, c.cv) DESC, c.cid ASC) AS crn
-       |  FROM e CROSS JOIN cent c),
-       |corpus AS (SELECT cid, vec_id, q FROM ranks WHERE crn = 1),
-       |probes AS (SELECT cid, vec_id AS qid FROM ranks
-       |           WHERE vec_id < $nQueries AND crn <= $nProbe),
-       |qs AS (SELECT vec_id AS qid, q AS qv FROM e WHERE vec_id < $nQueries),
-       |pairs AS (
-       |  SELECT p.qid, c.vec_id AS nid, list_inner_product(qs.qv, c.q) AS dp
-       |  FROM corpus c JOIN probes p ON p.cid = c.cid AND c.vec_id <> p.qid
-       |  JOIN qs ON qs.qid = p.qid),
-       |ranked AS (
-       |  SELECT qid, nid, dp,
-       |         row_number() OVER (PARTITION BY qid ORDER BY dp DESC, nid ASC) AS rank
-       |  FROM pairs)
-       |SELECT qid, nid, CAST(dp AS DOUBLE) AS dp, rank FROM ranked WHERE rank <= $k""".stripMargin
-  }
+       |${ivfSearchSql(nQueries, k)}""".stripMargin
 
   /** Deterministic duplicate planting for the embedding-dedup op: every
     * 10th vector cloned under id+10^7 with the IDENTICAL float payload
@@ -410,20 +389,19 @@ object Ann {
       .withColumn("vec_id", col("vec_id") + 10000000L))
 
   /** Embedding-cosine near-dup pairs, IVF-cell blocked: pairs sharing a
-    * coarse cell with cosine >= threshold. The threshold test is done in
+    * coarse cell with cosine >= [[DedupCos]]. The threshold test is done in
     * exact integer arithmetic (dp > 0 AND dp² >= t²·‖a‖²·‖b‖²) so no FP
     * accumulation-order issue exists; the reported cosine divides by IEEE
     * sqrt, identical on both sides. Cell blocking makes the self-join
     * ~n²/nList instead of n² — and unlike sign-LSH the assignment is
     * SQL-expressible, so this dedup variant carries a FULL oracle. */
-  def dedupEmbed(emb: DataFrame, threshold: Double = 0.995,
-                 nList0: Int = 0): DataFrame = {
+  def dedupEmbed(emb: DataFrame, nList0: Int = 0): DataFrame = {
     val base = quantBase(withDupCopies(emb)).persist()
     val nList = if (nList0 > 0) nList0 else derivedNListDedup(base.count())
     val cells = centroidRanks(base, nList).filter(col("crn") === 1)
       .select(col("cid"), col("vec_id"), col("q"),
         dot(col("q"), col("q")).as("nq"))
-    val t2 = threshold * threshold
+    val t2 = DedupCos * DedupCos
     cells.select(col("cid"), col("vec_id").as("a"), col("q").as("qa"), col("nq").as("na"))
       .join(cells.select(col("cid"), col("vec_id").as("b"), col("q").as("qb"), col("nq").as("nb")),
         "cid")
@@ -437,10 +415,8 @@ object Ann {
   }
 
   /** Full DuckDB mirror of [[dedupEmbed]] ∘ [[withDupCopies]]. */
-  def dedupEmbedSql(threshold: Double = 0.995, nList: Int = 16): String = {
-    val centRows = (0 until nList).map(c =>
-      s"($c, [${ivfCentroid(c).mkString(", ")}])").mkString(", ")
-    val t2 = threshold * threshold
+  def dedupEmbedSql: String = {
+    val t2 = DedupCos * DedupCos
     s"""WITH cent(cid, cv) AS (VALUES $centRows),
        |aug AS (SELECT vec_id, embedding FROM embeddings
        |        UNION ALL
@@ -505,7 +481,15 @@ object Ann {
       .select(col("cid"), coalesce(col("mv"), col("cv")).as("cv"))
   }
 
-  /** `rounds`-iteration Lloyd spherical k-means from the frozen seeds;
+  /** The centroids after [[LloydRounds]] Lloyd rounds over `base` from the
+    * frozen seeds; `nList0 <= 0` derives √n lists. */
+  private def lloyd(base: DataFrame, nList0: Int): DataFrame = {
+    val nList = if (nList0 > 0) nList0 else derivedNListDedup(base.count())
+    (1 to LloydRounds).foldLeft(seedFrame(base.sparkSession, nList))(
+      (cent, _) => lloydRound(base, cent).localCheckpoint())
+  }
+
+  /** [[LloydRounds]]-iteration Lloyd spherical k-means from the frozen seeds;
     * returns the final (vec_id, cid, csize) assignment.
     *
     * Scale shape: each round costs one broadcast cross-join against the
@@ -519,13 +503,9 @@ object Ann {
     * combined groupBy + broadcast join-back, NOT a cid window — cluster
     * populations are the canonical skewed key (one hot cluster would
     * funnel its full membership through a single window partition). */
-  def kmeansAssign(emb: DataFrame, rounds: Int = 3, nList0: Int = 0): DataFrame = {
+  def kmeansAssign(emb: DataFrame, nList0: Int = 0): DataFrame = {
     val base = quantBase(emb).persist()
-    val nList = if (nList0 > 0) nList0 else derivedNListDedup(base.count())
-    var cent = seedFrame(emb.sparkSession, nList)
-    for (_ <- 1 to rounds)
-      cent = lloydRound(base, cent).localCheckpoint()
-    val assign = centroidRanksTrained(base, cent).filter(col("crn") === 1)
+    val assign = centroidRanksTrained(base, lloyd(base, nList0)).filter(col("crn") === 1)
       .select(col("vec_id"), col("cid"))
       .persist()
     val sizes = assign.groupBy(col("cid")).agg(count(lit(1)).as("csize"))
@@ -533,10 +513,12 @@ object Ann {
       .select(col("vec_id"), col("cid"), col("csize"))
   }
 
+  final val ProtoKeep = 10
+
   /** SSL-prototypes data pruning (Sorscher et al. 2022, "Beyond neural
     * scaling laws" — public): rank every vector by PROTOTYPICALITY —
     * cosine to its own trained-cluster centroid — and keep the
-    * `keepPerCluster` LEAST prototypical (hardest) examples per cluster,
+    * [[ProtoKeep]] LEAST prototypical (hardest) examples per cluster,
     * the abundant-data pruning rule of the paper. Training and assignment
     * reuse the Lloyd machinery ([[kmeansAssign]]). The ranking key is
     * dot(q, centroid) / sqrt(dot(q, q)) — |centroid| is CONSTANT within a
@@ -547,54 +529,46 @@ object Ann {
     * broadcast of ≤nList centroids, per-row dots, and the per-cluster
     * top-m plans as WindowGroupLimit — no self-join at all (pruning is
     * embarrassingly parallel once assignment exists). */
-  def protoPrune(emb: DataFrame, keepPerCluster: Int = 10,
-                 rounds: Int = 3, nList0: Int = 0): DataFrame = {
+  def protoPrune(emb: DataFrame, nList0: Int = 0): DataFrame = {
     val base = quantBase(emb).persist()
-    val nList = if (nList0 > 0) nList0 else derivedNListDedup(base.count())
-    var cent = seedFrame(emb.sparkSession, nList)
-    for (_ <- 1 to rounds)
-      cent = lloydRound(base, cent).localCheckpoint()
-    centroidRanksTrained(base, cent).filter(col("crn") === 1)
+    centroidRanksTrained(base, lloyd(base, nList0)).filter(col("crn") === 1)
       .withColumn("qq", dot(col("q"), col("q")))
       .withColumn("key",
         col("cdp").cast("double") / sqrt(col("qq").cast("double")))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("cid")).orderBy(col("key").asc, col("vec_id").asc)))
-      .filter(col("rn") <= keepPerCluster)
+      .filter(col("rn") <= ProtoKeep)
       .select(col("vec_id"), col("cid"), col("rn").cast("long").as("rn"))
   }
 
   /** Full DuckDB mirror of [[protoPrune]] (training replayed in SQL; the
     * ranking key written token-identically). */
-  def protoPruneSql(keepPerCluster: Int = 10, rounds: Int = 3,
-                    nList: Int = 16): String =
-    s"""WITH ${kmeansCtes(rounds, nList, "embeddings")},
+  def protoPruneSql: String =
+    s"""WITH ${kmeansCtes("embeddings")},
        |scored AS (
        |  SELECT a.vec_id, a.cid,
        |         CAST(list_inner_product(a.q, c.cv) AS DOUBLE) /
        |           sqrt(CAST(list_inner_product(a.q, a.q) AS DOUBLE)) AS key
-       |  FROM assign a JOIN cent$rounds c ON c.cid = a.cid),
+       |  FROM assign a JOIN cent$LloydRounds c ON c.cid = a.cid),
        |ranked AS (
        |  SELECT vec_id, cid,
        |         row_number() OVER (PARTITION BY cid ORDER BY key ASC, vec_id) AS rn
        |  FROM scored)
        |SELECT vec_id, cid, CAST(rn AS BIGINT) AS rn
-       |FROM ranked WHERE rn <= $keepPerCluster""".stripMargin
+       |FROM ranked WHERE rn <= $ProtoKeep""".stripMargin
 
   /** The k-means CTE chain shared by [[kmeansAssignSql]] and
-    * [[semanticDedupSql]]: seeds → `rounds`× (rank/comp/means/cent) →
+    * [[semanticDedupSql]]: seeds → [[LloydRounds]]× (rank/comp/means/cent) →
     * `assign`(vec_id, cid). Each centN is MATERIALIZED — it is referenced
     * twice (next round's rank + its own empty-cluster join) and DuckDB
     * re-inlines plain CTEs once per reference, which would re-run the
     * whole training chain per round (CLAUDE.md invariant). */
-  private def kmeansCtes(rounds: Int, nList: Int, srcCte: String): String = {
-    val centRows = (0 until nList).map(c =>
-      s"($c, [${ivfCentroid(c).mkString(", ")}])").mkString(", ")
+  private def kmeansCtes(srcCte: String): String = {
     val sb = new StringBuilder
     sb.append(s"cent0(cid, cv) AS (VALUES $centRows),\n")
     sb.append(s"""e AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT)) AS q
                  |      FROM $srcCte)""".stripMargin)
-    for (r <- 1 to rounds) {
+    for (r <- 1 to LloydRounds) {
       val p = s"cent${r - 1}"
       sb.append(s""",
                    |rank$r AS (
@@ -619,21 +593,21 @@ object Ann {
                  |  SELECT e.vec_id, e.q, c.cid,
                  |         row_number() OVER (PARTITION BY e.vec_id
                  |                            ORDER BY list_inner_product(e.q, c.cv) DESC, c.cid ASC) AS crn
-                 |  FROM e CROSS JOIN cent$rounds c),
+                 |  FROM e CROSS JOIN cent$LloydRounds c),
                  |assign AS MATERIALIZED (SELECT vec_id, cid, q FROM frank WHERE crn = 1)""".stripMargin)
     sb.toString
   }
 
   /** Full DuckDB mirror of [[kmeansAssign]] (training replayed in SQL). */
-  def kmeansAssignSql(rounds: Int = 3, nList: Int = 16): String =
-    s"""WITH ${kmeansCtes(rounds, nList, "embeddings")},
+  def kmeansAssignSql: String =
+    s"""WITH ${kmeansCtes("embeddings")},
        |sizes AS (SELECT cid, count(*) AS csize FROM assign GROUP BY cid)
        |SELECT a.vec_id, a.cid, s.csize
        |FROM assign a JOIN sizes s ON s.cid = a.cid""".stripMargin
 
   /** SemDeDup: k-means-trained clusters as the blocking structure, then
     * drop every vector that has a LOWER-id in-cluster neighbor with cosine
-    * ≥ `threshold` (exact integer test, see [[dedupEmbed]]); returns the
+    * ≥ [[DedupCos]] (exact integer test, see [[dedupEmbed]]); returns the
     * surviving (vec_id, cid). Runs over [[withDupCopies]] so planted
     * near-dup pairs exist by construction.
     *
@@ -641,17 +615,12 @@ object Ann {
     * intra-cluster self-equi-join (~n²/nList pairs with the derived
     * nList = √n) followed by a left-anti join — no window over the skewed
     * cluster key, no vector payload on the anti-join side. */
-  def semanticDedup(emb: DataFrame, threshold: Double = 0.995,
-                    rounds: Int = 3, nList0: Int = 0): DataFrame = {
+  def semanticDedup(emb: DataFrame, nList0: Int = 0): DataFrame = {
     val base = quantBase(withDupCopies(emb)).persist()
-    val nList = if (nList0 > 0) nList0 else derivedNListDedup(base.count())
-    var cent = seedFrame(emb.sparkSession, nList)
-    for (_ <- 1 to rounds)
-      cent = lloydRound(base, cent).localCheckpoint()
-    val cells = centroidRanksTrained(base, cent).filter(col("crn") === 1)
+    val cells = centroidRanksTrained(base, lloyd(base, nList0)).filter(col("crn") === 1)
       .select(col("cid"), col("vec_id"), col("q"), dot(col("q"), col("q")).as("nq"))
       .persist()
-    val t2 = threshold * threshold
+    val t2 = DedupCos * DedupCos
     // both pair sides and the dup set are corpus-sized — pin shuffle-hash
     // (Catalyst misestimates under cached relations; CLAUDE.md invariant)
     val dups = cells.select(col("cid"), col("vec_id").as("a"), col("q").as("qa"), col("nq").as("na"))
@@ -668,13 +637,12 @@ object Ann {
   }
 
   /** Full DuckDB mirror of [[semanticDedup]] ∘ [[withDupCopies]]. */
-  def semanticDedupSql(threshold: Double = 0.995,
-                       rounds: Int = 3, nList: Int = 16): String = {
-    val t2 = threshold * threshold
+  def semanticDedupSql: String = {
+    val t2 = DedupCos * DedupCos
     s"""WITH aug AS (SELECT vec_id, embedding FROM embeddings
        |             UNION ALL
        |             SELECT vec_id + 10000000, embedding FROM embeddings WHERE vec_id % 10 = 0),
-       |${kmeansCtes(rounds, nList, "aug")},
+       |${kmeansCtes("aug")},
        |cells AS MATERIALIZED (
        |  SELECT cid, vec_id, q, list_inner_product(q, q) AS nq FROM assign),
        |dups AS (
@@ -687,19 +655,18 @@ object Ann {
        |WHERE c.vec_id NOT IN (SELECT vec_id FROM dups)""".stripMargin
   }
 
-  /** FULL DuckDB mirror of [[lshTopK]] — possible because the hyperplane
-    * sign test is exact integer arithmetic (see Exprs.LshBuckets) and mix64
-    * is SQL-expressible via HUGEINT limbs ([[graft.queries.SqlHash]]):
-    * planes are derived IN SQL as mix64(p·131+i) % 10^6, bucket bits by
-    * integer dot sign, multi-probe by XOR over the ≤2-flip Hamming ball,
-    * then the same skinny candidate dedup + exact top-k re-rank. */
-  def lshTopKSql(nQueries: Int, k: Int,
-                 nTables: Int = 8, planesPerTable: Int = 16): String = {
+  /** The bit values 2^b, b < [[LshPlanes]], as a BIGINT list literal. */
+  private def bitsSql: String =
+    (0 until LshPlanes).map(b => s"CAST(${1L << b} AS BIGINT)").mkString("[", ", ", "]")
+
+  /** The SQL twin of the sign-LSH bucketing: the planes derived in SQL, the
+    * quantized vectors `e`, each vector's per-table sign bits `cb`
+    * (vec_id, t, bits) and bucket keys `ck`. */
+  private def lshBucketCtes: String = {
     import graft.queries.SqlHash._
-    val np = nTables * planesPerTable
-    val p16 = (0 until planesPerTable)
-      .map(b => s"CAST(${1L << b} AS BIGINT)").mkString("[", ", ", "]")
-    s"""WITH pidx AS (
+    val np = LshTables * LshPlanes
+    val p16 = bitsSql
+    s"""pidx AS (
        |  SELECT p.p, i.i, CAST(p.p * 131 + i.i AS HUGEINT) AS z
        |  FROM (SELECT unnest(generate_series(0, ${np - 1})) AS p) p,
        |       (SELECT unnest(generate_series(0, 63)) AS i) i),
@@ -713,27 +680,39 @@ object Ann {
        |         list_sum(list_transform(generate_series(1, 64), i -> pl.mv[i] * e.q[i])) AS dot
        |  FROM e, pl),
        |cb AS (
-       |  SELECT vec_id, p // $planesPerTable AS t,
-       |         CAST(sum(CASE WHEN dot >= 0 THEN $p16[(p % $planesPerTable) + 1]
+       |  SELECT vec_id, p // $LshPlanes AS t,
+       |         CAST(sum(CASE WHEN dot >= 0 THEN $p16[(p % $LshPlanes) + 1]
        |                       ELSE 0 END) AS BIGINT) AS bits
        |  FROM dots GROUP BY 1, 2),
-       |ck AS (SELECT vec_id, bits + t * 4294967296 AS bucket FROM cb),
-       |mb AS (SELECT unnest(generate_series(0, ${planesPerTable - 1})) AS b),
+       |ck AS (SELECT vec_id, bits + t * 4294967296 AS bucket FROM cb)""".stripMargin
+  }
+
+  /** The candidate pairs `cand` of the query buckets `qk` in `ck`, exactly
+    * re-ranked: the SQL twin of [[rerank]]. */
+  private def lshRerankSql(k: Int): String =
+    s"""cand AS (SELECT DISTINCT q.qid, c.vec_id AS nid
+       |         FROM qk q JOIN ck c USING (bucket) WHERE c.vec_id <> q.qid),
+       |pairs AS (SELECT cand.qid, cand.nid, list_inner_product(a.q, b.q) AS dp
+       |          FROM cand JOIN e a ON a.vec_id = cand.qid
+       |          JOIN e b ON b.vec_id = cand.nid),
+       |${topKSql(k)}""".stripMargin
+
+  /** FULL DuckDB mirror of [[lshTopK]] — possible because the hyperplane
+    * sign test is exact integer arithmetic (see Exprs.LshBuckets) and mix64
+    * is SQL-expressible via HUGEINT limbs ([[graft.queries.SqlHash]]):
+    * planes are derived IN SQL as mix64(p·131+i) % 10^6, bucket bits by
+    * integer dot sign, multi-probe by XOR over the ≤2-flip Hamming ball,
+    * then the same skinny candidate dedup + exact top-k re-rank. */
+  def lshTopKSql(nQueries: Int, k: Int): String = {
+    val p16 = bitsSql
+    s"""WITH $lshBucketCtes,
+       |mb AS (SELECT unnest(generate_series(0, ${LshPlanes - 1})) AS b),
        |masks AS (SELECT 0 AS mask
        |          UNION ALL SELECT $p16[b + 1] FROM mb
        |          UNION ALL SELECT $p16[a.b + 1] + $p16[c.b + 1] FROM mb a, mb c WHERE a.b < c.b),
        |qk AS (SELECT cb.vec_id AS qid, xor(cb.bits, m.mask) + cb.t * 4294967296 AS bucket
        |       FROM cb, masks m WHERE cb.vec_id < $nQueries),
-       |cand AS (SELECT DISTINCT q.qid, c.vec_id AS nid
-       |         FROM qk q JOIN ck c USING (bucket) WHERE c.vec_id <> q.qid),
-       |pairs AS (SELECT cand.qid, cand.nid, list_inner_product(a.q, b.q) AS dp
-       |          FROM cand JOIN e a ON a.vec_id = cand.qid
-       |          JOIN e b ON b.vec_id = cand.nid),
-       |ranked AS (
-       |  SELECT qid, nid, dp,
-       |         row_number() OVER (PARTITION BY qid ORDER BY dp DESC, nid ASC) AS rank
-       |  FROM pairs)
-       |SELECT qid, nid, CAST(dp AS DOUBLE) AS dp, rank FROM ranked WHERE rank <= $k""".stripMargin
+       |${lshRerankSql(k)}""".stripMargin
   }
 
   /** Full DuckDB mirror of [[lshTopKAdaptive]]: same plane/bucket CTEs as
@@ -741,34 +720,11 @@ object Ann {
     * probe-rank window with the running-occupancy cut — all exact integer
     * arithmetic, so the adaptive probe set is reproduced decision-for-
     * decision. */
-  def lshTopKAdaptiveSql(nQueries: Int, k: Int,
-                         nTables: Int = 8, planesPerTable: Int = 16,
-                         budget: Long = 8): String = {
-    import graft.queries.SqlHash._
-    val np = nTables * planesPerTable
-    val p16 = (0 until planesPerTable)
-      .map(b => s"CAST(${1L << b} AS BIGINT)").mkString("[", ", ", "]")
-    s"""WITH pidx AS (
-       |  SELECT p.p, i.i, CAST(p.p * 131 + i.i AS HUGEINT) AS z
-       |  FROM (SELECT unnest(generate_series(0, ${np - 1})) AS p) p,
-       |       (SELECT unnest(generate_series(0, 63)) AS i) i),
-       |${mix64Ctes("pidx", "p, i", "pmix")},
-       |pl AS (SELECT p, list(CAST(${toSigned("z")} % 1000000 AS BIGINT) ORDER BY i) AS mv
-       |       FROM pmix GROUP BY p),
-       |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT)) AS q
-       |      FROM embeddings),
-       |dots AS (
-       |  SELECT e.vec_id, pl.p,
-       |         list_sum(list_transform(generate_series(1, 64), i -> pl.mv[i] * e.q[i])) AS dot
-       |  FROM e, pl),
-       |cb AS (
-       |  SELECT vec_id, p // $planesPerTable AS t,
-       |         CAST(sum(CASE WHEN dot >= 0 THEN $p16[(p % $planesPerTable) + 1]
-       |                       ELSE 0 END) AS BIGINT) AS bits
-       |  FROM dots GROUP BY 1, 2),
-       |ck AS (SELECT vec_id, bits + t * 4294967296 AS bucket FROM cb),
+  def lshTopKAdaptiveSql(nQueries: Int, k: Int): String = {
+    val p16 = bitsSql
+    s"""WITH $lshBucketCtes,
        |occ AS (SELECT bucket, count(*) AS occ FROM ck GROUP BY 1),
-       |mb AS (SELECT unnest(generate_series(0, ${planesPerTable - 1})) AS b),
+       |mb AS (SELECT unnest(generate_series(0, ${LshPlanes - 1})) AS b),
        |masksf AS (SELECT 0 AS flips, 0 AS mask
        |           UNION ALL SELECT 1, $p16[b + 1] FROM mb
        |           UNION ALL SELECT 2, $p16[a.b + 1] + $p16[c.b + 1] FROM mb a, mb c WHERE a.b < c.b),
@@ -782,37 +738,17 @@ object Ann {
        |qk AS (SELECT qid, bucket FROM (
        |         SELECT *, COALESCE(sum(occ) OVER (PARTITION BY qid, t ORDER BY pr
        |                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-       |         FROM qpo) WHERE cum < $budget),
-       |cand AS (SELECT DISTINCT q.qid, c.vec_id AS nid
-       |         FROM qk q JOIN ck c USING (bucket) WHERE c.vec_id <> q.qid),
-       |pairs AS (SELECT cand.qid, cand.nid, list_inner_product(a.q, b.q) AS dp
-       |          FROM cand JOIN e a ON a.vec_id = cand.qid
-       |          JOIN e b ON b.vec_id = cand.nid),
-       |ranked AS (
-       |  SELECT qid, nid, dp,
-       |         row_number() OVER (PARTITION BY qid ORDER BY dp DESC, nid ASC) AS rank
-       |  FROM pairs)
-       |SELECT qid, nid, CAST(dp AS DOUBLE) AS dp, rank FROM ranked WHERE rank <= $k""".stripMargin
+       |         FROM qpo) WHERE cum < $LshBudget),
+       |${lshRerankSql(k)}""".stripMargin
   }
 
   /** Multi-table multi-probe LSH ANN: candidates from [[lshCandidates]],
     * exact int-quantized top-k among them. */
-  def lshTopK(emb: DataFrame, nQueries: Int, k: Int,
-              nTables: Int = 8, planesPerTable: Int = 16,
-              probeFlips: Int = 2): DataFrame = {
+  def lshTopK(emb: DataFrame, nQueries: Int, k: Int): DataFrame = {
     // the quantized sketch table feeds the bucket build, the candidate
     // re-attach and the query side — one materialization, three consumers
     val base = quantBase(emb).persist()
-    val queries = base.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("q").as("qv"))
-    candidatesFromBase(base, nQueries, nTables, planesPerTable, probeFlips)
-      .join(base.select(col("vec_id").as("nid"), col("q")), "nid")
-      .join(broadcast(queries), "qid")
-      .select(col("qid"), col("nid"), dot(col("qv"), col("q")).as("dp"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dp").desc, col("nid").asc)))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("dp").cast("double").as("dp"), col("rank"))
+    rerank(base, candidatesFromBase(base, nQueries), nQueries, k)
   }
 
   // ---------------------------------------------------------------

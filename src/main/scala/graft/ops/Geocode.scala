@@ -370,8 +370,7 @@ object Geocode {
     *
     * The pool side is per-doc data (grows with the corpus) — shuffle_hash
     * hinted, never broadcast, like every per-doc join side in this engine. */
-  def coalesceN(m: DataFrame, levels: Seq[IndexLevel] = DefaultLevels,
-                cap: Int = StackRegionCap): DataFrame = {
+  def coalesceN(m: DataFrame, levels: Seq[IndexLevel] = DefaultLevels): DataFrame = {
     require(levels.nonEmpty &&
       levels.map(_.zoom).sliding(2).forall(s => s.size < 2 || s(0) < s(1)),
       "levels must be ordered coarse→fine with strictly increasing zooms")
@@ -399,7 +398,7 @@ object Geocode {
               struct(lit(z).as("az"),
                 F.cellAt(lit(z), col("glon"), col("glat")).as("acell"))): _*)))
             // doc_id-only shuffle key + residual zoom/cell predicates: the
-            // probe scans the doc's capped chain pool (≤ cap·levels rows);
+            // probe scans the doc's capped chain pool (≤ StackRegionCap·levels rows);
             // see [[stackAndUnion]] for the exchange-reuse rationale
             .join(poolSide.hint("shuffle_hash"),
               col("doc_id") === col("p_doc_id") &&
@@ -440,7 +439,7 @@ object Geocode {
       val capped = withW
         .withColumn("rcap", row_number().over(
           Window.partitionBy(col("doc_id")).orderBy(col("wc").desc, col("gid").asc)))
-        .filter(col("rcap") <= cap)
+        .filter(col("rcap") <= StackRegionCap)
         .drop("rcap")
       pool = Some(pool.map(_.unionByName(capped)).getOrElse(capped))
       out = Some(out.map(_.unionByName(withW)).getOrElse(withW))
@@ -451,12 +450,15 @@ object Geocode {
       col("score"), col("glon"), col("glat"), col("qlon"), col("qlat"))
   }
 
+  /** The forward paths' default result count per doc (carmen's limit). */
+  final val RankK = 5
+
   /** H5/H6 + F2/F3 (+E4): proximity-decayed score and per-doc top-k ranking.
     * With `dedupe` (carmen's verifymatch dedupe), candidates that resolve to
     * the same place — same normalized name AND same index cell — collapse to
     * the best-scoring one (ties to the lowest feature id) before the limit,
     * so overlapping indexes can't fill the top-k with one place. */
-  def rank(cands: DataFrame, k: Int = 5, dedupe: Boolean = false,
+  def rank(cands: DataFrame, k: Int = RankK, dedupe: Boolean = false,
            extraCols: Seq[String] = Nil): DataFrame = {
     val scored = cands
       .withColumn("dist", F.haversineKm(col("qlon"), col("qlat"), col("glon"), col("glat")))
@@ -522,12 +524,12 @@ object Geocode {
     * idf sum — per doc, per name, per covered-union — is a map-stage binary
     * search, NOT an explode ⋈ freq ⋈ re-group (which cost two shuffles and
     * a per-doc window; measured 4.6 s → the join-free form at sf0.1). */
-  def forwardIdf(docs: DataFrame, gaz: DataFrame, k: Int = 5,
+  def forwardIdf(docs: DataFrame, gaz: DataFrame,
                  dictCeiling: Long = BroadcastDictCeiling): DataFrame = {
     import graft.index.TermStats
     val idf = termIdfQ(docs)
     if (memoCount(idf) > dictCeiling)
-      return forwardIdfJoin(docs, gaz, idf.persist(), k, dictCeiling)
+      return forwardIdfJoin(docs, gaz, idf.persist(), dictCeiling)
     val bc = docs.sparkSession.sparkContext.broadcast(idfDict(idf))
     val docsQ = docs.withColumn("doc_q",
       TermStats.termWeightSum(array_distinct(F.tokenize(col("text"))), bc))
@@ -540,7 +542,7 @@ object Geocode {
         TermStats.termWeightSum(col("utoks"), bc).cast("double") /
           col("doc_q").cast("double"))
       .drop("utoks", "doc_q")
-    rank(withRelev, k)
+    rank(withRelev)
   }
 
   /** The place/region stack shared by both IDF paths: input m carries
@@ -589,7 +591,7 @@ object Geocode {
     * sums via explode ⋈ idf ⋈ re-group (the shape the DuckDB oracle mirrors
     * directly). ~2 extra shuffles; row-identical (FallbackSpec). */
   private def forwardIdfJoin(docs: DataFrame, gaz: DataFrame, idf: DataFrame,
-                             k: Int, dictCeiling: Long): DataFrame = {
+                             dictCeiling: Long): DataFrame = {
     val docIdf = docs
       .select(col("doc_id").as("d_id"), explode(array_distinct(F.tokenize(col("text")))).as("term"))
       .join(idf, "term")
@@ -611,7 +613,7 @@ object Geocode {
         col("doc_id") === col("u_doc") && col("feature_id") === col("u_fid"))
       .withColumn("relev", col("u_q").cast("double") / col("doc_q").cast("double"))
       .drop("utoks", "doc_q", "u_doc", "u_fid", "u_q")
-    rank(withRelev, k)
+    rank(withRelev)
   }
 
   /** Full forward geocode (the flagship / headline benchmark pipeline):
@@ -635,7 +637,7 @@ object Geocode {
     * Over the ceiling the dictionary never reaches the driver:
     * [[forwardStaged]] matches by join and runs the same kernel after one
     * doc_id exchange. */
-  def forward(docs: DataFrame, gaz: DataFrame, k: Int = 5,
+  def forward(docs: DataFrame, gaz: DataFrame, k: Int = RankK,
               dedupe: Boolean = false): DataFrame = {
     val n = memoCount(gaz)
     if (n > BroadcastGazCeiling) return forwardStaged(docs, gaz, k, dedupe)
@@ -691,7 +693,7 @@ object Geocode {
     * never matches), so hash-collision ghosts can never crowd real
     * candidates out of the cap. */
   def forwardIndexedFat(docs: DataFrame, fatGrid: DataFrame,
-                        k: Int = 5, dedupe: Boolean = false): DataFrame =
+                        k: Int = RankK, dedupe: Boolean = false): DataFrame =
     forwardIndexedFatWith(docs, fatGrid, k, dedupe, BroadcastDictCeiling, BroadcastGazCeiling)
 
   /** [[forwardIndexedFat]] with its ceilings as parameters. The
@@ -734,16 +736,14 @@ object Geocode {
     * row-identical under the usual [[GridStackCap]] condition and share one
     * oracle. The verified frame is persisted: coalesceN reads it once per
     * level. */
-  def forwardIndexedMultiFat(docs: DataFrame, fatGrid: DataFrame,
-                             levels: Seq[IndexLevel] = DefaultLevels,
-                             k: Int = 5): DataFrame = {
+  def forwardIndexedMultiFat(docs: DataFrame, fatGrid: DataFrame): DataFrame = {
     val verified = gridPrune(fatGridMatch(docs, fatGrid, BroadcastDictCeiling))
       .select(col("doc_id"), col("qlon"), col("qlat"),
         col("feature_id").as("gid"), col("name"), col("typ"), col("score"),
         col("glon"), col("glat"),
         col("pos"), size(split(col("name"), " ")).as("plen"))
       .persist()
-    rank(coalesceN(verified, levels), k, extraCols = Seq("chain"))
+    rank(coalesceN(verified), extraCols = Seq("chain"))
   }
 
   /** F2 grid-stage prune: per (doc, phrase, typ) keep the [[GridStackCap]]
@@ -960,8 +960,10 @@ object Geocode {
             round(col("k.dist"), 3).as("dist_km"), col("k.radius").as("radius"))
     }
 
-  /** The kNN radius ladder [[knnExpanding]] and `Geocoder.reverse` use. */
+  /** The kNN radius ladder [[knnExpanding]] and `Geocoder.reverse` use,
+    * and `Geocoder.reverse`'s default kNN zoom. */
   final val KnnRadii = Seq(2, 4, 8)
+  final val KnnZ = 8
 
   /** The `knn_rings` kernel over the point (elon, elat) and its cell at
     * zoom z: `[struct(radius, feature_id, dist)]` over the memoized

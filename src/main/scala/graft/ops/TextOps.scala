@@ -13,6 +13,23 @@ import graft.functions.F
   */
 object TextOps {
 
+  // The operators' frozen values (SURVEY.md §2, H6): the oracle checks
+  // them, so each is one named constant that the Spark operator and its
+  // SQL twin both read — never a parameter.
+
+  /** The held-out eval slice, doc_id % EvalMod == EvalRes: what
+    * [[decontaminate]] scrubs against, [[dsirSelect]]'s target and
+    * [[curate]]'s `is_eval`. */
+  final val EvalMod = 41L
+  final val EvalRes = 3L
+  /** Token n-gram length of the eval-overlap shingles. */
+  final val ShingleN = 5
+  /** Bucket cap of the near-dup band and fingerprint joins: a bucket of k
+    * docs yields k²/2 pairs, so a larger one is dropped. */
+  final val MaxBucket = 1000
+  /** Jaccard floor of the near-dup pairs (MinHash estimate and exact). */
+  final val JaccardMin = 0.5
+
   /** Exact dedup: keep the lowest doc_id per identical text. The shuffle /
     * window key is sha2(text) — 32 bytes — NOT the document itself (a
     * full-document sort key means shuffling the whole corpus twice at
@@ -52,8 +69,7 @@ object TextOps {
     * bands of 8 rows → band-key equi-join (the scale path: candidates only
     * ever meet inside a band bucket, a shuffle on band_key), then verify by
     * estimated Jaccard from the full signatures. */
-  def dedupMinHash(docs: DataFrame, threshold: Double = 0.5,
-                   maxBucket: Int = 1000): DataFrame = {
+  def dedupMinHash(docs: DataFrame): DataFrame = {
     // exact dups collapse to one rep BEFORE banding (see [[exactReps]]);
     // signature computed once per doc, bands derived from it; persisted so
     // the banding projection and the two verify joins don't re-hash the
@@ -76,13 +92,11 @@ object TextOps {
     // (same reasoning as [[dedupWinnow]])
     val banded = sigs
       .select(col("doc_id"), explode(F.lshBandsFromSig(col("sig"), lit(8))).as("band"))
-      .withColumn("bsz", count(lit(1)).over(Window.partitionBy(col("band"))))
-      .filter(col("bsz") <= maxBucket)
-      .drop("bsz")
+      .transform(capBuckets("band"))
       .persist()
     // candidate pairs dedupe across bands while still id-only; the verify
     // joins see each pair once. Per-doc pair fan-out is bounded by the
-    // bucket cap (≤ 8 bands × maxBucket), so the doc-keyed joins have no
+    // bucket cap (≤ 8 bands × MaxBucket), so the doc-keyed joins have no
     // unbounded hot key; sig side is per-doc-sized — never broadcast.
     val cand = banded.select(col("band"), col("doc_id").as("a"))
       .join(banded.select(col("band"), col("doc_id").as("b")), "band")
@@ -98,15 +112,22 @@ object TextOps {
         aggregate(zip_with(col("siga"), col("sigb"), (x, y) => (x === y).cast("int")),
           lit(0), (acc, v) => acc + v).as("n_eq"))
       .withColumn("est_jaccard", col("n_eq") / lit(64.0))
-      .filter(col("est_jaccard") >= threshold)
+      .filter(col("est_jaccard") >= JaccardMin)
       .select(col("a"), col("b"), col("est_jaccard"))
   }
 
+  /** Drop the rows of every `key` bucket holding more than [[MaxBucket]]. */
+  private def capBuckets(key: String)(df: DataFrame): DataFrame =
+    df.withColumn("bsz", count(lit(1)).over(Window.partitionBy(col(key))))
+      .filter(col("bsz") <= MaxBucket)
+      .drop("bsz")
+
+  final val MaxHamming = 3
+
   /** SimHash near-dup pairs: 64-bit fingerprint, blocked on 4×16-bit bands
-    * (any pair at Hamming ≤ 3 shares at least one exact band), verified by
-    * exact Hamming distance. */
-  def dedupSimHash(docs: DataFrame, maxHamming: Int = 3,
-                   maxBucket: Int = 1000): DataFrame = {
+    * (any pair at Hamming ≤ [[MaxHamming]] shares at least one exact band),
+    * verified by exact Hamming distance. */
+  def dedupSimHash(docs: DataFrame): DataFrame = {
     // simhash runs at the exactReps exchange's parallelism already; the
     // band window's own exchange distributes downstream (see [[dedupWinnow]])
     val hashed = exactReps(docs)
@@ -116,16 +137,29 @@ object TextOps {
       explode(array((0 until 4).map(i =>
         shiftright(col("sh"), i * 16).bitwiseAND(lit(0xffffL)) + lit(i.toLong << 16)): _*))
         .as("band"))
-      .withColumn("bsz", count(lit(1)).over(Window.partitionBy(col("band"))))
-      .filter(col("bsz") <= maxBucket)
-      .drop("bsz")
+      .transform(capBuckets("band"))
     val a = banded.select(col("band"), col("doc_id").as("a"), col("sh").as("sha"))
     val b = banded.select(col("band"), col("doc_id").as("b"), col("sh").as("shb"))
     a.join(b, "band").filter(col("a") < col("b"))
       .select(col("a"), col("b"), bit_count(col("sha").bitwiseXOR(col("shb"))).as("hamming"))
       .distinct()
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= MaxHamming)
   }
+
+  /** The near-dup SQL twins' input: [[withMutatedCopies]] (`aug`) and its
+    * [[exactReps]] (`reps`). */
+  private def repsCtes: String =
+    s"""aug AS (
+       |  SELECT doc_id, text FROM documents
+       |  UNION ALL
+       |  SELECT doc_id + 10000000,
+       |         array_to_string(list_slice(string_split(text, ' '), 1,
+       |           greatest(len(string_split(text, ' ')) - 1, 1)), ' ')
+       |  FROM documents WHERE doc_id % 10 = 0),
+       |reps AS (SELECT doc_id, text FROM (
+       |  SELECT doc_id, text,
+       |         row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
+       |  FROM aug) WHERE rn = 1)""".stripMargin
 
   /** Full DuckDB mirror of [[dedupMinHash]] ∘ [[withMutatedCopies]] — the
     * whole MinHash pipeline in SQL: FNV-1a shingle hashes (nested
@@ -134,7 +168,7 @@ object TextOps {
     * 8-step chained mix64 fold, bucket cap, band equi-join, signature-
     * agreement verify. Verified bit-exact against the JVM kernel
     * (prototype, 2026-08-17). */
-  def dedupMinHashSql(threshold: Double = 0.5, maxBucket: Int = 1000): String = {
+  def dedupMinHashSql: String = {
     import graft.queries.SqlHash._
     val C = BigInt("2545f4914f6cdd1d", 16)
     val A = BigInt("9e3779b97f4a7c15", 16)
@@ -150,17 +184,7 @@ object TextOps {
       bandCtes ++= mix64Ctes(s"bx$s", "doc_id, b, sg", s"bm$s") + ",\n"
       prev = s"bm$s"
     }
-    s"""WITH aug AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 10000000,
-       |         array_to_string(list_slice(string_split(text, ' '), 1,
-       |           greatest(len(string_split(text, ' ')) - 1, 1)), ' ')
-       |  FROM documents WHERE doc_id % 10 = 0),
-       |reps AS (SELECT doc_id, text FROM (
-       |  SELECT doc_id, text,
-       |         row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
-       |  FROM aug) WHERE rn = 1),
+    s"""WITH $repsCtes,
        |toks AS (SELECT doc_id, string_split(text, ' ') AS tk FROM reps),
        |sh AS (
        |  SELECT doc_id, unnest(CASE WHEN len(tk) < 3
@@ -184,14 +208,14 @@ object TextOps {
        |          FROM $prev),
        |capped AS (SELECT doc_id, sg, band FROM (
        |  SELECT *, count(*) OVER (PARTITION BY band) AS bsz FROM bands)
-       |  WHERE bsz <= $maxBucket),
+       |  WHERE bsz <= $MaxBucket),
        |pairs AS (
        |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b,
        |         list_sum(list_transform(generate_series(1, 64),
        |           i -> CASE WHEN x.sg[i] = y.sg[i] THEN 1 ELSE 0 END)) AS n_eq
        |  FROM capped x JOIN capped y ON x.band = y.band AND x.doc_id < y.doc_id)
        |SELECT a, b, n_eq / 64.0 AS est_jaccard
-       |FROM pairs WHERE n_eq / 64.0 >= $threshold""".stripMargin
+       |FROM pairs WHERE n_eq / 64.0 >= $JaccardMin""".stripMargin
   }
 
   /** Token-set Jaccard near-dup pairs within (lang, length-bucket) blocks —
@@ -208,7 +232,7 @@ object TextOps {
     * sub-quadratic where a (lang, length) block alone holds ~10^9 docs at
     * the 100 TB design point. [Bayardo et al., WWW'07 "Scaling Up All
     * Pairs Similarity Search" — public construction.] */
-  def ngramJaccard(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
+  def ngramJaccard(docs: DataFrame): DataFrame = {
     // Token arrays carry BOTH forms: strings (df counting + prefix
     // selection, which orders by the string token) and sorted 64-bit
     // hashes (candidate-join keys + the verify merge). Hashing shrinks the
@@ -237,7 +261,7 @@ object TextOps {
     val pref = t
       .select(col("lang"), col("bucket"), col("doc_id"),
         explode(transform(
-          graft.index.TermStats.prefixTokens(col("toks"), threshold, bc),
+          graft.index.TermStats.prefixTokens(col("toks"), JaccardMin, bc),
           x => xxhash64(x))).as("tok"))
     val cand = pref.select(col("lang"), col("bucket"), col("tok"), col("doc_id").as("a"))
       .join(pref.select(col("lang"), col("bucket"), col("tok"), col("doc_id").as("b")),
@@ -250,7 +274,7 @@ object TextOps {
       .withColumn("inter", F.sortedInterCount(col("ha"), col("hb")))
       .withColumn("uni", col("na") + col("nb") - col("inter"))
       .withColumn("jaccard", col("inter") / col("uni").cast("double"))
-      .filter(col("jaccard") >= threshold)
+      .filter(col("jaccard") >= JaccardMin)
       .select(col("a"), col("b"), col("inter").cast("long").as("inter"),
         col("uni").cast("long").as("uni"))
   }
@@ -284,16 +308,19 @@ object TextOps {
   def ngramJaccardSql: String =
     s"""WITH $ngramPairCtes
        |SELECT a, b, CAST(inter AS BIGINT) AS inter, CAST(uni AS BIGINT) AS uni
-       |FROM pairs WHERE CAST(inter AS DOUBLE) / uni >= 0.5""".stripMargin
+       |FROM pairs WHERE CAST(inter AS DOUBLE) / uni >= $JaccardMin""".stripMargin
+
+  final val WinnowK = 8
+  final val WinnowW = 16
+  final val WinnowMinShared = 2
 
   /** Winnowing (MOSS) near-dup pairs: exact pre-collapse → per-doc
     * winnowing fingerprints (char k-grams, window w) → inverted fingerprint
-    * index (bucket-capped) → pairs sharing >= minShared fingerprints.
+    * index (bucket-capped) → pairs sharing >= WinnowMinShared fingerprints.
     * Catches copied PASSAGES (any shared run >= w+k-1 chars shares a
     * fingerprint) that whole-document sketches dilute — the boilerplate /
     * quotation detector of the dedup family. */
-  def dedupWinnow(docs: DataFrame, k: Int = 8, w: Int = 16,
-                  minShared: Int = 2, maxBucket: Int = 1000): DataFrame = {
+  def dedupWinnow(docs: DataFrame): DataFrame = {
     // no repartition between the explode and the bucket-size window: the
     // window's own hash(fp) exchange distributes the stream, and the
     // fingerprinting itself already runs at the exactReps exchange's
@@ -301,16 +328,14 @@ object TextOps {
     // the largest intermediate (and the fp-keyed cache partitioning lets
     // the self-join below reuse the exchange)
     val fps = exactReps(docs)
-      .select(col("doc_id"), explode(F.winnowFps(col("text"), k, w)).as("fp"))
-      .withColumn("bsz", count(lit(1)).over(Window.partitionBy(col("fp"))))
-      .filter(col("bsz") <= maxBucket)
-      .drop("bsz")
+      .select(col("doc_id"), explode(F.winnowFps(col("text"), WinnowK, WinnowW)).as("fp"))
+      .transform(capBuckets("fp"))
       .persist()
     fps.select(col("fp"), col("doc_id").as("a"))
       .join(fps.select(col("fp"), col("doc_id").as("b")), "fp")
       .filter(col("a") < col("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= minShared)
+      .filter(col("shared") >= WinnowMinShared)
   }
 
   /** Collapse near-dup PAIRS into dedup CLUSTERS — connected components
@@ -444,7 +469,7 @@ object TextOps {
     * reference (measured 176 s → 12 s at sf0.1). */
   def dupClustersSql: String =
     s"""WITH RECURSIVE $ngramPairCtes,
-       |edges AS (SELECT a, b FROM pairs WHERE CAST(inter AS DOUBLE) / uni >= 0.5),
+       |edges AS (SELECT a, b FROM pairs WHERE CAST(inter AS DOUBLE) / uni >= $JaccardMin),
        |sym AS MATERIALIZED (SELECT a, b FROM edges UNION ALL SELECT b AS a, a AS b FROM edges),
        |m1 AS MATERIALIZED (SELECT a AS node, least(a, min(b)) AS lbl1 FROM sym GROUP BY a),
        |e1 AS MATERIALIZED (SELECT DISTINCT ma.lbl1 AS a, mb.lbl1 AS b
@@ -459,7 +484,10 @@ object TextOps {
        |SELECT m1.node AS doc_id, coalesce(root.lbl, m1.lbl1) AS cluster_id
        |FROM m1 LEFT JOIN root ON m1.lbl1 = root.node""".stripMargin
 
-  /** Deterministic stratified sample: the `perStratum` docs with the
+  /** Docs each stratum keeps in [[stratifiedSample]] and [[weightedSample]]. */
+  final val PerStratum = 25
+
+  /** Deterministic stratified sample: the [[PerStratum]] docs with the
     * smallest splitmix64(doc_id) rank per language — the curation
     * primitive for balancing a training mix across strata. Hash-rank
     * sampling is reproducible (no RNG state), stable under corpus growth
@@ -469,18 +497,18 @@ object TextOps {
     * keeps at most k rows per stratum per input partition BEFORE the
     * shuffle (PlanSpec pins it) — the exchange moves O(k·splits) rows, not
     * the corpus, so 4 fat strata never concentrate the data on 4 tasks. */
-  def stratifiedSample(docs: DataFrame, perStratum: Int = 25): DataFrame = {
+  def stratifiedSample(docs: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("lang")).orderBy(col("rk").asc, col("doc_id").asc)
     docs.select(col("lang"), col("doc_id"), F.mix64(col("doc_id")).as("rk"))
       .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= perStratum)
+      .filter(col("rn") <= PerStratum)
       .select(col("lang"), col("doc_id"), col("rn").cast("long").as("rn"))
   }
 
   /** Mirror of [[stratifiedSample]]: mix64 staged over CTE columns
     * (SqlHash), rank ORDER BY the SIGNED value — Java long order, the
     * winnowing lesson — with the doc_id tiebreak. */
-  def stratifiedSampleSql(perStratum: Int = 25): String = {
+  def stratifiedSampleSql: String = {
     import graft.queries.SqlHash._
     s"""WITH z AS (SELECT doc_id, lang, CAST(doc_id AS HUGEINT) AS z FROM documents),
        |${mix64Ctes("z", "doc_id, lang", "m")},
@@ -489,7 +517,7 @@ object TextOps {
        |             row_number() OVER (PARTITION BY lang ORDER BY rk, doc_id) AS rn
        |           FROM r)
        |SELECT lang, doc_id, CAST(rn AS BIGINT) AS rn
-       |FROM ranked WHERE rn <= $perStratum""".stripMargin
+       |FROM ranked WHERE rn <= $PerStratum""".stripMargin
   }
 
   /** Deterministic uniform draw from doc_id: the top 63 bits of
@@ -508,7 +536,7 @@ object TextOps {
     s"CAST(${graft.queries.SqlHash.shr("z", 1)} % 1000000007 + 1 AS DOUBLE) / $denom"
 
   /** Weighted sample without replacement (Efraimidis–Spirakis '06,
-    * exponential-key form): per language keep the `perStratum` docs with
+    * exponential-key form): per language keep the [[PerStratum]] docs with
     * the smallest −ln(u)/w where w = n_chars and u is a deterministic
     * rational in (0,1] from doc_id ([[hashU]]) — longer docs sample
     * proportionally more often, the draw is reproducible and join-free,
@@ -520,17 +548,17 @@ object TextOps {
     * is why the exponential form replaces u^(1/w)). Same
     * WindowGroupLimit shape as [[stratifiedSample]] — the partial mode
     * keeps ≤ k rows per stratum per input partition before the shuffle. */
-  def weightedSample(docs: DataFrame, perStratum: Int = 25): DataFrame = {
+  def weightedSample(docs: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("lang")).orderBy(col("key").asc, col("doc_id").asc)
     docs.select(col("lang"), col("doc_id"), col("n_chars"), hashU(1000000007.0).as("u"))
       .withColumn("key", expr("-ln(u) / n_chars"))
       .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= perStratum)
+      .filter(col("rn") <= PerStratum)
       .select(col("lang"), col("doc_id"), col("n_chars").cast("long").as("n_chars"),
         col("rn").cast("long").as("rn"))
   }
 
-  def weightedSampleSql(perStratum: Int = 25): String =
+  def weightedSampleSql: String =
     s"""WITH z AS (SELECT lang, doc_id, n_chars, CAST(doc_id AS HUGEINT) AS z FROM documents),
        |${graft.queries.SqlHash.mix64Ctes("z", "lang, doc_id, n_chars", "m")},
        |u AS (SELECT lang, doc_id, n_chars, ${hashUSql("1000000007.0")} AS u FROM m),
@@ -539,7 +567,9 @@ object TextOps {
        |             row_number() OVER (PARTITION BY lang ORDER BY key, doc_id) AS rn
        |           FROM k)
        |SELECT lang, doc_id, CAST(n_chars AS BIGINT) AS n_chars, CAST(rn AS BIGINT) AS rn
-       |FROM ranked WHERE rn <= $perStratum""".stripMargin
+       |FROM ranked WHERE rn <= $PerStratum""".stripMargin
+
+  final val DsirK = 100
 
   /** DSIR-style data selection (the importance-resampling construction of
     * Xie et al. 2023, "Data Selection for Language Models via Importance
@@ -547,7 +577,7 @@ object TextOps {
     * log p_target(x) − log p_raw(x) under hashed bag-of-unigram models
     * (add-1-smoothed, 64 buckets), then deterministic Gumbel-top-k
     * resampling. The target distribution is the dim-sized slice
-    * doc_id % evalMod == evalRes ([[decontaminate]]'s eval convention);
+    * doc_id % EvalMod == EvalRes ([[decontaminate]]'s eval convention);
     * raw = the whole corpus.
     *
     * Scale shape: the hashed tf frame collapses to ≤64-row bucket models
@@ -563,15 +593,14 @@ object TextOps {
     * HUGEINT mod agree exactly (the low 6 bits). Top-k plans as a partial
     * WindowGroupLimit before the single ordering exchange, so ≤ k·splits
     * rows move. */
-  def dsirSelect(docs: DataFrame, evalMod: Long = 41L, evalRes: Long = 3L,
-                 k: Int = 100): DataFrame = {
+  def dsirSelect(docs: DataFrame): DataFrame = {
     val B = 64
     val bt = termFreq(docs)
       .select(col("doc_id"), pmod(F.fnv1a64(col("term")), lit(B.toLong)).as("b"), col("tf"))
       .groupBy(col("doc_id"), col("b")).agg(sum(col("tf")).as("c"))
       .persist() // raw model, target model and the scoring join all read it
     val raw = bt.groupBy(col("b")).agg(sum(col("c")).as("cr"))
-    val tgt = bt.filter(col("doc_id") % evalMod === evalRes)
+    val tgt = bt.filter(col("doc_id") % EvalMod === EvalRes)
       .groupBy(col("b")).agg(sum(col("c")).as("ct"))
     val model = raw.join(tgt, Seq("b"), "left")
       .select(col("b"), col("cr"), coalesce(col("ct"), lit(0L)).as("ct"))
@@ -587,7 +616,7 @@ object TextOps {
       .withColumn("u", hashU(1000000008.0))
       .withColumn("key", col("w_q").cast("double") / lit(1000000.0) - expr("ln(-ln(u))"))
       .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+      .filter(col("rn") <= DsirK)
       .select(col("doc_id"), col("w_q"), col("rn").cast("long").as("rn"))
   }
 
@@ -596,7 +625,7 @@ object TextOps {
     * — identical values, cheaper than per-row folds), token-identical
     * smoothed-log-ratio arithmetic quantized at 1e-6, and the unrounded
     * Gumbel ranking key with the doc_id tiebreak. */
-  def dsirSelectSql(evalMod: Long = 41L, evalRes: Long = 3L, k: Int = 100): String =
+  def dsirSelectSql: String =
     s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
        |tf AS MATERIALIZED (
        |  SELECT doc_id, term, count(*) AS tfc
@@ -612,7 +641,7 @@ object TextOps {
        |  GROUP BY 1, 2),
        |raw AS (SELECT b, CAST(sum(c) AS BIGINT) AS cr FROM bt GROUP BY 1),
        |tgt AS (SELECT b, CAST(sum(c) AS BIGINT) AS ct FROM bt
-       |        WHERE doc_id % $evalMod = $evalRes GROUP BY 1),
+       |        WHERE doc_id % $EvalMod = $EvalRes GROUP BY 1),
        |model AS (SELECT raw.b AS b, cr, COALESCE(ct, 0) AS ct
        |          FROM raw LEFT JOIN tgt ON raw.b = tgt.b),
        |tot AS (SELECT CAST(sum(cr) AS BIGINT) AS nr, CAST(sum(ct) AS BIGINT) AS nt FROM model),
@@ -631,7 +660,7 @@ object TextOps {
        |             row_number() OVER (ORDER BY key DESC, doc_id) AS rn
        |           FROM ky)
        |SELECT doc_id, w_q, CAST(rn AS BIGINT) AS rn
-       |FROM ranked WHERE rn <= $k""".stripMargin
+       |FROM ranked WHERE rn <= $DsirK""".stripMargin
 
   /** Exact per-stratum quantiles of doc length (p50/p90/p99 of n_chars per
     * language) — corpus-profile stats with INTEGER-EXACT rank selection:
@@ -673,26 +702,16 @@ object TextOps {
     * with the previous window's reproduces the lastIdx dedup exactly) —
     * then the same bucket-capped inverted-index pair join. Verified
     * bit-exact against Fingerprint.winnow (prototype, 2026-08-17). */
-  def dedupWinnowSql(k: Int = 8, w: Int = 16, minShared: Int = 2,
-                     maxBucket: Int = 1000): String = {
+  def dedupWinnowSql: String = {
     import graft.queries.SqlHash._
+    val (k, w) = (WinnowK, WinnowW)
     val gramPoly =
       s"list_reduce(list_prepend(CAST(0 AS HUGEINT), " +
         s"list_transform(list_filter(string_split(substr(text, i, $k), ''), ch -> ch <> ''), " +
         s"ch -> CAST(unicode(ch) AS HUGEINT))), (h, c) -> (257*h + c) % $M64)"
     def rm(lo: String, hi: String) =
       s"list_max(list_filter(generate_series($lo, $hi), j -> hs[j] = list_min(list_slice(hs, $lo, $hi))))"
-    s"""WITH aug AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 10000000,
-       |         array_to_string(list_slice(string_split(text, ' '), 1,
-       |           greatest(len(string_split(text, ' ')) - 1, 1)), ' ')
-       |  FROM documents WHERE doc_id % 10 = 0),
-       |reps AS (SELECT doc_id, text FROM (
-       |  SELECT doc_id, text,
-       |         row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
-       |  FROM aug) WHERE rn = 1),
+    s"""WITH $repsCtes,
        |g0 AS (
        |  SELECT doc_id, i.i, $gramPoly AS z
        |  FROM reps, LATERAL (SELECT unnest(generate_series(1, length(text) - $k + 1)) AS i) i
@@ -720,13 +739,13 @@ object TextOps {
        |  SELECT doc_id, ${toSigned("z")} AS fp FROM sm),
        |capped AS (SELECT doc_id, fp FROM (
        |  SELECT *, count(*) OVER (PARTITION BY fp) AS bsz FROM allf)
-       |  WHERE bsz <= $maxBucket),
+       |  WHERE bsz <= $MaxBucket),
        |pairs AS (
        |  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS shared
        |  FROM capped x JOIN capped y ON x.fp = y.fp AND x.doc_id < y.doc_id
        |  GROUP BY 1, 2)
        |SELECT a, b, CAST(shared AS BIGINT) AS shared
-       |FROM pairs WHERE shared >= $minShared""".stripMargin
+       |FROM pairs WHERE shared >= $WinnowMinShared""".stripMargin
   }
 
   /** Stopword-profile language ID (n-gram heuristic over the fixed profiles;
@@ -1049,7 +1068,9 @@ object TextOps {
   // per-partition partial top-100, never a global sort).
   // =================================================================
 
-  def ngramCounts(docs: DataFrame, k: Int = 100): DataFrame =
+  final val NgramTopK = 100
+
+  def ngramCounts(docs: DataFrame): DataFrame =
     docs.select(split(col("text"), " ").as("t"))
       .filter(size(col("t")) >= 2)
       .select(explode(expr(
@@ -1057,7 +1078,7 @@ object TextOps {
         .as("ngram"))
       .groupBy(col("ngram")).agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("ngram").asc)
-      .limit(k)
+      .limit(NgramTopK)
 
   def ngramCountsSql: String =
     s"""WITH t AS (SELECT string_split(text, ' ') AS t FROM documents),
@@ -1067,7 +1088,7 @@ object TextOps {
        |  FROM t WHERE len(t) >= 2)
        |SELECT ngram, CAST(count(*) AS BIGINT) AS cnt
        |FROM ng GROUP BY 1
-       |ORDER BY cnt DESC, ngram ASC LIMIT 100""".stripMargin
+       |ORDER BY cnt DESC, ngram ASC LIMIT $NgramTopK""".stripMargin
 
   // =================================================================
   // KMV distinct sketch (k-minimum-values; Bar-Yossef et al. '02):
@@ -1309,22 +1330,12 @@ object TextOps {
     * collapse → SimHash64 → 4×16-bit band explode → bucket cap → band
     * equi-join → exact Hamming ≤ 3. Hamming over 32-bit limbs (BIGINT
     * bit_count). */
-  def dedupSimHashSql(maxHamming: Int = 3, maxBucket: Int = 1000): String = {
+  def dedupSimHashSql: String = {
     import graft.queries.SqlHash._
     val ham =
       s"(bit_count(xor(CAST(x.v // 4294967296 AS BIGINT), CAST(y.v // 4294967296 AS BIGINT))) + " +
         s"bit_count(xor(CAST(x.v % 4294967296 AS BIGINT), CAST(y.v % 4294967296 AS BIGINT))))"
-    s"""WITH aug AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 10000000,
-       |         array_to_string(list_slice(string_split(text, ' '), 1,
-       |           greatest(len(string_split(text, ' ')) - 1, 1)), ' ')
-       |  FROM documents WHERE doc_id % 10 = 0),
-       |reps AS (SELECT doc_id, text FROM (
-       |  SELECT doc_id, text,
-       |         row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
-       |  FROM aug) WHERE rn = 1),
+    s"""WITH $repsCtes,
        |${simhashCtes("reps")},
        |banded AS (
        |  SELECT doc_id, v,
@@ -1332,12 +1343,12 @@ object TextOps {
        |  FROM shv, (SELECT unnest(generate_series(0, 3)) AS i) i),
        |capped AS (SELECT doc_id, v, band FROM (
        |  SELECT *, count(*) OVER (PARTITION BY band) AS bsz FROM banded)
-       |  WHERE bsz <= $maxBucket),
+       |  WHERE bsz <= $MaxBucket),
        |pairs AS (
        |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b, $ham AS hamming
        |  FROM capped x JOIN capped y ON x.band = y.band AND x.doc_id < y.doc_id)
        |SELECT a, b, CAST(hamming AS INTEGER) AS hamming
-       |FROM pairs WHERE hamming <= $maxHamming""".stripMargin
+       |FROM pairs WHERE hamming <= $MaxHamming""".stripMargin
   }
 
   // =================================================================
@@ -1348,16 +1359,25 @@ object TextOps {
   // any corpus size, fully codegen'd built-ins.
   // =================================================================
 
+  final val MaxTopWordFrac = 0.30
+  final val MaxDupBigramFrac = 0.50
+
   /** Per-doc repetition metrics + keep/drop gate. `top_word_frac` is the
     * count of the most frequent token over n_tok; `dup_bigram_frac` is
-    * 1 − distinct/total over adjacent word bigrams. Thresholds (0.30 /
-    * 0.50) follow the Gopher repetition-filter family; the gate is emitted
-    * as 0/1 so the oracle compare is type-stable. */
-  def qualityRepetition(docs: DataFrame,
-                        maxTopWordFrac: Double = 0.30,
-                        maxDupBigramFrac: Double = 0.50): DataFrame = {
-    val base = docs.select(col("doc_id"), F.tokenize(col("text")).as("toks"))
-      .withColumn("n_tok", size(col("toks")).cast("long"))
+    * 1 − distinct/total over adjacent word bigrams. The thresholds
+    * ([[MaxTopWordFrac]], [[MaxDupBigramFrac]]) follow the Gopher
+    * repetition-filter family; the gate is emitted as 0/1 so the oracle
+    * compare is type-stable. */
+  def qualityRepetition(docs: DataFrame): DataFrame =
+    withRepetition(docs.select(col("doc_id"), F.tokenize(col("text")).as("toks"))
+      .withColumn("n_tok", size(col("toks")).cast("long")))
+      .select(col("doc_id"), col("n_tok"),
+        col("twf").as("top_word_frac"), col("dbf").as("dup_bigram_frac"), repKeep.as("keep"))
+
+  /** The repetition metrics of `toks` (n_tok of them): `twf` and `dbf`,
+    * after their work columns top_word, bi and n_bi. */
+  private def withRepetition(df: DataFrame): DataFrame =
+    df
       .withColumn("top_word", array_max(transform(array_distinct(col("toks")),
         d => size(filter(col("toks"), t => t === d)))).cast("long"))
       .withColumn("bi",
@@ -1372,14 +1392,12 @@ object TextOps {
           round((col("n_bi") - size(array_distinct(col("bi"))).cast("long")).cast("double") /
             col("n_bi"), 6))
           .otherwise(lit(0.0)))
-    base.select(col("doc_id"), col("n_tok"),
-      col("twf").as("top_word_frac"), col("dbf").as("dup_bigram_frac"),
-      (col("twf") <= maxTopWordFrac && col("dbf") <= maxDupBigramFrac)
-        .cast("int").as("keep"))
-  }
 
-  def qualityRepetitionSql(maxTopWordFrac: Double = 0.30,
-                           maxDupBigramFrac: Double = 0.50): String =
+  /** The repetition gate over `twf` and `dbf`, as 0/1. */
+  private def repKeep: Column =
+    (col("twf") <= MaxTopWordFrac && col("dbf") <= MaxDupBigramFrac).cast("int")
+
+  def qualityRepetitionSql: String =
     s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
        |b AS (SELECT doc_id, toks,
        |             CASE WHEN len(toks) >= 2
@@ -1401,7 +1419,7 @@ object TextOps {
        |                  ELSE 0.0 END AS dbf
        |      FROM m)
        |SELECT doc_id, n_tok, twf AS top_word_frac, dbf AS dup_bigram_frac,
-       |       CAST(CASE WHEN twf <= $maxTopWordFrac AND dbf <= $maxDupBigramFrac
+       |       CAST(CASE WHEN twf <= $MaxTopWordFrac AND dbf <= $MaxDupBigramFrac
        |                 THEN 1 ELSE 0 END AS INTEGER) AS keep
        |FROM f""".stripMargin
 
@@ -1576,8 +1594,10 @@ object TextOps {
     round(s * lit(1000000.0)).cast("long")
   }
 
-  /** BM25 top-k retrieval: score every document against a fixed query set
-    * and keep the k best per query.
+  final val Bm25K = 10
+
+  /** BM25 top-k retrieval: score every document against [[bm25Queries]]
+    * and keep the [[Bm25K]] best per query.
     *
     * Shuffle budget at corpus scale: ONE wide exchange (the (doc_id, term)
     * tf aggregation over the exploded corpus, map-side combined; the
@@ -1590,14 +1610,13 @@ object TextOps {
     * everything else), and the final per-qid top-k plans as a partial
     * WindowGroupLimit — each map task forwards at most k rows per query, so
     * few queries over many docs never funnel the corpus onto few tasks. */
-  def bm25TopK(docs: DataFrame, queries: Seq[(Int, String)] = bm25Queries,
-               k: Int = 10): DataFrame = {
+  def bm25TopK(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val tf = termFreq(docs)
     val stats = docs.select(split(col("text"), " ").as("toks"))
       .agg(count(lit(1)).as("n_docs"), sum(size(col("toks"))).as("sum_dl"))
-    val qdf = queries.toDF("qid", "term")
+    val qdf = bm25Queries.toDF("qid", "term")
     // The query-matched tf slice feeds BOTH the per-term df aggregate and
     // the scoring join: persisted, or the corpus-wide tf lineage (scan +
     // explode + (doc,term) exchange) runs twice just to count a query-sized
@@ -1618,13 +1637,13 @@ object TextOps {
       .withColumn("rnk", row_number().over(
         Window.partitionBy(col("qid"))
           .orderBy(col("score_q").desc, col("doc_id").asc)))
-      .filter(col("rnk") <= k)
+      .filter(col("rnk") <= Bm25K)
   }
 
   /** Mirror of [[bm25TopK]]: identical arithmetic (ln form, cast order,
     * quantize-then-sum); query fixture rendered from the same Seq. */
-  def bm25Sql(queries: Seq[(Int, String)] = bm25Queries, k: Int = 10): String = {
-    val vals = queries.map { case (q, t) => s"($q, '$t')" }.mkString(", ")
+  def bm25Sql: String = {
+    val vals = bm25Queries.map { case (q, t) => s"($q, '$t')" }.mkString(", ")
     s"""WITH q(qid, term) AS (VALUES $vals),
        |d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
        |tf AS (
@@ -1654,8 +1673,11 @@ object TextOps {
        |             CAST(row_number() OVER (PARTITION BY qid
        |               ORDER BY score_q DESC, doc_id ASC) AS INTEGER) AS rnk
        |      FROM agg)
-       |SELECT qid, doc_id, score_q, n_terms, rnk FROM r WHERE rnk <= $k""".stripMargin
+       |SELECT qid, doc_id, score_q, n_terms, rnk FROM r WHERE rnk <= $Bm25K""".stripMargin
   }
+
+  /** The perplexity gate's keep bound on the quantized mean NLL (1e-6 units). */
+  final val KeepBelowQ = 3912000L
 
   /** Unigram-LM perplexity filter (the CCNet/Gopher-style quality gate: a
     * language model trained on the corpus scores each document; outliers are
@@ -1665,9 +1687,9 @@ object TextOps {
     * into (an external LM swaps the window for a term equi-join). Per-token log-probs are quantized to 1e-6 integers BEFORE the
     * per-doc sum (tf × logp_q products and their sum are exact integer
     * arithmetic — order-independent); only the final mean divides, one IEEE
-    * double division per doc. keep = mean NLL ≤ threshold (high-perplexity
+    * double division per doc. keep = mean NLL ≤ [[KeepBelowQ]] (high-perplexity
     * docs are the junk under a unigram LM). */
-  def lmPerplexity(docs: DataFrame, keepBelowQ: Long = 3912000L): DataFrame = {
+  def lmPerplexity(docs: DataFrame): DataFrame = {
     // tf feeds the global total, the unigram-count aggregate AND the
     // scoring join: persist it. The unigram model is a MAP-SIDE-COMBINED
     // groupBy — NOT a term-keyed window: term frequency is the canonical
@@ -1692,10 +1714,10 @@ object TextOps {
       .select(col("doc_id"), col("n_tok"),
         round((-col("sum_q")).cast("double") / col("n_tok").cast("double"))
           .cast("long").as("nll_mean_q"))
-      .withColumn("keep", (col("nll_mean_q") <= keepBelowQ).cast("int"))
+      .withColumn("keep", (col("nll_mean_q") <= KeepBelowQ).cast("int"))
   }
 
-  def lmPerplexitySql(keepBelowQ: Long = 3912000L): String =
+  def lmPerplexitySql: String =
     s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
        |tf AS (
        |  SELECT doc_id, term, count(*) AS tfc
@@ -1716,7 +1738,7 @@ object TextOps {
        |       CAST(round(CAST(-sum_q AS DOUBLE) / CAST(n_tok AS DOUBLE)) AS BIGINT)
        |         AS nll_mean_q,
        |       CAST(CAST(round(CAST(-sum_q AS DOUBLE) / CAST(n_tok AS DOUBLE)) AS BIGINT)
-       |            <= $keepBelowQ AS INTEGER) AS keep
+       |            <= $KeepBelowQ AS INTEGER) AS keep
        |FROM agg""".stripMargin
 
   /** The frozen (term, logp_q) LM table [[lmPerplexity]] trains in-line —
@@ -1737,29 +1759,27 @@ object TextOps {
     * `long_set_contains`) — [[decontaminate]]'s broadcast side exposed for
     * the streaming scrub. Dimension-sized by design (the eval set is a
     * benchmark suite, not a corpus share). */
-  def evalShingleSet(docs: DataFrame, n: Int = 5,
-                     evalMod: Long = 41L, evalRes: Long = 3L): Array[Long] =
-    docs.filter(col("doc_id") % evalMod === evalRes)
-      .select(explode(F.shingleHashes(col("text"), n)).as("h"))
+  def evalShingleSet(docs: DataFrame): Array[Long] =
+    docs.filter(col("doc_id") % EvalMod === EvalRes)
+      .select(explode(F.shingleHashes(col("text"), ShingleN)).as("h"))
       .distinct().collect().map(_.getLong(0)).sorted
 
   /** Eval-set decontamination (the GPT-3/FLAN-style n-gram overlap scrub):
     * training documents sharing any token n-gram with a held-out eval set
     * are flagged (with the count of distinct shared shingles). The eval set
-    * here is the deterministic doc_id % $evalMod == $evalRes slice; in a real
+    * here is the deterministic doc_id % EvalMod == EvalRes slice; in a real
     * pipeline it is the benchmark suite — always dimension-sized, which is
     * why the eval shingle set BROADCASTS while the train side streams. Spark
     * joins on xxhash64(shingle) (8-byte keys instead of strings on the wide
     * exchange; a collision can only add a false flag at P ≈ |eval|·|train|
     * / 2^64 — the string-keyed oracle would catch one at test scale). */
-  def decontaminate(docs: DataFrame, n: Int = 5,
-                    evalMod: Long = 41L, evalRes: Long = 3L): DataFrame = {
+  def decontaminate(docs: DataFrame, evalMod: Long = EvalMod, evalRes: Long = EvalRes): DataFrame = {
     // native shingle kernel (one pass, distinct per doc, hashes only — the
     // HOF transform∘concat_ws form ran interpreted per shingle position and
     // shipped n-token STRINGS through the explode; 8-byte hashes halve the
     // generated volume and the per-row cost — see F.shingleHashes)
     val sh = docs.select(col("doc_id"),
-      explode(F.shingleHashes(col("text"), n)).as("h"))
+      explode(F.shingleHashes(col("text"), ShingleN)).as("h"))
     val ev = sh.filter(col("doc_id") % evalMod === evalRes)
       .select(col("h")).distinct()
     sh.filter(col("doc_id") % evalMod =!= evalRes)
@@ -1768,23 +1788,25 @@ object TextOps {
       .agg(count(lit(1)).as("n_matched"))
   }
 
-  def decontaminateSql(n: Int = 5, evalMod: Long = 41L, evalRes: Long = 3L): String =
+  def decontaminateSql: String =
     s"""WITH $augCte,
        |d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM aug),
        |s AS (
        |  SELECT doc_id, unnest(
-       |    CASE WHEN len(toks) >= $n
+       |    CASE WHEN len(toks) >= $ShingleN
        |         THEN list_distinct(list_transform(
-       |                generate_series(1, len(toks) - ${n - 1}),
-       |                i -> array_to_string(list_slice(toks, i, i + ${n - 1}), ' ')))
+       |                generate_series(1, len(toks) - ${ShingleN - 1}),
+       |                i -> array_to_string(list_slice(toks, i, i + ${ShingleN - 1}), ' ')))
        |         ELSE CAST([] AS VARCHAR[]) END) AS sh
        |  FROM d),
-       |ev AS (SELECT DISTINCT sh FROM s WHERE doc_id % $evalMod = $evalRes),
-       |tr AS (SELECT doc_id, sh FROM s WHERE doc_id % $evalMod <> $evalRes)
+       |ev AS (SELECT DISTINCT sh FROM s WHERE doc_id % $EvalMod = $EvalRes),
+       |tr AS (SELECT doc_id, sh FROM s WHERE doc_id % $EvalMod <> $EvalRes)
        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matched
        |FROM tr JOIN ev USING (sh) GROUP BY 1""".stripMargin
 
-  /** Per-doc keyword extraction: top-m terms by TF-IDF
+  final val KeywordsM = 3
+
+  /** Per-doc keyword extraction: top-[[KeywordsM]] terms by TF-IDF
     * (tf × ln(N/df), quantized to 1e-6 like [[bm25TopK]]). Unlike BM25 the
     * df dimension here is the FULL vocabulary — ~10^8 rows at web scale —
     * and term frequency is Zipf-skewed, so df comes from a
@@ -1795,7 +1817,7 @@ object TextOps {
     * persists — it feeds the df aggregate and the scoring join. The
     * per-doc top-m window still plans as a partial WindowGroupLimit over
     * the (doc_id)-keyed exchange. */
-  def keywordsTfIdf(docs: DataFrame, m: Int = 3): DataFrame = {
+  def keywordsTfIdf(docs: DataFrame): DataFrame = {
     val tf = termFreq(docs).persist()
     val stats = docs.agg(count(lit(1)).as("n_docs"))
     val q = round(
@@ -1812,11 +1834,11 @@ object TextOps {
       .withColumn("rnk", row_number().over(
         Window.partitionBy(col("doc_id"))
           .orderBy(col("tfidf_q").desc, col("term").asc)))
-      .filter(col("rnk") <= m)
+      .filter(col("rnk") <= KeywordsM)
       .select(col("doc_id"), col("term"), col("tfidf_q"), col("rnk"))
   }
 
-  def keywordsTfIdfSql(m: Int = 3): String =
+  def keywordsTfIdfSql: String =
     s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
        |tf AS (
        |  SELECT doc_id, term, count(*) AS tfc
@@ -1834,7 +1856,7 @@ object TextOps {
        |             CAST(row_number() OVER (PARTITION BY doc_id
        |               ORDER BY tfidf_q DESC, term ASC) AS INTEGER) AS rnk
        |      FROM sc WHERE tfidf_q > 0)
-       |SELECT doc_id, term, tfidf_q, rnk FROM r WHERE rnk <= $m""".stripMargin
+       |SELECT doc_id, term, tfidf_q, rnk FROM r WHERE rnk <= $KeywordsM""".stripMargin
 
   // =================================================================
   // Composed corpus curation — the full pre-training scrub as ONE per-doc
@@ -1861,32 +1883,18 @@ object TextOps {
     * Preserves the input columns plus (n_tok, quality, rep_keep): batch
     * [[curate]] projects down to the flags, the streaming scrub
     * ([[graft.streaming.StreamingIndex.curateStream]]) keeps the page. */
-  def perRowGates(docs: DataFrame,
-                  maxTopWordFrac: Double = 0.30,
-                  maxDupBigramFrac: Double = 0.50): DataFrame =
-    docs.withColumn("toks", F.tokenize(col("text")))
+  def perRowGates(docs: DataFrame): DataFrame =
+    withRepetition(docs.withColumn("toks", F.tokenize(col("text")))
       .withColumn("n_tok", size(col("toks")).cast("long"))
       .withColumn("quality", round(
         (size(array_distinct(col("toks"))).cast("long").cast("double") / col("n_tok")) * 0.5 +
           (lit(1.0) - size(filter(col("toks"), t => t.isin(lit("the"), lit("a"))))
-            .cast("long").cast("double") / col("n_tok")) * 0.5, 6))
-      .withColumn("top_word", array_max(transform(array_distinct(col("toks")),
-        d => size(filter(col("toks"), t => t === d)))).cast("long"))
-      .withColumn("bi",
-        when(size(col("toks")) >= 2,
-          transform(sequence(lit(1), size(col("toks")) - 1),
-            i => concat_ws(" ", element_at(col("toks"), i), element_at(col("toks"), i + 1))))
-          .otherwise(array().cast("array<string>")))
-      .withColumn("n_bi", size(col("bi")).cast("long"))
-      .withColumn("twf", round(col("top_word").cast("double") / col("n_tok"), 6))
-      .withColumn("dbf",
-        when(col("n_bi") > 0,
-          round((col("n_bi") - size(array_distinct(col("bi"))).cast("long")).cast("double") /
-            col("n_bi"), 6))
-          .otherwise(lit(0.0)))
-      .withColumn("rep_keep",
-        (col("twf") <= maxTopWordFrac && col("dbf") <= maxDupBigramFrac).cast("int"))
+            .cast("long").cast("double") / col("n_tok")) * 0.5, 6)))
+      .withColumn("rep_keep", repKeep)
       .drop("toks", "top_word", "bi", "n_bi", "twf", "dbf")
+
+  /** The quality gate's floor, in [[curate]] and the staged scrubs. */
+  final val QualityMin = 0.75
 
   /** Per-doc curation diagnostics + final keep. The two pure per-row gates
     * (quality, repetition) fuse into ONE projection over a shared scan (zero
@@ -1896,8 +1904,7 @@ object TextOps {
     * the joins co-partition. At 10^12 docs every gate is the same shape it
     * has standalone — the composition adds doc_id joins, no new scale
     * hazard. */
-  def curate(docs: DataFrame, qualityMin: Double = 0.75,
-             evalMod: Long = 41L, evalRes: Long = 3L): DataFrame = {
+  def curate(docs: DataFrame, evalMod: Long = EvalMod, evalRes: Long = EvalRes): DataFrame = {
     // quality + repetition are pure per-row gates over the SAME tokenization:
     // fused into one projection they cost zero exchanges and one shared scan
     // (as separate frames each forced its own doc_id exchange into the join).
@@ -1918,12 +1925,12 @@ object TextOps {
         Window.partitionBy(col("h")).orderBy(col("doc_id").asc)) === 1)
         .cast("int"))
       .select(col("doc_id"), col("exact_rep"))
-    val d = decontaminate(docs, evalMod = evalMod, evalRes = evalRes)
+    val d = decontaminate(docs, evalMod, evalRes)
     qr.join(p, "doc_id").join(u, "doc_id").join(e, "doc_id")
       .join(d, Seq("doc_id"), "left")
       .na.fill(0L, Seq("n_matched"))
       .withColumn("is_eval", (col("doc_id") % evalMod === evalRes).cast("int"))
-      .withColumn("q_keep", (col("quality") >= qualityMin).cast("int"))
+      .withColumn("q_keep", (col("quality") >= QualityMin).cast("int"))
       .withColumn("keep",
         (col("q_keep") === 1 && col("rep_keep") === 1 && col("ppl_keep") === 1 &&
           col("url_rep") === 1 && col("exact_rep") === 1 &&
@@ -1937,8 +1944,7 @@ object TextOps {
     * the token-for-token arithmetic of its standalone mirror, rebased from
     * `documents` onto the fixture corpus `aug2`. Multi-consumer CTEs are
     * MATERIALIZED (DuckDB re-inlines otherwise — see dupClustersSql). */
-  def curateSql(qualityMin: Double = 0.75, keepBelowQ: Long = 3912000L,
-                n: Int = 5, evalMod: Long = 41L, evalRes: Long = 3L): String =
+  def curateSql: String =
     s"""WITH $augCte,
        |aug2 AS MATERIALIZED (
        |  SELECT doc_id, text FROM aug
@@ -1971,7 +1977,7 @@ object TextOps {
        |                   ELSE 0.0 END AS dbf
        |       FROM rm),
        |rk AS (SELECT doc_id,
-       |              CAST(CASE WHEN twf <= 0.30 AND dbf <= 0.50
+       |              CAST(CASE WHEN twf <= ${BigDecimal(MaxTopWordFrac).setScale(2)} AND dbf <= ${BigDecimal(MaxDupBigramFrac).setScale(2)}
        |                        THEN 1 ELSE 0 END AS INTEGER) AS rep_keep
        |       FROM rf),
        |tf AS MATERIALIZED (
@@ -1992,7 +1998,7 @@ object TextOps {
        |pk AS (
        |  SELECT doc_id,
        |         CAST(CAST(round(CAST(-sum_q AS DOUBLE) / CAST(n_tok AS DOUBLE)) AS BIGINT)
-       |              <= $keepBelowQ AS INTEGER) AS ppl_keep
+       |              <= $KeepBelowQ AS INTEGER) AS ppl_keep
        |  FROM pagg),
        |uu AS (
        |  SELECT doc_id,
@@ -2025,24 +2031,24 @@ object TextOps {
        |       FROM aug2),
        |sh AS MATERIALIZED (
        |  SELECT doc_id, unnest(
-       |    CASE WHEN len(toks) >= $n
+       |    CASE WHEN len(toks) >= $ShingleN
        |         THEN list_distinct(list_transform(
-       |                generate_series(1, len(toks) - ${n - 1}),
-       |                i -> array_to_string(list_slice(toks, i, i + ${n - 1}), ' ')))
+       |                generate_series(1, len(toks) - ${ShingleN - 1}),
+       |                i -> array_to_string(list_slice(toks, i, i + ${ShingleN - 1}), ' ')))
        |         ELSE CAST([] AS VARCHAR[]) END) AS s
        |  FROM t),
-       |dev AS (SELECT DISTINCT s FROM sh WHERE doc_id % $evalMod = $evalRes),
-       |dtr AS (SELECT doc_id, s FROM sh WHERE doc_id % $evalMod <> $evalRes),
+       |dev AS (SELECT DISTINCT s FROM sh WHERE doc_id % $EvalMod = $EvalRes),
+       |dtr AS (SELECT doc_id, s FROM sh WHERE doc_id % $EvalMod <> $EvalRes),
        |dc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matched
        |       FROM dtr JOIN dev USING (s) GROUP BY 1)
        |SELECT q.doc_id, q.n_tok, q.quality,
-       |       CAST(CASE WHEN q.quality >= $qualityMin THEN 1 ELSE 0 END AS INTEGER) AS q_keep,
+       |       CAST(CASE WHEN q.quality >= $QualityMin THEN 1 ELSE 0 END AS INTEGER) AS q_keep,
        |       rk.rep_keep, pk.ppl_keep, ur.url_rep, ee.exact_rep,
-       |       CAST(CASE WHEN q.doc_id % $evalMod = $evalRes THEN 1 ELSE 0 END AS INTEGER) AS is_eval,
+       |       CAST(CASE WHEN q.doc_id % $EvalMod = $EvalRes THEN 1 ELSE 0 END AS INTEGER) AS is_eval,
        |       COALESCE(dc.n_matched, 0) AS n_matched,
-       |       CAST(CASE WHEN q.quality >= $qualityMin AND rk.rep_keep = 1
+       |       CAST(CASE WHEN q.quality >= $QualityMin AND rk.rep_keep = 1
        |                  AND pk.ppl_keep = 1 AND ur.url_rep = 1 AND ee.exact_rep = 1
-       |                  AND q.doc_id % $evalMod <> $evalRes
+       |                  AND q.doc_id % $EvalMod <> $EvalRes
        |                  AND COALESCE(dc.n_matched, 0) = 0
        |                 THEN 1 ELSE 0 END AS INTEGER) AS keep
        |FROM q JOIN rk USING (doc_id) JOIN pk USING (doc_id)
@@ -2181,6 +2187,9 @@ object TextOps {
   // duplicated substrings of length >= k at k-gram resolution.
   // =================================================================
 
+  /** The span length k. */
+  final val SubstrK = 10
+
   /** Scale shape = [[lineDedup]]'s skeleton one level down (shingles, not
     * lines): survival is the associative min(struct(doc_id, pos)) per
     * sha2(shingle) — map-side partial agg, so a viral quote repeated 10^8
@@ -2189,9 +2198,10 @@ object TextOps {
     * dup starts are collected once (docs with none never join), then a
     * codegen'd HOF filter drops tokens covered by any [s, s+k) span. The
     * doc-keyed joins after the first exchange co-partition. */
-  def dedupSubstr(docs: DataFrame, k: Int = 10, saltS: Int = 8,
+  def dedupSubstr(docs: DataFrame, saltS: Int = 8,
                   hotK: Int = 16, hotThreshold: Long = 100000L): DataFrame = {
     import graft.pipeline.Skew
+    val k = SubstrK
     val toks = docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
       .withColumn("n", size(col("toks")))
     // (pos, hash) per k-token shingle; 0-based start positions. The 32-byte
@@ -2232,16 +2242,16 @@ object TextOps {
     * dup starts explode into their k covered positions and surviving
     * tokens anti-join the cover — integer/set logic only, so the two
     * constructions cannot diverge. */
-  def dedupSubstrSql(k: Int = 10): String =
+  def dedupSubstrSql: String =
     s"""WITH $augCte,
        |t AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS toks FROM aug),
        |sh AS MATERIALIZED (
        |  SELECT doc_id, u.pos AS pos, u.s AS s FROM (
        |    SELECT doc_id, unnest(
-       |      CASE WHEN len(toks) >= $k
-       |           THEN list_transform(generate_series(1, len(toks) - ${k - 1}),
+       |      CASE WHEN len(toks) >= $SubstrK
+       |           THEN list_transform(generate_series(1, len(toks) - ${SubstrK - 1}),
        |                  i -> struct_pack(pos := i - 1,
-       |                         s := array_to_string(list_slice(toks, i, i + ${k - 1}), ' ')))
+       |                         s := array_to_string(list_slice(toks, i, i + ${SubstrK - 1}), ' ')))
        |           ELSE CAST([] AS STRUCT(pos BIGINT, s VARCHAR)[]) END) AS u
        |    FROM t)),
        |dups AS (
@@ -2252,7 +2262,7 @@ object TextOps {
        |  WHERE rn > 1),
        |cov AS (
        |  SELECT DISTINCT doc_id, pos + u AS j
-       |  FROM dups, (SELECT unnest(generate_series(0, ${k - 1})) AS u)),
+       |  FROM dups, (SELECT unnest(generate_series(0, ${SubstrK - 1})) AS u)),
        |tok AS (
        |  SELECT doc_id, u.j AS j, u.t AS t FROM (
        |    SELECT doc_id, unnest(list_transform(generate_series(1, len(toks)),
@@ -2288,17 +2298,19 @@ object TextOps {
         floor(sqrt((col("doc_id") % 9409).cast("double") + lit(1.0))).cast("long").cast("string"),
         lit(".example.org/doc/"), col("doc_id").cast("string")).as("url"))
 
+  final val DomainRepeatCap = 4L
+
   /** Per-domain stats + mixture weights. α is fixed at 1/2 (temperature
     * T = 2) because sqrt is CORRECTLY ROUNDED on both engines — a general
     * pow(x, α) = exp(α·ln x) is not, so no other α can be oracle-exact.
     * The normalizing sum runs over 1e9-quantized integer shares (the
     * ann_cosine discipline): an integer sum is order-independent across
     * partial aggregation, where a double sum's value depends on addition
-    * order. `repeat_factor` = min(cap, ceil(max_n / n_i)) is the exact
+    * order. `repeat_factor` = min([[DomainRepeatCap]], ceil(max_n / n_i)) is the exact
     * "repeat rare domains" form. One exchange on the host key (short
     * string, map-side partial aggs); the normalizer is a 2-value
     * broadcast. */
-  def domainMix(pages: DataFrame, cap: Long = 4L): DataFrame = {
+  def domainMix(pages: DataFrame): DataFrame = {
     // host stats feed both the normalizer aggregate and the weight
     // projection: persisted (host-dim-sized), or the corpus-wide groupBy
     // scan runs twice.
@@ -2313,13 +2325,13 @@ object TextOps {
       .select(col("host"), col("n_docs"), col("sum_chars"), col("share_q"),
         round(col("share_q").cast("double") / col("tot_q").cast("double"), 6).as("mix_weight"),
         least(ceil(col("max_n").cast("double") / col("n_docs").cast("double")).cast("long"),
-          lit(cap)).as("repeat_factor"))
+          lit(DomainRepeatCap)).as("repeat_factor"))
   }
 
   /** Oracle mirror of [[domainMix]] ∘ [[syntheticHosts]] — token-for-token
     * arithmetic (sqrt share quantization, integer normalizer, ceil
     * repetition cap). */
-  def domainMixSql(cap: Long = 4L): String =
+  def domainMixSql: String =
     s"""WITH u AS (
        |  SELECT doc_id, n_chars,
        |         'https://site' ||
@@ -2337,7 +2349,7 @@ object TextOps {
        |t AS (SELECT CAST(sum(share_q) AS BIGINT) AS tot_q, max(n_docs) AS max_n FROM q)
        |SELECT host, n_docs, sum_chars, share_q,
        |       round(CAST(share_q AS DOUBLE) / CAST(tot_q AS DOUBLE), 6) AS mix_weight,
-       |       least(CAST(ceil(CAST(max_n AS DOUBLE) / CAST(n_docs AS DOUBLE)) AS BIGINT), $cap) AS repeat_factor
+       |       least(CAST(ceil(CAST(max_n AS DOUBLE) / CAST(n_docs AS DOUBLE)) AS BIGINT), $DomainRepeatCap) AS repeat_factor
        |FROM q, t""".stripMargin
 
   // =================================================================
@@ -2426,13 +2438,15 @@ object TextOps {
   // decimal/HUGEINT until the final double division + round.
   // =================================================================
 
-  /** Least-squares fit of ln(freq) on ln(rank) over the top-k vocabulary.
+  final val ZipfK = 1000
+
+  /** Least-squares fit of ln(freq) on ln(rank) over the top-[[ZipfK]] vocabulary.
     * Returns one row: n (terms fitted), slope, intercept. Mirrored in
     * [[zipfFitSql]]. */
-  def zipfFit(docs: DataFrame, k: Int = 1000): DataFrame = {
+  def zipfFit(docs: DataFrame): DataFrame = {
     val freq = docs.select(explode(split(col("text"), " ")).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-    val top = freq.orderBy(col("cnt").desc, col("term").asc).limit(k)
+    val top = freq.orderBy(col("cnt").desc, col("term").asc).limit(ZipfK)
     val ranked = top.withColumn("rnk", row_number().over(
       Window.orderBy(col("cnt").desc, col("term").asc)))
     val q = ranked.select(
@@ -2452,10 +2466,10 @@ object TextOps {
 
   /** Oracle mirror of [[zipfFit]]: DuckDB BIGINT sums widen to HUGEINT
     * (exact), same quantized coordinates, same closed forms. */
-  def zipfFitSql(k: Int = 1000): String =
+  def zipfFitSql: String =
     s"""WITH t AS (SELECT unnest(string_split(text, ' ')) AS term FROM documents),
        |f AS (SELECT term, CAST(count(*) AS BIGINT) AS cnt FROM t GROUP BY 1),
-       |top AS (SELECT term, cnt FROM f ORDER BY cnt DESC, term ASC LIMIT $k),
+       |top AS (SELECT term, cnt FROM f ORDER BY cnt DESC, term ASC LIMIT $ZipfK),
        |r AS (SELECT cnt, CAST(row_number() OVER (ORDER BY cnt DESC, term ASC) AS BIGINT) AS rnk
        |      FROM top),
        |q AS (SELECT CAST(round(ln(CAST(rnk AS DOUBLE)) * 1000000.0, 0) AS BIGINT) AS xq,

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import graft.index.TableIO
@@ -100,15 +101,24 @@ object Checkpoint {
 
   /** Run every not-yet-completed stage of the chain over `input`, each over
     * the previous stage's table. Only the first stage counts its input
-    * (`rows_in`); later stages take the previous stage's `rows`. Returns the
-    * stage names processed this run. */
+    * (`rows_in`); later stages take the previous stage's `rows`. A stage
+    * reads the table this run just wrote with the schema of the frame it
+    * wrote, so no read infers a schema; only a resumed run's first pending
+    * stage reads its input through [[TableIO.read]]. Returns the stage
+    * names processed this run. */
   def runStages(spark: SparkSession, input: DataFrame, stages: Seq[(String, DataFrame => DataFrame)],
-                outDir: String, failAfter: Option[Int] = None): Seq[String] =
+                outDir: String, failAfter: Option[Int] = None): Seq[String] = {
+    var written = Map.empty[String, StructType] // stage → schema of the frame this run wrote
     run(outDir, "stage", stages.zipWithIndex.map { case ((name, apply), i) =>
-      def in = if (i == 0) input else spark.read.parquet(s"$outDir/stage=${stages(i - 1)._1}")
+      def in = if (i == 0) input else {
+        val prevStage = stages(i - 1)._1
+        val dir = s"$outDir/stage=$prevStage"
+        written.get(prevStage).fold(TableIO.read(spark, dir))(spark.read.schema(_).parquet(dir))
+      }
       UnitSpec(name, s"stage=$name", prev => s""""rows_in": ${prev.getOrElse(in.count())}, """,
-        () => apply(in))
+        () => { val out = apply(in); written += name -> out.schema; out })
     }, failAfter)
+  }
 
   /** Union of the completed range outputs: the directories of the ranges
     * `_lineage.jsonl` marks done, read by name (a `range=*` glob would also

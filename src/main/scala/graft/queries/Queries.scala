@@ -612,8 +612,11 @@ object Queries {
       .withColumn("geom_wkb",
         F.rectWkb(col("west"), col("south"), col("east"), col("north")))
 
-  def polyOverlap(spark: SparkSession, sfDir: String, z: Int = 6): DataFrame =
-    polyOverlapOf(paddedCustFeatures(spark, sfDir), z)
+  /** Blocking zoom of the driver's overlap, segment and snap joins. */
+  final val JoinZ = 6
+
+  def polyOverlap(spark: SparkSession, sfDir: String): DataFrame =
+    polyOverlapOf(paddedCustFeatures(spark, sfDir), JoinZ)
 
   /** The GENERAL-polygon overlap join: same PBSM blocking and
     * reference-point dedup as [[polyOverlapOf]], but over the features'
@@ -672,9 +675,9 @@ object Queries {
 
   /** Driver query: the general kernel over the padded rect features —
     * row-identical to `poly_overlap` (shares its oracle). */
-  def polyOverlapGeom(spark: SparkSession, sfDir: String, z: Int = 6): DataFrame =
+  def polyOverlapGeom(spark: SparkSession, sfDir: String): DataFrame =
     polyOverlapGeomOf(paddedCustFeatures(spark, sfDir)
-      .select(col("feature_id"), col("geom_wkb")), z)
+      .select(col("feature_id"), col("geom_wkb")), JoinZ)
 
   /** Frame (donut) features: shell rect + rect HOLE inset by the band
     * width. TWO features per customer — a big frame (id 2k: the
@@ -711,9 +714,9 @@ object Queries {
     * |R| − |R∩Ha| − |R∩Hb| + |R∩Ha∩Hb| > 0 for R = shellA∩shellB and
     * H the hole rects (open/closed boundary differences are measure-zero
     * for rect unions, so area positivity ⇔ open-interior overlap). */
-  def polyOverlapHoles(spark: SparkSession, sfDir: String, z: Int = 6): DataFrame =
+  def polyOverlapHoles(spark: SparkSession, sfDir: String): DataFrame =
     polyOverlapGeomOf(frameFeatures(spark, sfDir)
-      .select(col("feature_id"), col("geom_wkb")), z)
+      .select(col("feature_id"), col("geom_wkb")), JoinZ)
 
   def polyOverlapHolesSql: String = {
     // clamped rect-intersection area over quantized BIGINT bounds
@@ -921,8 +924,8 @@ object Queries {
       .select(col("g.seg_id").as("seg_id"), col("g.x1").as("x1"),
         col("g.y1").as("y1"), col("g.x2").as("x2"), col("g.y2").as("y2"))
 
-  def segJoin(spark: SparkSession, sfDir: String, z: Int = 6): DataFrame =
-    segJoinOf(custSegments(spark, sfDir), z)
+  def segJoin(spark: SparkSession, sfDir: String): DataFrame =
+    segJoinOf(custSegments(spark, sfDir), JoinZ)
 
   /** Segment×segment proper-crossing join over any frame of
     * (seg_id, x1, y1, x2, y2) degree-coordinate segments on the
@@ -2897,30 +2900,30 @@ object Queries {
     * (point, segment) pair can surface once per shared block cell —
     * top-1 consumers are unaffected, top-k consumers dedupe on the pair
     * key first. */
-  private def snapCands(spark: SparkSession, pts0: DataFrame, z: Int = 6): DataFrame = {
+  private def snapCands(spark: SparkSession, pts0: DataFrame): DataFrame = {
     val roads = roadSegs(spark)
       .withColumn("cell", explode(F.tileCover(F.rectWkb(
         (least(col("ax"), col("bx")) - 1) / 1000.0,
         (least(col("ay"), col("by")) - 1) / 1000.0,
         (greatest(col("ax"), col("bx")) + 1) / 1000.0,
-        (greatest(col("ay"), col("by")) + 1) / 1000.0), lit(z))))
+        (greatest(col("ay"), col("by")) + 1) / 1000.0), lit(JoinZ))))
     // R + 1 milli of slack over the lat excursion, in degrees (exactly
     // representable enough: the slack dominates the double fuzz by 10^10)
     val rDeg = (SnapR + 1) / 1000.0
     val keep = pts0.columns.map(col)
     val pts = pts0
-      .withColumn("c0", F.cellAt(lit(z), evLon(col("event_id")), evLat(col("event_id"))))
+      .withColumn("c0", F.cellAt(lit(JoinZ), evLon(col("event_id")), evLat(col("event_id"))))
       // mercator row span of the R-excursion (y grows as lat falls)
       .withColumn("yTop",
-        cellY(F.cellAt(lit(z), evLon(col("event_id")), evLat(col("event_id")) + lit(rDeg))))
+        cellY(F.cellAt(lit(JoinZ), evLon(col("event_id")), evLat(col("event_id")) + lit(rDeg))))
       .withColumn("yBot",
-        cellY(F.cellAt(lit(z), evLon(col("event_id")), evLat(col("event_id")) - lit(rDeg))))
+        cellY(F.cellAt(lit(JoinZ), evLon(col("event_id")), evLat(col("event_id")) - lit(rDeg))))
       .withColumn("dxv", explode(sequence(lit(-1L), lit(1L))))
       .withColumn("yv", explode(sequence(col("yTop"), col("yBot"))))
       .withColumn("xv", cellX(col("c0")) + col("dxv"))
       // column index stays on the 64-wide grid (nothing spans ±180°)
       .filter(col("xv") >= 0 && col("xv") < 64)
-      .select(keep :+ cellPack(lit(z), col("xv"), col("yv")).as("cell"): _*)
+      .select(keep :+ cellPack(lit(JoinZ), col("xv"), col("yv")).as("cell"): _*)
     val dx = col("bx") - col("ax")
     val dy = col("by") - col("ay")
     val apx = col("px") - col("ax")
@@ -2949,14 +2952,14 @@ object Queries {
       .filter(col("d2") <= lit((SnapR * SnapR).toDouble))
   }
 
-  def snapPoints(spark: SparkSession, sfDir: String, z: Int = 6): DataFrame = {
+  def snapPoints(spark: SparkSession, sfDir: String): DataFrame = {
     val pts = TableIO.read(spark, s"$sfDir/events.parquet")
       .select(col("event_id"),
         evLattice.x.milli(col("event_id")).as("px"),
         evLattice.y.milli(col("event_id")).as("py"))
     val w = Window.partitionBy(col("event_id"))
       .orderBy(col("d2").asc, col("seg_id").asc)
-    snapCands(spark, pts, z)
+    snapCands(spark, pts)
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("event_id"), col("seg_id"), col("d2n"), col("d2d"))
   }
@@ -3652,7 +3655,11 @@ object Queries {
   // BF/BSP round; frontier frames localCheckpoint (iterative-loop rule).
   // =================================================================
 
-  def ssspKhop(spark: SparkSession, sfDir: String, rounds: Int = 4): DataFrame = {
+  /** Relaxation rounds of [[ssspKhop]] and its SQL twin: distances over
+    * paths of at most SsspRounds hops. */
+  final val SsspRounds = 4
+
+  def ssspKhop(spark: SparkSession, sfDir: String): DataFrame = {
     val edges = odFlows(spark, sfDir)
       .filter(col("o_cell") =!= col("d_cell"))
       .select(col("o_cell"), col("d_cell"),
@@ -3661,7 +3668,7 @@ object Queries {
     val src = edges.agg(min(col("o_cell"))).collect()(0).getLong(0)
     var dist = spark.range(1)
       .select(lit(src).as("cell"), lit(0L).as("d")).localCheckpoint()
-    for (_ <- 1 to rounds) {
+    for (_ <- 1 to SsspRounds) {
       val relax = dist.withColumnRenamed("cell", "o_cell")
         .join(edges, "o_cell")
         .select(col("d_cell").as("cell"), (col("d") + col("w")).as("d"))
@@ -3672,7 +3679,7 @@ object Queries {
   }
 
   def ssspKhopSql: String = {
-    val rounds = (1 to 4).map { i =>
+    val rounds = (1 to SsspRounds).map { i =>
       s"""d$i AS MATERIALIZED (
          |  SELECT cell, min(d) AS d FROM (
          |    SELECT cell, d FROM d${i - 1}
@@ -3687,7 +3694,7 @@ object Queries {
        |src AS (SELECT min(o_cell) AS s FROM ew),
        |d0 AS MATERIALIZED (SELECT s AS cell, CAST(0 AS BIGINT) AS d FROM src),
        |$rounds
-       |SELECT cell, CAST(d AS BIGINT) AS d FROM d4""".stripMargin
+       |SELECT cell, CAST(d AS BIGINT) AS d FROM d$SsspRounds""".stripMargin
   }
 
   // =================================================================

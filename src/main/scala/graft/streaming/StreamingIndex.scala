@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.index.IndexBuild
+import graft.ops.TextOps
 
 /** J: incremental index maintenance as Structured Streaming (SURVEY.md §2.J
   * — optional extension; the reference indexes via a back-pressured Node
@@ -17,6 +18,13 @@ import graft.index.IndexBuild
   * (batch_id) subdir (reprocessing a batch overwrites, not duplicates).
   */
 object StreamingIndex {
+
+  /** The event-time watermark of the stateful streams, the zoom of the
+    * per-cell streams, the session gap and the rate window. */
+  final val Watermark = "10 minutes"
+  final val CellZ = 6
+  final val SessionGapMs = 5 * 60 * 1000L
+  final val RateWindow = "5 minutes"
 
   def start(spark: SparkSession, features: DataFrame, z: Int,
             outDir: String, checkpointDir: String): StreamingQuery =
@@ -53,13 +61,13 @@ object StreamingIndex {
     * can't change answers (asserted row-identical to the batch path in
     * IndexSpec). */
   def geocodeStream(pages: DataFrame, gaz: DataFrame,
-                    outDir: String, checkpointDir: String, k: Int = 5): StreamingQuery =
+                    outDir: String, checkpointDir: String): StreamingQuery =
     pages.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          graft.ops.Geocode.forward(batch, gaz, k)
+          graft.ops.Geocode.forward(batch, gaz)
             .write.mode("overwrite")
             .parquet(s"$outDir/batch=$batchId")
         }
@@ -83,16 +91,16 @@ object StreamingIndex {
     * must never be the state/shuffle key), bounded by the event-time
     * watermark so state for long-gone duplicates ages out instead of
     * growing with the 10^12-row stream. */
-  def dedupStream(pages: DataFrame, watermark: String = "10 minutes"): DataFrame =
+  def dedupStream(pages: DataFrame): DataFrame =
     pages
       .withColumn("text_sha", sha2(col("text"), 256))
-      .withWatermark("warc_ts", watermark)
+      .withWatermark("warc_ts", Watermark)
       .dropDuplicatesWithinWatermark("text_sha")
 
   /** Per-cell SESSION windows via flatMapGroupsWithState (the custom-state
     * op the fixed-window aggregations can't express): consecutive page
     * arrivals in a cell belong to one session while gaps stay under
-    * `gapMs`; a session closes — and emits (cell, start, end, n_pages) —
+    * [[SessionGapMs]]; a session closes — and emits (cell, start, end, n_pages) —
     * either when a later event arrives past the gap or when the event-time
     * watermark passes end+gap (EventTimeTimeout). State per cell is one
     * {start, end, n} triple, bounded by the live-cell count, aged out by
@@ -102,15 +110,14 @@ object StreamingIndex {
   // NOT private: the state encoder's generated code must see the accessors
   final case class SessState(start: Long, end: Long, n: Long)
 
-  def cellSessions(pages: DataFrame, z: Int = 6, gapMs: Long = 5 * 60 * 1000L,
-                   watermark: String = "10 minutes"): org.apache.spark.sql.Dataset[CellSession] = {
+  def cellSessions(pages: DataFrame): org.apache.spark.sql.Dataset[CellSession] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = pages.sparkSession
     import spark.implicits._
     def toTs(ms: Long) = new java.sql.Timestamp(ms)
     pages
-      .withColumn("cell", graft.functions.F.cellAt(lit(z), col("qlon"), col("qlat")))
-      .withWatermark("warc_ts", watermark)
+      .withColumn("cell", graft.functions.F.cellAt(lit(CellZ), col("qlon"), col("qlat")))
+      .withWatermark("warc_ts", Watermark)
       .select(col("cell").as[Long], col("warc_ts").as[java.sql.Timestamp])
       .groupByKey(_._1)
       .flatMapGroupsWithState[SessState, CellSession](
@@ -126,7 +133,7 @@ object StreamingIndex {
             var cur = state.getOption
             ts.foreach { t =>
               cur match {
-                case Some(s) if t <= s.end + gapMs =>
+                case Some(s) if t <= s.end + SessionGapMs =>
                   cur = Some(SessState(s.start, math.max(s.end, t), s.n + 1))
                 case Some(s) =>
                   closed += CellSession(cell, toTs(s.start), toTs(s.end), s.n)
@@ -137,7 +144,7 @@ object StreamingIndex {
             }
             cur.foreach { s =>
               state.update(s)
-              state.setTimeoutTimestamp(s.end + gapMs)
+              state.setTimeoutTimestamp(s.end + SessionGapMs)
             }
             closed.iterator
           }
@@ -204,13 +211,11 @@ object StreamingIndex {
   /** Streaming per-cell page counts with watermarked event-time windows —
     * the hot-cell statistics (E5) maintained incrementally: arriving pages
     * carry a proximity point, the aggregation keys on its z6 cell. */
-  def cellRate(pages: DataFrame, z: Int = 6,
-               watermark: String = "10 minutes",
-               window: String = "5 minutes"): DataFrame =
+  def cellRate(pages: DataFrame): DataFrame =
     pages
-      .withColumn("cell", graft.functions.F.cellAt(lit(z), col("qlon"), col("qlat")))
-      .withWatermark("warc_ts", watermark)
-      .groupBy(org.apache.spark.sql.functions.window(col("warc_ts"), window),
+      .withColumn("cell", graft.functions.F.cellAt(lit(CellZ), col("qlon"), col("qlat")))
+      .withWatermark("warc_ts", Watermark)
+      .groupBy(window(col("warc_ts"), RateWindow),
         col("cell"))
       .agg(count(lit(1)).as("pages"))
       .select(col("window.start").as("win_start"), col("cell"), col("pages"))
@@ -247,26 +252,22 @@ object StreamingIndex {
     * Emits the KEPT pages (the scrub's output corpus), append-mode safe. */
   def curateStream(pages: DataFrame,
                    lm: org.apache.spark.broadcast.Broadcast[graft.index.TermStatsData],
-                   evalShingles: org.apache.spark.broadcast.Broadcast[Array[Long]],
-                   n: Int = 5,
-                   qualityMin: Double = 0.75,
-                   keepBelowQ: Long = 3912000L,
-                   watermark: String = "10 minutes"): DataFrame =
-    graft.ops.TextOps.perRowGates(pages)
-      .filter(col("quality") >= qualityMin && col("rep_keep") === 1)
+                   evalShingles: org.apache.spark.broadcast.Broadcast[Array[Long]]): DataFrame =
+    TextOps.perRowGates(pages)
+      .filter(col("quality") >= TextOps.QualityMin && col("rep_keep") === 1)
       .withColumn("ptoks", split(col("text"), " "))
       .filter(size(col("ptoks")) > 0)
       .withColumn("nll_mean_q",
         round((-graft.index.TermStats.termWeightSum(col("ptoks"), lm)).cast("double") /
           size(col("ptoks")).cast("long").cast("double")).cast("long"))
-      .filter(col("nll_mean_q") <= keepBelowQ)
+      .filter(col("nll_mean_q") <= TextOps.KeepBelowQ)
       .withColumn("n_matched",
-        size(filter(graft.functions.F.shingleHashes(col("text"), n),
+        size(filter(graft.functions.F.shingleHashes(col("text"), TextOps.ShingleN),
           h => graft.index.CellIndex.longSetContains(h, evalShingles))).cast("long"))
       .filter(col("n_matched") === 0)
       .drop("ptoks")
-      .withColumn("canon_key", graft.ops.TextOps.canonicalUrl(col("url")))
-      .withWatermark("warc_ts", watermark)
+      .withColumn("canon_key", TextOps.canonicalUrl(col("url")))
+      .withWatermark("warc_ts", Watermark)
       .dropDuplicatesWithinWatermark("canon_key")
       .withColumn("text_sha", sha2(col("text"), 256))
       .dropDuplicatesWithinWatermark("text_sha")

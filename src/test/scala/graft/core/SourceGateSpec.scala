@@ -61,6 +61,22 @@ class SourceGateSpec extends AnyFunSuite {
     assert(found.isEmpty, found.mkString("\n"))
   }
 
+  /** [[hits]] of `raw` outside the one line of TextOps that defines `owner`. */
+  private def hitsBesides(raw: Regex, owner: String): Seq[String] =
+    hits(raw).filterNot(h => h.contains("TextOps.scala:") && h.contains(s": final val $owner = "))
+
+  test("the curation eval slice's modulus 41L is written only as TextOps.EvalMod") {
+    // CurationJob, Bench and every eval-slice operator read the constant;
+    // a second literal would let the gates and the oracle drift apart
+    val found = hitsBesides("""\b41L\b""".r, "EvalMod")
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("the perplexity bound 3912000L is written only as TextOps.KeepBelowQ") {
+    val found = hitsBesides("""\b3912000L\b""".r, "KeepBelowQ")
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
   test("the run ledger is written and parsed only in Checkpoint") {
     // one `_lineage.jsonl` line format, one reader of the done units
     val found = hits("""_lineage\.jsonl""".r, Set("Checkpoint.scala"))

@@ -66,15 +66,18 @@ class CurationJobSpec extends SparkTestBase {
     assert(keeps.nonEmpty && keeps.subsetOf(survivors))
   }
 
-  /** One uninterrupted run's output dir and the call sites of the `count`
-    * actions it issued. Each action is one SQL execution, described by its
-    * call site; under AQE its jobs run on other threads, so the jobs' own
-    * stage names do not show the action. */
-  private lazy val counted: (String, Seq[String]) = {
+  /** One uninterrupted run's output dir, the call sites of the `count`
+    * actions it issued, and the names of the jobs it ran outside any SQL
+    * execution. Each action is one SQL execution, described by its call
+    * site; under AQE its jobs run on other threads, so the jobs' own stage
+    * names do not show the action. A parquet schema inference is a job of
+    * its own, outside any SQL execution. */
+  private lazy val counted: (String, Seq[String], Seq[String]) = {
     val out = Files.createTempDirectory("curjob_d").toString
     val docs = fixture
     val sc = spark.sparkContext
     val counts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val bare = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
         case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -82,16 +85,19 @@ class CurationJobSpec extends SparkTestBase {
           counts.add(s.description.stripPrefix("count at ").takeWhile(_ != ':'))
         case _ =>
       }
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).forall(_.getProperty("spark.sql.execution.id") == null))
+          bare.add(e.stageInfos.headOption.fold("?")(_.name))
     }
     org.apache.spark.TestListenerBus.drain(sc)
     sc.addSparkListener(l)
     try { CurationJob.run(spark, docs, out); org.apache.spark.TestListenerBus.drain(sc) }
     finally sc.removeSparkListener(l)
-    (out, counts.asScala.toSeq)
+    (out, counts.asScala.toSeq, bare.asScala.toSeq)
   }
 
   test("each stage's rows_in is the previous stage's rows; the first stage's the fixture count") {
-    val (out, _) = counted
+    val (out, _, _) = counted
     val lines = Files.readAllLines(Paths.get(out, "_lineage.jsonl")).asScala.toSeq
     def field(l: String, k: String) = ("\"" + k + "\": (\\d+)").r.findFirstMatchIn(l).get.group(1).toLong
     assert(lines.map("\"stage\": \"([a-z_]+)\"".r.findFirstMatchIn(_).get.group(1)) ==
@@ -104,5 +110,9 @@ class CurationJobSpec extends SparkTestBase {
     // the other count is the perplexity gate's own vocabulary-size probe
     // (TextOps.lmPerplexity picks broadcast vs join with it)
     assert(counted._2.sorted == Seq("Checkpoint.scala", "TextOps.scala"), counted._2)
+  }
+
+  test("a fresh curation run infers no schema: each stage reads the last with its written schema") {
+    assert(counted._3.isEmpty, counted._3)
   }
 }

@@ -148,7 +148,7 @@ class IndexSpec extends SparkTestBase {
     val t1 = java.sql.Timestamp.valueOf("2026-01-01 00:01:00")
     mem.addData((t0, 1L, "alpha page body"), (t0, 2L, "beta page body"),
       (t1, 3L, "alpha page body")) // duplicate text within the watermark
-    val out = graft.streaming.StreamingIndex.dedupStream(df, "10 minutes")
+    val out = graft.streaming.StreamingIndex.dedupStream(df)
       .writeStream.format("memory").queryName("dedup_out")
       .outputMode("append").start()
     out.processAllAvailable(); out.stop()

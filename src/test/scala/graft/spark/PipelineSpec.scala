@@ -247,6 +247,18 @@ class PipelineSpec extends SparkTestBase {
     val id1 = TableIO.commit(frame(10), table, "k", Seq("k"), 2)
     val id2 = TableIO.commit(frame(25), table, "k", Seq("k"), 2)
     assert(id1 == 1L && id2 == 2L)
+    // each manifest's per-file rows/lo/hi are a recomputed per-file aggregate
+    def name(f: String) = f.substring(f.lastIndexOf('/') + 1)
+    Seq(id1, id2).foreach { id =>
+      val recomputed = TableIO.readAsOf(spark, table, id)
+        .groupBy(input_file_name().as("f")).agg(count(lit(1)), min("k"), max("k")).collect()
+        .map(r => name(r.getString(0)) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+      val manifest = java.nio.file.Files.readString(java.nio.file.Paths.get(table, s"_manifest-$id.json"))
+      val listed = """\{"file": "([^"]+)", "rows": (\d+), "lo": (-?\d+), "hi": (-?\d+)\}""".r
+        .findAllMatchIn(manifest)
+        .map(m => name(m.group(1)) -> ((m.group(2).toLong, m.group(3).toLong, m.group(4).toLong))).toMap
+      assert(listed.size == 2 && listed == recomputed, manifest)
+    }
     assert(TableIO.currentSnapshotId(table).contains(2L))
     assert(TableIO.readCurrent(spark, table).count() == 25)
     // time travel: v1 is intact and byte-identical in content
@@ -273,6 +285,31 @@ class PipelineSpec extends SparkTestBase {
     assert(dropped.contains(1L) && !dropped.contains(id4))
     assert(TableIO.readCurrent(spark, table).count() == 7)
     intercept[Exception] { TableIO.readAsOf(spark, table, id1).count() }
+  }
+
+  test("a commit takes its manifest stats from the footers: the write is its only SQL execution") {
+    import spark.implicits._
+    val table = tmp("footerstats")
+    val sc = spark.sparkContext
+    val sql = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val bare = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart => sql.add(s.description)
+        case _ =>
+      }
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).forall(_.getProperty("spark.sql.execution.id") == null))
+          bare.add(e.stageInfos.headOption.fold("?")(_.name))
+    }
+    val data = (0 until 1000).map(i => (i.toLong, i * 7L)).toDF("k", "v")
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try { TableIO.commit(data, table, "k", Seq("k"), 4); org.apache.spark.TestListenerBus.drain(sc) }
+    finally sc.removeSparkListener(l)
+    assert(sql.size == 1 && sql.peek().startsWith("parquet at "), sql)
+    assert(bare.isEmpty, bare) // no schema-inference job either
+    assert(TableIO.readCurrent(spark, table).count() == 1000)
   }
 
   test("snapshot compaction: row-identical, fewer files, layout preserved, old snapshot travelable") {

@@ -344,7 +344,7 @@ class PlanSpec extends SparkTestBase {
   test("embed_kmeans: centroid dims broadcast, corpus never nested-loops, sizes join back broadcast") {
     import graft.ops.Ann
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val p = plan(Ann.kmeansAssign(emb, rounds = 3, nList0 = 16))
+    val p = plan(Ann.kmeansAssign(emb, nList0 = 16))
     // the only acceptable cross join is corpus × broadcast nList-row
     // centroid dim; a CartesianProduct would shuffle the corpus per round
     assert(!p.contains("CartesianProduct"),
@@ -360,7 +360,7 @@ class PlanSpec extends SparkTestBase {
   test("semantic_dedup: intra-cluster pair join shuffles on cid, anti side skinny") {
     import graft.ops.Ann
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val p = plan(Ann.semanticDedup(emb, rounds = 1, nList0 = 16))
+    val p = plan(Ann.semanticDedup(emb, nList0 = 16))
     assert(!p.contains("CartesianProduct"), "pair blocking must ride the cid equi-join")
     assert(p.contains("ShuffledHashJoin") || p.contains("SortMergeJoin"),
       "cells self-join is corpus-sized on both sides — it must shuffle")

@@ -28,7 +28,7 @@ class TextOpsSpec extends SparkTestBase {
   }
 
   test("minhash LSH finds planted near-dups; exact dups pre-collapse to reps") {
-    val pairs = TextOps.dedupMinHash(docsDf, threshold = 0.5)
+    val pairs = TextOps.dedupMinHash(docsDf)
       .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 1L))) // near dup of the rep
     // doc 3 (exact dup of 0) collapses into rep 0 BEFORE banding — it never
@@ -38,7 +38,7 @@ class TextOpsSpec extends SparkTestBase {
   }
 
   test("simhash blocking finds planted near-dup among reps, rejects unrelated") {
-    val pairs = TextOps.dedupSimHash(docsDf, maxHamming = 3)
+    val pairs = TextOps.dedupSimHash(docsDf)
       .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 4L))) // permuted bag-of-words twin: hamming 0
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L)) // pre-collapsed
@@ -53,7 +53,7 @@ class TextOpsSpec extends SparkTestBase {
       (0L, base + " extra word", "en", "s", (base.length + 11).toLong),
       (1L, "completely different words about spark window functions", "en", "s", 56L)
     ) ++ cluster).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val pairs = TextOps.dedupMinHash(docs, threshold = 0.5).collect()
+    val pairs = TextOps.dedupMinHash(docs).collect()
     // 500 identical docs collapse to rep 10; the only near-dup pair is
     // (0, 10) — NOT 500×499/2 intra-cluster pairs + 500 cross pairs
     assert(pairs.length == 1, s"expected 1 rep pair, got ${pairs.length}")
@@ -228,14 +228,14 @@ class TextOpsSpec extends SparkTestBase {
 
   test("k-means: 3 Lloyd rounds assign every vector once with exact sizes, deterministic") {
     val emb = plantedEmb // 240 vectors: 40 planted directions × (1 base + 5 copies)
-    val out = Ann.kmeansAssign(emb, rounds = 3, nList0 = 16).collect()
+    val out = Ann.kmeansAssign(emb, nList0 = 16).collect()
     assert(out.length == 240)
     assert(out.map(_.getLong(0)).distinct.length == 240, "a vector was assigned twice or dropped")
     out.groupBy(_.getInt(1)).foreach { case (cid, rows) =>
       assert(rows.forall(_.getLong(2) == rows.length), s"csize wrong for cid=$cid")
     }
     // training is deterministic end-to-end (integer dots, single-division means)
-    val again = Ann.kmeansAssign(emb, rounds = 3, nList0 = 16).collect()
+    val again = Ann.kmeansAssign(emb, nList0 = 16).collect()
     assert(out.map(r => (r.getLong(0), r.getInt(1))).toSet ==
       again.map(r => (r.getLong(0), r.getInt(1))).toSet)
     // planted cluster-mates co-assign after training: for most of the 40
@@ -250,7 +250,7 @@ class TextOpsSpec extends SparkTestBase {
 
   test("semantic dedup: planted twins dropped, orthogonal bases survive") {
     val emb = plantedEmb
-    val ids = Ann.semanticDedup(emb, rounds = 3, nList0 = 16)
+    val ids = Ann.semanticDedup(emb, nList0 = 16)
       .collect().map(_.getLong(0)).toSet
     // withDupCopies plants an IDENTICAL twin at vec_id + 10^7 for every
     // vec_id % 10 == 0: cos = 1 with its (lower-id) base in the same cell
@@ -419,12 +419,13 @@ class TextOpsSpec extends SparkTestBase {
     assert(got == ids.map(Fingerprint.mix64))
 
     val docs = (0L until 200L).map(i => (i, s"lang${i % 3}")).toDF("doc_id", "lang")
-    val s1 = TextOps.stratifiedSample(docs, perStratum = 7).collect()
+    val k = TextOps.PerStratum // 25 of each stratum's 66 or 67 docs
+    val s1 = TextOps.stratifiedSample(docs).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    assert(s1.size == 21 && s1.groupBy(_._1).forall(_._2.size == 7))
+    assert(s1.size == 3 * k && s1.groupBy(_._1).forall(_._2.size == k))
     // expected = brute-force smallest mix64 ranks per stratum
     val expect = (0L until 200L).groupBy(i => s"lang${i % 3}").flatMap { case (l, is) =>
-      is.sortBy(i => (Fingerprint.mix64(i), i)).take(7).zipWithIndex
+      is.sortBy(i => (Fingerprint.mix64(i), i)).take(k).zipWithIndex
         .map { case (i, r) => (l, i, r + 1L) }
     }.toSet
     assert(s1 == expect)
@@ -484,13 +485,13 @@ class TextOpsSpec extends SparkTestBase {
       (3L, "order order order order"),            // q3 partial
       (4L, "zebra spark")                         // rare term zebra
     ).toDF("doc_id", "text")
-    val bm = TextOps.bm25TopK(docs, TextOps.bm25Queries, k = 3).collect()
+    val bm = TextOps.bm25TopK(docs).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getInt(4))).toSet
     // q0 = {spark, join}: doc 0 repeats both terms in a 4-token doc — must rank 1st
     assert(bm.contains((0, 0L, 1)))
     // q1 = {hash, table, scan}: doc 2 is a 3-token doc of exactly those — rank 1st
     assert(bm.contains((1, 2L, 1)))
-    val kw = TextOps.keywordsTfIdf(docs, m = 1).collect()
+    val kw = TextOps.keywordsTfIdf(docs).filter(col("rnk") === 1).collect()
       .map(r => (r.getLong(0), r.getString(1))).toMap
     // doc 4's top keyword is its corpus-unique term, not the common 'spark'
     assert(kw(4L) == "zebra")
@@ -545,7 +546,7 @@ class TextOpsSpec extends SparkTestBase {
       (1L, s"lead0 lead1 $span after0"),            // copy: the 12 span tokens go
       (2L, "completely unrelated short text here")  // < k tokens: untouched
     ).toDF("doc_id", "text")
-    val out = TextOps.dedupSubstr(pages, k = 10).collect()
+    val out = TextOps.dedupSubstr(pages).collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
     assert(out(0L) == ((s"$span tail0 tail1", 14L, 0L)))
     // doc 1: k=10 shingles at starts 2..4 are dups (the copied span yields
@@ -600,20 +601,21 @@ class TextOpsSpec extends SparkTestBase {
 
   test("dsir_select enriches target-distribution docs under Gumbel resampling") {
     import spark.implicits._
-    // target slice (id % 10 == 3) and half the corpus (even ids) draw from
-    // vocabulary A; the rest from disjoint vocabulary B — importance
-    // weights must rank A-docs above B-docs decisively (the planted gap
-    // of ~20 tokens x ln-ratio dwarfs the Gumbel noise)
-    def isA(i: Long): Boolean = i % 10 == 3 || i % 2 == 0
+    // the eval slice (id % 41 == 3: ids 3, 44, 85, 126, 167) and half the
+    // corpus (even ids) draw from vocabulary A, 103 docs in all; the rest
+    // from disjoint vocabulary B — importance weights must rank A-docs
+    // above B-docs decisively (the planted gap of ~20 tokens x ln-ratio
+    // dwarfs the Gumbel noise), so the top DsirK = 100 are A-docs
+    def isA(i: Long): Boolean = i % TextOps.EvalMod == TextOps.EvalRes || i % 2 == 0
     val docs = (0L until 200L).map { i =>
       val vocab = if (isA(i)) Seq("alpha", "beta", "gamma", "delta", "epsln", "zeta", "eta", "theta")
                   else Seq("omega", "psi", "chi", "phi", "upsil", "tau", "sigma", "rho")
       (i, (0 until 20).map(j => vocab(((i + j) % 8).toInt)).mkString(" "))
     }.toDF("doc_id", "text")
-    val sel = TextOps.dsirSelect(docs, evalMod = 10L, evalRes = 3L, k = 50).collect()
-    assert(sel.length == 50)
+    val sel = TextOps.dsirSelect(docs).collect()
+    assert(sel.length == TextOps.DsirK)
     val (aRows, bRows) = sel.partition(r => isA(r.getLong(0)))
-    assert(aRows.length >= 45, s"only ${aRows.length}/50 selected docs are target-like")
+    assert(aRows.length >= 90, s"only ${aRows.length}/100 selected docs are target-like")
     // the weight populations separate completely
     if (bRows.nonEmpty)
       assert(aRows.map(_.getLong(1)).min > bRows.map(_.getLong(1)).max)
@@ -633,14 +635,15 @@ class TextOpsSpec extends SparkTestBase {
         rows.map { case (l, d, nc) =>
           val u = ((Fingerprint.mix64(d) >>> 1) % 1000000007L + 1).toDouble / 1000000007.0
           (l, d, nc.toLong, -math.log(u) / nc)
-        }.sortBy(r => (r._4, r._2)).take(5).zipWithIndex
+        }.sortBy(r => (r._4, r._2)).take(TextOps.PerStratum).zipWithIndex
           .map { case ((l, d, nc, _), i) => (l, d, nc, (i + 1).toLong) }
       }.toSet
-    val got = TextOps.weightedSample(docs, perStratum = 5).collect()
+    val got = TextOps.weightedSample(docs).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(got == want)
-    val sel = TextOps.dsirSelect(docs, evalMod = 10L, evalRes = 3L, k = 20).collect()
-    assert(sel.length == 20 && sel.forall(_.getLong(0) >= base))
+    // 60 docs < DsirK: every doc is ranked (the eval slice holds i = 30)
+    val sel = TextOps.dsirSelect(docs).collect()
+    assert(sel.length == 60 && sel.forall(_.getLong(0) >= base))
   }
 
   test("proto_prune keeps the least prototypical members (planted outlier ranks first)") {
@@ -655,18 +658,17 @@ class TextOpsSpec extends SparkTestBase {
       (20L until 39L).map(i => (i, vec(1, 0.5f + 0.01f * (i - 20)))) :+
       (39L, vec(2, 0.7f))
     val emb = rows.toDF("vec_id", "embedding")
-    val kept = Ann.protoPrune(emb, keepPerCluster = 5, rounds = 2, nList0 = 2)
+    val kept = Ann.protoPrune(emb, nList0 = 2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(kept.length > 0)
     val outlier = kept.find(_._1 == 39L)
     assert(outlier.nonEmpty && outlier.get._3 == 1L,
       s"orthogonal outlier must rank 1 in its cluster, got $outlier")
-    // keepPerCluster large enough keeps everything with dense ranks
-    val all = Ann.protoPrune(emb, keepPerCluster = 100, rounds = 2, nList0 = 2)
-      .collect()
-    assert(all.length == 40)
-    all.groupBy(_.getInt(1)).values.foreach { g =>
-      assert(g.map(_.getLong(2)).sorted.toSeq == (1L to g.length).toSeq)
-    }
+    // each trained cluster (kmeansAssign's, same seeds and rounds) keeps
+    // min(size, ProtoKeep) members with dense ranks
+    val sizes = Ann.kmeansAssign(emb, nList0 = 2).collect()
+      .map(r => r.getInt(1) -> r.getLong(2)).toMap
+    assert(kept.groupBy(_._2).map { case (c, g) => c -> g.map(_._3).sorted.toSeq } ==
+      sizes.map { case (c, n) => c -> (1L to math.min(n, Ann.ProtoKeep.toLong)).toSeq })
   }
 }
