@@ -412,7 +412,7 @@ object Bench {
     val amp = ampOf(p)
     val s = GraftSession.get(cores.toInt, p.parts(cores.toInt, amp))
     try {
-      def input = s.read.parquet(inputPath)
+      val input = graft.index.TableIO.read(s, inputPath)
       p.job(s, input.limit(WarmRows), amp).count()
       val nDocs = input.count()
       s.catalog.clearCache()
@@ -454,7 +454,7 @@ object Bench {
     val s = GraftSession.get(cores, parts)
     try {
       val run = forward(s)
-      def pages = s.read.parquet(inputPath)
+      val pages = graft.index.TableIO.read(s, inputPath)
       run(pages.limit(WarmRows)).count()
       val nDocs = pages.count()
       nDocs / (1 to 3).map { _ =>

@@ -390,7 +390,7 @@ object SparkEntry {
     // --- generic window/agg coverage (F2/F3 shape) ---
     "window_topk" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      TableIO.read(s, s"$d/events.parquet")
+      Synth.events(s, d)
         .withColumn("rank", row_number().over(
           Window.partitionBy(col("user_id")).orderBy(col("value").desc, col("event_id").asc)))
         .filter(col("rank") <= 3)

@@ -6,7 +6,6 @@ import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.paths.SparkPath
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
@@ -48,7 +47,7 @@ object TableIO {
       def keyStats = blocks.map(_.getColumns.asScala.find(_.getPath.toDotString == rangeKey)
         .getOrElse(throw new IllegalStateException(s"$file has no column $rangeKey")).getStatistics)
       if (blocks.isEmpty) None
-      else Some((file.replaceFirst("^file:", ""), blocks.map(_.getRowCount).sum,
+      else Some((file, blocks.map(_.getRowCount).sum,
         keyStats.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min,
         keyStats.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max))
     }.sortBy(s => (s._3, s._1))
@@ -72,28 +71,29 @@ object TableIO {
          | "files": $files}""".stripMargin)
   }
 
-  /** Read the parquet table at `path`, as `spark.read.parquet(path)` does
-    * but without its schema-inference job. Inference reads a footer in a
-    * one-task Spark job on every call; here the inferred schema is
+  /** Read the parquet table at `paths`, as `spark.read.parquet(paths: _*)`
+    * does but without its schema-inference job. Inference reads a footer in
+    * a one-task Spark job on every call; here the inferred schema is
     * memoized per session, the session's parquet and file-source conf
     * (`binaryAsString` and the like change what inference returns), the
-    * path and each listed file's (path, length, modification time), and a
+    * paths and each listed file's (path, length, modification time), and a
     * read with a memoized schema goes through `spark.read.schema(...)`,
     * which lists the files on the driver and runs no job. A path rewritten
     * in place lists other files and infers afresh. A missing or empty path
     * memoizes nothing and fails exactly as `spark.read.parquet` does. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val files = listed(spark, path)
-    if (files.isEmpty) return spark.read.parquet(path)
+  def read(spark: SparkSession, paths: String*): DataFrame = {
+    val files = paths.map(listed(spark, _))
+    if (files.exists(_.isEmpty)) return spark.read.parquet(paths: _*)
     val conf = spark.conf.getAll.filter { case (k, _) =>
       k.contains("parquet") || k.startsWith("spark.sql.files.") || k == "spark.sql.caseSensitive"
     }
-    val schema = schemaMemo.computeIfAbsent((spark, conf, path, files), _ => spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
+    val schema = schemaMemo.computeIfAbsent((spark, conf, paths, files.flatten),
+      _ => spark.read.parquet(paths: _*).schema)
+    spark.read.schema(schema).parquet(paths: _*)
   }
 
   private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Map[String, String], String, Seq[(String, Long, Long)]), StructType]()
+    (SparkSession, Map[String, String], Seq[String], Seq[(String, Long, Long)]), StructType]()
 
   /** (path, length, modification time) of every file under `path`, sorted;
     * empty when the path does not exist (or is a glob). */
@@ -130,8 +130,9 @@ object TableIO {
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** (file, footer) of every parquet file under `path`, in listing order,
-    * the file as `input_file_name()` shows it: O(files) driver-side footer
-    * reads, no Spark job. */
+    * the file as a Hadoop path string, which `spark.read.parquet` resolves
+    * (also under a directory name with a space or a `%`): O(files)
+    * driver-side footer reads, no Spark job. */
   private def footers(spark: SparkSession, path: String): Seq[(String, ParquetMetadata)] = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(path)
@@ -141,7 +142,7 @@ object TableIO {
       val f = it.next()
       if (f.isFile && f.getPath.getName.endsWith(".parquet")) {
         val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
-        try out += (SparkPath.fromPath(f.getPath).urlEncoded -> r.getFooter) finally r.close()
+        try out += (f.getPath.toString -> r.getFooter) finally r.close()
       }
     }
     out.result()
@@ -158,7 +159,7 @@ object TableIO {
   // the table layer, complementing Checkpoint's per-range lineage.
   // =================================================================
 
-  final case class Snapshot(id: Long, totalRows: Long, files: Seq[String])
+  final case class Snapshot(id: Long, totalRows: Long, files: Seq[String], schema: StructType)
 
   /** Commit `df` as a new immutable snapshot of the table at `path`;
     * returns the snapshot id. Data layout matches [[writeSorted]]
@@ -191,10 +192,12 @@ object TableIO {
 
   def snapshot(path: String, id: Long): Snapshot = {
     val m = Files.readString(Paths.get(path, s"_manifest-$id.json"))
-    val files = "\"file\": \"((?:[^\"\\\\]|\\\\.)*)\"".r
-      .findAllMatchIn(m).map(_.group(1).replace("\\\\", "\\").replace("\\\"", "\"")).toSeq
+    // the manifest's string values of `key`, their \" and \\ escapes undone
+    def strings(key: String) = ("\"" + key + "\": \"((?:[^\"\\\\]|\\\\.)*)\"").r
+      .findAllMatchIn(m).map(v => "\\\\(.)".r.replaceAllIn(v.group(1),
+        e => java.util.regex.Matcher.quoteReplacement(e.group(1)))).toSeq
     val rows = "\"total_rows\": (\\d+)".r.findFirstMatchIn(m).get.group(1).toLong
-    Snapshot(id, rows, files)
+    Snapshot(id, rows, strings("file"), DataType.fromJson(strings("schema").head).asInstanceOf[StructType])
   }
 
   /** Read the table at its current snapshot — exactly the committed file
@@ -205,9 +208,12 @@ object TableIO {
     readAsOf(spark, path, id)
   }
 
-  /** Time travel: read a specific committed snapshot. */
-  def readAsOf(spark: SparkSession, path: String, id: Long): DataFrame =
-    spark.read.parquet(snapshot(path, id).files: _*)
+  /** Time travel: read a specific committed snapshot, with the schema its
+    * manifest holds (no inference job). */
+  def readAsOf(spark: SparkSession, path: String, id: Long): DataFrame = {
+    val snap = snapshot(path, id)
+    spark.read.schema(snap.schema).parquet(snap.files: _*)
+  }
 
   /** Table maintenance (Iceberg's rewrite_data_files job, emulated):
     * rewrite the CURRENT snapshot into `targetFiles` range-partitioned

@@ -60,7 +60,7 @@ object CurationJob {
 
   /** The curated corpus: the last completed stage's table. */
   def readFinal(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/stage=${stages.last.name}")
+    graft.index.TableIO.read(spark, s"$outDir/stage=${stages.last.name}")
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")

@@ -146,16 +146,22 @@ object TextOps {
       .filter(col("hamming") <= MaxHamming)
   }
 
-  /** The near-dup SQL twins' input: [[withMutatedCopies]] (`aug`) and its
-    * [[exactReps]] (`reps`). */
-  private def repsCtes: String =
+  /** SQL mirror of [[withMutatedCopies]] — shared by the near-dup twins
+    * ([[repsCtes]]), the ngram-Jaccard family and [[decontaminateSql]]. */
+  private def augCte: String =
     s"""aug AS (
-       |  SELECT doc_id, text FROM documents
+       |  SELECT doc_id, text, lang, n_chars FROM documents
        |  UNION ALL
        |  SELECT doc_id + 10000000,
        |         array_to_string(list_slice(string_split(text, ' '), 1,
-       |           greatest(len(string_split(text, ' ')) - 1, 1)), ' ')
-       |  FROM documents WHERE doc_id % 10 = 0),
+       |           greatest(len(string_split(text, ' ')) - 1, 1)), ' '),
+       |         lang, n_chars
+       |  FROM documents WHERE doc_id % 10 = 0)""".stripMargin
+
+  /** The near-dup SQL twins' input: [[withMutatedCopies]] (`aug`) and its
+    * [[exactReps]] (`reps`). */
+  private def repsCtes: String =
+    s"""$augCte,
        |reps AS (SELECT doc_id, text FROM (
        |  SELECT doc_id, text,
        |         row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
@@ -279,22 +285,9 @@ object TextOps {
         col("uni").cast("long").as("uni"))
   }
 
-  /** Oracle mirror of [[ngramJaccard]] ∘ [[withMutatedCopies]]. */
   /** Shared aug/tokens/pairs CTE prefix of the ngram-Jaccard family —
     * ONE definition so [[ngramJaccardSql]] and [[dupClustersSql]] cannot
     * drift apart. */
-  /** SQL mirror of [[withMutatedCopies]] — shared by the ngram-Jaccard
-    * family and [[decontaminateSql]]. */
-  private def augCte: String =
-    s"""aug AS (
-       |  SELECT doc_id, text, lang, n_chars FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 10000000,
-       |         array_to_string(list_slice(string_split(text, ' '), 1,
-       |           greatest(len(string_split(text, ' ')) - 1, 1)), ' '),
-       |         lang, n_chars
-       |  FROM documents WHERE doc_id % 10 = 0)""".stripMargin
-
   private def ngramPairCtes: String =
     s"""$augCte,
        |t AS (SELECT doc_id, lang, n_chars // 100 AS bucket,
@@ -305,6 +298,7 @@ object TextOps {
        |         len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)) AS uni
        |  FROM t a JOIN t b ON a.lang = b.lang AND a.bucket = b.bucket AND a.doc_id < b.doc_id)""".stripMargin
 
+  /** Oracle mirror of [[ngramJaccard]] ∘ [[withMutatedCopies]]. */
   def ngramJaccardSql: String =
     s"""WITH $ngramPairCtes
        |SELECT a, b, CAST(inter AS BIGINT) AS inter, CAST(uni AS BIGINT) AS uni

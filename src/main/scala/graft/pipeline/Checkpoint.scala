@@ -128,6 +128,6 @@ object Checkpoint {
     val done = completedRanges(outDir).toSeq.sorted
     if (done.isEmpty)
       throw new IllegalStateException(s"no completed range in $outDir: _lineage.jsonl marks none done")
-    spark.read.parquet(done.map(id => s"$outDir/range=$id"): _*)
+    TableIO.read(spark, done.map(id => s"$outDir/range=$id"): _*)
   }
 }

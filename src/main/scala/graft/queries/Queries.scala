@@ -233,7 +233,7 @@ object Queries {
     * Hilbert-range-partitioned table that IndexBuild.build writes per index
     * epoch. */
   private def gridParquet(spark: SparkSession, name: String)(build: => DataFrame): DataFrame =
-    spark.read.parquet(gridPaths.computeIfAbsent(name, _ => {
+    TableIO.read(spark, gridPaths.computeIfAbsent(name, _ => {
       val p = indexPath(name)
       build.coalesce(1).sortWithinPartitions("phrase_id", "cell", "feature_id")
         .write.mode("overwrite").parquet(p)
@@ -1057,7 +1057,7 @@ object Queries {
     // (TableIO.rowCount: manifest total_rows / parquet footer block
     // counts) — the r4 shape paid a full count() scan pre-pass for a
     // single scalar, an extra corpus pass at 10^12 rows.
-    val n = graft.index.TableIO.rowCount(spark, s"$sfDir/events.parquet")
+    val n = eventCount(spark, sfDir)
     dbscanOf(dbscanPoints(spark, sfDir), n)
   }
 
@@ -1066,7 +1066,7 @@ object Queries {
     * hold 4–5) replicate ×4 on the home side. Rows are [[dbscan]]'s, so it
     * shares [[dbscanSql]]. */
   def dbscanSalted(spark: SparkSession, sfDir: String): DataFrame =
-    dbscanOf(dbscanPoints(spark, sfDir), graft.index.TableIO.rowCount(spark, s"$sfDir/events.parquet"),
+    dbscanOf(dbscanPoints(spark, sfDir), eventCount(spark, sfDir),
       salt = 4, hotThreshold = DbscanSaltedHot)
 
   private[graft] val DbscanSaltedHot = 4L
@@ -1294,7 +1294,7 @@ object Queries {
     * comparisons in floored epoch SECONDS — integer-exact on both
     * engines. */
   def asofEpoch(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = TableIO.read(spark, s"$sfDir/events.parquet")
+    val ev = events(spark, sfDir)
       .select(col("event_id"), unix_timestamp(col("ts")).as("t"),
         Synth.evLon(col("event_id")).as("elon"), Synth.evLat(col("event_id")).as("elat"))
       .withColumn("cell", F.cellAt(lit(4), col("elon"), col("elat")))
@@ -1332,8 +1332,7 @@ object Queries {
     * covers ≤ 2 bins. Oracle is the raw theta join the binned equi-join
     * must equal exactly. */
   def intervalJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(col("event_id"), unix_timestamp(col("ts")).as("t"))
+    val ev = events(spark, sfDir).select(col("event_id"), unix_timestamp(col("ts")).as("t"))
     val win = spark.range(0, 200).toDF("w")
       .select(col("w"),
         (lit(1704067200L) + col("w") * 13000L).as("s"),
@@ -1703,8 +1702,7 @@ object Queries {
 
   def cohortRetention(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
-    val base = TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(col("user_id"), unix_micros(col("ts").cast("timestamp")).as("us"))
+    val base = events(spark, sfDir).select(col("user_id"), col("us"))
     val st = base.agg(min(col("us")).as("mn"), max(col("us")).as("mx"))
     base.crossJoin(broadcast(st))
       // staggered onboarding (user_id % 4 quarters of the span) — fixture
@@ -1719,7 +1717,7 @@ object Queries {
   }
 
   def cohortRetentionSql: String =
-    s"""WITH ev AS (SELECT user_id, epoch_us(ts) AS us FROM events),
+    s"""WITH ev AS (SELECT user_id, $evUsSql AS us FROM events),
        |st AS (SELECT min(us) AS mn, max(us) AS mx FROM ev),
        |uw AS (
        |  SELECT DISTINCT user_id, us // 604800000000 AS week
@@ -1744,9 +1742,9 @@ object Queries {
 
   def homeCell(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("n").desc, col("cell").asc)
-    TableIO.read(spark, s"$sfDir/events.parquet")
+    events(spark, sfDir)
       .select(col("user_id"),
-        expr("(unix_micros(CAST(ts AS TIMESTAMP)) div 3600000000) % 24").as("hour"),
+        expr("(us div 3600000000) % 24").as("hour"),
         F.cellAt(lit(6), evLon(col("event_id")), evLat(col("event_id"))).as("cell"))
       .filter(col("hour") >= 0 && col("hour") < 6)
       .groupBy(col("user_id"), col("cell")).agg(count(lit(1)).as("n"))
@@ -1757,7 +1755,7 @@ object Queries {
 
   def homeCellSql: String =
     s"""WITH ev AS (SELECT user_id,
-       |              (epoch_us(ts) // 3600000000) % 24 AS hour,
+       |              ($evUsSql // 3600000000) % 24 AS hour,
        |              ${cellSql(6, s"($evLonSql)", s"($evLatSql)")} AS cell
        |            FROM events),
        |nc AS (SELECT user_id, cell, CAST(count(*) AS BIGINT) AS n
@@ -1835,7 +1833,7 @@ object Queries {
   // =================================================================
 
   def joinCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    val tc = TableIO.read(spark, s"$sfDir/events.parquet")
+    val tc = events(spark, sfDir)
       .select(col("event_type"),
         F.cellAt(lit(6), evLon(col("event_id")), evLat(col("event_id"))).as("cell"))
       .groupBy(col("cell"), col("event_type")).agg(count(lit(1)).as("n"))
@@ -2139,8 +2137,7 @@ object Queries {
   // user-keyed window passes — the canonical trajectory partitioning: a
   // user's history sorts inside one partition, flows/trips aggregate
   // with map-side combine. Timestamps compare as INTEGER microseconds on
-  // both engines (Spark unix_micros ≡ DuckDB epoch_us — second-level
-  // casts differ on fractional seconds); ties break on event_id.
+  // both engines (Synth's `us` clock) in Synth's per-user fix order.
   // =================================================================
 
   /** OD flows: consecutive event pairs per user → (origin z6 cell,
@@ -2149,28 +2146,34 @@ object Queries {
     * events the window partitions by user (bounded per-user history);
     * no text or payload rides either exchange. */
   def odFlows(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts").asc, col("event_id").asc)
-    TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(col("event_id"), col("ts"), col("user_id"))
+    events(spark, sfDir)
+      .select(col("event_id"), col("us"), col("user_id"))
       .withColumn("o_cell", F.cellAt(lit(6), evLon(col("event_id")), evLat(col("event_id"))))
-      .withColumn("d_cell", lead(col("o_cell"), 1).over(w))
+      .withColumn("d_cell", lead(col("o_cell"), 1).over(fixOrder))
       .filter(col("d_cell").isNotNull)
       .groupBy(col("o_cell"), col("d_cell"))
       .agg(count(lit(1)).as("flows"))
   }
 
   def odFlowsSql: String =
-    s"""WITH ev AS (
-       |  SELECT event_id, ts, user_id,
+    s"""WITH ${odFlowCtes(loops = true)}
+       |SELECT o_cell, d_cell, flows FROM edges""".stripMargin
+
+  /** SQL twin of [[odFlows]] as the CTE chain `ev` → `seq` → `edges`
+    * (o_cell, d_cell, flows), shared by every OD-graph oracle; `loops =
+    * false` drops the self-loops (consecutive fixes in one cell). */
+  private def odFlowCtes(loops: Boolean): String =
+    s"""ev AS (
+       |  SELECT event_id, user_id, $evUsSql AS us,
        |         ${cellSql(6, s"($evLonSql)", s"($evLatSql)")} AS o_cell
        |  FROM events),
        |seq AS (
-       |  SELECT o_cell,
-       |         lead(o_cell, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS d_cell
-       |  FROM ev)
-       |SELECT o_cell, d_cell, CAST(count(*) AS BIGINT) AS flows
-       |FROM seq WHERE d_cell IS NOT NULL
-       |GROUP BY o_cell, d_cell""".stripMargin
+       |  SELECT o_cell, lead(o_cell, 1) OVER ($fixOrderSql) AS d_cell
+       |  FROM ev),
+       |edges AS MATERIALIZED (
+       |  SELECT o_cell, d_cell, CAST(count(*) AS BIGINT) AS flows
+       |  FROM seq WHERE d_cell IS NOT NULL${if (loops) "" else " AND d_cell <> o_cell"}
+       |  GROUP BY o_cell, d_cell)""".stripMargin
 
   /** Trip segmentation: a >30-minute silence splits a user's event
     * sequence into trips (the classic stay-point / session cut). trip =
@@ -2179,19 +2182,13 @@ object Queries {
     * by the window's hash(user_id) partitioning, so the aggregation
     * reuses the exchange. Gaps are exact integer microseconds. */
   def tripSegments(spark: SparkSession, sfDir: String): DataFrame = {
-    // us ≡ ts ordering (microsecond precision both), so the window orders
-    // by the projected integer — the oracle does the same
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us").asc, col("event_id").asc)
-    TableIO.read(spark, s"$sfDir/events.parquet")
-      // ts is parquet TIMESTAMP_NTZ; the UTC session makes the LTZ cast an
-      // identity on wall values, matching DuckDB's naive-as-UTC epoch_us
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("ts").cast("timestamp")).as("us"))
+    events(spark, sfDir)
+      .select(col("event_id"), col("user_id"), col("us"))
       .withColumn("gap", when(
-        col("us") - coalesce(lag(col("us"), 1).over(w), col("us")) > lit(1800000000L),
+        col("us") - coalesce(lag(col("us"), 1).over(fixOrder), col("us")) > lit(1800000000L),
         lit(1L)).otherwise(lit(0L)))
       .withColumn("trip", sum(col("gap")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        fixOrder.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .groupBy(col("user_id"), col("trip"))
       .agg(count(lit(1)).as("n_events"),
         (max(col("us")) - min(col("us"))).as("dur_us"))
@@ -2199,14 +2196,14 @@ object Queries {
 
   def tripSegmentsSql: String =
     s"""WITH ev AS (
-       |  SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
+       |  SELECT event_id, user_id, $evUsSql AS us FROM events),
        |flg AS (
        |  SELECT user_id, event_id, us,
-       |         CASE WHEN us - coalesce(lag(us, 1) OVER (PARTITION BY user_id ORDER BY us, event_id), us) > 1800000000 THEN 1 ELSE 0 END AS gap
+       |         CASE WHEN us - coalesce(lag(us, 1) OVER ($fixOrderSql), us) > 1800000000 THEN 1 ELSE 0 END AS gap
        |  FROM ev),
        |trips AS (
        |  SELECT user_id, us,
-       |         sum(gap) OVER (PARTITION BY user_id ORDER BY us, event_id
+       |         sum(gap) OVER ($fixOrderSql
        |                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS trip
        |  FROM flg)
        |SELECT user_id, CAST(trip AS BIGINT) AS trip,
@@ -2361,10 +2358,8 @@ object Queries {
     * explode(array(..)) so the many unrolled references downstream hit
     * the column, not inlined copies of the transform. */
   private def mkDense(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(col("event_id"),
-        unix_micros(col("ts").cast("timestamp")).as("us"),
-        evLon(col("event_id")).as("elon"),
+    val base = events(spark, sfDir)
+      .select(col("event_id"), col("us"), evLon(col("event_id")).as("elon"),
         evLat(col("event_id")).as("elat"))
       .select(F.cellAt(lit(5), col("elon"), col("elat")).as("cell"), col("us"))
     val stats = base.agg(min(col("us")).as("mn"), max(col("us")).as("mx"))
@@ -2382,7 +2377,7 @@ object Queries {
     * mkTrendSql / theilSenSql so the oracles never re-derive the bin
     * arithmetic). */
   private def mkDenseSqlCtes: String =
-    s"""pts AS (SELECT event_id, epoch_us(ts) AS us,
+    s"""pts AS (SELECT event_id, $evUsSql AS us,
        |               $evLonSql AS elon, $evLatSql AS elat FROM events),
        |base AS (SELECT ${cellSql(5, "elon", "elat")} AS cell, us FROM pts),
        |st AS (SELECT min(us) AS mn, max(us) AS mx FROM base),
@@ -2492,10 +2487,8 @@ object Queries {
       "ELSE 'historical' END"
 
   def emergingHotspot(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(col("event_id"),
-        unix_micros(col("ts").cast("timestamp")).as("us"),
-        evLon(col("event_id")).as("elon"),
+    val base = events(spark, sfDir)
+      .select(col("event_id"), col("us"), evLon(col("event_id")).as("elon"),
         evLat(col("event_id")).as("elat"))
     val st = base.agg(min(col("us")).as("mn"), max(col("us")).as("mx"))
     val counts = z6Counts(base.crossJoin(broadcast(st))
@@ -2529,7 +2522,7 @@ object Queries {
   }
 
   def emergingHotspotSql: String =
-    s"""WITH pts AS (SELECT event_id, epoch_us(ts) AS us,
+    s"""WITH pts AS (SELECT event_id, $evUsSql AS us,
        |               $evLonSql AS elon, $evLatSql AS elat FROM events),
        |st AS (SELECT min(us) AS mn, max(us) AS mx FROM pts),
        |${z6CountsSql(Some(("((us - mn) * 8) // (mx - mn + 1)", "pts CROSS JOIN st")))},
@@ -2575,29 +2568,26 @@ object Queries {
   // =================================================================
 
   def geofenceEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("ts").cast("timestamp")).as("us"),
+    val ev = events(spark, sfDir)
+      .select(col("event_id"), col("user_id"), col("us"),
         evLon(col("event_id")).as("elon"), evLat(col("event_id")).as("elat"))
     val fences = nationFeatures(spark, sfDir)
       .select(col("feature_id"), col("west"), col("south"), col("east"), col("north"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us").asc, col("event_id").asc)
     ev.join(broadcast(fences),
         col("elon") >= col("west") && col("elon") < col("east") &&
           col("elat") >= col("south") && col("elat") < col("north"), "left")
       .groupBy(col("user_id"), col("event_id"), col("us"))
       .agg(coalesce(min(col("feature_id")), lit(-1L)).as("fence"))
-      .withColumn("from_f", lag(col("fence"), 1).over(w))
+      .withColumn("from_f", lag(col("fence"), 1).over(fixOrder))
       .filter(col("from_f").isNotNull && col("from_f") =!= col("fence"))
-      .select(col("user_id"), col("event_id"), col("us"), col("from_f"),
-        col("fence").as("to_f"),
+      .select(col("user_id"), col("event_id"), col("us"), col("from_f"), col("fence").as("to_f"),
         when(col("from_f") === lit(-1L), lit("enter"))
           .when(col("fence") === lit(-1L), lit("exit"))
           .otherwise(lit("switch")).as("kind"))
   }
 
   def geofenceEventsSql: String =
-    s"""WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS us,
+    s"""WITH ev AS (SELECT event_id, user_id, $evUsSql AS us,
        |             $evLonSql AS elon, $evLatSql AS elat FROM events),
        |f AS (${nationFeaturesSql.replace("\n", "\n       ")}),
        |tag AS (SELECT ev.user_id, ev.event_id, ev.us,
@@ -2606,7 +2596,7 @@ object Queries {
        |                           AND ev.elat >= f.south AND ev.elat < f.north
        |        GROUP BY 1, 2, 3),
        |tr AS (SELECT user_id, event_id, us, fence,
-       |        lag(fence, 1) OVER (PARTITION BY user_id ORDER BY us, event_id) AS from_f
+       |        lag(fence, 1) OVER ($fixOrderSql) AS from_f
        |       FROM tag)
        |SELECT user_id, event_id, us, from_f, fence AS to_f,
        |  CASE WHEN from_f = -1 THEN 'enter' WHEN fence = -1 THEN 'exit'
@@ -2692,7 +2682,7 @@ object Queries {
   // =================================================================
 
   def hexBin(spark: SparkSession, sfDir: String): DataFrame =
-    TableIO.read(spark, s"$sfDir/events.parquet")
+    events(spark, sfDir)
       .select(evLattice.x.milli(col("event_id")).cast("double").as("xd"),
         evLattice.y.milli(col("event_id")).cast("double").as("yd"))
       .withColumn("q0", expr("(sqrt(3.0) / 3.0 * xd - yd / 3.0) / 9000.0"))
@@ -2788,9 +2778,8 @@ object Queries {
   // =================================================================
 
   def decayHeat(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(col("event_id"),
-        unix_micros(col("ts").cast("timestamp")).as("us"),
+    val base = events(spark, sfDir)
+      .select(col("event_id"), col("us"),
         evLon(col("event_id")).as("elon"), evLat(col("event_id")).as("elat"))
     val mx = base.agg(max(col("us")).as("mx"))
     base.crossJoin(broadcast(mx))
@@ -2802,7 +2791,7 @@ object Queries {
   }
 
   def decayHeatSql: String =
-    s"""WITH pts AS (SELECT event_id, epoch_us(ts) AS us,
+    s"""WITH pts AS (SELECT event_id, $evUsSql AS us,
        |               $evLonSql AS elon, $evLatSql AS elat FROM events),
        |mxs AS (SELECT max(us) AS mx FROM pts),
        |w AS (SELECT ${cellSql(6, "elon", "elat")} AS cell,
@@ -2824,14 +2813,12 @@ object Queries {
   // =================================================================
 
   def speedFilter(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us").asc, col("event_id").asc)
-    TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("ts").cast("timestamp")).as("us"),
+    events(spark, sfDir)
+      .select(col("event_id"), col("user_id"), col("us"),
         scatter.x.milli(col("event_id")).as("x"), scatter.y.milli(col("event_id")).as("y"))
-      .withColumn("px", lag(col("x"), 1).over(w))
-      .withColumn("py", lag(col("y"), 1).over(w))
-      .withColumn("pus", lag(col("us"), 1).over(w))
+      .withColumn("px", lag(col("x"), 1).over(fixOrder))
+      .withColumn("py", lag(col("y"), 1).over(fixOrder))
+      .withColumn("pus", lag(col("us"), 1).over(fixOrder))
       .filter(col("pus").isNotNull)
       .withColumn("d2", expr("(x - px) * (x - px) + (y - py) * (y - py)"))
       .withColumn("dt", col("us") - col("pus"))
@@ -2843,7 +2830,7 @@ object Queries {
 
   def speedFilterSql: String =
     s"""WITH ev AS (
-       |  SELECT event_id, user_id, epoch_us(ts) AS us,
+       |  SELECT event_id, user_id, $evUsSql AS us,
        |         ${scatter.x.milliSql("event_id")} AS x,
        |         ${scatter.y.milliSql("event_id")} AS y
        |  FROM events),
@@ -2851,7 +2838,7 @@ object Queries {
        |  SELECT user_id, event_id, us, x, y,
        |         lag(x, 1) OVER w AS px, lag(y, 1) OVER w AS py,
        |         lag(us, 1) OVER w AS pus
-       |  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
+       |  FROM ev WINDOW w AS ($fixOrderSql)),
        |p AS (
        |  SELECT user_id, event_id,
        |         (x - px) * (x - px) + (y - py) * (y - py) AS d2,
@@ -2953,7 +2940,7 @@ object Queries {
   }
 
   def snapPoints(spark: SparkSession, sfDir: String): DataFrame = {
-    val pts = TableIO.read(spark, s"$sfDir/events.parquet")
+    val pts = events(spark, sfDir)
       .select(col("event_id"),
         evLattice.x.milli(col("event_id")).as("px"),
         evLattice.y.milli(col("event_id")).as("py"))
@@ -2976,8 +2963,7 @@ object Queries {
   // =================================================================
 
   def eventRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(col("event_type"), col("event_id"), col("value"))
+    val ev = events(spark, sfDir).select(col("event_type"), col("event_id"), col("value"))
       .withColumn("cell", F.cellAt(lit(4), evLon(col("event_id")), evLat(col("event_id"))))
       .withColumn("vq", round(col("value") * lit(100.0), 0).cast("long"))
     ev.rollup(col("event_type"), col("cell"))
@@ -3054,12 +3040,10 @@ object Queries {
   // =================================================================
 
   def cellDwell(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("us").asc, col("event_id").asc)
-    TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("ts").cast("timestamp")).as("us"))
+    events(spark, sfDir)
+      .select(col("event_id"), col("user_id"), col("us"))
       .withColumn("cell", F.cellAt(lit(6), evLon(col("event_id")), evLat(col("event_id"))))
-      .withColumn("dwell_us", lead(col("us"), 1).over(w) - col("us"))
+      .withColumn("dwell_us", lead(col("us"), 1).over(fixOrder) - col("us"))
       .filter(col("dwell_us").isNotNull)
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n_stays"), sum(col("dwell_us")).as("dwell_us"),
@@ -3068,12 +3052,12 @@ object Queries {
 
   def cellDwellSql: String =
     s"""WITH ev AS (
-       |  SELECT event_id, user_id, epoch_us(ts) AS us,
+       |  SELECT event_id, user_id, $evUsSql AS us,
        |         $evLonSql AS elon, $evLatSql AS elat
        |  FROM events),
        |fx AS (
        |  SELECT ${cellSql(6, "elon", "elat")} AS cell,
-       |         lead(us, 1) OVER (PARTITION BY user_id ORDER BY us, event_id) - us AS dwell_us
+       |         lead(us, 1) OVER ($fixOrderSql) - us AS dwell_us
        |  FROM ev)
        |SELECT cell, CAST(count(*) AS BIGINT) AS n_stays,
        |       CAST(sum(dwell_us) AS BIGINT) AS dwell_us,
@@ -3335,11 +3319,8 @@ object Queries {
   private val VitC = 3 // candidate states per fix
 
   def viterbiMatch(spark: SparkSession, sfDir: String): DataFrame = {
-    val wu = Window.partitionBy("user_id").orderBy(col("us").asc, col("event_id").asc)
-    val fixes = TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("ts").cast("timestamp")).as("us"))
-      .withColumn("t", row_number().over(wu)).filter(col("t") <= VitT)
+    val fixes = events(spark, sfDir).select(col("event_id"), col("user_id"), col("us"))
+      .withColumn("t", row_number().over(fixOrder)).filter(col("t") <= VitT)
       .select(col("user_id"), col("t"), col("event_id"),
         evLattice.x.milli(col("event_id")).as("px"),
         evLattice.y.milli(col("event_id")).as("py"))
@@ -3394,14 +3375,14 @@ object Queries {
 
   def viterbiMatchSql: String =
     s"""WITH RECURSIVE ev AS (
-       |  SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
+       |  SELECT event_id, user_id, $evUsSql AS us FROM events),
        |fx AS (
        |  SELECT user_id, event_id,
-       |         row_number() OVER (PARTITION BY user_id ORDER BY us, event_id) AS t,
+       |         row_number() OVER ($fixOrderSql) AS t,
        |         ${evLattice.x.milliSql("event_id")} AS px,
        |         ${evLattice.y.milliSql("event_id")} AS py
        |  FROM ev
-       |  QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY us, event_id) <= $VitT),
+       |  QUALIFY row_number() OVER ($fixOrderSql) <= $VitT),
        |${snapCandsSql("fx", Seq("user_id", "t"), Seq("s.ax + s.bx" -> "mx", "s.ay + s.by" -> "my"))},
        |cand AS (
        |  SELECT user_id, t, seg_id, mx, my, d2n // d2d AS emit
@@ -3530,18 +3511,7 @@ object Queries {
     * every round is MATERIALIZED — DuckDB re-inlines otherwise). */
   def cellPagerankSql: String = {
     val edgeCte =
-      s"""ev AS (
-         |  SELECT event_id, ts, user_id,
-         |         ${cellSql(6, s"($evLonSql)", s"($evLatSql)")} AS o_cell
-         |  FROM events),
-         |seq AS (
-         |  SELECT o_cell,
-         |         lead(o_cell, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS d_cell
-         |  FROM ev),
-         |edges AS MATERIALIZED (
-         |  SELECT o_cell, d_cell, CAST(count(*) AS BIGINT) AS flows
-         |  FROM seq WHERE d_cell IS NOT NULL
-         |  GROUP BY o_cell, d_cell),
+      s"""${odFlowCtes(loops = true)},
          |outw AS MATERIALIZED (
          |  SELECT o_cell, CAST(sum(flows) AS BIGINT) AS wout FROM edges GROUP BY 1),
          |nodes AS MATERIALIZED (
@@ -3607,7 +3577,7 @@ object Queries {
   }
 
   def gravityFitSql: String =
-    s"""WITH $odEdgeCtes,
+    s"""WITH ${odFlowCtes(loops = false)},
        |pairs AS (
        |  SELECT ${cellXSql("o_cell")} - ${cellXSql("d_cell")} AS dx,
        |         ${cellYSql("o_cell")} - ${cellYSql("d_cell")} AS dy,
@@ -3627,22 +3597,6 @@ object Queries {
        |       round(CAST(sy * sxx - sx * sxy AS DOUBLE)
        |             / CAST(n * sxx - sx * sx AS DOUBLE) / 1000000.0, 4) AS intercept
        |FROM s""".stripMargin
-
-  /** The od_flows edge CTE chain (ev → seq → edges), shared by the graph
-    * ops below; self-loops (consecutive events in one cell) excluded. */
-  private def odEdgeCtes: String =
-    s"""ev AS (
-       |  SELECT event_id, ts, user_id,
-       |         ${cellSql(6, s"($evLonSql)", s"($evLatSql)")} AS o_cell
-       |  FROM events),
-       |seq AS (
-       |  SELECT o_cell,
-       |         lead(o_cell, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS d_cell
-       |  FROM seq_src),
-       |edges AS MATERIALIZED (
-       |  SELECT o_cell, d_cell, CAST(count(*) AS BIGINT) AS flows
-       |  FROM seq WHERE d_cell IS NOT NULL AND d_cell <> o_cell
-       |  GROUP BY o_cell, d_cell)""".stripMargin.replace("seq_src", "ev")
 
   // =================================================================
   // k-hop shortest paths (Bellman–Ford, 4 synchronous rounds) from the
@@ -3688,7 +3642,7 @@ object Queries {
          |    FROM d${i - 1} p JOIN ew e ON e.o_cell = p.cell)
          |  GROUP BY 1)""".stripMargin
     }.mkString(",\n")
-    s"""WITH $odEdgeCtes,
+    s"""WITH ${odFlowCtes(loops = false)},
        |ew AS MATERIALIZED (
        |  SELECT o_cell, d_cell, 1 + 1000 // flows AS w FROM edges),
        |src AS (SELECT min(o_cell) AS s FROM ew),
@@ -3732,7 +3686,7 @@ object Queries {
   }
 
   def triangleCountSql: String =
-    s"""WITH $odEdgeCtes,
+    s"""WITH ${odFlowCtes(loops = false)},
        |und AS MATERIALIZED (
        |  SELECT DISTINCT least(o_cell, d_cell) AS u, greatest(o_cell, d_cell) AS v
        |  FROM edges),
@@ -3769,9 +3723,8 @@ object Queries {
 
   def trajSimplify(spark: SparkSession, sfDir: String): DataFrame = {
     val tol2 = SimplifyTol * SimplifyTol
-    TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("ts").cast("timestamp")).as("us"),
+    events(spark, sfDir)
+      .select(col("event_id"), col("user_id"), col("us"),
         evLattice.x.milli(col("event_id")).as("x"),
         evLattice.y.milli(col("event_id")).as("y"))
       .groupBy(col("user_id"))
@@ -3802,11 +3755,10 @@ object Queries {
     val tol2 = SimplifyTol * SimplifyTol
     val far = s"(p.x - w.lx) * (p.x - w.lx) + (p.y - w.ly) * (p.y - w.ly) > $tol2"
     s"""WITH RECURSIVE pts AS (
-       |  SELECT user_id, event_id AS id,
+       |  SELECT user_id, event_id AS id, $evUsSql AS us,
        |         ${evLattice.x.milliSql("event_id")} AS x,
        |         ${evLattice.y.milliSql("event_id")} AS y,
-       |         row_number() OVER (PARTITION BY user_id
-       |                            ORDER BY epoch_us(ts), event_id) AS rn
+       |         row_number() OVER ($fixOrderSql) AS rn
        |  FROM events),
        |walk AS (
        |  SELECT user_id, rn, x AS lx, y AS ly, id, TRUE AS kept
@@ -3851,9 +3803,8 @@ object Queries {
       s"IF($s.lt - $s.at >= ${StayTUs}L, concat($s.stays, array(named_struct(" +
         s"'st', $s.at, 'en', $s.lt, 'np', $s.n, " +
         s"'cx', $s.sx div $s.n - 180000, 'cy', $s.sy div $s.n - 80000))), $s.stays)"
-    TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("ts").cast("timestamp")).as("us"),
+    events(spark, sfDir)
+      .select(col("event_id"), col("user_id"), col("us"),
         scatter.x.milli(col("event_id")).as("x"), scatter.y.milli(col("event_id")).as("y"))
       .groupBy(col("user_id"))
       // (us, event_id) is a unique sort prefix — lexicographic struct
@@ -3882,11 +3833,10 @@ object Queries {
     val within = "(p.x - w.ax) * (p.x - w.ax) + (p.y - w.ay) * (p.y - w.ay) " +
       s"<= $StayD2"
     s"""WITH RECURSIVE pts AS (
-       |  SELECT user_id, event_id AS id, epoch_us(ts) AS us,
+       |  SELECT user_id, event_id AS id, $evUsSql AS us,
        |         ${scatter.x.milliSql("event_id")} AS x,
        |         ${scatter.y.milliSql("event_id")} AS y,
-       |         row_number() OVER (PARTITION BY user_id
-       |                            ORDER BY epoch_us(ts), event_id) AS rn
+       |         row_number() OVER ($fixOrderSql) AS rn
        |  FROM events),
        |nmax AS (SELECT user_id, max(rn) AS mr FROM pts GROUP BY 1),
        |walk AS (
@@ -3953,9 +3903,8 @@ object Queries {
 
   def dpSimplify(spark: SparkSession, sfDir: String): DataFrame =
     dpSimplifyOf(
-      TableIO.read(spark, s"$sfDir/events.parquet")
-        .select(col("event_id").as("id"), col("user_id"),
-          unix_micros(col("ts").cast("timestamp")).as("us"),
+      events(spark, sfDir)
+        .select(col("event_id").as("id"), col("user_id"), col("us"),
           scatter.x.milli(col("event_id")).as("x"), scatter.y.milli(col("event_id")).as("y")),
       Seq("user_id"))
 
@@ -3989,11 +3938,10 @@ object Queries {
 
   def dpSimplifySql: String =
     s"""WITH RECURSIVE pts AS (
-       |  SELECT user_id, event_id AS id, epoch_us(ts) AS us,
+       |  SELECT user_id, event_id AS id, $evUsSql AS us,
        |         ${scatter.x.milliSql("event_id")} AS x,
        |         ${scatter.y.milliSql("event_id")} AS y,
-       |         row_number() OVER (PARTITION BY user_id
-       |                            ORDER BY epoch_us(ts), event_id) AS rn
+       |         row_number() OVER ($fixOrderSql) AS rn
        |  FROM events),
        |ends AS (SELECT user_id, CAST(max(rn) AS BIGINT) AS n FROM pts GROUP BY 1),
        |segs AS (
@@ -4107,9 +4055,8 @@ object Queries {
 
   def coLocate(spark: SparkSession, sfDir: String): DataFrame = {
     def cell(a: Axis) = expr(s"${a.resSql("event_id")} div $CoLocCellMilli")
-    val pts = TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(col("event_id").as("id"), col("user_id").as("s"),
-        unix_micros(col("ts").cast("timestamp")).as("us"),
+    val pts = events(spark, sfDir)
+      .select(col("event_id").as("id"), col("user_id").as("s"), col("us"),
         cell(scatter.x).as("cx"), cell(scatter.y).as("cy"))
       .persist() // both join sides read it
     timePairs(pts, CoLocWindowUs, Seq("cx", "cy"), "s")
@@ -4127,7 +4074,7 @@ object Queries {
     * nothing. */
   def coLocateSql: String =
     s"""WITH pts AS MATERIALIZED (
-       |  SELECT event_id AS id, user_id, epoch_us(ts) AS us,
+       |  SELECT event_id AS id, user_id, $evUsSql AS us,
        |         ${scatter.x.resSql("event_id")} // $CoLocCellMilli AS cx,
        |         ${scatter.y.resSql("event_id")} // $CoLocCellMilli AS cy
        |  FROM events)
@@ -4485,7 +4432,7 @@ object Queries {
   // =================================================================
 
   def stdEllipse(spark: SparkSession, sfDir: String): DataFrame = {
-    val pts = TableIO.read(spark, s"$sfDir/events.parquet")
+    val pts = events(spark, sfDir)
       .select(col("event_type").as("etype"),
         expr(s"${scatter.x.resSql("event_id")} div 100").as("xc"),
         expr(s"${scatter.y.resSql("event_id")} div 100").as("yc"))
@@ -4571,9 +4518,8 @@ object Queries {
 
   def knox(spark: SparkSession, sfDir: String): DataFrame = {
     val k = col("event_id")
-    val pts = TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(k.as("id"), unix_micros(col("ts").cast("timestamp")).as("us"),
-        scatter.x.milli(k).as("xq"), scatter.y.milli(k).as("yq"))
+    val pts = events(spark, sfDir)
+      .select(k.as("id"), col("us"), scatter.x.milli(k).as("xq"), scatter.y.milli(k).as("yq"))
       .persist() // four consumers: spatial probe/build, temporal probe/build
     val nRow = pts.agg(count(lit(1)).as("n_pts"))
     val sx = epsPairs(pts, KnoxDeltaMilli, "us")
@@ -4590,7 +4536,7 @@ object Queries {
 
   def knoxSql: String =
     s"""WITH pts AS MATERIALIZED (
-       |  SELECT event_id AS id, epoch_us(ts) AS us,
+       |  SELECT event_id AS id, $evUsSql AS us,
        |         ${scatter.x.milliSql("event_id")} AS xq,
        |         ${scatter.y.milliSql("event_id")} AS yq
        |  FROM events),
@@ -4630,7 +4576,7 @@ object Queries {
 
   def convexHull(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("etype")).orderBy(col("event_id").asc)
-    val cand = TableIO.read(spark, s"$sfDir/events.parquet")
+    val cand = events(spark, sfDir)
       .select(col("event_id"), col("event_type").as("etype"),
         scatter.x.res(col("event_id")).as("x"), scatter.y.res(col("event_id")).as("y"))
       .withColumn("rn", row_number().over(w))
@@ -4713,7 +4659,7 @@ object Queries {
         custLattice.y.milli(col("c_custkey")).as("sy"))
       .withColumn("cx", expr(s"(sx + 180000) div $IdwRadiusMilli"))
       .withColumn("cy", expr(s"(sy + 80000) div $IdwRadiusMilli"))
-    val pr = TableIO.read(spark, s"$sfDir/events.parquet")
+    val pr = events(spark, sfDir)
       .select(col("event_id"),
         evLattice.x.milli(col("event_id")).as("px"),
         evLattice.y.milli(col("event_id")).as("py"))
@@ -4782,14 +4728,12 @@ object Queries {
   // =================================================================
 
   def trackHeading(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us").asc, col("event_id").asc)
     val rad = lit(Math.PI) / lit(180.0)
-    val pts = TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("ts").cast("timestamp")).as("us"),
+    val pts = events(spark, sfDir)
+      .select(col("event_id"), col("user_id"), col("us"),
         evLon(col("event_id")).as("lon1"), evLat(col("event_id")).as("lat1"))
-      .withColumn("lon2", lead(col("lon1"), 1).over(w))
-      .withColumn("lat2", lead(col("lat1"), 1).over(w))
+      .withColumn("lon2", lead(col("lon1"), 1).over(fixOrder))
+      .withColumn("lat2", lead(col("lat1"), 1).over(fixOrder))
       .filter(col("lon2").isNotNull)
     val dLam = (col("lon2") - col("lon1")) * rad
     val phi1 = col("lat1") * rad
@@ -4810,13 +4754,13 @@ object Queries {
       "sin(lat1 * pi() / 180.0) * cos(lat2 * pi() / 180.0) * cos((lon2 - lon1) * pi() / 180.0)) " +
       "* 180.0 / pi()"
     s"""WITH ev AS (
-       |  SELECT event_id, user_id, epoch_us(ts) AS us,
+       |  SELECT event_id, user_id, $evUsSql AS us,
        |         $evLonSql AS lon1, $evLatSql AS lat1
        |  FROM events),
        |seq AS (
        |  SELECT user_id, event_id, lon1, lat1,
-       |         lead(lon1, 1) OVER (PARTITION BY user_id ORDER BY us, event_id) AS lon2,
-       |         lead(lat1, 1) OVER (PARTITION BY user_id ORDER BY us, event_id) AS lat2
+       |         lead(lon1, 1) OVER ($fixOrderSql) AS lon2,
+       |         lead(lat1, 1) OVER ($fixOrderSql) AS lat2
        |  FROM ev)
        |SELECT user_id, event_id,
        |       round(fmod($brg + 360.0, 360.0), 4) AS bearing_r,
@@ -4835,14 +4779,12 @@ object Queries {
   // =================================================================
 
   def trackResample(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us").asc, col("event_id").asc)
     val rad = lit(Math.PI) / lit(180.0)
-    val pts = TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("ts").cast("timestamp")).as("us"),
+    val pts = events(spark, sfDir)
+      .select(col("event_id"), col("user_id"), col("us"),
         evLon(col("event_id")).as("lon1"), evLat(col("event_id")).as("lat1"))
-      .withColumn("lon2", lead(col("lon1"), 1).over(w))
-      .withColumn("lat2", lead(col("lat1"), 1).over(w))
+      .withColumn("lon2", lead(col("lon1"), 1).over(fixOrder))
+      .withColumn("lat2", lead(col("lat1"), 1).over(fixOrder))
       .filter(col("lon2").isNotNull)
     val phi1 = col("lat1") * rad
     val phi2 = col("lat2") * rad
@@ -4860,13 +4802,13 @@ object Queries {
   def trackResampleSql: String = {
     val c1 = "cos(lat1 * pi() / 180.0)"
     s"""WITH ev AS (
-       |  SELECT event_id, user_id, epoch_us(ts) AS us,
+       |  SELECT event_id, user_id, $evUsSql AS us,
        |         $evLonSql AS lon1, $evLatSql AS lat1
        |  FROM events),
        |seq AS (
        |  SELECT user_id, event_id, lon1, lat1,
-       |         lead(lon1, 1) OVER (PARTITION BY user_id ORDER BY us, event_id) AS lon2,
-       |         lead(lat1, 1) OVER (PARTITION BY user_id ORDER BY us, event_id) AS lat2
+       |         lead(lon1, 1) OVER ($fixOrderSql) AS lon2,
+       |         lead(lat1, 1) OVER ($fixOrderSql) AS lat2
        |  FROM ev),
        |b AS (
        |  SELECT user_id, event_id, lon1, lat1, lat2,
@@ -5393,7 +5335,7 @@ object Queries {
 
   def medianCenter(spark: SparkSession, sfDir: String): DataFrame = {
     def d(c: Column) = c.cast("decimal(38,0)")
-    val pts = TableIO.read(spark, s"$sfDir/events.parquet")
+    val pts = events(spark, sfDir)
       .select(col("event_type"),
         evLattice.x.res(col("event_id")).as("xs"),
         evLattice.y.res(col("event_id")).as("ys"))
@@ -5472,8 +5414,8 @@ object Queries {
   // =================================================================
 
   def tileDiff(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(unix_micros(col("ts").cast("timestamp")).as("us"),
+    val base = events(spark, sfDir)
+      .select(col("us"),
         F.cellAt(lit(6), evLon(col("event_id")), evLat(col("event_id"))).as("cell"))
     val st = base.agg(min(col("us")).as("mn"), max(col("us")).as("mx"))
     val cut = base.crossJoin(broadcast(st))
@@ -5491,7 +5433,7 @@ object Queries {
   }
 
   def tileDiffSql: String =
-    s"""WITH pts AS (SELECT epoch_us(ts) AS us,
+    s"""WITH pts AS (SELECT $evUsSql AS us,
        |               ${cellSql(6, s"($evLonSql)", s"($evLatSql)")} AS cell
        |             FROM events),
        |st AS (SELECT min(us) AS mn, max(us) AS mx FROM pts),
@@ -5574,10 +5516,8 @@ object Queries {
     val step = (k: Int, prev: String) =>
       s"IF(p.event_type = '${FunnelSteps(k)}' AND $prev <> -1 AND s.t${k + 1} = -1 " +
         s"AND p.us > $prev AND p.us <= $prev + $FunnelWinUs, p.us, s.t${k + 1})"
-    TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(col("user_id"),
-        unix_micros(col("ts").cast("timestamp")).as("us"),
-        col("event_id"), col("event_type"))
+    events(spark, sfDir)
+      .select(col("user_id"), col("us"), col("event_id"), col("event_type"))
       .groupBy(col("user_id"))
       .agg(sort_array(collect_list(
         struct(col("us"), col("event_id"), col("event_type")))).as("pts"))
@@ -5599,7 +5539,7 @@ object Queries {
   }
 
   def funnelStepsSql: String =
-    s"""WITH ev AS (SELECT user_id, epoch_us(ts) AS us, event_type FROM events),
+    s"""WITH ev AS (SELECT user_id, $evUsSql AS us, event_type FROM events),
        |u1 AS (SELECT user_id,
        |         CAST(coalesce(min(us) FILTER (WHERE event_type = 'view'), -1) AS BIGINT) AS t1
        |       FROM ev GROUP BY 1),
@@ -5644,20 +5584,10 @@ object Queries {
   }
 
   def transEntropySql: String =
-    s"""WITH ev AS (
-       |  SELECT event_id, ts, user_id,
-       |         ${cellSql(6, s"($evLonSql)", s"($evLatSql)")} AS o_cell
-       |  FROM events),
-       |seq AS (
-       |  SELECT o_cell,
-       |         lead(o_cell, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS d_cell
-       |  FROM ev),
-       |fl AS (SELECT o_cell, d_cell, CAST(count(*) AS BIGINT) AS flows
-       |       FROM seq WHERE d_cell IS NOT NULL
-       |       GROUP BY o_cell, d_cell),
+    s"""WITH ${odFlowCtes(loops = true)},
        |wn AS (SELECT o_cell, flows,
        |         CAST(sum(flows) OVER (PARTITION BY o_cell) AS BIGINT) AS n
-       |       FROM fl),
+       |       FROM edges),
        |ht AS (SELECT o_cell, n,
        |         CAST(round(-(CAST(flows AS DOUBLE) / n) * ln(CAST(flows AS DOUBLE) / n) * 1000000000.0, 0) AS BIGINT) AS hq
        |       FROM wn)
@@ -5676,9 +5606,9 @@ object Queries {
   // =================================================================
 
   def dowProfile(spark: SparkSession, sfDir: String): DataFrame = {
-    TableIO.read(spark, s"$sfDir/events.parquet")
+    events(spark, sfDir)
       .select(F.cellAt(lit(6), evLon(col("event_id")), evLat(col("event_id"))).as("cell"),
-        expr("(unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000 + 4) % 7").as("dow"))
+        expr("(us div 86400000000 + 4) % 7").as("dow"))
       .groupBy(col("cell"), col("dow")).agg(count(lit(1)).as("o"))
       .groupBy("cell")
       .agg(collect_list(struct(col("dow"), col("o"))).as("kv"), sum(col("o")).as("n"))
@@ -5691,7 +5621,7 @@ object Queries {
 
   def dowProfileSql: String =
     s"""WITH ev AS (SELECT ${cellSql(6, s"($evLonSql)", s"($evLatSql)")} AS cell,
-       |              (epoch_us(ts) // 86400000000 + 4) % 7 AS dow
+       |              ($evUsSql // 86400000000 + 4) % 7 AS dow
        |            FROM events),
        |oc AS MATERIALIZED (
        |  SELECT cell, dow, CAST(count(*) AS BIGINT) AS o FROM ev GROUP BY 1, 2),
@@ -5839,7 +5769,7 @@ object Queries {
 
   def userEntropy(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
-    TableIO.read(spark, s"$sfDir/events.parquet")
+    events(spark, sfDir)
       .select(col("user_id"),
         F.cellAt(lit(6), evLon(col("event_id")), evLat(col("event_id"))).as("cell"))
       .groupBy(col("user_id"), col("cell")).agg(count(lit(1)).as("v"))
@@ -6246,12 +6176,9 @@ object Queries {
   private val DtwCap = 8   // same-block candidate cap per probe track
 
   def dtwTracks(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("us").asc, col("event_id").asc)
-    val fixes = TableIO.read(spark, s"$sfDir/events.parquet")
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("ts").cast("timestamp")).as("us"))
+    val fixes = events(spark, sfDir).select(col("event_id"), col("user_id"), col("us"))
       .withColumn("cell", F.cellAt(lit(8), evLon(col("event_id")), evLat(col("event_id"))))
-      .withColumn("rn", row_number().over(w))
+      .withColumn("rn", row_number().over(fixOrder))
       .filter(col("rn") <= DtwK)
     val tracks = fixes.groupBy(col("user_id"))
       .agg(sort_array(collect_list(struct(col("rn"), col("cell")))).as("sc"))
@@ -6280,12 +6207,12 @@ object Queries {
     }
     val big = "1152921504606846976"
     s"""WITH RECURSIVE raw AS (
-       |  SELECT event_id, user_id, epoch_us(ts) AS us,
+       |  SELECT event_id, user_id, $evUsSql AS us,
        |         $evLonSql AS elon, $evLatSql AS elat
        |  FROM events),
        |fx AS (
        |  SELECT user_id, us, event_id, ${cellSql(8, "elon", "elat")} AS cell,
-       |         row_number() OVER (PARTITION BY user_id ORDER BY us, event_id) AS rn
+       |         row_number() OVER ($fixOrderSql) AS rn
        |  FROM raw),
        |trk AS MATERIALIZED (
        |  SELECT user_id, list(cell ORDER BY rn) AS cells,

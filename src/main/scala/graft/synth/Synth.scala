@@ -1,6 +1,7 @@
 package graft.synth
 
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.{IntegralDivide, Literal, Remainder}
 import org.apache.spark.sql.graftshim.ColumnBridge
@@ -367,6 +368,32 @@ object Synth {
   def evLon(c: Column): Column = evLattice.x.deg(c)
   def evLat(c: Column): Column = evLattice.y.deg(c)
 
+  // Event timeline. `events.ts` is TIMESTAMP_NTZ; both engines read it as
+  // the same integer microseconds: Spark casts it to TIMESTAMP under the
+  // UTC session (an identity on wall values) for `unix_micros`, DuckDB
+  // reads it naive-as-UTC with `epoch_us`. Second-level forms differ on
+  // fractional seconds, so the query layer's clock comparisons, per-user
+  // fix orders and calendar buckets all run on `us`, which is monotone in
+  // `ts` (SourceGateSpec fails on either function anywhere else).
+  val evUs: Column = unix_micros(col("ts").cast("timestamp"))
+  val evUsSql: String = "epoch_us(ts)"
+
+  /** The events table with its clock `us` ([[evUs]]). */
+  def events(spark: SparkSession, sfDir: String): DataFrame =
+    graft.index.TableIO.read(spark, eventsPath(sfDir)).withColumn("us", evUs)
+
+  /** Row count of the events table, from metadata (no job). */
+  def eventCount(spark: SparkSession, sfDir: String): Long =
+    graft.index.TableIO.rowCount(spark, eventsPath(sfDir))
+
+  private def eventsPath(sfDir: String): String = s"$sfDir/events.parquet"
+
+  /** A user's fixes in time order, ties on event_id: the order of every
+    * per-user lag, lead, running sum and row number over [[events]]. */
+  val fixOrder: WindowSpec =
+    Window.partitionBy(col("user_id")).orderBy(col("us").asc, col("event_id").asc)
+  val fixOrderSql: String = "PARTITION BY user_id ORDER BY us, event_id"
+
   // Customer-derived polygon features (rectangles): the bulk feature table
   // for reverse geocoding / kNN / tile cover. Half-open PIP semantics
   // [west,east) x [south,north) mirror the ray-cast exactly.
@@ -458,7 +485,7 @@ object Synth {
   /** Events with derived probe point. */
   def eventPoints(spark: SparkSession, sfDir: String): DataFrame = {
     val k = col("event_id")
-    graft.index.TableIO.read(spark, s"$sfDir/events.parquet")
+    events(spark, sfDir)
       .select(k.as("event_id"), evLon(k).as("elon"), evLat(k).as("elat"))
   }
 
@@ -469,7 +496,7 @@ object Synth {
     * points of dbscan and the pair statistics. */
   def dbscanPoints(spark: SparkSession, sfDir: String): DataFrame = {
     val k = col("event_id")
-    graft.index.TableIO.read(spark, s"$sfDir/events.parquet")
+    events(spark, sfDir)
       .select(k.as("id"), scatter.x.milli(k).as("xq"), scatter.y.milli(k).as("yq"))
   }
 

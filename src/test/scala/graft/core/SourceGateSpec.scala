@@ -35,8 +35,9 @@ class SourceGateSpec extends AnyFunSuite {
 
   test("fixture tables are read through TableIO.read, not a schemaless read.parquet") {
     // a schemaless `spark.read.parquet` runs a footer-inference job per
-    // call; TableIO.read memoizes the inferred schema
-    val found = hits("""read\.parquet\(s"\$\{?(sfDir|d)\}?/""".r, Set("TableIO.scala"))
+    // call; TableIO.read memoizes the inferred schema and readAsOf takes the
+    // manifest's, so no table of any kind is read around them
+    val found = hits("""\.read\.parquet\(""".r, Set("TableIO.scala"))
     assert(found.isEmpty, found.mkString("\n"))
   }
 
@@ -52,6 +53,20 @@ class SourceGateSpec extends AnyFunSuite {
     // Column twin in Synth; a hand-written multiplier elsewhere is a second
     // copy of a formula both engines must evaluate identically
     val found = hits("""7919|104729""".r, Set("Synth.scala"))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("the event clock is written only as Synth's evUs/evUsSql twins") {
+    // Spark's unix_micros and DuckDB's epoch_us must read events.ts as the
+    // same integer microseconds; a hand-written copy of either side is a
+    // second definition of the clock one engine could drift from
+    val found = hits("""unix_micros|epoch_us""".r, Set("Synth.scala"))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("the events table is read only through Synth.events and Synth.eventCount") {
+    // one owner adds the clock column every events query orders and buckets by
+    val found = hits("""events\.parquet""".r, Set("Synth.scala"))
     assert(found.isEmpty, found.mkString("\n"))
   }
 

@@ -74,6 +74,36 @@ class ExprsSpec extends SparkTestBase {
     }
   }
 
+  test("Synth's event clock twins: evUs in Spark equals evUsSql in DuckDB") {
+    import spark.implicits._
+    import graft.synth.Synth._
+    val sf = "/root/testdata/sf0.001"
+    // pre-1970 (where truncating and flooring a second part ways), fractional
+    // seconds down to the microsecond, and the 2038 rollover and past it
+    val edge = Seq("0001-01-01 00:00:00", "1900-03-01 12:34:56.000001",
+      "1969-12-31 23:59:59.5", "1969-12-31 23:59:59.999999", "1970-01-01 00:00:00",
+      "1970-01-01 00:00:00.000001", "2024-02-29 23:59:59.999999",
+      "2038-01-19 03:14:07.999999", "2038-01-19 03:14:08", "2262-04-11 23:47:16.854776",
+      "9999-12-31 23:59:59.999999")
+    val fixture = events(spark, sf).select(concat(lit("e"), col("event_id").cast("string")), col("us"))
+    val edges = edge.toDF("k").withColumn("ts", col("k").cast("timestamp_ntz")).select(col("k"), evUs)
+    val got = (fixture.collect() ++ edges.collect()).map(r => r.getString(0) -> r.getLong(1)).toMap
+    val sql = s"SELECT 'e' || CAST(event_id AS VARCHAR), $evUsSql FROM '$sf/events.parquet' UNION ALL " +
+      s"SELECT k, $evUsSql FROM (SELECT k, CAST(k AS TIMESTAMP) AS ts FROM (VALUES " +
+      edge.map(e => s"('$e')").mkString(", ") + ") v(k))"
+    val py = "import sys, duckdb\nfor r in duckdb.sql(sys.argv[1]).fetchall():\n" +
+      "    print(f'{r[0]},{r[1]}')"
+    val duck = scala.sys.process.Process(Seq("python3", "-c", py, sql)).!!.trim.split("\n")
+      .map(_.split(",")).map(r => r(0) -> r(1).toLong).toMap
+    val differ = (got.toSet diff duck.toSet) ++ (duck.toSet diff got.toSet)
+    assert(differ.isEmpty && got.size > edge.size, differ.take(6))
+    edge.foreach { e =>
+      val t = java.time.LocalDateTime.parse(e.replace(' ', 'T'))
+      assert(got(e) == java.time.temporal.ChronoUnit.MICROS.between(
+        java.time.LocalDateTime.of(1970, 1, 1, 0, 0), t), e)
+    }
+  }
+
   test("ring/disk cells expressions match core") {
     import spark.implicits._
     val c = CellMath.lonLatToCell(8, 10.0, 50.0)

@@ -37,6 +37,17 @@ class FallbackSpec extends SparkTestBase {
     assert(a.nonEmpty && a == b)
   }
 
+  test("forwardIdf: calls over one corpus plan share one broadcast term dictionary") {
+    val docs = Synth.docPages(spark, sf)
+    val gaz = Synth.gazDf(spark)
+    def bcIds(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed.flatMap(
+      _.expressions.flatMap(_.collect { case t: graft.index.TermStats.TermWeightSum => t.bc.id }))
+      .distinct
+    val a = bcIds(Geocode.forwardIdf(docs, gaz))
+    assert(a.size == 1, a)
+    assert(bcIds(Geocode.forwardIdf(Synth.docPages(spark, sf), gaz)) == a)
+  }
+
   test("forwardIndexedFat: Bloom-tier prefilter past the exact ceiling, row-identical") {
     val docs = Synth.docPages(spark, sf)
     val grid = graft.queries.Queries.gazGridFatParquet(spark)
@@ -289,19 +300,6 @@ class FallbackSpec extends SparkTestBase {
     val twice = pts.union(pts.filter(col("event_id") === 16L).withColumn("event_id", lit(1L)))
     val one = g.reverse(twice, typed).filter(col("event_id") === 1L).collect().map(_.getString(3))
     assert(one.count(_ == "knn") == 1 && one.count(_ == "pip") == 2, one.toSeq.toString)
-  }
-
-  /** The Spark jobs `body` starts. */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    org.apache.spark.TestListenerBus.drain(sc)
-    sc.addSparkListener(l)
-    try { body; org.apache.spark.TestListenerBus.drain(sc) } finally sc.removeSparkListener(l)
-    jobs.get
   }
 
   test("Geocoder.reverse over the parquet fixtures runs one Spark job per warm call") {

@@ -337,6 +337,38 @@ class PipelineSpec extends SparkTestBase {
     assert(TableIO.readCurrent(spark, table).count() == 500)
   }
 
+  test("snapshots commit, read back and compact at a table path with a space and a %") {
+    import spark.implicits._
+    // the manifest lists each file as a path spark.read.parquet resolves;
+    // a URL-encoded form names a directory `a%20b%2520c` that is not there
+    val table = s"${tmp("spaced")}/a b%20c"
+    val data = (0 until 5000).map(i => (i.toLong, i * 3L)).toDF("k", "v")
+    val id1 = TableIO.commit(data, table, "k", Seq("k"), 4)
+    assert(TableIO.readCurrent(spark, table).count() == 5000)
+    val id2 = TableIO.compact(spark, table, targetFiles = 2)
+    assert(id2 == id1 + 1 && TableIO.snapshot(table, id2).totalRows == 5000)
+    val back = TableIO.readCurrent(spark, table)
+    assert(back.exceptAll(data).isEmpty && data.exceptAll(back).isEmpty)
+  }
+
+  test("warm reads of the grid index, the checkpoint ranges and a snapshot infer no schema") {
+    import spark.implicits._
+    graft.queries.Queries.gazGridFatParquet(spark)
+    assert(jobsOf(graft.queries.Queries.gazGridFatParquet(spark)) == 0)
+    val out = tmp("ckpt_read")
+    val pts = spark.range(2000).select(col("id").as("event_id"),
+      F.hilbertCell(F.cellAt(lit(8), docLon(col("id")), docLat(col("id")))).as("hkey"))
+    Checkpoint.runResumable(spark, (lo, hi) =>
+      pts.filter(col("hkey") >= lo && col("hkey") < hi), Checkpoint.uniformRanges(8, 4), out)
+    Checkpoint.readAll(spark, out)
+    assert(jobsOf(Checkpoint.readAll(spark, out)) == 0)
+    // a snapshot reads with its manifest's schema, cold or warm
+    val table = tmp("asof")
+    val id = TableIO.commit((0 until 100).map(i => (i.toLong, i)).toDF("k", "v"), table, "k", Seq("k"), 2)
+    assert(jobsOf(TableIO.readAsOf(spark, table, id)) == 0)
+    assert(TableIO.readAsOf(spark, table, id).schema.fieldNames.toSeq == Seq("k", "v"))
+  }
+
   test("tile pyramid: level-by-level rollup equals direct grouping at every zoom") {
     val sf = "/root/testdata/sf0.001"
     val pyr = graft.queries.Queries.tilePyramid(spark, sf).persist()

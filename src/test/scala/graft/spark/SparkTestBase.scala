@@ -9,6 +9,19 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   override def afterAll(): Unit = () // session shared across suites; sbt JVM exit cleans up
+
+  /** The Spark jobs `body` starts. */
+  protected def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.TestListenerBus.drain(sc) } finally sc.removeSparkListener(l)
+    jobs.get
+  }
 }
 
 object SparkTestBase {
