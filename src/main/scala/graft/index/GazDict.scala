@@ -270,7 +270,8 @@ object GazDict {
     * name matches over id windows in-row, then the shared [[StackRank]]
     * kernel replays [[graft.ops.Geocode.coalesce2]] →
     * [[graft.ops.Geocode.rank]]. Returns the page's top-k
-    * [[StackRank.FwdCandType]] rows (empty for null text), consumed by
+    * [[StackRank.FwdCandType]] rows, `sd` rounded as `rank` rounds it
+    * ([[StackRank.roundSd]]; empty for null text), consumed by
     * explode. Stateful: every buffer of a page is per-task [[Scratch]],
     * reused row after row, so the output rows are all a page allocates;
     * Spark gives each task and projection a fresh copy. */

@@ -165,7 +165,8 @@ final class StackRank extends StackRank.IdxOrder {
     }
   }
 
-  /** The page's top-k as [[FwdCandType]] rows, `sd` unrounded. */
+  /** The page's top-k as [[FwdCandType]] rows, `sd` rounded by
+    * [[StackRank.roundSd]]. */
   def topK(k: Int, dedupe: Boolean): Array[InternalRow] = {
     if (regs.length < n) {
       val m = gids.length
@@ -261,7 +262,7 @@ final class StackRank extends StackRank.IdxOrder {
         relev(a),
         if (has(m, CellNull)) null else cells(m),
         ctx(a),
-        if (sdNull(a)) null else sdOf(a),
+        if (sdNull(a)) null else StackRank.roundSd(sdOf(a)),
         i + 1)
       i += 1
     }
@@ -280,8 +281,28 @@ object StackRank {
   final val ScoreNull = 16
   final val QNull = 32
 
+  /** Spark's `round(sd, 4)` on a double, bit for bit: HALF_UP to 4
+    * places of the shortest decimal of `x` (`BigDecimal.valueOf`), then the
+    * double nearest that decimal. Unless |x|·10⁴ is within 4 ulps of a
+    * tie, that is r / 10⁴ with r = ⌊|x|·10⁴ + ½⌋ carrying x's sign: the
+    * decimal is within ½ ulp of x and the product within ½ ulp of x·10⁴,
+    * so both sit on the same side of the tie, and JDK 17's
+    * `BigDecimal.doubleValue` divides an integer below 2⁵² by 10⁴ the same
+    * way. Near a tie and from |x|·10⁴ ≥ 2⁵² on, Spark's own route; NaN
+    * and ±∞ pass through. */
+  def roundSd(x: Double): Double = {
+    val y = math.abs(x) * 1e4
+    if (y < TwoTo52 && math.abs(y - math.floor(y) - 0.5) > 4 * math.ulp(y)) {
+      val r = (y + 0.5).toLong
+      (if (x < 0) -r else r) / 1e4
+    } else if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+  }
+
+  private final val TwoTo52 = 4503599627370496.0
+
   /** One ranked candidate: [[graft.ops.Geocode.rank]]'s columns with `sd`
-    * unrounded. */
+    * rounded as `rank` rounds it ([[roundSd]]). */
   val FwdCandType: StructType = new StructType()
     .add("feature_id", LongType).add("typ", StringType, nullable = false)
     .add("relev", DoubleType, nullable = false).add("cell", LongType)

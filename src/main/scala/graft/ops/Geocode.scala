@@ -653,7 +653,7 @@ object Geocode {
         col("qlon").cast("double"), col("qlat").cast("double"), bc, k, dedupe)).as("c"))
       .select(col("doc_id"), col("c.feature_id").cast(idType).as("feature_id"),
         col("c.typ").as("typ"), col("c.relev").as("relev"), col("c.cell").as("cell"),
-        col("c.ctx").as("ctx"), round(col("c.sd"), 4).as("sd"), col("c.rank").as("rank"))
+        col("c.ctx").as("ctx"), col("c.sd").as("sd"), col("c.rank").as("rank"))
 
   /** The index cell of a gazetteer row: z12 for places, z8 otherwise. */
   private def indexCell: Column =
@@ -794,7 +794,7 @@ object Geocode {
     graft.plans.GroupKernel(cands.filter(col("typ").isin("place", "region")).select(layout: _*),
         graft.index.StackRank.Pages(k, dedupe, gridCap))
       .select(col("doc_id"), col("feature_id").cast(cands.schema("gid").dataType).as("feature_id"),
-        col("typ"), col("relev"), col("cell"), col("ctx"), round(col("sd"), 4).as("sd"), col("rank"))
+        col("typ"), col("relev"), col("cell"), col("ctx"), col("sd"), col("rank"))
   }
 
   /** D5+C4: reverse geocode join — probe points equi-joined on the z-cell to

@@ -739,6 +739,51 @@ class FallbackSpec extends SparkTestBase {
     assert(perPage <= 2048, f"$perPage%.0f B allocated per page")
   }
 
+  test("fwd_topk's sd rounding ≡ round(_, 4) bit for bit: 10^7 seeded doubles and the edge cases, codegen on and off") {
+    import java.lang.Double.{doubleToLongBits, longBitsToDouble, MIN_NORMAL, MIN_VALUE}
+    import graft.core.Fingerprint.mix64
+    // ties (2m + 1) / 20000: exact in binary when 625 divides 2m + 1
+    // (0.03125, 0.09375), else the double nearest the decimal tie
+    val ties = for (m <- Seq(0L, 1L, 2L, 312L, 937L, 12344L, 99999L, 123456789L); sign <- Seq(1.0, -1.0))
+      yield sign * (2 * m + 1) / 2e4
+    val twoTo52 = 4503599627370496.0
+    val edges = (ties.flatMap(t => Seq(Math.nextDown(t), t, Math.nextUp(t))) ++ Seq(
+      0.0, -0.0, MIN_VALUE, -MIN_VALUE, 3 * MIN_VALUE, Math.nextDown(MIN_NORMAL), MIN_NORMAL, -MIN_NORMAL,
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, Double.MaxValue, -Double.MaxValue,
+      twoTo52 / 1e4, Math.nextDown(twoTo52 / 1e4), -twoTo52 / 1e4, 1.00005, 2.5e-5, 1e-300, 1e300)).toIndexedSeq
+    val n = 10000000L
+    val gen: Long => Double = id =>
+      if (id < edges.length) edges(id.toInt)
+      else {
+        val h = mix64(id ^ 20261020L)
+        val u = (h >>> 11).toDouble / (1L << 53)
+        (h & 3L).toInt match {
+          case 0 => longBitsToDouble(mix64(h)) // any bit pattern
+          case 1 => (u - 0.5) * math.pow(10, ((h >>> 2) & 15L).toDouble - 4) // |x| < 5e10
+          case 2 => // within 3 ulps of a decimal tie
+            val k = ((h >>> 40) % 7L).toInt - 3
+            var t = (2 * ((h >>> 2) % 100000000L) + 1) / 2e4
+            (0 until k.abs).foreach(_ => t = if (k > 0) Math.nextUp(t) else Math.nextDown(t))
+            if (((h >>> 50) & 1L) == 0) t else -t
+          case _ => u * 100 / (1 + ((h >>> 2) & 1023L) / 20.0) // sd-like: score / (1 + d / scale)
+        }
+      }
+    val value = udf(gen)
+    val replay = udf((x: Double) => graft.index.StackRank.roundSd(x))
+    val same = udf((a: Double, b: Double) => doubleToLongBits(a) == doubleToLongBits(b))
+    for (codegen <- Seq(true, false)) {
+      val s = spark.newSession()
+      if (!codegen) {
+        s.conf.set("spark.sql.codegen.wholeStage", "false")
+        s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      }
+      val bad = s.range(0, n, 1, 4).select(value(col("id")).as("x"))
+        .select(col("x"), round(col("x"), 4).as("spark"), replay(col("x")).as("replay"))
+        .filter(!same(col("spark"), col("replay"))).limit(5).collect()
+      assert(bad.isEmpty, s"codegen = $codegen: ${bad.mkString(", ")}")
+    }
+  }
+
   test("prefilter broadcasts: one broadcast per grid plan and tier") {
     val docs = Synth.docPages(spark, sf)
     val grid = graft.queries.Queries.gazGridFatParquet(spark)

@@ -201,6 +201,71 @@ class PipelineSpec extends SparkTestBase {
     assert(none.getMessage.contains("no completed range"))
   }
 
+  test("checkpoint: a range writes one part file per read split of its own bytes, sized without a job") {
+    // hkey a permutation of [0, 65536) spread over all 8 partitions: each of
+    // the 4 ranges holds 16,384 rows, 128 kB by the plan's statistics (16 B
+    // a row of one long); the whole frame is 512 kB
+    def points(s: org.apache.spark.sql.SparkSession) = s.range(0, 65536, 1, 8)
+      .select(col("id").as("event_id"), (col("id") * 40503 % 65536).as("hkey"))
+    val ranges = Checkpoint.uniformRanges(8, 4)
+    /** Part files and lineage rows per range, and the jobs of the run. */
+    def written(s: org.apache.spark.sql.SparkSession): (Map[Int, Int], Map[Int, Long], Int) = {
+      val out = tmp("ckpt_split")
+      val pts = points(s)
+      assert(pts.rdd.getNumPartitions == 8)
+      val jobs = jobsOf(Checkpoint.runResumable(s, (lo, hi) =>
+        pts.filter(col("hkey") >= lo && col("hkey") < hi).select("event_id"), ranges, out))
+      val rows = Checkpoint.completed(out, "range").map { case (id, n) => id.toInt -> n }
+      ranges.foreach(r => assert(rows(r.id) == s.read.parquet(s"$out/range=${r.id}").count(), r))
+      assert(Checkpoint.readAll(s, out).collect().map(_.getLong(0)).sorted.toSeq == (0L until 65536L))
+      val files = ranges.map { r =>
+        r.id -> Files.list(java.nio.file.Paths.get(out, s"range=${r.id}")).iterator().asScala
+          .count(f => f.getFileName.toString.startsWith("part-"))
+      }.toMap
+      (files, rows, jobs)
+    }
+    // 128 kB is under one 4 MB open cost: one split
+    val (files, rows, jobs) = written(spark)
+    assert(files.values.forall(_ == 1), files)
+    assert(rows.values.forall(_ == 16384), rows)
+    assert(jobs == ranges.size, s"$jobs jobs") // one write job per range, none to size it
+    // Spark's split for b bytes on 4 cores: min(64 kB, max(16 kB, b / 4)),
+    // 32 kB for a range's 128 kB, so 4 files; sized by the whole frame's
+    // 512 kB a range would write 8 (64 kB splits, clamped to 8 partitions)
+    val small = spark.newSession()
+    small.conf.set("spark.sql.files.maxPartitionBytes", "65536")
+    small.conf.set("spark.sql.files.openCostInBytes", "16384")
+    val (smallFiles, smallRows, smallJobs) = written(small)
+    ranges.foreach { r =>
+      val bytes = smallRows(r.id) * 16.0
+      val split = math.min(65536.0, math.max(16384.0, bytes / spark.sparkContext.defaultParallelism))
+      assert(smallFiles(r.id) >= 2 && smallFiles(r.id) <= math.ceil(bytes / split), s"$r: $smallFiles")
+    }
+    assert(smallJobs == ranges.size && smallRows == rows, s"$smallJobs jobs, $smallRows")
+  }
+
+  test("checkpoint: a resume under another range cut fails and names the range") {
+    val pts = spark.range(5000).select(col("id").as("event_id"),
+      F.hilbertCell(F.cellAt(lit(8), docLon(col("id")), docLat(col("id")))).as("hkey"))
+    def slice(lo: Long, hi: Long) = pts.filter(col("hkey") >= lo && col("hkey") < hi).select("event_id")
+    val four = Checkpoint.uniformRanges(8, 4)
+    val out = tmp("ckpt_recut")
+    intercept[RuntimeException](Checkpoint.runResumable(spark, slice, four, out, failAfter = Some(2)))
+    // ranges 0 and 1 cover [0, 32768); the 8-range cut would write [16384,
+    // 32768) again as its ranges 2 and 3
+    val recut = intercept[IllegalStateException](
+      Checkpoint.runResumable(spark, slice, Checkpoint.uniformRanges(8, 8), out))
+    assert(recut.getMessage.startsWith("range 0 is done") && recut.getMessage.contains("[0, 8192)"),
+      recut.getMessage)
+    assert(Checkpoint.completedRanges(out) == Set(0, 1))
+    assert(Checkpoint.runResumable(spark, slice, four, out) == Seq(2, 3))
+    assert(Checkpoint.readAll(spark, out).count() == 5000)
+    // a done range the cut leaves out
+    val fewer = intercept[IllegalStateException](Checkpoint.runResumable(spark, slice, four.take(2), out))
+    assert(fewer.getMessage.startsWith("range 2 is done") && fewer.getMessage.contains("no range"),
+      fewer.getMessage)
+  }
+
   test("as-of join semantics: latest version <= ts, equal-ts visible, pre-first null") {
     import spark.implicits._
     val probe = Seq(

@@ -379,13 +379,49 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  /** `p` without what AQE decides at run time: the final plan of every
+    * adaptive plan in it (its query stages and the join sides it picked
+    * on their sizes) is dropped for the initial plan printed after it, and
+    * the codegen-stage and query-stage numbers, which follow the order the
+    * stages finish in, are blanked. Expression and plan ids, which differ
+    * between any two plannings, are blanked too. */
+  private def initialPlans(p: String): String = {
+    var initial = Option.empty[String] // the line that ends the final plan being dropped
+    p.split("\n").filter { l =>
+      initial match {
+        case Some(end) => if (l == end) { initial = None; true } else false
+        case None =>
+          val at = l.indexOf("+- == Final Plan ==")
+          if (at >= 0) initial = Some(l.substring(0, at) + "+- == Initial Plan ==")
+          at < 0
+      }
+    }.mkString("\n").replaceAll("#\\d+L?", "#").replaceAll("plan_id=\\d+", "plan_id=")
+      .replaceAll("\\*\\(\\d+\\)", "*(n)").replaceAll("QueryStage \\d+", "QueryStage n")
+  }
+
+  test("initialPlans keeps each adaptive plan's initial plan, blind to stage numbers and join sides") {
+    def aqe(pre: String, stage: Int, side: String) = Seq(
+      s"${pre}AdaptiveSparkPlan isFinalPlan=true",
+      s"${pre}+- == Final Plan ==",
+      s"${pre}   BroadcastHashJoin [a#${stage}L], [b#9], Inner, $side",
+      s"${pre}   :- *(${stage + 1}) Project [a#$stage]",
+      s"${pre}   +- BroadcastQueryStage $stage",
+      s"${pre}+- == Initial Plan ==",
+      s"${pre}   SortMergeJoin [a#1], [b#2], Inner")
+    val one = ("InMemoryTableScan [a#1]" +: aqe("   ", 2, "BuildLeft")).mkString("\n")
+    val two = ("InMemoryTableScan [a#4]" +: aqe("   ", 3, "BuildRight")).mkString("\n")
+    assert(initialPlans(one) == initialPlans(two))
+    assert(initialPlans(one) == Seq("InMemoryTableScan [a#]", "   AdaptiveSparkPlan isFinalPlan=true",
+      "   +- == Initial Plan ==", "      SortMergeJoin [a#], [b#], Inner").mkString("\n"))
+    assert(initialPlans(one.replace("SortMergeJoin", "ShuffledHashJoin")) != initialPlans(two))
+  }
+
   test("the query loop clears the cache after each query: dbscan plans as it does alone") {
     val cache = spark.sharedState.cacheManager
     def plans(names: String*): Map[String, String] = {
       val got = graft.SparkEntry.eachQuery(spark, sf, names) { (_, df) =>
         val d = df()
-        // expression and plan ids differ between any two plannings
-        val p = plan(d).replaceAll("#\\d+L?", "#").replaceAll("plan_id=\\d+", "plan_id=")
+        val p = initialPlans(plan(d))
         d.collect()
         p
       }
